@@ -366,14 +366,14 @@ object Graft {
     * same scored rows. Exact-integer error numerators by
     * construction (weights 2^(16-j)/65535). */
   def ewmaBacktest(events: DataFrame): DataFrame =
-    graft.ops.Composite33.ewmaBacktestOn(events)
+    graft.ops.timeseries.Forecast.ewmaBacktestOn(events)
 
   /** One-sided CUSUM drift monitor of daily counts per `event_type`
     * over an (event_type, ts) event stream: peak accumulated
     * evidence vs the integer mean reference, its first attaining
     * day, and the net deviation. All exact integers. */
   def cusumDrift(events: DataFrame): DataFrame =
-    graft.ops.Composite34.cusumDriftOn(events)
+    graft.ops.timeseries.Control.cusumDriftOn(events)
 
   /** B=32 deterministic Poisson(1) bootstrap replicates of
     * mean(l_extendedprice) over a lineitem-shaped relation — md5-
@@ -404,7 +404,7 @@ object Graft {
     * stream: picked median and MAD of daily counts, anomaly when
     * |y - med| > 3*MAD. All exact integers. */
   def anomalyMad(events: DataFrame): DataFrame =
-    graft.ops.Composite35.anomalyMadOn(events)
+    graft.ops.timeseries.Control.anomalyMadOn(events)
 
   /** One-step backtest of truncated Brown double exponential
     * smoothing (level + trend, alpha = 1/2, 8 lags per stage) of
@@ -412,27 +412,27 @@ object Graft {
     * baseline's MAE. Exact-integer residuals by construction
     * (forecast numerator 765*n1 - 2*n2 over /255^2 scaling). */
   def holtBacktest(events: DataFrame): DataFrame =
-    graft.ops.Composite43.holtBacktestOn(events)
+    graft.ops.timeseries.Forecast.holtBacktestOn(events)
 
   /** Rescaled-range (R/S) curve of daily counts per `event_type`:
     * average R/S over full blocks of 8/16/32 days — the Hurst
     * long-memory diagnostic. Block statistics exact-integer via
     * Z_t = n*cum - t*S and n^2*Var = n*sum(y^2) - S^2. */
   def hurstRs(events: DataFrame): DataFrame =
-    graft.ops.Composite44.hurstRsOn(events)
+    graft.ops.timeseries.Stationarity.hurstRsOn(events)
 
   /** Ljung-Box Q(7) whiteness test of daily counts per
     * `event_type`: rho_1, the pooled statistic, and the chi-sq(7)
     * 5% verdict. All co-moments exact BIGINTs. */
   def ljungBox(events: DataFrame): DataFrame =
-    graft.ops.Composite45.ljungBoxOn(events)
+    graft.ops.timeseries.Correlation.ljungBoxOn(events)
 
   /** KPSS level-stationarity statistic (short-run variance form,
     * l = 0) of daily counts per `event_type` with the 5% verdict.
     * Partial sums exact via the same integral scaling as
     * [[hurstRs]]; squares summed in DECIMAL(38,0). */
   def kpssLevel(events: DataFrame): DataFrame =
-    graft.ops.Composite46.kpssLevelOn(events)
+    graft.ops.timeseries.Stationarity.kpssLevelOn(events)
 
   /** Jarque-Bera normality test per `o_orderpriority` over an
     * orders-shaped relation: skewness, excess kurtosis, JB and the

@@ -86,21 +86,18 @@ object SparkEntry {
       (Composite47.queries, Composite47.oracle),
       (Composite48.queries, Composite48.oracle),
       (Composite49.queries, Composite49.oracle),
-      (Composite50.queries, Composite50.oracle),
+      (timeseries.TimeSeries.queries, timeseries.TimeSeries.oracle),
       (Composite51.queries, Composite51.oracle),
       (Composite52.queries, Composite52.oracle),
-      (Composite53.queries, Composite53.oracle),
       (Composite54.queries, Composite54.oracle),
       (Composite55.queries, Composite55.oracle),
       (Composite56.queries, Composite56.oracle),
       (Composite57.queries, Composite57.oracle),
       (Composite58.queries, Composite58.oracle),
-      (Composite59.queries, Composite59.oracle),
       (Composite60.queries, Composite60.oracle),
       (Composite61.queries, Composite61.oracle),
       (Composite62.queries, Composite62.oracle),
       (Composite63.queries, Composite63.oracle),
-      (Composite64.queries, Composite64.oracle),
       (Composite65.queries, Composite65.oracle),
       (Composite66.queries, Composite66.oracle),
       (LlmOps18.queries, LlmOps18.oracle),
@@ -108,18 +105,14 @@ object SparkEntry {
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
       (Composite69.queries, Composite69.oracle),
-      (Composite70.queries, Composite70.oracle),
       (LlmOps20.queries, LlmOps20.oracle),
-      (Composite71.queries, Composite71.oracle),
       (Composite72.queries, Composite72.oracle),
       (LlmOps21.queries, LlmOps21.oracle),
       (Composite73.queries, Composite73.oracle),
-      (Composite74.queries, Composite74.oracle),
       (Composite75.queries, Composite75.oracle),
       (Composite76.queries, Composite76.oracle),
       (Composite77.queries, Composite77.oracle),
       (Composite78.queries, Composite78.oracle),
-      (Composite79.queries, Composite79.oracle),
       (Composite80.queries, Composite80.oracle),
       (Composite81.queries, Composite81.oracle),
       (Composite82.queries, Composite82.oracle),

@@ -33,9 +33,8 @@ object Composite13 {
   // comparison). Surfaces per type: series length, peak count, and
   // the global-maximum day (earliest on ties).
   private def peakDetect(s: SparkSession, dir: String): DataFrame = {
-    val daily = loadEvents(s, dir)
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
+    val daily = timeseries.Series.daily(loadEvents(s, dir))
+      .withColumnRenamed("y", "c")
     val w = Window.partitionBy("event_type").orderBy("d")
     val flagged = daily
       .withColumn("is_peak",

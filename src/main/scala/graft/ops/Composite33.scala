@@ -1,13 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.49 (round-22 batch) — the three gaps VERDICT r11
-  * ranked as what a real user hits next:
+/** SURVEY.md §2.49 (round-22 batch) — gaps VERDICT r11 ranked as what
+  * a real user hits next:
   *
   *  - [[referentialIntegrity]]: orphan-FK audit across every edge of
   *    the star schema — the FIRST data-quality check a warehouse
@@ -20,27 +19,15 @@ import graft.util.Tables._
   *    loop answers "how far in accumulated edge cost" (min(d + w)
   *    instead of min(d + 1)).
   *
-  *  - [[ewmaBacktest]]: a forecasting backtest beyond seasonal-naive —
-  *    one-step-ahead truncated-EWMA (α = ½) forecasts of daily event
-  *    counts, scored as MAE / bias / naive-baseline MAE per type.
-  *
   * Scale shapes: each RI edge is ONE fk-keyed shuffle join (parent
   * side deduped by an aggregate on the small side; AQE broadcasts the
   * dim parents) feeding a map-side-combining conditional count — the
   * 7 edges are independent union branches, embarrassingly parallel;
   * weighted shortest-path inherits the connected_components loop
   * discipline (node-sized distance table broadcast into the edge
-  * scan, ONE node-keyed min exchange per round); the EWMA window
-  * follows the agg_weighted_median rule — it reads the (type, day)
-  * COUNT aggregate, never the raw event table, so the few-value
-  * partition key sorts a relation bounded by |types|·|days|.
+  * scan, ONE node-keyed min exchange per round).
   *
-  * Determinism: RI and distance outputs are exact integers. The EWMA
-  * forecast is exact-integer by construction: α = ½ truncated at 16
-  * lags gives weights 2^(16-j)/65535, so the forecast numerator is an
-  * integer dot product and every error sum accumulates in BIGINT; the
-  * three ratios assemble ONCE in double from identical formula text
-  * with floor-form 6-dp rounding (§1.5).
+  * Determinism: RI and distance outputs are exact integers.
   */
 object Composite33 {
 
@@ -230,96 +217,13 @@ object Composite33 {
        |FROM d3 GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  // ---- win_ewma_backtest -----------------------------------------------
-  // One-step-ahead truncated-EWMA backtest of daily event counts per
-  // type: the forecast for each observed day is the 16-lag
-  // exponentially-weighted mean of the PRECEDING observed days
-  // (α = ½ ⇒ weights 2^(16-j)/65535 for lag j — the normalized
-  // truncated geometric series; gaps between observed days advance
-  // the lag sequence, not the calendar). Scored as MAE, bias (mean
-  // signed error — negative means over-forecast), and the lag-1
-  // naive baseline's MAE over the SAME scored rows, so the skill
-  // comparison is like-for-like. The first 16 observed days per type
-  // have no full window and score nothing.
-  private val EwmaLags = 16
-
-  private[graft] def ewmaBacktestOn(events: DataFrame): DataFrame = {
-    // Daily counts FIRST (agg_weighted_median's window rule: the
-    // few-value partition key must sort the (type, day) aggregate,
-    // never the raw event table).
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val lagCols = (1 to EwmaLags).map(j => lag(col("y"), j).over(w).as(s"l$j"))
-    // err = y·65535 − Σ l_j·2^(16−j): an exact-integer residual (the
-    // forecast numerator is an integer dot product; 65535 = Σ weights).
-    val fcNum = (1 to EwmaLags).map(j =>
-      col(s"l$j") * lit(1L << (EwmaLags - j))).reduce(_ + _)
-    daily
-      .select(col("event_type") +: col("y") +: lagCols: _*)
-      .filter(col(s"l$EwmaLags").isNotNull)
-      .select(col("event_type"),
-        (col("y") * lit(65535L) - fcNum).as("err"),
-        abs(col("y") - col("l1")).as("naive_err"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(abs(col("err"))).as("sa"),
-        sum(col("err")).as("se"),
-        sum(col("naive_err")).as("sn"))
-      .selectExpr("event_type", "n AS n_forecasts",
-        "floor((CAST(sa AS DOUBLE) / 65535 / n)*1e6 + 0.5)/1e6 AS mae",
-        "floor((CAST(se AS DOUBLE) / 65535 / n)*1e6 + 0.5)/1e6 AS bias",
-        "floor((CAST(sn AS DOUBLE) / n)*1e6 + 0.5)/1e6 AS naive_mae")
-      .orderBy("event_type")
-  }
-
-  private def ewmaBacktest(s: SparkSession, dir: String): DataFrame =
-    ewmaBacktestOn(loadEvents(s, dir))
-
-  private def ewmaBacktestOracle: String = {
-    val lagDefs = (1 to EwmaLags).map(j => s"lag(y, $j) OVER w AS l$j")
-      .mkString(",\n    ")
-    val fcNum = (1 to EwmaLags).map(j => s"l$j*${1L << (EwmaLags - j)}")
-      .mkString(" + ")
-    s"""WITH e AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-       |  FROM events),
-       |daily AS (
-       |  SELECT event_type, d, CAST(count(*) AS BIGINT) AS y
-       |  FROM e GROUP BY 1, 2),
-       |lagged AS (
-       |  SELECT event_type, y,
-       |    $lagDefs
-       |  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY d)),
-       |s AS (
-       |  SELECT event_type,
-       |    y*65535 - ($fcNum) AS err,
-       |    abs(y - l1) AS naive_err
-       |  FROM lagged WHERE l$EwmaLags IS NOT NULL),
-       |a AS (
-       |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(abs(err)) AS BIGINT) AS sa,
-       |    CAST(sum(err) AS BIGINT) AS se,
-       |    CAST(sum(naive_err) AS BIGINT) AS sn
-       |  FROM s GROUP BY 1)
-       |SELECT event_type, n AS n_forecasts,
-       |  floor((CAST(sa AS DOUBLE) / 65535 / n)*1e6 + 0.5)/1e6 AS mae,
-       |  floor((CAST(se AS DOUBLE) / 65535 / n)*1e6 + 0.5)/1e6 AS bias,
-       |  floor((CAST(sn AS DOUBLE) / n)*1e6 + 0.5)/1e6 AS naive_mae
-       |FROM a ORDER BY event_type""".stripMargin
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_referential_integrity" -> (referentialIntegrity _),
-    "graph_shortest_path_weighted" -> (shortestPathWeighted _),
-    "win_ewma_backtest" -> (ewmaBacktest _)
+    "graph_shortest_path_weighted" -> (shortestPathWeighted _)
   )
 
   val oracle: Map[String, String] = Map(
     "dq_referential_integrity" -> referentialIntegrityOracle,
-    "graph_shortest_path_weighted" -> shortestPathWeightedOracle,
-    "win_ewma_backtest" -> ewmaBacktestOracle
+    "graph_shortest_path_weighted" -> shortestPathWeightedOracle
   )
 }

@@ -1,22 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.50 (round-22 batch 2) — sequential drift monitoring,
-  * resampled uncertainty, and community-quality evaluation:
-  *
-  *  - [[cusumDrift]]: CUSUM drift detection on daily event rates —
-  *    the sequential change monitor ops teams actually run
-  *    (evt_changepoint finds the single best split in hindsight;
-  *    CUSUM accumulates evidence day by day and reports the peak).
-  *    The max(0, S + dev) recursion is NOT window-expressible
-  *    directly, but its closed form IS: S_t = C_t − min(0,
-  *    min_{i≤t} C_i) over the running deviation sum C — two window
-  *    passes sharing one sort, all integers.
+/** SURVEY.md §2.50 (round-22 batch 2) — resampled uncertainty and
+  * community-quality evaluation:
   *
   *  - [[poissonBootstrap]]: deterministic Poisson(1) bootstrap of the
   *    mean — the large-scale resampling scheme (each row enters
@@ -33,88 +23,18 @@ import graft.util.Tables._
   *    per-community contributions e_c/m − (a_c/2m)² from exact
   *    edge/degree counts.
   *
-  * Scale shapes: CUSUM windows read the (type, day) COUNT aggregate,
-  * never the raw event table (the agg_weighted_median rule); the
-  * bootstrap's 32× row expansion is map-local (Generate feeds the
-  * partial aggregate inside one stage — the shuffle carries only 32
-  * partials per map task); modularity is two node/edge-keyed
-  * aggregates plus a 1-row edge-total broadcast (the pagerank `nn`
-  * discipline).
+  * Scale shapes: the bootstrap's 32× row expansion is map-local
+  * (Generate feeds the partial aggregate inside one stage — the
+  * shuffle carries only 32 partials per map task); modularity is two
+  * node/edge-keyed aggregates plus a 1-row edge-total broadcast (the
+  * pagerank `nn` discipline).
   *
-  * Determinism: CUSUM and bootstrap weights are exact integers
-  * (weighted sums ride the cents discipline); modularity counts are
-  * exact; every surfaced ratio assembles once in double from
-  * identical formula text with floor-form 6-dp rounding (§1.5).
+  * Determinism: bootstrap weights are exact integers (weighted sums
+  * ride the cents discipline); modularity counts are exact; every
+  * surfaced ratio assembles once in double from identical formula
+  * text with floor-form 6-dp rounding (§1.5).
   */
 object Composite34 {
-
-  // ---- win_cusum_drift -------------------------------------------------
-  // Per event type: daily counts y_t against the integer reference
-  // k = total DIV n_days; C_t = Σ(y_i − k); the one-sided CUSUM
-  // S_t = C_t − min(0, min_{i≤t} C_i) (closed form of the standard
-  // max(0, S_{t-1} + dev_t) recursion). Reports the peak S, the
-  // first day attaining it, and the net deviation. Gaps between
-  // observed days advance the sequence, not the calendar. DIV floors
-  // k, so deviations carry the ≤ n_days positive remainder — exact
-  // and engine-identical.
-  private[graft] def cusumDriftOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-    val ref = daily.groupBy(col("event_type"))
-      .agg(sum(col("y")).as("sy"), count(lit(1)).as("nd"))
-      .select(col("event_type"), col("sy"), col("nd"),
-        expr("sy DIV nd").as("k"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val rk = Window.partitionBy(col("event_type"))
-      .orderBy(desc("s"), col("d"))
-    daily.join(broadcast(ref), "event_type")
-      .select(col("event_type"), col("d"), col("sy"), col("nd"), col("k"),
-        sum(col("y") - col("k")).over(w).as("c"))
-      .select(col("event_type"), col("d"), col("sy"), col("nd"), col("k"),
-        (col("c") - least(min(col("c")).over(w), lit(0L))).as("s"))
-      .withColumn("rn", row_number().over(rk))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("k").as("k_ref"),
-        col("nd").as("n_days"), col("s").as("max_cusum"),
-        col("d").as("peak_day"),
-        (col("sy") - col("nd") * col("k")).as("net_dev"))
-      .orderBy("event_type")
-  }
-
-  private def cusumDrift(s: SparkSession, dir: String): DataFrame =
-    cusumDriftOn(loadEvents(s, dir))
-
-  private val cusumDriftOracle =
-    """WITH e AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-      |  FROM events),
-      |daily AS (
-      |  SELECT event_type, d, CAST(count(*) AS BIGINT) AS y
-      |  FROM e GROUP BY 1, 2),
-      |ref AS (
-      |  SELECT event_type, CAST(sum(y) AS BIGINT) AS sy,
-      |    CAST(count(*) AS BIGINT) AS nd
-      |  FROM daily GROUP BY 1),
-      |c AS (
-      |  SELECT event_type, d, sy, nd, sy // nd AS k,
-      |    sum(y - sy // nd) OVER (PARTITION BY event_type ORDER BY d
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-      |  FROM daily JOIN ref USING (event_type)),
-      |s AS (
-      |  SELECT event_type, d, sy, nd, k,
-      |    c - least(min(c) OVER (PARTITION BY event_type ORDER BY d
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS s
-      |  FROM c),
-      |r AS (
-      |  SELECT *, row_number() OVER (PARTITION BY event_type
-      |    ORDER BY s DESC, d) AS rn FROM s)
-      |SELECT event_type, k AS k_ref, nd AS n_days,
-      |  CAST(s AS BIGINT) AS max_cusum, d AS peak_day,
-      |  CAST(sy - nd * k AS BIGINT) AS net_dev
-      |FROM r WHERE rn = 1 ORDER BY event_type""".stripMargin
 
   // ---- agg_poisson_bootstrap -------------------------------------------
   // B = 32 bootstrap replicates of mean(l_extendedprice): row r
@@ -239,13 +159,11 @@ object Composite34 {
        |FROM j CROSS JOIN m ORDER BY community""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_cusum_drift" -> (cusumDrift _),
     "agg_poisson_bootstrap" -> (poissonBootstrap _),
     "graph_modularity" -> (modularity _)
   )
 
   val oracle: Map[String, String] = Map(
-    "win_cusum_drift" -> cusumDriftOracle,
     "agg_poisson_bootstrap" -> poissonBootstrapOracle,
     "graph_modularity" -> modularityOracle
   )

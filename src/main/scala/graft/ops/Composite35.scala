@@ -21,24 +21,17 @@ import graft.util.Tables._
   *    scores how leaky the cut is — both sides of the community-
   *    evaluation coin).
   *
-  *  - [[anomalyMad]]: median-absolute-deviation anomaly days per
-  *    event type — the robust |y − med| > 3·MAD rule on daily
-  *    counts, where mean/σ rules break under the very outliers they
-  *    hunt.
-  *
   * Scale shapes: the fence quartiles follow the agg_weighted_median
   * rule — cumulative windows read the (flag, cents) COUNT aggregate,
   * never the raw fact table, and the 3-row fence table broadcasts
   * back into the counting pass over the same aggregate; conductance
-  * is two keyed aggregates + the 1-row edge total broadcast; MAD is
-  * the same picked-median discipline twice over per-type value-count
-  * relations bounded by |types|·|distinct counts|.
+  * is two keyed aggregates + the 1-row edge total broadcast.
   *
-  * Determinism: every comparison is exact-integer (quartiles/medians
-  * are picked values; fence tests multiply through by 2 so 1.5·IQR
-  * never leaves the integers; deviations are integer distances);
-  * surfaced prices divide exact cents by 100 once, conductance
-  * assembles once in double, both floor-6-dp (§1.5).
+  * Determinism: every comparison is exact-integer (quartiles are
+  * picked values; fence tests multiply through by 2 so 1.5·IQR never
+  * leaves the integers); surfaced prices divide exact cents by 100
+  * once, conductance assembles once in double, both floor-6-dp
+  * (§1.5).
   */
 object Composite35 {
 
@@ -187,102 +180,13 @@ object Composite35 {
        | AS conductance
        |FROM j CROSS JOIN m ORDER BY community""".stripMargin
 
-  // ---- evt_anomaly_mad -------------------------------------------------
-  // Robust anomaly days per event type: med = picked median of daily
-  // counts, MAD = picked median of |y − med|, anomaly when
-  // |y − med| > 3·MAD — all integer comparisons (the 2·cum ≥ n pick
-  // twice). Where agg-mean/σ rules inflate their own threshold under
-  // the outliers they hunt, the MAD screen does not.
-  private[graft] def anomalyMadOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-      .localCheckpoint()
-
-    // Picked median of `v` per type over a (type, v) count relation.
-    def pickedMedian(df: DataFrame, v: String, as: String): DataFrame = {
-      val cnts = df.groupBy(col("event_type"), col(v))
-        .agg(count(lit(1)).as("c"))
-      val wc = Window.partitionBy(col("event_type")).orderBy(col(v))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cnts
-        .select(col("event_type"), col(v),
-          sum(col("c")).over(wc).as("cum"))
-        .join(broadcast(cnts.groupBy(col("event_type"))
-          .agg(sum(col("c")).as("n"))), "event_type")
-        .groupBy(col("event_type"))
-        .agg(min(when(col("cum") * 2 >= col("n"), col(v))).as(as))
-    }
-
-    val med = pickedMedian(daily, "y", "median_daily")
-    val dev = daily.join(broadcast(med), "event_type")
-      .select(col("event_type"),
-        abs(col("y") - col("median_daily")).as("dev"))
-    val mad = pickedMedian(dev, "dev", "mad")
-    daily.join(broadcast(med), "event_type")
-      .join(broadcast(mad), "event_type")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"),
-        min(col("median_daily")).as("median_daily"),
-        min(col("mad")).as("mad"),
-        sum(when(abs(col("y") - col("median_daily")) > col("mad") * 3, 1L)
-          .otherwise(0L)).as("n_anomalies"))
-      .orderBy("event_type")
-  }
-
-  private def anomalyMad(s: SparkSession, dir: String): DataFrame =
-    anomalyMadOn(loadEvents(s, dir))
-
-  private val anomalyMadOracle =
-    """WITH e AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-      |  FROM events),
-      |daily AS (
-      |  SELECT event_type, d, CAST(count(*) AS BIGINT) AS y
-      |  FROM e GROUP BY 1, 2),
-      |yc AS (SELECT event_type, y, count(*) AS c FROM daily GROUP BY 1, 2),
-      |ycum AS (
-      |  SELECT event_type, y,
-      |    sum(c) OVER (PARTITION BY event_type ORDER BY y
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-      |    sum(c) OVER (PARTITION BY event_type) AS n
-      |  FROM yc),
-      |med AS (
-      |  SELECT event_type,
-      |    min(CASE WHEN cum * 2 >= n THEN y END) AS median_daily
-      |  FROM ycum GROUP BY 1),
-      |dv AS (
-      |  SELECT daily.event_type, abs(y - median_daily) AS dev
-      |  FROM daily JOIN med USING (event_type)),
-      |dc AS (SELECT event_type, dev, count(*) AS c FROM dv GROUP BY 1, 2),
-      |dcum AS (
-      |  SELECT event_type, dev,
-      |    sum(c) OVER (PARTITION BY event_type ORDER BY dev
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-      |    sum(c) OVER (PARTITION BY event_type) AS n
-      |  FROM dc),
-      |mad AS (
-      |  SELECT event_type,
-      |    min(CASE WHEN cum * 2 >= n THEN dev END) AS mad
-      |  FROM dcum GROUP BY 1)
-      |SELECT daily.event_type, CAST(count(*) AS BIGINT) AS n_days,
-      |  CAST(min(median_daily) AS BIGINT) AS median_daily,
-      |  CAST(min(mad) AS BIGINT) AS mad,
-      |  CAST(sum(CASE WHEN abs(y - median_daily) > mad * 3
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies
-      |FROM daily JOIN med USING (event_type) JOIN mad USING (event_type)
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_outlier_fences" -> (outlierFences _),
-    "graph_conductance" -> (conductance _),
-    "evt_anomaly_mad" -> (anomalyMad _)
+    "graph_conductance" -> (conductance _)
   )
 
   val oracle: Map[String, String] = Map(
     "dq_outlier_fences" -> outlierFencesOracle,
-    "graph_conductance" -> conductanceOracle,
-    "evt_anomaly_mad" -> anomalyMadOracle
+    "graph_conductance" -> conductanceOracle
   )
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.55 (round-23 batch 4) — degree correlation, market
-  * concentration, and seasonality strength:
+/** SURVEY.md §2.55 (round-23 batch 4) — degree correlation and market
+  * concentration:
   *
   *  - [[avgNeighborDegree]]: the k_nn(k) degree-correlation curve —
   *    mean neighbor degree of degree-k nodes, per k.
@@ -20,27 +20,16 @@ import graft.util.Tables._
   *    `agg_hhi` sums squared shares (every firm weighs in); CR-k is
   *    the antitrust sibling that asks only how big the heads are.
   *
-  *  - [[seasonalStrength]]: weekday seasonality strength per event
-  *    type — one-way ANOVA effect size η² = SS_between/SS_total of
-  *    daily counts grouped by ISO weekday. `evt_seasonality` draws
-  *    the heatmap and `win_seasonal_decompose` extracts indices;
-  *    this is the single score that ranks TYPES by how seasonal
-  *    they are.
-  *
   * Scale shapes: k_nn is two degree joins on the node-sized table
   * (AQE broadcasts; keyed shuffle unchanged past the threshold)
   * feeding one deg_src-keyed aggregate; CR4 windows over the
   * (nation, supplier) REVENUE AGGREGATE, never the fact table (the
   * agg_weighted_median few-value-key rule — ~|suppliers| rows), with
-  * the supplier dim joined small-side; seasonal strength pivots the
-  * 7 weekday groups into FIXED-ORDER columns of one hash aggregate
-  * so the 7-term between-group sum is a single deterministic
-  * expression, not an engine-ordered SUM over rows.
+  * the supplier dim joined small-side.
   *
   * Determinism: every sum/count is an exact integer (revenue in
-  * exact cents); k_nn/shares/η² assemble once in double (fixed term
-  * order, coalesce/nullif-guarded empty groups), floor-form 6-dp
-  * (§1.5).
+  * exact cents); k_nn and shares assemble once in double,
+  * floor-form 6-dp (§1.5).
   */
 object Composite39 {
 
@@ -142,77 +131,13 @@ object Composite39 {
       |   / sum(rev))*1e6 + 0.5)/1e6 AS cr4
       |FROM rk GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // ---- evt_seasonal_strength -------------------------------------------
-  // η² = (B − C)/(S2 − C), C = T²/N, B = Σ_g T_g²/n_g with the 7
-  // weekday groups pivoted to FIXED-ORDER columns so B is one
-  // deterministic expression. Constant series ⇒ SS_total = 0.0
-  // exactly (both sides integer-valued doubles) ⇒ NULL via nullif.
-  private[graft] def seasonalStrengthOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-      .select(col("event_type"), (weekday(col("d")) + 1).as("dow"), col("y"))
-    val terms = (1 to 7).map { g =>
-      s"coalesce((CAST(t$g AS DOUBLE)*t$g)/nullif(n$g, 0), 0)"
-    }.mkString(" + ")
-    val aggs = count(lit(1)).as("n_days") +:
-      sum(col("y")).as("t") +:
-      sum(col("y") * col("y")).as("s2") +:
-      (1 to 7).flatMap { g =>
-        Seq(sum(when(col("dow") === g, col("y")).otherwise(0L)).as(s"t$g"),
-          sum(when(col("dow") === g, 1L).otherwise(0L)).as(s"n$g"))
-      }
-    daily.groupBy(col("event_type"))
-      .agg(aggs.head, aggs.tail: _*)
-      .selectExpr("event_type", "n_days", "t AS n_events",
-        s"""floor(((($terms) - (CAST(t AS DOUBLE)*t)/n_days)
-           | / nullif(CAST(s2 AS DOUBLE)
-           |     - (CAST(t AS DOUBLE)*t)/n_days, 0))*1e6 + 0.5)/1e6
-           | AS eta2""".stripMargin)
-      .orderBy("event_type")
-  }
-
-  private def seasonalStrength(s: SparkSession, dir: String): DataFrame =
-    seasonalStrengthOn(loadEvents(s, dir))
-
-  private val seasonalStrengthOracle = {
-    val terms = (1 to 7).map { g =>
-      s"coalesce((CAST(t$g AS DOUBLE)*t$g)/nullif(n$g, 0), 0)"
-    }.mkString(" + ")
-    val pivots = (1 to 7).flatMap { g =>
-      Seq(s"CAST(sum(CASE WHEN dow = $g THEN y ELSE 0 END) AS BIGINT) AS t$g",
-        s"CAST(sum(CASE WHEN dow = $g THEN 1 ELSE 0 END) AS BIGINT) AS n$g")
-    }.mkString(",\n      |    ")
-    s"""WITH daily AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |dw AS (SELECT event_type, CAST(isodow(d) AS BIGINT) AS dow, y
-       |       FROM daily),
-       |g AS (
-       |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-       |    CAST(sum(y) AS BIGINT) AS t,
-       |    CAST(sum(y*y) AS BIGINT) AS s2,
-       |    $pivots
-       |  FROM dw GROUP BY 1)
-       |SELECT event_type, n_days, t AS n_events,
-       |  floor(((($terms) - (CAST(t AS DOUBLE)*t)/n_days)
-       |   / nullif(CAST(s2 AS DOUBLE)
-       |       - (CAST(t AS DOUBLE)*t)/n_days, 0))*1e6 + 0.5)/1e6
-       |   AS eta2
-       |FROM g ORDER BY event_type""".stripMargin
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "graph_avg_neighbor_degree" -> (avgNeighborDegree _),
-    "agg_concentration_ratio" -> (concentrationRatio _),
-    "evt_seasonal_strength" -> (seasonalStrength _)
+    "agg_concentration_ratio" -> (concentrationRatio _)
   )
 
   val oracle: Map[String, String] = Map(
     "graph_avg_neighbor_degree" -> avgNeighborDegreeOracle,
-    "agg_concentration_ratio" -> concentrationRatioOracle,
-    "evt_seasonal_strength" -> seasonalStrengthOracle
+    "agg_concentration_ratio" -> concentrationRatioOracle
   )
 }

@@ -1,24 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.56 (round-23 batch 5) — random-walk diagnostics and
-  * tokenizer economics:
-  *
-  *  - [[varianceRatio]]: Lo-MacKinlay variance-ratio diagnostic per
-  *    event type — VR(4) = Var(4-step overlapping diffs)/(4·Var(1-step
-  *    diffs)) over the observed daily-count sequence. ≈1 for a random
-  *    walk, <1 mean-reverting, >1 trending — the serial-dependence
-  *    screen `agg_autocorr`'s single lag cannot summarize.
-  *
-  *  - [[turningPoints]]: turning-point randomness test per event
-  *    type — count of strict local extrema among daily counts vs the
-  *    2(n−2)/3 expectation, z-scored with variance (16n−29)/90.
-  *    `win_mann_kendall` tests TREND; this tests RANDOMNESS.
+/** SURVEY.md §2.56 (round-23 batch 5) — tokenizer economics:
   *
   *  - [[tokenizerFertility]]: tokenizer fertility per language —
   *    regex-token-per-whitespace-word and chars-per-regex-token
@@ -26,147 +13,13 @@ import graft.util.Tables._
   *    curation decision: which languages cost more tokens per word —
   *    the multilingual budget number behind sampling weights).
   *
-  * Scale shapes: both series rows window over the (type, day) COUNT
-  * aggregate — never raw events (the agg_weighted_median
-  * few-value-key rule) — and every lag/lead shares ONE window sort;
-  * fertility is a single map-side-combining hash aggregate over
+  * Scale shape: a single map-side-combining hash aggregate over
   * per-doc token counts (codegen'd split/regexp, no UDFs).
   *
-  * Determinism: diffs/counts/token totals are exact integers; VR,
-  * expected turning points, z, and fertility assemble once in double
-  * from exact integers, floor-form 6-dp (§1.5); `nullif` guards
-  * degenerate zero variances.
+  * Determinism: token totals are exact integers; fertility assembles
+  * once in double, floor-form 6-dp (§1.5).
   */
 object Composite40 {
-
-  // ---- evt_variance_ratio ----------------------------------------------
-  // Row-lag semantics over the OBSERVED day sequence (the corpus is
-  // gap-free daily; calendar gaps would shift both engines
-  // identically). Population variances from exact integer sums:
-  // Var_k = (m_k·Σd² − (Σd)²)/m_k².
-  private[graft] def varianceRatioOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    daily
-      .select(col("event_type"),
-        (col("y") - lag(col("y"), 1).over(w)).as("d1"),
-        (col("y") - lag(col("y"), 4).over(w)).as("d4"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"),
-        count(col("d1")).as("m1"), sum(col("d1")).as("s1"),
-        sum(col("d1") * col("d1")).as("q1"),
-        count(col("d4")).as("m4"), sum(col("d4")).as("s4"),
-        sum(col("d4") * col("d4")).as("q4"))
-      .selectExpr("event_type", "n_days",
-        """floor(((CAST(m1 AS DOUBLE)*q1 - CAST(s1 AS DOUBLE)*s1)
-          | / (CAST(m1 AS DOUBLE)*m1))*1e6 + 0.5)/1e6 AS var1""".stripMargin,
-        """floor(((CAST(m4 AS DOUBLE)*q4 - CAST(s4 AS DOUBLE)*s4)
-          | / (CAST(m4 AS DOUBLE)*m4))*1e6 + 0.5)/1e6 AS var4""".stripMargin,
-        """floor((((CAST(m4 AS DOUBLE)*q4 - CAST(s4 AS DOUBLE)*s4)
-          |   / (4 * CAST(m4 AS DOUBLE)*m4))
-          | / nullif((CAST(m1 AS DOUBLE)*q1 - CAST(s1 AS DOUBLE)*s1)
-          |   / (CAST(m1 AS DOUBLE)*m1), 0))*1e6 + 0.5)/1e6
-          | AS vr4""".stripMargin)
-      .orderBy("event_type")
-  }
-
-  private def varianceRatio(s: SparkSession, dir: String): DataFrame =
-    varianceRatioOn(loadEvents(s, dir))
-
-  private val varianceRatioOracle =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-      |    CAST(count(*) AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
-      |dif AS (
-      |  SELECT event_type,
-      |    y - lag(y, 1) OVER (PARTITION BY event_type ORDER BY d) AS d1,
-      |    y - lag(y, 4) OVER (PARTITION BY event_type ORDER BY d) AS d4
-      |  FROM daily),
-      |g AS (
-      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-      |    CAST(count(d1) AS BIGINT) AS m1,
-      |    CAST(sum(d1) AS BIGINT) AS s1,
-      |    CAST(sum(d1*d1) AS BIGINT) AS q1,
-      |    CAST(count(d4) AS BIGINT) AS m4,
-      |    CAST(sum(d4) AS BIGINT) AS s4,
-      |    CAST(sum(d4*d4) AS BIGINT) AS q4
-      |  FROM dif GROUP BY 1)
-      |SELECT event_type, n_days,
-      |  floor(((CAST(m1 AS DOUBLE)*q1 - CAST(s1 AS DOUBLE)*s1)
-      |   / (CAST(m1 AS DOUBLE)*m1))*1e6 + 0.5)/1e6 AS var1,
-      |  floor(((CAST(m4 AS DOUBLE)*q4 - CAST(s4 AS DOUBLE)*s4)
-      |   / (CAST(m4 AS DOUBLE)*m4))*1e6 + 0.5)/1e6 AS var4,
-      |  floor((((CAST(m4 AS DOUBLE)*q4 - CAST(s4 AS DOUBLE)*s4)
-      |     / (4 * CAST(m4 AS DOUBLE)*m4))
-      |   / nullif((CAST(m1 AS DOUBLE)*q1 - CAST(s1 AS DOUBLE)*s1)
-      |     / (CAST(m1 AS DOUBLE)*m1), 0))*1e6 + 0.5)/1e6
-      |   AS vr4
-      |FROM g ORDER BY event_type""".stripMargin
-
-  // ---- win_turning_points ----------------------------------------------
-  // Strict extrema only: (y_t − y_{t−1})·(y_{t+1} − y_t) < 0; flat
-  // shoulders are not turning points. E[tp] = 2(n−2)/3,
-  // Var[tp] = (16n − 29)/90 under the randomness null.
-  private[graft] def turningPointsOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    daily
-      .select(col("event_type"),
-        (col("y") - lag(col("y"), 1).over(w)).as("db"),
-        (lead(col("y"), 1).over(w) - col("y")).as("df"))
-      .groupBy(col("event_type"))
-      .agg((count(lit(1))).as("n_days"),
-        sum(when(col("db") * col("df") < 0, 1L).otherwise(0L))
-          .as("n_turning_points"))
-      .selectExpr("event_type", "n_days", "n_turning_points",
-        // 2·(n−2) stays exact in DOUBLE before the /3 — a "2.0"
-        // literal is DECIMAL in BOTH engines and decimal division
-        // carries engine-specific scale (a 1-ulp z straddle at
-        // sf0.001 caught this), so every division here is forced
-        // into IEEE DOUBLE explicitly.
-        "floor(((2*CAST(n_days - 2 AS DOUBLE))/3)*1e6 + 0.5)/1e6 AS expected_tp",
-        // n_days == 1 makes 16n−29 negative: Spark's sqrt would emit
-        // NaN where DuckDB raises, so degenerate series yield NULL z.
-        """CASE WHEN n_days >= 2 THEN
-          | floor(((n_turning_points - (2*CAST(n_days - 2 AS DOUBLE))/3)
-          | / sqrt((16*CAST(n_days AS DOUBLE) - 29)/90))*1e6 + 0.5)/1e6
-          | END AS z""".stripMargin)
-      .orderBy("event_type")
-  }
-
-  private def turningPoints(s: SparkSession, dir: String): DataFrame =
-    turningPointsOn(loadEvents(s, dir))
-
-  private val turningPointsOracle =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-      |    CAST(count(*) AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
-      |dif AS (
-      |  SELECT event_type,
-      |    y - lag(y, 1) OVER (PARTITION BY event_type ORDER BY d) AS db,
-      |    lead(y, 1) OVER (PARTITION BY event_type ORDER BY d) - y AS df
-      |  FROM daily),
-      |g AS (
-      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-      |    CAST(sum(CASE WHEN db * df < 0 THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_turning_points
-      |  FROM dif GROUP BY 1)
-      |SELECT event_type, n_days, n_turning_points,
-      |  floor(((2*CAST(n_days - 2 AS DOUBLE))/3)*1e6 + 0.5)/1e6
-      |    AS expected_tp,
-      |  CASE WHEN n_days >= 2 THEN
-      |   floor(((n_turning_points - (2*CAST(n_days - 2 AS DOUBLE))/3)
-      |   / sqrt((16*CAST(n_days AS DOUBLE) - 29)/90))*1e6 + 0.5)/1e6
-      |   END AS z
-      |FROM g ORDER BY event_type""".stripMargin
 
   // ---- llm_tokenizer_fertility -----------------------------------------
   private[graft] def tokenizerFertilityOn(docs: DataFrame): DataFrame =
@@ -209,14 +62,10 @@ object Composite40 {
       |FROM g ORDER BY lang""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_variance_ratio" -> (varianceRatio _),
-    "win_turning_points" -> (turningPoints _),
     "llm_tokenizer_fertility" -> (tokenizerFertility _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_variance_ratio" -> varianceRatioOracle,
-    "win_turning_points" -> turningPointsOracle,
     "llm_tokenizer_fertility" -> tokenizerFertilityOracle
   )
 }

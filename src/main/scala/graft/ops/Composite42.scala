@@ -1,25 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.58 (round-23 batch 7) — calendar completeness, sign
-  * randomness, and the duplication spectrum:
-  *
-  *  - [[calendarGaps]]: calendar-completeness audit per event type —
-  *    observed days vs the first→last span, missing-day total, gap
-  *    count, and the longest gap. `evt_gap_fill` FILLS holes for
-  *    downstream math; this AUDITS them (the "did ingestion skip
-  *    days?" question a pipeline owner asks first).
-  *
-  *  - [[runsTest]]: Wald-Wolfowitz runs test per event type — runs
-  *    of daily counts above/below the picked median (ties dropped),
-  *    z-scored against the randomness null. `win_turning_points`
-  *    tests LOCAL extrema; the runs test detects sign PERSISTENCE
-  *    (long above-median stretches) that turning points miss.
+/** SURVEY.md §2.58 (round-23 batch 7) — the duplication spectrum:
   *
   *  - [[dedupFamilySpectrum]]: exact-duplicate family-size spectrum —
   *    for each family size k, how many md5 families, docs, and
@@ -28,162 +14,12 @@ import graft.util.Tables._
   *    families or many pairs? — the number that picks the dedup
   *    strategy).
   *
-  * Scale shapes: all three reduce to keyed map-side-combining
-  * aggregates — calendar/runs rows window over the (type, day) COUNT
-  * aggregate (agg_weighted_median few-value-key rule; lag columns
-  * share ONE sort), the spectrum is two chained hash aggregates over
-  * the md5 projection; the picked median broadcasts back (the
-  * evt_anomaly_mad discipline).
+  * Scale shape: two chained map-side-combining hash aggregates over
+  * the md5 projection.
   *
-  * Determinism: day arithmetic, run/gap counts, and family sizes are
-  * exact integers (DuckDB DATE−DATE is BIGINT — both sides cast);
-  * the runs z assembles once with every division forced into DOUBLE
-  * (§1.5 rule 8), `nullif` guarding the one-sided degenerate;
-  * floor-6-dp.
+  * Determinism: family sizes are exact integers.
   */
 object Composite42 {
-
-  private def dailyCounts(events: DataFrame): DataFrame =
-    events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-
-  // ---- dq_calendar_gaps ------------------------------------------------
-  private[graft] def calendarGapsOn(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    dailyCounts(events)
-      .select(col("event_type"), col("d"),
-        datediff(col("d"), lag(col("d"), 1).over(w)).cast("long").as("step"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"),
-        (max(col("step") - 1)).as("max_gap_raw"),
-        sum(when(col("step") > 1, 1L).otherwise(0L)).as("n_gaps"),
-        sum(when(col("step") > 1, col("step") - 1).otherwise(0L))
-          .as("n_missing_days"),
-        (datediff(max(col("d")), min(col("d"))) + 1).cast("long")
-          .as("span_days"))
-      .selectExpr("event_type", "span_days", "n_days",
-        "n_missing_days", "n_gaps",
-        "coalesce(max_gap_raw, CAST(0 AS BIGINT)) AS max_gap_days")
-      .orderBy("event_type")
-  }
-
-  private def calendarGaps(s: SparkSession, dir: String): DataFrame =
-    calendarGapsOn(loadEvents(s, dir))
-
-  private val calendarGapsOracle =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-      |    CAST(count(*) AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
-      |st AS (
-      |  SELECT event_type, d,
-      |    CAST(d - lag(d, 1) OVER (PARTITION BY event_type ORDER BY d)
-      |      AS BIGINT) AS step
-      |  FROM daily),
-      |g AS (
-      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-      |    CAST(max(step - 1) AS BIGINT) AS max_gap_raw,
-      |    CAST(sum(CASE WHEN step > 1 THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_gaps,
-      |    CAST(sum(CASE WHEN step > 1 THEN step - 1 ELSE 0 END) AS BIGINT)
-      |      AS n_missing_days,
-      |    CAST(max(d) - min(d) + 1 AS BIGINT) AS span_days
-      |  FROM st GROUP BY 1)
-      |SELECT event_type, span_days, n_days, n_missing_days, n_gaps,
-      |  coalesce(max_gap_raw, CAST(0 AS BIGINT)) AS max_gap_days
-      |FROM g ORDER BY event_type""".stripMargin
-
-  // ---- win_runs_test ---------------------------------------------------
-  // Median-tie days drop out (the standard reduction); R = 1 + sign
-  // changes; E[R] = 1 + 2·n1·n0/n, Var[R] = 2n1n0(2n1n0 − n) /
-  // (n²(n−1)); z NULL when one side is empty (Var = 0).
-  private[graft] def runsTestOn(events: DataFrame): DataFrame = {
-    val daily = dailyCounts(events).localCheckpoint()
-    val cnts = daily.groupBy(col("event_type"), col("y"))
-      .agg(count(lit(1)).as("c"))
-    val wc = Window.partitionBy(col("event_type")).orderBy(col("y"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val med = cnts
-      .select(col("event_type"), col("y"), sum(col("c")).over(wc).as("cum"))
-      .join(broadcast(cnts.groupBy(col("event_type"))
-        .agg(sum(col("c")).as("n"))), "event_type")
-      .groupBy(col("event_type"))
-      .agg(min(when(col("cum") * 2 >= col("n"), col("y"))).as("med"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    daily.join(broadcast(med), "event_type")
-      .filter(col("y") =!= col("med"))
-      .select(col("event_type"), col("d"), col("med").as("median_daily"),
-        when(col("y") > col("med"), 1L).otherwise(0L).as("s"))
-      .select(col("event_type"), col("median_daily"), col("s"),
-        lag(col("s"), 1).over(w).as("ps"))
-      .groupBy(col("event_type"))
-      .agg(min(col("median_daily")).as("median_daily"),
-        count(lit(1)).as("n_scored"),
-        sum(col("s")).as("n_above"),
-        sum(lit(1L) - col("s")).as("n_below"),
-        (sum(when(col("ps").isNotNull && col("s") =!= col("ps"), 1L)
-          .otherwise(0L)) + 1).as("n_runs"))
-      .selectExpr("event_type", "median_daily", "n_scored", "n_above",
-        "n_below", "n_runs",
-        // nullif on the n²(n−1) denominator: n_scored == 1 would
-        // otherwise divide by zero (NaN/Inf in Spark, error paths in
-        // the oracle) — degenerate series yield NULL z instead.
-        """floor(((n_runs - (1 + (2*CAST(n_above AS DOUBLE)*n_below)
-          |     / n_scored))
-          | / nullif(sqrt((2*CAST(n_above AS DOUBLE)*n_below
-          |     * (2*CAST(n_above AS DOUBLE)*n_below - n_scored))
-          |   / nullif(CAST(n_scored AS DOUBLE)*n_scored*(n_scored - 1),
-          |       0)), 0))
-          | *1e6 + 0.5)/1e6 AS z""".stripMargin)
-      .orderBy("event_type")
-  }
-
-  private def runsTest(s: SparkSession, dir: String): DataFrame =
-    runsTestOn(loadEvents(s, dir))
-
-  private val runsTestOracle =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-      |    CAST(count(*) AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
-      |yc AS (SELECT event_type, y, count(*) AS c FROM daily GROUP BY 1, 2),
-      |ycum AS (
-      |  SELECT event_type, y,
-      |    sum(c) OVER (PARTITION BY event_type ORDER BY y
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-      |    sum(c) OVER (PARTITION BY event_type) AS n
-      |  FROM yc),
-      |med AS (
-      |  SELECT event_type,
-      |    CAST(min(CASE WHEN cum * 2 >= n THEN y END) AS BIGINT) AS med
-      |  FROM ycum GROUP BY 1),
-      |sg AS (
-      |  SELECT daily.event_type, d, med,
-      |    CASE WHEN y > med THEN 1 ELSE 0 END AS s
-      |  FROM daily JOIN med USING (event_type)
-      |  WHERE y <> med),
-      |lg AS (
-      |  SELECT event_type, med, s,
-      |    lag(s, 1) OVER (PARTITION BY event_type ORDER BY d) AS ps
-      |  FROM sg),
-      |g AS (
-      |  SELECT event_type, CAST(min(med) AS BIGINT) AS median_daily,
-      |    CAST(count(*) AS BIGINT) AS n_scored,
-      |    CAST(sum(s) AS BIGINT) AS n_above,
-      |    CAST(sum(1 - s) AS BIGINT) AS n_below,
-      |    CAST(sum(CASE WHEN ps IS NOT NULL AND s <> ps THEN 1 ELSE 0 END)
-      |      + 1 AS BIGINT) AS n_runs
-      |  FROM lg GROUP BY 1)
-      |SELECT event_type, median_daily, n_scored, n_above, n_below, n_runs,
-      |  floor(((n_runs - (1 + (2*CAST(n_above AS DOUBLE)*n_below)
-      |       / n_scored))
-      |   / nullif(sqrt((2*CAST(n_above AS DOUBLE)*n_below
-      |       * (2*CAST(n_above AS DOUBLE)*n_below - n_scored))
-      |     / nullif(CAST(n_scored AS DOUBLE)*n_scored*(n_scored - 1),
-      |         0)), 0))
-      |   *1e6 + 0.5)/1e6 AS z
-      |FROM g ORDER BY event_type""".stripMargin
 
   // ---- llm_dedup_family_spectrum ---------------------------------------
   private[graft] def dedupFamilySpectrumOn(docs: DataFrame): DataFrame =
@@ -212,14 +48,10 @@ object Composite42 {
       |FROM sp ORDER BY family_size""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_calendar_gaps" -> (calendarGaps _),
-    "win_runs_test" -> (runsTest _),
     "llm_dedup_family_spectrum" -> (dedupFamilySpectrum _)
   )
 
   val oracle: Map[String, String] = Map(
-    "dq_calendar_gaps" -> calendarGapsOracle,
-    "win_runs_test" -> runsTestOracle,
     "llm_dedup_family_spectrum" -> dedupFamilySpectrumOracle
   )
 }

@@ -1,25 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.59 (round-24 batch 1) — trend-aware forecasting and
-  * schema governance:
-  *
-  *  - [[holtBacktest]]: one-step-ahead backtest of truncated Brown
-  *    double exponential smoothing (level + trend) on daily event
-  *    counts. `win_ewma_backtest` smooths the LEVEL only and lags
-  *    behind any trending series by design; Brown's method smooths
-  *    the smoothed series and forecasts 3·S1 − 2·S2 (the α = ½ form
-  *    of level + trend), which tracks a linear trend with zero
-  *    asymptotic lag. Same truncated-exact-integer construction as
-  *    the EWMA row: α = ½ truncated at 8 lags makes S1 a /255
-  *    integer dot product and S2 a /255² one, so every residual
-  *    accumulates in BIGINT and the three ratios assemble once in
-  *    double (§1.5).
+/** SURVEY.md §2.59 (round-24 batch 1) — schema governance:
   *
   *  - [[schemaDrift]]: per-generation OBSERVED-schema audit over the
   *    document corpus — for each column of the fixed physical
@@ -34,118 +20,15 @@ import graft.util.Tables._
   *    that vanishes in the new generation, breaks downstream
   *    readers before any distribution test fires).
   *
-  * Scale shapes: the Holt windows follow the agg_weighted_median
-  * rule — every lag column reads the (type, day) COUNT aggregate,
-  * never the raw event table, and all three window stages share one
-  * (event_type, d) sort; schema drift is ONE full scan collapsed to
-  * a single 20-aggregate row (all map-side combining), localCheckpointed
-  * so the 5 per-column branches read the one-row result instead of
+  * Scale shape: schema drift is ONE full scan collapsed to a single
+  * 20-aggregate row (all map-side combining), localCheckpointed so
+  * the 5 per-column branches read the one-row result instead of
   * re-scanning the corpus 5 times.
   *
-  * Determinism: Holt residuals are exact-integer by construction
-  * (weights 2^(7−j)/255, forecast numerator 765·n1 − 2·n2 over /255²
-  * scaling); schema-drift counts and class thresholds are exact
+  * Determinism: schema-drift counts and class thresholds are exact
   * integer comparisons — no floats anywhere in the audit.
   */
 object Composite43 {
-
-  private def dailyCounts(events: DataFrame): DataFrame =
-    events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-
-  // ---- win_holt_backtest -----------------------------------------------
-  // Truncated Brown DES, α = ½, L = 8 lags per smoothing stage:
-  //   n1_t = Σ_{j=0..7} 2^(7−j)·y_{t−j}        (= 255·S1_t, integer)
-  //   n2_t = Σ_{i=0..7} 2^(7−i)·n1_{t−i}       (= 255²·S2_t, integer)
-  //   f_t  = 765·n1_t − 2·n2_t                 (= 255²·(3S1 − 2S2))
-  //   err_{t+1} = 255²·y_{t+1} − f_t           (exact BIGINT)
-  // Row-lag (not calendar-lag) semantics, identical in the oracle, so
-  // day gaps cannot diverge the two engines. The first 15 rows per
-  // type warm the two stages and the 16th is the first scored
-  // forecast — the sum-of-products lag form makes each stage's
-  // incomplete prefix NULL, so one isNotNull filter per stage is the
-  // whole warm-up handling.
-  private val HoltLags = 8
-  private val HoltDen = 255L // Σ_{j=0..7} 2^j
-
-  private[graft] def holtBacktestOn(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    def stage(src: Column): Column =
-      (0 until HoltLags).map(j =>
-        lag(src, j).over(w) * lit(1L << (HoltLags - 1 - j))).reduce(_ + _)
-    val s1 = dailyCounts(events)
-      .select(col("event_type"), col("d"), col("y"), stage(col("y")).as("n1"))
-      .filter(col("n1").isNotNull)
-    val s2 = s1
-      .select(col("event_type"), col("d"), col("y"), col("n1"),
-        stage(col("n1")).as("n2"))
-      .filter(col("n2").isNotNull)
-      .select(col("event_type"), col("d"), col("y"),
-        (lit(3L * HoltDen) * col("n1") - lit(2L) * col("n2")).as("fnum"))
-    s2.select(col("event_type"), col("y"),
-        lag(col("fnum"), 1).over(w).as("pf"),
-        lag(col("y"), 1).over(w).as("py"))
-      .filter(col("pf").isNotNull)
-      .select(col("event_type"),
-        (col("y") * lit(HoltDen * HoltDen) - col("pf")).as("err"),
-        abs(col("y") - col("py")).as("naive_err"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(abs(col("err"))).as("sa"),
-        sum(col("err")).as("se"), sum(col("naive_err")).as("sn"))
-      .selectExpr("event_type", "n AS n_forecasts",
-        "floor((CAST(sa AS DOUBLE) / 65025 / n)*1e6 + 0.5)/1e6 AS mae",
-        "floor((CAST(se AS DOUBLE) / 65025 / n)*1e6 + 0.5)/1e6 AS bias",
-        "floor((CAST(sn AS DOUBLE) / n)*1e6 + 0.5)/1e6 AS naive_mae")
-      .orderBy("event_type")
-  }
-
-  private def holtBacktest(s: SparkSession, dir: String): DataFrame =
-    holtBacktestOn(loadEvents(s, dir))
-
-  private def holtBacktestOracle: String = {
-    // lag(x, 0) is x itself; spelled as the bare column so the oracle
-    // does not depend on DuckDB's lag(x, 0) corner semantics.
-    def stage(x: String): String =
-      (0 until HoltLags).map(j =>
-        (if (j == 0) x else s"lag($x, $j) OVER w") +
-          s"*${1L << (HoltLags - 1 - j)}").mkString(" + ")
-    s"""WITH daily AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |s1 AS (
-       |  SELECT * FROM (
-       |    SELECT event_type, d, y, ${stage("y")} AS n1
-       |    FROM daily
-       |    WINDOW w AS (PARTITION BY event_type ORDER BY d))
-       |  WHERE n1 IS NOT NULL),
-       |s2 AS (
-       |  SELECT event_type, d, y, 765*n1 - 2*n2 AS fnum FROM (
-       |    SELECT event_type, d, y, n1, ${stage("n1")} AS n2
-       |    FROM s1
-       |    WINDOW w AS (PARTITION BY event_type ORDER BY d))
-       |  WHERE n2 IS NOT NULL),
-       |scored AS (
-       |  SELECT event_type, y*65025 - pf AS err, abs(y - py) AS naive_err
-       |  FROM (
-       |    SELECT event_type, y, lag(fnum, 1) OVER w AS pf,
-       |      lag(y, 1) OVER w AS py
-       |    FROM s2
-       |    WINDOW w AS (PARTITION BY event_type ORDER BY d))
-       |  WHERE pf IS NOT NULL),
-       |g AS (
-       |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(abs(err)) AS BIGINT) AS sa,
-       |    CAST(sum(err) AS BIGINT) AS se,
-       |    CAST(sum(naive_err) AS BIGINT) AS sn
-       |  FROM scored GROUP BY 1)
-       |SELECT event_type, n AS n_forecasts,
-       |  floor((CAST(sa AS DOUBLE) / 65025 / n)*1e6 + 0.5)/1e6 AS mae,
-       |  floor((CAST(se AS DOUBLE) / 65025 / n)*1e6 + 0.5)/1e6 AS bias,
-       |  floor((CAST(sn AS DOUBLE) / n)*1e6 + 0.5)/1e6 AS naive_mae
-       |FROM g ORDER BY event_type""".stripMargin
-  }
 
   // ---- dq_schema_drift -------------------------------------------------
   // Column descriptors: (name, integer?) over the documents physical
@@ -243,12 +126,10 @@ object Composite43 {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_holt_backtest" -> (holtBacktest _),
     "dq_schema_drift" -> (schemaDrift _)
   )
 
   val oracle: Map[String, String] = Map(
-    "win_holt_backtest" -> holtBacktestOracle,
     "dq_schema_drift" -> schemaDriftOracle
   )
 }

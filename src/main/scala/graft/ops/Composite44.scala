@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.60 (round-24 batch 2) — range volatility and
-  * long-memory diagnostics:
+/** SURVEY.md §2.60 (round-24 batch 2) — range volatility:
   *
   *  - [[trueRangeAtr]]: Wilder's True Range and 14-day ATR over the
   *    daily revenue "candle" (high / low / deterministic last order
@@ -17,35 +16,18 @@ import graft.util.Tables._
   *    stop-loss / band-width primitive the close-only rows cannot
   *    see.
   *
-  *  - [[hurstRs]]: rescaled-range (R/S) analysis of daily event
-  *    counts per type — average R/S over full blocks of 8/16/32
-  *    days. `evt_variance_ratio` tests the random walk through
-  *    variance SCALING; R/S measures range scaling, the Hurst
-  *    long-memory diagnostic (persistent series: R/S grows faster
-  *    than √n; the three block sizes give the curve whose slope is
-  *    H).
-  *
-  * Scale shapes: the candle is one map-side-combining date aggregate
+  * Scale shape: the candle is one map-side-combining date aggregate
   * (the win_rsi horizon-bounded shape: the global window sorts
-  * |days|, never |orders|); R/S explodes the (type, day) COUNT
-  * aggregate 3× (once per block size) and reduces per (type, size,
-  * block) with ONE cumulative window — every pair-free, shuffle
-  * counts bounded by |types|·|days|·3.
+  * |days|, never |orders|).
   *
   * Determinism: prices become exact cents (decimal ×100 → BIGINT),
-  * so TR, window sums, and every R/S block statistic (scaled
-  * deviations n·cum − t·S, range, n·Σy² − S²) are exact integers;
-  * the max-of-three TR is a CASE cascade on BOTH engines (DuckDB's
-  * greatest() on decimals silently widens to DOUBLE — the win_rsi
-  * gotcha — and the CASE form sidesteps the whole class); doubles
-  * assemble once per output with floor-6-dp (§1.5).
+  * so TR and window sums are exact integers; the max-of-three TR is
+  * a CASE cascade on BOTH engines (DuckDB's greatest() on decimals
+  * silently widens to DOUBLE — the win_rsi gotcha — and the CASE
+  * form sidesteps the whole class); the ATR assembles once with
+  * floor-6-dp (§1.5).
   */
 object Composite44 {
-
-  private def dailyCounts(events: DataFrame): DataFrame =
-    events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
 
   // ---- win_true_range_atr ----------------------------------------------
   private[graft] def trueRangeAtrOn(orders: DataFrame): DataFrame = {
@@ -110,101 +92,11 @@ object Composite44 {
       |  floor(((CAST(s14 AS DOUBLE) / 100) / 14)*1e6 + 0.5)/1e6 AS atr
       |FROM w WHERE fn = 14 ORDER BY d""".stripMargin
 
-  // ---- evt_hurst_rs ----------------------------------------------------
-  // Block statistics stay integral by scaling deviations by the block
-  // size n: dev_t = n·y_t − S (S = block sum), Z_t = n·cum_t − t·S,
-  // R_scaled = max(Z,0) − min(Z,0), and n²·Var = n·Σy² − S², so
-  // R/S = R_scaled / sqrt(n·Σy² − S²) — ONE double assembly per
-  // block, then an averaged curve point per (type, n). Constant
-  // blocks (zero variance) are excluded via nullif and counted
-  // separately (n_blocks vs n_scored).
-  private[graft] def hurstRsOn(events: DataFrame): DataFrame = {
-    val wrn = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val wcum = Window.partitionBy(col("event_type"), col("bn"), col("blk"))
-      .orderBy(col("rn"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wblk = Window.partitionBy(col("event_type"), col("bn"), col("blk"))
-    dailyCounts(events)
-      .select(col("event_type"), col("y").cast("long").as("y"),
-        row_number().over(wrn).cast("long").as("rn"))
-      .select(col("event_type"), col("y"), col("rn"),
-        explode(array(lit(8L), lit(16L), lit(32L))).as("bn"))
-      .selectExpr("event_type", "bn", "y", "rn",
-        "(rn - 1) div bn AS blk", "(rn - 1) % bn + 1 AS rib")
-      .withColumn("cum", sum(col("y")).over(wcum))
-      .withColumn("sb", sum(col("y")).over(wblk))
-      .withColumn("z", col("bn") * col("cum") - col("rib") * col("sb"))
-      .groupBy(col("event_type"), col("bn"), col("blk"))
-      .agg(count(lit(1)).as("cnt"), max(col("sb")).as("s"),
-        sum(col("y") * col("y")).as("qq"),
-        max(col("z")).as("zmax"), min(col("z")).as("zmin"))
-      .filter(col("cnt") === col("bn"))
-      .selectExpr("event_type", "bn",
-        """(CASE WHEN zmax > 0 THEN zmax ELSE 0 END
-          |  - CASE WHEN zmin < 0 THEN zmin ELSE 0 END) AS r""".stripMargin,
-        "bn * qq - s * s AS q")
-      .groupBy(col("event_type"), col("bn").as("block_n"))
-      .agg(count(lit(1)).as("n_blocks"),
-        count(when(col("q") > 0, 1L)).as("n_scored"),
-        expr("""floor(avg(CAST(r AS DOUBLE)
-          | / nullif(sqrt(CAST(q AS DOUBLE)), 0))*1e6 + 0.5)/1e6"""
-          .stripMargin).as("avg_rs"))
-      .orderBy("event_type", "block_n")
-  }
-
-  private def hurstRs(s: SparkSession, dir: String): DataFrame =
-    hurstRsOn(loadEvents(s, dir))
-
-  private val hurstRsOracle =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-      |    CAST(count(*) AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
-      |rn AS (
-      |  SELECT event_type, y,
-      |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
-      |      AS BIGINT) AS rn
-      |  FROM daily),
-      |sized AS (
-      |  SELECT event_type, y, rn, CAST(bn.bn AS BIGINT) AS bn,
-      |    (rn - 1) // CAST(bn.bn AS BIGINT) AS blk,
-      |    (rn - 1) % CAST(bn.bn AS BIGINT) + 1 AS rib
-      |  FROM rn CROSS JOIN (SELECT unnest([8, 16, 32]) AS bn) bn),
-      |zs AS (
-      |  SELECT event_type, bn, blk, y,
-      |    bn * CAST(sum(y) OVER (PARTITION BY event_type, bn, blk
-      |      ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |      AS BIGINT)
-      |     - rib * CAST(sum(y) OVER (PARTITION BY event_type, bn, blk)
-      |      AS BIGINT) AS z,
-      |    CAST(sum(y) OVER (PARTITION BY event_type, bn, blk) AS BIGINT)
-      |      AS sb
-      |  FROM sized),
-      |blocks AS (
-      |  SELECT event_type, bn, blk, CAST(count(*) AS BIGINT) AS cnt,
-      |    max(sb) AS s, CAST(sum(y * y) AS BIGINT) AS qq,
-      |    CAST(max(z) AS BIGINT) AS zmax, CAST(min(z) AS BIGINT) AS zmin
-      |  FROM zs GROUP BY 1, 2, 3),
-      |scored AS (
-      |  SELECT event_type, bn,
-      |    (CASE WHEN zmax > 0 THEN zmax ELSE 0 END
-      |      - CASE WHEN zmin < 0 THEN zmin ELSE 0 END) AS r,
-      |    bn * qq - s * s AS q
-      |  FROM blocks WHERE cnt = bn)
-      |SELECT event_type, bn AS block_n, CAST(count(*) AS BIGINT)
-      |    AS n_blocks,
-      |  CAST(count(CASE WHEN q > 0 THEN 1 END) AS BIGINT) AS n_scored,
-      |  floor(avg(CAST(r AS DOUBLE)
-      |   / nullif(sqrt(CAST(q AS DOUBLE)), 0))*1e6 + 0.5)/1e6 AS avg_rs
-      |FROM scored GROUP BY 1, 2 ORDER BY event_type, block_n""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_true_range_atr" -> (trueRangeAtr _),
-    "evt_hurst_rs" -> (hurstRs _)
+    "win_true_range_atr" -> (trueRangeAtr _)
   )
 
   val oracle: Map[String, String] = Map(
-    "win_true_range_atr" -> trueRangeAtrOracle,
-    "evt_hurst_rs" -> hurstRsOracle
+    "win_true_range_atr" -> trueRangeAtrOracle
   )
 }

@@ -1,20 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.61 (round-24 batch 3) — portmanteau autocorrelation
-  * and normality testing:
-  *
-  *  - [[ljungBox]]: Ljung-Box Q(7) per event type over daily counts.
-  *    `agg_autocorr` reports two individual ρ_k of the revenue
-  *    series; Ljung-Box pools SEVEN lags of the count series into
-  *    the one portmanteau statistic ("is there ANY autocorrelation
-  *    structure?") with the χ²₇ 5% verdict — the whiteness gate a
-  *    forecasting pipeline runs before trusting residuals.
+/** SURVEY.md §2.61 (round-24 batch 3) — normality testing:
   *
   *  - [[jarqueBera]]: Jarque-Bera normality test of order totals per
   *    priority. `agg_higher_moments` REPORTS skewness/kurtosis of a
@@ -22,111 +13,19 @@ import graft.util.Tables._
   *    statistic n/6·(S² + K²/4) with the χ²₂ 5% verdict — the
   *    distributional gate for every z-interval downstream.
   *
-  * Scale shapes: Ljung-Box is one 7-lag window over the (type, day)
-  * COUNT aggregate (agg_weighted_median rule — the window sorts
-  * |types|·|days|, never raw events) feeding ONE 43-column hash
-  * aggregate; JB is one map-side-combining power-sum aggregate per
-  * priority (5 groups). Both end broadcast-sized.
+  * Scale shape: one map-side-combining power-sum aggregate per
+  * priority (5 groups), broadcast-sized.
   *
-  * Determinism: every Ljung-Box co-moment is a BIGINT sum of integer
-  * daily counts (order-independent by construction); each ρ_k and
-  * the pooled Q assemble in fixed left-to-right formula text; JB
-  * power sums are exact DECIMALs (the §1.5 r7 discipline — the
-  * oracle routes sums through VARCHAR because DuckDB's direct
-  * decimal→double cast double-rounds beyond 2^53); the χ² verdicts
-  * compare AFTER the 6-dp floor so both engines decide on identical
-  * numbers. The decimal power-sum headroom (38,8) bounds the
-  * corpus this row may run on to ~1e30 in Σx⁴ — at the 100 TB
-  * scale, center-and-scale x first (the standard JB preprocessing)
-  * or widen to the two-pass centered form.
+  * Determinism: JB power sums are exact DECIMALs (the §1.5 r7
+  * discipline — the oracle routes sums through VARCHAR because
+  * DuckDB's direct decimal→double cast double-rounds beyond 2^53);
+  * the χ² verdict compares AFTER the 6-dp floor so both engines
+  * decide on identical numbers. The decimal power-sum headroom
+  * (38,8) bounds the corpus this row may run on to ~1e30 in Σx⁴ —
+  * at the 100 TB scale, center-and-scale x first (the standard JB
+  * preprocessing) or widen to the two-pass centered form.
   */
 object Composite45 {
-
-  private def dailyCounts(events: DataFrame): DataFrame =
-    events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-
-  // ---- evt_ljung_box ---------------------------------------------------
-  private val LbLags = 7
-
-  /** ρ_k from the six exact co-moment BIGINTs of lag k (shared
-    * formula text for both engines; reused by Composite53's
-    * win_acf_table). The products inside sqrt leave BIGINT range at
-    * full scale, so each factor casts to DOUBLE BEFORE the multiply
-    * (each is < 2^53, so the cast is exact). */
-  private[graft] def rhoF(k: Int): String =
-    s"""(CAST(n$k*sab$k - sa$k*sb$k AS DOUBLE)
-       | / nullif(sqrt(CAST(n$k*saa$k - sa$k*sa$k AS DOUBLE)
-       |   * CAST(n$k*sbb$k - sb$k*sb$k AS DOUBLE)), 0))""".stripMargin
-
-  private def qF: String =
-    s"""floor((CAST(nd AS DOUBLE)*(nd + 2)*(${(1 to LbLags)
-        .map(k => s"(${rhoF(k)}*${rhoF(k)})/(nd - $k)")
-        .mkString("\n + ")}))*1e6 + 0.5)/1e6""".stripMargin
-
-  /** One (event_type)-keyed hash aggregate of the exact BIGINT
-    * co-moments for lags 1..`lags` over the daily-count series —
-    * the input both `evt_ljung_box` and `win_acf_table`
-    * (Composite53) assemble their ρ_k from. */
-  private[graft] def lagMoments(events: DataFrame, lags: Int): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val lagged = dailyCounts(events)
-      .select(col("event_type") +: col("y") +:
-        (1 to lags).map(k => lag(col("y"), k).over(w).as(s"l$k")): _*)
-    val aggs = count(lit(1)).as("nd") +: (1 to lags).flatMap(k => Seq(
-      count(col(s"l$k")).as(s"n$k"),
-      sum(when(col(s"l$k").isNotNull, col("y"))).as(s"sa$k"),
-      sum(col(s"l$k")).as(s"sb$k"),
-      sum(when(col(s"l$k").isNotNull, col("y") * col("y"))).as(s"saa$k"),
-      sum(col(s"l$k") * col(s"l$k")).as(s"sbb$k"),
-      sum(col("y") * col(s"l$k")).as(s"sab$k")))
-    lagged.groupBy(col("event_type"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  private[graft] def ljungBoxOn(events: DataFrame): DataFrame = {
-    lagMoments(events, LbLags)
-      .selectExpr("event_type", "nd AS n_days",
-        s"floor((${rhoF(1)})*1e6 + 0.5)/1e6 AS rho1",
-        s"$qF AS lb_q7",
-        s"($qF > 14.067140) AS reject_whiteness_5pct")
-      .orderBy("event_type")
-  }
-
-  private def ljungBox(s: SparkSession, dir: String): DataFrame =
-    ljungBoxOn(loadEvents(s, dir))
-
-  private def ljungBoxOracle: String = {
-    val lagDefs = (1 to LbLags).map(k => s"lag(y, $k) OVER w AS l$k")
-      .mkString(",\n    ")
-    val aggDefs = (1 to LbLags).map(k =>
-      s"""CAST(count(l$k) AS BIGINT) AS n$k,
-         |    CAST(sum(CASE WHEN l$k IS NOT NULL THEN y END) AS BIGINT) AS sa$k,
-         |    CAST(sum(l$k) AS BIGINT) AS sb$k,
-         |    CAST(sum(CASE WHEN l$k IS NOT NULL THEN y*y END) AS BIGINT) AS saa$k,
-         |    CAST(sum(l$k*l$k) AS BIGINT) AS sbb$k,
-         |    CAST(sum(y*l$k) AS BIGINT) AS sab$k""".stripMargin)
-      .mkString(",\n    ")
-    s"""WITH daily AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |lagged AS (
-       |  SELECT event_type, y,
-       |    $lagDefs
-       |  FROM daily
-       |  WINDOW w AS (PARTITION BY event_type ORDER BY d)),
-       |g AS (
-       |  SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
-       |    $aggDefs
-       |  FROM lagged GROUP BY 1)
-       |SELECT event_type, nd AS n_days,
-       |  floor((${rhoF(1)})*1e6 + 0.5)/1e6 AS rho1,
-       |  $qF AS lb_q7,
-       |  ($qF > 14.067140) AS reject_whiteness_5pct
-       |FROM g ORDER BY event_type""".stripMargin
-  }
 
   // ---- agg_jarque_bera -------------------------------------------------
   // Exact decimal power sums of x = o_totalprice per priority
@@ -181,12 +80,10 @@ object Composite45 {
        |FROM g ORDER BY o_orderpriority""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_ljung_box" -> (ljungBox _),
     "agg_jarque_bera" -> (jarqueBera _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_ljung_box" -> ljungBoxOracle,
     "agg_jarque_bera" -> jarqueBeraOracle
   )
 }

@@ -6,17 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.62 (round-24 batch 4) — stationarity testing and
-  * breakout bands:
-  *
-  *  - [[kpssLevel]]: KPSS level-stationarity statistic (short-run
-  *    variance form, l = 0) per event type over daily counts. The
-  *    round's random-walk diagnostics triangulate: `evt_ljung_box`
-  *    asks "any autocorrelation?", `evt_variance_ratio` and
-  *    `evt_hurst_rs` ask "does variance/range scale like a walk?",
-  *    KPSS asks the inverse null — "is the LEVEL stationary?" (its
-  *    null is stationarity, so it catches drifting series the
-  *    others treat as the null).
+/** SURVEY.md §2.62 (round-24 batch 4) — breakout bands:
   *
   *  - [[donchianChannel]]: 20-day Donchian channel breakouts over
   *    the daily revenue candle — prior-20-day high/low (current day
@@ -26,96 +16,12 @@ import graft.util.Tables._
   *    channel-breakout primitive that needs no distributional
   *    assumption.
   *
-  * Scale shapes: KPSS is one cumulative window over the (type, day)
-  * COUNT aggregate feeding one hash aggregate; Donchian reuses the
-  * ATR candle (one date aggregate, global |days| window). Both end
-  * broadcast-sized.
+  * Scale shape: Donchian reuses the ATR candle (one date aggregate,
+  * global |days| window), broadcast-sized.
   *
-  * Determinism: KPSS partial sums stay integral by the Hurst
-  * scaling (n·S_t = n·cum_t − t·T), and both the SQUARING and the
-  * sum happen in exact decimal: each term is DECIMAL(19,0)² →
-  * DECIMAL(38,0) (a BIGINT ns·ns would wrap silently in Spark and
-  * raise in DuckDB once |ns| > ~3e9·√n), summed in DECIMAL(38,0)
-  * (Spark BIGINT sum would wrap; DuckDB's widens to HUGEINT), and
-  * the oracle routes the >2^53 sum through VARCHAR (§1.5 r7); one
-  * double assembly, verdict after the 6-dp floor. Donchian is
-  * exact-cents integers and string verdicts end to end.
+  * Determinism: exact-cents integers and string verdicts end to end.
   */
 object Composite46 {
-
-  private def dailyCounts(events: DataFrame): DataFrame =
-    events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-
-  // ---- evt_kpss_level --------------------------------------------------
-  // stat = Σ_t S_t² / (n²·σ̂²) with S_t the partial sums of
-  // deviations and σ̂² the population variance; both scale by n into
-  // integers: n·S_t = n·cum_t − t·T and n²·σ̂² = n·Σy² − T², so
-  // stat = Σ(n·S_t)² / (n²·(n·Σy² − T²)).
-  // nullif guards the constant-series degenerate (zero variance):
-  // NULL stat/verdict instead of engine-specific Inf handling.
-  private val kpssStatF =
-    """floor((ssq / (CAST(nd AS DOUBLE)*nd*nullif(CAST(nq AS DOUBLE),
-      | 0)))*1e6 + 0.5)/1e6""".stripMargin
-
-  private[graft] def kpssLevelOn(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val wcum = Window.partitionBy(col("event_type")).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wall = Window.partitionBy(col("event_type"))
-    dailyCounts(events)
-      .select(col("event_type"), col("y").cast("long").as("y"),
-        row_number().over(w).cast("long").as("t"))
-      .withColumn("cum", sum(col("y")).over(wcum))
-      .withColumn("tt", sum(col("y")).over(wall))
-      .withColumn("nd", count(lit(1)).over(wall))
-      .withColumn("ns", col("nd") * col("cum") - col("t") * col("tt"))
-      .groupBy(col("event_type"))
-      .agg(max(col("nd")).as("nd"),
-        sum(expr("CAST(ns AS DECIMAL(19,0)) * CAST(ns AS DECIMAL(19,0))"))
-          .cast("double").as("ssq"),
-        (max(col("nd")) * sum(col("y") * col("y")) -
-          max(col("tt")) * max(col("tt"))).as("nq"))
-      .selectExpr("event_type", "nd AS n_days",
-        s"$kpssStatF AS kpss_stat",
-        s"($kpssStatF > 0.463) AS reject_level_stationary_5pct")
-      .orderBy("event_type")
-  }
-
-  private def kpssLevel(s: SparkSession, dir: String): DataFrame =
-    kpssLevelOn(loadEvents(s, dir))
-
-  // private[graft]: Composite53's evt_adf_unit_root embeds this as a
-  // subquery to surface the KPSS verdict beside the ADF one.
-  private[graft] val kpssLevelOracle =
-    s"""WITH daily AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |ind AS (
-       |  SELECT event_type, y,
-       |    CAST(row_number() OVER w AS BIGINT) AS t,
-       |    CAST(sum(y) OVER (PARTITION BY event_type ORDER BY d
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum,
-       |    CAST(sum(y) OVER (PARTITION BY event_type) AS BIGINT) AS tt,
-       |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS nd
-       |  FROM daily
-       |  WINDOW w AS (PARTITION BY event_type ORDER BY d)),
-       |ns AS (
-       |  SELECT event_type, y, nd, tt, nd*cum - t*tt AS ns FROM ind),
-       |g AS (
-       |  SELECT event_type, CAST(max(nd) AS BIGINT) AS nd,
-       |    CAST(CAST(sum(CAST(ns AS DECIMAL(19,0))
-       |      * CAST(ns AS DECIMAL(19,0))) AS VARCHAR)
-       |      AS DOUBLE) AS ssq,
-       |    CAST(max(nd)*sum(y*y) - max(tt)*max(tt) AS BIGINT) AS nq
-       |  FROM ns GROUP BY 1)
-       |SELECT event_type, nd AS n_days,
-       |  $kpssStatF AS kpss_stat,
-       |  ($kpssStatF > 0.463) AS reject_level_stationary_5pct
-       |FROM g ORDER BY event_type""".stripMargin
 
   // ---- win_donchian_channel --------------------------------------------
   private[graft] def donchianChannelOn(orders: DataFrame): DataFrame = {
@@ -165,12 +71,10 @@ object Composite46 {
       |FROM w WHERE fn = 20 ORDER BY d""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_kpss_level" -> (kpssLevel _),
     "win_donchian_channel" -> (donchianChannel _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_kpss_level" -> kpssLevelOracle,
     "win_donchian_channel" -> donchianChannelOracle
   )
 }

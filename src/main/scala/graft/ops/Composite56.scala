@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.72 (round-25 batch 5) — ATR bands and cross-series
-  * correlation:
+/** SURVEY.md §2.72 (round-25 batch 5) — ATR bands:
   *
   *  - [[keltnerChannel]]: Keltner channel over the daily revenue
   *    candle — SMA(10) of the typical price (H+L+C)/3 banded at
@@ -19,25 +18,14 @@ import graft.util.Tables._
   *    both legs (not Wilder's EMA recursion — documented choice,
   *    mirrored in the oracle).
   *
-  *  - [[crossCorrelation]]: the lag −3..+3 cross-correlation
-  *    function between the click and purchase daily count series —
-  *    "does click volume LEAD purchases?" `win_acf_table` is one
-  *    series against itself; the CCF is the two-series version, the
-  *    lead-lag screen run before any cross-series regression
-  *    (`evt_granger`-style) is attempted.
-  *
-  * Scale shapes: both reduce to the (day)- or (type, day)-bounded
-  * COUNT/candle aggregate first — every window sorts |days|, never
-  * raw rows (the win_rsi horizon-bounded shape); the CCF ends in ONE
-  * 43-column hash aggregate + a 7-row stack.
+  * Scale shape: the (day)-bounded candle aggregate first — every
+  * window sorts |days|, never raw rows (the win_rsi horizon-bounded
+  * shape).
   *
   * Determinism: candles are exact cents; the Keltner midline compare
   * is EXACT INTEGER — close vs midline on the common denominator 3n
   * (cl·30 vs Σtp3 for n = 10), so the side flag never touches a
-  * double; band values assemble once with floor-6. CCF
-  * co-moments are exact BIGINT sums of daily counts (the Ljung-Box
-  * discipline) with every product cast to DOUBLE pre-multiply, ρ
-  * floor-6.
+  * double; band values assemble once with floor-6.
   */
 object Composite56 {
 
@@ -125,99 +113,11 @@ object Composite56 {
        |   ELSE 'at_mid' END AS midline_side
        |FROM w WHERE fn = $KcN ORDER BY d""".stripMargin
 
-  // ---- evt_cross_correlation ---------------------------------------------
-  private val CcfLags = 3
-  private val CcfX = "click"
-  private val CcfY = "purchase"
-
-  /** ρ at slot i (lag = i − CcfLags) from the six co-moments —
-    * the Composite45.rhoF cast-before-multiply discipline. */
-  private def ccfF(i: Int): String =
-    s"""(CAST(n$i*sab$i - sa$i*sb$i AS DOUBLE)
-       | / nullif(sqrt(CAST(n$i*saa$i - sa$i*sa$i AS DOUBLE)
-       |   * CAST(n$i*sbb$i - sb$i*sb$i AS DOUBLE)), 0))""".stripMargin
-
-  private[graft] def crossCorrOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .filter(col("event_type").isin(CcfX, CcfY))
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("d"))
-      .agg(sum(when(col("event_type") === CcfX, 1L).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === CcfY, 1L).otherwise(0L)).as("y"))
-    val w = Window.orderBy("d") // |days|-bounded
-    val shifted = daily.select(
-      col("d") +: col("x") +:
-        (0 to 2 * CcfLags).map { i =>
-          val l = i - CcfLags
-          val c = if (l < 0) lag(col("y"), -l).over(w)
-            else if (l > 0) lead(col("y"), l).over(w)
-            else col("y")
-          c.as(s"y$i")
-        }: _*)
-    val aggs = (0 to 2 * CcfLags).flatMap { i => Seq(
-      count(col(s"y$i")).as(s"n$i"),
-      sum(when(col(s"y$i").isNotNull, col("x"))).as(s"sa$i"),
-      sum(col(s"y$i")).as(s"sb$i"),
-      sum(when(col(s"y$i").isNotNull, col("x") * col("x"))).as(s"saa$i"),
-      sum(col(s"y$i") * col(s"y$i")).as(s"sbb$i"),
-      sum(col("x") * col(s"y$i")).as(s"sab$i")) }
-    val stackArgs = (0 to 2 * CcfLags).map(i =>
-      s"CAST(${i - CcfLags} AS BIGINT), n$i, " +
-        s"floor((${ccfF(i)})*1e6 + 0.5)/1e6").mkString(", ")
-    shifted.groupBy().agg(aggs.head, aggs.tail: _*)
-      .selectExpr(
-        s"stack(${2 * CcfLags + 1}, $stackArgs) AS (lag, n_pairs, ccf)")
-      .orderBy("lag")
-  }
-
-  private def crossCorrelation(s: SparkSession, dir: String): DataFrame =
-    crossCorrOn(loadEvents(s, dir))
-
-  private val crossCorrOracle = {
-    val shifts = (0 to 2 * CcfLags).map { i =>
-      val l = i - CcfLags
-      if (l < 0) s"lag(y, ${-l}) OVER w AS y$i"
-      else if (l > 0) s"lead(y, $l) OVER w AS y$i"
-      else s"y AS y$i"
-    }.mkString(",\n    ")
-    val moments = (0 to 2 * CcfLags).flatMap(i => Seq(
-      s"CAST(count(y$i) AS BIGINT) AS n$i",
-      s"CAST(sum(CASE WHEN y$i IS NOT NULL THEN x END) AS BIGINT) AS sa$i",
-      s"CAST(sum(y$i) AS BIGINT) AS sb$i",
-      s"CAST(sum(CASE WHEN y$i IS NOT NULL THEN x*x END) AS BIGINT) AS saa$i",
-      s"CAST(sum(y$i*y$i) AS BIGINT) AS sbb$i",
-      s"CAST(sum(x*y$i) AS BIGINT) AS sab$i")).mkString(",\n    ")
-    val branches = (0 to 2 * CcfLags).map(i =>
-      s"""SELECT CAST(${i - CcfLags} AS BIGINT) AS lag, n$i AS n_pairs,
-         |  floor((${ccfF(i)})*1e6 + 0.5)/1e6 AS ccf FROM g"""
-        .stripMargin).mkString("\nUNION ALL\n")
-    s"""WITH daily AS (
-       |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(sum(CASE WHEN event_type = '$CcfX' THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS x,
-       |    CAST(sum(CASE WHEN event_type = '$CcfY' THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS y
-       |  FROM events WHERE event_type IN ('$CcfX', '$CcfY')
-       |  GROUP BY 1),
-       |shifted AS (
-       |  SELECT d, x,
-       |    $shifts
-       |  FROM daily WINDOW w AS (ORDER BY d)),
-       |g AS (
-       |  SELECT
-       |    $moments
-       |  FROM shifted)
-       |$branches
-       |ORDER BY lag""".stripMargin
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_keltner_channel" -> (keltnerChannel _),
-    "evt_cross_correlation" -> (crossCorrelation _)
+    "win_keltner_channel" -> (keltnerChannel _)
   )
 
   val oracle: Map[String, String] = Map(
-    "win_keltner_channel" -> keltnerOracle,
-    "evt_cross_correlation" -> crossCorrOracle
+    "win_keltner_channel" -> keltnerOracle
   )
 }

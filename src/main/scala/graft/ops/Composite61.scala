@@ -1,22 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.77 (round-25 batch 10) — segmented trends and 2×2
-  * association:
-  *
-  *  - [[segmentedTrend]]: interrupted-time-series style segmented
-  *    regression per event type — fit OLS trends to the FIRST and
-  *    SECOND halves of the daily count series and surface the slope
-  *    change and the level jump at the cut. `evt_diff_in_diff`
-  *    needs a control group; the segmented fit is the
-  *    no-control-available causal screen ("did the trend break at
-  *    the midpoint?"), and `evt_changepoint` detects WHERE a break
-  *    is — this row quantifies WHAT changed across a fixed cut.
+/** SURVEY.md §2.77 (round-25 batch 10) — 2×2 association:
   *
   *  - [[oddsRatio]]: the 2×2 odds ratio between urgent priority and
   *    high-value orders (> $250k), with the Woolf log-interval 95%
@@ -24,119 +13,18 @@ import graft.util.Tables._
   *    the EFFECT measure a 2×2 analysis reports, with a CI instead
   *    of a p-verdict.
   *
-  * Scale shapes: the segmented fit is one (type, day) COUNT
-  * aggregate → a |days|-bounded index window → ONE conditional
-  * 11-moment hash aggregate per type (both segments in fixed
-  * columns); the odds ratio is ONE 4-cell conditional aggregate.
+  * Scale shape: ONE 4-cell conditional aggregate.
   *
-  * Determinism: day indices and counts are exact integers; Σt²,
-  * Σt·y accumulate in DECIMAL(38,0) (§1.5 r9 — t·y passes 2^63 at
-  * target scale) with oracle VARCHAR routing (§1.5 r7); slopes,
-  * intercepts, the jump, and the Woolf interval assemble once from
-  * shared formula text; cell counts a,b,c,d are exact BIGINTs and
-  * the a·d / b·c products widen to DECIMAL before multiplying;
-  * surfaced values floor-6, the CI verdict compares floored bounds.
+  * Determinism: cell counts a,b,c,d are exact BIGINTs and the
+  * a·d / b·c products widen to DECIMAL before multiplying; the Woolf
+  * interval assembles once from shared formula text; surfaced values
+  * floor-6, the CI verdict compares floored bounds.
   */
 object Composite61 {
 
-  // ---- evt_segmented_trend --------------------------------------------------
-  // Per segment i ∈ {1, 2}: slope, then intercept, then the fitted
-  // values at the first post-cut index x = t0 + 1.
-  private def stB(i: Int): String =
-    s"""((CAST(m$i AS DOUBLE)*sty$i - CAST(st$i AS DOUBLE)*sy$i)
-       | / nullif(CAST(m$i AS DOUBLE)*stt$i
-       |   - CAST(st$i AS DOUBLE)*st$i, 0))""".stripMargin
-  private val stStage1 = Seq(
-    s"${stB(1)} AS b1", s"${stB(2)} AS b2")
-  private val stStage2 = Seq(
-    "(sy1 - b1*st1) / nullif(CAST(m1 AS DOUBLE), 0) AS a1",
-    "(sy2 - b2*st2) / nullif(CAST(m2 AS DOUBLE), 0) AS a2")
-  private val stJump =
-    "((a2 + b2*(t0 + 1)) - (a1 + b1*(t0 + 1)))"
-
-  private[graft] def segmentedTrendOn(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val wall = Window.partitionBy(col("event_type"))
-    val daily = events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-      .select(col("event_type"), col("y"),
-        row_number().over(w).cast("long").as("t"))
-      .withColumn("nd", count(lit(1)).over(wall))
-      .withColumn("t0", expr("(nd + 1) div 2"))
-    def seg(i: Int, cond: String) = Seq(
-      sum(expr(s"CASE WHEN $cond THEN 1 ELSE 0 END")).as(s"m$i"),
-      sum(expr(s"CASE WHEN $cond THEN t ELSE 0 END")).as(s"st$i"),
-      sum(expr(s"CASE WHEN $cond THEN y ELSE 0 END")).as(s"sy$i"),
-      sum(expr(s"CASE WHEN $cond THEN CAST(t AS DECIMAL(19,0))" +
-        s" * CAST(t AS DECIMAL(19,0)) ELSE CAST(0 AS DECIMAL(38,0)) END"))
-        .cast("double").as(s"stt$i"),
-      sum(expr(s"CASE WHEN $cond THEN CAST(t AS DECIMAL(19,0))" +
-        s" * CAST(y AS DECIMAL(19,0)) ELSE CAST(0 AS DECIMAL(38,0)) END"))
-        .cast("double").as(s"sty$i"))
-    val aggs = max(col("t0")).as("t0") +:
-      (seg(1, "t <= t0") ++ seg(2, "t > t0"))
-    daily.groupBy(col("event_type"))
-      .agg(aggs.head, aggs.tail: _*)
-      .selectExpr(Seq("event_type", "t0", "m1", "m2", "st1", "st2",
-        "sy1", "sy2", "stt1", "stt2", "sty1", "sty2") ++ stStage1: _*)
-      .selectExpr("*" +: stStage2: _*)
-      .selectExpr("event_type",
-        "CAST(m1 + m2 AS BIGINT) AS n_days",
-        "t0 AS cut_index",
-        "floor(b1*1e6 + 0.5)/1e6 AS slope_pre",
-        "floor(b2*1e6 + 0.5)/1e6 AS slope_post",
-        "floor((b2 - b1)*1e6 + 0.5)/1e6 AS slope_change",
-        s"floor(($stJump)*1e6 + 0.5)/1e6 AS level_jump")
-      .orderBy("event_type")
-  }
-
-  private def segmentedTrend(s: SparkSession, dir: String): DataFrame =
-    segmentedTrendOn(loadEvents(s, dir))
-
-  private val segmentedTrendOracle = {
-    def segSql(i: Int, cond: String) = Seq(
-      s"CAST(sum(CASE WHEN $cond THEN 1 ELSE 0 END) AS BIGINT) AS m$i",
-      s"CAST(sum(CASE WHEN $cond THEN t ELSE 0 END) AS BIGINT) AS st$i",
-      s"CAST(sum(CASE WHEN $cond THEN y ELSE 0 END) AS BIGINT) AS sy$i",
-      s"""CAST(CAST(sum(CASE WHEN $cond THEN CAST(t AS DECIMAL(19,0))
-         |  * CAST(t AS DECIMAL(19,0)) ELSE CAST(0 AS DECIMAL(38,0)) END)
-         |  AS VARCHAR) AS DOUBLE) AS stt$i""".stripMargin,
-      s"""CAST(CAST(sum(CASE WHEN $cond THEN CAST(t AS DECIMAL(19,0))
-         |  * CAST(y AS DECIMAL(19,0)) ELSE CAST(0 AS DECIMAL(38,0)) END)
-         |  AS VARCHAR) AS DOUBLE) AS sty$i""".stripMargin)
-    val aggDefs = (Seq("CAST(max(t0) AS BIGINT) AS t0") ++
-      segSql(1, "t <= t0") ++ segSql(2, "t > t0")).mkString(",\n    ")
-    s"""WITH daily AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |idx AS (
-       |  SELECT event_type, y,
-       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
-       |      AS BIGINT) AS t,
-       |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS nd
-       |  FROM daily),
-       |cut AS (SELECT *, (nd + 1) // 2 AS t0 FROM idx),
-       |g AS (
-       |  SELECT event_type,
-       |    $aggDefs
-       |  FROM cut GROUP BY 1),
-       |s1 AS (SELECT *, ${stStage1.mkString(", ")} FROM g),
-       |s2 AS (SELECT *, ${stStage2.mkString(", ")} FROM s1)
-       |SELECT event_type,
-       |  CAST(m1 + m2 AS BIGINT) AS n_days,
-       |  t0 AS cut_index,
-       |  floor(b1*1e6 + 0.5)/1e6 AS slope_pre,
-       |  floor(b2*1e6 + 0.5)/1e6 AS slope_post,
-       |  floor((b2 - b1)*1e6 + 0.5)/1e6 AS slope_change,
-       |  floor(($stJump)*1e6 + 0.5)/1e6 AS level_jump
-       |FROM s2 ORDER BY event_type""".stripMargin
-  }
-
   // ---- agg_odds_ratio ---------------------------------------------------------
   // $250k — near the grand median. Shared with agg_mantel_haenszel
-  // (Composite71): the stratified MH row pools the SAME 2×2 so crude
+  // (Composite72): the stratified MH row pools the SAME 2×2 so crude
   // vs adjusted is a like-for-like confounding read.
   private[graft] val OrThresholdCents = 25000000L
 
@@ -201,12 +89,10 @@ object Composite61 {
        |FROM g""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_segmented_trend" -> (segmentedTrend _),
     "agg_odds_ratio" -> (oddsRatio _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_segmented_trend" -> segmentedTrendOracle,
     "agg_odds_ratio" -> oddsRatioOracle
   )
 }

@@ -1,13 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.82 (round-26 batch 4) — k-treatment paired binary
-  * outcomes and the cycle-hunting periodogram:
+  * outcomes:
   *
   *  - [[cochranQ]]: Cochran's Q on the paired binary "year spend >
   *    $300k" flag across 1995/1996/1997 — the k-treatment
@@ -17,30 +16,13 @@ import graft.util.Tables._
   *    Q = k(k−1)·Σ(C_j − T/k)² / (k·T − ΣR_i²) against χ²₂ 5% =
   *    5.991465.
   *
-  *  - [[periodogram]]: the discrete-Fourier power table at candidate
-  *    periods 2..10 rows over each type's daily count series —
-  *    `evt_seasonal_strength` SCORES one assumed period (weekday
-  *    η²), `evt_seasonality` heat-maps hour×weekday; this row HUNTS
-  *    the period: P(p) = (Σ dev_t·cos(2πt/p))² + (Σ dev_t·sin)²
-  *    with dev the exactly-scaled deviation nd·y_t − T (integer
-  *    mean-removal — no double subtraction before the transform).
-  *    Row-index phase (not calendar), mirrored in the oracle.
-  *
-  * Scale shapes: Cochran's Q is one (customer, year) spend aggregate
-  * → a 7-conditional-column per-customer pivot (complete blocks
-  * filtered by exact presence counts) → ONE global 6-moment
-  * aggregate; the periodogram is one (type, day) COUNT aggregate
-  * crossed with the 9-row period list (|types|·|days|·9, never raw
-  * events) into one hash aggregate.
+  * Scale shape: one (customer, year) spend aggregate → a
+  * 7-conditional-column per-customer pivot (complete blocks filtered
+  * by exact presence counts) → ONE global 6-moment aggregate.
   *
   * Determinism: every Cochran input is an exact BIGINT (flags,
   * row/column sums, ΣR² — R ≤ 3 so the square stays tiny); Q
-  * assembles once from shared text. Periodogram phase angles are
-  * 2π·(t mod p)/p over EXACT integer (t mod p, p) — at most p
-  * distinct cos/sin arguments per period, each built from the same
-  * expression text, so the only cross-engine drift is the ~1-ulp
-  * libm cos/sin difference, ~1e-10 absolute in the scaled power —
-  * far inside the 6-dp floor (the geometric-mean libm precedent).
+  * assembles once from shared text.
   */
 object Composite66 {
 
@@ -119,69 +101,11 @@ object Composite66 {
        |SELECT ${cqFinal.mkString(",\n  ")}
        |FROM g""".stripMargin
 
-  // ---- evt_periodogram ----------------------------------------------------
-  private val PgLo = 2L
-  private val PgHi = 10L
-
-  private def pgTerm(fn: String): String =
-    s"sum(CAST(nd*y - t AS DOUBLE) * $fn(2*pi()*CAST(tt % p AS DOUBLE)/p))"
-  private val pgFinal: Seq[String] = Seq(
-    "event_type", "p AS period", "nd AS n_days",
-    "floor(((sc*sc + ss*ss) / (CAST(nd AS DOUBLE)*nd*nd))*1e6 + 0.5)/1e6" +
-      " AS power_scaled")
-
-  private[graft] def periodogramOn(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val wall = Window.partitionBy(col("event_type"))
-    val idx = events.select(col("event_type"), to_date(col("ts")).as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
-      .select(col("event_type"), col("y"),
-        row_number().over(w).cast("long").as("tt"),
-        count(lit(1)).over(wall).as("nd"),
-        sum(col("y")).over(wall).as("t"))
-    idx.withColumn("p", explode(expr(s"sequence(CAST($PgLo AS BIGINT), " +
-        s"CAST($PgHi AS BIGINT))")))
-      .groupBy(col("event_type"), col("p"))
-      .agg(max(col("nd")).as("nd"),
-        expr(pgTerm("cos")).as("sc"),
-        expr(pgTerm("sin")).as("ss"))
-      .selectExpr(pgFinal: _*)
-      .orderBy("event_type", "period")
-  }
-
-  private def periodogram(s: SparkSession, dir: String): DataFrame =
-    periodogramOn(loadEvents(s, dir))
-
-  private val periodogramOracle =
-    s"""WITH daily AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |idx AS (
-       |  SELECT event_type, y,
-       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
-       |      AS BIGINT) AS tt,
-       |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS nd,
-       |    CAST(sum(y) OVER (PARTITION BY event_type) AS BIGINT) AS t
-       |  FROM daily),
-       |pp AS (SELECT unnest(generate_series(CAST($PgLo AS BIGINT),
-       |  CAST($PgHi AS BIGINT))) AS p),
-       |g AS (
-       |  SELECT event_type, p, max(nd) AS nd,
-       |    ${pgTerm("cos")} AS sc,
-       |    ${pgTerm("sin")} AS ss
-       |  FROM idx CROSS JOIN pp GROUP BY 1, 2)
-       |SELECT ${pgFinal.mkString(",\n  ")}
-       |FROM g ORDER BY event_type, period""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_cochran_q" -> (cochranQ _),
-    "evt_periodogram" -> (periodogram _)
+    "agg_cochran_q" -> (cochranQ _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_cochran_q" -> cochranQOracle,
-    "evt_periodogram" -> periodogramOracle
+    "agg_cochran_q" -> cochranQOracle
   )
 }

@@ -54,11 +54,8 @@ object Composite67 {
   private val HlY = "purchase"
 
   private[graft] def hodgesLehmannOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"), to_date(col("ts")).as("d"))
-      .filter(col("event_type").isin(HlX, HlY))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("y"))
+    val daily = timeseries.Series.daily(
+      events.filter(col("event_type").isin(HlX, HlY)))
     def grid(t: String) = daily.filter(col("event_type") === t)
       .groupBy(col("y").as("v")).agg(count(lit(1)).as("c"))
     val vx = grid(HlX).localCheckpoint() // feeds the cross AND its n_x count

@@ -17,10 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of a fresh build must be cell-identical — every current builder
   * is exact-integer or fixed-rounding by construction).
   *
-  * The build runs under the memo lock: concurrent first callers
-  * (test suites share one JVM) block rather than racing two writes
-  * to one path. Keys canonicalize the corpus dir, so sf0.01 Verify
-  * and sf0.1 Bench never share a table.
+  * The first caller of a key publishes a future and runs the build
+  * with no lock held; concurrent callers of the same key (test suites
+  * share one JVM) wait on that future rather than racing two writes to
+  * one path, and see the build's own exception if it fails. Keys
+  * canonicalize the corpus dir, so sf0.01 Verify and sf0.1 Bench never
+  * share a table.
   */
 object DiskMemo {
 
@@ -47,7 +49,8 @@ object DiskMemo {
     * Bench uses this to time a TRUE materialized-view build as its
     * own entry (VERDICT r16 item 2) instead of letting the one-time
     * build hide inside an untimed warm pass. */
-  private[graft] def reset(): Unit = memo.clear()
+  private[graft] def reset(): Unit =
+    memo.keySet.toArray(Array.empty[String]).foreach(forget)
 
   /** Forget ONE memoized table (by tag, any corpus dir) so the next
     * caller rebuilds it. Bench's per-memo timed rows use this instead
@@ -55,7 +58,20 @@ object DiskMemo {
     * memo's timed rebuild with every OTHER table's rebuild too, so
     * each row would measure the union instead of its own build. */
   private[graft] def reset(tag: String): Unit =
-    memo.keySet.removeIf(_.endsWith("#" + tag))
+    memo.keySet.toArray(Array.empty[String])
+      .filter(_.endsWith("#" + tag)).foreach(forget)
+
+  /** Drop one key, first waiting out its in-flight build (whatever
+    * its outcome): removing the key mid-build would let the next
+    * caller start a second overwrite-mode write to the same path
+    * while the first is still writing. */
+  private def forget(key: String): Unit = {
+    val fut = memo.get(key)
+    if (fut != null) {
+      try fut.join() catch { case _: Throwable => }
+      memo.remove(key, fut)
+    }
+  }
 
   def table(s: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
@@ -79,6 +95,12 @@ object DiskMemo {
       }
       fresh
     }
-    s.read.parquet(fut.join())
+    // A waiter rethrows the build's own exception, the same one its
+    // builder saw, not join()'s CompletionException wrapper.
+    val path =
+      try fut.join()
+      catch { case e: java.util.concurrent.CompletionException
+        if e.getCause != null => throw e.getCause }
+    s.read.parquet(path)
   }
 }

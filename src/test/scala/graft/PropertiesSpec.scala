@@ -361,7 +361,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite43.holtBacktestOn(ev)
+      val got = graft.ops.timeseries.Forecast.holtBacktestOn(ev)
         .as[(String, Long, Double, Double, Double)].collect().toSeq
       got == expected
     }
@@ -392,7 +392,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite44.hurstRsOn(ev)
+      val got = graft.ops.timeseries.Stationarity.hurstRsOn(ev)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3),
           if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toSeq
@@ -430,7 +430,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite45.ljungBoxOn(ev)
+      val got = graft.ops.timeseries.Correlation.ljungBoxOn(ev)
         .collect().map(r => (r.getString(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)),
           if (r.isNullAt(3)) None else Some(r.getDouble(3)),
@@ -455,7 +455,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite46.kpssLevelOn(ev)
+      val got = graft.ops.timeseries.Stationarity.kpssLevelOn(ev)
         .collect().map(r => (r.getString(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)),
           if (r.isNullAt(3)) None else Some(r.getBoolean(3)))).head
@@ -582,7 +582,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val r = graft.ops.Composite61.segmentedTrendOn(ev).collect().head
+      val r = graft.ops.timeseries.Stationarity.segmentedTrendOn(ev).collect().head
       def od(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
       val got = (r.getString(0), r.getLong(1), r.getLong(2),
         od(3), od(4), od(5), od(6))
@@ -701,7 +701,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         val ds = java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString
         Seq.fill(x)(("click", ds)) ++ Seq.fill(y)(("purchase", ds))
       }.toDF("event_type", "ts")
-      val got = graft.ops.Composite59.grangerOn(ev).collect().toSeq
+      val got = graft.ops.timeseries.Correlation.grangerOn(ev).collect().toSeq
         .map(r => (r.getString(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)),
           if (r.isNullAt(3)) None else Some(r.getBoolean(3))))
@@ -765,7 +765,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite59.pacfOn(ev).collect().toSeq
+      val got = graft.ops.timeseries.Correlation.pacfOn(ev).collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           if (r.isNullAt(3)) None else Some(r.getDouble(3))))
       got == expected
@@ -973,7 +973,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         val ds = java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString
         Seq.fill(x)(("click", ds)) ++ Seq.fill(y)(("purchase", ds))
       }.toDF("event_type", "ts")
-      val got = graft.ops.Composite56.crossCorrOn(ev).collect().toSeq
+      val got = graft.ops.timeseries.Correlation.crossCorrOn(ev).collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2))))
       got == expected
@@ -1127,7 +1127,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val r = graft.ops.Composite53.adfOn(ev).collect().head
+      val r = graft.ops.timeseries.Stationarity.adfOn(ev).collect().head
       val got = (r.getString(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
         if (r.isNullAt(3)) None else Some(r.getBoolean(3)))
@@ -1159,7 +1159,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite53.acfTableOn(ev).collect().toSeq
+      val got = graft.ops.timeseries.Correlation.acfTableOn(ev).collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           if (r.isNullAt(3)) None else Some(r.getDouble(3))))
       got == expected
@@ -1343,7 +1343,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (cnt, dd) =>
         Seq.fill(cnt.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(dd).toString)) }.toDF("event_type", "ts")
-      val r = graft.ops.Composite64.chowOn(ev).collect().head
+      val r = graft.ops.timeseries.Stationarity.chowOn(ev).collect().head
       val got = (r.getString(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         if (r.isNullAt(4)) None else Some(r.getBoolean(4)))
@@ -1380,7 +1380,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (cnt, dd) =>
         Seq.fill(cnt.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(dd).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite64.holtWintersOn(ev)
+      val got = graft.ops.timeseries.Forecast.holtWintersOn(ev)
         .as[(String, Long, Double, Double, Double)].collect().toSeq
       got == expected
     }
@@ -1452,7 +1452,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val ev = y.zipWithIndex.flatMap { case (c, d) =>
         Seq.fill(c.toInt)(("T", java.time.LocalDate.of(2024, 1, 1)
           .plusDays(d).toString)) }.toDF("event_type", "ts")
-      val got = graft.ops.Composite66.periodogramOn(ev)
+      val got = graft.ops.timeseries.Patterns.periodogramOn(ev)
         .as[(String, Long, Long, Double)].collect().toSeq
       got.size == 9 && got.forall { case (_, p, n, pw) =>
         n == nd && math.abs(pw - floor6(power(p))) <= 1.000001e-6 }
@@ -1758,7 +1758,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val expDec = pairs.map(_._2).max
       val nAi = pairs.count(p => p._1.toDouble / nd > bar).toLong
       val nAd = pairs.count(p => p._2.toDouble / nd > bar).toLong
-      val r = graft.ops.Composite71.pageHinkleyOn(countsToEvents(cs))
+      val r = graft.ops.timeseries.Control.pageHinkleyOn(countsToEvents(cs))
         .collect().head
       (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getLong(5), r.getLong(6)) ==
@@ -1781,7 +1781,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val see = e.map(x => x * x).sum
       val sdd = e.sliding(2).collect { case List(a, b) =>
         (b - a) * (b - a) }.sum
-      val r = graft.ops.Composite71.durbinWatsonOn(countsToEvents(cs))
+      val r = graft.ops.timeseries.Correlation.durbinWatsonOn(countsToEvents(cs))
         .collect().head
       val slopeOk = r.getDouble(2) == floor6(denb.toDouble / den)
       if (see == 0) slopeOk && r.isNullAt(3)
@@ -1808,7 +1808,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         (0 to 16).map(j => cs(t - j).toLong * (1L << (16 - j))).sum }
       val above = zs.count(z => z.toDouble / 131071 > ucl).toLong
       val below = zs.count(z => z.toDouble / 131071 < lcl).toLong
-      val r = graft.ops.Composite70.ewmaChartOn(countsToEvents(cs))
+      val r = graft.ops.timeseries.Control.ewmaChartOn(countsToEvents(cs))
         .collect().head
       (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5), r.getLong(6), r.getLong(7)) ==
@@ -1850,7 +1850,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           floor6(100.0 * (13 - hi) / 13), floor6(100.0 * (13 - lo) / 13),
           floor6(100.0 * (lo - hi) / 13))
       }
-      val got = graft.ops.Composite74.aroonOn(countsToEvents(cs))
+      val got = graft.ops.timeseries.Patterns.aroonOn(countsToEvents(cs))
         .collect().map(r => (r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5), r.getDouble(6), r.getDouble(7))).toSeq
       got == expect
@@ -2167,7 +2167,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         if (s > 0) (s.toDouble - 1.0) / math.sqrt(varS)
         else if (s < 0) (s.toDouble + 1.0) / math.sqrt(varS)
         else 0.0
-      val got = graft.ops.Composite79.seasonalMannKendallOn(events).collect()
+      val got = graft.ops.timeseries.Stationarity.seasonalMannKendallOn(events).collect()
       if (nDays < 10) got.isEmpty
       else {
         val r = got.head

@@ -93,7 +93,7 @@ class Round30Spec extends AnyFunSuite {
         (1 to 3).map(i => ("B", f"2024-01-$i%02d 00:00:00"))
     val events = rows.toDF("event_type", "s")
       .select(col("event_type"), to_timestamp(col("s")).as("ts"))
-    val got = graft.ops.Composite33.ewmaBacktestOn(events)
+    val got = graft.ops.timeseries.Forecast.ewmaBacktestOn(events)
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     assert(got == Seq(("A", 1L, 1.0, 1.0, 1.0)))
   }
@@ -110,7 +110,7 @@ class Round30Spec extends AnyFunSuite {
           ("A", "2024-01-16 02:00:00"), ("A", "2024-01-17 00:00:00"))
     val events = rows.toDF("event_type", "s")
       .select(col("event_type"), to_timestamp(col("s")).as("ts"))
-    val got = graft.ops.Composite33.ewmaBacktestOn(events)
+    val got = graft.ops.timeseries.Forecast.ewmaBacktestOn(events)
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     val expectedErr = math.floor((65536.0 / 65535.0) * 1e6 + 0.5) / 1e6
     assert(got == Seq(("A", 1L, expectedErr, -expectedErr, 2.0)))

@@ -28,7 +28,7 @@ class Round31Spec extends AnyFunSuite {
       ("B", "2024-01-01"), ("B", "2024-01-01"), ("B", "2024-01-02"))
     val events = rows.toDF("event_type", "s")
       .select(col("event_type"), to_timestamp(col("s")).as("ts"))
-    val got = graft.ops.Composite34.cusumDriftOn(events)
+    val got = graft.ops.timeseries.Control.cusumDriftOn(events)
       .as[(String, Long, Long, Long, java.sql.Date, Long)].collect().toSeq
     assert(got == Seq(
       ("A", 2L, 4L, 2L, java.sql.Date.valueOf("2024-01-04"), 0L),

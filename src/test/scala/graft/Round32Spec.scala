@@ -64,7 +64,7 @@ class Round32Spec extends AnyFunSuite {
         (1 to 3).map(_ => ("B", "2024-01-03"))
     val events = rows.toDF("event_type", "s")
       .select(col("event_type"), to_timestamp(col("s")).as("ts"))
-    val got = graft.ops.Composite35.anomalyMadOn(events)
+    val got = graft.ops.timeseries.Control.anomalyMadOn(events)
       .as[(String, Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(("A", 7L, 5L, 0L, 1L), ("B", 3L, 2L, 1L, 0L)))
   }

@@ -48,7 +48,7 @@ class Round36Spec extends AnyFunSuite {
         Seq.fill(5)(("B", "2024-01-01")) ++ Seq.fill(5)(("B", "2024-01-02")) ++
         Seq.fill(3)(("C", "2024-01-01")) ++ Seq.fill(1)(("C", "2024-01-08")) ++
         Seq.fill(2)(("C", "2024-01-02"))
-    val got = graft.ops.Composite39
+    val got = graft.ops.timeseries.Patterns
       .seasonalStrengthOn(rows.toDF("event_type", "ts"))
       .as[(String, Long, Long, Option[Double])].collect().toSeq
     assert(got == Seq(

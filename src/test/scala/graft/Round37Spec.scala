@@ -26,7 +26,7 @@ class Round37Spec extends AnyFunSuite {
       (1 to 8).map(d => ("A", d, d)) ++
         Seq(("B", 1, 1), ("B", 2, 3), ("B", 3, 1), ("B", 4, 3),
           ("B", 5, 1), ("B", 6, 3)))
-    val got = graft.ops.Composite40.varianceRatioOn(ev)
+    val got = graft.ops.timeseries.Stationarity.varianceRatioOn(ev)
       .as[(String, Long, Double, Double, Option[Double])].collect().toSeq
     assert(got == Seq(
       ("A", 8L, 0.0, 0.0, None),
@@ -41,7 +41,7 @@ class Round37Spec extends AnyFunSuite {
     // z = 0 exactly.
     val ev = eventsFor(Seq(("A", 1, 1), ("A", 2, 3), ("A", 3, 2),
       ("A", 4, 4), ("A", 5, 4)))
-    val got = graft.ops.Composite40.turningPointsOn(ev)
+    val got = graft.ops.timeseries.Patterns.turningPointsOn(ev)
       .as[(String, Long, Long, Double, Double)].collect().toSeq
     assert(got == Seq(("A", 5L, 2L, 2.0, 0.0)))
   }

@@ -22,7 +22,7 @@ class Round39Spec extends AnyFunSuite {
     // 3-4 (2 days) and 7-9 (3 days). B has one day: no steps at all.
     val ev = eventsFor(Seq(1, 2, 5, 6, 10).map(d => ("A", d, 1)) ++
       Seq(("B", 4, 2)))
-    val got = graft.ops.Composite42.calendarGapsOn(ev)
+    val got = graft.ops.timeseries.Patterns.calendarGapsOn(ev)
       .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(("A", 10L, 5L, 5L, 2L, 3L), ("B", 1L, 1L, 0L, 0L, 0L)))
   }
@@ -37,7 +37,7 @@ class Round39Spec extends AnyFunSuite {
     val ev = eventsFor(Seq(("A", 1, 5), ("A", 2, 6), ("A", 3, 5),
       ("A", 4, 6), ("A", 5, 1), ("A", 6, 1),
       ("B", 1, 1), ("B", 2, 2), ("B", 3, 3)))
-    val got = graft.ops.Composite42.runsTestOn(ev)
+    val got = graft.ops.timeseries.Patterns.runsTestOn(ev)
       .as[(String, Long, Long, Long, Long, Long, Option[Double])]
       .collect().toSeq
     assert(got == Seq(

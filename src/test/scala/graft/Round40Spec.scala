@@ -43,7 +43,7 @@ class Round40Spec extends AnyFunSuite {
     // 20 constant days: S1 = S2 = y, forecast = 3y - 2y = y, so all
     // residuals are zero; scored rows = days 16..20 -> 5 forecasts.
     val ev = eventsFor((1 to 20).map(d => ("A", d, 3)))
-    val got = graft.ops.Composite43.holtBacktestOn(ev)
+    val got = graft.ops.timeseries.Forecast.holtBacktestOn(ev)
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     assert(got == Seq(("A", 5L, 0.0, 0.0, 0.0)))
   }
@@ -54,14 +54,14 @@ class Round40Spec extends AnyFunSuite {
     // per step (b = 1 here) — an order of magnitude under the naive
     // forecaster's b, which is the operator's reason to exist.
     val ev = eventsFor((1 to 25).map(d => ("A", d, d)))
-    val got = graft.ops.Composite43.holtBacktestOn(ev)
+    val got = graft.ops.timeseries.Forecast.holtBacktestOn(ev)
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     assert(got == Seq(("A", 10L, 0.031373, 0.031373, 1.0)))
   }
 
   test("holtBacktestOn: fewer than 16 days scores nothing") {
     val ev = eventsFor((1 to 15).map(d => ("A", d, d)))
-    assert(graft.ops.Composite43.holtBacktestOn(ev).count() == 0L)
+    assert(graft.ops.timeseries.Forecast.holtBacktestOn(ev).count() == 0L)
   }
 
   // ---- dq_schema_drift --------------------------------------------------

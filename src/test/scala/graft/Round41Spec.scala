@@ -66,7 +66,7 @@ class Round41Spec extends AnyFunSuite {
     // R/S = 4/√16 = 1. B: constant 5 -> q = 0 -> scored 0, NULL rs.
     val ev = eventsFor((1 to 8).map(d => ("A", d, if (d % 2 == 1) 1 else 2)) ++
       (1 to 8).map(d => ("B", d, 5)))
-    val got = graft.ops.Composite44.hurstRsOn(ev)
+    val got = graft.ops.timeseries.Stationarity.hurstRsOn(ev)
       .as[(String, Long, Long, Long, Option[Double])].collect().toSeq
     assert(got == Seq(
       ("A", 8L, 1L, 1L, Some(1.0)),

@@ -22,7 +22,7 @@ class Round43Spec extends AnyFunSuite {
     // stat = 18/(9·6) = 1/3. B constant -> zero variance -> NULL.
     val ev = eventsFor(Seq(("A", 1, 1), ("A", 2, 2), ("A", 3, 3),
       ("B", 1, 5), ("B", 2, 5), ("B", 3, 5)))
-    val got = graft.ops.Composite46.kpssLevelOn(ev)
+    val got = graft.ops.timeseries.Stationarity.kpssLevelOn(ev)
       .collect().map(r => (r.getString(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
         if (r.isNullAt(3)) None else Some(r.getBoolean(3)))).toSeq

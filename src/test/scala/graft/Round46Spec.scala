@@ -79,7 +79,7 @@ class Round46Spec extends AnyFunSuite {
       Seq.fill(y)((t, java.time.LocalDate.of(2024, 1, 1)
         .plusDays(day - 1).toString))
     }.toDF("event_type", "ts")
-    val got = graft.ops.Composite50.shewhartOn(ev)
+    val got = graft.ops.timeseries.Control.shewhartOn(ev)
       .as[(String, Long, Double, Double, Double, Double, Long, Long)]
       .collect().toSeq
     assert(got == Seq(

@@ -71,7 +71,7 @@ class Round48Spec extends AnyFunSuite {
     val ev = ys.zipWithIndex.flatMap { case (c, d) =>
       Seq.fill(c)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString)) }.toDF("event_type", "ts")
-    val r = graft.ops.Composite64.chowOn(ev).collect().head
+    val r = graft.ops.timeseries.Stationarity.chowOn(ev).collect().head
     assert(r.getString(0) == "T" && r.getLong(1) == 6L && r.getLong(2) == 3L)
     assert(r.isNullAt(3) && r.isNullAt(4))
   }
@@ -84,14 +84,14 @@ class Round48Spec extends AnyFunSuite {
     val ev1 = broken.zipWithIndex.flatMap { case (c, d) =>
       Seq.fill(c)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString)) }.toDF("event_type", "ts")
-    val r1 = graft.ops.Composite64.chowOn(ev1).collect().head
+    val r1 = graft.ops.timeseries.Stationarity.chowOn(ev1).collect().head
     assert(!r1.isNullAt(3) && r1.getDouble(3) > 2.995732 && r1.getBoolean(4))
     // The same wiggles on ONE flat level: split buys ~nothing.
     val stable = Seq(2, 2, 3, 2, 2, 2, 2, 2, 2, 3, 2, 2, 2, 2)
     val ev2 = stable.zipWithIndex.flatMap { case (c, d) =>
       Seq.fill(c)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString)) }.toDF("event_type", "ts")
-    val r2 = graft.ops.Composite64.chowOn(ev2).collect().head
+    val r2 = graft.ops.timeseries.Stationarity.chowOn(ev2).collect().head
     assert(!r2.isNullAt(3) && !r2.getBoolean(4),
       s"stable series rejected: f=${r2.getDouble(3)}")
   }
@@ -105,7 +105,7 @@ class Round48Spec extends AnyFunSuite {
     val ev = (0 until 30).flatMap(d =>
       Seq.fill(4)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString))).toDF("event_type", "ts")
-    val got = graft.ops.Composite64.holtWintersOn(ev)
+    val got = graft.ops.timeseries.Forecast.holtWintersOn(ev)
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     assert(got == Seq(("T", 10L, 0.0, 0.0, 0.0)))
   }
@@ -122,7 +122,7 @@ class Round48Spec extends AnyFunSuite {
     val ev = ys.zipWithIndex.flatMap { case (c, d) =>
       Seq.fill(c)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString)) }.toDF("event_type", "ts")
-    val got = graft.ops.Composite64.holtWintersOn(ev)
+    val got = graft.ops.timeseries.Forecast.holtWintersOn(ev)
       .as[(String, Long, Double, Double, Double)].collect().head
     assert(got._1 == "T" && got._2 == 15L)
     assert(got._5 == 0.0, s"seasonal naive not perfect: $got")

@@ -53,7 +53,7 @@ class Round49Spec extends AnyFunSuite {
     val ev = (0 until 20).flatMap(d =>
       Seq.fill(3)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString))).toDF("event_type", "ts")
-    val got = graft.ops.Composite66.periodogramOn(ev)
+    val got = graft.ops.timeseries.Patterns.periodogramOn(ev)
       .as[(String, Long, Long, Double)].collect().toSeq
     assert(got.size == 9 && got.forall(_._4 == 0.0), got.toString)
   }
@@ -63,7 +63,7 @@ class Round49Spec extends AnyFunSuite {
     val ev = ys.zipWithIndex.flatMap { case (c, d) =>
       Seq.fill(c)(("T", java.time.LocalDate.of(2024, 1, 1)
         .plusDays(d).toString)) }.toDF("event_type", "ts")
-    val got = graft.ops.Composite66.periodogramOn(ev)
+    val got = graft.ops.timeseries.Patterns.periodogramOn(ev)
       .as[(String, Long, Long, Double)].collect()
       .map(r => r._2 -> r._4).toMap
     assert(got(2L) > 10 * got.filterKeys(_ != 2L).values.max,

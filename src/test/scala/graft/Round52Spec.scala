@@ -86,7 +86,7 @@ class Round52Spec extends AnyFunSuite {
     // constant is exactly 7 (131071·7 / 131071 — integer numerator),
     // and equality is not a violation on either side. Days 1-16 have
     // no saturated window -> 4 scored days.
-    val got = graft.ops.Composite70.ewmaChartOn(plantDaily(Seq.fill(20)(7)))
+    val got = graft.ops.timeseries.Control.ewmaChartOn(plantDaily(Seq.fill(20)(7)))
       .as[(String, Long, Double, Double, Double, Double, Long, Long)]
       .collect().toSeq
     assert(got == Seq(("A", 4L, 7.0, 0.0, 7.0, 7.0, 0L, 0L)))
@@ -97,7 +97,7 @@ class Round52Spec extends AnyFunSuite {
     // limits 16 ± sqrt(3)·σ̂ = [12.767356, 19.232644]. Scored days:
     // day 17 (EWMA exactly 10 — below LCL), days 18-20 (EWMA ≈ 30/
     // 40/45 — above UCL).
-    val got = graft.ops.Composite70
+    val got = graft.ops.timeseries.Control
       .ewmaChartOn(plantDaily(Seq.fill(17)(10) ++ Seq.fill(3)(50)))
       .as[(String, Long, Double, Double, Double, Double, Long, Long)]
       .collect().toSeq

@@ -20,7 +20,7 @@ class Round53Spec extends AnyFunSuite {
   test("pageHinkleyOn: a constant series carries zero statistics and zero alarms") {
     // M_t = nd·cum − t·sy is identically 0 for a constant; MR̄ = 0 so
     // the alarm bar is 0 and 0 > 0 never fires.
-    val got = graft.ops.Composite71.pageHinkleyOn(plantDaily(Seq.fill(12)(9)))
+    val got = graft.ops.timeseries.Control.pageHinkleyOn(plantDaily(Seq.fill(12)(9)))
       .as[(String, Long, Double, Double, Double, Long, Long)]
       .collect().toSeq
     assert(got == Seq(("A", 12L, 0.0, 0.0, 0.0, 0L, 0L)))
@@ -32,7 +32,7 @@ class Round53Spec extends AnyFunSuite {
     // (alarming on 19 days — every M_t < −56) and ph_inc recovers
     // the same 100 over days 11-20 (10 alarm days). One 20-jump MR
     // ⇒ bar = 2.66·20/19 = 2.8.
-    val got = graft.ops.Composite71
+    val got = graft.ops.timeseries.Control
       .pageHinkleyOn(plantDaily(Seq.fill(10)(10) ++ Seq.fill(10)(30)))
       .as[(String, Long, Double, Double, Double, Long, Long)]
       .collect().toSeq
@@ -42,7 +42,7 @@ class Round53Spec extends AnyFunSuite {
   // ---- evt_durbin_watson ---------------------------------------------------
 
   test("durbinWatsonOn: a perfect line has zero residuals — NULL dw, exact slope") {
-    val got = graft.ops.Composite71
+    val got = graft.ops.timeseries.Correlation
       .durbinWatsonOn(plantDaily((1 to 10).map(_ * 2)))
       .collect().toSeq
     assert(got.length == 1)
@@ -56,11 +56,11 @@ class Round53Spec extends AnyFunSuite {
     // y = 10 ± 1 alternating: residuals flip sign every step ->
     // dw = 3.690909; y = 5×5 then 15×5: residuals drift smoothly ->
     // dw = 1.490909, under the 1.5 positive-autocorrelation cut.
-    val alt = graft.ops.Composite71
+    val alt = graft.ops.timeseries.Correlation
       .durbinWatsonOn(plantDaily((1 to 10).map(t => 10 + (if (t % 2 == 0) 1 else -1))))
       .as[(String, Long, Double, Double, Boolean)].collect().head
     assert(alt == (("A", 10L, 0.060606, 3.690909, false)))
-    val step = graft.ops.Composite71
+    val step = graft.ops.timeseries.Correlation
       .durbinWatsonOn(plantDaily(Seq.fill(5)(5) ++ Seq.fill(5)(15)))
       .as[(String, Long, Double, Double, Boolean)].collect().head
     assert(step == (("A", 10L, 1.515152, 1.490909, true)))

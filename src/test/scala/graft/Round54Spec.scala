@@ -78,7 +78,7 @@ class Round54Spec extends AnyFunSuite {
   test("aroonOn: a rising series pins up = 100 / down = 0; a constant series ties to the current day") {
     // Rising 1..20: in every saturated window the high is today
     // (gap 0) and the low is the oldest day (gap 13).
-    val rising = graft.ops.Composite74.aroonOn(plantDaily((1 to 20)))
+    val rising = graft.ops.timeseries.Patterns.aroonOn(plantDaily((1 to 20)))
       .as[(String, java.sql.Date, Long, Long, Long, Double, Double, Double)]
       .collect().toSeq
     assert(rising.length == 7) // days 14..20 carry a full 14-day window
@@ -87,7 +87,7 @@ class Round54Spec extends AnyFunSuite {
     }
     // Constant: every day equals both extremes; the most-recent tie
     // rule picks gap 0 on both sides.
-    val const = graft.ops.Composite74.aroonOn(plantDaily(Seq.fill(16)(5)))
+    val const = graft.ops.timeseries.Patterns.aroonOn(plantDaily(Seq.fill(16)(5)))
       .as[(String, java.sql.Date, Long, Long, Long, Double, Double, Double)]
       .collect().toSeq
     assert(const.length == 3) // days 14..16 carry a full 14-day window
