@@ -121,7 +121,9 @@ object LlmOps14 {
     * plan), and the big regime persists the scored pairs DISK_ONLY —
     * compressed columnar batches, no heap pinning, both mirror
     * branches stream them back (§5: the driver/executor holds keys
-    * and metadata, never an O(N²) relation on the heap).
+    * and metadata, never an O(N²) relation on the heap). The big
+    * regime votes eagerly and unpersists the pair table before it
+    * returns the per-label result as a local relation.
     *
     * Pair orientation differs between the plans; the mirror union
     * erases it, so the voted output is identical (Round58Spec pins
@@ -179,7 +181,15 @@ object LlmOps14 {
     val sym = scored.unionAll(scored.select(
       col("nid").as("vec_id"), col("nlabel").as("label"),
       col("vec_id").as("nid"), col("label").as("nlabel"), col("cos")))
-    voteAccuracy(sym)
+    val voted = voteAccuracy(sym)
+    if (smallPairs) voted
+    else {
+      // one row per label: collect it so the pair table can be released
+      val rows = voted.collect()
+      scored.unpersist()
+      emb.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), voted.schema)
+    }
   }
 
   /** (vec_id, label, nid, nlabel, cos) candidate rows → per-class

@@ -3,11 +3,29 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Single definition of the engine's session config — Verify, Bench,
-  * Explain, and the test fixture all build through here so a new
-  * session-level flag (like the parquet-nanos one) can never be set
-  * in one entry point and missed in another. */
+  * Explain, MakeBigSf, perfbench and the test fixture all build through
+  * here so a new session-level flag (like the parquet-nanos one) can
+  * never be set in one entry point and missed in another. */
 object Sessions {
 
+  /** A `local[cpus]` session with the engine's extensions and config.
+    *
+    * Sessions share compiled code. Spark caches each generated class in
+    * `CodeGenerator.compile` under the key (thread context classloader,
+    * code body). With `spark.sql.artifact.isolation.enabled` at its
+    * default (true) every session gets its own artifact classloader and
+    * its tasks compile under it, so a `newSession()` never hits a class
+    * an earlier session compiled: every whole-stage class is
+    * Janino-compiled, then JIT-compiled, once per session. Pinning it to
+    * false keys every session's code on the shared loader, so a class
+    * one session compiled is reused by later sessions for as long as it
+    * stays in the cache (`spark.sql.codegen.cache.maxEntries`, left at
+    * its default). Plans, jobs and outputs are unchanged.
+    *
+    * Contract this relies on: the engine adds no per-session jars, files
+    * or artifacts (no `addArtifact`/`addJar`); with isolation off such
+    * an addition would be visible to every session. SessionsSpec pins
+    * the flag and the cross-session cache hit. */
   def local(cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
@@ -16,6 +34,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS); see Tables.loadEvents
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -50,13 +50,20 @@ class Round58Spec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"), col("label"))
     val viaBroadcast = graft.ops.LlmOps14.knnClassifyExact(emb)
       .orderBy("label").collect().toSeq
-    val viaBlocks = TestSpark.globalConfLock.synchronized {
+    val sc = spark.sparkContext
+    val (viaBlocks, leftPersisted) = TestSpark.globalConfLock.synchronized {
       sys.props("graft.broadcast.rowCap") = "0" // force the block path
-      try graft.ops.LlmOps14.knnClassifyExact(emb)
-        .orderBy("label").collect().toSeq
-      finally sys.props.remove("graft.broadcast.rowCap")
+      try {
+        val before = sc.getPersistentRDDs.keySet
+        val out = graft.ops.LlmOps14.knnClassifyExact(emb)
+          .orderBy("label").collect().toSeq
+        (out, sc.getPersistentRDDs.keySet -- before)
+      } finally sys.props.remove("graft.broadcast.rowCap")
     }
     assert(viaBlocks == viaBroadcast)
+    // the big regime releases its DISK_ONLY pair table before returning
+    assert(leftPersisted.isEmpty,
+      s"block path left persisted RDDs: $leftPersisted")
   }
 
   test("scratch dir honors spark.graft.scratch.dir; memo builds land there") {
