@@ -225,18 +225,18 @@ object Graft {
       sort: Seq[Column]): DataFrame =
     graft.util.DistRank.globalNtile(df, as, buckets, sort)
 
-  /** PageRank over an edge list with columns (src, dst). The edge
-    * table is checkpointed once with out-degree attached; each
-    * iteration broadcasts the node-sized rank table into a
-    * map-side-combined contribution aggregate (no recurring edge
-    * shuffle). Ranks are rounded to 12 dp per iteration so reruns are
+  /** PageRank over an edge list with columns (src, dst): personalized
+    * PageRank with every node a seed. The edge table is checkpointed
+    * once with out-degree attached; each iteration broadcasts the
+    * node-sized rank table into a map-side-combined contribution
+    * aggregate (no recurring edge shuffle). Ranks are rounded to 12 dp per iteration so reruns are
     * bit-stable. Pass a DISTINCT edge list for standard PageRank —
     * duplicate (src, dst) rows act as edge weights (each repeat
     * contributes a share). Sink nodes keep their base rank; their
     * mass is not redistributed. Returns (node, r). */
   def pageRank(edges: DataFrame, iterations: Int = 5,
       damping: Double = 0.85): DataFrame =
-    graft.ops.Composite4.pageRankOn(edges, iterations, damping)
+    graft.ops.graph.Centrality.pprOn(edges, _ => lit(true), iterations, damping)
 
   /** Per-dimension z-score standardization of a vector column:
     * posexplode → per-dimension moments (broadcast back) →
@@ -312,7 +312,7 @@ object Graft {
     * clustering_coeff) with the coefficient 3T/Σ C(deg,2) 6-dp
     * rounded. */
   def triangleCount(edges: DataFrame): DataFrame =
-    graft.ops.Composite10.triangleCountOn(edges)
+    graft.ops.graph.Structure.triangleCountOn(edges)
 
   /** Synchronized k-core peeling trace over a directed-symmetric edge
     * list (src, dst): each round keeps nodes whose degree among
@@ -323,7 +323,7 @@ object Graft {
     * (a trace that converges immediately costs one edge pass total).
     */
   def kcore(edges: DataFrame, k: Int, rounds: Int = 5): DataFrame =
-    graft.ops.Composite15.kcoreOn(edges, k, rounds)
+    graft.ops.graph.Structure.kcoreOn(edges, k, rounds)
 
   /** Multi-source hop-bounded BFS distance histogram over a
     * directed-symmetric (src, dst) edge list: `seed` marks the
@@ -333,14 +333,14 @@ object Graft {
     * discipline). */
   def shortestPathHistogram(edges: DataFrame, seed: Column => Column,
       maxHops: Int): DataFrame =
-    graft.ops.Composite31.shortestPathOn(edges, seed, maxHops)
+    graft.ops.graph.Paths.shortestPathOn(edges, seed, maxHops)
 
   /** 1- and 2-hop ego-network sizes (seed excluded) for the nodes
     * `seed` selects, over a directed-symmetric (src, dst) edge list.
     * Seed-bounded: the frontier expansion filters edges to seeds
     * first and never rescans the graph per seed. */
   def egoSizes(edges: DataFrame, seed: Column => Column): DataFrame =
-    graft.ops.Composite32.egoSize2HopOn(edges, seed)
+    graft.ops.graph.Paths.egoSize2HopOn(edges, seed)
 
   /** Weighted multi-source shortest-path distance histogram over a
     * directed-symmetric (src, dst, w) edge list: `maxHops`
@@ -350,7 +350,7 @@ object Graft {
     * [[shortestPathHistogram]]. */
   def shortestPathWeightedHistogram(edges: DataFrame, seed: Column => Column,
       maxHops: Int): DataFrame =
-    graft.ops.Composite33.shortestPathWeightedOn(edges, seed, maxHops)
+    graft.ops.graph.Paths.shortestPathWeightedOn(edges, seed, maxHops)
 
   /** Orphan-FK audit: one (edge, n_child, n_orphans) row per
     * (name, child, fkCol, parent, pkCol) tuple. NULL fks count as
@@ -386,13 +386,13 @@ object Graft {
     * half-edge (src, dst) list: per community, node/within-edge/
     * degree counts and the Q contribution e_c/m - (a_c/2m)^2. */
   def modularity(halfEdges: DataFrame): DataFrame =
-    graft.ops.Composite34.modularityOn(halfEdges)
+    graft.ops.graph.Community.modularityOn(halfEdges)
 
   /** Per-community conductance cut/min(vol, 2m-vol) over a half-edge
     * (src, dst) list under the c(n) = n % 50 assignment — the
     * boundary-quality companion to [[modularity]]. */
   def conductance(halfEdges: DataFrame): DataFrame =
-    graft.ops.Composite35.conductanceOn(halfEdges)
+    graft.ops.graph.Community.conductanceOn(halfEdges)
 
   /** Tukey-fence outlier audit per return flag over a
     * lineitem-shaped relation: picked quartiles, +-1.5 IQR fences in

@@ -72,7 +72,7 @@ object SparkEntry {
       (Composite33.queries, Composite33.oracle),
       (Composite34.queries, Composite34.oracle),
       (Composite35.queries, Composite35.oracle),
-      (Composite36.queries, Composite36.oracle),
+      (graph.Graph.queries, graph.Graph.oracle),
       (Composite37.queries, Composite37.oracle),
       (Composite38.queries, Composite38.oracle),
       (Composite39.queries, Composite39.oracle),
@@ -89,7 +89,6 @@ object SparkEntry {
       (timeseries.TimeSeries.queries, timeseries.TimeSeries.oracle),
       (Composite51.queries, Composite51.oracle),
       (Composite52.queries, Composite52.oracle),
-      (Composite54.queries, Composite54.oracle),
       (Composite55.queries, Composite55.oracle),
       (Composite56.queries, Composite56.oracle),
       (Composite57.queries, Composite57.oracle),
@@ -98,7 +97,6 @@ object SparkEntry {
       (Composite61.queries, Composite61.oracle),
       (Composite62.queries, Composite62.oracle),
       (Composite63.queries, Composite63.oracle),
-      (Composite65.queries, Composite65.oracle),
       (Composite66.queries, Composite66.oracle),
       (LlmOps18.queries, LlmOps18.oracle),
       (LlmOps19.queries, LlmOps19.oracle),

@@ -1,22 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.24 — round-13 operators: marketing attribution,
-  * series smoothing/risk windows over the daily revenue grain, serial
-  * correlation, and triangle counting on the co-purchase graph.
+  * series smoothing/risk windows over the daily revenue grain, and
+  * serial correlation.
   *
   * Scale shapes: attribution is a per-user co-partitioned interval
   * join (the evt_funnel discipline — fan-out bounded by per-user
   * activity); drawdown/rolling-median windows run over the
   * |nation|×|days| aggregate, never the fact; autocorrelation's
   * single-partition window holds ≤ one row per calendar day (bounded
-  * by the time horizon, not the data); triangles use degree-ordered
-  * orientation so every adjacency list is ≤ √(2E) long.
+  * by the time horizon, not the data).
   *
   * Float determinism: revenue stays DECIMAL through every cumulative
   * window (sums and running max are exact); the one double division
@@ -215,130 +214,19 @@ object Composite10 {
       |  FROM lagged WHERE l7 IS NOT NULL)
       |SELECT n_days, ac_lag1, ac_lag7 FROM a1 CROSS JOIN a7""".stripMargin
 
-  // ---- graph_triangle_count ----------------------------------------
-  // Triangle count + global clustering coefficient on the undirected
-  // co-purchase graph via degree-ordered orientation ("compact
-  // forward"): each edge points at its higher-degree endpoint, so
-  // out-adjacency lists are ≤ √(2E) long and the per-edge
-  // neighborhood intersection is bounded — the 148M-wedge naive
-  // self-join never materializes. The oriented adjacency table is
-  // |nodes|-row but edge-cell-sized, so its broadcast hint is gated
-  // on the EDGE count (graft.util.Hints); above the cap the same
-  // plan runs un-hinted as two shuffle joins keyed on the edge
-  // endpoints rather than hard-failing at the broadcast limit.
-  /** Generic triangle/clustering core over an undirected edge list
-    * (one row per unordered pair) — the
-    * [[graft.Graft.triangleCount]] facade surface. */
-  private[graft] def triangleCountOn(edges: DataFrame): DataFrame = {
-    // e/deg/o/adj each feed 2+ consumers — localCheckpoint() every
-    // node/edge-sized intermediate once (the Composite20
-    // commonNeighbors discipline) so the upstream edge build is not
-    // re-executed per consumer.
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val deg = e.select(col("src").as("n")).union(e.select(col("dst").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg")).localCheckpoint()
-    // ONE cached-block count gates all hints: |o| == |e| row-for-row,
-    // adjacency cells total |o|, |nodes| ≤ 2|e|.
-    val eCnt = e.count()
-    val degHint = graft.util.Hints.maybeBroadcast(2L * eCnt)
-    val o = e
-      .join(degHint(deg.select(col("n").as("src"), col("deg").as("da"))), "src")
-      .join(degHint(deg.select(col("n").as("dst"), col("deg").as("db"))), "dst")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("src") < col("dst")), col("src"))
-          .otherwise(col("dst")).as("u"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("src") < col("dst")), col("dst"))
-          .otherwise(col("src")).as("v"))
-      .localCheckpoint()
-    val adj = o.groupBy(col("u")).agg(sort_array(collect_list(col("v"))).as("nbrs"))
-      .localCheckpoint()
-    val adjHint = graft.util.Hints.maybeBroadcast(eCnt)
-    triangleFromCore(deg, o, adj, adjHint)
-  }
-
-  /** Final triangle aggregation over a prebuilt core (deg, oriented
-    * edges, sorted oriented adjacency) — shared by the planted seam
-    * above and the corpus-facing path below (which reads the TriCore
-    * DiskMemo parquet views; their file statistics let the planner
-    * pick broadcast vs shuffle, so no manual hint is threaded). */
-  private[graft] def triangleFromCore(deg: DataFrame, o: DataFrame,
-      adj: DataFrame,
-      adjHint: DataFrame => DataFrame = identity): DataFrame = {
-    val tri = o
-      .join(adjHint(adj.select(col("u"), col("nbrs").as("nu"))), Seq("u"))
-      .join(adjHint(adj.select(col("u").as("v"), col("nbrs").as("nv"))),
-        Seq("v"), "left")
-      .select(size(graft.functions.SortedIntersect(col("nu"),
-        coalesce(col("nv"), expr("CAST(array() AS ARRAY<BIGINT>)"))))
-        .cast("bigint").as("c"))
-      .agg(sum(col("c")).cast("bigint").as("n_triangles"))
-    val wedges = deg.agg(
-      count(lit(1)).as("n_nodes"),
-      (sum(col("deg")) / 2).cast("bigint").as("n_edges"),
-      sum(col("deg") * (col("deg") - 1) / 2).cast("bigint").as("wedges"))
-    wedges.crossJoin(broadcast(tri))
-      .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
-        round(lit(3.0) * col("n_triangles").cast("double") /
-          col("wedges").cast("double"), 6).as("clustering_coeff"))
-  }
-
-  private def triangleCount(s: SparkSession, dir: String): DataFrame =
-    triangleFromCore(TriCore.sharedDeg(s, dir),
-      TriCore.sharedOriented(s, dir), TriCore.sharedAdj(s, dir))
-
-  private val triangleOracle =
-    """WITH ps AS (
-      |  SELECT l_orderkey, list(DISTINCT l_partkey) AS ps
-      |  FROM lineitem GROUP BY l_orderkey),
-      |e AS (
-      |  SELECT DISTINCT a AS src, b AS dst
-      |  FROM (SELECT unnest(ps) AS a, ps FROM ps), unnest(ps) AS t(b)
-      |  WHERE a < b),
-      |deg AS (
-      |  SELECT n, CAST(count(*) AS BIGINT) AS deg
-      |  FROM (SELECT src AS n FROM e UNION ALL SELECT dst FROM e) g
-      |  GROUP BY n),
-      |o AS (
-      |  SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.src < e.dst)
-      |           THEN e.src ELSE e.dst END AS u,
-      |         CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.src < e.dst)
-      |           THEN e.dst ELSE e.src END AS v
-      |  FROM e JOIN deg da ON da.n = e.src JOIN deg db ON db.n = e.dst),
-      |adj AS (
-      |  SELECT u, list_sort(list(v)) AS nbrs FROM o GROUP BY u),
-      |tri AS (
-      |  SELECT CAST(sum(len(list_intersect(au.nbrs, coalesce(av.nbrs, [])))) AS BIGINT)
-      |    AS n_triangles
-      |  FROM o
-      |  JOIN adj au ON au.u = o.u
-      |  LEFT JOIN adj av ON av.u = o.v),
-      |w AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-      |    CAST(sum(deg) / 2 AS BIGINT) AS n_edges,
-      |    CAST(sum(deg * (deg - 1) / 2) AS BIGINT) AS wedges
-      |  FROM deg)
-      |SELECT n_nodes, n_edges, n_triangles,
-      |  round(3.0 * CAST(n_triangles AS DOUBLE) / CAST(wedges AS DOUBLE), 6)
-      |    AS clustering_coeff
-      |FROM w CROSS JOIN tri""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_attribution" -> (attribution _),
     "win_drawdown" -> (drawdown _),
     "win_rolling_median" -> (rollingMedian _),
-    "agg_autocorr" -> (autocorr _),
-    "graph_triangle_count" -> (triangleCount _)
+    "agg_autocorr" -> (autocorr _)
   )
 
   val oracle: Map[String, String] = Map(
     "evt_attribution" -> attributionOracle,
     "win_drawdown" -> drawdownOracle,
     "win_rolling_median" -> rollingMedianOracle,
-    "agg_autocorr" -> autocorrOracle,
-    "graph_triangle_count" -> triangleOracle
+    "agg_autocorr" -> autocorrOracle
   )
 }

@@ -1,15 +1,14 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.26 — round-15 analytics operators: revenue
   * concentration (Herfindahl–Hirschman), categorical entropy,
-  * DAU/WAU stickiness, Mann–Kendall trend tests, a Theil–Sen robust
-  * slope, and one label-propagation step on the co-purchase graph.
+  * DAU/WAU stickiness, Mann–Kendall trend tests, and a Theil–Sen
+  * robust slope.
   *
   * Scale shapes: every operator aggregates the fact down to an
   * entity- or horizon-bounded table before any window or self-join —
@@ -18,8 +17,7 @@ import graft.util.Tables._
   * Mann–Kendall pair join is per-user over active DAYS (horizon-
   * bounded, ≤ span² pairs per user whatever the event volume);
   * Theil–Sen pairs the global daily series with itself (≤ days²
-  * pairs total, a constant in corpus size); label propagation is one
-  * edges⋈labels shuffle plus a per-node argmax window.
+  * pairs total, a constant in corpus size).
   *
   * Float determinism: all double arithmetic starts from exact
   * integer counts or exact decimal sums; both engines then run the
@@ -282,55 +280,6 @@ object Composite12 {
       |  round(med_c - slope * med_di, 6) AS intercept
       |FROM base CROSS JOIN sl""".stripMargin
 
-  // ---- graph_label_prop --------------------------------------------
-  // One label-propagation step over the co-purchase graph with
-  // p_brand as the seed label: each part adopts the modal brand of
-  // its neighbors (count desc, brand asc on ties — deterministic),
-  // surfaced as the old→new brand transition matrix (≤25×25 rows).
-  // Shape: edges ⋈ part on dst (one shuffle — part is NOT assumed
-  // broadcastable at corpus scale), per-(src, brand) count, per-src
-  // argmax window (src-partitioned, skew-free: degree is bounded by
-  // parts-per-order × orders-per-part), then one more part join for
-  // the old label and a tiny final aggregate.
-  private def labelProp(s: SparkSession, dir: String): DataFrame = {
-    val part = load(s, dir, "part")
-      .select(col("p_partkey"), col("p_brand"))
-    val nbr = Composite4.coPurchaseEdges(s, dir)
-      .join(part, col("dst") === col("p_partkey"))
-      .groupBy(col("src"), col("p_brand").as("nb"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cnt").desc, col("nb").asc)
-    val newLab = nbr.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("src"), col("nb").as("new_brand"))
-    newLab.join(part, col("src") === col("p_partkey"))
-      .groupBy(col("p_brand").as("old_brand"), col("new_brand"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("old_brand", "new_brand")
-  }
-
-  private val labelPropOracle =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |edges AS (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |nbr AS (
-      |  SELECT e.src, p.p_brand AS nb, CAST(count(*) AS BIGINT) AS cnt
-      |  FROM edges e JOIN part p ON e.dst = p.p_partkey
-      |  GROUP BY e.src, p.p_brand),
-      |new_lab AS (
-      |  SELECT src, nb AS new_brand FROM (
-      |    SELECT src, nb, row_number() OVER (
-      |      PARTITION BY src ORDER BY cnt DESC, nb) AS rk
-      |    FROM nbr) WHERE rk = 1)
-      |SELECT p.p_brand AS old_brand, n.new_brand,
-      |  CAST(count(*) AS BIGINT) AS n_nodes
-      |FROM new_lab n JOIN part p ON n.src = p.p_partkey
-      |GROUP BY p.p_brand, n.new_brand
-      |ORDER BY old_brand, new_brand""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -338,8 +287,7 @@ object Composite12 {
     "agg_entropy" -> (entropy _),
     "evt_dau_wau" -> (dauWau _),
     "win_mann_kendall" -> (mannKendall _),
-    "agg_theil_sen" -> (theilSen _),
-    "graph_label_prop" -> (labelProp _)
+    "agg_theil_sen" -> (theilSen _)
   )
 
   val oracle: Map[String, String] = Map(
@@ -347,7 +295,6 @@ object Composite12 {
     "agg_entropy" -> entropyOracle,
     "evt_dau_wau" -> dauWauOracle,
     "win_mann_kendall" -> mannKendallOracle,
-    "agg_theil_sen" -> theilSenOracle,
-    "graph_label_prop" -> labelPropOracle
+    "agg_theil_sen" -> theilSenOracle
   )
 }

@@ -6,14 +6,11 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.31 — round-15 fourth batch: k-core decomposition
-  * peels, winsorized/trimmed robust means, error-budget burn
-  * analysis, and a seasonal decomposition of the daily series.
+/** SURVEY.md §2.31 — round-15 fourth batch: winsorized/trimmed
+  * robust means, error-budget burn analysis, and a seasonal
+  * decomposition of the daily series.
   *
-  * Scale shapes: the k-core peel is 5 synchronized rounds of
-  * (edges ⋈ survivors)² + a degree aggregate over a checkpointed
-  * edge list (the pagerank discipline — derive once, reuse);
-  * winsorized means are two passes over the fact with a 5-row
+  * Scale shapes: winsorized means are two passes over the fact with a 5-row
   * percentile broadcast between them; error burn is two hash
   * aggregates and a 1-row broadcast; seasonal decomposition runs
   * entirely over the horizon-bounded daily aggregate.
@@ -23,115 +20,6 @@ import graft.util.Tables._
   * on shared IEEE formula text.
   */
 object Composite15 {
-
-  // ---- graph_kcore -------------------------------------------------
-  // Synchronized 3-core peeling on the co-purchase graph: each round
-  // keeps nodes whose degree among SURVIVORS is ≥ 3, and surfaces
-  // (iter, n_nodes, n_dir_edges) for rounds 1..5 — the convergence
-  // trace (node count stabilizing ⇒ the 3-core). The edge list is
-  // localCheckpoint'd once (pagerank discipline: 5 reuses must not
-  // re-run the groupBy + pair explosion + DISTINCT); each peel is
-  // two semi-joins keyed on the edge endpoints plus one degree
-  // aggregate — all shuffle-partitioned by node id at any scale.
-  private def kcore(s: SparkSession, dir: String): DataFrame =
-    kcoreOn(Composite4.coPurchaseEdges(s, dir), k = 3, rounds = 5)
-
-  /** Generic synchronized k-core peeling trace over a
-    * directed-symmetric edge list (src, dst) — the
-    * [[graft.Graft.kcore]] facade surface. Emits one
-    * (iter, n_nodes, n_dir_edges) row per round. */
-  private[graft] def kcoreOn(edgePlan: DataFrame, k: Int, rounds: Int)
-      : DataFrame = {
-    require(k >= 1 && rounds >= 1, s"kcoreOn: bad k=$k rounds=$rounds")
-    // checkpoint the edge list LAZILY: the initial degree table needs
-    // only one pass over the edge build, and when the peel converges
-    // immediately (this corpus' co-purchase graph is dense — verified
-    // at two SFs) no later pass ever happens, so an up-front
-    // materialization would be pure waste. The first real peel pays
-    // one extra build pass to checkpoint, then iterates from memory.
-    var edgesCk: DataFrame = null
-    def edges: DataFrame = {
-      if (edgesCk == null) edgesCk = edgePlan.localCheckpoint()
-      edgesCk
-    }
-    // deg_i is node-sized (tiny); checkpointing it each round truncates
-    // the lineage so round i executes ONCE — a naive union of 5 lazy
-    // chains re-runs rounds 1..i for every trace row (1+2+…+5 = 15
-    // edge passes). Survivor sets broadcast into the edge filter, so
-    // the only per-round shuffle is the degree groupBy.
-    var deg = edgePlan.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
-    // convergence short-circuit: when no node falls below k, the edge
-    // set is a fixed point and the remaining trace rows repeat — skip
-    // their edge passes entirely. The per-round counts read the
-    // CHECKPOINTED node-sized degree table (distributed count on
-    // materialized data — not a plan re-execution, unlike the
-    // standalone count() VERDICT r4 flagged in pagerank).
-    var nCur = deg.count()
-    var converged = false
-    val traces = (1 to rounds).map { i =>
-      if (!converged) {
-        val surv = deg.filter(col("d") >= k).select(col("src").as("n"))
-        val nSurv = surv.count()
-        if (nSurv == nCur) converged = true
-        else {
-          // filtering the ORIGINAL checkpointed list is equivalent to
-          // filtering e_{i-1}: survivor sets shrink monotonically
-          // nSurv was just counted above — gate this round's hints on
-          // it (graft.util.Hints): past the cap the survivor filter
-          // runs as node-keyed shuffle semi-joins instead of
-          // hard-failing at the broadcast limit.
-          val survHint = graft.util.Hints.maybeBroadcast(nSurv)
-          val e = edges
-            .join(survHint(surv.withColumnRenamed("n", "src")), "src")
-            .join(survHint(surv.withColumnRenamed("n", "dst")), "dst")
-          deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-            .localCheckpoint()
-          nCur = deg.count()
-        }
-      }
-      // n_nodes = rows of deg_i (distinct src), n_dir_edges = Σd —
-      // both read the checkpointed node-sized table, no edge re-pass
-      deg.agg(count(lit(1)).as("n_nodes"),
-        sum(col("d")).cast("bigint").as("n_dir_edges"))
-        .select(lit(i).as("iter"), col("n_nodes"), col("n_dir_edges"))
-    }
-    traces.reduce(_ union _).orderBy("iter")
-  }
-
-  // AS MATERIALIZED on every round CTE: each e_i is referenced three
-  // times (next peel, next edge filter, final union row) — unpinned,
-  // DuckDB inlines each reference and the 5-round tree re-expands
-  // ~3^5-fold, which exhausted temp disk at sf0.1 (the
-  // graph_connected_components_conv lesson, r8).
-  private def kcoreOracle: String = {
-    val peels = (1 to 5).map { i =>
-      s"""k$i AS MATERIALIZED (
-         |  SELECT src AS n FROM e${i - 1} GROUP BY src
-         |  HAVING count(*) >= 3),
-         |e$i AS MATERIALIZED (
-         |  SELECT e.src, e.dst FROM e${i - 1} e
-         |  JOIN k$i a ON e.src = a.n JOIN k$i b ON e.dst = b.n)"""
-        .stripMargin
-    }.mkString(",\n")
-    val rows = (1 to 5).map { i =>
-      s"""SELECT $i AS iter,
-         |  CAST(count(DISTINCT src) AS BIGINT) AS n_nodes,
-         |  CAST(count(*) AS BIGINT) AS n_dir_edges FROM e$i"""
-        .stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |e0 AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey <> b.l_partkey),
-       |$peels
-       |SELECT * FROM ($rows) ORDER BY iter""".stripMargin
-  }
-
-  // NOTE the oracle's k1 peels from e0 degrees — identical to the
-  // Spark side's first filter, which also computes degrees over the
-  // full edge list. Subsequent peels align round for round.
 
   // ---- agg_winsorized ----------------------------------------------
   // Robust means of order value per priority: winsorized mean (clamp
@@ -273,14 +161,12 @@ object Composite15 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_kcore" -> (kcore _),
     "agg_winsorized" -> (winsorized _),
     "evt_error_burn" -> (errorBurn _),
     "win_seasonal_decompose" -> (seasonalDecompose _)
   )
 
   val oracle: Map[String, String] = Map(
-    "graph_kcore" -> kcoreOracle,
     "agg_winsorized" -> winsorizedOracle,
     "evt_error_burn" -> errorBurnOracle,
     "win_seasonal_decompose" -> seasonalDecomposeOracle

@@ -5,76 +5,20 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.32 — round-15 fifth batch: degree assortativity,
-  * cross-source duplicate flow, new-vs-returning user split, and
-  * year-over-year growth.
+/** SURVEY.md §2.32 — round-15 fifth batch: cross-source duplicate
+  * flow, new-vs-returning user split, and year-over-year growth.
   *
-  * Scale shapes: assortativity is one edges⋈degree⋈degree pass
-  * (degree table node-sized, broadcast here, shuffle-joinable above
-  * that) reduced to exact sums; cross-source dup flow reuses the
+  * Scale shapes: cross-source dup flow reuses the
   * exact-dedup hash groupBy and explodes only MULTI-SOURCE groups
   * (bounded by the duplicate population, not the corpus); the user
   * split is two chained aggregates over (user, day); YoY is a
   * month-aggregate self-join on month−12 (gap-safe, like the
   * seasonal-naive backtest).
   *
-  * Determinism: counts/degrees exact; the assortativity quotient
-  * assembles once from exact integer sums via shared IEEE text.
+  * Determinism: counts exact; growth ratios assemble once from
+  * exact sums via shared IEEE text.
   */
 object Composite16 {
-
-  // ---- graph_assortativity -----------------------------------------
-  // Degree assortativity of the co-purchase graph: Pearson
-  // correlation of endpoint degrees over the DIRECTED edge list
-  // (Newman 2002's r, computed over both orientations — symmetric,
-  // so excess-degree means match either convention). All sums are
-  // exact integers; r assembles once. At this corpus' density the
-  // degree table broadcasts; the code path works identically as two
-  // shuffle joins when it cannot.
-  private def assortativity(s: SparkSession, dir: String): DataFrame = {
-    // r18: edges + degrees read from the shared DiskMemo parquet
-    // views (built once per JVM) instead of per-invocation rebuild +
-    // two checkpoints; parquet statistics drive broadcast-vs-shuffle.
-    val edges = Composite4.coPurchaseEdges(s, dir)
-    val deg = TriCore.sharedDeg(s, dir).withColumnRenamed("n", "src")
-      .withColumnRenamed("deg", "d")
-    val paired = edges
-      .join(deg.select(col("src"), col("d").as("da")), "src")
-      .join(deg.select(col("src").as("dst"), col("d").as("db")), "dst")
-    val rF =
-      """round((sab / m - (sa / m) * (sb / m)) /
-        |  (sqrt(sa2 / m - (sa / m) * (sa / m)) *
-        |   sqrt(sb2 / m - (sb / m) * (sb / m))), 6)""".stripMargin
-    paired.agg(count(lit(1)).cast("double").as("m"),
-      sum(col("da")).cast("double").as("sa"),
-      sum(col("db")).cast("double").as("sb"),
-      sum(col("da") * col("db")).cast("double").as("sab"),
-      sum(col("da") * col("da")).cast("double").as("sa2"),
-      sum(col("db") * col("db")).cast("double").as("sb2"))
-      .select(col("m").cast("bigint").as("n_dir_edges"),
-        expr(rF).as("assortativity"))
-  }
-
-  private val assortativityOracle =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |edges AS (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d
-      |        FROM edges GROUP BY src),
-      |p AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS m,
-      |    CAST(sum(a.d) AS DOUBLE) AS sa, CAST(sum(b.d) AS DOUBLE) AS sb,
-      |    CAST(sum(a.d * b.d) AS DOUBLE) AS sab,
-      |    CAST(sum(a.d * a.d) AS DOUBLE) AS sa2,
-      |    CAST(sum(b.d * b.d) AS DOUBLE) AS sb2
-      |  FROM edges e JOIN deg a ON e.src = a.src JOIN deg b ON e.dst = b.src)
-      |SELECT CAST(m AS BIGINT) AS n_dir_edges,
-      |  round((sab / m - (sa / m) * (sb / m)) /
-      |    (sqrt(sa2 / m - (sa / m) * (sa / m)) *
-      |     sqrt(sb2 / m - (sb / m) * (sb / m))), 6) AS assortativity
-      |FROM p""".stripMargin
 
   // ---- llm_dedup_cross_source --------------------------------------
   // Where do duplicated document OPENINGS flow between sources? Keys
@@ -201,14 +145,12 @@ object Composite16 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_assortativity" -> (assortativity _),
     "llm_dedup_cross_source" -> (crossSourceDup _),
     "evt_new_vs_returning" -> (newVsReturning _),
     "win_year_over_year" -> (yearOverYear _)
   )
 
   val oracle: Map[String, String] = Map(
-    "graph_assortativity" -> assortativityOracle,
     "llm_dedup_cross_source" -> crossSourceDupOracle,
     "evt_new_vs_returning" -> newVsReturningOracle,
     "win_year_over_year" -> yearOverYearOracle

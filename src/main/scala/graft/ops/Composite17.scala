@@ -6,109 +6,21 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.33 — round-15 sixth batch: local clustering by degree
-  * decile, leaderboard rank dynamics, template detection, and a
-  * price/volume growth decomposition.
+/** SURVEY.md §2.33 — round-15 sixth batch: leaderboard rank
+  * dynamics, template detection, and a price/volume growth
+  * decomposition.
   *
-  * Scale shapes: local clustering reuses the degree-ordered triangle
-  * orientation (adjacency ≤ √(2E)) and adds one explode of the
-  * 3T per-triangle corner rows; rank dynamics keep BOTH monthly
+  * Scale shapes: rank dynamics keep BOTH monthly
   * windows behind rank-filter limits (WindowGroupLimit-pushed — the
   * full ranking never sorts past the limit per month); template
   * detection is two dense_rank hash exchanges; the decomposition
   * joins the month aggregate on month−1.
   *
-  * Determinism: triangle corner counts exact; ranks row_number with
+  * Determinism: ranks row_number with
   * (value DESC, key ASC) tie-breaks; money decimal-exact to the
   * final division.
   */
 object Composite17 {
-
-  // ---- graph_local_clustering --------------------------------------
-  // Watts–Strogatz LOCAL clustering by degree decile: per-node
-  // triangle counts from the oriented intersection (each triangle
-  // (u, v, w) credits its three corners once), local cc_i =
-  // 2·tri_i / (deg_i·(deg_i−1)), then a decile profile over
-  // (deg, node)-ordered nodes. The 3T corner explosion is the only
-  // addition over graph_triangle_count's plan.
-  private def localClustering(s: SparkSession, dir: String): DataFrame = {
-    // r18: the degree/oriented/adjacency core is read from the shared
-    // TriCore DiskMemo parquet views (built once per JVM, timed as
-    // memo_tri_adjacency) instead of being rebuilt + checkpointed per
-    // invocation (the pre-r18 shape measured ~4 s at sf0.1 with the
-    // checkpoints, ~9.4 s without). Parquet statistics let the planner
-    // broadcast the node-sized sides when they fit — no manual gates.
-    val deg = TriCore.sharedDeg(s, dir)
-    val o = TriCore.sharedOriented(s, dir)
-    val adj = TriCore.sharedAdj(s, dir)
-    val corners = o
-      .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
-      .join(adj.select(col("u").as("v"), col("nbrs").as("nv")),
-        Seq("v"), "left")
-      .select(col("u"), col("v"), graft.functions.SortedIntersect(col("nu"),
-        coalesce(col("nv"), expr("CAST(array() AS ARRAY<BIGINT>)"))).as("ws"))
-      .select(explode(concat(array(col("u"), col("v")), col("ws"))).as("n"))
-    val tri = corners.groupBy(col("n")).agg(count(lit(1)).as("t3"))
-    // every corner row came from one oriented triangle edge: u and v
-    // appear once per triangle THROUGH that edge, w once per closing
-    // intersection — each triangle credits each of its 3 corners
-    // exactly once, so t3 IS the per-node triangle count
-    val withCc = deg.join(tri, "n")
-      .select(col("n"), col("deg"), col("t3"))
-    // r18 retrofit: the decile profile rode a bare node-sized ntile
-    // window (one task holds every node at target scale); DistRank
-    // .globalNtile is SQL-ntile-exact over the same (deg, n) total
-    // order, so the oracle hash cannot move. INT cast preserves the
-    // green schema (the oracle pins decile as INT).
-    graft.util.DistRank
-      .globalNtile(withCc, "decile10", 10, Seq(col("deg"), col("n")))
-      .withColumn("decile", col("decile10").cast("int")).drop("decile10")
-      .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n_nodes"),
-        round(avg(col("deg").cast("double")), 6).as("mean_deg"),
-        round(avg(col("t3").cast("double") * 2.0 /
-          (col("deg") * (col("deg") - 1)).cast("double")), 6)
-          .as("mean_local_cc"))
-      .orderBy("decile")
-  }
-
-  private val localClusteringOracle =
-    """WITH ps AS (
-      |  SELECT l_orderkey, list(DISTINCT l_partkey) AS ps
-      |  FROM lineitem GROUP BY l_orderkey),
-      |e AS (
-      |  SELECT DISTINCT a AS src, b AS dst
-      |  FROM (SELECT unnest(ps) AS a, ps FROM ps), unnest(ps) AS t(b)
-      |  WHERE a < b),
-      |deg AS (
-      |  SELECT n, CAST(count(*) AS BIGINT) AS deg
-      |  FROM (SELECT src AS n FROM e UNION ALL SELECT dst FROM e) g
-      |  GROUP BY n),
-      |o AS (
-      |  SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.src < e.dst)
-      |           THEN e.src ELSE e.dst END AS u,
-      |         CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.src < e.dst)
-      |           THEN e.dst ELSE e.src END AS v
-      |  FROM e JOIN deg da ON da.n = e.src JOIN deg db ON db.n = e.dst),
-      |adj AS (
-      |  SELECT u, list_sort(list(v)) AS nbrs FROM o GROUP BY u),
-      |corners AS (
-      |  SELECT unnest(list_concat([o.u, o.v],
-      |    list_intersect(au.nbrs, coalesce(av.nbrs, [])))) AS n
-      |  FROM o
-      |  JOIN adj au ON au.u = o.u
-      |  LEFT JOIN adj av ON av.u = o.v),
-      |tri AS (SELECT n, CAST(count(*) AS BIGINT) AS t3
-      |        FROM corners GROUP BY n),
-      |cc AS (
-      |  SELECT deg.n, deg.deg, tri.t3,
-      |    CAST(ntile(10) OVER (ORDER BY deg.deg, deg.n) AS INT) AS decile
-      |  FROM deg JOIN tri ON deg.n = tri.n)
-      |SELECT decile, CAST(count(*) AS BIGINT) AS n_nodes,
-      |  round(avg(CAST(deg AS DOUBLE)), 6) AS mean_deg,
-      |  round(avg(CAST(t3 AS DOUBLE) * 2.0 /
-      |    CAST(deg * (deg - 1) AS DOUBLE)), 6) AS mean_local_cc
-      |FROM cc GROUP BY decile ORDER BY decile""".stripMargin
 
   // ---- win_rank_change ---------------------------------------------
   // Month-over-month leaderboard dynamics: this month's top-20
@@ -275,14 +187,12 @@ object Composite17 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_local_clustering" -> (localClustering _),
     "win_rank_change" -> (rankChange _),
     "llm_template_detect" -> (templateDetect _),
     "agg_growth_decompose" -> (growthDecompose _)
   )
 
   val oracle: Map[String, String] = Map(
-    "graph_local_clustering" -> localClusteringOracle,
     "win_rank_change" -> rankChangeOracle,
     "llm_template_detect" -> templateDetectOracle,
     "agg_growth_decompose" -> growthDecomposeOracle

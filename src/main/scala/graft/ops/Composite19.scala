@@ -107,7 +107,7 @@ object Composite19 {
     // view's w (each order contributes each unordered pair once, a<b
     // from the sorted set — identical orientation) — read it instead
     // of re-running the pair explode + count per invocation.
-    val pairs = Composite33.coPurchaseWeightedHalf(s, dir)
+    val pairs = graph.CoPurchase.coPurchaseWeightedHalf(s, dir)
       .select(col("src").as("pa"), col("dst").as("pb"),
         col("w").as("n_ab"))
       .filter(col("n_ab") >= 5)

@@ -6,25 +6,17 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.37 — round-16 batch: connected components, interval
-  * concurrency, volatility bands, RSI, weekly growth accounting,
-  * discrete percentiles, and neighborhood similarity.
+/** SURVEY.md §2.37 — round-16 batch: interval concurrency,
+  * volatility bands, RSI, weekly growth accounting, and discrete
+  * percentiles.
   *
-  * Scale shapes: connected components runs 6 synchronized min-label
-  * rounds over the bounded co-purchase edge list (pagerank's
-  * localCheckpoint discipline — each round broadcasts the node-sized
-  * label table into the edge scan and pays ONE node-keyed exchange,
-  * never an unbounded lineage);
-  * concurrency is a sweep-line over ±1 boundary events (per-type
+  * Scale shapes: concurrency is a sweep-line over ±1 boundary events (per-type
   * running sum; at cluster scale the same plan range-partitions time
   * and carries per-range offsets — a two-pass distributed prefix
   * sum); the band/RSI windows run over the horizon-bounded daily
-  * series; lifecycle is (user, week) dedup + two user-keyed joins;
-  * common-neighbors intersects the triangle core's sorted adjacency
-  * lists per edge (the wedge self-join alternative measured 10×
-  * slower at sf0.1).
+  * series; lifecycle is (user, week) dedup + two user-keyed joins.
   *
-  * Determinism: all label updates are exact-integer mins; sweep-line
+  * Determinism: sweep-line
   * running sums use the default RANGE frame so tied boundaries share
   * their group-end value (peak and argmin-time are then
   * order-independent); band/RSI statistics accumulate in exact
@@ -34,155 +26,6 @@ import graft.util.Tables._
   * values by exact rank, so no interpolation can drift.
   */
 object Composite20 {
-
-  // ---- graph_connected_components ----------------------------------
-  // 6 synchronized min-label-propagation rounds over the co-purchase
-  // graph (the HashMin algorithm of Rastogi 2013): lbl₀(v)=v,
-  // lblₖ(v)=min(lblₖ₋₁(v), min over in-neighbors). The edge list is
-  // directed-symmetric, so in- and out-neighborhoods coincide.
-  // Surfaces the component-label histogram after round 6 — identical
-  // to the oracle's 6 unrolled CTE rounds whether or not the graph
-  // has converged (fixed-iteration semantics, pagerank discipline).
-  private def connectedComponents(s: SparkSession, dir: String): DataFrame = {
-    // r19: self-loops are appended to the checkpointed edge table, so
-    // a round's neighbourhood-min over CLOSED neighbourhoods is ONE
-    // join + one map-side-combining aggregate — the second per-round
-    // broadcast join (re-attaching the node's own label) is gone, and
-    // with it one broadcast-build job per round (guide §2.4; the
-    // LlmOps4 CC self-loop discipline). least(l, min-over-nbrs) ==
-    // min-over-closed-nbhd, so labels are value-identical per round.
-    val base = Composite4.coPurchaseEdges(s, dir)
-    val edges = base.unionAll(
-        base.select(col("src")).distinct()
-          .select(col("src"), col("src").as("dst")))
-      .localCheckpoint()
-    // Round 1 specialized: l0 is the identity labelling, so the
-    // neighbourhood-min of labels is just min(dst) — ONE map-side-
-    // combining aggregate replaces that round's two broadcast joins.
-    // (Symmetric edge list ⇒ every node appears as src, so this also
-    // covers the l0 node set.) Value-identical to the oracle's l1.
-    var lbl = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("m"))
-      .select(col("src").as("node"), least(col("src"), col("m")).as("l"))
-      .persist()
-    // Size-gate the loop's hints ONCE on the round-invariant node
-    // count (the count materializes round 1's cache, which round 2
-    // was about to do anyway): under the gate the label table — node-
-    // sized, 150× smaller than the edge list — is hinted so the edges
-    // never shuffle and the only exchange per round is the node-keyed
-    // min; over it the joins run un-hinted and AQE/planner picks the
-    // node-keyed shuffle. A bare broadcast() hint would instead hard-
-    // fail past the 8 GB broadcast cap (graft.util.Hints).
-    val hint = graft.util.Hints.maybeBroadcast(lbl.count())
-    val rounds = scala.collection.mutable.ListBuffer(lbl)
-    for (_ <- 2 to 6) {
-      //
-      // persist (not eager localCheckpoint): each round's broadcast
-      // collect is an action that materializes the PREVIOUS round's
-      // cache, so rounds still execute exactly once, but without the
-      // per-round standalone checkpoint job (6 jobs saved — measured
-      // ~1 s at sf0.1). An IN-LOOP unpersist would drop caches before
-      // anything has executed (no action runs until the end) and
-      // cascade a 2^6 lineage re-expansion — instead the final label
-      // table is eagerly localCheckpoint'd below and every round
-      // cache is dropped there, so a library caller invoking this op
-      // repeatedly accumulates nothing (ADVICE r8).
-      // Self-loops put the node's own label into the aggregate, so
-      // the closed-neighbourhood min IS the next labelling — no
-      // re-attach join (r19).
-      lbl = edges
-        .join(hint(lbl.select(col("node").as("dst"), col("l").as("pl"))),
-          "dst")
-        .groupBy(col("src").as("node"))
-        .agg(min(col("pl")).as("l"))
-        .persist()
-      rounds += lbl
-    }
-    // ONE eager checkpoint materializes the whole 6-round chain (each
-    // round's broadcast collect fills the previous round's cache, so
-    // every round still executes exactly once), after which all six
-    // node-sized round caches are unreachable and dropped — O(1)
-    // retained storage per invocation instead of O(rounds).
-    val finalLbl = lbl.localCheckpoint()
-    rounds.foreach(_.unpersist(false))
-    finalLbl.groupBy(col("l").as("component"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("component")
-  }
-
-  // ---- graph_connected_components_conv -----------------------------
-  // Convergence-DETECTED components (VERDICT r7 "next tier" item 3):
-  // the fixed-6-round row above pins the oracle's unrolled semantics;
-  // this row runs [[LlmOps4.connectedComponents]]'s min-label loop to
-  // its fixpoint (per-round 1-row label-sum scalar, O(diameter)
-  // rounds, throws rather than returning unconverged labels) and
-  // surfaces the same component histogram. Oracle: 10 unrolled
-  // HashMin rounds — strictly more than this graph's diameter, so the
-  // SQL side is at ITS fixpoint too and the two definitions coincide
-  // exactly (any divergence = the loop stopped early = red row).
-  // Half edges suffice: connectedComponents symmetrizes internally
-  // (both directions + self-loops), so the pre-symmetrized list would
-  // just be unioned into itself.
-  private def connectedComponentsConv(s: SparkSession, dir: String): DataFrame =
-    // (r19 A/B: skipping CC's internal edge checkpoint for the
-    // parquet-view input measured slower — the und union re-scans the
-    // view per branch and per round-1 subtree — so the default stays.)
-    LlmOps4.connectedComponents(
-        Composite4.coPurchaseHalfEdges(s, dir).toDF("a", "b"), maxIter = 30)
-      .groupBy(col("cluster_id").as("component"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("component")
-
-  // Rounds come from [[LlmOps4.hashMinJumpRounds]]: HashMin + pointer
-  // jump per round, so 10 rounds resolve depth ~2^10 — the same
-  // exponential budget as the Spark loop's per-round l(l(v)) jump
-  // (ADVICE r10: a plain 10-round unroll covered only depth 10 while
-  // maxIter=30 jumped Spark rounds cover ~2^29, so a deep corpus
-  // would red the sentinel against a CORRECT Spark result).
-  private def connectedComponentsConvOracle: String = {
-    val rounds = LlmOps4.hashMinJumpRounds(10)
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey <> b.l_partkey),
-       |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS l FROM e),
-       |$rounds
-       |SELECT l AS component, CAST(count(*) AS BIGINT) AS n_nodes
-       |FROM l10 GROUP BY 1
-       |UNION ALL
-       |SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
-       |WHERE (SELECT sum(CAST(l AS HUGEINT)) FROM l9)
-       |   <> (SELECT sum(CAST(l AS HUGEINT)) FROM l10)
-       |ORDER BY 1""".stripMargin
-  }
-  // The sentinel row asserts the "depth < 2^10" assumption IN the
-  // oracle: labels only decrease, so equal l9/l10 label sums == the
-  // SQL side reached ITS fixpoint and coincides with the Spark loop's
-  // convergence-detected labels. On a deeper corpus the extra
-  // (-1, -1) row turns the compare red pointing at non-convergence
-  // instead of a silent histogram drift (ADVICE r8). The Spark side
-  // needs no twin: it THROWS when unconverged at maxIter.
-
-  private def connectedComponentsOracle: String = {
-    val rounds = (1 to 6).map { i =>
-      s"""l$i AS (
-         |  SELECT p.node, least(p.l, coalesce(m.nl, p.l)) AS l
-         |  FROM l${i - 1} p LEFT JOIN (
-         |    SELECT e.src AS node, min(q.l) AS nl
-         |    FROM e JOIN l${i - 1} q ON e.dst = q.node
-         |    GROUP BY e.src) m ON p.node = m.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |e AS (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey <> b.l_partkey),
-       |l0 AS (SELECT DISTINCT src AS node, src AS l FROM e),
-       |$rounds
-       |SELECT l AS component, CAST(count(*) AS BIGINT) AS n_nodes
-       |FROM l6 GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ---- evt_concurrency_peak ----------------------------------------
   // Sweep-line peak concurrency: each event holds a [ts, ts+30min)
@@ -470,116 +313,21 @@ object Composite20 {
       |    AS VARCHAR) AS DOUBLE) AS p75
       |FROM r GROUP BY prio ORDER BY prio""".stripMargin
 
-  // ---- graph_common_neighbors --------------------------------------
-  // Link-strength Jaccard: for each existing edge (a,b), a<b, the
-  // Jaccard of the endpoints' neighborhoods |N(a)∩N(b)| /
-  // (|N(a)|+|N(b)|−|N(a)∩N(b)|); top-10 by (jaccard, a, b). Uses the
-  // triangle core's adjacency-list discipline — sorted neighbor
-  // lists built with ONE node-keyed aggregate, then each unordered
-  // edge intersects its endpoints' lists map-side — NOT the naive
-  // wedge self-join, whose Σdeg² blow-up measured ~10× slower at
-  // sf0.1. Adjacency rides a SIZE-GATED broadcast here (gated on the
-  // edge count — list rows are edge-wide, not node-wide); past the
-  // cap the same two joins run un-hinted and shuffle on the node
-  // key. Every node/edge-sized
-  // intermediate (e, deg, o, adj) is localCheckpoint()'d because
-  // each has 2-4 consumers downstream — without the checkpoints the
-  // whole subtree re-executes per consumer (measured 17 s; with
-  // them ~4 s at sf0.1).
-  private def commonNeighbors(s: SparkSession, dir: String): DataFrame = {
-    // |N(a)∩N(b)| for an EDGE (a,b) is the number of triangles
-    // through that edge, so the oriented triangle core (degree-
-    // ordered adjacency, ~¼ the intersect work of full lists) finds
-    // every triangle once and each triangle credits its THREE edges
-    // — the localClustering corner-explode shape, keyed by edge
-    // instead of node. Full-adjacency intersection per edge measured
-    // 2-4× slower; the naive wedge self-join 10× slower.
-    // r18: e/deg/o/adj come from the shared DiskMemo parquet views
-    // (coPurchaseHalfEdges + TriCore, built once per JVM, timed as
-    // memo rows) instead of per-invocation rebuild + 4 checkpoints;
-    // parquet statistics drive broadcast-vs-shuffle, no manual gates.
-    val e = Composite4.coPurchaseHalfEdges(s, dir)
-    val deg = TriCore.sharedDeg(s, dir)
-      .withColumnRenamed("deg", "d")
-    val o = TriCore.sharedOriented(s, dir)
-    val adj = TriCore.sharedAdj(s, dir)
-    val cn = o
-      .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
-      .join(adj.select(col("u").as("v"), col("nbrs").as("nv")),
-        Seq("v"), "left")
-      .select(col("u"), col("v"), explode(graft.functions.SortedIntersect(col("nu"),
-        coalesce(col("nv"), expr("CAST(array() AS ARRAY<BIGINT>)"))))
-        .as("w"))
-      // All three pair-credits of a triangle enumerated at oriented
-      // edge (u,v) with closer w are themselves ORIENTED edges —
-      // (u,v), (u,w), (v,w) all ∈ o — so the aggregate can key on the
-      // oriented pair directly and the least/greatest normalization
-      // (6 conditionals per corner on the 3·|triangles| hot path)
-      // moves AFTER the aggregate, where it runs once per edge.
-      .select(explode(array(
-        struct(col("u").as("p"), col("v").as("q")),
-        struct(col("u").as("p"), col("w").as("q")),
-        struct(col("v").as("p"), col("w").as("q")))).as("t"))
-      .groupBy(col("t.p").as("p"), col("t.q").as("q"))
-      .agg(count(lit(1)).as("cn"))
-      .select(least(col("p"), col("q")).as("a"),
-        greatest(col("p"), col("q")).as("b"), col("cn"))
-    e.select(col("src").as("a"), col("dst").as("b"))
-      .join(cn, Seq("a", "b"), "left")
-      .join(deg.select(col("n").as("a"), col("d").as("deg_a")), "a")
-      .join(deg.select(col("n").as("b"), col("d").as("deg_b")), "b")
-      .select(col("a"), col("b"),
-        coalesce(col("cn"), lit(0L)).as("cn"), col("deg_a"), col("deg_b"))
-      .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"),
-        (col("cn").cast("double") /
-          (col("deg_a") + col("deg_b") - col("cn")).cast("double"))
-          .as("jaccard"))
-      .orderBy(desc("jaccard"), col("a"), col("b"))
-      .limit(10)
-  }
-
-  private val commonNeighborsOracle =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |e AS (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |adj AS (
-      |  SELECT src AS n, list_sort(list(dst)) AS nbrs FROM e GROUP BY 1),
-      |p AS (SELECT src AS a, dst AS b FROM e WHERE src < dst),
-      |j AS (
-      |  SELECT p.a, p.b,
-      |    CAST(len(list_intersect(na.nbrs, nb.nbrs)) AS BIGINT) AS cn,
-      |    CAST(len(na.nbrs) AS BIGINT) AS deg_a,
-      |    CAST(len(nb.nbrs) AS BIGINT) AS deg_b
-      |  FROM p JOIN adj na ON na.n = p.a JOIN adj nb ON nb.n = p.b)
-      |SELECT a, b, cn, deg_a, deg_b,
-      |  CAST(cn AS DOUBLE) /
-      |    CAST(deg_a + deg_b - cn AS DOUBLE) AS jaccard
-      |FROM j
-      |ORDER BY jaccard DESC, a, b LIMIT 10""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_connected_components" -> (connectedComponents _),
-    "graph_connected_components_conv" -> (connectedComponentsConv _),
     "evt_concurrency_peak" -> (concurrencyPeak _),
     "win_bollinger" -> (bollinger _),
     "win_rsi" -> (rsi _),
     "evt_lifecycle_state" -> (lifecycleState _),
-    "agg_percentile_disc" -> (percentileDisc _),
-    "graph_common_neighbors" -> (commonNeighbors _)
+    "agg_percentile_disc" -> (percentileDisc _)
   )
 
   val oracle: Map[String, String] = Map(
-    "graph_connected_components" -> connectedComponentsOracle,
-    "graph_connected_components_conv" -> connectedComponentsConvOracle,
     "evt_concurrency_peak" -> concurrencyPeakOracle,
     "win_bollinger" -> bollingerOracle,
     "win_rsi" -> rsiOracle,
     "evt_lifecycle_state" -> lifecycleStateOracle,
-    "agg_percentile_disc" -> percentileDiscOracle,
-    "graph_common_neighbors" -> commonNeighborsOracle
+    "agg_percentile_disc" -> percentileDiscOracle
   )
 }

@@ -1,151 +1,31 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.47 (round-21 batch) — four capability gaps a real
-  * user hits next: graph DISTANCES (every existing graph row is
-  * structural — components, degrees, triangles — none answers "how
-  * far"), MULTIPLE regression (agg_regression is single-feature), a
+/** SURVEY.md §2.47 (round-21 batch) — three capability gaps a real
+  * user hits next: MULTIPLE regression (agg_regression is
+  * single-feature), a
   * sketch-calibration audit (the MinHash estimator's error profile
   * measured against exact Jaccard on the same corpus — the number a
   * dedup-threshold decision actually rests on), and a k-anonymity
   * audit (the quasi-identifier group-size distribution the PII
   * masking family acts on).
   *
-  * Scale shapes: shortest-path is K synchronized Bellman-Ford rounds
-  * over the bounded co-purchase edge list (the connected_components
-  * loop's broadcast discipline — node-sized distance table into the
-  * edge scan, one node-keyed min per round); OLS is one map-side-
+  * Scale shapes: OLS is one map-side-
   * combining aggregate of exact-decimal cross sums; the calibration
   * audit runs on a deterministic md5-threshold SAMPLE (the
   * llm_sample_hash pattern) so its pair space is budget-bounded at
   * any corpus size — estimator audits sample by design.
   *
-  * Determinism: distances and calibration counts are exact integers;
+  * Determinism: calibration counts are exact integers;
   * OLS follows Composite3's exact-sum discipline (decimal sums,
   * VARCHAR-routed oracle casts per SURVEY §1.5 r7, one shared double
   * assembly, floor-form 6-dp rounding per §1.5 tri-SF rules).
   */
 object Composite31 {
-
-  // ---- graph_shortest_path ------------------------------------------
-  // Multi-source hop-bounded BFS (K=3 synchronized Bellman-Ford
-  // rounds) over the symmetric co-purchase graph: seeds are parts
-  // with partkey % 100 == 0 at distance 0; round k relaxes
-  // d(v) = min(d(v), 1 + min over neighbors' d). Surfaces the
-  // distance histogram with unreached nodes bucketed at -1 — the
-  // "blast radius" primitive (recall/contamination spread, influence
-  // frontiers) the component rows can't answer. Fixed-K semantics,
-  // connected_components discipline: the oracle unrolls the same K
-  // rounds, converged or not.
-  //
-  // least(coalesce(d, nd), coalesce(nd, d)) instead of a bare
-  // least(d, nd): engines disagree on least's NULL handling, but the
-  // coalesce pair only feeds least two NULLs when BOTH inputs are
-  // NULL (→ NULL in both engines) and two non-NULLs otherwise —
-  // engine-agnostic by construction.
-  private def shortestPath(s: SparkSession, dir: String): DataFrame =
-    shortestPathOn(Composite4.coPurchaseEdges(s, dir),
-      n => n % 100 === 0, k = 3)
-
-  /** K Bellman-Ford rounds over a symmetric (src, dst) edge list;
-    * `seed` marks distance-0 nodes. Returns the distance histogram
-    * (unreached = -1). Factored for the planted spec.
-    *
-    * r19 (guide §2.4, the Composite20 self-loop fusion): unreached is
-    * a LARGE SENTINEL distance instead of NULL, and zero-cost
-    * self-loops join the (unit-cost) edge table, so each round's
-    * relaxation min(d(v), min over nbrs d+1) is ONE closed-
-    * neighbourhood min — one join + one map-side-combining aggregate,
-    * no per-round left-join to re-attach unreached nodes. Sentinel
-    * algebra: every node's self-loop contributes exactly d(v), an
-    * unreached neighbour contributes ≥ SENTINEL+1 > SENTINEL, so
-    * unreached stays exactly SENTINEL and reached minima (≤ k, far
-    * below SENTINEL) are untouched — the surfaced histogram is
-    * value-identical to the NULL form (PropertiesSpec's brute-force
-    * law gates it). */
-  private[graft] def shortestPathOn(edges: DataFrame, seed: Column => Column,
-      k: Int): DataFrame = {
-    // Symmetric edge list ⇒ every node appears as src. Self-loops at
-    // weight 0 ride the ONE edge checkpoint (unit edges carry w = 1).
-    val e = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .unionAll(edges.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-      .localCheckpoint()
-    var dist = e.filter(col("w") === 0L)
-      .select(col("src").as("node"),
-        when(seed(col("src")), lit(0L)).otherwise(lit(Unreached)).as("d"))
-      .persist()
-    // The rounds buffer keeps every round's persisted distance table
-    // alive until the final localCheckpoint — correct (each round's
-    // broadcast collect materializes the previous cache) but the
-    // storage footprint is K-PROPORTIONAL (K+1 node-sized tables).
-    // Fine at K = 3; a K >> 3 caller should unpersist round r-2
-    // after round r materializes instead (VERDICT r11 item 4 nit).
-    // Size-gate the loop's hints once on the round-invariant node
-    // count (a cached-block scan). Under the gate the node-sized
-    // distance table broadcasts into the edge scan —
-    // connected_components' plan shape, one node-keyed min exchange
-    // per round; over it the joins run un-hinted and plan node-keyed
-    // shuffles (a bare hint would hard-fail past the 8 GB broadcast
-    // cap instead — graft.util.Hints).
-    val hint = graft.util.Hints.maybeBroadcast(dist.count())
-    val rounds = scala.collection.mutable.ListBuffer(dist)
-    for (_ <- 1 to k) {
-      // persist-not-checkpoint per round for the same reason as
-      // connectedComponents: each round's broadcast collect
-      // materializes the previous cache.
-      dist = e
-        .join(hint(dist.select(col("node").as("dst"), col("d").as("pd"))),
-          "dst")
-        .groupBy(col("src").as("node"))
-        .agg(min(col("pd") + col("w")).as("d"))
-        .persist()
-      rounds += dist
-    }
-    val finalDist = dist.localCheckpoint()
-    rounds.foreach(_.unpersist(false))
-    finalDist.groupBy(
-        when(col("d") >= Unreached, lit(-1L)).otherwise(col("d"))
-          .as("distance"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("distance")
-  }
-
-  /** Unreached-distance sentinel: far above any k-round reachable
-    * distance (k·max-weight), far below overflow when a round adds a
-    * weight on top of it. Requires NON-NEGATIVE weights (all callers:
-    * unit hops or co-purchase multiplicities). */
-  private[graft] val Unreached: Long = Long.MaxValue / 4
-
-  private def shortestPathOracle: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""d$i AS (
-         |  SELECT p.node,
-         |    least(coalesce(p.d, m.nd), coalesce(m.nd, p.d)) AS d
-         |  FROM d${i - 1} p LEFT JOIN (
-         |    SELECT e.src AS node, min(q.d + 1) AS nd
-         |    FROM e JOIN d${i - 1} q ON e.dst = q.node
-         |    WHERE q.d IS NOT NULL
-         |    GROUP BY e.src) m ON p.node = m.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey <> b.l_partkey),
-       |d0 AS MATERIALIZED (
-       |  SELECT src AS node,
-       |    CASE WHEN src % 100 = 0 THEN CAST(0 AS BIGINT) END AS d
-       |  FROM (SELECT DISTINCT src FROM e)),
-       |$rounds
-       |SELECT coalesce(d, CAST(-1 AS BIGINT)) AS distance,
-       |  CAST(count(*) AS BIGINT) AS n_nodes
-       |FROM d3 GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ---- agg_ols_multi -------------------------------------------------
   // Two-regressor OLS per return flag: extendedprice on (quantity,
@@ -389,7 +269,6 @@ object Composite31 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_k_anonymity" -> ((s: SparkSession, dir: String) =>
       kAnonymityOn(load(s, dir, "customer"))),
-    "graph_shortest_path" -> (shortestPath _),
     "agg_ols_multi" -> (olsMulti _),
     "llm_minhash_calibration" -> ((s: SparkSession, dir: String) =>
       minhashCalibration(load(s, dir, "documents")))
@@ -397,7 +276,6 @@ object Composite31 {
 
   val oracle: Map[String, String] = Map(
     "dq_k_anonymity" -> kAnonymityOracle,
-    "graph_shortest_path" -> shortestPathOracle,
     "agg_ols_multi" -> Composite3.statsOracle(olsAggs, olsOut),
     "llm_minhash_calibration" -> minhashCalibrationOracle
   )

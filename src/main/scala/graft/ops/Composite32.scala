@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.48 (round-21 batch 2) — weighted order statistics,
-  * count-rate shift testing, and bounded ego networks:
+/** SURVEY.md §2.48 (round-21 batch 2) — weighted order statistics
+  * and count-rate shift testing:
   *
   *  - [[weightedMedian]]: the weighted median (the robust center the
   *    plain median family can't weight) — exact by construction:
@@ -20,20 +20,14 @@ import graft.util.Tables._
   *    exact counts (agg_welch_t tests means of VALUES; this tests
   *    arrival rates — the ops-monitoring primitive).
   *
-  *  - [[egoSize2Hop]]: 1- and 2-hop ego-network sizes for the seed
-  *    set — per-seed reach (the feature-engineering number), where
-  *    graph_shortest_path gives only the global distance histogram.
-  *
   * Scale shapes: weighted median is one window shuffle on the group
   * key + a 3-row aggregate; rate-shift is one map-side-combining
   * conditional aggregate with the 1-row global midpoint broadcast in
-  * (the pagerank `nn` discipline — no driver collect); ego sizes are
-  * two edge joins FILTERED TO THE SEED SET first (seed-bounded work,
-  * the seeds' frontier never rescans the full graph).
+  * (the pagerank `nn` discipline — no driver collect).
   *
   * Determinism: medians are picked data values (exact double compare);
   * rate counts are exact integers with the z/ratio assembled ONCE in
-  * double from identical formula text; ego sizes are exact integers.
+  * double from identical formula text.
   */
 object Composite32 {
 
@@ -155,75 +149,13 @@ object Composite32 {
       |  CASE WHEN c2 = 0 THEN NULL ELSE floor((CAST(c1 AS DOUBLE) / CAST(c2 AS DOUBLE))*1e6 + 0.5)/1e6 END AS rate_ratio
       |FROM c ORDER BY event_type""".stripMargin
 
-  // ---- graph_ego_size_2hop --------------------------------------------
-  // 1- and 2-hop ego-network sizes for the seed set (partkey % 100 ==
-  // 0) over the symmetric co-purchase graph. The frontier expansion
-  // is SEED-BOUNDED: the first join filters edges to seed sources
-  // (predicate pushes to the edge build), the second join expands
-  // only the seeds' 1-hop frontier — the full graph is scanned, never
-  // re-scanned per seed. Sizes exclude the seed itself; exact
-  // integers.
-  private[graft] def egoSize2HopOn(edges: DataFrame,
-      seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0): DataFrame = {
-    // dst =!= src guards the documented "seed excluded" contract for
-    // arbitrary edge lists: a self-loop (s,s) would otherwise count
-    // the seed into ego1 while the 2-hop set filters it out, letting
-    // ego2 < ego1 (ADVICE r11). coPurchaseEdges never emits
-    // self-loops, so the benchmark row and its oracle are unchanged.
-    val n1 = edges.filter(seed(col("src")) && col("dst") =!= col("src"))
-      .select(col("src").as("seed"), col("dst").as("n"))
-      .distinct()
-      .localCheckpoint()
-    val hop1 = n1.groupBy(col("seed")).agg(count(lit(1)).as("ego1_size"))
-    // Frontier × edges: the (seed, frontier-node) list is seed-
-    // bounded — at broadcast scale it pins a broadcast-hash join; on
-    // a bigger frontier it degrades to a dst-keyed shuffle unchanged.
-    val reach2 = n1.select(col("seed"), col("n").as("src"))
-      .join(edges, "src")
-      .select(col("seed"), col("dst").as("n"))
-      .union(n1)
-      .filter(col("n") =!= col("seed"))
-      .distinct()
-      .groupBy(col("seed")).agg(count(lit(1)).as("ego2_size"))
-    hop1.join(reach2, "seed").orderBy("seed")
-  }
-
-  private def egoSize2Hop(s: SparkSession, dir: String): DataFrame =
-    // The checkpoint stays even on the parquet-backed view (r18 A/B:
-    // dropping it measured ~+0.5 s — the frontier join reads the
-    // blocks twice and in-memory blocks beat re-scanning the union).
-    egoSize2HopOn(Composite4.coPurchaseEdges(s, dir).localCheckpoint())
-
-  private val egoSize2HopOracle =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |e AS MATERIALIZED (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |n1 AS MATERIALIZED (
-      |  SELECT DISTINCT src AS seed, dst AS n FROM e WHERE src % 100 = 0),
-      |h1 AS (SELECT seed, CAST(count(*) AS BIGINT) AS ego1_size
-      |       FROM n1 GROUP BY seed),
-      |r2 AS (
-      |  SELECT seed, CAST(count(*) AS BIGINT) AS ego2_size FROM (
-      |    SELECT DISTINCT seed, n FROM (
-      |      SELECT n1.seed, e.dst AS n FROM n1 JOIN e ON n1.n = e.src
-      |      UNION ALL SELECT seed, n FROM n1))
-      |  WHERE n <> seed GROUP BY seed)
-      |SELECT h1.seed, h1.ego1_size, r2.ego2_size
-      |FROM h1 JOIN r2 ON h1.seed = r2.seed
-      |ORDER BY h1.seed""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_weighted_median" -> (weightedMedian _),
-    "evt_poisson_rate_shift" -> (poissonRateShift _),
-    "graph_ego_size_2hop" -> (egoSize2Hop _)
+    "evt_poisson_rate_shift" -> (poissonRateShift _)
   )
 
   val oracle: Map[String, String] = Map(
     "agg_weighted_median" -> weightedMedianOracle,
-    "evt_poisson_rate_shift" -> poissonRateShiftOracle,
-    "graph_ego_size_2hop" -> egoSize2HopOracle
+    "evt_poisson_rate_shift" -> poissonRateShiftOracle
   )
 }

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.50 (round-22 batch 2) — resampled uncertainty and
-  * community-quality evaluation:
+/** SURVEY.md §2.50 (round-22 batch 2) — resampled uncertainty:
   *
   *  - [[poissonBootstrap]]: deterministic Poisson(1) bootstrap of the
   *    mean — the large-scale resampling scheme (each row enters
@@ -16,23 +15,14 @@ import graft.util.Tables._
   *    thresholded at the exact 256-scaled Poisson(1) CDF, so both
   *    engines draw identical "randomness".
   *
-  *  - [[modularity]]: modularity decomposition of a community
-  *    assignment over the co-purchase graph — the evaluation number
-  *    behind every community-detection decision (graph_label_prop
-  *    PRODUCES communities; nothing scored one until now). Q's
-  *    per-community contributions e_c/m − (a_c/2m)² from exact
-  *    edge/degree counts.
-  *
   * Scale shapes: the bootstrap's 32× row expansion is map-local
   * (Generate feeds the partial aggregate inside one stage — the
-  * shuffle carries only 32 partials per map task); modularity is two
-  * node/edge-keyed aggregates plus a 1-row edge-total broadcast (the
-  * pagerank `nn` discipline).
+  * shuffle carries only 32 partials per map task).
   *
   * Determinism: bootstrap weights are exact integers (weighted sums
-  * ride the cents discipline); modularity counts are exact; every
-  * surfaced ratio assembles once in double from identical formula
-  * text with floor-form 6-dp rounding (§1.5).
+  * ride the cents discipline); every surfaced ratio assembles once
+  * in double from identical formula text with floor-form 6-dp
+  * rounding (§1.5).
   */
 object Composite34 {
 
@@ -91,80 +81,11 @@ object Composite34 {
        |  floor((CAST(sc AS DOUBLE) / 100 / n_drawn)*1e6 + 0.5)/1e6 AS mean_price
        |FROM a ORDER BY b""".stripMargin
 
-  // ---- graph_modularity ------------------------------------------------
-  // Modularity decomposition of the deterministic community
-  // assignment c(n) = n % 50 over the co-purchase graph: per
-  // community, node count, within-community edge count e_c, degree
-  // sum a_c, and the Q contribution e_c/m − (a_c/2m)². Σ contrib = Q
-  // — the number that scores a partition (label_prop produces one;
-  // this evaluates one). Half edges count each undirected edge once;
-  // m is the 1-row undirected edge total broadcast in.
-  private val Communities = 50
-
-  private[graft] def modularityOn(half: DataFrame): DataFrame = {
-    val m = half.agg(count(lit(1)).as("m"))
-    val deg = half.select(col("src").as("n"))
-      .unionAll(half.select(col("dst").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("dg"))
-    val degC = deg.groupBy((col("n") % Communities).as("community"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("dg")).as("degree_sum"))
-    val within = half
-      .filter(col("src") % Communities === col("dst") % Communities)
-      .groupBy((col("src") % Communities).as("community"))
-      .agg(count(lit(1)).as("we"))
-    degC.join(within, Seq("community"), "left")
-      .select(col("community"), col("n_nodes"),
-        coalesce(col("we"), lit(0L)).as("within_edges"), col("degree_sum"))
-      .crossJoin(broadcast(m))
-      .selectExpr("community", "n_nodes", "within_edges", "degree_sum",
-        """floor((CAST(within_edges AS DOUBLE)/m
-          | - (CAST(degree_sum AS DOUBLE)/(2*m))
-          |   *(CAST(degree_sum AS DOUBLE)/(2*m)))*1e6 + 0.5)/1e6
-          | AS q_contrib""".stripMargin)
-      .orderBy("community")
-  }
-
-  private def modularity(s: SparkSession, dir: String): DataFrame =
-    modularityOn(Composite4.coPurchaseHalfEdges(s, dir).localCheckpoint())
-
-  private val modularityOracle =
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey < b.l_partkey),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-       |deg AS (
-       |  SELECT n, CAST(count(*) AS BIGINT) AS dg FROM (
-       |    SELECT src AS n FROM e UNION ALL SELECT dst FROM e)
-       |  GROUP BY n),
-       |degc AS (
-       |  SELECT n % $Communities AS community,
-       |    CAST(count(*) AS BIGINT) AS n_nodes,
-       |    CAST(sum(dg) AS BIGINT) AS degree_sum
-       |  FROM deg GROUP BY 1),
-       |wi AS (
-       |  SELECT src % $Communities AS community,
-       |    CAST(count(*) AS BIGINT) AS we
-       |  FROM e WHERE src % $Communities = dst % $Communities GROUP BY 1),
-       |j AS (
-       |  SELECT community, n_nodes,
-       |    coalesce(we, CAST(0 AS BIGINT)) AS within_edges, degree_sum
-       |  FROM degc LEFT JOIN wi USING (community))
-       |SELECT community, n_nodes, within_edges, degree_sum,
-       |  floor((CAST(within_edges AS DOUBLE)/m
-       | - (CAST(degree_sum AS DOUBLE)/(2*m))
-       |   *(CAST(degree_sum AS DOUBLE)/(2*m)))*1e6 + 0.5)/1e6
-       | AS q_contrib
-       |FROM j CROSS JOIN m ORDER BY community""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_poisson_bootstrap" -> (poissonBootstrap _),
-    "graph_modularity" -> (modularity _)
+    "agg_poisson_bootstrap" -> (poissonBootstrap _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_poisson_bootstrap" -> poissonBootstrapOracle,
-    "graph_modularity" -> modularityOracle
+    "agg_poisson_bootstrap" -> poissonBootstrapOracle
   )
 }

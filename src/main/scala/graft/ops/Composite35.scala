@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.51 (round-22 batch 3) — robust outlier auditing and
-  * community boundary quality:
+/** SURVEY.md §2.51 (round-22 batch 3) — robust outlier auditing:
   *
   *  - [[outlierFences]]: Tukey-fence outlier audit per return flag —
   *    quartiles as PICKED values, fences at ±1.5·IQR, and the
@@ -15,23 +14,15 @@ import graft.util.Tables._
   *    screens (evt_anomaly_iqr screens event VALUES; this audits the
   *    money column of the fact table, the DQ question).
   *
-  *  - [[conductance]]: per-community conductance cut_c / min(vol_c,
-  *    2m − vol_c) over the co-purchase graph — the BOUNDARY quality
-  *    number (graph_modularity scores internal density; conductance
-  *    scores how leaky the cut is — both sides of the community-
-  *    evaluation coin).
-  *
   * Scale shapes: the fence quartiles follow the agg_weighted_median
   * rule — cumulative windows read the (flag, cents) COUNT aggregate,
   * never the raw fact table, and the 3-row fence table broadcasts
-  * back into the counting pass over the same aggregate; conductance
-  * is two keyed aggregates + the 1-row edge total broadcast.
+  * back into the counting pass over the same aggregate.
   *
   * Determinism: every comparison is exact-integer (quartiles are
   * picked values; fence tests multiply through by 2 so 1.5·IQR never
   * leaves the integers); surfaced prices divide exact cents by 100
-  * once, conductance assembles once in double, both floor-6-dp
-  * (§1.5).
+  * once, floor-6-dp (§1.5).
   */
 object Composite35 {
 
@@ -113,80 +104,11 @@ object Composite35 {
       |FROM g JOIN f USING (l_returnflag)
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // ---- graph_conductance -----------------------------------------------
-  // Per community c(n) = n % 50: volume (degree sum), cut size
-  // (edges with exactly one endpoint inside — each cut edge charges
-  // BOTH its communities), and conductance cut / min(vol, 2m − vol)
-  // (NULL if the denominator degenerates to 0 — only possible when
-  // one community swallows the whole graph). graph_modularity scores
-  // density; this scores the boundary.
-  private val Communities = 50
-
-  private[graft] def conductanceOn(half: DataFrame): DataFrame = {
-    val m = half.agg(count(lit(1)).as("m"))
-    val vol = half.select(col("src").as("n"))
-      .unionAll(half.select(col("dst").as("n")))
-      .groupBy((col("n") % Communities).as("community"))
-      .agg(count(lit(1)).as("volume"))
-    val cut = half
-      .filter(col("src") % Communities =!= col("dst") % Communities)
-      .select(explode(array(col("src") % Communities,
-        col("dst") % Communities)).as("community"))
-      .groupBy(col("community"))
-      .agg(count(lit(1)).as("cut"))
-    vol.join(cut, Seq("community"), "left")
-      .select(col("community"), col("volume"),
-        coalesce(col("cut"), lit(0L)).as("cut_edges"))
-      .crossJoin(broadcast(m))
-      .selectExpr("community", "volume", "cut_edges",
-        """floor((CAST(cut_edges AS DOUBLE)
-          | / nullif(CASE WHEN volume <= 2*m - volume THEN volume
-          |     ELSE 2*m - volume END, 0))*1e6 + 0.5)/1e6
-          | AS conductance""".stripMargin)
-      .orderBy("community")
-  }
-
-  private def conductance(s: SparkSession, dir: String): DataFrame =
-    conductanceOn(Composite4.coPurchaseHalfEdges(s, dir).localCheckpoint())
-
-  private val conductanceOracle =
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey < b.l_partkey),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-       |vol AS (
-       |  SELECT n % $Communities AS community,
-       |    CAST(count(*) AS BIGINT) AS volume
-       |  FROM (SELECT src AS n FROM e UNION ALL SELECT dst FROM e)
-       |  GROUP BY 1),
-       |cut AS (
-       |  SELECT community, CAST(count(*) AS BIGINT) AS cut FROM (
-       |    SELECT src % $Communities AS community FROM e
-       |    WHERE src % $Communities <> dst % $Communities
-       |    UNION ALL
-       |    SELECT dst % $Communities FROM e
-       |    WHERE src % $Communities <> dst % $Communities)
-       |  GROUP BY 1),
-       |j AS (
-       |  SELECT community, volume,
-       |    coalesce(cut, CAST(0 AS BIGINT)) AS cut_edges
-       |  FROM vol LEFT JOIN cut USING (community))
-       |SELECT community, volume, cut_edges,
-       |  floor((CAST(cut_edges AS DOUBLE)
-       | / nullif(CASE WHEN volume <= 2*m - volume THEN volume
-       |     ELSE 2*m - volume END, 0))*1e6 + 0.5)/1e6
-       | AS conductance
-       |FROM j CROSS JOIN m ORDER BY community""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_outlier_fences" -> (outlierFences _),
-    "graph_conductance" -> (conductance _)
+    "dq_outlier_fences" -> (outlierFences _)
   )
 
   val oracle: Map[String, String] = Map(
-    "dq_outlier_fences" -> outlierFencesOracle,
-    "graph_conductance" -> conductanceOracle
+    "dq_outlier_fences" -> outlierFencesOracle
   )
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -12,14 +11,13 @@ import graft.util.Tables._
   * LISTAGG), error-safe `try_*` arithmetic, Spark 4 collations, the
   * optimizer's automatic runtime bloom-filter join pruning, the
   * Observation metrics API (free QC stats on a pass that already
-  * happens), explicit mid-plan reuse via caching, and a distributed
-  * iterative graph computation (PageRank over the co-purchase graph).
+  * happens), explicit mid-plan reuse via caching, and the per-order
+  * part sets the co-purchase graph is built from
+  * ([[sharedOrderPsets]]).
   *
   * Scale notes are per-op below; the common theme is that every op
-  * is either a pure projection, a single hash-aggregate, or (for
-  * PageRank) a fixed number of key-partitioned shuffle joins with
-  * lineage truncation — all shapes that survive a 1000-executor
-  * 100 TB run unchanged.
+  * is either a pure projection or a single hash-aggregate — shapes
+  * that survive a 1000-executor 100 TB run unchanged.
   */
 object Composite4 {
 
@@ -286,98 +284,6 @@ object Composite4 {
       |FROM per_cust WHERE spend <= 300000
       |ORDER BY tier""".stripMargin
 
-  // ---- graph_pagerank ----------------------------------------------
-  // PageRank (5 iterations, d=0.85) over the part co-purchase graph:
-  // parts are linked when they appear in the same order. The edge
-  // build is a self-join co-partitioned on l_orderkey, materialized
-  // ONCE (localCheckpoint) with its out-degree column attached. The
-  // rank table is |parts|-sized — vocabulary-small next to the edge
-  // table — so each iteration broadcasts it into a map-side-combined
-  // contribution aggregate: NO per-iteration shuffle of the edges,
-  // and the 5 iterations chain lazily into one job. The hint is
-  // size-gated on the node count (graft.util.Hints): past the cap —
-  // or with `broadcastRanks = false` — the same algebra re-plans as
-  // co-partitioned shuffle joins (the llm_dedup_cluster shape), no
-  // other change; Round7Spec asserts both plans. The co-purchase graph
-  // is symmetric, so there are no dangling nodes and rank mass is
-  // conserved (asserted in Round7Spec).
-  //
-  // Float determinism: per-iteration ranks are rounded to 12 dp —
-  // each engine's sum-order drift is ~1e-15 while rank values are
-  // ~1e-3, so both engines round to the same grid point every
-  // iteration and stay in exact lockstep.
-  /** Generic PageRank core over an edge list with columns (src, dst)
-    * — the [[graft.Graft.pageRank]] facade surface. See the scale
-    * notes on the `graph_pagerank` query above. The node set is
-    * src ∪ dst, so sink nodes (dst-only) receive rank; their mass is
-    * NOT redistributed (the standard un-patched dangling behavior —
-    * on a symmetric graph there are no sinks and mass is conserved
-    * exactly). */
-  private[graft] def pageRankOn(edgeList: DataFrame, iterations: Int,
-      damping: Double, broadcastRanks: Boolean = true): DataFrame = {
-    // ONE materialization of the (possibly expensive) upstream edge
-    // build: out-degree rides along via a window over src — the old
-    // groupBy+join shape re-scanned the edge build for the probe side,
-    // and a separate nodes checkpoint over `edgeList` re-ran the whole
-    // build a second time (the r4 bench's 12.5 s was mostly that).
-    val edgesD = edgeList
-      .withColumn("d", count(lit(1)).over(Window.partitionBy("src")))
-      .localCheckpoint()
-    // nodes derive from the checkpointed edges (cheap union+distinct);
-    // the rank formula's |nodes| stays folded into the plan as a
-    // 1-row broadcast (the oracle's nn CTE, same algebra) — the
-    // count() below only feeds the hint gate, never the arithmetic.
-    val nodes = edgesD.select(col("src").as("node"))
-      .union(edgesD.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val nn = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
-    // broadcastRanks = true means "hint IF the node count fits the
-    // broadcast gate" — a bare hint would hard-fail past the 8 GB
-    // broadcast cap rather than re-plan (graft.util.Hints). The gate
-    // count is a cached-block scan over the checkpointed node set.
-    val hint: DataFrame => DataFrame =
-      if (broadcastRanks) graft.util.Hints.maybeBroadcast(nodes.count())
-      else identity
-    var ranks = nodes.crossJoin(nn)
-      .select(col("node"), (lit(1.0) / col("n")).as("r"))
-    for (_ <- 1 to iterations) {
-      val contrib = edgesD.join(hint(ranks), col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r") / col("d")).as("contrib"))
-      ranks = nodes.crossJoin(nn)
-        .join(hint(contrib), col("node") === col("dst"), "left")
-        .select(col("node"),
-          round(lit(1.0 - damping) / col("n") + lit(damping) * coalesce(col("contrib"), lit(0.0)), 12).as("r"))
-    }
-    ranks.orderBy("node")
-  }
-
-  /** Unordered co-purchase pairs (src < dst, each once). Built as ONE
-    * orderkey aggregation + a map-side pair explosion rather than a
-    * sort-merge self-join: the groupBy shuffles the projected fact
-    * once (no per-side sorts), the within-order pair generation is
-    * pure map work over the SORTED part set (so each unordered pair
-    * is emitted exactly once — half the rows the old both-directions
-    * explosion pushed into the global DISTINCT, which is the only
-    * other shuffle). Per-order part sets are bounded (TPC-H orders
-    * have ≤7 lines), so the explosion cannot skew. Triangle-core
-    * consumers (triangle_count, local_clustering, common_neighbors)
-    * use this directly; symmetric-graph consumers go through
-    * [[coPurchaseEdges]].
-    *
-    * r18: the built list is a [[DiskMemo]] parquet materialized view
-    * (the GraphBfs/linkpred discipline, guide §2.4 "remove shuffles
-    * outright"): ~18 graph rows consume this one edge list and until
-    * r17 every invocation re-ran the lineitem scan + groupBy +
-    * pair-explode + distinct (two exchanges each). Now the first
-    * caller in the JVM builds + writes it once and every later caller
-    * is a two-long-column parquet scan. The build is timed as its own
-    * bench row (`memo_copurchase_half`), so the suite total still
-    * carries the true cost exactly once. Content is an exact-integer
-    * SET (src, dst longs, distinct), so a memo read-back and a fresh
-    * build are cell-identical — row order is irrelevant to every
-    * consumer (all aggregate or join).
-    */
   /** Per-order sorted distinct part sets — the BASE view of the
     * co-purchase layer (r18): `agg_basket_lift` consumes it directly
     * and the weighted edge view explodes its pairs, so the lineitem
@@ -389,87 +295,6 @@ object Composite4 {
       load(s, dir, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps")))
-
-  private[graft] def coPurchaseHalfEdges(s: SparkSession, dir: String): DataFrame =
-    DiskMemo.table(s, dir, "copurchase_half")(
-      // r18 layering: the weighted view's groupBy(src, dst) keys ARE
-      // the distinct pairs, so the unweighted list is a projection of
-      // it — one co-purchase aggregation feeds both views (the
-      // independent definition below stays as the test seam).
-      Composite33.coPurchaseWeightedHalf(s, dir)
-        .select(col("src"), col("dst")))
-
-  /** The from-scratch half-edge build — the definitional seam the
-    * equality tests pin the memoized views against. */
-  private[graft] def coPurchaseHalfEdgesBuild(s: SparkSession, dir: String): DataFrame =
-    load(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      // Pair generation as TWO chained Generates (posexplode, then
-      // explode of the tail slice) instead of one explode over a
-      // flatten(transform(transform(...))) HOF tree: higher-order
-      // lambdas are evaluated interpreted (outside whole-stage
-      // codegen), and the HOF shape measured consistently slower in
-      // interleaved A/B at sf0.1. posexplode's 0-based i makes the
-      // 1-based slice start i+2 = "strictly after position i", so
-      // src < dst and each unordered pair is emitted exactly once —
-      // identical output to the HOF form.
-      .select(col("ps"), posexplode(col("ps")))
-      .toDF("ps", "i", "src")
-      .select(col("src"),
-        explode(slice(col("ps"), col("i") + lit(2), size(col("ps"))))
-          .as("dst"))
-      .distinct()
-
-  /** Directed-symmetric co-purchase edge list: [[coPurchaseHalfEdges]]
-    * union its map-side swap. Through r17 the half build was
-    * localCheckpoint'd here so both union branches read materialized
-    * blocks instead of re-running the build per branch (ReuseExchange
-    * does not fire reliably under AQE replanning — the r7 regression:
-    * graph_label_prop 2.45 → 9.81 s). r18: the half list is a DiskMemo
-    * parquet view, so "materialized once" is already true on disk —
-    * the union branches are two cheap 2-column parquet scans and the
-    * extra checkpoint job here would buy nothing (iterative consumers
-    * that read edges per round checkpoint the UNION themselves).
-    * Shared by pagerank, degree_dist, label_prop, kcore,
-    * connected_components, assortativity.
-    */
-  private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val half = coPurchaseHalfEdges(s, dir)
-    half.unionAll(half.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  private def pageRank(s: SparkSession, dir: String): DataFrame =
-    pageRankOn(coPurchaseEdges(s, dir), iterations = 5, damping = 0.85)
-
-  /** Oracle: the same 5 iterations unrolled as chained CTEs (DuckDB
-    * has no iterative DataFrame loop; WITH RECURSIVE cannot re-round
-    * per step). Constants go through CAST(... AS DOUBLE) so DuckDB's
-    * decimal literals do not change the arithmetic type.
-    */
-  private def pageRankOracle: String = {
-    val iters = (1 to 5).map { i =>
-      s"""r$i AS (
-         |  SELECT n2.node,
-         |    round(CAST(0.15 AS DOUBLE) / nn.n + CAST(0.85 AS DOUBLE) * coalesce(c.contrib, CAST(0 AS DOUBLE)), 12) AS r
-         |  FROM nodes n2 CROSS JOIN nn LEFT JOIN (
-         |    SELECT e.dst AS node, sum(p.r / deg.d) AS contrib
-         |    FROM edges e JOIN r${i - 1} p ON e.src = p.node
-         |    JOIN deg ON e.src = deg.src
-         |    GROUP BY e.dst) c ON n2.node = c.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |edges AS (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey <> b.l_partkey),
-       |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |nn AS (SELECT count(*) AS n FROM nodes),
-       |r0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS r FROM nodes CROSS JOIN nn),
-       |$iters
-       |SELECT node, r FROM r5 ORDER BY node""".stripMargin
-  }
 
   // ---- agg_corr_matrix ---------------------------------------------
   // All 6 pairwise Pearson correlations over (quantity, price,
@@ -632,7 +457,6 @@ object Composite4 {
     "join_runtime_bloom" -> (runtimeBloom _),
     "obs_metrics" -> (obsMetrics _),
     "cache_reuse" -> (cacheReuse _),
-    "graph_pagerank" -> (pageRank _),
     "agg_corr_matrix" -> (q(corrMatrixSql) _),
     "join_asof_tolerance" -> (asofTolerance _),
     "sql_join_hint_shuffle" -> (q(hintShuffleSql) _)
@@ -648,7 +472,6 @@ object Composite4 {
     "join_runtime_bloom" -> runtimeBloomOracle,
     "obs_metrics" -> obsMetricsOracle,
     "cache_reuse" -> cacheReuseOracle,
-    "graph_pagerank" -> pageRankOracle,
     "agg_corr_matrix" -> corrMatrixOracle,
     "join_asof_tolerance" -> asofToleranceOracle,
     "sql_join_hint_shuffle" -> hintShuffleOracle

@@ -1,20 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.57 (round-23 batch 6) — seeded relevance, underwater
-  * risk duration, and digit-forensics:
-  *
-  *  - [[pagerankPersonalized]]: personalized PageRank — the teleport
-  *    mass restarts at the seed set (partkey % 100 == 0) instead of
-  *    uniformly, so rank measures proximity TO THE SEEDS.
-  *    `graph_pagerank` answers "globally important"; PPR answers
-  *    "relevant to this query set" — the recommendation/similarity
-  *    primitive (same loop discipline, different teleport vector).
+/** SURVEY.md §2.57 (round-23 batch 6) — underwater risk duration
+  * and digit-forensics:
   *
   *  - [[drawdownDuration]]: underwater-spell duration per nation on
   *    the 7-day rolling-revenue level — longest run of days strictly
@@ -30,88 +23,17 @@ import graft.util.Tables._
   *    humans fabricating numbers round them — the forensic
   *    complement.
   *
-  * Scale shapes: PPR inherits pageRankOn's shape — ONE edge-build
-  * materialization with out-degree as a window column, node-sized
-  * rank table broadcast into the edge scan, one dst-keyed exchange
-  * per iteration; drawdown-duration windows and gap-islands run over
+  * Scale shapes: drawdown-duration windows and gap-islands run over
   * the |nation|×|days| aggregate (agg_weighted_median few-value-key
   * rule), never the order table; the digit screen is one map-side
   * hash aggregate to a 30-row (flag, digit) relation.
   *
-  * Determinism: PPR rounds to 12 dp per iteration (pageRank's
-  * discipline — kills partial-sum ulp drift); spell arithmetic is
+  * Determinism: spell arithmetic is
   * exact-integer over exact-DECIMAL level comparisons; the χ²
   * numerator 10·Σo² − n² stays integral (≤ ~10¹³ at sf0.1), one
   * double division floor-6-dp (§1.5).
   */
 object Composite41 {
-
-  // ---- graph_pagerank_personalized -------------------------------------
-  private[graft] def pprOn(edgeList: DataFrame, seed: Column => Column,
-      iterations: Int, damping: Double): DataFrame = {
-    val edgesD = edgeList
-      .withColumn("d", count(lit(1)).over(Window.partitionBy("src")))
-      .localCheckpoint()
-    val nodes = edgesD.select(col("src").as("node"))
-      .union(edgesD.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val ns = broadcast(nodes.filter(seed(col("node")))
-      .agg(count(lit(1)).cast("double").as("ns")))
-    var ranks = nodes.crossJoin(ns)
-      .select(col("node"),
-        when(seed(col("node")), lit(1.0) / col("ns"))
-          .otherwise(lit(0.0)).as("r"))
-    // Rank/contrib tables are node-sized: hint only under the size
-    // gate (graft.util.Hints) — pageRankOn's discipline.
-    val hint = graft.util.Hints.maybeBroadcast(nodes.count())
-    for (_ <- 1 to iterations) {
-      val contrib = edgesD.join(hint(ranks), col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r") / col("d")).as("contrib"))
-      ranks = nodes.crossJoin(ns)
-        .join(hint(contrib), col("node") === col("dst"), "left")
-        .select(col("node"),
-          round(when(seed(col("node")), lit(1.0 - damping) / col("ns"))
-              .otherwise(lit(0.0))
-            + lit(damping) * coalesce(col("contrib"), lit(0.0)), 12).as("r"))
-    }
-    ranks.orderBy("node")
-  }
-
-  private def pagerankPersonalized(s: SparkSession, dir: String): DataFrame =
-    pprOn(Composite4.coPurchaseEdges(s, dir).localCheckpoint(),
-      n => n % 100 === 0, iterations = 5, damping = 0.85)
-
-  private val pagerankPersonalizedOracle: String = {
-    val iters = (1 to 5).map { i =>
-      s"""r$i AS (
-         |  SELECT n2.node,
-         |    round(CASE WHEN n2.node % 100 = 0
-         |        THEN CAST(0.15 AS DOUBLE) / ns.ns
-         |        ELSE CAST(0 AS DOUBLE) END
-         |      + CAST(0.85 AS DOUBLE) * coalesce(c.contrib, CAST(0 AS DOUBLE)), 12) AS r
-         |  FROM nodes n2 CROSS JOIN ns LEFT JOIN (
-         |    SELECT e.dst AS node, sum(p.r / deg.d) AS contrib
-         |    FROM edges e JOIN r${i - 1} p ON e.src = p.node
-         |    JOIN deg ON e.src = deg.src
-         |    GROUP BY e.dst) c ON n2.node = c.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |edges AS (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey <> b.l_partkey),
-       |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |ns AS (SELECT CAST(count(*) AS DOUBLE) AS ns FROM nodes
-       |       WHERE node % 100 = 0),
-       |r0 AS (SELECT node,
-       |  CASE WHEN node % 100 = 0 THEN CAST(1 AS DOUBLE) / ns.ns
-       |       ELSE CAST(0 AS DOUBLE) END AS r
-       |  FROM nodes CROSS JOIN ns),
-       |$iters
-       |SELECT node, r FROM r5 ORDER BY node""".stripMargin
-  }
 
   // ---- win_drawdown_duration -------------------------------------------
   // Underwater = level strictly below the running peak (exact
@@ -233,13 +155,11 @@ object Composite41 {
       |FROM g JOIN top USING (l_returnflag) ORDER BY l_returnflag""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_pagerank_personalized" -> (pagerankPersonalized _),
     "win_drawdown_duration" -> (drawdownDuration _),
     "dq_last_digit_uniformity" -> (lastDigitUniformity _)
   )
 
   val oracle: Map[String, String] = Map(
-    "graph_pagerank_personalized" -> pagerankPersonalizedOracle,
     "win_drawdown_duration" -> drawdownDurationOracle,
     "dq_last_digit_uniformity" -> lastDigitUniformityOracle
   )

@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.18 (continued) — round-7 data-quality, nested-type,
-  * calendar, and graph-analytics operators: a Benford first-digit
-  * audit (the classic fraud / synthetic-data detector),
-  * array-of-struct algebra surfaced as scalars, month-end-clamped
-  * calendar arithmetic, the co-purchase degree distribution, a
+/** SURVEY.md §2.18 (continued) — round-7 data-quality, nested-type
+  * and calendar operators: a Benford first-digit audit (the classic
+  * fraud / synthetic-data detector), array-of-struct algebra
+  * surfaced as scalars, month-end-clamped calendar arithmetic, a
   * centered (forward-looking) window frame, and the array
   * higher-order-function tier.
   */
@@ -123,31 +122,6 @@ object Composite5 {
       |  CAST(date_part('week', o_orderdate) AS INT) AS iso_week
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
-
-  // ---- graph_degree_dist -------------------------------------------
-  // Degree distribution of the part co-purchase graph (the first
-  // thing a graph analyst plots): per-node degree → nodes-per-degree.
-  // Reuses the graph_pagerank edge definition; two chained hash
-  // aggregates after the orderkey-co-partitioned self-join.
-  private def degreeDist(s: SparkSession, dir: String): DataFrame =
-    // r18: per-node degree over the symmetric edge list IS the shared
-    // TriCore degree view (undirected degree from the half edges) —
-    // one bounded-alphabet histogram aggregate over the parquet view.
-    TriCore.sharedDeg(s, dir)
-      .select(col("deg").as("degree"))
-      .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("degree")
-
-  private val degreeDistOracle =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |edges AS (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS degree FROM edges GROUP BY src)
-      |SELECT degree, CAST(count(*) AS BIGINT) AS n_nodes
-      |FROM deg GROUP BY degree
-      |ORDER BY degree""".stripMargin
 
   // ---- win_centered_frame ------------------------------------------
   // Centered moving average (ROWS BETWEEN 2 PRECEDING AND 2
@@ -310,7 +284,6 @@ object Composite5 {
     "agg_benford" -> (q(benfordSql) _),
     "nested_struct_topn" -> (nestedTopN _),
     "date_arithmetic" -> (q(dateArithSql) _),
-    "graph_degree_dist" -> (degreeDist _),
     "win_centered_frame" -> (q(centeredFrameSql) _),
     "array_hof_fns" -> (arrayHof _),
     "evt_seasonality" -> (seasonality _),
@@ -323,7 +296,6 @@ object Composite5 {
     "agg_benford" -> benfordOracle,
     "nested_struct_topn" -> nestedTopNOracle,
     "date_arithmetic" -> dateArithOracle,
-    "graph_degree_dist" -> degreeDistOracle,
     "win_centered_frame" -> centeredFrameSql,
     "array_hof_fns" -> arrayHofOracle,
     "evt_seasonality" -> seasonalityOracle,

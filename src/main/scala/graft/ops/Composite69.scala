@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.86 (round-16 batch 1) — the nonparametric post-hoc
-  * and the link-prediction score trio:
+/** SURVEY.md §2.86 (round-16 batch 1) — the nonparametric post-hoc:
   *
   *  - [[dunnPosthoc]]: Dunn's test with the Holm step-down
   *    adjustment over the five order priorities — the answer to
@@ -23,32 +22,16 @@ import graft.util.Tables._
   *    for α/(m−l+1) (α = 0.05, m = 10), and a pair is significant
   *    only while every earlier step also passed (the running min).
   *
-  *  - [[adamicAdar]]: Adamic-Adar and preferential-attachment link
-  *    prediction beside Jaccard — the other two of the standard
-  *    trio, on the SAME non-adjacent candidate slice as
-  *    `graph_jaccard_linkpred` (both endpoints % 20 == 0, per-middle
-  *    SliceCap, existing edges anti-joined away) so the three scores
-  *    are directly comparable pair for pair. AA weights each shared
-  *    neighbor z by 1/ln(deg z) (full degree, never the slice
-  *    degree); PA = deg_a·deg_b is exact BIGINT.
-  *
   * Scale shapes: Dunn reduces over the distinct-value COUNT axis
   * exactly like KW (ranks never materialize per row; the pair table
   * is 10 rows by construction — the Holm windows order an alphabet,
-  * not data). Adamic-Adar is the jaccard_linkpred wedge discipline
-  * (sorted-set pair explosion over the slice, bounded per middle by
-  * SliceCap²/2) plus ONE |nodes|-sized degree join for the middle
-  * weight before the (a, b) aggregate.
+  * not data).
   *
   * Determinism: Dunn's z assembles once from exact BIGINT rank sums
   * via identical formula text (IEEE ops in fixed order ⇒ bit-equal
   * doubles), is 12-dp rounded before the |z| ordering (id
   * tie-breaks) and 6-dp floored on surface; the Holm criticals are
-  * pinned double literals. AA's Σ 1/ln(deg) is the one
-  * summation-order-sensitive double (libm-drift class ~1e-13
-  * relative — inside the 6-dp presentation, the agg_geometric_mean
-  * argument); ordering uses the FLOORED score with (src, dst)
-  * tie-breaks.
+  * pinned double literals.
   */
 object Composite69 {
 
@@ -159,74 +142,11 @@ object Composite69 {
        |  holm_rank, significant_holm_5pct
        |FROM f ORDER BY g1, g2""".stripMargin
 
-  // ---- graph_adamic_adar_linkpred -----------------------------------------
-
-  /** AA/PA projection over the SHARED link-prediction candidate
-    * table (Composite36.linkpredCandidatesOn — slice % 20,
-    * per-middle cap 256, sorted-set pair explosion with the middle
-    * kept for the 1/ln(deg) weight, adjacency anti-join); the three
-    * scores surface side by side. The corpus-facing query reads the
-    * DiskMemo parquet materialization also feeding
-    * `graph_jaccard_linkpred`. */
-  private[graft] def adamicAdarFrom(cands: DataFrame): DataFrame =
-    cands.selectExpr("src", "dst", "common_neighbors",
-        "deg_src", "deg_dst",
-        "floor(aa*1e6 + 0.5)/1e6 AS adamic_adar",
-        "CAST(deg_src * deg_dst AS BIGINT) AS pref_attach",
-        """floor((CAST(common_neighbors AS DOUBLE)
-          | / (deg_src + deg_dst - common_neighbors))*1e6 + 0.5)/1e6
-          | AS jaccard""".stripMargin)
-      .orderBy(col("adamic_adar").desc, col("src"), col("dst"))
-      .limit(20)
-
-  private[graft] def adamicAdarOn(half: DataFrame): DataFrame =
-    adamicAdarFrom(Composite36.linkpredCandidatesOn(half))
-
-  private def adamicAdar(s: SparkSession, dir: String): DataFrame =
-    adamicAdarFrom(Composite36.sharedLinkpredCandidates(s, dir))
-
-  private val adamicAdarOracle =
-    s"""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-       |h AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |  WHERE a.l_partkey < b.l_partkey),
-       |e AS MATERIALIZED (
-       |  SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
-       |deg AS (SELECT src AS n, CAST(count(*) AS BIGINT) AS deg
-       |        FROM e GROUP BY 1),
-       |sn AS MATERIALIZED (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst,
-       |      row_number() OVER (PARTITION BY src ORDER BY dst) AS rn
-       |    FROM e WHERE dst % 20 = 0)
-       |  WHERE rn <= 256),
-       |w AS (
-       |  SELECT a.dst AS src, b.dst AS dst,
-       |    CAST(count(*) AS BIGINT) AS common_neighbors,
-       |    round(sum(1.0/ln(CAST(dz.deg AS DOUBLE))), 12) AS aa
-       |  FROM sn a JOIN sn b ON a.src = b.src AND a.dst < b.dst
-       |    JOIN deg dz ON dz.n = a.src
-       |  GROUP BY 1, 2),
-       |nw AS (SELECT w.* FROM w WHERE NOT EXISTS (
-       |  SELECT 1 FROM h WHERE h.src = w.src AND h.dst = w.dst))
-       |SELECT nw.src, nw.dst, common_neighbors,
-       |  da.deg AS deg_src, db.deg AS deg_dst,
-       |  floor(aa*1e6 + 0.5)/1e6 AS adamic_adar,
-       |  CAST(da.deg * db.deg AS BIGINT) AS pref_attach,
-       |  floor((CAST(common_neighbors AS DOUBLE)
-       |   / (da.deg + db.deg - common_neighbors))*1e6 + 0.5)/1e6
-       |   AS jaccard
-       |FROM nw JOIN deg da ON nw.src = da.n JOIN deg db ON nw.dst = db.n
-       |ORDER BY adamic_adar DESC, nw.src, nw.dst LIMIT 20""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_dunn_posthoc" -> (dunnPosthoc _),
-    "graph_adamic_adar_linkpred" -> (adamicAdar _)
+    "agg_dunn_posthoc" -> (dunnPosthoc _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_dunn_posthoc" -> dunnOracle,
-    "graph_adamic_adar_linkpred" -> adamicAdarOracle
+    "agg_dunn_posthoc" -> dunnOracle
   )
 }

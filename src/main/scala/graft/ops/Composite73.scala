@@ -5,20 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.88 (round-16 batch 3) — truncated Katz centrality
-  * and the ordered-alternative rank test:
-  *
-  *  - [[katzCentrality]]: hop-≤3 truncated Katz centrality over the
-  *    co-purchase graph with DYADIC attenuation α = 1/8 — the walk-
-  *    count centrality between degree (k=1 only) and eigenvector
-  *    (k→∞): katz(v) = Σ_{k=1..3} α^k · walks_k(v) with walks_k the
-  *    EXACT BIGINT count of length-k walks ending at v. The dyadic α
-  *    makes the whole statistic exact: katz·8³ = 64·w₁ + 8·w₂ + w₃
-  *    is an integer, and /512 is a power-of-two division — the
-  *    surfaced double is bit-exact on any engine (the
-  *    win_ewma_backtest integer-dot-product discipline applied to a
-  *    graph row; no per-round float normalization to round, unlike
-  *    eigenvector's L1 path).
+/** SURVEY.md §2.88 (round-16 batch 3) — the ordered-alternative rank
+  * test:
   *
   *  - [[jonckheereTerpstra]]: the Jonckheere-Terpstra trend test
   *    across the five order priorities IN THEIR NATURAL ORDER —
@@ -32,109 +20,13 @@ import graft.util.Tables._
   *    the Hollander-Wolfe three-term variance with every cubic
   *    widened to DOUBLE before multiplying (the kwHc overflow rule).
   *
-  * Scale shapes: Katz is three map-side-combined contribution
-  * aggregates over the once-checkpointed edge list with the
-  * |nodes|-bounded walk tables riding the broadcast size gate
-  * (graft.util.Hints — the pagerank loop shape, minus the per-round
-  * normalization). JT reduces over the distinct-value COUNT grid
+  * Scale shape: JT reduces over the distinct-value COUNT grid
   * exactly like KW: one 5-column fixed-alphabet pivot of the
   * (group, value) counts, ONE cumulative window over the
   * |distinct prices|-bounded axis, one exact-integer aggregate —
   * ranks never materialize per row.
   */
 object Composite73 {
-
-  // ---- graph_katz_centrality -----------------------------------------------
-
-  private[graft] def katzOn(edgeList: DataFrame,
-      degOpt: Option[DataFrame] = None): DataFrame = {
-    val edges = edgeList.localCheckpoint()
-    // r19: on the corpus path the node universe AND walks₁ both come
-    // from the shared degree view — the symmetric edge list makes
-    // in-degree == degree, so w₁ IS TriCore.sharedDeg and the first
-    // walk round (edge scan + aggregate + checkpoint) plus the node
-    // distinct + checkpoint + count gate all collapse into parquet
-    // reads of the view (guide §2.4). Planted callers keep the
-    // self-contained build.
-    val (nodes, w1, hint) = degOpt match {
-      case Some(deg) =>
-        (deg.select(col("n").as("node")),
-          deg.select(col("n").as("node"), col("deg").as("w")),
-          graft.util.Hints.maybeBroadcast(deg.count()))
-      case None =>
-        val n = edges.select(col("src").as("node"))
-          .union(edges.select(col("dst").as("node")))
-          .distinct().localCheckpoint()
-        val hint = graft.util.Hints.maybeBroadcast(n.count())
-        // walks_k(v) = Σ_{(u,v) ∈ E} walks_{k−1}(u); w₀ ≡ 1 so w₁ is
-        // the in-degree. Sparse by construction (nodes with no
-        // in-walks are absent until the final left joins coalesce
-        // them to 0).
-        val w1 = edges
-          .join(hint(n.select(col("node").as("src"), lit(1L).as("pw"))),
-            "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("pw")).as("w"))
-          .localCheckpoint()
-        (n, w1, hint)
-    }
-    var walks = w1
-    val levels = w1 +: (2 to 3).map { _ =>
-      walks = edges
-        .join(hint(walks.select(col("node").as("src"), col("w").as("pw"))),
-          "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("pw")).as("w"))
-        .localCheckpoint() // feeds both the next round and the output
-      walks
-    }
-    nodes
-      .join(hint(levels(0).select(col("node"), col("w").as("w1"))),
-        Seq("node"), "left")
-      .join(hint(levels(1).select(col("node"), col("w").as("w2"))),
-        Seq("node"), "left")
-      .join(hint(levels(2).select(col("node"), col("w").as("w3"))),
-        Seq("node"), "left")
-      .selectExpr("node",
-        "coalesce(w1, CAST(0 AS BIGINT)) AS walks1",
-        "coalesce(w2, CAST(0 AS BIGINT)) AS walks2",
-        "coalesce(w3, CAST(0 AS BIGINT)) AS walks3",
-        """CAST(64*coalesce(w1, CAST(0 AS BIGINT))
-          | + 8*coalesce(w2, CAST(0 AS BIGINT))
-          | + coalesce(w3, CAST(0 AS BIGINT)) AS DOUBLE)/512 AS katz"""
-          .stripMargin)
-      .orderBy("node")
-  }
-
-  private def katzCentrality(s: SparkSession, dir: String): DataFrame =
-    katzOn(Composite4.coPurchaseEdges(s, dir),
-      degOpt = Some(TriCore.sharedDeg(s, dir)))
-
-  private val katzOracle =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |edges AS MATERIALIZED (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-      |w1 AS (SELECT dst AS node, CAST(count(*) AS BIGINT) AS w
-      |  FROM edges GROUP BY 1),
-      |w2 AS (SELECT e.dst AS node, CAST(sum(p.w) AS BIGINT) AS w
-      |  FROM edges e JOIN w1 p ON e.src = p.node GROUP BY 1),
-      |w3 AS (SELECT e.dst AS node, CAST(sum(p.w) AS BIGINT) AS w
-      |  FROM edges e JOIN w2 p ON e.src = p.node GROUP BY 1)
-      |SELECT n.node,
-      |  coalesce(a.w, CAST(0 AS BIGINT)) AS walks1,
-      |  coalesce(b.w, CAST(0 AS BIGINT)) AS walks2,
-      |  coalesce(c.w, CAST(0 AS BIGINT)) AS walks3,
-      |  CAST(64*coalesce(a.w, CAST(0 AS BIGINT))
-      |   + 8*coalesce(b.w, CAST(0 AS BIGINT))
-      |   + coalesce(c.w, CAST(0 AS BIGINT)) AS DOUBLE)/512 AS katz
-      |FROM nodes n
-      |LEFT JOIN w1 a ON n.node = a.node
-      |LEFT JOIN w2 b ON n.node = b.node
-      |LEFT JOIN w3 c ON n.node = c.node
-      |ORDER BY n.node""".stripMargin
 
   // ---- agg_jonckheere_terpstra ---------------------------------------------
 
@@ -243,12 +135,10 @@ object Composite73 {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_katz_centrality" -> (katzCentrality _),
     "agg_jonckheere_terpstra" -> (jonckheereTerpstra _)
   )
 
   val oracle: Map[String, String] = Map(
-    "graph_katz_centrality" -> katzOracle,
     "agg_jonckheere_terpstra" -> jonckheereOracle
   )
 }

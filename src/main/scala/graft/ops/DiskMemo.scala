@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-JVM parquet materialization of an expensive shared
-  * intermediate (the [[GraphBfs]] materialized-view discipline as a
-  * reusable helper): the first caller builds the table and writes it
+  * intermediate, the one memo registry behind every shared view (the
+  * co-purchase edges, [[TriCore]], [[GraphBfs]]' levels, the shingle
+  * and link-prediction tables): the first caller builds the table and writes it
   * under the per-run /tmp path ([[Scans.tmp]] — per-applicationId,
   * deleted on JVM exit); every later caller reads the parquet back.
   *

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Shared seed/BFS level builder (VERDICT r15 item 3).
   *
-  * `graph_betweenness_approx` (Composite54) and
-  * `graph_harmonic_centrality` (Composite36) sample the SAME 3
-  * deterministic top-degree seeds (ties by node id) and run the SAME
-  * hop-≤3 BFS over the symmetric co-purchase graph; until round 16
-  * each row rebuilt its own levels — together the suite's two
-  * heaviest graph rows. This object computes the levels ONCE per
-  * (corpus, seeds, k) and feeds both rows:
+  * `graph_betweenness_approx` and `graph_harmonic_centrality`
+  * ([[graph.Centrality]]) sample the SAME 3 deterministic top-degree
+  * seeds (ties by node id) and run the SAME hop-≤3 BFS over the
+  * symmetric co-purchase graph; until round 16 each row rebuilt its
+  * own levels — together the suite's two heaviest graph rows. This
+  * object computes the levels ONCE per corpus and feeds both rows:
   *
   *  - [[levelsOn]] — the pure forward σ-BFS over a caller-supplied
   *    edge list (the planted-graph test seam; no disk, no memo).
@@ -22,38 +21,35 @@ import org.apache.spark.sql.functions._
   *    same relation therefore serves Brandes' σ (betweenness) and
   *    the distance histogram (harmonic) — no second traversal.
   *
-  *  - [[sharedLevels]] — the corpus-facing memo: first caller in the
-  *    JVM builds the levels and MATERIALIZES them as parquet under
-  *    the per-run /tmp path ([[Scans.tmp]] — per-applicationId,
-  *    deleted on JVM exit); every later caller reads the parquet
-  *    back. The materialized-view shape is deliberate and is the
-  *    100 TB answer: a shared intermediate this expensive (3 keyed
+  *  - [[sharedLevels]] — the corpus-facing memo: the seed table and
+  *    each level are [[DiskMemo]] parquet views, one tag each, so
+  *    the first caller in the JVM builds them and every later caller
+  *    reads the parquet back. The materialized-view shape is
+  *    deliberate: a shared intermediate this expensive (3 keyed
   *    exchanges over the full edge list) is written once to storage
-  *    and fanned out to every centrality consumer, exactly like a
-  *    warehouse materialized view — NOT re-derived per query, and
-  *    NOT pinned in executor memory (persist/localCheckpoint blocks
-  *    do not survive the between-query block cleanup a long-running
-  *    driver performs; the parquet files do). σ (BIGINT) and node
-  *    ids roundtrip parquet exactly, so consumers of the memo and of
-  *    a fresh build compute cell-identical results.
-  *
-  * The memo key canonicalizes the corpus dir and carries (seeds, k),
-  * so sf0.01 Verify and sf0.1 Bench runs never share levels. Build
-  * is serialized under the memo lock: concurrent first callers (test
-  * suites share one JVM) block rather than racing two writes to one
-  * path.
+  *    and fanned out to every centrality consumer, NOT re-derived per
+  *    query and NOT pinned in executor memory (see DiskMemo). σ
+  *    (BIGINT) and node ids roundtrip parquet exactly, so consumers
+  *    of the memo and of a fresh build compute cell-identical
+  *    results. Concurrent first callers wait on DiskMemo's per-table
+  *    future instead of racing two writes to one path.
   */
 object GraphBfs {
 
-  private case class Handle(seedsPath: String, levelPaths: IndexedSeq[String])
+  /** The corpus rows' sample: the top-[[Seeds]] degree nodes, BFS to
+    * depth [[K]]. */
+  private val Seeds = 3
+  private val K = 3
 
-  private val memo =
-    scala.collection.mutable.HashMap.empty[(String, Int, Int), Handle]
+  /** DiskMemo tags: the seed table, then levels 1..K. */
+  private val tags = ("seeds" +: (1 to K).map(d => s"level$d"))
+    .map(t => s"bfslevels_${Seeds}_${K}_$t")
 
-  /** Forget every memoized level set so the next caller rebuilds
-    * (paths are overwrite-mode). Bench uses this to time a TRUE
-    * forward-σ-BFS build as its own entry (VERDICT r16 item 2). */
-  private[graft] def reset(): Unit = memo.synchronized { memo.clear() }
+  /** Forget the memoized seed table and levels so the next caller
+    * rebuilds them (the parquet paths are overwrite-mode). Bench uses
+    * this to time a TRUE forward-σ-BFS build as its own entry
+    * (VERDICT r16 item 2). */
+  private[graft] def reset(): Unit = tags.foreach(DiskMemo.reset)
 
   /** Forward σ-BFS: returns (seedRows(seed, seed_degree),
     * levels(0..k)) where levels(d) = (seed, node, sigma) at depth d.
@@ -63,13 +59,9 @@ object GraphBfs {
     * (graft.util.Hints — past the cap the joins re-plan as keyed
     * shuffles instead of hard-failing at the broadcast limit). */
   private[graft] def levelsOn(edges: DataFrame, seeds: Int,
-      k: Int, degOpt: Option[DataFrame] = None): (DataFrame, IndexedSeq[DataFrame]) = {
-    // r18: the corpus path passes the shared TriCore degree view
-    // (same relation — symmetric out-degree == undirected degree);
-    // planted callers let the seam build it.
-    val deg = degOpt.getOrElse(
-      edges.groupBy(col("src").as("n")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint())
+      k: Int): (DataFrame, IndexedSeq[DataFrame]) = {
+    val deg = edges.groupBy(col("src").as("n")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint()
     // Every per-round build side is ≤ seeds·|nodes| rows.
     val hint = graft.util.Hints.maybeBroadcast(seeds.toLong * deg.count())
     val seedRows = deg.orderBy(col("deg").desc, col("n")).limit(seeds)
@@ -95,62 +87,46 @@ object GraphBfs {
     (seedRows, levels.reverse.toIndexedSeq)
   }
 
-  /** Disk-memoized corpus levels over [[Composite4.coPurchaseEdges]]:
-    * build + parquet-write once per JVM per (dir, seeds, k), read
-    * back on every later call (see object doc for why disk, not
-    * memory).
+  /** Disk-memoized corpus levels over [[graph.CoPurchase.coPurchaseEdges]]
+    * (see object doc for why disk, not memory).
     *
-    * r19 (guide §1.2 — remove passes): the build WRITES each frontier
-    * straight to its final parquet path and reads it back for the
-    * next round, instead of the r18 shape (localCheckpoint every
-    * level, then re-write all of them — two materializations per
-    * level plus a count-gated broadcast hint, ~10 jobs for k=3; now
-    * one write job per level, ~5). The parquet read-backs carry
+    * r19 (guide §1.2 — remove passes): each frontier is WRITTEN
+    * straight to its parquet view and read back for the next round,
+    * instead of the r18 shape (localCheckpoint every level, then
+    * re-write all of them — two materializations per level plus a
+    * count-gated broadcast hint). The parquet read-backs carry
     * accurate file statistics, so the planner broadcasts the
     * frontier/visited sides on its own and plans keyed shuffles once
     * they outgrow the threshold — the TriCore r18 stats-over-hand-gate
-    * discipline; the deg.count() gate job is dropped with it.
-    * Level content is IDENTICAL to [[levelsOn]]'s (same plan subtree
-    * per level, exact BIGINT σ; [[GraphBfsSpec]] pins the equality). */
-  private[graft] def sharedLevels(s: SparkSession, dir: String, seeds: Int,
-      k: Int): (DataFrame, IndexedSeq[DataFrame]) = {
-    val key = (new java.io.File(dir).getCanonicalPath, seeds, k)
-    val h = memo.synchronized {
-      memo.getOrElseUpdate(key, {
-        val base = Scans.tmp(s, dir, s"bfslevels_${seeds}_$k")
-        val edges = Composite4.coPurchaseEdges(s, dir)
-        // Seed table and depth-0 level fused into ONE seeds-wide write
-        // (node == seed, σ == 1 at depth 0 are projections of the seed
-        // rows): one write action instead of two, the Handle reads
-        // project the two shapes back out.
-        TriCore.sharedDeg(s, dir)
-          .orderBy(col("deg").desc, col("n")).limit(seeds)
-          .select(col("n").as("seed"), col("deg").as("seed_degree"),
-            col("n").as("node"), lit(1L).as("sigma"))
-          .write.mode("overwrite").parquet(s"$base/seeds")
-        var levels = List(s.read.parquet(s"$base/seeds")
-          .select(col("seed"), col("node"), col("sigma")))
-        var visited = levels.head.select(col("seed"), col("node"))
-        for (d <- 1 to k) {
-          edges
-            .join(levels.head.select(col("seed"), col("node").as("src"),
-              col("sigma").as("ps")), "src")
-            .groupBy(col("seed"), col("dst").as("node"))
-            .agg(sum(col("ps")).as("sigma"))
-            .join(visited, Seq("seed", "node"), "left_anti")
-            .write.mode("overwrite").parquet(s"$base/level$d")
-          val lv = s.read.parquet(s"$base/level$d")
-          visited = visited.unionAll(lv.select(col("seed"), col("node")))
-          levels = lv :: levels
-        }
-        Handle(s"$base/seeds",
-          s"$base/seeds" +: (1 to k).map(d => s"$base/level$d"))
-      })
+    * discipline. Level content is IDENTICAL to [[levelsOn]]'s (same
+    * plan subtree per level, exact BIGINT σ; Round58Spec pins the
+    * equality). */
+  private[graft] def sharedLevels(s: SparkSession,
+      dir: String): (DataFrame, IndexedSeq[DataFrame]) = {
+    // Read only by a build: a memo hit is parquet reads alone.
+    lazy val edges = graph.CoPurchase.coPurchaseEdges(s, dir)
+    // Seed table and depth-0 level fused into ONE seeds-wide view
+    // (node == seed, σ == 1 at depth 0 are projections of the seed
+    // rows): one write instead of two; the two shapes project out.
+    val seeds = DiskMemo.table(s, dir, tags(0))(
+      TriCore.sharedDeg(s, dir)
+        .orderBy(col("deg").desc, col("n")).limit(Seeds)
+        .select(col("n").as("seed"), col("deg").as("seed_degree"),
+          col("n").as("node"), lit(1L).as("sigma")))
+    var levels = List(seeds.select(col("seed"), col("node"), col("sigma")))
+    var visited = levels.head.select(col("seed"), col("node"))
+    for (d <- 1 to K) {
+      val (prev, seen) = (levels.head, visited)
+      val lv = DiskMemo.table(s, dir, tags(d))(
+        edges
+          .join(prev.select(col("seed"), col("node").as("src"),
+            col("sigma").as("ps")), "src")
+          .groupBy(col("seed"), col("dst").as("node"))
+          .agg(sum(col("ps")).as("sigma"))
+          .join(seen, Seq("seed", "node"), "left_anti"))
+      visited = visited.unionAll(lv.select(col("seed"), col("node")))
+      levels = lv :: levels
     }
-    (s.read.parquet(h.seedsPath).select(col("seed"), col("seed_degree")),
-      h.levelPaths.zipWithIndex.map { case (p, d) =>
-        val df = s.read.parquet(p)
-        if (d == 0) df.select(col("seed"), col("node"), col("sigma")) else df
-      })
+    (seeds.select(col("seed"), col("seed_degree")), levels.reverse.toIndexedSeq)
   }
 }

@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Shared triangle-core relations of the co-purchase graph (r18).
   *
-  * `graph_triangle_count` (Composite10), `graph_local_clustering`
-  * (Composite17) and `graph_common_neighbors` (Composite20) all run
+  * `graph_triangle_count`, `graph_local_clustering` and
+  * `graph_common_neighbors` ([[graph.Structure]]) all run
   * the SAME degree-ordered triangle enumeration: undirected degrees,
   * the degree-oriented edge list (each undirected edge once, pointed
   * from the lower-(deg, id) endpoint), and the sorted oriented
   * adjacency lists whose per-edge intersections enumerate every
   * triangle exactly once. Until r17 each row rebuilt all three (plus
-  * 3-4 localCheckpoints each); `graph_rich_club` (Composite36) and
-  * `graph_avg_neighbor_degree` (Composite39) rebuilt the degree table
+  * 3-4 localCheckpoints each); `graph_rich_club` and
+  * `graph_avg_neighbor_degree` rebuilt the degree table
   * again. This object materializes the chain ONCE per JVM as three
   * [[DiskMemo]] parquet views (the coPurchaseHalfEdges discipline —
   * a warehouse materialized view fanned out to consumers, NOT
@@ -56,11 +56,11 @@ object TriCore {
 
   private[graft] def sharedDeg(s: SparkSession, dir: String): DataFrame =
     DiskMemo.table(s, dir, "tri_deg")(
-      degOn(Composite4.coPurchaseHalfEdges(s, dir)))
+      degOn(graph.CoPurchase.coPurchaseHalfEdges(s, dir)))
 
   private[graft] def sharedOriented(s: SparkSession, dir: String): DataFrame =
     DiskMemo.table(s, dir, "tri_oriented")(
-      orientedOn(Composite4.coPurchaseHalfEdges(s, dir), sharedDeg(s, dir)))
+      orientedOn(graph.CoPurchase.coPurchaseHalfEdges(s, dir), sharedDeg(s, dir)))
 
   private[graft] def sharedAdj(s: SparkSession, dir: String): DataFrame =
     DiskMemo.table(s, dir, "tri_adj")(adjOn(sharedOriented(s, dir)))

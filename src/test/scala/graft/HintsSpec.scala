@@ -73,11 +73,11 @@ class HintsSpec extends AnyFunSuite {
   }
 
   test("triangle core: over-cap path plans shuffle joins and agrees with the broadcast path") {
-    val want = graft.ops.Composite10.triangleCountOn(edges).collect()
+    val want = graft.ops.graph.Structure.triangleCountOn(edges).collect()
       .map(_.toSeq).toSeq
     withRowCap("0") {
       withoutAutoBroadcast {
-        val df = graft.ops.Composite10.triangleCountOn(edges)
+        val df = graft.ops.graph.Structure.triangleCountOn(edges)
         val got = df.collect().map(_.toSeq).toSeq
         val plan = df.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastHashJoin"),
@@ -88,12 +88,12 @@ class HintsSpec extends AnyFunSuite {
   }
 
   test("BFS loop: over-cap path plans shuffle joins and agrees with the broadcast path") {
-    val want = graft.ops.Composite31
+    val want = graft.ops.graph.Paths
       .shortestPathOn(edges, n => n === 1L, k = 3).collect()
       .map(_.toSeq).toSeq
     withRowCap("0") {
       withoutAutoBroadcast {
-        val df = graft.ops.Composite31.shortestPathOn(edges, n => n === 1L, k = 3)
+        val df = graft.ops.graph.Paths.shortestPathOn(edges, n => n === 1L, k = 3)
         val got = df.collect().map(_.toSeq).toSeq
         val plan = df.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastHashJoin"),
@@ -109,11 +109,11 @@ class HintsSpec extends AnyFunSuite {
     // back over a per-round localCheckpoint. Same rounded grid either
     // way, and the over-cap plan must not funnel |nodes| through a
     // single-partition window.
-    val want = graft.ops.Composite65.eigenvectorOn(edges).collect()
+    val want = graft.ops.graph.Centrality.eigenvectorOn(edges).collect()
       .map(_.toSeq).toSeq
     withRowCap("0") {
       withoutAutoBroadcast {
-        val df = graft.ops.Composite65.eigenvectorOn(edges)
+        val df = graft.ops.graph.Centrality.eigenvectorOn(edges)
         val got = df.collect().map(_.toSeq).toSeq
         val plan = df.queryExecution.executedPlan.toString
         assert(!plan.contains("Window"),

@@ -201,7 +201,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           .map(n => dist.getOrElse(n, -1L))
           .groupBy(identity).view.mapValues(_.size.toLong).toMap
         val edges = half.toDF("src", "dst")
-        val got = graft.ops.Composite31
+        val got = graft.ops.graph.Paths
           .shortestPathOn(edges.union(edges.select($"dst", $"src")),
             n => n % 3 === 0, k)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -234,12 +234,65 @@ object PropertiesSpec extends Properties("graft-laws") {
         val expected = nodes.toSeq.map(n => dist(n).getOrElse(-1L))
           .groupBy(identity).view.mapValues(_.size.toLong).toMap
         val edges = half.toDF("src", "dst", "w")
-        val got = graft.ops.Composite33.shortestPathWeightedOn(
+        val got = graft.ops.graph.Paths.shortestPathWeightedOn(
             edges.union(edges.select($"dst", $"src", $"w")),
             n => n % 3 === 0, k)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         got == expected
       }
+    }
+
+  /** Brute-force personalized PageRank: synchronous power iteration
+    * in memory over a symmetric edge list, teleport mass restarting at
+    * `seeds`, every round rounded to 12 dp like the Spark loop. */
+  private def bruteRanks(sym: Seq[(Long, Long)], seeds: Set[Long],
+      iterations: Int, damping: Double): Map[Long, Double] = {
+    def r12(x: Double) =
+      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val nodes = sym.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val outDeg = sym.groupBy(_._1).view.mapValues(_.size.toDouble).toMap
+    val ns = nodes.count(seeds).toDouble
+    def teleport(n: Long, mass: Double) = if (seeds(n)) mass / ns else 0.0
+    var r = nodes.map(n => n -> teleport(n, 1.0)).toMap
+    for (_ <- 1 to iterations) {
+      val contrib = sym.groupBy(_._2).view
+        .mapValues(_.map { case (u, _) => r(u) / outDeg(u) }.sum).toMap
+      r = nodes.map(n => n -> r12(teleport(n, 1.0 - damping)
+        + damping * contrib.getOrElse(n, 0.0))).toMap
+    }
+    r
+  }
+
+  private val symGraphs: Gen[List[(Long, Long)]] =
+    Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(0L, 10L), Gen.chooseNum(0L, 10L)))
+      .map { es =>
+        val half = es.filter { case (a, b) => a != b }
+        (half ++ half.map(_.swap)).distinct
+      }
+
+  private def pprAgrees(sym: List[(Long, Long)], seeds: Set[Long],
+      seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      iterations: Int, damping: Double): Boolean = {
+    import spark.implicits._
+    sym.isEmpty || {
+      val want = bruteRanks(sym, seeds, iterations, damping)
+      val got = graft.ops.graph.Centrality
+        .pprOn(sym.toDF("src", "dst"), seed, iterations, damping)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      got.keySet == want.keySet &&
+        got.forall { case (n, v) => math.abs(v - want(n)) < 1e-9 }
+    }
+  }
+
+  property("pprOn == brute-force power iteration (random seed set)") =
+    forAll(symGraphs, Gen.containerOf[Set, Long](Gen.chooseNum(0L, 10L)),
+      Gen.chooseNum(1, 5), Gen.oneOf(0.5, 0.85)) { (sym, seeds, it, d) =>
+      pprAgrees(sym, seeds, _.isin(seeds.toSeq: _*), it, d)
+    }
+
+  property("pprOn with every node a seed (graph_pagerank) == brute-force PageRank") =
+    forAll(symGraphs, Gen.chooseNum(1, 5), Gen.oneOf(0.5, 0.85)) { (sym, it, d) =>
+      pprAgrees(sym, sym.map(_._1).toSet, _ => lit(true), it, d)
     }
 
   property("weightedMedianOn == brute-force cumulative-weight scan") =
@@ -281,7 +334,7 @@ object PropertiesSpec extends Properties("graft-laws") {
             else None
           k -> ((n, e, phi))
         }.toMap
-        val got = graft.ops.Composite36.richClubOn(half.toDF("src", "dst"))
+        val got = graft.ops.graph.Structure.richClubOn(half.toDF("src", "dst"))
           .collect().map(r => r.getLong(0) ->
             ((r.getLong(1), r.getLong(2),
               if (r.isNullAt(3)) None else Some(r.getDouble(3))))).toMap
@@ -308,7 +361,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           val (da, db) = (adj(a).size.toLong, adj(b).size.toLong)
           (a, b, cn, da, db, floor6(cn.toDouble / (da + db - cn)))
         }).sortBy { case (a, b, _, _, _, j) => (-j, a, b) }.take(20)
-        val got = graft.ops.Composite36
+        val got = graft.ops.graph.LinkPrediction
           .jaccardLinkpredOn(half.toDF("src", "dst"))
           .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
         got == expected
@@ -1094,7 +1147,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val expected = bc.toSeq.sortBy { case (n, b) => (-b, n) }.take(10)
         .map { case (n, b) => (n, floor6(b)) }
       val df = sym.toDF("src", "dst")
-      val got = graft.ops.Composite54.betweennessOn(df, 3, 3)
+      val got = graft.ops.graph.Centrality.betweennessOn(df, 3, 3)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       got == expected
     }
@@ -1834,7 +1887,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           walks(1).getOrElse(v, 0L), walks(2).getOrElse(v, 0L))
         (v, w1, w2, w3, (64 * w1 + 8 * w2 + w3).toDouble / 512)
       }
-      val got = graft.ops.Composite73.katzOn(edges.toDF("src", "dst"))
+      val got = graft.ops.graph.Centrality.katzOn(edges.toDF("src", "dst"))
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
       got == expect
     }

@@ -66,8 +66,8 @@ class Round15Spec extends AnyFunSuite {
 
   test("graph_label_prop: transitions partition the co-purchase node set") {
     val rows =
-      graft.ops.Composite12.queries("graph_label_prop")(spark, sf).collect()
-    val nodes = graft.ops.Composite4.coPurchaseEdges(spark, sf)
+      graft.ops.graph.Graph.queries("graph_label_prop")(spark, sf).collect()
+    val nodes = graft.ops.graph.CoPurchase.coPurchaseEdges(spark, sf)
       .select(col("src")).distinct().count()
     assert(rows.map(_.getLong(2)).sum == nodes,
       "every src node gets exactly one new label")

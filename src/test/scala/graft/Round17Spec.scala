@@ -9,7 +9,7 @@ class Round17Spec extends AnyFunSuite {
   import TestSpark._
 
   test("graph_kcore: node and edge counts shrink monotonically over peels") {
-    val rows = graft.ops.Composite15.queries("graph_kcore")(spark, sf).collect()
+    val rows = graft.ops.graph.Graph.queries("graph_kcore")(spark, sf).collect()
     assert(rows.length == 5)
     val nodes = rows.map(_.getLong(1))
     val edges = rows.map(_.getLong(2))
@@ -69,7 +69,7 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("graph_assortativity: r is a proper correlation on a symmetric graph") {
-    val r = graft.ops.Composite16
+    val r = graft.ops.graph.Graph
       .queries("graph_assortativity")(spark, sf).head
     assert(r.getLong(0) > 0)
     assert(math.abs(r.getDouble(1)) <= 1.0 + 1e-6)

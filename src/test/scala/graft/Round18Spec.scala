@@ -9,7 +9,7 @@ class Round18Spec extends AnyFunSuite {
   import TestSpark._
 
   test("graph_local_clustering: 10 deciles, cc in [0,1], degree rises with decile") {
-    val rows = graft.ops.Composite17
+    val rows = graft.ops.graph.Graph
       .queries("graph_local_clustering")(spark, sf).collect()
     assert(rows.length == 10)
     rows.foreach { r =>

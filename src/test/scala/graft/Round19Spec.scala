@@ -90,7 +90,7 @@ class Round19Spec extends AnyFunSuite {
   }
 
   test("plan shapes: label propagation shuffles (no dim broadcast assumption)") {
-    val plan = graft.ops.Composite12.queries("graph_label_prop")(spark, sf)
+    val plan = graft.ops.graph.Graph.queries("graph_label_prop")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("Exchange"),
       "the edges-to-part join must be a shuffle join at corpus scale")

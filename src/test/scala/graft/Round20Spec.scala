@@ -10,13 +10,13 @@ class Round20Spec extends AnyFunSuite {
   import TestSpark._
 
   test("graph_connected_components: labels partition all nodes") {
-    val rows = graft.ops.Composite20
+    val rows = graft.ops.graph.Graph
       .queries("graph_connected_components")(spark, sf).collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(1)).sum
     // every node carries exactly one label, and a component's label
     // must itself be one of its member nodes (a min over node ids)
-    val edges = graft.ops.Composite4.coPurchaseEdges(spark, sf)
+    val edges = graft.ops.graph.CoPurchase.coPurchaseEdges(spark, sf)
     val nNodes = edges.select("src").distinct().count()
     assert(total == nNodes)
     rows.foreach(r => assert(r.getLong(1) >= 1))
@@ -82,7 +82,7 @@ class Round20Spec extends AnyFunSuite {
   }
 
   test("graph_common_neighbors: jaccard in (0,1], arithmetic holds") {
-    val rows = graft.ops.Composite20
+    val rows = graft.ops.graph.Graph
       .queries("graph_common_neighbors")(spark, sf).collect()
     assert(rows.length == 10)
     val js = rows.map(_.getDouble(5))

@@ -26,7 +26,7 @@ class Round27Spec extends AnyFunSuite {
     // materialization, two projections" now means two parquet scan
     // leaves over the SAME file location — the build subtree
     // (groupBy + explode + distinct) must not appear in either branch.
-    val edges = graft.ops.Composite4.coPurchaseEdges(spark, sf)
+    val edges = graft.ops.graph.CoPurchase.coPurchaseEdges(spark, sf)
     val leaves = edges.queryExecution.optimizedPlan.collectLeaves()
     val locs = leaves.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -67,7 +67,7 @@ class Round27Spec extends AnyFunSuite {
     val conv = SparkEntry.queries("graph_connected_components_conv")(spark, sf)
       .collect()
     assert(conv.nonEmpty)
-    val nNodes = graft.ops.Composite4.coPurchaseEdges(spark, sf)
+    val nNodes = graft.ops.graph.CoPurchase.coPurchaseEdges(spark, sf)
       .select("src").distinct().count()
     assert(conv.map(_.getLong(1)).sum == nNodes,
       "component sizes must sum to the node count")

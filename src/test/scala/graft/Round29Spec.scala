@@ -21,7 +21,7 @@ class Round29Spec extends AnyFunSuite {
     val half = Seq((100L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
-    val got = graft.ops.Composite31
+    val got = graft.ops.graph.Paths
       .shortestPathOn(edges, n => n % 100 === 0, k = 3)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 2L), (0L, 1L), (1L, 1L), (2L, 1L), (3L, 1L)))
@@ -30,7 +30,7 @@ class Round29Spec extends AnyFunSuite {
   test("shortestPathOn: no seeds -> every node unreached") {
     val half = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
-    val got = graft.ops.Composite31
+    val got = graft.ops.graph.Paths
       .shortestPathOn(edges, _ => lit(false), k = 2)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 3L)))
@@ -109,7 +109,7 @@ class Round29Spec extends AnyFunSuite {
     // three hops out and must not count).
     val half = Seq((100L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
-    val got = graft.ops.Composite32.egoSize2HopOn(edges)
+    val got = graft.ops.graph.Paths.egoSize2HopOn(edges)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((100L, 1L, 2L)))
   }
@@ -120,7 +120,7 @@ class Round29Spec extends AnyFunSuite {
     // excluded it, yielding ego2 < ego1 on the public facade.
     val half = Seq((100L, 100L), (100L, 1L), (1L, 2L)).toDF("src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
-    val got = graft.ops.Composite32.egoSize2HopOn(edges)
+    val got = graft.ops.graph.Paths.egoSize2HopOn(edges)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((100L, 1L, 2L)))
   }

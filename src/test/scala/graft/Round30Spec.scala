@@ -47,7 +47,7 @@ class Round30Spec extends AnyFunSuite {
     val half = Seq((3L, 1L, 10L), (1L, 2L, 1L), (3L, 2L, 100L),
       (7L, 8L, 2L)).toDF("src", "dst", "w")
     val edges = half.union(half.select(col("dst"), col("src"), col("w")))
-    val got = graft.ops.Composite33
+    val got = graft.ops.graph.Paths
       .shortestPathWeightedOn(edges, n => n % 3 === 0, k = 3)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 2L), (0L, 1L), (10L, 1L), (11L, 1L)))
@@ -59,7 +59,7 @@ class Round30Spec extends AnyFunSuite {
     val half = Seq((3L, 1L, 1L), (1L, 2L, 1L), (2L, 4L, 1L))
       .toDF("src", "dst", "w")
     val edges = half.union(half.select(col("dst"), col("src"), col("w")))
-    val got = graft.ops.Composite33
+    val got = graft.ops.graph.Paths
       .shortestPathWeightedOn(edges, n => n % 3 === 0, k = 2)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 1L), (0L, 1L), (1L, 1L), (2L, 1L)))
@@ -73,7 +73,7 @@ class Round30Spec extends AnyFunSuite {
       .toDF("l_orderkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("graft_ri").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = graft.ops.Composite33.coPurchaseWeightedEdges(spark, dir)
+    val got = graft.ops.graph.CoPurchase.coPurchaseWeightedEdges(spark, dir)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 2L, 3L), (2L, 1L, 3L), (1L, 3L, 1L),
       (3L, 1L, 1L), (2L, 3L, 1L), (3L, 2L, 1L)))

@@ -71,7 +71,7 @@ class Round31Spec extends AnyFunSuite {
     // each -> the coalesce path). m = 4.
     val half = Seq((0L, 50L), (0L, 100L), (1L, 51L), (2L, 103L))
       .toDF("src", "dst")
-    val got = graft.ops.Composite34.modularityOn(half)
+    val got = graft.ops.graph.Community.modularityOn(half)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     def q(we: Long, ds: Long): Double =
       math.floor((we.toDouble / 4 - (ds.toDouble / 8) * (ds.toDouble / 8)) * 1e6 + 0.5) / 1e6

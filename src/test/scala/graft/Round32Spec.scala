@@ -34,7 +34,7 @@ class Round32Spec extends AnyFunSuite {
     // cut -> 0.0.
     val half = Seq((0L, 50L), (0L, 100L), (1L, 51L), (2L, 103L))
       .toDF("src", "dst")
-    val got = graft.ops.Composite35.conductanceOn(half)
+    val got = graft.ops.graph.Community.conductanceOn(half)
       .as[(Long, Long, Long, Option[Double])].collect().toSeq
     assert(got == Seq(
       (0L, 4L, 0L, Some(0.0)), (1L, 2L, 0L, Some(0.0)),
@@ -45,7 +45,7 @@ class Round32Spec extends AnyFunSuite {
     // Single edge inside one community: vol = 2m, denominator
     // min(vol, 2m - vol) = 0 -> conductance NULL via nullif.
     val half = Seq((0L, 50L)).toDF("src", "dst")
-    val got = graft.ops.Composite35.conductanceOn(half)
+    val got = graft.ops.graph.Community.conductanceOn(half)
       .as[(Long, Long, Long, Option[Double])].collect().toSeq
     assert(got == Seq((0L, 2L, 0L, None)))
   }

@@ -21,7 +21,7 @@ class Round33Spec extends AnyFunSuite {
     // Jaccard: (20,40)=2/3, (0,40)=1/2, (0,20)=1/3.
     val half = Seq((0L, 1L), (1L, 20L), (1L, 40L), (3L, 20L),
       (3L, 40L), (20L, 60L)).toDF("src", "dst")
-    val got = graft.ops.Composite36.jaccardLinkpredOn(half)
+    val got = graft.ops.graph.LinkPrediction.jaccardLinkpredOn(half)
       .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       (20L, 40L, 2L, 3L, 2L, 0.666667),
@@ -33,7 +33,7 @@ class Round33Spec extends AnyFunSuite {
     // Triangle 20-40, 20-1, 1-40: wedge through 1 yields (20,40) but
     // the pair IS an edge -> no output rows at all.
     val half = Seq((20L, 40L), (1L, 20L), (1L, 40L)).toDF("src", "dst")
-    assert(graft.ops.Composite36.jaccardLinkpredOn(half).count() == 0L)
+    assert(graft.ops.graph.LinkPrediction.jaccardLinkpredOn(half).count() == 0L)
   }
 
   // ---- graph_rich_club -------------------------------------------------
@@ -44,7 +44,7 @@ class Round33Spec extends AnyFunSuite {
     // k=2: N={3} -> denominator 0 -> NULL. k>=3: N=0 -> NULL.
     val half = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
       .toDF("src", "dst")
-    val got = graft.ops.Composite36.richClubOn(half)
+    val got = graft.ops.graph.Structure.richClubOn(half)
       .as[(Long, Long, Long, Option[Double])].collect().toSeq
     assert(got == Seq(
       (1L, 3L, 3L, Some(1.0)), (2L, 1L, 0L, None),
@@ -63,7 +63,7 @@ class Round33Spec extends AnyFunSuite {
     val half = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (3L, 6L))
       .toDF("src", "dst")
     val sym = half.unionAll(half.select($"dst".as("src"), $"src".as("dst")))
-    val got = graft.ops.Composite36.harmonicOn(sym, seeds = 3, k = 3)
+    val got = graft.ops.graph.Centrality.harmonicOn(sym, seeds = 3, k = 3)
       .as[(Long, Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       (2L, 2L, 2L, 2L, 1L, 20L, 3.333333),
@@ -79,7 +79,7 @@ class Round33Spec extends AnyFunSuite {
     val half = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (10L, 11L))
       .toDF("src", "dst")
     val sym = half.unionAll(half.select($"dst".as("src"), $"src".as("dst")))
-    val got = graft.ops.Composite36.harmonicOn(sym, seeds = 3, k = 3)
+    val got = graft.ops.graph.Centrality.harmonicOn(sym, seeds = 3, k = 3)
       .as[(Long, Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       (1L, 4L, 4L, 0L, 0L, 24L, 4.0),

@@ -17,7 +17,7 @@ class Round36Spec extends AnyFunSuite {
     // degree-3 hub (knn 3.0); the hub's three endpoints all look at
     // degree-1 leaves (knn 1.0).
     val half = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("src", "dst")
-    val got = graft.ops.Composite39.avgNeighborDegreeOn(half)
+    val got = graft.ops.graph.Structure.avgNeighborDegreeOn(half)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq((1L, 3L, 3L, 9L, 3.0), (3L, 1L, 3L, 3L, 1.0)))
   }

@@ -135,7 +135,7 @@ class Round48Spec extends AnyFunSuite {
     (es ++ es.map(_.swap)).toDF("src", "dst")
 
   test("eigenvectorOn: the triangle's uniform vector is a fixed point") {
-    val got = graft.ops.Composite65.eigenvectorOn(
+    val got = graft.ops.graph.Centrality.eigenvectorOn(
       sym(Seq((0L, 1L), (1L, 2L), (2L, 0L))))
       .as[(Long, Double)].collect().toSeq
     val third = math.floor(1.0 / 3 * 1e12 + 0.5) / 1e12
@@ -146,7 +146,7 @@ class Round48Spec extends AnyFunSuite {
     // K1,3 is bipartite: L1 power iteration alternates between the
     // uniform state and (1/2, 1/6, 1/6, 1/6); 5 iterations (odd)
     // land on the latter — fixed-iteration semantics, documented.
-    val got = graft.ops.Composite65.eigenvectorOn(
+    val got = graft.ops.graph.Centrality.eigenvectorOn(
       sym(Seq((0L, 1L), (0L, 2L), (0L, 3L))))
       .as[(Long, Double)].collect().toMap
     assert(math.abs(got(0L) - 0.5) < 1e-9)

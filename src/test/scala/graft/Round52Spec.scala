@@ -61,7 +61,7 @@ class Round52Spec extends AnyFunSuite {
     // degree. AA = 1/ln(2) = 1.442695 (6-dp floor), PA = 2·3.
     val half = Seq((7L, 20L), (7L, 40L), (20L, 101L), (40L, 201L),
       (40L, 301L)).toDF("src", "dst")
-    val got = graft.ops.Composite69.adamicAdarOn(half)
+    val got = graft.ops.graph.LinkPrediction.adamicAdarOn(half)
       .as[(Long, Long, Long, Long, Long, Double, Long, Double)]
       .collect().toSeq
     assert(got == Seq((20L, 40L, 1L, 2L, 3L, 1.442695, 6L, 0.25)))
@@ -70,7 +70,7 @@ class Round52Spec extends AnyFunSuite {
   test("adamicAdarOn: an adjacent candidate pair is anti-joined away") {
     val half = Seq((7L, 20L), (7L, 40L), (20L, 40L), (20L, 101L),
       (40L, 201L)).toDF("src", "dst")
-    assert(graft.ops.Composite69.adamicAdarOn(half).isEmpty)
+    assert(graft.ops.graph.LinkPrediction.adamicAdarOn(half).isEmpty)
   }
 
   // ---- evt_ewma_chart ------------------------------------------------------

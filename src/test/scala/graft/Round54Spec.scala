@@ -21,7 +21,7 @@ class Round54Spec extends AnyFunSuite {
   test("katzOn: triangle walk counts double per hop — katz = 168/512 exactly") {
     // Every triangle node: w1 = 2, w2 = 4, w3 = 8;
     // katz = (64·2 + 8·4 + 8)/512 = 0.328125 (dyadic — bit-exact).
-    val got = graft.ops.Composite73.katzOn(
+    val got = graft.ops.graph.Centrality.katzOn(
       sym(Seq((0L, 1L), (1L, 2L), (2L, 0L))))
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
@@ -33,7 +33,7 @@ class Round54Spec extends AnyFunSuite {
   test("katzOn: star center accumulates leaf walks — 225/512 vs 91/512") {
     // K1,3: center w = (3,3,9), leaf w = (1,3,3);
     // katz_center = 225/512, katz_leaf = 91/512.
-    val got = graft.ops.Composite73.katzOn(
+    val got = graft.ops.graph.Centrality.katzOn(
       sym(Seq((0L, 1L), (0L, 2L), (0L, 3L))))
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got.head == ((0L, 3L, 3L, 9L, 0.439453125)))

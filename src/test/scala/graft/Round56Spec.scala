@@ -177,28 +177,28 @@ class Round56Spec extends AnyFunSuite {
   // ---- memo reset (Bench's timed-rebuild hook) ------------------------------
 
   test("DiskMemo.reset: rebuild after reset is cell-identical to the memoized read") {
-    val before = graft.ops.Composite36
+    val before = graft.ops.graph.LinkPrediction
       .sharedLinkpredCandidates(spark, TestSpark.sf).collect().toSet
     graft.ops.DiskMemo.reset()
-    val after = graft.ops.Composite36
+    val after = graft.ops.graph.LinkPrediction
       .sharedLinkpredCandidates(spark, TestSpark.sf).collect().toSet
     assert(before == after)
   }
 
   test("DiskMemo.reset(tag): scoped reset rebuilds only that table; " +
       "edge view rebuild is cell-identical") {
-    val edgesBefore = graft.ops.Composite4
+    val edgesBefore = graft.ops.graph.CoPurchase
       .coPurchaseHalfEdges(spark, TestSpark.sf).collect().toSet
     // A fresh-build pass must equal the memoized read (the DiskMemo
     // determinism contract extended to the r18 edge view).
-    val fresh = graft.ops.Composite4
+    val fresh = graft.ops.graph.CoPurchase
       .coPurchaseHalfEdgesBuild(spark, TestSpark.sf).collect().toSet
     assert(edgesBefore == fresh)
     // Scoped reset of an UNRELATED tag must leave the edge view
     // memoized (same parquet LOCATION, no rebuild — compare paths,
     // not analyzed-plan strings, whose expression ids differ per
     // analysis).
-    def edgeLoc() = graft.ops.Composite4.coPurchaseHalfEdges(spark, TestSpark.sf)
+    def edgeLoc() = graft.ops.graph.CoPurchase.coPurchaseHalfEdges(spark, TestSpark.sf)
       .queryExecution.optimizedPlan.collectLeaves().collect {
         case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           r.relation match {
@@ -213,21 +213,44 @@ class Round56Spec extends AnyFunSuite {
     assert(p1 == p2, "scoped reset of another tag must not evict the edge view")
     // Scoped reset of ITS tag rebuilds to cell-identical content.
     graft.ops.DiskMemo.reset("copurchase_half")
-    val edgesAfter = graft.ops.Composite4
+    val edgesAfter = graft.ops.graph.CoPurchase
       .coPurchaseHalfEdges(spark, TestSpark.sf).collect().toSet
     assert(edgesBefore == edgesAfter)
   }
 
+  /** Cell content of the memoized BFS seeds and levels. */
+  private def bfsSig() = {
+    val (seeds, levels) = graft.ops.GraphBfs
+      .sharedLevels(spark, TestSpark.sf)
+    (seeds.collect().toSet, levels.map(_.collect().toSet))
+  }
+
   test("GraphBfs.reset: levels rebuilt after reset are cell-identical") {
-    def sig() = {
-      val (seeds, levels) = graft.ops.GraphBfs
-        .sharedLevels(spark, TestSpark.sf, seeds = 3, k = 3)
-      (seeds.collect().toSet, levels.map(_.collect().toSet))
-    }
-    val a = sig()
+    val a = bfsSig()
     graft.ops.GraphBfs.reset()
-    val b = sig()
+    val b = bfsSig()
     assert(a == b)
+  }
+
+  test("GraphBfs.reset: DiskMemo.reset() alone also rebuilds seeds and " +
+      "levels, cell-identical to the first build") {
+    val a = bfsSig()
+    graft.ops.DiskMemo.reset()
+    val b = bfsSig()
+    assert(a == b)
+  }
+
+  test("GraphBfs.reset: concurrent sharedLevels callers get identical " +
+      "seeds and levels without failing") {
+    val want = bfsSig()
+    graft.ops.GraphBfs.reset()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = Seq.fill(2)(pool.submit(
+        new java.util.concurrent.Callable[Any] { def call(): Any = bfsSig() }))
+      val got = calls.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+      assert(got.forall(_ == want))
+    } finally pool.shutdown()
   }
 
   test("Scans.tmp: same basename under different parents gets distinct paths") {

@@ -20,8 +20,8 @@ class Round58Spec extends AnyFunSuite {
 
   test("sharedLevels == levelsOn: seeds and every level cell-identical") {
     val (mSeeds, mLevels) = graft.ops.GraphBfs
-      .sharedLevels(spark, TestSpark.sf, seeds = 3, k = 3)
-    val edges = graft.ops.Composite4
+      .sharedLevels(spark, TestSpark.sf)
+    val edges = graft.ops.graph.CoPurchase
       .coPurchaseEdges(spark, TestSpark.sf).localCheckpoint()
     val (pSeeds, pLevels) = graft.ops.GraphBfs.levelsOn(edges, 3, 3)
     assert(mSeeds.collect().toSet == pSeeds.collect().toSet)

@@ -33,7 +33,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("coPurchaseHalfEdges: each unordered pair once; symmetric closure matches the naive build") {
-    val half = graft.ops.Composite4.coPurchaseHalfEdges(spark, sf)
+    val half = graft.ops.graph.CoPurchase.coPurchaseHalfEdges(spark, sf)
     val hrows = half.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(hrows.nonEmpty)
     assert(hrows.forall { case (a, b) => a < b }, "half edges must be src < dst")
@@ -41,7 +41,7 @@ class Round7Spec extends AnyFunSuite {
     // the symmetric closure must equal the reference definition:
     // distinct (a, b), a != b, sharing an order — built here the
     // naive both-directions way.
-    val full = graft.ops.Composite4.coPurchaseEdges(spark, sf)
+    val full = graft.ops.graph.CoPurchase.coPurchaseEdges(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val li = graft.util.Tables.load(spark, sf, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).collect()
@@ -54,7 +54,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("graph_pagerank: rank mass is conserved and every node surfaces") {
-    val df = graft.ops.Composite4.queries("graph_pagerank")(spark, sf)
+    val df = graft.ops.graph.Graph.queries("graph_pagerank")(spark, sf)
     // declared query: rank broadcasts reach the plan (no edge shuffle
     // per iteration)
     assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
@@ -70,16 +70,24 @@ class Round7Spec extends AnyFunSuite {
 
   test("graph_pagerank: shuffle-join fallback plans without broadcasts and agrees") {
     // the scale path for rank tables past the broadcast budget:
-    // same algebra, co-partitioned shuffle joins. Disable AQE's
-    // size-based broadcast promotion so the hint-free plan is the
-    // honest shuffle shape.
+    // same algebra, co-partitioned shuffle joins. rowCap=0 puts the
+    // node count over the Hints gate (HintsSpec's withRowCap), and
+    // AQE's size-based broadcast promotion is off so the hint-free
+    // plan is the honest shuffle shape.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val edges = graft.ops.Composite4.coPurchaseEdges(spark, sf)
-      val bc = graft.ops.Composite4.pageRankOn(edges, 2, 0.85).collect()
-      val sj = graft.ops.Composite4
-        .pageRankOn(edges, 2, 0.85, broadcastRanks = false)
+      val edges = graft.ops.graph.CoPurchase.coPurchaseEdges(spark, sf)
+      val bc = graft.Graft.pageRank(edges, 2, 0.85).collect()
+      val sj = TestSpark.globalConfLock.synchronized {
+        val prevCap = sys.props.get("graft.broadcast.rowCap")
+        sys.props("graft.broadcast.rowCap") = "0"
+        try graft.Graft.pageRank(edges, 2, 0.85)
+        finally prevCap match {
+          case Some(v) => sys.props("graft.broadcast.rowCap") = v
+          case None    => sys.props -= "graft.broadcast.rowCap"
+        }
+      }
       val plan = sj.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
         s"fallback still broadcasts:\n${plan.take(1500)}")
@@ -214,7 +222,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("graph_degree_dist: handshake identity — degree-weighted node count equals directed edge count") {
-    val dist = graft.ops.Composite5.queries("graph_degree_dist")(spark, sf).collect()
+    val dist = graft.ops.graph.Graph.queries("graph_degree_dist")(spark, sf).collect()
     val weighted = dist.map(r => r.getLong(0) * r.getLong(1)).sum
     val li = graft.util.Tables.load(spark, sf, "lineitem")
       .select(col("l_orderkey").as("k"), col("l_partkey").as("src"))
