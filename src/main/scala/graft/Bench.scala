@@ -183,11 +183,11 @@ object Bench {
       }),
       "memo_grams3" -> ((s, d) => {
         graft.ops.DiskMemo.reset("grams3")
-        graft.ops.LlmOps19.sharedGrams(s, d)
+        graft.ops.dedup.Shingles.sharedGrams(s, d)
       }),
       "memo_shingle_postings" -> ((s, d) => {
         graft.ops.DiskMemo.reset("shingle_postings")
-        graft.ops.LlmOps19.sharedPostings(s, d)
+        graft.ops.dedup.Shingles.sharedPostings(s, d)
       }),
       "memo_bigramsets" -> ((s, d) => {
         graft.ops.DiskMemo.reset("bigramsets")

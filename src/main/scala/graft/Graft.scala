@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayMaxLE, CosineSim}
-import graft.ops.{LlmOps, LlmOps2, LlmOps3, LlmOps4, Relational}
+import graft.ops.{LlmOps2, LlmOps3, LlmOps4, Relational}
+import graft.ops.dedup.{Clusters, Keys, NearDup}
+import graft.ops.graph.Community
 
 /** User-facing facade: the engine's reusable operations as a plain
   * library API over DataFrames (the driver-contract surface in
@@ -26,12 +28,12 @@ object Graft {
   /** MinHash-LSH near-duplicate pairs over (doc_id, text) with exact
     * Jaccard >= 0.8 verification. Banded candidate generation — never
     * an all-pairs product. */
-  def nearDuplicates(docs: DataFrame): DataFrame = LlmOps.nearDupPairs(docs)
+  def nearDuplicates(docs: DataFrame): DataFrame = NearDup.nearDupPairs(docs)
 
   /** SimHash near-duplicate pairs over (doc_id, text): 64-bit
     * signatures, 16-bit band blocking, Hamming <= maxHamming. */
   def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame =
-    LlmOps2.simhashPairs(docs, maxHamming)
+    NearDup.simhashPairs(docs, maxHamming)
 
   /** LSH-bucketed approximate top-k neighbours over
     * (vec_id, embedding) for the rows matching isQuery. */
@@ -60,7 +62,7 @@ object Graft {
     * content hash. (Same definition the oracle-checked
     * `llm_dedup_exact` query uses.) */
   def exactDedupSurvivors(df: DataFrame, keyCol: Column, payload: Column): DataFrame =
-    LlmOps.exactSurvivorKeys(df, keyCol, payload)
+    Keys.exactSurvivorKeys(df, keyCol, payload)
 
   /** Bloom-prefiltered membership: rows of `incoming` whose `key`
     * exists in `seen`. The bloom prunes the probe side BEFORE the
@@ -129,7 +131,7 @@ object Graft {
     * lineage truncated per round — the pairs→clusters tail of a dedup
     * pipeline. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
-    LlmOps4.connectedComponents(edges, maxIter)
+    Community.connectedComponents(edges, maxIter)
 
   /** Deterministic hash-threshold keep predicate: true iff the 2-hex
     * md5 prefix of (salt-stamped) `id` is <= hexMax ("28" keeps
@@ -152,7 +154,7 @@ object Graft {
     * its min-id representative and a survivor flag. */
   def semDedup(vectors: DataFrame, idCol: String, clusterCol: String,
       embCol: String, threshold: Double): DataFrame =
-    LlmOps4.semDedup(vectors, idCol, clusterCol, embCol, threshold)
+    Clusters.semDedup(vectors, idCol, clusterCol, embCol, threshold)
 
   /** Fixed-size overlapping character chunks (RAG / context-window
     * prep): one (id, start, chunk) row per stride offset; pure map
@@ -209,7 +211,7 @@ object Graft {
     * One shuffle on the span hash + one per-doc aggregate. */
   def dupSpanFraction(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame =
-    graft.ops.LlmOps5.dupSpanFractions(docs, idCol, textCol, n)
+    NearDup.dupSpanFractions(docs, idCol, textCol, n)
 
   /** 16-bit Morton (Z-order) interleave of two 8-bit column values —
     * the clustering key behind the sink_zorder layout rewrite

@@ -57,7 +57,6 @@ object SparkEntry {
       (Composite18.queries, Composite18.oracle),
       (Composite19.queries, Composite19.oracle),
       (LlmOps12.queries, LlmOps12.oracle),
-      (LlmOps10.queries, LlmOps10.oracle),
       (LlmOps11.queries, LlmOps11.oracle),
       (LlmOps9.queries, LlmOps9.oracle),
       (SqlSurface.queries, SqlSurface.oracle),
@@ -73,12 +72,12 @@ object SparkEntry {
       (Composite34.queries, Composite34.oracle),
       (Composite35.queries, Composite35.oracle),
       (graph.Graph.queries, graph.Graph.oracle),
+      (dedup.Dedup.queries, dedup.Dedup.oracle),
       (Composite37.queries, Composite37.oracle),
       (Composite38.queries, Composite38.oracle),
       (Composite39.queries, Composite39.oracle),
       (Composite40.queries, Composite40.oracle),
       (Composite41.queries, Composite41.oracle),
-      (Composite42.queries, Composite42.oracle),
       (Composite43.queries, Composite43.oracle),
       (Composite44.queries, Composite44.oracle),
       (Composite45.queries, Composite45.oracle),
@@ -99,13 +98,11 @@ object SparkEntry {
       (Composite63.queries, Composite63.oracle),
       (Composite66.queries, Composite66.oracle),
       (LlmOps18.queries, LlmOps18.oracle),
-      (LlmOps19.queries, LlmOps19.oracle),
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
       (Composite69.queries, Composite69.oracle),
       (LlmOps20.queries, LlmOps20.oracle),
       (Composite72.queries, Composite72.oracle),
-      (LlmOps21.queries, LlmOps21.oracle),
       (Composite73.queries, Composite73.oracle),
       (Composite75.queries, Composite75.oracle),
       (Composite76.queries, Composite76.oracle),

@@ -5,68 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.32 — round-15 fifth batch: cross-source duplicate
-  * flow, new-vs-returning user split, and year-over-year growth.
+/** SURVEY.md §2.32 — round-15 fifth batch: new-vs-returning user
+  * split and year-over-year growth.
   *
-  * Scale shapes: cross-source dup flow reuses the
-  * exact-dedup hash groupBy and explodes only MULTI-SOURCE groups
-  * (bounded by the duplicate population, not the corpus); the user
-  * split is two chained aggregates over (user, day); YoY is a
-  * month-aggregate self-join on month−12 (gap-safe, like the
-  * seasonal-naive backtest).
+  * Scale shapes: the user split is two chained aggregates over
+  * (user, day); YoY is a month-aggregate self-join on month−12
+  * (gap-safe, like the seasonal-naive backtest).
   *
   * Determinism: counts exact; growth ratios assemble once from
   * exact sums via shared IEEE text.
   */
 object Composite16 {
-
-  // ---- llm_dedup_cross_source --------------------------------------
-  // Where do duplicated document OPENINGS flow between sources? Keys
-  // each doc by the md5 of its first 30 words (whole-document hashes
-  // never cross a source boundary in this corpus — verified at two
-  // SFs — so the doc-level matrix would be vacuously empty; shared
-  // openings are the llm_prefix_dedup signal, here cross-tabulated),
-  // keeps only keys spanning ≥2 sources, and counts doc pairs per
-  // unordered source pair. The pair explosion runs over per-hash
-  // distinct-source sets (bounded by the duplicate population and
-  // the source alphabet, not the corpus).
-  private def crossSourceDup(s: SparkSession, dir: String): DataFrame = {
-    val bySrc = load(s, dir, "documents")
-      .select(md5(expr("array_join(slice(split(text, ' '), 1, 30), ' ')"))
-        .as("h"), col("source"))
-      .groupBy(col("h"), col("source"))
-      .agg(count(lit(1)).as("c"))
-    val sets = bySrc
-      .groupBy(col("h"))
-      .agg(sort_array(collect_list(struct(col("source"), col("c"))))
-        .as("ss"))
-      .filter(size(col("ss")) >= 2)
-    sets
-      .select(explode(expr(
-        """flatten(transform(ss, (a, i) ->
-          |  transform(slice(ss, i + 2, size(ss)),
-          |    b -> struct(a.source AS sa, b.source AS sb,
-          |                a.c * b.c AS pairs))))""".stripMargin)).as("p"))
-      .groupBy(col("p.sa").as("source_a"), col("p.sb").as("source_b"))
-      .agg(count(lit(1)).as("n_hashes"),
-        sum(col("p.pairs")).cast("bigint").as("n_doc_pairs"))
-      .orderBy("source_a", "source_b")
-  }
-
-  private val crossSourceDupOracle =
-    """WITH bs AS (
-      |  SELECT md5(array_to_string(
-      |      list_slice(string_split(text, ' '), 1, 30), ' ')) AS h,
-      |    source, CAST(count(*) AS BIGINT) AS c
-      |  FROM documents GROUP BY 1, 2),
-      |p AS (
-      |  SELECT a.source AS source_a, b.source AS source_b,
-      |    a.c * b.c AS pairs
-      |  FROM bs a JOIN bs b ON a.h = b.h AND a.source < b.source)
-      |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_hashes,
-      |  CAST(sum(pairs) AS BIGINT) AS n_doc_pairs
-      |FROM p GROUP BY source_a, source_b
-      |ORDER BY source_a, source_b""".stripMargin
 
   // ---- evt_new_vs_returning ----------------------------------------
   // Per-day split of active users into first-seen-today vs returning
@@ -145,13 +94,11 @@ object Composite16 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dedup_cross_source" -> (crossSourceDup _),
     "evt_new_vs_returning" -> (newVsReturning _),
     "win_year_over_year" -> (yearOverYear _)
   )
 
   val oracle: Map[String, String] = Map(
-    "llm_dedup_cross_source" -> crossSourceDupOracle,
     "evt_new_vs_returning" -> newVsReturningOracle,
     "win_year_over_year" -> yearOverYearOracle
   )

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.dedup.Keys
 import graft.util.Tables._
 
 /** SURVEY.md §2.33 — round-15 sixth batch: leaderboard rank
@@ -75,23 +76,17 @@ object Composite17 {
   // Templated-document detection: a doc is "templated" when BOTH its
   // 30-word opening and its 30-word closing are shared with at least
   // one other document — the boilerplate-page signature (shared
-  // greeting + shared footer). Two dense_rank hash exchanges (the
-  // line-dedup discipline), combined per doc, surfaced per source.
+  // greeting + shared footer). Two dense_rank hash exchanges
+  // ([[Keys.sharedKeyFlag]] on the opening [[Keys.prefixHash]] and on
+  // the closing hash), combined per doc, surfaced per source.
   private def templateDetect(s: SparkSession, dir: String): DataFrame = {
     val d = load(s, dir, "documents")
       .withColumn("t", split(col("text"), " "))
       .filter(size(col("t")) >= 60)
       .select(col("doc_id"), col("source"),
-        md5(expr("array_join(slice(t, 1, 30), ' ')")).as("ph"),
+        Keys.prefixHash(col("t"), 30).as("ph"),
         md5(expr("array_join(slice(t, -30, 30), ' ')")).as("sh"))
-    def dupFlag(df: DataFrame, h: String, flag: String): DataFrame = {
-      val byH = Window.partitionBy(h).orderBy("doc_id")
-      val byHAll = Window.partitionBy(h)
-      df.withColumn("dr", dense_rank().over(byH))
-        .withColumn(flag, max(col("dr")).over(byHAll) >= 2)
-        .drop("dr")
-    }
-    dupFlag(dupFlag(d, "ph", "pdup"), "sh", "sdup")
+    Keys.sharedKeyFlag(Keys.sharedKeyFlag(d, "ph", "pdup"), "sh", "sdup")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("pdup") && col("sdup"), 1L).otherwise(0L))

@@ -7,20 +7,15 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** SURVEY.md §2.35 — round-15 eighth batch: fulfillment SLA
-  * percentiles, the cumulative adoption curve, and a quality-score
-  * vs duplication calibration audit.
+  * percentiles and the cumulative adoption curve.
   *
   * Scale shapes: ship delay is one fact join on orderkey (both
   * sides shuffle-partitioned on the key) reduced per priority;
   * adoption is two chained aggregates plus a horizon-bounded
-  * running sum; the calibration audit combines two per-doc signals
-  * computed in one text scan with a dense_rank hash exchange, then
-  * reduces to 10 deciles.
+  * running sum.
   *
   * Determinism: dates exact; delay days exact ints; percentile
-  * interpolation over exact values; TTR ratios exact-count
-  * divisions; decile assignment is ntile over a (score, doc_id)
-  * unique order.
+  * interpolation over exact values.
   */
 object Composite18 {
 
@@ -106,73 +101,15 @@ object Composite18 {
       |FROM daily CROSS JOIN pop
       |ORDER BY d""".stripMargin
 
-  // ---- llm_score_vs_dup --------------------------------------------
-  // Does lexical quality predict duplication? Type-token ratio
-  // deciles (the llm_quality_score TTR axis) cross-tabulated with
-  // the duplicated-opening flag (the llm_dataset_card signal): per
-  // decile, mean TTR and the dup rate — the calibration table a
-  // filtering pipeline checks before trusting one signal as a proxy
-  // for the other. One text scan computes both; ntile over the
-  // unique (ttr, doc_id) order is deterministic.
-  private def scoreVsDup(s: SparkSession, dir: String): DataFrame = {
-    val d = load(s, dir, "documents")
-      .withColumn("w", split(col("text"), " "))
-      .select(col("doc_id"),
-        round(size(array_distinct(col("w"))).cast("double") /
-          size(col("w")).cast("double"), 6).as("ttr"),
-        md5(expr("array_join(slice(w, 1, 30), ' ')")).as("ph"))
-    val byH = Window.partitionBy("ph").orderBy("doc_id")
-    val byHAll = Window.partitionBy("ph")
-    val flagged = d
-      .withColumn("dr", dense_rank().over(byH))
-      .withColumn("pdup", max(col("dr")).over(byHAll) >= 2)
-    // r18 retrofit: the decile came from a bare document-sized ntile
-    // window — one task holds the whole corpus at target scale.
-    // DistRank.globalNtile is SQL-ntile-exact over the same unique
-    // (ttr, doc_id) total order (asserted by the
-    // `agg_ntile_distributed` oracle), so the hash cannot move; the
-    // ~1 s fixed stage cost at bench SF is the documented
-    // rank-family trade for removing the one-task funnel.
-    graft.util.DistRank
-      .globalNtile(flagged, "decile", 10, Seq(col("ttr"), col("doc_id")))
-      .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n_docs"),
-        round(avg(col("ttr")), 6).as("mean_ttr"),
-        round(sum(when(col("pdup"), 1L).otherwise(0L)).cast("double") /
-          count(lit(1)).cast("double"), 6).as("dup_rate"))
-      .orderBy("decile")
-  }
-
-  private val scoreVsDupOracle =
-    """WITH d AS (
-      |  SELECT doc_id,
-      |    round(CAST(len(list_distinct(w)) AS DOUBLE) /
-      |      CAST(len(w) AS DOUBLE), 6) AS ttr,
-      |    md5(array_to_string(list_slice(w, 1, 30), ' ')) AS ph
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      |pd AS (SELECT ph FROM d GROUP BY ph
-      |       HAVING count(DISTINCT doc_id) >= 2),
-      |f AS (
-      |  SELECT d.doc_id, d.ttr, pd.ph IS NOT NULL AS pdup,
-      |    CAST(ntile(10) OVER (ORDER BY d.ttr, d.doc_id) AS BIGINT) AS decile
-      |  FROM d LEFT JOIN pd ON d.ph = pd.ph)
-      |SELECT decile, CAST(count(*) AS BIGINT) AS n_docs,
-      |  round(avg(ttr), 6) AS mean_ttr,
-      |  round(CAST(sum(CASE WHEN pdup THEN 1 ELSE 0 END) AS DOUBLE) /
-      |    CAST(count(*) AS DOUBLE), 6) AS dup_rate
-      |FROM f GROUP BY decile ORDER BY decile""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_ship_delay" -> (shipDelay _),
-    "win_adoption_curve" -> (adoptionCurve _),
-    "llm_score_vs_dup" -> (scoreVsDup _)
+    "win_adoption_curve" -> (adoptionCurve _)
   )
 
   val oracle: Map[String, String] = Map(
     "agg_ship_delay" -> shipDelayOracle,
-    "win_adoption_curve" -> adoptionCurveOracle,
-    "llm_score_vs_dup" -> scoreVsDupOracle
+    "win_adoption_curve" -> adoptionCurveOracle
   )
 }

@@ -5,22 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.41 — round-16 fifth batch: mix-shift decomposition
-  * and the dedup threshold tuning curve.
+/** SURVEY.md §2.41 — round-16 fifth batch: mix-shift decomposition.
   *
-  * Scale shapes: mix-shift reduces the fact table to one
+  * Scale shape: mix-shift reduces the fact table to one
   * (type, half) hash aggregate plus a 2-row totals broadcast —
-  * output bounded by the event-type alphabet; the threshold sweep
-  * reuses the blocked bigram-Jaccard pair plan (LlmOps2.bigramSets
-  * + the shuffle-pinned double verify join) and then explodes each
-  * candidate pair into the ≤7 thresholds it clears — the pair scan
-  * runs ONCE for the whole curve, not once per threshold.
+  * output bounded by the event-type alphabet.
   *
   * Determinism: mix/rate effects assemble from exact integer counts
-  * and exact decimal value sums through identical IEEE trees;
-  * Jaccards are 6-dp rounded with the ≥-threshold comparison on the
-  * rounded value (dedup_ngram discipline), so threshold membership
-  * cannot straddle an ulp.
+  * and exact decimal value sums through identical IEEE trees.
   */
 object Composite24 {
 
@@ -83,98 +75,13 @@ object Composite24 {
       |  ON h0.event_type = h1.event_type
       |ORDER BY h0.event_type""".stripMargin
 
-  // ---- llm_dedup_threshold_sweep -----------------------------------
-  // Dedup threshold tuning curve: how many candidate pairs and how
-  // many distinct documents a bigram-Jaccard filter would flag at
-  // each threshold in {0.3 … 0.9}. One blocked pair scan (the
-  // dedup_ngram plan without its fixed 0.5 cut) feeds every point of
-  // the curve — the membership explode is map-side and bounded by 7
-  // thresholds per pair.
-  private def dedupThresholdSweep(s: SparkSession, dir: String): DataFrame = {
-    // g feeds three consumers (keys, and sets joined twice) — without
-    // the localCheckpoint the tokenize+bigram pipeline re-executes
-    // per consumer (measured 9.7 s; ~4 s with). Document-count-sized.
-    val g = LlmOps2.sharedBigramSets(s, dir)
-      .withColumn("bucket", floor(col("n_tok").cast("double") / 8.0))
-      .localCheckpoint()
-    val keys = g.select(col("doc_id"), col("lang"), col("bucket"))
-    val pairs = keys.as("a").join(keys.as("b"),
-        col("a.lang") === col("b.lang") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val sets = g.select(col("doc_id"), col("bg")).hint("shuffle_merge")
-    val withA = sets.join(pairs, col("doc_id") === col("doc_a"))
-      .select(col("doc_a"), col("doc_b"), col("bg").as("bg_a"))
-    val scored = sets.join(withA, col("doc_id") === col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(graft.functions.SortedJaccard(col("bg"), col("bg_a")), 6)
-          .as("j"))
-      .filter(col("j") >= 0.3)
-      // surviving-pair-sized; consumed by both count branches below
-      .localCheckpoint()
-    val swept = scored
-      .select(col("doc_a"), col("doc_b"), col("j"),
-        explode(expr(
-          "filter(array(0.3D, 0.4D, 0.5D, 0.6D, 0.7D, 0.8D, 0.9D), t -> j >= t)"))
-          .as("threshold"))
-    val pairCounts = swept.groupBy(col("threshold"))
-      .agg(count(lit(1)).as("n_pairs"))
-    val docCounts = swept
-      .select(col("threshold"), explode(array(col("doc_a"), col("doc_b")))
-        .as("doc_id"))
-      .distinct()
-      .groupBy(col("threshold"))
-      .agg(count(lit(1)).as("n_docs_flagged"))
-    pairCounts.join(docCounts, "threshold")
-      .orderBy("threshold")
-  }
-
-  private val dedupThresholdSweepOracle =
-    """WITH t AS (
-      |  SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-      |g AS (
-      |  SELECT doc_id, lang, floor(CAST(len(w) AS DOUBLE) / 8.0) AS bucket,
-      |    list_distinct(list_transform(range(1, len(w)),
-      |      i -> w[i] || ' ' || w[i + 1])) AS bg
-      |  FROM t WHERE len(w) >= 2),
-      |p AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    round(CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) /
-      |      CAST(len(list_distinct(list_concat(a.bg, b.bg))) AS DOUBLE), 6)
-      |      AS j
-      |  FROM g a JOIN g b ON a.lang = b.lang AND a.bucket = b.bucket
-      |    AND a.doc_id < b.doc_id),
-      |sw AS (
-      |  SELECT doc_a, doc_b, j, t.threshold
-      |  -- CAST: bare list literals are DECIMAL(2,1) in DuckDB, and a
-      |  -- decimal threshold column would dtype-mismatch Spark's double
-      |  FROM p, (SELECT CAST(unnest([0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
-      |    AS DOUBLE) AS threshold) t
-      |  WHERE j >= t.threshold),
-      |pc AS (
-      |  SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
-      |  FROM sw GROUP BY 1),
-      |dc AS (
-      |  SELECT threshold, CAST(count(*) AS BIGINT) AS n_docs_flagged
-      |  FROM (SELECT DISTINCT threshold, doc_id
-      |        FROM (SELECT threshold, doc_a AS doc_id FROM sw
-      |              UNION ALL
-      |              SELECT threshold, doc_b FROM sw))
-      |  GROUP BY 1)
-      |SELECT pc.threshold, pc.n_pairs, dc.n_docs_flagged
-      |FROM pc JOIN dc ON pc.threshold = dc.threshold
-      |ORDER BY pc.threshold""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_mix_shift" -> (mixShift _),
-    "llm_dedup_threshold_sweep" -> (dedupThresholdSweep _)
+    "agg_mix_shift" -> (mixShift _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_mix_shift" -> mixShiftOracle,
-    "llm_dedup_threshold_sweep" -> dedupThresholdSweepOracle
+    "agg_mix_shift" -> mixShiftOracle
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.dedup.Shingles
 import graft.util.Tables._
 
 /** SURVEY.md §2.89 (round-17 batch 4) — robust trend estimation and
@@ -107,7 +108,7 @@ object Composite77 {
   // ---- llm_source_novelty --------------------------------------------------
 
   private[graft] def ngramNoveltyOn(docs: DataFrame): DataFrame =
-    ngramNoveltyOnGrams(LlmOps19.grams(docs), docs)
+    ngramNoveltyOnGrams(Shingles.grams(docs), docs)
 
   private[graft] def ngramNoveltyOnGrams(grams: DataFrame,
       docs: DataFrame): DataFrame = {
@@ -144,21 +145,15 @@ object Composite77 {
   // ds is the distinct doc set per h, sorted ascending.
   private def ngramNovelty(s: SparkSession, dir: String): DataFrame =
     noveltyTail(
-      LlmOps19.sharedPostings(s, dir)
+      Shingles.sharedPostings(s, dir)
         .select(element_at(col("ds"), 1).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("nv")),
-      LlmOps19.sharedGrams(s, dir)
+      Shingles.sharedGrams(s, dir)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("tg")),
       load(s, dir, "documents"))
 
   private val ngramNoveltyOracle =
-    """WITH grams AS (
-      |  SELECT DISTINCT doc_id,
-      |    unnest(list_transform(
-      |      generate_series(1, len(string_split(text, ' ')) - 2),
-      |      i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')))
-      |      AS h
-      |  FROM documents WHERE len(string_split(text, ' ')) >= 3),
+    s"""WITH ${Shingles.gramsCte},
       |owners AS (SELECT h, min(doc_id) AS doc_id FROM grams GROUP BY h),
       |novel AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nv
       |  FROM owners GROUP BY 1),

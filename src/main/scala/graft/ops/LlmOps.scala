@@ -1,29 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.CosineSim
 import graft.util.Tables._
 
-/** SURVEY.md §2.11 — LLM-training-data pipeline operators: dedup
-  * (exact + MinHash-LSH near-dup), similarity search, text analysis,
-  * TF-IDF, multimodal projection.
+/** SURVEY.md §2.11 — LLM-training-data pipeline operators:
+  * similarity search, text analysis, TF-IDF, multimodal projection.
   *
-  * Scale design (the point of this module):
-  *  - Exact dedup groups on a content hash — shuffle key is the hash,
-  *    perfectly balanced, no all-pairs anything.
-  *  - Near-dup is MinHash + LSH *banding*: candidate generation is an
-  *    equi-join on (band_idx, band_hash) — the only pairs ever
-  *    materialized are hash-bucket collisions, never the O(n²) cross
-  *    product. Signatures are fixed-seed (no RNG), so results are
-  *    deterministic and re-runnable.
+  * Scale design:
   *  - Similarity search uses the fused codegen kernel
   *    [[graft.functions.CosineSim]] (no per-pair allocation). The
   *    brute-force pair scan is the small-SF baseline; the 100 TB path
-  *    is the same kernel behind an LSH/IVF bucketing join exactly like
-  *    the near-dup banding (bucket on coarse quantization, compare
-  *    within buckets).
+  *    is the same kernel behind an LSH/IVF bucketing join (bucket on
+  *    coarse quantization, compare within buckets).
   *  - k-NN broadcasts the (small) query set so the corpus never
   *    shuffles.
   *  - TF-IDF / text stats are explode → hash-aggregate pipelines;
@@ -31,160 +22,15 @@ import graft.util.Tables._
   */
 object LlmOps {
 
-  // ---------------------------------------------------------- minhash
-
-  private val NumHashes = 32
-  private val BandRows = 4
-  private val NumBands = NumHashes / BandRows
-
-  /** Fixed splitmix64/golden-ratio constants — deterministic across
-    * runs and executors (SURVEY §7.4: no Math.random anywhere). */
-  private def seedA(i: Int): Long = 0x9E3779B97F4A7C15L * (2 * i + 1)
-
-  /** doc_id + SORTED distinct hashed 3-word shingles. The token array
-    * is materialized ONCE per row before the shingle transform —
-    * inlining `split` into the lambda would re-tokenize the text per
-    * shingle element, turning an O(tokens) row into O(tokens²). (A
-    * hash-the-tokens-first variant was measured SLOWER: the second
-    * interpreted HOF pass costs more than the string building saves.)
-    * Sorting once per document is the [[graft.functions.SortedJaccard]]
-    * contract: the pair-verification hot loop then merge-walks with no
-    * per-pair allocation; MinHash minima are order-invariant so the
-    * sort is free for the signature path.
-    */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        sort_array(expr("""array_distinct(transform(sequence(0, size(w) - 3),
-               |  i -> xxhash64(concat_ws(' ',
-               |    element_at(w, i + 1),
-               |    element_at(w, i + 2),
-               |    element_at(w, i + 3)))))""".stripMargin))
-          .as("sh"))
-
-  /** 32-lane MinHash signature as ONE array column, computed per row
-    * by the codegen kernel [[graft.functions.MinHashSig]] — a single
-    * pass over the shingle array with 32 running minima in a long[],
-    * replacing 32 interpreted `array_min(transform(...))` walks
-    * (bit-identical values: the kernel pre-mixes each lane seed the way
-    * `xxhash64(lit(seed), h)` folds it). Per-row, so no shuffle and no
-    * aggregation buffers: an explode -> 32 min() aggregate variant
-    * benchmarked the same in isolation but 2-4x slower inside a long
-    * benchmark run (its hash-aggregate state is the first casualty of
-    * executor-memory pressure). Cheaper hash families were measured
-    * and REJECTED: one-permutation bucketing (short docs leave empty
-    * slots whose shared sentinel manufactures false candidates) and
-    * xor+rotate bijections (correlated minima collapse band diversity)
-    * — independence is what keeps the band join small. */
-  private def signatures(sets: DataFrame): DataFrame =
-    sets.select(col("doc_id"),
-      graft.functions.MinHashSig(col("sh"), NumHashes).as("sig"))
-
-  /** One xxhash64 per 4-element band of the signature array — longs
-    * hashed directly, no string casts. */
-  private def bandHashes: Column =
-    array((0 until NumBands).map { b =>
-      xxhash64((0 until BandRows).map(r =>
-        col("sig").getItem(b * BandRows + r)): _*)
-    }: _*)
-
   // ---------------------------------------------------------- queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Exact dedup on md5(text): deterministic survivor = min doc_id
-    // per hash (dropDuplicates' arbitrary pick would leak into the
-    // per-source counts), then survivors per source.
-    "llm_dedup_exact" -> (dedupExact _),
-    // MinHash + LSH banding; candidates only from band-bucket
-    // collisions; exact Jaccard verification on the candidate set.
-    // No oracle (algorithmic, SURVEY §1.5 r4) — the ScalaTest property
-    // suite plants near-duplicates and asserts recall.
-    "llm_dedup_near" -> ((s: SparkSession, dir: String) =>
-      nearDupPairs(load(s, dir, "documents"))),
-    // Oracle-checked twin of llm_dedup_near (SURVEY §2 round-17 row):
-    // the IDENTICAL LSH plan, hash-compared against DuckDB's exact
-    // all-pairs shingle Jaccard. MinHash is deterministic, so on the
-    // fixed corpus the result either equals the exhaustive answer or
-    // it doesn't — the compare graduates the banding's recall from a
-    // ScalaTest planted-pair claim into the driver's per-round
-    // signal (verified cell-exact at sf0.01: 25/25 pairs, recall 1.0).
-    "llm_dedup_near_verified" -> ((s: SparkSession, dir: String) =>
-      nearDupPairs(load(s, dir, "documents"))),
     "llm_simsearch_topk" -> (simsearchTopK _),
     "llm_simsearch_knn" -> (simsearchKnn _),
     "llm_text_stats" -> (textStats _),
     "llm_tfidf" -> (tfidf _),
     "llm_multimodal_cols" -> (multimodal _)
   )
-
-  /** Deterministic exact-dedup survivor map: (payload md5 `h`,
-    * minimum key `survivor_key`). SINGLE definition of the survivor
-    * aggregate — the oracle-checked query below, the public
-    * [[graft.Graft.exactDedupSurvivors]] facade, and
-    * [[LlmOps4]]'s cluster edges all delegate here. */
-  private[graft] def exactSurvivorsByHash(df: DataFrame, keyCol: Column,
-      payload: Column): DataFrame =
-    df.groupBy(md5(payload).as("h")).agg(min(keyCol).as("survivor_key"))
-
-  /** Survivor keys only (see [[exactSurvivorsByHash]]). */
-  private[graft] def exactSurvivorKeys(df: DataFrame, keyCol: Column,
-      payload: Column): DataFrame =
-    exactSurvivorsByHash(df, keyCol, payload).select("survivor_key")
-
-  // Exact dedup on md5(text): deterministic survivor = min doc_id per
-  // hash (dropDuplicates' arbitrary pick would leak into the
-  // per-source counts), then survivors per source.
-  private def dedupExact(s: SparkSession, dir: String): DataFrame = {
-      val d = load(s, dir, "documents")
-      val survivors = exactSurvivorKeys(d, col("doc_id"), col("text"))
-        .withColumnRenamed("survivor_key", "doc_id")
-      d.join(survivors, "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("source")
-  }
-
-  /** MinHash + LSH banded near-duplicate detection over any relation
-    * with (doc_id, text). Candidates come only from band-bucket
-    * collisions; exact Jaccard >= 0.8 verification on candidates. */
-  private[graft] def nearDupPairs(docs: DataFrame): DataFrame = {
-      val sets = shingleSets(docs)
-      val banded = signatures(sets)
-        .select(col("doc_id"), posexplode(bandHashes))
-        .toDF("doc_id", "band_idx", "band_hash")
-      // shuffle_merge hints: the two sides of the self-join are the
-      // SAME subtree, so forcing a shuffle join makes both sides'
-      // exchanges canonically identical and ReuseExchange computes the
-      // whole shingle->signature->band pipeline ONCE (a broadcast-hash
-      // plan would build and stream it as two separate executions —
-      // measured ~2x the band-stage cost).
-      val cand = banded.as("x").hint("shuffle_merge")
-        .join(banded.as("y").hint("shuffle_merge"),
-          col("x.band_idx") === col("y.band_idx") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-      // Verify joins: the sets side is hint-pinned to SHUFFLE on
-      // doc_id in both joins, so the two exchanges are canonically
-      // identical and ReuseExchange computes the shingle pipeline ONCE
-      // (a broadcast-candidates plan streamed sets through a BHJ with
-      // no reusable exchange — the shingles were computed twice). The
-      // array-carrying side still never broadcasts: shingle arrays
-      // would cap at the broadcast limit at scale.
-      val setsHinted = sets.hint("shuffle_merge")
-      val withA = setsHinted.join(cand, col("doc_id") === col("doc_a"))
-        .select(col("doc_a"), col("doc_b"), col("sh").as("sh_a"))
-      setsHinted.join(withA, col("doc_id") === col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("sh").as("sh_b"), col("sh_a"))
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.SortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= 0.8)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc_a", "doc_b")
-  }
 
   // Brute-force top-10 most similar pairs (small-SF baseline; see
   // scale note above). Norms are precomputed ONCE PER VECTOR, so the
@@ -324,37 +170,6 @@ object LlmOps {
   }
 
   val oracle: Map[String, String] = Map(
-    // Exhaustive all-pairs ground truth for the LSH pipeline: raw
-    // string 3-gram shingle sets (the engine hashes shingles to
-    // longs — identical SET CARDINALITIES barring a 64-bit collision,
-    // so the Jaccard doubles are bit-identical), intersections via
-    // the shared-shingle equi-join (only co-shingled pairs surface;
-    // disjoint pairs can't reach 0.8 anyway). Threshold compares the
-    // UNROUNDED double on both sides; round(6) is presentation.
-    "llm_dedup_near_verified" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id, w, unnest(range(1, len(w) - 1)) AS i
-        |      FROM w WHERE len(w) >= 3),
-        |s AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-        |      FROM g),
-        |n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        |  FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |j AS (
-        |  SELECT doc_a, doc_b, CAST(c AS DOUBLE) / (na.n + nb.n - c) AS jacc
-        |  FROM inter JOIN n na ON na.doc_id = doc_a
-        |             JOIN n nb ON nb.doc_id = doc_b)
-        |SELECT doc_a, doc_b, round(jacc, 6) AS jaccard FROM j
-        |WHERE jacc >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "llm_dedup_exact" ->
-      """WITH s AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
-        |SELECT source, count(*) AS n_docs
-        |FROM documents JOIN s USING (doc_id)
-        |GROUP BY source ORDER BY source""".stripMargin,
-
     "llm_simsearch_topk" ->
       """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),

@@ -6,15 +6,13 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.27 — round-15 training-data operators: line-block
-  * dedup (the Gopher line-granularity complement to the 8-gram span
-  * measure), one PCA power-iteration step over the embedding matrix,
-  * and recall\@10 evaluation of the cluster-restricted ANN path
-  * against the brute-force oracle.
+/** SURVEY.md §2.27 — round-15 training-data operators: one PCA
+  * power-iteration step over the embedding matrix, recall\@10
+  * evaluation of the cluster-restricted ANN path against the
+  * brute-force oracle, and per-source embedding centroids and their
+  * similarity matrix.
   *
-  * Scale shapes: line dedup is the dup_span discipline (explode →
-  * one exchange on the block hash → dense_rank distinct-doc count —
-  * no per-row sets); the PCA step is explode → two hash aggregates →
+  * Scale shapes: the PCA step is explode → two hash aggregates →
   * one vec_id-keyed join (all linear in elements, output is
   * dim-bounded); the recall eval scores 20 pinned queries against
   * the corpus (linear fan-out, per-query top-k via windows over
@@ -26,55 +24,6 @@ import graft.util.Tables._
   * Σs inherit the feature-scale drift-absorption argument.
   */
 object LlmOps13 {
-
-  // ---- llm_line_dedup ----------------------------------------------
-  // Duplicate line-block fraction per source: texts chunk into
-  // NON-overlapping 12-word blocks (this corpus has no newlines, so
-  // fixed-width blocks stand in for lines; overlapping spans are
-  // llm_dup_span_fraction's job, prefixes llm_prefix_dedup's); a
-  // block is duplicated when its md5 occurs in ≥2 DISTINCT docs. The
-  // distinct-doc count per hash is the dense_rank trick over ONE
-  // exchange on h — no collect_set (O(M²) on hot boilerplate
-  // blocks), no probe-side re-explosion.
-  private def lineDedup(s: SparkSession, dir: String): DataFrame = {
-    val blocks = load(s, dir, "documents")
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 12)
-      .select(col("doc_id"), col("source"), explode(expr(
-        "transform(sequence(0, size(t) div 12 - 1, 1)," +
-          " i -> md5(array_join(slice(t, i * 12 + 1, 12), ' ')))")).as("h"))
-    val byHashOrdered = Window.partitionBy("h").orderBy("doc_id")
-    val byHash = Window.partitionBy("h")
-    blocks
-      .withColumn("dr", dense_rank().over(byHashOrdered))
-      .withColumn("nd", max(col("dr")).over(byHash))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_blocks"),
-        sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup"),
-        round(sum(when(col("nd") >= 2, 1L).otherwise(0L)).cast("double") /
-          count(lit(1)).cast("double"), 6).as("dup_frac"))
-      .orderBy("source")
-  }
-
-  private val lineDedupOracle =
-    """WITH b AS (
-      |  SELECT doc_id, source,
-      |    md5(array_to_string(list_slice(w, i * 12 + 1, i * 12 + 12), ' '))
-      |      AS h
-      |  FROM (
-      |    SELECT doc_id, source, w, unnest(range(0, len(w) // 12)) AS i
-      |    FROM (SELECT doc_id, source, string_split(text, ' ') AS w
-      |          FROM documents)
-      |    WHERE len(w) >= 12)),
-      |nd AS (
-      |  SELECT h, CAST(count(DISTINCT doc_id) AS BIGINT) AS nd
-      |  FROM b GROUP BY h)
-      |SELECT b.source, CAST(count(*) AS BIGINT) AS n_blocks,
-      |  CAST(sum(CASE WHEN nd.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-      |  round(CAST(sum(CASE WHEN nd.nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE) /
-      |    CAST(count(*) AS DOUBLE), 6) AS dup_frac
-      |FROM b JOIN nd ON b.h = nd.h
-      |GROUP BY b.source ORDER BY b.source""".stripMargin
 
   // ---- llm_embed_pca_step ------------------------------------------
   // One power-iteration step toward the top principal direction of
@@ -286,7 +235,6 @@ object LlmOps13 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_line_dedup" -> (lineDedup _),
     "llm_embed_pca_step" -> (pcaStep _),
     "llm_knn_recall" -> (knnRecall _),
     "llm_source_centroid" -> (sourceCentroid _),
@@ -294,7 +242,6 @@ object LlmOps13 {
   )
 
   val oracle: Map[String, String] = Map(
-    "llm_line_dedup" -> lineDedupOracle,
     "llm_embed_pca_step" -> pcaStepOracle,
     "llm_knn_recall" -> knnRecallOracle,
     "llm_source_centroid" -> sourceCentroidOracle,

@@ -1,9 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.dedup.Keys
 import graft.util.Tables._
 
 /** SURVEY.md §2.34 (cont.) — the corpus datasheet: one audit row a
@@ -28,13 +28,8 @@ object LlmOps16 {
     val d = load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("lang"),
         size(split(col("text"), " ")).as("n_tok"),
-        md5(expr("array_join(slice(split(text, ' '), 1, 30), ' ')"))
-          .as("ph"))
-    val byH = Window.partitionBy("ph").orderBy("doc_id")
-    val byHAll = Window.partitionBy("ph")
-    val flagged = d
-      .withColumn("dr", dense_rank().over(byH))
-      .withColumn("pdup", max(col("dr")).over(byHAll) >= 2)
+        Keys.prefixHash(split(col("text"), " "), 30).as("ph"))
+    val flagged = Keys.sharedKeyFlag(d, "ph", "pdup")
     val core = flagged.agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_tok")).cast("bigint").as("n_tokens"),

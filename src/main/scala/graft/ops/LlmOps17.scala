@@ -6,16 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.46 (round-20 additions, VERDICT r10 item 7) — two
-  * training-data-pipeline operators past the document granularity:
-  *
-  *  - [[spanNearDup]]: span-level (paragraph-surrogate) near-dup —
-  *    `llm_dup_span_fraction` finds EXACT duplicated spans;
-  *    this row finds NEAR-duplicated 16-token spans across documents
-  *    via a per-span 1-lane MinHash block (min of the span's
-  *    md5-derived bigram hashes) + exact in-block Jaccard verify with
-  *    the production [[graft.functions.SortedJaccard]] kernel — the
-  *    boilerplate/template-leak detector at sub-document resolution.
+/** SURVEY.md §2.46 (round-20 additions, VERDICT r10 item 7) —
+  * quality-weighted domain mixing:
   *
   *  - [[domainMixOptimize]]: `llm_domain_mix` caps every domain at
   *    the min-count (throws data away in big domains); this row
@@ -27,80 +19,6 @@ import graft.util.Tables._
   *    both engines derive the identical allocation.
   */
 object LlmOps17 {
-
-  /** Near-duplicated 16-token span pairs across documents.
-    *
-    * Scale shape: spans explode to one row per 16 tokens (corpus
-    * token count / 16 — linear); the block key is ONE MinHash lane
-    * (P[same key] = Jaccard for any pair, so a J >= 0.5 pair is
-    * recalled with p = J; banding with more lanes raises recall at
-    * the standard LSH cost — this row pins the 1-lane tier, and both
-    * engines compute the identical deterministic result either way).
-    * Pairs generate from a bare-key equi-join on the block key — the
-    * bigram-set arrays are re-attached doc-keyed AFTER pairing and
-    * the Jaccard verify is the codegen SortedJaccard merge walk, the
-    * ngramDupPairs plan discipline. Never all-pairs.
-    *
-    * Hashes are 60-bit md5 prefixes (the llm_hash_features pattern),
-    * so the DuckDB replica computes the IDENTICAL min-hash keys and
-    * Jaccard values — unlike xxhash64, nothing here is
-    * engine-specific. */
-  private[graft] def spanNearDup(docs: DataFrame): DataFrame = {
-    // Non-overlapping 16-token spans; only full chunks (a trailing
-    // fragment compares apples-to-oranges against full spans). The
-    // 15 in-span bigrams hash through md5 ONCE per span (the token
-    // array is materialized before the transform — HOF lambdas are
-    // interpreted, so split() must not inline into them).
-    val spans = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 16)
-      .select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, size(w) div 16 - 1), i -> slice(w, i * 16 + 1, 16))")))
-      .toDF("doc_id", "span_idx", "sw")
-      .select(col("doc_id"), col("span_idx").cast("long").as("span_idx"),
-        // The fixed span width lets the 15 bigram hashes unroll into
-        // 15 codegen'd expressions (array(...) of plain columns)
-        // instead of a transform() lambda — HOF lambdas are
-        // INTERPRETED, and 15 interpreted md5+conv evals per span
-        // measurably dominate this operator's runtime.
-        sort_array(array_distinct(array((0 until 15).map { j =>
-          conv(substring(md5(concat_ws(" ",
-            element_at(col("sw"), j + 1), element_at(col("sw"), j + 2))),
-            1, 15), 16, 10).cast("long")
-        }: _*))).as("bg"))
-    // Block key = the span's min bigram hash (sorted array head).
-    // Unlike document-granularity dedup (ngramDupPairs, where bigram
-    // sets are unbounded and must be re-attached doc-keyed AFTER the
-    // pair join), a span's set is FIXED at <= 15 longs (~120 B) — a
-    // bounded per-row payload — so the sets ride the band self-join
-    // directly: ONE exchange on minh instead of a pair join plus two
-    // verify joins, and no checkpoint barrier. The right plan at any
-    // scale BECAUSE the span width is a constant.
-    // persist (not localCheckpoint): BOTH self-join sides read this
-    // subtree and ReuseExchange does not reliably fire under AQE (the
-    // Round27Spec finding), so without a materialization the
-    // tokenize+md5 span build runs twice (measured 2x wall). persist
-    // fills on the join's own broadcast build — no standalone
-    // checkpoint job (builder-measured ~0.5 s saved vs checkpoint).
-    // Known residual cost, measured and accepted: Catalyst pushes the
-    // jaccard filter INTO the join condition ahead of the doc_a <
-    // doc_b residual, so the kernel evaluates on both orientations of
-    // each candidate pair (~2x the minimum; a monotonically-
-    // increasing-id projection barrier does NOT stop the push —
-    // deterministic aliases push through it).
-    val banded = spans.select(col("doc_id"), col("span_idx"), col("bg"),
-        element_at(col("bg"), 1).as("minh"))
-      .persist()
-    banded.as("a").join(banded.as("b"),
-        col("a.minh") === col("b.minh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("a.span_idx").as("span_a"),
-        col("b.doc_id").as("doc_b"), col("b.span_idx").as("span_b"),
-        round(graft.functions.SortedJaccard(col("a.bg"), col("b.bg")), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
-      .orderBy("doc_a", "span_a", "doc_b", "span_b")
-  }
 
   /** Quality-weighted domain-mixing allocation (domain = lang — the
     * skewed stratification this corpus actually has; source strata
@@ -166,8 +84,6 @@ object LlmOps17 {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_span_neardup" -> ((s: SparkSession, dir: String) =>
-      spanNearDup(load(s, dir, "documents"))),
     "llm_domain_mix_optimize" -> ((s: SparkSession, dir: String) =>
       domainMixOptimize(load(s, dir, "documents")))
   )
@@ -185,32 +101,6 @@ object LlmOps17 {
       |  ) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
 
   val oracle: Map[String, String] = Map(
-    // Identical pipeline: 16-token chunks -> 60-bit md5 bigram hash
-    // sets -> min-hash block key -> cross-doc in-block pairs -> exact
-    // Jaccard on the SAME hash values.
-    "llm_span_neardup" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents),
-        |c AS (SELECT doc_id, CAST(u.i AS BIGINT) AS span_idx,
-        |    w[u.i * 16 + 1 : u.i * 16 + 16] AS sw
-        |  FROM t, UNNEST(range(0, len(w) // 16)) AS u(i)
-        |  WHERE len(w) >= 16),
-        |g AS (SELECT doc_id, span_idx,
-        |    list_sort(list_distinct(list_transform(range(1, 16),
-        |      j -> CAST(concat('0x',
-        |        substr(md5(sw[j] || ' ' || sw[j + 1]), 1, 15)) AS BIGINT))))
-        |      AS bg
-        |  FROM c),
-        |k AS (SELECT doc_id, span_idx, bg, bg[1] AS minh FROM g),
-        |p AS (SELECT a.doc_id AS doc_a, a.span_idx AS span_a,
-        |    b.doc_id AS doc_b, b.span_idx AS span_b,
-        |    CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) /
-        |      CAST(len(list_distinct(list_concat(a.bg, b.bg))) AS DOUBLE) AS j
-        |  FROM k a JOIN k b ON a.minh = b.minh AND a.doc_id < b.doc_id)
-        |SELECT doc_a, span_a, doc_b, span_b, round(j, 6) AS jaccard
-        |FROM p WHERE round(j, 6) >= 0.5
-        |ORDER BY doc_a, span_a, doc_b, span_b""".stripMargin,
-
     "llm_domain_mix_optimize" ->
       s"""WITH m AS (
          |  SELECT doc_id, lang, $qualitySql AS quality

@@ -7,18 +7,16 @@ import graft.functions.CosineSim
 import graft.util.Tables._
 
 /** SURVEY.md §2.11 wave 2 — the remaining training-data-pipeline
-  * operators: SimHash and n-gram-Jaccard dedup variants,
-  * embedding-space near-dup, language-ID heuristic, quality scoring,
-  * token counting, document fingerprinting, and the multimodal binary
-  * column plumbing.
+  * operators: language-ID heuristic, quality scoring, sign-LSH ANN
+  * search, PII masking, sequence packing, stratified sampling, token
+  * counting, document fingerprinting, the multimodal binary column
+  * plumbing, and the hashed word-bigram sets the dedup family's
+  * bigram-Jaccard pair scan reads ([[sharedBigramSets]]).
   *
   * Scale notes:
-  *  - Both extra dedup variants block before comparing: n-gram Jaccard
-  *    equi-joins on the language key, SimHash equi-joins on 16-bit
-  *    signature bands — never an unblocked all-pairs product.
-  *  - Embedding near-dup equi-joins on the label (an IVF-style coarse
-  *    bucket): candidate pairs shrink ~bucket-count-fold, the standard
-  *    ANN scale path; the in-bucket compare reuses the fused
+  *  - ANN search equi-joins on sign-projection buckets: candidate
+  *    pairs shrink ~bucket-count-fold, the standard ANN scale path;
+  *    the in-bucket compare reuses the fused
   *    [[graft.functions.CosineSim]] codegen kernel.
   *  - Everything else is per-row scalar work or explode + hash-agg.
   */
@@ -62,13 +60,13 @@ object LlmOps2 {
   }
 
   /** SORTED hashed word-bigram sets per doc (materialized token array
-    * — see LlmOps.shingleSets on why split must not inline). Bigrams
-    * are hashed to longs so the pairwise set ops compare 8-byte values
-    * instead of strings, and sorted once per document so the candidate
-    * hot loop is a [[graft.functions.SortedJaccard]] merge walk with no
-    * per-pair allocation; the oracle compares RAW string bigram sets —
-    * identical Jaccard barring a 64-bit collision (~1e-13 at this
-    * vocabulary size). */
+    * — see dedup.NearDup.shingleSets on why split must not inline).
+    * Bigrams are hashed to longs so the pairwise set ops compare 8-byte
+    * values instead of strings, and sorted once per document so the
+    * candidate hot loop is a [[graft.functions.SortedJaccard]] merge
+    * walk with no per-pair allocation; the oracle compares RAW string
+    * bigram sets — identical Jaccard barring a 64-bit collision
+    * (~1e-13 at this vocabulary size). */
   private[graft] def bigramSets(s: SparkSession, dir: String): DataFrame =
     tokenized(s, dir)
       .filter(size(col("w")) >= 2)
@@ -77,58 +75,16 @@ object LlmOps2 {
                |  i -> xxhash64(concat_ws(' ', element_at(w, i + 1), element_at(w, i + 2)))))"""
           .stripMargin)).as("bg"))
 
-  /** Word-bigram Jaccard >= 0.5 near-dup pairs, blocked by (language,
-    * token-count bucket): a Jaccard-0.5 pair can differ by at most 2x
-    * in size, so same-size blocking keeps recall while shrinking
-    * blocks ~bucket-count-fold (edits that change token count can
-    * straddle a bucket boundary — the documented recall/scale trade;
-    * LSH banding is the unblocked-recall path, see llm_dedup_near).
-    * Shared by `llm_dedup_ngram` (which just adds the presentation
-    * orderBy) and `llm_dedup_cluster`'s near-dup edge build. */
   /** Corpus-facing [[bigramSets]] as a DiskMemo parquet view (r18):
-    * three rows consume it — `llm_dedup_ngram` + `llm_dedup_cluster`
-    * (both via [[ngramDupPairs]]) and `llm_dedup_threshold_sweep`
-    * (Composite24) — each previously re-ran the tokenize + bigram-hash
-    * pipeline per invocation. Content is exact (sorted distinct hashed
-    * longs + integer token counts); row order irrelevant (every
-    * consumer joins/aggregates). Build timed as `memo_bigramsets`. */
+    * three rows consume it — `llm_dedup_ngram`, `llm_dedup_cluster`
+    * and `llm_dedup_threshold_sweep`, all through the one blocked pair
+    * scan `dedup.NearDup.ngramPairs` — and each previously re-ran the
+    * tokenize + bigram-hash pipeline per invocation. Content is exact
+    * (sorted distinct hashed longs + integer token counts); row order
+    * irrelevant (every consumer joins/aggregates). Build timed as
+    * `memo_bigramsets`. */
   private[graft] def sharedBigramSets(s: SparkSession, dir: String): DataFrame =
     DiskMemo.table(s, dir, "bigramsets")(bigramSets(s, dir))
-
-  private[graft] def ngramDupPairs(s: SparkSession, dir: String): DataFrame = {
-    // g feeds the pair-key scan AND both verify joins — localCheckpoint
-    // materializes the tokenize+bigram pipeline once (document-count-
-    // sized rows of hashed-bigram arrays) instead of re-executing it
-    // per consumer. (r19 A/B-tested dropping this in favor of pruned
-    // re-reads of the parquet view: llm_dedup_cluster measured ~1 s
-    // SLOWER — the block copy pays for itself across the three
-    // consumers.) Pair on bare keys first, then attach the bigram
-    // sets (same plan discipline as nearDupPairs: never push array
-    // payloads through the pair-generating join).
-    val g = sharedBigramSets(s, dir)
-      .withColumn("bucket", floor(col("n_tok").cast("double") / 8.0))
-      .localCheckpoint()
-    val keys = g.select(col("doc_id"), col("lang"), col("bucket"))
-    val pairs = keys.as("a").join(keys.as("b"),
-        col("a.lang") === col("b.lang") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // Both verify joins SHUFFLE the sets side on doc_id (hint pins
-    // it): the two exchanges are canonically identical and
-    // ReuseExchange scans the checkpointed blocks ONCE. The array-
-    // carrying side still never broadcasts — the right plan at any
-    // scale.
-    val sets = g.select(col("doc_id"), col("bg")).hint("shuffle_merge")
-    val withA = sets.join(pairs, col("doc_id") === col("doc_a"))
-      .select(col("doc_a"), col("doc_b"), col("bg").as("bg_a"))
-    sets.join(withA, col("doc_id") === col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.SortedJaccard(col("bg"), col("bg_a")).as("jaccard"))
-      .filter(round(col("jaccard"), 6) >= 0.5)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** Multimodal-binary plumbing over a docs frame (doc_id, text,
     * lang, n_chars): text re-encoded as an opaque binary payload +
@@ -158,43 +114,6 @@ object LlmOps2 {
       .toDF("doc_id", "n_bytes", "checksum", "head_hex", "lang", "n_chars")
       .orderBy("doc_id")
   }
-
-  /** 64-bit SimHash over distinct token hashes: bit j is set when at
-    * least half the tokens have bit j set in xxhash64(token).
-    * Computed per row by the codegen kernel
-    * [[graft.functions.SimHashSig]] — one pass over the hashed-token
-    * array with 64 local counters, no explode, no shuffle, no
-    * aggregation buffers. (History: an explode → 64-column bit-count
-    * hash-aggregate was the round-2 shape — correct and map-side
-    * combining, but it shuffles one row per TOKEN and its 65
-    * aggregate buffers are the first casualty of executor-memory
-    * pressure; a HOF formulation with 64 interpreted filter lambdas
-    * was ~10x slower still. The kernel is value-identical to both —
-    * asserted per-doc in LlmSpec.) */
-  private[graft] def simhash(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.SimHashSig(
-        expr("array_distinct(transform(split(text, ' '), t -> xxhash64(t)))"))
-        .as("sim"))
-      .filter(col("sim").isNotNull)
-
-  /** SimHash near-dup pairs: 4 x 16-bit band blocking, then exact
-    * Hamming distance <= maxHamming on candidates. */
-  private[graft] def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame =
-    simhashPairsFromSims(simhash(docs), maxHamming)
-
-  /** The verified twin's signatures: 60-bit md5-derived token hashes
-    * (engine-shared, the llm_hash_features pattern) through the
-    * production SimHashSig majority rule. Factored from the
-    * llm_dedup_simhash_verified row so planted-case ScalaTests drive
-    * the identical path the oracle checks. */
-  private[graft] def simhashMd5Sigs(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.SimHashSig(expr(
-        """transform(array_distinct(split(text, ' ')),
-          |  t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT))"""
-          .stripMargin)).as("sim"))
-      .filter(col("sim").isNotNull)
 
   /** Composite quality score from token statistics — THE
     * llm_quality_score definition (one deterministic double formula,
@@ -243,37 +162,6 @@ object LlmOps2 {
     substring(md5(concat(lit("graft"), col("doc_id").cast("string"))), 1, 4) <
       when(col("lang") === "en", "8000").otherwise("4000")
 
-  /** Band + Hamming stage over any (doc_id, sim) signature relation —
-    * shared by the xxhash64 row and its md5-based verified twin so the
-    * banding pipeline under oracle check IS the production one.
-    *
-    * r19 (§8 compute the proxy once): the band self-join plans the
-    * signature subtree TWICE (one per side; the broadcast side is not
-    * a reused exchange), so the per-token hashing — ~90 md5/xxhash
-    * calls per doc — ran twice per row. localCheckpoint materializes
-    * the (doc_id, sim) proxy once — N 16-byte rows, exactly the
-    * "decide on small rows" shape — and both sides re-band from the
-    * cached blocks. Value-identical: checkpointing changes no cell. */
-  private[graft] def simhashPairsFromSims(sims0: DataFrame,
-      maxHamming: Int): DataFrame = {
-    val sims = sims0.localCheckpoint()
-    val banded = sims.select(col("doc_id"), col("sim"),
-      posexplode(expr(
-        "transform(sequence(0, 3), b -> (sim >> (b * 16)) & 65535)")))
-      .toDF("doc_id", "sim", "band_idx", "band_val")
-    banded.as("x").join(banded.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        expr("bit_count(x.sim ^ y.sim)").as("hamming"))
-      // filter BEFORE distinct: hamming is a pure function of the
-      // pair, so the dedup shuffle only carries surviving pairs
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .orderBy("doc_a", "doc_b")
-  }
-
   // ------------------------------------------------- ANN (sign-LSH)
 
   private val AnnTables = 4
@@ -313,8 +201,8 @@ object LlmOps2 {
   /** Bucket-join + fused-cosine ranking stage over any
     * (vec_id, bucket0..bucket{tables-1}) signature relation — shared
     * by the xxhash64 production row and its md5-based verified twin
-    * (the simhashPairsFromSims discipline), so the candidate pipeline
-    * under oracle check IS the production one. */
+    * (the dedup.NearDup.simhashPairsFromSims discipline), so the
+    * candidate pipeline under oracle check IS the production one. */
   private[graft] def annTopKFromBuckets(buckets: DataFrame,
       embeddings: DataFrame,
       isQuery: org.apache.spark.sql.Column, k: Int): DataFrame = {
@@ -392,39 +280,6 @@ object LlmOps2 {
   // ---------------------------------------------------------- queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Word-bigram Jaccard >= 0.5, blocked by (language, token-count
-    // bucket): a Jaccard-0.5 pair can differ by at most 2x in size, so
-    // same-size blocking keeps recall while shrinking blocks ~bucket
-    // -count-fold (edits that change token count can straddle a bucket
-    // boundary — the documented recall/scale trade; LSH banding is the
-    // unblocked-recall path, see llm_dedup_near).
-    "llm_dedup_ngram" -> ((s: SparkSession, dir: String) =>
-      ngramDupPairs(s, dir).orderBy("doc_a", "doc_b")),
-
-    // SimHash banding + Hamming <= 3 (signature-space near-dup).
-    // No oracle (algorithmic); planted-pair recall in LlmSpec.
-    "llm_dedup_simhash" -> ((s: SparkSession, dir: String) =>
-      simhashPairs(load(s, dir, "documents"), maxHamming = 3)),
-
-    // Oracle-checked twin of llm_dedup_simhash (VERDICT r9 item 6):
-    // the row above is ✗ only because its token hashes are xxhash64,
-    // which DuckDB cannot compute. This twin derives 60-bit token
-    // hashes from md5 — shared by both engines (the llm_hash_features
-    // pattern: Spark conv(hex, 16, 10), DuckDB CAST('0x'||hex AS
-    // BIGINT)) — and runs the IDENTICAL production pipeline:
-    // SimHashSig's majority rule (bit j set iff 2·count ≥ n over the
-    // doc's DISTINCT tokens; bits 60-63 constant 0), then the shared
-    // simhashPairsFromSims 4×16-bit band join + bit_count(sim⊕sim)
-    // ≤ 3 verify. DuckDB replicates the signature with an unnested
-    // bit grid + bit_or of (1 << j), and xor + bit_count for the
-    // Hamming stage — the whole SimHash dedup tier is now in the
-    // driver's hard signal, not just planted-pair ScalaTest recall.
-    // Tokens are deduped BEFORE hashing on both sides so a 60-bit
-    // prefix collision between distinct tokens cannot skew n.
-    "llm_dedup_simhash_verified" -> ((s: SparkSession, dir: String) =>
-      simhashPairsFromSims(simhashMd5Sigs(load(s, dir, "documents")),
-        maxHamming = 3)),
-
     // LSH-bucketed ANN top-5 for the deterministic query subset — the
     // scale path beside the brute-force knn baseline. No oracle
     // (xxhash64-seeded projections — the verified twin below covers
@@ -450,19 +305,6 @@ object LlmOps2 {
       annTopKFromBuckets(
         annVerifiedBuckets(load(s, dir, "embeddings")),
         load(s, dir, "embeddings"), col("vec_id") % 100 === 0, k = 5)),
-
-    // Embedding-space near-dup: label = IVF-style coarse bucket; pairs
-    // only within a bucket, compared with the fused cosine kernel.
-    "llm_embed_neardup" -> ((s: SparkSession, dir: String) => {
-      val e = load(s, dir, "embeddings")
-      e.as("a").join(e.as("b"),
-          col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          col("a.label").as("label"),
-          round(CosineSim(col("a.embedding"), col("b.embedding")), 6).as("cos_sim"))
-        .filter(col("cos_sim") >= 0.2)
-        .orderBy("vec_a", "vec_b")
-    }),
 
     // Deterministic marker-token language guess (argmax with fixed
     // tie-break order), mirrored formula in the oracle.
@@ -598,34 +440,6 @@ object LlmOps2 {
   )
 
   val oracle: Map[String, String] = Map(
-    "llm_dedup_ngram" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-        |g AS (
-        |  SELECT doc_id, lang, floor(CAST(len(w) AS DOUBLE) / 8.0) AS bucket,
-        |    list_distinct(list_transform(range(1, len(w)),
-        |      i -> w[i] || ' ' || w[i + 1])) AS bg
-        |  FROM t WHERE len(w) >= 2),
-        |p AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) /
-        |      CAST(len(list_distinct(list_concat(a.bg, b.bg))) AS DOUBLE) AS jaccard
-        |  FROM g a JOIN g b ON a.lang = b.lang AND a.bucket = b.bucket
-        |    AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard
-        |FROM p WHERE round(jaccard, 6) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "llm_embed_neardup" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-        |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |    CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |  CAST(b.embedding AS DOUBLE[])), 6) >= 0.2
-        |ORDER BY vec_a, vec_b""".stripMargin,
-
     "llm_lang_id" ->
       """WITH t AS (
         |  SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS dw
@@ -669,41 +483,6 @@ object LlmOps2 {
         |    least(CAST(n_chars - (n_tok - 1) AS DOUBLE) / CAST(n_tok AS DOUBLE) / 10.0, 1.0) * 0.2
         |    ) * 1000000.0 + 0.5) / 1000000.0 AS quality
         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // Full replica of the md5-based SimHash pipeline: 60-bit token
-    // hashes -> per-bit majority grid -> bit_or-packed signature ->
-    // 4x16 band self-join -> xor/bit_count Hamming verify.
-    "llm_dedup_simhash_verified" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS hv
-        |  FROM (SELECT doc_id, unnest(toks) AS tok FROM t)),
-        |n AS (SELECT doc_id, count(*) AS n FROM h GROUP BY 1),
-        |g AS (
-        |  SELECT h.doc_id, b.j,
-        |    sum(CASE WHEN (hv >> b.j) & 1 = 1 THEN 1 ELSE 0 END) AS c
-        |  FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS j) b
-        |  GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT g.doc_id,
-        |    bit_or(CASE WHEN 2 * c >= n.n THEN (CAST(1 AS BIGINT) << g.j)
-        |           ELSE CAST(0 AS BIGINT) END) AS sim
-        |  FROM g JOIN n ON g.doc_id = n.doc_id
-        |  GROUP BY 1),
-        |banded AS (
-        |  SELECT doc_id, sim, b.j AS band_idx,
-        |    (sim >> (b.j * 16)) & 65535 AS band_val
-        |  FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS j) b)
-        |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-        |  CAST(bit_count(xor(x.sim, y.sim)) AS INT) AS hamming
-        |FROM banded x JOIN banded y
-        |  ON x.band_idx = y.band_idx AND x.band_val = y.band_val
-        |    AND x.doc_id < y.doc_id
-        |WHERE bit_count(xor(x.sim, y.sim)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
 
     // Full replica of the md5-matrix sign-LSH ANN pipeline: sign grid
     // (parity of the 60-bit md5 prefix, the annVerifiedSigns

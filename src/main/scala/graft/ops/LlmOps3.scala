@@ -21,6 +21,8 @@ import graft.util.Tables._
   *    negatives, so the exact join restores precise semantics and the
   *    operator stays oracle-checkable; the win at 100 TB is that only
   *    the (tiny) suspected-seen fraction of a new shard ever shuffles.
+  *    `llm_bloom_prefilter` here and `llm_dedup_incremental`
+  *    (dedup.Keys) probe through it.
   *
   *  - [[ivfTopK]]: IVF-style approximate k-NN. A deterministic coarse
   *    centroid set partitions the corpus into cells (inverted lists);
@@ -258,31 +260,6 @@ object LlmOps3 {
       }.reduce(_.union(_)).orderBy("nprobe")
     }),
 
-    // Incremental-corpus dedup (VERDICT r8 item 8): the "seen"
-    // generation (even doc_ids) publishes its 30-token-prefix
-    // fingerprints; the "incoming" generation (odd doc_ids) is
-    // checked against them via [[seenFilter]] — bloom prune + exact
-    // left-semi verify, the shape that actually ships between corpus
-    // generations at 100 TB (the bloom is the O(bits) artifact that
-    // crosses the generation boundary; the verify join only carries
-    // bloom survivors). Each flagged doc surfaces with the earliest
-    // seen doc carrying its fingerprint. The prefix fingerprint is
-    // THE llm_prefix_dedup / llm_score_vs_dup signature, so the
-    // cross-generation and in-corpus definitions cannot drift.
-    "llm_dedup_incremental" -> ((s: SparkSession, dir: String) => {
-      val fp = md5(expr("array_join(slice(split(text, ' '), 1, 30), ' ')"))
-      val d = load(s, dir, "documents")
-        .select(col("doc_id"), fp.as("ph"))
-      val seen = d.filter(col("doc_id") % 2 === 0)
-      val incoming = d.filter(col("doc_id") % 2 === 1)
-      val flagged = seenFilter(seen.select("ph"), incoming, "ph")
-      flagged.join(
-          seen.groupBy("ph").agg(min(col("doc_id")).as("first_seen_doc")),
-          "ph")
-        .select(col("doc_id"), col("first_seen_doc"))
-        .orderBy("doc_id")
-    }),
-
     // Benchmark decontamination over the documents corpus: every 50th
     // doc is the "eval set"; training docs sharing any 5-gram with it
     // are flagged with their shared-gram count.
@@ -402,21 +379,6 @@ object LlmOps3 {
          |FROM exact e LEFT JOIN ivf i
          |  ON e.q_id = i.q_id AND e.vec_id = i.vec_id
          |GROUP BY e.q_id ORDER BY e.q_id""".stripMargin,
-
-    // The bloom is invisible to the result (false positives are
-    // verified away), so the oracle is the bare exact semi-join.
-    "llm_dedup_incremental" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(list_slice(string_split(text, ' '), 1, 30),
-        |        ' ')) AS ph
-        |  FROM documents),
-        |seen AS (
-        |  SELECT ph, min(doc_id) AS first_seen_doc
-        |  FROM d WHERE doc_id % 2 = 0 GROUP BY ph)
-        |SELECT d.doc_id, seen.first_seen_doc
-        |FROM d JOIN seen USING (ph)
-        |WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""".stripMargin,
 
     "llm_bloom_prefilter" ->
       """SELECT DISTINCT b.user_id FROM events b

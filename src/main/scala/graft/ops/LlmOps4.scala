@@ -5,19 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.11 (round-4 additions) — the cluster-resolution,
-  * reproducible-sampling, quantization, and inverted-index primitives
-  * of a training-data pipeline:
-  *
-  *  - [[connectedComponents]]: near-duplicate PAIRS are only half the
-  *    dedup story — production dedup maps every document to a cluster
-  *    representative. Iterative min-label propagation: each round is
-  *    one shuffle join on the node id plus a map-side-combining min
-  *    aggregate, converging in O(cluster diameter) rounds (near-dup
-  *    clusters are shallow in practice). `localCheckpoint` truncates
-  *    the growing lineage each round — without it the plan doubles per
-  *    iteration and the job dies on planning cost long before data
-  *    cost at scale.
+/** SURVEY.md §2.11 (round-4 additions) — the reproducible-sampling,
+  * quantization, bigram-LM, chunking and inverted-index primitives of
+  * a training-data pipeline:
   *
   *  - hash-threshold sampling: `md5(salt || id)` prefix compared
   *    lexicographically (fixed-width lowercase hex, so string order ==
@@ -40,136 +30,6 @@ import graft.util.Tables._
   *    bounded by document frequency, not corpus size.
   */
 object LlmOps4 {
-
-  /** Undirected connected components by min-label propagation.
-    * `edges` must have two long columns (a, b); returns
-    * (node, cluster_id) where cluster_id = min node id of the
-    * component. Converges in O(diameter) rounds; `maxIter` bounds
-    * pathological chains. */
-  private[graft] def connectedComponents(edges: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    // >= 2: one init round plus at least one confirming round — with
-    // maxIter=1 convergence could never be observed.
-    require(maxIter >= 2, s"connectedComponents: maxIter $maxIter < 2")
-    val cols = edges.columns
-    // Eager checkpoint of the EDGE INPUT, not just und: the und union
-    // below references e in 4-5 subtrees (both directions + the node
-    // distinct), and und.persist() only deduplicates work across
-    // ROUNDS — its one materialization still executes each union
-    // branch's copy of the upstream plan. Callers pass expensive lazy
-    // plans here (LSH band joins, ngram Jaccard verifies, co-purchase
-    // self-joins), so without this the pair stage re-runs ~5× inside
-    // round 1 (measured: llm_dedup_cluster 6.0 s → 3.4 s at sf0.1).
-    // Cost at scale: one extra E-sized materialization next to the
-    // 2E+N-sized und cache — O(E) storage either way.
-    // (r19 re-tested skipping this for already-materialized inputs
-    // — parquet views, cached-block probes: consistently SLOWER, the
-    // union re-runs the edge subtree per branch and broadcast reuse
-    // does not survive the persist boundary. The eager checkpoint
-    // stays for every caller.)
-    val e = edges.select(col(cols(0)).as("a"), col(cols(1)).as("b"))
-      .localCheckpoint()
-    // Both directions PLUS self-loops: with (x, x) present, min over a
-    // node's neighbourhood includes its own label, so each round is
-    // ONE join + one map-side-combining min-aggregate — no second
-    // join to re-attach old labels.
-    val nodes = e.select(col("a")).union(e.select(col("b").as("a")))
-      .distinct()
-    // persist (not checkpoint): each superseded round is explicitly
-    // unpersisted below — eager checkpoints would pin every round's
-    // blocks until GC, starving shuffle memory on long runs. The plan
-    // tree grows linearly with rounds, which is fine at maxIter=20;
-    // execution always reads the cached previous round.
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .union(nodes.select(col("a"), col("a").as("b")))
-      .persist()
-    // Init = round 1: label(x) = min over the closed neighbourhood.
-    var labels = und.groupBy("a").agg(min("b").as("label"))
-      .withColumnRenamed("a", "node")
-      .persist()
-    // Labels only ever decrease, so Σlabels strictly decreases until
-    // the fixpoint — one scalar action per round detects convergence
-    // with no extra join or changed-row count. DECIMAL(38,0)
-    // accumulation: a BIGINT sum of 10^10 node ids overflows (and
-    // throws under ANSI mode) at the scale this operator targets.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("label").cast("decimal(38,0)"))).first()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-    // ONE action initializes both loop controls (r18): the label sum
-    // (convergence sentinel) and the node count (the per-round hint
-    // gate) come out of a single aggregate over the persisted round-1
-    // table — the separate labels.count() job is folded away.
-    val init = labels.agg(
-      sum(col("label").cast("decimal(38,0)")).as("s"),
-      count(lit(1)).as("c")).first()
-    var prev = if (init.isNullAt(0)) java.math.BigDecimal.ZERO
-      else init.getDecimal(0)
-    val hint = graft.util.Hints.maybeBroadcast(init.getLong(1))
-    var iter = 1
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // Pointer-jump shortcut BEFORE the neighbourhood min (VERDICT r9
-      // item 1 — fewer sequential rounds is the only real cut on a
-      // convergence-detected loop): l'(v) = l(l(v)). Labels only
-      // decrease and l(v) <= v (closed neighbourhoods include self),
-      // so every label value IS a node present in `labels` (inner
-      // join safe) and l(l(v)) <= l(v) needs no least(). Each round
-      // then propagates the min two hops instead of one — O(log
-      // diameter) heavy rounds instead of O(diameter) — for the cost
-      // of one extra NODE-sized broadcast join folded into the same
-      // round's broadcast build (no extra Spark job: it executes
-      // inside the exchange that was already collecting the labels).
-      val jumped = labels
-        .join(hint(labels.select(col("node").as("jn"),
-          col("label").as("jl"))), col("label") === col("jn"))
-        .select(col("node"), col("jl").as("label"))
-      // Under the gate the node-sized label table broadcasts so the
-      // ~2E+N-row und side never shuffles: the only exchange per
-      // round is the map-side-combined min on `a` (the Composite20
-      // CC discipline). On a graph whose node table outgrows the
-      // gate the joins run UN-hinted and plan node-keyed shuffles —
-      // a bare hint would hard-fail at the broadcast limit instead.
-      val next = und.join(hint(jumped), col("b") === col("node"))
-        .groupBy("a").agg(min("label").as("label"))
-        .withColumnRenamed("a", "node")
-        .persist()
-      val cur = labelSum(next) // materializes next; labels now dead
-      labels.unpersist()
-      labels = next
-      converged = cur.compareTo(prev) == 0
-      prev = cur
-      iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter labelSum=$cur converged=$converged")
-    }
-    if (!converged)
-      // Unconverged labels are WRONG (one true component surfaces as
-      // several) — never return them silently.
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(component diameter exceeds maxIter); raise maxIter")
-    // und is no longer needed; labels stays persisted for the caller
-    // (a hint only — correctness does not depend on it).
-    und.unpersist()
-    labels.select(col("node"), col("label").as("cluster_id"))
-  }
-
-  /** Exact-duplicate edges: every doc links to the min doc_id sharing
-    * its md5(text). The survivor aggregate is THE canonical
-    * [[LlmOps.exactSurvivorsByHash]] definition — `llm_dedup_exact`,
-    * the facade, and these edges cannot drift apart. (A one-scan
-    * collect_set formulation was considered in r19 and rejected: the
-    * per-hash id array is unbounded in the duplicate-group size,
-    * exactly the column this operator exists to shrink.) */
-  private def exactDupEdges(docs: DataFrame): DataFrame = {
-    val mins = LlmOps.exactSurvivorsByHash(docs, col("doc_id"), col("text"))
-      .withColumnRenamed("survivor_key", "a")
-    docs.select(col("doc_id"), md5(col("text")).as("h"))
-      .join(mins, "h")
-      .filter(col("doc_id") > col("a"))
-      .select(col("a"), col("doc_id").as("b"))
-  }
 
   /** Deterministic hash-threshold keep predicate: lowercase-hex md5
     * prefix compared as a string (fixed width => numeric order).
@@ -221,27 +81,6 @@ object LlmOps4 {
       .agg(count(lit(1)).as("n_bigrams"),
         round(avg(-log2(col("prob"))), 6).as("xent"))
 
-  /** SemDeDup (arXiv:2303.09540): semantic dedup in embedding space.
-    * Cosine pairs at/above `threshold` WITHIN a cluster (`clusterCol`
-    * plays the k-means cell — blocked, never all-pairs) are resolved
-    * to components; each row surfaces with its min-id representative
-    * `rep` and a `survivor` flag. Similarity is rounded to 6 dp
-    * before the threshold compare so the keep-set is float-stable. */
-  def semDedup(vectors: DataFrame, idCol: String, clusterCol: String,
-      embCol: String, threshold: Double): DataFrame = {
-    val pairs = vectors.as("a").join(vectors.as("b"),
-        col(s"a.$clusterCol") === col(s"b.$clusterCol") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .filter(round(graft.functions.CosineSim(
-        col(s"a.$embCol"), col(s"b.$embCol")), 6) >= threshold)
-      .select(col(s"a.$idCol").as("a"), col(s"b.$idCol").as("b"))
-    vectors.select(col(idCol), col(clusterCol))
-      .join(connectedComponents(pairs), col(idCol) === col("node"), "left")
-      .select(col(idCol), col(clusterCol),
-        coalesce(col("cluster_id"), col(idCol)).as("rep"))
-      .withColumn("survivor", col("rep") === col(idCol))
-  }
-
   /** Fixed-size overlapping character chunks of `textCol`: one row
     * per (id, start) with the `width`-char chunk starting there,
     * strided by `stride` (empty docs yield one empty chunk). A pure
@@ -259,139 +98,6 @@ object LlmOps4 {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Duplicate-cluster resolution: edges = exact-dup links UNION
-    // bigram-Jaccard >= 0.5 near-dup pairs, components solved by
-    // min-label propagation. Output: every clustered doc with its
-    // cluster representative (min doc_id).
-    // End-to-end oracle twin of the MinHash->cluster pipeline
-    // (VERDICT r8 item 8): LSH-banded near-dup pairs (the
-    // llm_dedup_near_verified plan, whose recall the driver already
-    // hash-checks) resolved to components by the convergence-detected
-    // min-label loop, hash-compared against DuckDB's exact all-pairs
-    // Jaccard >= 0.8 edges run through 10 unrolled HashMin rounds with
-    // an l9-vs-l10 convergence sentinel (near-dup clusters are
-    // shallow; a deeper corpus reds the row with a (-1,-1) pointer
-    // instead of silent drift, the conv-CC discipline).
-    "llm_dedup_minhash_cluster" -> ((s: SparkSession, dir: String) =>
-      connectedComponents(
-          LlmOps.nearDupPairs(load(s, dir, "documents"))
-            .select(col("doc_a").as("a"), col("doc_b").as("b")),
-          maxIter = 10)
-        .select(col("node").as("doc_id"), col("cluster_id"))
-        .orderBy("doc_id")),
-
-    "llm_dedup_cluster" -> ((s: SparkSession, dir: String) => {
-      // ngramDupPairs checkpoints its bigram-set build internally and
-      // skips llm_dedup_ngram's presentation sort — edges don't need it.
-      // localCheckpoint: `near` feeds the contraction AND two node-set
-      // union branches — the Jaccard verify join must run once, not
-      // per reference (the same multi-reference trap documented in
-      // connectedComponents).
-      val near = LlmOps2.ngramDupPairs(s, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .localCheckpoint()
-      // Exact tier contracted BEFORE the label loop (VERDICT r9 item
-      // 1, the deferred r8 seeding idea): every md5 group is a star
-      // around its min doc_id, so the dominant edge class needs no
-      // propagation at all. Map each near-dup endpoint through its
-      // exact representative and run connectedComponents on the
-      // CONTRACTED graph only — |near-pair| edges instead of
-      // |exact ∪ near|, and star-merge rounds vanish. cluster_id is
-      // unchanged: reps are per-star minima, so the min rep of a
-      // contracted component == the min doc_id of the merged
-      // component. localCheckpoint: `exact` feeds four consumers
-      // (rep map ×2, node set ×2) — materialize the md5 aggregate
-      // once instead of per-broadcast-build.
-      val exact = exactDupEdges(load(s, dir, "documents")).localCheckpoint()
-      val rep = exact.select(col("b").as("doc"), col("a").as("rep"))
-      // Size-gate the broadcast hints (ADVICE r10, now the shared
-      // graft.util.Hints discipline): Spark honors an explicit
-      // broadcast() REGARDLESS of relation size (8 GB hard cap /
-      // driver OOM on a corpus-scale exact tier), so the earlier
-      // "degrades gracefully to a shuffle join" claim did not hold
-      // for hinted joins. Both build sides are localCheckpointed
-      // above, so counting them is a cheap cached-block scan; under
-      // the gate the hint skips AQE's estimate round-trip, above it
-      // the joins run un-hinted and AQE still broadcasts at runtime
-      // if the actual bytes allow — now genuinely graceful.
-      // ONE action sizes both gates (r19): the counts of the two
-      // checkpointed tables ride a single union aggregate over their
-      // cached blocks instead of two count jobs.
-      val cRow = exact.select(lit(1L).as("t"))
-        .unionAll(near.select(lit(0L).as("t")))
-        .agg(coalesce(sum(col("t")), lit(0L)), count(lit(1))).first()
-      val exactCnt = cRow.getLong(0)
-      val repHint = graft.util.Hints.maybeBroadcast(exactCnt)
-      // cc's node set is bounded by the contracted edge endpoints,
-      // i.e. by 2x the near-pair count — gate its hint on that bound.
-      val ccHint = graft.util.Hints.maybeBroadcast(
-        2L * (cRow.getLong(1) - exactCnt))
-      val contracted = near
-        .join(repHint(rep.select(col("doc").as("a"), col("rep").as("ra"))),
-          Seq("a"), "left")
-        .join(repHint(rep.select(col("doc").as("b"), col("rep").as("rb"))),
-          Seq("b"), "left")
-        .select(coalesce(col("ra"), col("a")).as("x"),
-          coalesce(col("rb"), col("b")).as("y"))
-        .filter(col("x") =!= col("y"))
-        // duplicate contracted edges are harmless to min-label
-        // propagation — a distinct here would buy nothing but a shuffle
-        .select(col("x").as("a"), col("y").as("b"))
-      // contracted is two broadcast probes over checkpointed near
-      // blocks, but skipping CC's internal edge checkpoint for it
-      // measured SLOWER (r19 A/B: 3.3 → 4.3+ s at sf0.1 — the und
-      // union re-runs the probe subtree per branch and the broadcast
-      // reuse does not survive the persist boundary), so the default
-      // eager checkpoint stays.
-      val cc = connectedComponents(contracted)
-      // Output rows = every node of the ORIGINAL exact ∪ near edge
-      // union (identical set to the un-seeded plan), labelled through
-      // rep -> contracted component, defaulting to the rep itself for
-      // stars no near edge touches.
-      val nodes = exact.select(col("a")).union(exact.select(col("b").as("a")))
-        .union(near.select(col("a"))).union(near.select(col("b").as("a")))
-        .distinct()
-      nodes
-        .join(repHint(rep.select(col("doc").as("a"), col("rep"))),
-          Seq("a"), "left")
-        .withColumn("r", coalesce(col("rep"), col("a")))
-        .join(ccHint(cc.select(col("node").as("r"), col("cluster_id"))),
-          Seq("r"), "left")
-        .select(col("a").as("doc_id"),
-          coalesce(col("cluster_id"), col("r")).as("cluster_id"))
-        .orderBy("doc_id")
-    }),
-
-    // SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
-    // in embedding space — pairs above the cosine threshold WITHIN a
-    // cluster (the `label` column plays the k-means cell) resolved to
-    // components; survivor = min-id representative. The pair join is
-    // cluster-blocked (never all-pairs across the corpus), the
-    // component pass reuses [[connectedComponents]], and every vector
-    // surfaces with its representative + survivor flag, so downstream
-    // filtering is a join, not a recompute.
-    "llm_semdedup" -> ((s: SparkSession, dir: String) =>
-      semDedup(load(s, dir, "embeddings"), "vec_id", "label", "embedding",
-        threshold = 0.4)
-        .orderBy("vec_id")),
-
-    // Normalization-then-hash dedup (the C4/CCNet "fuzzy-exact" tier
-    // between byte-exact md5 and MinHash): lowercase, strip
-    // non-alphanumerics, collapse whitespace, THEN hash. Same
-    // one-hash-aggregate plan as llm_dedup_exact — normalization is a
-    // per-row projection, so the scale shape is unchanged.
-    "llm_dedup_exact_norm" -> ((s: SparkSession, dir: String) => {
-      val norm = trim(regexp_replace(
-        regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))
-      val survivors = LlmOps.exactSurvivorKeys(
-        load(s, dir, "documents"), col("doc_id"), norm)
-      load(s, dir, "documents")
-        .join(survivors, col("doc_id") === col("survivor_key"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("source")
-    }),
-
     // Gopher-style quality rules (Rae et al. 2021, arXiv:2112.11446
     // table A1, thresholds adapted to this corpus' 10-99-word docs):
     // word-count band, mean-word-length band, minimum stopword count,
@@ -591,76 +297,7 @@ object LlmOps4 {
       |  FROM pr JOIN lm ON pr.w1 = lm.w1 AND pr.w2 = lm.w2
       |  GROUP BY pr.doc_id)""".stripMargin
 
-  /** Unrolled HashMin rounds WITH a pointer-jump step, for the DuckDB
-    * CC oracles. Round i emits two CTEs over an `e(src, dst)` edge
-    * list and an `l0(node, l)` identity labelling:
-    *   h$i — neighbourhood min (classic HashMin), and
-    *   l$i — pointer jump l'(v) = l(l(v)) through h$i itself,
-    * so n rounds resolve propagation depth ~2^n, matching the Spark
-    * loop in [[connectedComponents]] which jumps every round (ADVICE
-    * r10: the previous plain unroll covered only depth n while Spark
-    * maxIter=n covers ~2^n — a deep corpus would have yielded a
-    * CORRECT Spark result but a red oracle sentinel, the false-red
-    * class ADVICE r9 set out to remove; now both sides' budgets are
-    * exponential in the round count). Labels are node ids and only
-    * decrease (closed-neighbourhood min), so the jump's inner lookup
-    * always finds its target and least() is monotone-safe. Every CTE
-    * is AS MATERIALIZED: each is referenced twice and would otherwise
-    * re-expand 2^n-fold (the un-pinned form exhausted temp disk). */
-  private[graft] def hashMinJumpRounds(n: Int): String =
-    (1 to n).map { i =>
-      s"""h$i AS MATERIALIZED (
-         |  SELECT p.node, least(p.l, coalesce(m.nl, p.l)) AS l
-         |  FROM l${i - 1} p LEFT JOIN (
-         |    SELECT e.src AS node, min(q.l) AS nl
-         |    FROM e JOIN l${i - 1} q ON e.dst = q.node
-         |    GROUP BY e.src) m ON p.node = m.node),
-         |l$i AS MATERIALIZED (
-         |  SELECT p.node, least(p.l, coalesce(q.l, p.l)) AS l
-         |  FROM h$i p LEFT JOIN h$i q ON p.l = q.node)""".stripMargin
-    }.mkString(",\n")
-
-  // Exact all-pairs Jaccard >= 0.8 edges (the llm_dedup_near_verified
-  // CTEs) -> symmetric closure -> 10 unrolled HashMin+jump rounds
-  // ([[hashMinJumpRounds]]) -> (doc, min-label) map, with a
-  // convergence sentinel comparing the last two rounds' label sums.
-  // Depth budget: the oracle's 10 jumped rounds resolve depth ~2^10,
-  // matching the Spark side's maxIter=10 pointer-jumping loop — the
-  // sentinel reds only for component depth > 2^10, i.e. effectively
-  // never on a corpus either engine can hold (ADVICE r10 closed the
-  // budget gap the r9 alignment comment had claimed prematurely).
-  private val minhashClusterOracle = {
-    val rounds = hashMinJumpRounds(10)
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |g AS (SELECT doc_id, w, unnest(range(1, len(w) - 1)) AS i
-       |      FROM w WHERE len(w) >= 3),
-       |s AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-       |      FROM g),
-       |n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-       |  FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |j AS (
-       |  SELECT doc_a, doc_b
-       |  FROM inter JOIN n na ON na.doc_id = doc_a
-       |             JOIN n nb ON nb.doc_id = doc_b
-       |  WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= 0.8),
-       |e AS MATERIALIZED (
-       |  SELECT doc_a AS src, doc_b AS dst FROM j
-       |  UNION ALL SELECT doc_b, doc_a FROM j),
-       |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS l FROM e),
-       |$rounds
-       |SELECT node AS doc_id, l AS cluster_id FROM l10
-       |UNION ALL
-       |SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
-       |WHERE (SELECT sum(CAST(l AS HUGEINT)) FROM l9)
-       |   <> (SELECT sum(CAST(l AS HUGEINT)) FROM l10)
-       |ORDER BY 1""".stripMargin
-  }
-
   val oracle: Map[String, String] = Map(
-    "llm_dedup_minhash_cluster" -> minhashClusterOracle,
     "llm_hash_features" ->
       """SELECT doc_id,
         |  CAST(concat('0x', substr(md5(t), 1, 6)) AS BIGINT) % 128 AS bucket,
@@ -668,35 +305,6 @@ object LlmOps4 {
         |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
         |      FROM documents) x
         |GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
-
-    "llm_semdedup" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |    CAST(b.embedding AS DOUBLE[])), 6) >= 0.4),
-        |u AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
-        |reach(x, r) AS (
-        |  SELECT a, a FROM u
-        |  UNION
-        |  SELECT u.a, reach.r FROM u JOIN reach ON u.b = reach.x),
-        |c AS (SELECT x AS node, min(r) AS rep FROM reach GROUP BY x)
-        |SELECT vec_id, label, coalesce(c.rep, vec_id) AS rep,
-        |  coalesce(c.rep, vec_id) = vec_id AS survivor
-        |FROM embeddings LEFT JOIN c ON vec_id = c.node
-        |ORDER BY vec_id""".stripMargin,
-
-    "llm_dedup_exact_norm" ->
-      """WITH n AS (
-        |  SELECT doc_id, source,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm
-        |  FROM documents),
-        |s AS (SELECT min(doc_id) AS doc_id FROM n GROUP BY md5(norm))
-        |SELECT source, count(*) AS n_docs
-        |FROM n JOIN s USING (doc_id)
-        |GROUP BY source ORDER BY source""".stripMargin,
 
     "llm_quality_gopher" ->
       """WITH t AS (
@@ -732,34 +340,6 @@ object LlmOps4 {
         |  FROM documents) t,
         |LATERAL (SELECT substr(text, CAST(start + 1 AS INT), 500) AS chunk) c
         |ORDER BY doc_id, start""".stripMargin,
-
-    "llm_dedup_cluster" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-        |g AS (
-        |  SELECT doc_id, lang, floor(CAST(len(w) AS DOUBLE) / 8.0) AS bucket,
-        |    list_distinct(list_transform(range(1, len(w)),
-        |      i -> w[i] || ' ' || w[i + 1])) AS bg
-        |  FROM t WHERE len(w) >= 2),
-        |np AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM g a JOIN g b ON a.lang = b.lang AND a.bucket = b.bucket
-        |    AND a.doc_id < b.doc_id
-        |  WHERE round(CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) /
-        |    CAST(len(list_distinct(list_concat(a.bg, b.bg))) AS DOUBLE), 6)
-        |    >= 0.5),
-        |eh AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |em AS (SELECT h, min(doc_id) AS a FROM eh GROUP BY h),
-        |ee AS (SELECT em.a, eh.doc_id AS b FROM eh JOIN em ON eh.h = em.h
-        |  WHERE eh.doc_id > em.a),
-        |e AS (SELECT a, b FROM np UNION SELECT a, b FROM ee),
-        |u AS (SELECT a, b FROM e UNION SELECT b AS a, a AS b FROM e),
-        |reach(x, r) AS (
-        |  SELECT a, a FROM u
-        |  UNION
-        |  SELECT u.a, reach.r FROM u JOIN reach ON u.b = reach.x)
-        |SELECT x AS doc_id, min(r) AS cluster_id
-        |FROM reach GROUP BY x ORDER BY doc_id""".stripMargin,
 
     "llm_sample_hash" ->
       """SELECT source, CAST(count(*) AS BIGINT) AS n_kept,

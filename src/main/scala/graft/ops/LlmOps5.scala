@@ -5,14 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
-/** SURVEY.md §2.17 — retrieval-ranking and corpus-overlap operators:
-  * BM25 scoring (the IR ranking the inverted index of
-  * `llm_inverse_index` exists to serve), reciprocal-rank fusion of two
-  * retrieval rankings (the standard hybrid-search combiner), and the
-  * cross-document duplicated-span fraction (the Gopher/RefinedWeb
-  * "fraction of text inside duplicated n-grams" corpus measure —
-  * per-doc contamination BY the rest of the corpus, distinct from the
-  * pairwise dedup family).
+/** SURVEY.md §2.17 — retrieval-ranking and mixing operators: BM25
+  * scoring (the IR ranking the inverted index of `llm_inverse_index`
+  * exists to serve), reciprocal-rank fusion of two retrieval rankings
+  * (the standard hybrid-search combiner), and temperature-weighted
+  * multilingual sampling.
   *
   * Float determinism: every score is assembled from exact integer
   * counts in ONE pinned expression — the formula string is shared
@@ -28,11 +25,6 @@ import graft.util.Tables._
   *  - rrf: each ranking is a rounded-score TakeOrderedAndProject
   *    (top-100) — the corpus scan never materializes a global sort;
   *    RRF over truncated rankings is the textbook formulation.
-  *  - dup_span: spans shuffle ONCE on the span hash (a window computes
-  *    the distinct-doc count in place, instead of a groupBy + re-join
-  *    that would shuffle the span table twice); the per-doc aggregate
-  *    then hashes on doc_id. Span text is md5'd before the shuffle so
-  *    exchange width is 32 bytes/span, not the raw 8-gram.
   */
 object LlmOps5 {
 
@@ -140,47 +132,6 @@ object LlmOps5 {
           6).as("rrf"))
   }
 
-  // ---- llm_dup_span_fraction ---------------------------------------
-  /** Per document: the fraction of its `n`-token spans (all
-    * positions) whose text also occurs in at least one OTHER document
-    * — the Gopher/RefinedWeb duplicated-n-gram coverage measure, as a
-    * library op ([[Graft.dupSpanFraction]]). Docs shorter than `n`
-    * tokens have no spans and drop out. The distinct-doc count per
-    * span hash is the dense_rank trick: rank docs within each hash
-    * partition, then take the partition max — two window passes over
-    * ONE exchange on h, so the (expensive) span generation runs once
-    * and nothing materializes a per-row doc-id set. A collect_set
-    * window would hold the set once per span occurrence — O(M²)
-    * memory in the hot partition for a span duplicated M times (hot
-    * boilerplate spans ARE the interesting case here); a groupBy+join
-    * re-generates every span for the probe side. The hot-h cost here
-    * is the sort, O(M log M) and spillable. */
-  private[graft] def dupSpanFractions(docs: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame = {
-    require(n >= 2, s"dupSpanFractions: span width $n must be >= 2")
-    val spans = docs
-      .withColumn("t", split(col(textCol), " "))
-      .filter(size(col("t")) >= n)
-      .select(col(idCol), explode(expr(
-        s"transform(sequence(0, size(t) - $n, 1), i -> md5(array_join(slice(t, i + 1, $n), ' ')))"
-      )).as("h"))
-    val byHashOrdered = Window.partitionBy("h").orderBy(idCol)
-    val byHash = Window.partitionBy("h")
-    spans
-      .withColumn("dr", dense_rank().over(byHashOrdered))
-      .withColumn("nd", max(col("dr")).over(byHash))
-      .groupBy(col(idCol))
-      .agg(
-        round(sum(when(col("nd") >= 2, 1).otherwise(0)).cast("double") /
-          count(lit(1)).cast("double"), 6).as("dup_frac"),
-        count(lit(1)).as("n_spans"))
-  }
-
-  private def dupSpanFraction(s: SparkSession, dir: String): DataFrame =
-    dupSpanFractions(load(s, dir, "documents"), "doc_id", "text", n = 8)
-      .orderBy(desc("dup_frac"), asc("doc_id"))
-      .limit(20)
-
   // ---- llm_temperature_mix -----------------------------------------
   // Temperature-weighted multilingual sampling (XLM-R, arXiv:1911.02116,
   // α = 0.3): q_l ∝ p_l^α flattens the language distribution so
@@ -213,7 +164,6 @@ object LlmOps5 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "llm_bm25" -> (bm25 _),
     "llm_rrf_fusion" -> (rrfFusion _),
-    "llm_dup_span_fraction" -> (dupSpanFraction _),
     "llm_temperature_mix" -> (temperatureMix _)
   )
 
@@ -277,21 +227,6 @@ object LlmOps5 {
          |  round(p, 6) AS p,
          |  round(pa / denom, 6) AS q,
          |  round((pa / denom) / p, 6) AS boost
-         |FROM pa CROSS JOIN denom ORDER BY lang""".stripMargin,
-
-    "llm_dup_span_fraction" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |  FROM documents),
-        |spans AS (SELECT doc_id, md5(array_to_string(t[i:i+7], ' ')) AS h
-        |  FROM toks, UNNEST(range(1, len(t) - 6)) AS u(i)
-        |  WHERE len(t) >= 8),
-        |sd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM spans GROUP BY h)
-        |SELECT doc_id,
-        |  round(CAST(count(*) FILTER (WHERE nd >= 2) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 6) AS dup_frac,
-        |  count(*) AS n_spans
-        |FROM spans JOIN sd USING (h)
-        |GROUP BY doc_id
-        |ORDER BY dup_frac DESC, doc_id LIMIT 20""".stripMargin
+         |FROM pa CROSS JOIN denom ORDER BY lang""".stripMargin
   )
 }

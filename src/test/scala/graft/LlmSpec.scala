@@ -18,7 +18,7 @@ class LlmSpec extends AnyFunSuite {
     val base = (0 until 60).map(i => s"w$i").mkString(" ")
     val nearDup = ((0 until 60).map(i => if (i == 30) "CHANGED" else s"w$i")).mkString(" ")
     val unrelated = (0 until 60).map(i => s"z$i").mkString(" ")
-    val pairs = graft.ops.LlmOps.nearDupPairs(
+    val pairs = graft.ops.dedup.NearDup.nearDupPairs(
       mkDocs(Seq((1L, base), (2L, nearDup), (3L, unrelated))))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.sameElements(Array((1L, 2L))), s"got ${pairs.mkString(",")}")
@@ -26,7 +26,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("llm_dedup_near: identical docs get jaccard 1.0") {
     val t = (0 until 40).map(i => s"t$i").mkString(" ")
-    val out = graft.ops.LlmOps.nearDupPairs(mkDocs(Seq((7L, t), (9L, t))))
+    val out = graft.ops.dedup.NearDup.nearDupPairs(mkDocs(Seq((7L, t), (9L, t))))
       .collect()
     assert(out.length == 1 && out(0).getDouble(2) == 1.0)
   }
@@ -37,7 +37,7 @@ class LlmSpec extends AnyFunSuite {
     // banding-parameter change that silently loses a pair fails here
     // before it fails the driver's hash compare.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val sets = graft.ops.LlmOps.shingleSets(docs)
+    val sets = graft.ops.dedup.NearDup.shingleSets(docs)
     val exhaustive = sets.as("a").join(sets.as("b"),
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -50,7 +50,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("MinHashSig kernel is bit-identical to the 32x array_min(transform) form") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(200)
-    val sets = graft.ops.LlmOps.shingleSets(docs)
+    val sets = graft.ops.dedup.NearDup.shingleSets(docs)
     def seedA(i: Int): Long = 0x9E3779B97F4A7C15L * (2 * i + 1)
     val hof = sets.select(col("doc_id"),
       array((0 until 32).map(i =>
@@ -75,7 +75,7 @@ class LlmSpec extends AnyFunSuite {
     val agg = tokenHashes.groupBy(col("doc_id"))
       .agg(bitCounts.head, bitCounts.tail: _*)
       .select(col("doc_id"), packed.as("sim"))
-    val kernel = graft.ops.LlmOps2.simhash(docs)
+    val kernel = graft.ops.dedup.NearDup.simhash(docs)
     assert(kernel.exceptAll(agg).isEmpty && agg.exceptAll(kernel).isEmpty)
   }
 
@@ -135,7 +135,7 @@ class LlmSpec extends AnyFunSuite {
   test("llm_dedup_simhash: identical docs pair at hamming 0; unrelated do not") {
     val t = (0 until 50).map(i => s"s$i").mkString(" ")
     val other = (0 until 50).map(i => s"q${i}x").mkString(" ")
-    val pairs = graft.ops.LlmOps2.simhashPairs(
+    val pairs = graft.ops.dedup.NearDup.simhashPairs(
       mkDocs(Seq((1L, t), (2L, t), (3L, other))), maxHamming = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(pairs.sameElements(Array((1L, 2L, 0))), s"got ${pairs.mkString(",")}")
@@ -144,7 +144,7 @@ class LlmSpec extends AnyFunSuite {
   test("llm_dedup_simhash: one-word edit stays within small hamming distance") {
     val base = (0 until 60).map(i => s"m$i").mkString(" ")
     val nearDup = (0 until 60).map(i => if (i == 30) "CHANGED" else s"m$i").mkString(" ")
-    val pairs = graft.ops.LlmOps2.simhashPairs(
+    val pairs = graft.ops.dedup.NearDup.simhashPairs(
       mkDocs(Seq((1L, base), (2L, nearDup))), maxHamming = 16)
       .collect()
     assert(pairs.length == 1 && pairs(0).getInt(2) <= 16,

@@ -1564,7 +1564,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         (b, cs.size.toLong, mx, cp,
           if (cp == 0) None else Some(floor6((mx * (mx - 1) / 2).toDouble / cp)))
       }
-      val got = graft.ops.LlmOps19.lshBucketAuditOn(
+      val got = graft.ops.dedup.Shingles.lshBucketAuditOn(
         docs.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }
           .toDF("doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -1590,7 +1590,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val expected = df.groupBy(bucket).toSeq.sortBy(_._1)
         .map { case (bk, ds) => (bk, ds.size.toLong, ds.sum,
           floor6(ds.size.toDouble / total)) }
-      val got = graft.ops.LlmOps19.shingleDfSpectrumOn(
+      val got = graft.ops.dedup.Shingles.shingleDfSpectrumOn(
         docs.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }
           .toDF("doc_id", "text"))
         .as[(String, Long, Long, Double)].collect().toSeq

@@ -28,4 +28,24 @@ class RegistryPinSpec extends AnyFunSuite {
   test("SparkEntry.oracleSql ids equal the pinned list") {
     assertSame(SparkEntry.oracleSql.keySet, pinned("/graft/oracle_ids.txt"))
   }
+
+  test("the dedup and graph families own every one of their rows") {
+    val dedupIds = Set(
+      "llm_dedup_exact", "llm_dedup_exact_norm", "llm_dedup_near",
+      "llm_dedup_near_verified", "llm_dedup_ngram", "llm_dedup_simhash",
+      "llm_dedup_simhash_verified", "llm_dedup_minhash_cluster",
+      "llm_dedup_cluster", "llm_dedup_cross_source", "llm_dedup_editdist",
+      "llm_dedup_family_spectrum", "llm_dedup_incremental",
+      "llm_dedup_threshold_sweep", "llm_dedup_tier_report",
+      "llm_semdedup", "llm_embed_neardup", "llm_prefix_dedup",
+      "llm_line_dedup", "llm_dup_span_fraction", "llm_span_neardup",
+      "llm_score_vs_dup", "llm_minhash_calibration",
+      "llm_minhash_containment", "llm_lsh_bucket_audit",
+      "llm_shingle_df_spectrum")
+    assertSame(graft.ops.dedup.Dedup.queries.keySet, dedupIds)
+    assert(graft.ops.dedup.Dedup.oracle.keySet.subsetOf(dedupIds))
+    assertSame(graft.ops.graph.Graph.queries.keySet,
+      SparkEntry.queries.keySet.filter(_.startsWith("graph_")))
+    assert(graft.ops.graph.Graph.oracle.keySet.forall(_.startsWith("graph_")))
+  }
 }

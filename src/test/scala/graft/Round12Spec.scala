@@ -49,7 +49,7 @@ class Round12Spec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")))
     val tmp = java.nio.file.Files.createTempDirectory("contain_fx").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = graft.ops.LlmOps10.queries("llm_minhash_containment")(spark, tmp)
+    val out = graft.ops.dedup.Shingles.queries("llm_minhash_containment")(spark, tmp)
       .collect()
     assert(out.length == 1, s"expected exactly the (1,2) pair, got ${out.toSeq}")
     val r = out.head
@@ -58,7 +58,7 @@ class Round12Spec extends AnyFunSuite {
   }
 
   test("llm_minhash_containment: scores in [0.5, 1] on the corpus and pairs are ordered") {
-    val rows = graft.ops.LlmOps10.queries("llm_minhash_containment")(spark, sf).collect()
+    val rows = graft.ops.dedup.Shingles.queries("llm_minhash_containment")(spark, sf).collect()
     rows.foreach { r =>
       assert(r.getLong(0) < r.getLong(1), "pair not ordered")
       assert(r.getDouble(3) >= 0.5 && r.getDouble(3) <= 1.0)
@@ -66,7 +66,7 @@ class Round12Spec extends AnyFunSuite {
   }
 
   test("llm_prefix_dedup: groups are non-trivial and checksums match a direct recount") {
-    val rows = graft.ops.LlmOps10.queries("llm_prefix_dedup")(spark, sf).collect()
+    val rows = graft.ops.dedup.Keys.queries("llm_prefix_dedup")(spark, sf).collect()
     rows.foreach { r =>
       assert(r.getLong(1) > 1, "singleton group surfaced")
       assert(BigDecimal(r.getString(3)) >= BigDecimal(r.getLong(2)),
@@ -79,5 +79,40 @@ class Round12Spec extends AnyFunSuite {
       .groupBy(md5(array_join(slice(split(col("text"), " "), 1, 8), " ")))
       .count().filter(col("count") > 1).count()
     assert(rows.length == dupPrefixes)
+  }
+
+  test("llm_dedup_tier_report agrees with the exact, normalized and prefix rows") {
+    import spark.implicits._
+    // Planted tiers: a byte-exact family {1, 2, 3}, a case/punctuation
+    // pair {4, 5} that only the normalized key merges, and a shared
+    // 8-token intro {6, 7} with different bodies.
+    val body = (1 to 40).map(i => s"w$i").mkString(" ")
+    val docs = Seq(
+      (1L, "s1", s"alpha beta $body"),
+      (2L, "s2", s"alpha beta $body"),
+      (3L, "s1", s"alpha beta $body"),
+      (4L, "s2", s"Gamma, Delta! $body"),
+      (5L, "s3", s"gamma delta $body"),
+      (6L, "s1", "one two three four five six seven eight tail a"),
+      (7L, "s3", "one two three four five six seven eight tail b"),
+      (8L, "s2", "short unique text"),
+      (9L, "s3", "another unique document with words of its own")
+    ).toDF("doc_id", "source", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("n_chars", length(col("text")))
+    val tmp = java.nio.file.Files.createTempDirectory("tiers_fx").toString
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    def run(q: String) = SparkEntry.queries(q)(spark, tmp).collect()
+    val tiers = run("llm_dedup_tier_report").map(r => r.getString(0) -> r).toMap
+    val nDocs = docs.count()
+    def kept(q: String) = run(q).map(_.getLong(1)).sum
+    assert(tiers("1_exact").getLong(3) == 2L)
+    assert(tiers("1_exact").getLong(3) == nDocs - kept("llm_dedup_exact"))
+    assert(tiers("2_norm").getLong(3) == 3L)
+    assert(tiers("2_norm").getLong(3) == nDocs - kept("llm_dedup_exact_norm"))
+    val prefix = run("llm_prefix_dedup")
+    assert(tiers("3_prefix8").getLong(1) == 2L)
+    assert(tiers("3_prefix8").getLong(1) == prefix.length)
+    assert(tiers("3_prefix8").getLong(2) == prefix.map(_.getLong(1)).sum)
   }
 }

@@ -75,7 +75,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("llm_line_dedup: dup_frac = n_dup/n_blocks and both are sane") {
-    val rows = graft.ops.LlmOps13.queries("llm_line_dedup")(spark, sf).collect()
+    val rows = graft.ops.dedup.NearDup.queries("llm_line_dedup")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val nb = r.getLong(1); val nd = r.getLong(2); val f = r.getDouble(3)

@@ -76,7 +76,7 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("llm_dedup_cross_source: unordered pairs, counts consistent") {
-    val rows = graft.ops.Composite16
+    val rows = graft.ops.dedup.Keys
       .queries("llm_dedup_cross_source")(spark, sf).collect()
     rows.foreach { r =>
       assert(r.getString(0) < r.getString(1), "pairs must be ordered")

@@ -35,7 +35,7 @@ class Round19Spec extends AnyFunSuite {
 
   test("llm_score_vs_dup: 10 deciles, TTR monotone across deciles") {
     val rows =
-      graft.ops.Composite18.queries("llm_score_vs_dup")(spark, sf).collect()
+      graft.ops.dedup.Keys.queries("llm_score_vs_dup")(spark, sf).collect()
     assert(rows.length == 10)
     val ttrs = rows.sortBy(_.getLong(0)).map(_.getDouble(2))
     assert(ttrs.zip(ttrs.tail).forall { case (a, b) => b >= a - 1e-9 },

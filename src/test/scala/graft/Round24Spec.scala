@@ -25,7 +25,7 @@ class Round24Spec extends AnyFunSuite {
   }
 
   test("llm_dedup_threshold_sweep: counts are monotone non-increasing in threshold") {
-    val rows = graft.ops.Composite24
+    val rows = graft.ops.dedup.NearDup
       .queries("llm_dedup_threshold_sweep")(spark, sf).collect()
     assert(rows.nonEmpty)
     val byT = rows.sortBy(_.getDouble(0))
@@ -37,5 +37,17 @@ class Round24Spec extends AnyFunSuite {
       assert(r.getLong(2) >= 2 || r.getLong(1) == 0,
         "any flagged pair implicates at least two documents")
     }
+  }
+
+  test("llm_dedup_threshold_sweep: its 0.5 point is llm_dedup_ngram's pair set") {
+    val sweep = graft.ops.dedup.NearDup
+      .queries("llm_dedup_threshold_sweep")(spark, sf).collect()
+    val ngram = SparkEntry.queries("llm_dedup_ngram")(spark, sf).collect()
+    assert(ngram.nonEmpty, "the corpus has no bigram-Jaccard pair at 0.5")
+    val at05 = sweep.filter(_.getDouble(0) == 0.5)
+    assert(at05.length == 1)
+    assert(at05.head.getLong(1) == ngram.length)
+    assert(at05.head.getLong(2) ==
+      ngram.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct.length)
   }
 }

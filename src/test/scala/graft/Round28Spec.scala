@@ -89,8 +89,8 @@ class Round28Spec extends AnyFunSuite {
     val far = (1 to 40).map(i => s"other$i").mkString(" ")
     val docs = Seq((1L, base), (2L, base), (3L, near), (4L, far))
       .toDF("doc_id", "text")
-    val pairs = graft.ops.LlmOps2.simhashPairsFromSims(
-        graft.ops.LlmOps2.simhashMd5Sigs(docs), maxHamming = 3)
+    val pairs = graft.ops.dedup.NearDup.simhashPairsFromSims(
+        graft.ops.dedup.NearDup.simhashMd5Sigs(docs), maxHamming = 3)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     // Identical docs: hamming 0, all bands collide — guaranteed.
     assert(pairs.contains((1L, 2L)))
@@ -139,7 +139,7 @@ class Round28Spec extends AnyFunSuite {
       (3L, near),
       (4L, (1 to 16).map(i => s"z$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val got = graft.ops.LlmOps17.spanNearDup(docs)
+    val got = graft.ops.dedup.NearDup.spanNearDup(docs)
       .select("doc_a", "span_a", "doc_b", "span_b")
       .as[(Long, Long, Long, Long)].collect().toSet
     // Identical spans share ALL bigrams, hence the same min hash —

@@ -152,7 +152,7 @@ class Round29Spec extends AnyFunSuite {
       (d, "en", 50L, "z1 z2 z3 z4 z5 z6"),
       (out, "en", 50L, "w1 w2 w3 w4 w5 w6"))
       .toDF("doc_id", "lang", "n_chars", "text")
-    val got = graft.ops.Composite31.minhashCalibration(docs)
+    val got = graft.ops.dedup.Shingles.minhashCalibration(docs)
       .as[(Long, Long, Long)].collect().toSeq
     // 4 sampled docs in one block -> C(4,2) = 6 pairs total.
     assert(got.map(_._3).sum == 6L, s"pair budget: $got")

@@ -49,7 +49,7 @@ class Round39Spec extends AnyFunSuite {
 
   test("dedupFamilySpectrumOn: 3+2+1 docs collapse into a 3-row spectrum") {
     val docs = Seq("a", "a", "a", "b", "b", "c").toDF("text")
-    val got = graft.ops.Composite42.dedupFamilySpectrumOn(docs)
+    val got = graft.ops.dedup.Keys.dedupFamilySpectrumOn(docs)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq((1L, 1L, 1L, 0L), (2L, 1L, 2L, 1L), (3L, 1L, 3L, 2L)))
   }

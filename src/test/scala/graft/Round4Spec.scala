@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.LlmOps4
+import graft.ops.graph.Community
 
 /** Round-4 operators: connected-components dedup clusters, bucketed
   * band join equivalence, hash-threshold sampling determinism, and
@@ -20,7 +20,7 @@ class Round4Spec extends AnyFunSuite {
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("a", "b")
-    val got = LlmOps4.connectedComponents(edges)
+    val got = Community.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
@@ -32,7 +32,7 @@ class Round4Spec extends AnyFunSuite {
     import spark.implicits._
     // 0-1-2-...-12: min label must travel 12 hops.
     val edges = (0L until 12L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = LlmOps4.connectedComponents(edges)
+    val got = Community.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === 13 && got.values.forall(_ == 0L))
   }
@@ -123,7 +123,7 @@ class Round4Spec extends AnyFunSuite {
   }
 
   test("llm_semdedup: reps are minimal, survivors, and closed under membership") {
-    val rows = graft.ops.LlmOps4.queries("llm_semdedup")(spark, sf)
+    val rows = graft.ops.dedup.Clusters.queries("llm_semdedup")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3)))
     val reps = rows.map(_._2).toSet
     val ids = rows.map(_._1).toSet

@@ -15,13 +15,13 @@ class Round50Spec extends AnyFunSuite {
     val u = (100 until 120).map(i => s"v$i").mkString(" ")
     // Two identical + one disjoint: per band, the twin bucket has
     // c = 2 (1 candidate pair), the loner c = 1 → pairs 1, share 1.
-    val got = graft.ops.LlmOps19.lshBucketAuditOn(
+    val got = graft.ops.dedup.Shingles.lshBucketAuditOn(
       Seq((1L, t), (2L, t), (3L, u)).toDF("doc_id", "text"))
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == (0L to 3L).map(b => (b, 2L, 2L, 1L, 1.0)))
     // All distinct docs: every bucket is a singleton → 0 candidate
     // pairs and a NULL share (0/0 guarded), not a crash.
-    val lone = graft.ops.LlmOps19.lshBucketAuditOn(
+    val lone = graft.ops.dedup.Shingles.lshBucketAuditOn(
       Seq((1L, t), (3L, u)).toDF("doc_id", "text")).collect()
     assert(lone.forall(r =>
       r.getLong(3) == 0L && r.isNullAt(4)), lone.mkString(","))
@@ -35,7 +35,7 @@ class Round50Spec extends AnyFunSuite {
       (1L, "a b c"), (2L, "a b c"), (3L, "a b c a b c"),
       (4L, "x y z"), (5L, "p q r"), (6L, "p q r"))
       .toDF("doc_id", "text")
-    val got = graft.ops.LlmOps19.shingleDfSpectrumOn(docs)
+    val got = graft.ops.dedup.Shingles.shingleDfSpectrumOn(docs)
       .as[(String, Long, Long, Double)].collect().toSeq
     // doc 3's text has shingles {a b c, b c a, c a b} → extra
     // uniques; totals: vocab = 5 ("a b c" df3, "b c a" df1,
@@ -47,7 +47,7 @@ class Round50Spec extends AnyFunSuite {
   }
 
   test("shingleDfSpectrumOn: docs shorter than one shingle are ignored") {
-    val got = graft.ops.LlmOps19.shingleDfSpectrumOn(
+    val got = graft.ops.dedup.Shingles.shingleDfSpectrumOn(
       Seq((1L, "just two"), (2L, "one")).toDF("doc_id", "text"))
       .collect()
     assert(got.isEmpty)

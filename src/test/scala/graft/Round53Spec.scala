@@ -99,7 +99,7 @@ class Round53Spec extends AnyFunSuite {
       (4L, "p q r s t u v w same body"),
       (5L, "p q r s t u v w same body"),
       (6L, "too short")).toDF("doc_id", "text")
-    val got = graft.ops.LlmOps21.dedupEditdistOn(docs)
+    val got = graft.ops.dedup.NearDup.dedupEditdistOn(docs)
       .as[(Long, Long, Int, Int, Int, Double)].collect().toSeq
     assert(got == Seq(
       (1L, 2L, 1, 27, 27, 0.962963),

@@ -34,9 +34,9 @@ class Round58Spec extends AnyFunSuite {
   }
 
   test("sharedPostings == sorted collect_set over sharedGrams") {
-    val view = graft.ops.LlmOps19.sharedPostings(spark, TestSpark.sf)
+    val view = graft.ops.dedup.Shingles.sharedPostings(spark, TestSpark.sf)
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toList).toMap
-    val fresh = graft.ops.LlmOps19.sharedGrams(spark, TestSpark.sf)
+    val fresh = graft.ops.dedup.Shingles.sharedGrams(spark, TestSpark.sf)
       .groupBy(col("h")).agg(sort_array(collect_set(col("doc_id"))).as("ds"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toList).toMap
     assert(view == fresh)

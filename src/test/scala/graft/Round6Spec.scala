@@ -127,7 +127,7 @@ class Round6Spec extends AnyFunSuite {
 
   test("llm_dup_span_fraction: fractions in [0,1] and a planted duplicate is fully covered") {
     import spark.implicits._
-    val rows = graft.ops.LlmOps5.queries("llm_dup_span_fraction")(spark, sf)
+    val rows = graft.ops.dedup.NearDup.queries("llm_dup_span_fraction")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -31,7 +31,7 @@ class SeedSweepSpec extends AnyFunSuite {
       val base = words(seed, 60)
       val near = base.updated(30, "CHANGED").mkString(" ")
       val other = words(seed + 500, 60).mkString(" ")
-      val pairs = graft.ops.LlmOps.nearDupPairs(
+      val pairs = graft.ops.dedup.NearDup.nearDupPairs(
         Seq((1L, base.mkString(" ")), (2L, near), (3L, other))
           .toDF("doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -43,7 +43,7 @@ class SeedSweepSpec extends AnyFunSuite {
       // Identical docs (Hamming 0, all bands equal) MUST pair — the
       // unconditional half of the contract.
       val t = words(seed + 900, 60).mkString(" ")
-      val same = graft.ops.LlmOps2.simhashPairs(
+      val same = graft.ops.dedup.NearDup.simhashPairs(
         Seq((1L, t), (2L, t)).toDF("doc_id", "text"), maxHamming = 3)
         .collect()
       assert(same.length == 1 && same(0).getInt(2) == 0,
@@ -56,7 +56,7 @@ class SeedSweepSpec extends AnyFunSuite {
       // trade, NOT a fixture for this test.)
       val base = words(seed, 300)
       val near = base.updated(150, "CHANGED").mkString(" ")
-      val pairs = graft.ops.LlmOps2.simhashPairs(
+      val pairs = graft.ops.dedup.NearDup.simhashPairs(
         Seq((1L, base.mkString(" ")), (2L, near)).toDF("doc_id", "text"),
         maxHamming = 16).collect()
       assert(pairs.length == 1 && pairs(0).getInt(2) <= 16,
