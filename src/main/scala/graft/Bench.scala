@@ -89,6 +89,23 @@ object Bench {
   private def priorSuspect(prior: Option[Double], secs: Double): Boolean =
     prior.exists(p => p >= 0.05 && secs > 3.0 * p && secs > 1.0)
 
+  /** The whole run's budget for suspect-retry back-off sleeps. Under
+    * steal that never clears, every row's window is suspect and each
+    * would sleep the full 3+6+12+24 s ladder (a 30-row run did not
+    * finish in 12 minutes); once the budget is spent, a suspect row
+    * gets the standard single rerun and keeps its suspect flag. */
+  private[graft] val RetryBackoffBudgetMs = 180000L
+
+  /** The suspect-retry decision after `reruns` reruns of one row:
+    * Some(ms) = sleep `backoffMs`, then rerun; None = stop. Stops once
+    * a clean window has landed, after 5 reruns, or when the back-off
+    * no longer fits in `budgetLeftMs`, what is left of
+    * [[RetryBackoffBudgetMs]]. */
+  private[graft] def retryBackoff(reruns: Int, anyClean: Boolean,
+      backoffMs: Long, budgetLeftMs: Long): Option[Long] =
+    if (anyClean || reruns >= 5 || backoffMs > budgetLeftMs) None
+    else Some(backoffMs)
+
   /** Previous pinned per-query records, read from the git-pinned
     * bench_full.json in cwd BEFORE this run overwrites it (override
     * with SPARK_GRAFT_PRIOR for adjudicated re-pins). Only the flat
@@ -251,6 +268,7 @@ object Bench {
         case (true, _)    => "steal"
         case _            => "prior"
       }
+    var backoffBudgetMs = RetryBackoffBudgetMs
     val results = timedAll.map { case (name, fn) =>
       // Warm once per query (plan compilation + whole-stage codegen
       // class generation are one-time costs, ~2.5s for the widest
@@ -306,7 +324,8 @@ object Bench {
       // (sustained steal above half a CPU, OR >3x the git-pinned
       // record for this query) and no criterion-clean attempt has
       // landed yet, back off with doubling sleeps and try again,
-      // bounded at 5 reruns. Fast (≤2 s) queries whose cold window is
+      // bounded at 5 reruns and by the run's back-off budget
+      // (retryBackoff). Fast (≤2 s) queries whose cold window is
       // suspect enter the same loop (ADVICE r12: they were previously
       // flagged but never retried). Every attempt is recorded, so
       // bench_full.json carries the full adjudication trail instead
@@ -341,10 +360,13 @@ object Bench {
             // further reruns + sleeps is pure wasted wall-clock.
             val anyClean = !coldSuspect ||
               attempts.exists(a => !windowSuspect(a.steal, a.secs))
-            continue = attempts.size < 5 && !anyClean
-            if (continue) { // let the storm pass, doubling each time
-              Thread.sleep(backoffMs)
-              backoffMs = math.min(backoffMs * 2, 30000L)
+            retryBackoff(attempts.size, anyClean, backoffMs,
+                backoffBudgetMs) match {
+              case Some(ms) => // let the storm pass, doubling each time
+                Thread.sleep(ms)
+                backoffBudgetMs -= ms
+                backoffMs = math.min(backoffMs * 2, 30000L)
+              case None => continue = false
             }
           } else continue = false
         }

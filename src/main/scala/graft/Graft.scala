@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayMaxLE, CosineSim}
-import graft.ops.{LlmOps2, LlmOps3, LlmOps4, Relational}
+import graft.ops.{LlmOps3, LlmOps4, Relational}
 import graft.ops.dedup.{Clusters, Keys, NearDup}
 import graft.ops.graph.Community
+import graft.ops.retrieval.{Ann, Geometry, Search}
 
 /** User-facing facade: the engine's reusable operations as a plain
   * library API over DataFrames (the driver-contract surface in
@@ -38,7 +39,7 @@ object Graft {
   /** LSH-bucketed approximate top-k neighbours over
     * (vec_id, embedding) for the rows matching isQuery. */
   def annTopK(embeddings: DataFrame, isQuery: Column, k: Int): DataFrame =
-    LlmOps2.annTopK(embeddings, isQuery, k)
+    Ann.annTopK(embeddings, isQuery, k)
 
   /** Fused cosine similarity of two float-vector columns (custom
     * codegen expression — no per-row allocation). */
@@ -76,7 +77,7 @@ object Graft {
     * the `nprobe` nearest cells only. */
   def ivfTopK(embeddings: DataFrame, isQuery: Column, k: Int,
       nprobe: Int = 2): DataFrame =
-    LlmOps3.ivfTopK(embeddings, isQuery, k, nprobe)
+    Ann.ivfTopK(embeddings, isQuery, k, nprobe)
 
   /** Benchmark decontamination over (doc_id, text): rows NOT matching
     * isEval that share any word 5-gram with the isEval split, with
@@ -197,14 +198,14 @@ object Graft {
     * (idCol, bm25), 6-dp rounded. */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    graft.ops.LlmOps5.bm25Scores(docs, idCol, textCol, terms, k1, b)
+    Search.bm25Scores(docs, idCol, textCol, terms, k1, b)
 
   /** Reciprocal-rank fusion of two (idCol, scoreCol) rankings, each
     * truncated to its top-`topN` via TakeOrderedAndProject (no global
     * sort): Σ 1/(k + rank), absent rankings contributing 0. */
   def rrfFuse(a: DataFrame, b: DataFrame, idCol: String,
       scoreCol: String, k: Int = 60, topN: Int = 100): DataFrame =
-    graft.ops.LlmOps5.rrfFuse(a, b, idCol, scoreCol, k, topN)
+    Search.rrfFuse(a, b, idCol, scoreCol, k, topN)
 
   /** Gopher/RefinedWeb duplicated-n-gram coverage: per doc, the
     * fraction of its `n`-token spans occurring in any OTHER doc.
@@ -270,8 +271,8 @@ object Graft {
   /** One Lloyd iteration of k-means: assign every (idCol, vecCol) row
     * to its nearest centroid by cosine (6-dp rounded, ties to the
     * lowest centroid id) and re-average members per dimension. The
-    * centroid table — columns named (cid, cvec), float or double
-    * vectors — broadcasts, so assignment is map-side at any corpus
+    * centroid table — columns named (cid, cvec), a numeric cid, float
+    * or double vectors — broadcasts, so assignment is map-side at any corpus
     * size. idCol must be unique (duplicate ids would collapse to one
     * assignment). Returns (cid, n_members, centroid); iterate with
     * `prev.select($"cid", $"centroid".as("cvec"))`. Clusters that
@@ -279,7 +280,7 @@ object Graft {
     * behavior) — re-seed if k must stay fixed. */
   def kmeansStep(vectors: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame =
-    graft.ops.LlmOps6.kmeansStepOn(vectors, idCol, vecCol, centroids)
+    Geometry.kmeansStepOn(vectors, idCol, vecCol, centroids)
 
   /** Per document: the fraction of its `n`-token spans whose FIRST
     * corpus appearance (minimum id over the span's occurrences) is

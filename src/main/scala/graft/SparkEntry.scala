@@ -38,9 +38,7 @@ object SparkEntry {
       (Composite10.queries, Composite10.oracle),
       (Composite11.queries, Composite11.oracle),
       (Composite12.queries, Composite12.oracle),
-      (LlmOps13.queries, LlmOps13.oracle),
       (Composite13.queries, Composite13.oracle),
-      (LlmOps14.queries, LlmOps14.oracle),
       (Composite14.queries, Composite14.oracle),
       (Composite15.queries, Composite15.oracle),
       (Composite16.queries, Composite16.oracle),
@@ -73,6 +71,7 @@ object SparkEntry {
       (Composite35.queries, Composite35.oracle),
       (graph.Graph.queries, graph.Graph.oracle),
       (dedup.Dedup.queries, dedup.Dedup.oracle),
+      (retrieval.Retrieval.queries, retrieval.Retrieval.oracle),
       (Composite37.queries, Composite37.oracle),
       (Composite38.queries, Composite38.oracle),
       (Composite39.queries, Composite39.oracle),
@@ -101,7 +100,6 @@ object SparkEntry {
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
       (Composite69.queries, Composite69.oracle),
-      (LlmOps20.queries, LlmOps20.oracle),
       (Composite72.queries, Composite72.oracle),
       (Composite73.queries, Composite73.oracle),
       (Composite75.queries, Composite75.oracle),

@@ -7,21 +7,17 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** SURVEY.md §2.36 — round-15 ninth batch: STL-residual anomaly
-  * days, market-basket lift, and embedding outliers vs their source
-  * centroid.
+  * days and market-basket lift. (The batch's embedding outliers vs
+  * their source centroid are in [[retrieval.Geometry]].)
   *
   * Scale shapes: the anomaly scan runs over the horizon-bounded
   * daily series (the seasonal-decompose plan plus one broadcast of
   * the 7-row seasonal index); basket lift reuses the bounded
   * per-order pair explosion with counts kept (no DISTINCT — support
-  * needs multiplicity) against 1-row and item-sized broadcasts; the
-  * outlier scan is one element-explode join against the tiny
-  * (source, pos) centroid grid with a top-k window per source.
+  * needs multiplicity) against 1-row and item-sized broadcasts.
   *
   * Determinism: counts exact; lift assembles once from exact
-  * integers; distances build on the 6-dp rounded centroid grid and
-  * round again at the surface; all top-k orders carry unique
-  * tiebreakers.
+  * integers; all top-k orders carry unique tiebreakers.
   */
 object Composite19 {
 
@@ -154,61 +150,15 @@ object Composite19 {
       |CROSS JOIN tot
       |ORDER BY lift DESC, pa, pb LIMIT 20""".stripMargin
 
-  // ---- llm_centroid_outliers ---------------------------------------
-  // The 10 documents farthest (lowest cosine) from their own
-  // source's centroid — the curation queue for mislabeled or
-  // contaminated docs. Distances build on the 6-dp rounded
-  // (source, pos) centroid grid (llm_source_centroid's surface), so
-  // both engines rank identical values; top-k per corpus via one
-  // (cos ASC, doc) TakeOrdered.
-  private def centroidOutliers(s: SparkSession, dir: String): DataFrame = {
-    val cents = LlmOps13.sourceCentroids(s, dir)
-    val x = load(s, dir, "documents").select(col("doc_id"), col("source"))
-      .join(load(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
-      .select(col("doc_id"), col("source"),
-        posexplode(col("embedding")).as(Seq("pos0", "f")))
-      .select(col("doc_id"), col("source"), (col("pos0") + 1).as("pos"),
-        col("f").cast("double").as("v"))
-    x.join(cents, Seq("source", "pos"))
-      .groupBy(col("doc_id"), col("source"))
-      .agg(sum(col("v") * col("c")).as("dot"),
-        sqrt(sum(col("v") * col("v"))).as("vn"),
-        sqrt(sum(col("c") * col("c"))).as("cn"))
-      .select(col("doc_id"), col("source"),
-        round(col("dot") / (col("vn") * col("cn")), 6).as("cos"))
-      .orderBy(asc("cos"), asc("doc_id"))
-      .limit(10)
-  }
-
-  private val centroidOutliersOracle =
-    """WITH x AS (
-      |  SELECT d.doc_id, d.source, CAST(r.range AS INT) AS pos,
-      |    CAST(e.embedding[r.range] AS DOUBLE) AS v
-      |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-      |  CROSS JOIN range(1, 65) r),
-      |c AS (
-      |  SELECT source, pos, round(avg(v), 6) AS c
-      |  FROM x GROUP BY source, pos),
-      |m AS (
-      |  SELECT x.doc_id, x.source,
-      |    sum(x.v * c.c) AS dot, sqrt(sum(x.v * x.v)) AS vn,
-      |    sqrt(sum(c.c * c.c)) AS cn
-      |  FROM x JOIN c ON x.source = c.source AND x.pos = c.pos
-      |  GROUP BY x.doc_id, x.source)
-      |SELECT doc_id, source, round(dot / (vn * cn), 6) AS cos
-      |FROM m ORDER BY cos, doc_id LIMIT 10""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_anomaly_stl" -> (anomalyStl _),
-    "agg_basket_lift" -> (basketLift _),
-    "llm_centroid_outliers" -> (centroidOutliers _)
+    "agg_basket_lift" -> (basketLift _)
   )
 
   val oracle: Map[String, String] = Map(
     "evt_anomaly_stl" -> anomalyStlOracle,
-    "agg_basket_lift" -> basketLiftOracle,
-    "llm_centroid_outliers" -> centroidOutliersOracle
+    "agg_basket_lift" -> basketLiftOracle
   )
 }

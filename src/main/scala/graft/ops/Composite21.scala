@@ -6,139 +6,26 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.38 — round-16 second batch: diversity-aware
-  * retrieval (MMR), experimentation statistics (CUPED, delta-method
-  * ratio CI), and finance/econ series (VWAP, unit-value price index).
+/** SURVEY.md §2.38 — round-16 second batch: experimentation
+  * statistics (CUPED, delta-method ratio CI) and finance/econ series
+  * (VWAP, unit-value price index). (The batch's diversity-aware MMR
+  * re-ranking is in [[retrieval.Search]].)
   *
-  * Scale shapes: MMR restricts to per-query top-20 candidates FIRST
-  * (rank-filter limit, WindowGroupLimit-pushed), so the greedy
-  * rounds run over query×20 rows and query×400 pairwise sims no
-  * matter the corpus size; the candidate/pair frames localCheckpoint
-  * once so five unrolled rounds do not rescan the corpus. CUPED and
-  * the delta-method CI reduce the fact table to ONE per-user
-  * aggregate each, then assemble scalars from exact decimal sums —
-  * the per-user exchange is the only shuffle. VWAP and the price
-  * index run windowed/grouped exact-decimal sums over horizon- and
-  * alphabet-bounded series.
+  * Scale shapes: CUPED and the delta-method CI reduce the fact table
+  * to ONE per-user aggregate each, then assemble scalars from exact
+  * decimal sums — the per-user exchange is the only shuffle. VWAP and
+  * the price index run windowed/grouped exact-decimal sums over
+  * horizon- and alphabet-bounded series.
   *
-  * Determinism: every cosine is 6-dp rounded with (score, vec_id)
-  * tie-breaks before any greedy choice (simsearch discipline);
-  * CUPED/CI moments accumulate in exact DECIMAL and convert once
-  * (VARCHAR route on the DuckDB side, §1.5 r7); all final doubles
+  * Determinism: CUPED/CI moments accumulate in exact DECIMAL and
+  * convert once (VARCHAR route on the DuckDB side, §1.5 r7); all
+  * final doubles
   * assemble through identical IEEE expression trees on both engines
   * (growth_decompose discipline — no cross-engine round() on
   * results); the experiment split point is exact integer µs
   * midpoint arithmetic, not wall-clock.
   */
 object Composite21 {
-
-  // ---- llm_mmr_rerank ----------------------------------------------
-  // Maximal Marginal Relevance re-ranking (Carbonell–Goldstein 1998):
-  // for each pinned query (vec_id % 100 == 0), take the top-20
-  // cosine candidates, then greedily select 5 with
-  // score = 0.7·sim(q,c) − 0.3·max_{s∈S} sim(c,s) — the standard
-  // relevance-vs-redundancy trade. Rounds are UNROLLED (fixed k=5,
-  // pagerank discipline) so the oracle expresses the identical
-  // greedy trajectory as chained CTEs.
-  private def mmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val e = load(s, dir, "embeddings")
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("simq"), asc("vec_id"))
-    val cand = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.CosineSim(col("q_emb"), col("embedding")), 6)
-          .as("simq"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 20)
-      .drop("rn")
-      .localCheckpoint()
-    val ce = cand.join(e, "vec_id")
-      .select(col("q_id"), col("vec_id"), col("embedding"))
-    val pairs = ce.select(col("q_id"), col("vec_id").as("a"),
-        col("embedding").as("ea"))
-      .join(ce.select(col("q_id"), col("vec_id").as("b"),
-        col("embedding").as("eb")), "q_id")
-      .filter(col("a") =!= col("b"))
-      .select(col("q_id"), col("a"), col("b"),
-        round(graft.functions.CosineSim(col("ea"), col("eb")), 6).as("sim"))
-      .localCheckpoint()
-    // Seed: the single most query-similar candidate.
-    val seedW = Window.partitionBy(col("q_id"))
-      .orderBy(desc("simq"), asc("vec_id"))
-    var sel = cand.withColumn("rn", row_number().over(seedW))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("vec_id"), col("simq"), lit(1).as("k"))
-    for (k <- 2 to 5) {
-      val rem = cand.join(sel.select("q_id", "vec_id"),
-        Seq("q_id", "vec_id"), "left_anti")
-      val pen = pairs
-        .join(sel.select(col("q_id"), col("vec_id").as("b")), Seq("q_id", "b"))
-        .groupBy(col("q_id"), col("a").as("vec_id"))
-        .agg(max(col("sim")).as("pen"))
-      val pickW = Window.partitionBy(col("q_id"))
-        .orderBy(desc("score"), asc("vec_id"))
-      val pick = rem.join(pen, Seq("q_id", "vec_id"))
-        .select(col("q_id"), col("vec_id"), col("simq"),
-          (lit(0.7) * col("simq") - lit(0.3) * col("pen")).as("score"))
-        .withColumn("rn", row_number().over(pickW))
-        .filter(col("rn") === 1)
-        .select(col("q_id"), col("vec_id"), col("simq"), lit(k).as("k"))
-      sel = sel.unionAll(pick).localCheckpoint()
-    }
-    sel.select(col("q_id"), col("k"), col("vec_id"), col("simq"))
-      .orderBy("q_id", "k")
-  }
-
-  private def mmrRerankOracle: String = {
-    val rounds = (2 to 5).map { k =>
-      s"""sc$k AS (
-         |  SELECT c.q_id, c.vec_id, c.simq,
-         |    0.7 * c.simq - 0.3 * max(p.sim) AS score
-         |  FROM cand c
-         |  JOIN pairs p ON p.q_id = c.q_id AND p.a = c.vec_id
-         |  JOIN sel${k - 1} s ON s.q_id = p.q_id AND s.vec_id = p.b
-         |  WHERE NOT EXISTS (SELECT 1 FROM sel${k - 1} x
-         |    WHERE x.q_id = c.q_id AND x.vec_id = c.vec_id)
-         |  GROUP BY c.q_id, c.vec_id, c.simq),
-         |pick$k AS (
-         |  SELECT q_id, vec_id, simq, $k AS k FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY score DESC, vec_id) AS rn
-         |    FROM sc$k) WHERE rn = 1),
-         |sel$k AS (SELECT * FROM sel${k - 1}
-         |          UNION ALL SELECT * FROM pick$k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_id, embedding AS q_emb
-       |  FROM embeddings WHERE vec_id % 100 = 0),
-       |cr AS (
-       |  SELECT q_id, vec_id,
-       |    round(list_cosine_similarity(CAST(q_emb AS DOUBLE[]),
-       |      CAST(embedding AS DOUBLE[])), 6) AS simq
-       |  FROM q JOIN embeddings ON q_id <> vec_id),
-       |cand AS (
-       |  SELECT q_id, vec_id, simq FROM (
-       |    SELECT *, row_number() OVER (
-       |      PARTITION BY q_id ORDER BY simq DESC, vec_id) AS rn
-       |    FROM cr) WHERE rn <= 20),
-       |ce AS (
-       |  SELECT c.q_id, c.vec_id, e.embedding
-       |  FROM cand c JOIN embeddings e ON c.vec_id = e.vec_id),
-       |pairs AS (
-       |  SELECT x.q_id, x.vec_id AS a, y.vec_id AS b,
-       |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-       |      CAST(y.embedding AS DOUBLE[])), 6) AS sim
-       |  FROM ce x JOIN ce y ON x.q_id = y.q_id AND x.vec_id <> y.vec_id),
-       |sel1 AS (
-       |  SELECT q_id, vec_id, simq, 1 AS k FROM (
-       |    SELECT *, row_number() OVER (
-       |      PARTITION BY q_id ORDER BY simq DESC, vec_id) AS rn
-       |    FROM cand) WHERE rn = 1),
-       |$rounds
-       |SELECT q_id, k, vec_id, simq FROM sel5 ORDER BY q_id, k""".stripMargin
-  }
 
   // ---- evt_uplift_cuped --------------------------------------------
   // CUPED variance reduction (Deng 2013): split the horizon at the
@@ -381,7 +268,6 @@ object Composite21 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_mmr_rerank" -> (mmrRerank _),
     "evt_uplift_cuped" -> (upliftCuped _),
     "agg_delta_method_ratio_ci" -> (deltaRatioCi _),
     "win_vwap" -> (vwap _),
@@ -389,7 +275,6 @@ object Composite21 {
   )
 
   val oracle: Map[String, String] = Map(
-    "llm_mmr_rerank" -> mmrRerankOracle,
     "evt_uplift_cuped" -> upliftCupedOracle,
     "agg_delta_method_ratio_ci" -> deltaRatioCiOracle,
     "win_vwap" -> vwapOracle,

@@ -6,81 +6,21 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.40 — round-16 fourth batch: binary-sign Hamming
-  * similarity, difference-in-differences, and the ulcer index.
+/** SURVEY.md §2.40 — round-16 fourth batch: difference-in-differences
+  * and the ulcer index. (The batch's binary-sign Hamming similarity
+  * is in [[retrieval.Search]].)
   *
-  * Scale shapes: Hamming search quantizes each 64-d vector to TWO
-  * 64-bit words map-side (sign bits, no RNG), so the pair scan
-  * compares integers, not float arrays — the representation that
-  * makes billion-scale binary ANN practical; the small side
-  * broadcasts, and at corpus scale the same words become the LSH
-  * bucket key (group by hi-word prefix) instead of a full pair
-  * scan. DiD reduces the fact table to one per-user aggregate and
-  * assembles the estimator from exact decimal sums. The ulcer index
-  * stays decimal-exact through the squared-drawdown window sum —
-  * the only double op is the final sqrt (a window sum of DOUBLES
+  * Scale shapes: DiD reduces the fact table to one per-user aggregate
+  * and assembles the estimator from exact decimal sums. The ulcer
+  * index stays decimal-exact through the squared-drawdown window sum
+  * — the only double op is the final sqrt (a window sum of DOUBLES
   * would be association-order-dependent across engines; decimal is
   * not).
   *
-  * Determinism: sign-bit packing and Hamming distances are exact
-  * integer arithmetic end to end; DiD and ulcer follow the
-  * exact-decimal-moments → one-IEEE-assembly discipline; ties in
-  * the Hamming top-10 break on the (a, b) key pair.
+  * Determinism: DiD and ulcer follow the exact-decimal-moments →
+  * one-IEEE-assembly discipline.
   */
 object Composite23 {
-
-  // ---- llm_simsearch_hamming ---------------------------------------
-  // Binary-quantized similarity: embedding → 64 sign bits packed as
-  // (lo, hi) 32-bit halves in two BIGINTs; pair similarity =
-  // 1 − hamming/64 via bit_count(xor). Top-10 closest pairs.
-  private def simsearchHamming(s: SparkSession, dir: String): DataFrame = {
-    val e = load(s, dir, "embeddings")
-    val bits = e
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy(col("vec_id"))
-      .agg(
-        sum(expr("IF(x > 0 AND pos < 32, shiftleft(CAST(1 AS BIGINT), pos), CAST(0 AS BIGINT))"))
-          .as("lo"),
-        sum(expr("IF(x > 0 AND pos >= 32, shiftleft(CAST(1 AS BIGINT), pos - 32), CAST(0 AS BIGINT))"))
-          .as("hi"))
-    val a = bits.select(col("vec_id").as("vec_a"), col("lo").as("la"),
-      col("hi").as("ha"))
-    val b = bits.select(col("vec_id").as("vec_b"), col("lo").as("lb"),
-      col("hi").as("hb"))
-    a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (bit_count(expr("la ^ lb")) + bit_count(expr("ha ^ hb")))
-          .cast("bigint").as("hamming_bits"))
-      .select(col("vec_a"), col("vec_b"), col("hamming_bits"),
-        (lit(1.0) - col("hamming_bits").cast("double") / lit(64.0))
-          .as("sim"))
-      .orderBy(asc("hamming_bits"), asc("vec_a"), asc("vec_b"))
-      .limit(10)
-  }
-
-  private val simsearchHammingOracle =
-    """WITH u AS (
-      |  -- no WITH ORDINALITY in DuckDB 1.0.0: the corpus dim is a
-      |  -- fixed 64, so subscripts come from a literal series
-      |  SELECT vec_id, CAST(t.i - 1 AS INT) AS pos, embedding[t.i] AS x
-      |  FROM embeddings CROSS JOIN generate_series(1, 64) AS t(i)),
-      |bits AS (
-      |  SELECT vec_id,
-      |    CAST(sum(CASE WHEN x > 0 AND pos < 32
-      |      THEN CAST(1 AS BIGINT) << pos ELSE 0 END) AS BIGINT) AS lo,
-      |    CAST(sum(CASE WHEN x > 0 AND pos >= 32
-      |      THEN CAST(1 AS BIGINT) << (pos - 32) ELSE 0 END) AS BIGINT)
-      |      AS hi
-      |  FROM u GROUP BY vec_id),
-      |p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-      |    CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-      |      AS BIGINT) AS hamming_bits
-      |  FROM bits a JOIN bits b ON a.vec_id < b.vec_id)
-      |SELECT vec_a, vec_b, hamming_bits,
-      |  1.0 - CAST(hamming_bits AS DOUBLE) / 64.0 AS sim
-      |FROM p
-      |ORDER BY hamming_bits, vec_a, vec_b LIMIT 10""".stripMargin
 
   // ---- evt_diff_in_diff --------------------------------------------
   // Difference-in-differences on the CUPED design: arms = user_id %
@@ -215,13 +155,11 @@ object Composite23 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_simsearch_hamming" -> (simsearchHamming _),
     "evt_diff_in_diff" -> (diffInDiff _),
     "win_ulcer_index" -> (ulcerIndex _)
   )
 
   val oracle: Map[String, String] = Map(
-    "llm_simsearch_hamming" -> simsearchHammingOracle,
     "evt_diff_in_diff" -> diffInDiffOracle,
     "win_ulcer_index" -> ulcerIndexOracle
   )

@@ -110,7 +110,7 @@ object Composite51 {
   /** The rank-grid CTEs (o/vc/ranked/gc) as SINGLE shared SQL text —
     * the Dunn post-hoc oracle (Composite69) composes from the same
     * string, so the two replicas cannot drift apart (the
-    * ivfOracleCtes discipline, LlmOps3). */
+    * ivfOracleCtes discipline, retrieval.Ann). */
   private[graft] val kwRankCtes =
     """o AS (
       |  SELECT o_orderpriority AS g,

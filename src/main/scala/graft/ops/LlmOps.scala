@@ -3,116 +3,25 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.CosineSim
 import graft.util.Tables._
 
-/** SURVEY.md §2.11 — LLM-training-data pipeline operators:
-  * similarity search, text analysis, TF-IDF, multimodal projection.
+/** SURVEY.md §2.11 — LLM-training-data pipeline operators: text
+  * statistics, TF-IDF and multimodal projection. (The similarity
+  * search rows of this section are in [[retrieval.Search]].)
   *
-  * Scale design:
-  *  - Similarity search uses the fused codegen kernel
-  *    [[graft.functions.CosineSim]] (no per-pair allocation). The
-  *    brute-force pair scan is the small-SF baseline; the 100 TB path
-  *    is the same kernel behind an LSH/IVF bucketing join (bucket on
-  *    coarse quantization, compare within buckets).
-  *  - k-NN broadcasts the (small) query set so the corpus never
-  *    shuffles.
-  *  - TF-IDF / text stats are explode → hash-aggregate pipelines;
-  *    vocabulary cardinality grows sub-linearly with corpus size.
+  * Scale design: TF-IDF / text stats are explode → hash-aggregate
+  * pipelines; vocabulary cardinality grows sub-linearly with corpus
+  * size.
   */
 object LlmOps {
 
   // ---------------------------------------------------------- queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_simsearch_topk" -> (simsearchTopK _),
-    "llm_simsearch_knn" -> (simsearchKnn _),
     "llm_text_stats" -> (textStats _),
     "llm_tfidf" -> (tfidf _),
     "llm_multimodal_cols" -> (multimodal _)
   )
-
-  // Brute-force top-10 most similar pairs (small-SF baseline; see
-  // scale note above). Norms are precomputed ONCE PER VECTOR, so the
-  // n² pair scan runs only the fused dot-product kernel —
-  // cos = dot * inv_norm_a * inv_norm_b, a third of the per-pair
-  // flops of recomputing both norms inside every pair.
-  //
-  // The n² pair space is generated as a BLOCKED equi-join (the
-  // triangle-join trick), not `a.vec_id < b.vec_id` alone: a bare
-  // inequality condition plans as BroadcastNestedLoopJoin, which is
-  // outside whole-stage codegen — every pair then pays an interpreted
-  // kernel eval (measured 2.7 s at sf0.1). Blocking by vec_id % NB
-  // turns it into an equi-join on the partner-block id: the tiny
-  // (bi ≤ bj) block-pair table replicates the LEFT side ~NB/2×
-  // (bare arrays, shuffled — never broadcast), the right side joins
-  // on its own block, and the codegen'd join evaluates the same n²/2
-  // residual pairs inside one fused pipeline with NB-way parallelism.
-  private val topkBlocks = 32
-  private def simsearchTopK(s: SparkSession, dir: String): DataFrame = {
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          (lit(1.0) / sqrt(graft.functions.DotProduct(col("embedding"), col("embedding"))))
-            .as("inv_norm"),
-          pmod(col("vec_id"), lit(topkBlocks)).as("blk"))
-      // Block ids are pmod(vec_id, NB) ⊆ [0, NB) by construction, so
-      // the pair table comes from a local range — no corpus rescan,
-      // no distinct exchange.
-      val ids = s.range(topkBlocks).select(col("id").as("blk"))
-      val blockPairs = ids.as("x").crossJoin(ids.as("y"))
-        .filter(col("x.blk") <= col("y.blk"))
-        .select(col("x.blk").as("bi"), col("y.blk").as("bj"))
-      val a = e.join(broadcast(blockPairs), col("blk") === col("bi"))
-        .select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-          col("inv_norm").as("inv_a"), col("blk").as("blk_a"), col("bj"))
-      // Each cross-block pair appears in exactly one orientation
-      // (blk_a < blk_b by construction); the diagonal needs id_a <
-      // id_b to halve itself. Output ids canonicalize to (min, max)
-      // so the arbitrary cross-block orientation is invisible.
-      //
-      // The explicit repartition is the POINT of the blocking: the
-      // corpus reads as one small file split, so without it the whole
-      // n²/2 pair scan runs in a single task (AQE coalesces the tiny
-      // shuffle back to 1 partition; a user repartition is never
-      // coalesced). Measured at sf0.1: 2.78 s single-task BNLJ →
-      // 1.76 s blocked 32-way (remaining time is fixed stage
-      // overhead, which amortizes at real scale; NB=64 re-measured
-      // WORSE — replication cost outgrows the balance win).
-      a.repartition(topkBlocks, col("bj"))
-        .join(e, col("bj") === col("blk") &&
-          (col("blk_a") < col("blk") || col("id_a") < col("vec_id")))
-        .select(least(col("id_a"), col("vec_id")).as("vec_a"),
-          greatest(col("id_a"), col("vec_id")).as("vec_b"),
-          round(graft.functions.DotProduct(col("emb_a"), col("embedding")) *
-            col("inv_a") * col("inv_norm"), 6).as("cos_sim"))
-        .orderBy(desc("cos_sim"), asc("vec_a"), asc("vec_b"))
-        .limit(10)
-  }
-
-  // k-NN (k=5) for a deterministic query subset; the query side is
-  // broadcast so the corpus scan never shuffles.
-  // private[graft]: llm_ivf_recall reuses THIS exact-knn definition as
-  // its ground truth, so the two rows cannot drift apart.
-  private[graft] def simsearchKnn(s: SparkSession, dir: String): DataFrame =
-    simsearchKnnK(s, dir, 5)
-
-  /** k-parameterized brute-force ground truth (llm_ann_ndcg grades
-    * the IVF path against the k=10 ranking; the k=5 form above is
-    * the llm_simsearch_knn row). */
-  private[graft] def simsearchKnnK(s: SparkSession, dir: String,
-      k: Int): DataFrame = {
-      val e = load(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(desc("cos_sim"), asc("vec_id"))
-      e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-        .select(col("q_id"), col("vec_id"),
-          round(CosineSim(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .orderBy("q_id", "rn")
-  }
 
   // Per-language corpus profile + most frequent token.
   private def textStats(s: SparkSession, dir: String): DataFrame = {
@@ -170,25 +79,6 @@ object LlmOps {
   }
 
   val oracle: Map[String, String] = Map(
-    "llm_simsearch_topk" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |    CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |ORDER BY cos_sim DESC, vec_a, vec_b LIMIT 10""".stripMargin,
-
-    "llm_simsearch_knn" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-        |  FROM embeddings WHERE vec_id % 100 = 0),
-        |c AS (SELECT q_id, vec_id,
-        |  round(list_cosine_similarity(CAST(q_emb AS DOUBLE[]),
-        |    CAST(embedding AS DOUBLE[])), 6) AS cos_sim
-        |  FROM q JOIN embeddings ON q_id <> vec_id),
-        |r AS (SELECT *, CAST(row_number() OVER (
-        |  PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS INT) AS rn FROM c)
-        |SELECT q_id, vec_id, cos_sim, rn FROM r WHERE rn <= 5
-        |ORDER BY q_id, rn""".stripMargin,
-
     "llm_text_stats" ->
       """WITH stats AS (
         |  SELECT lang, count(*) AS n_docs,

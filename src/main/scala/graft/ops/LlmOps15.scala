@@ -6,82 +6,18 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.34 — round-15 seventh batch: clustering purity
-  * against the label column, temporal distribution drift, and
-  * expected-shortfall tail risk.
+/** SURVEY.md §2.34 — round-15 seventh batch: temporal distribution
+  * drift and expected-shortfall tail risk. (The batch's clustering
+  * purity row is in [[retrieval.Geometry]].)
   *
-  * Scale shapes: purity reuses the kmeans-seed broadcast assignment
-  * (map-side argmax) and reduces to k×labels cells; drift is two
-  * conditional aggregates over event types; CVaR runs over the
-  * horizon-bounded daily aggregate with a 1-row percentile
-  * broadcast.
+  * Scale shapes: drift is two conditional aggregates over event
+  * types; CVaR runs over the horizon-bounded daily aggregate with a
+  * 1-row percentile broadcast.
   *
-  * Determinism: cluster assignment uses round(cos, 6) DESC, cid ASC
-  * (kmeans discipline); purity/drift shares are exact-count ratios;
-  * daily revenue stays decimal-exact until the final statistics.
+  * Determinism: drift shares are exact-count ratios; daily revenue
+  * stays decimal-exact until the final statistics.
   */
 object LlmOps15 {
-
-  // ---- llm_cluster_purity ------------------------------------------
-  // Purity of the IVF blocking clusters against the label column:
-  // assign every vector to its nearest seed centroid (vec_id < 8 —
-  // exactly llm_simsearch_ivf's blocking scheme), then per cluster
-  // surface the majority label (ties → smallest label) and its
-  // share. Low purity here is WHY llm_knn_classify sits at chance on
-  // this corpus — the labels are synthetic; the metric pipeline is
-  // the deliverable.
-  private def clusterPurity(s: SparkSession, dir: String): DataFrame = {
-    val emb = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val cents = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val aw = Window.partitionBy(col("vec_id"))
-      .orderBy(desc("cos"), asc("cid"))
-    val assign = emb.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("label"), col("cid"),
-        round(graft.functions.CosineSim(col("embedding"), col("cvec")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(aw))
-      .filter(col("rn") === 1)
-    val cells = assign.groupBy(col("cid"), col("label"))
-      .agg(count(lit(1)).as("c"))
-    val pw = Window.partitionBy(col("cid"))
-      .orderBy(col("c").desc, col("label").asc)
-    cells
-      .withColumn("pr", row_number().over(pw))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("cid"))))
-      .filter(col("pr") === 1)
-      .select(col("cid"), col("n").cast("bigint").as("n"),
-        col("label").as("top_label"), col("c").as("n_top"),
-        round(col("c").cast("double") / col("n").cast("double"), 6)
-          .as("purity"))
-      .orderBy("cid")
-  }
-
-  private val clusterPurityOracle =
-    """WITH emb AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label
-      |  FROM embeddings),
-      |cents AS (SELECT vec_id AS cid, e AS cvec FROM emb WHERE vec_id < 8),
-      |assign AS (
-      |  SELECT vec_id, label, cid FROM (
-      |    SELECT emb.vec_id, emb.label, cents.cid, row_number() OVER (
-      |      PARTITION BY emb.vec_id
-      |      ORDER BY round(list_cosine_similarity(emb.e, cents.cvec), 6)
-      |        DESC, cents.cid) AS rn
-      |    FROM emb CROSS JOIN cents) WHERE rn = 1),
-      |cells AS (
-      |  SELECT cid, label, CAST(count(*) AS BIGINT) AS c
-      |  FROM assign GROUP BY cid, label),
-      |top AS (
-      |  SELECT cid, label, c, row_number() OVER (
-      |      PARTITION BY cid ORDER BY c DESC, label) AS pr,
-      |    CAST(sum(c) OVER (PARTITION BY cid) AS BIGINT) AS n
-      |  FROM cells)
-      |SELECT cid, n, label AS top_label, c AS n_top,
-      |  round(CAST(c AS DOUBLE) / CAST(n AS DOUBLE), 6) AS purity
-      |FROM top WHERE pr = 1
-      |ORDER BY cid""".stripMargin
 
   // ---- evt_distribution_drift --------------------------------------
   // Event-type mix drift between the first half of the horizon and
@@ -174,13 +110,11 @@ object LlmOps15 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_cluster_purity" -> (clusterPurity _),
     "evt_distribution_drift" -> (distributionDrift _),
     "agg_cvar" -> (cvar _)
   )
 
   val oracle: Map[String, String] = Map(
-    "llm_cluster_purity" -> clusterPurityOracle,
     "evt_distribution_drift" -> distributionDriftOracle,
     "agg_cvar" -> cvarOracle
   )

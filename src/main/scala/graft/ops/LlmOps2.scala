@@ -3,22 +3,18 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.CosineSim
 import graft.util.Tables._
 
 /** SURVEY.md §2.11 wave 2 — the remaining training-data-pipeline
-  * operators: language-ID heuristic, quality scoring, sign-LSH ANN
-  * search, PII masking, sequence packing, stratified sampling, token
-  * counting, document fingerprinting, the multimodal binary column
-  * plumbing, and the hashed word-bigram sets the dedup family's
-  * bigram-Jaccard pair scan reads ([[sharedBigramSets]]).
+  * operators: language-ID heuristic, quality scoring, PII masking,
+  * sequence packing, stratified sampling, token counting, document
+  * fingerprinting, the multimodal binary column plumbing, and the
+  * hashed word-bigram sets the dedup family's bigram-Jaccard pair
+  * scan reads ([[sharedBigramSets]]). (The sign-LSH ANN rows of this
+  * wave are in [[retrieval.Ann]].)
   *
-  * Scale notes:
-  *  - ANN search equi-joins on sign-projection buckets: candidate
-  *    pairs shrink ~bucket-count-fold, the standard ANN scale path;
-  *    the in-bucket compare reuses the fused
-  *    [[graft.functions.CosineSim]] codegen kernel.
-  *  - Everything else is per-row scalar work or explode + hash-agg.
+  * Scale notes: everything here is per-row scalar work or explode +
+  * hash-agg.
   */
 object LlmOps2 {
 
@@ -162,150 +158,9 @@ object LlmOps2 {
     substring(md5(concat(lit("graft"), col("doc_id").cast("string"))), 1, 4) <
       when(col("lang") === "en", "8000").otherwise("4000")
 
-  // ------------------------------------------------- ANN (sign-LSH)
-
-  private val AnnTables = 4
-  private val AnnBits = 8
-
-  /** Sign-random-projection buckets, one per table: bit b of table t
-    * = sign of the dot product with a deterministic pseudo-random
-    * projection vector (components derived from
-    * xxhash64(t*bits+b, dim) — fixed seeds, no RNG). Computed per row
-    * by the codegen kernel [[graft.functions.SignBuckets]]: all 32
-    * projections in one pass over the vector, no explode (the retired
-    * aggregate shape shuffled one row per DIMENSION with 32 buffers
-    * per vector; a HOF-fold formulation interpreted 32 lambdas per
-    * row). Value-identical to the aggregate form — asserted per
-    * vector in LlmSpec. */
-  private[graft] def annBuckets(embeddings: DataFrame): DataFrame =
-    embeddings
-      .select(col("vec_id"),
-        graft.functions.SignBuckets(col("embedding"), AnnTables, AnnBits)
-          .as("bk"))
-      .filter(col("bk").isNotNull)
-      .select(col("vec_id") +:
-        (0 until AnnTables).map(t => col("bk").getItem(t).as(s"bucket$t")): _*)
-
-  /** LSH-bucketed approximate top-k: candidates are vectors sharing
-    * any (table, bucket) with the query — the ANN scale path for the
-    * brute-force `llm_simsearch_topk`/`knn` baselines. Candidate
-    * generation is an equi-join on (table, bucket); only in-bucket
-    * pairs are ranked (with the fused CosineSim kernel), so cost
-    * follows bucket occupancy, not n². Recall depends on data
-    * clustering; identical/near-identical vectors share all buckets
-    * by construction (asserted with planted duplicates in LlmSpec). */
-  private[graft] def annTopK(embeddings: DataFrame,
-      isQuery: org.apache.spark.sql.Column, k: Int): DataFrame =
-    annTopKFromBuckets(annBuckets(embeddings), embeddings, isQuery, k)
-
-  /** Bucket-join + fused-cosine ranking stage over any
-    * (vec_id, bucket0..bucket{tables-1}) signature relation — shared
-    * by the xxhash64 production row and its md5-based verified twin
-    * (the dedup.NearDup.simhashPairsFromSims discipline), so the
-    * candidate pipeline under oracle check IS the production one. */
-  private[graft] def annTopKFromBuckets(buckets: DataFrame,
-      embeddings: DataFrame,
-      isQuery: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    val bucketed = buckets
-      .select(col("vec_id"),
-        posexplode(array((0 until AnnTables).map(t => col(s"bucket$t")): _*)))
-      .toDF("vec_id", "tbl", "bucket")
-    // Dedup multi-table hits on the bare key pair BEFORE re-attaching
-    // the vectors: deduping rows that carry array columns degrades the
-    // aggregate to a sort-based one over the array buffers.
-    val cand = bucketed
-      .join(bucketed.filter(isQuery)
-        .select(col("tbl"), col("bucket"), col("vec_id").as("q_id")),
-        Seq("tbl", "bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"))
-      .distinct()
-    // Only the QUERY vectors are broadcast (small by contract); the
-    // corpus side joins on vec_id and shuffles — broadcasting the full
-    // corpus would cap the operator at the 8 GB broadcast limit and
-    // contradict the scale path this operator exists to provide.
-    val vecs = embeddings.select(col("vec_id"), col("embedding"))
-    val qVecs = embeddings.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    cand
-      .join(broadcast(qVecs), "q_id")
-      .join(vecs, "vec_id")
-      // floor(v*1e6 + 0.5)/1e6, not round(v, 6): the SURVEY §1.5
-      // shared-rounding form that evaluates identically on identical
-      // doubles in both engines (round() itself diverges within an
-      // ulp of a .5 boundary) — required because the verified twin
-      // below hash-compares this very column.
-      .select(col("q_id"), col("vec_id"),
-        (floor(CosineSim(col("q_emb"), col("embedding")) * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .orderBy("q_id", "rn")
-  }
-
-  /** md5-derived lane-major ±1 projection matrix for the verified ANN
-    * twin: sign(p, d) = +1 iff the 60-bit integer prefix of
-    * md5("ann<p>:<d>") is even, p in [0, 32), d in [1, 64] (1-indexed
-    * to match DuckDB's embedding[d]). Both engines derive the SAME
-    * matrix independently — Scala here, `md5('ann' || p || ':' || d)`
-    * in the oracle SQL — so no seed crosses an engine boundary. */
-  private[graft] val AnnVerifiedDims = 64
-  private lazy val annVerifiedSigns: Array[Byte] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(AnnTables * AnnBits * AnnVerifiedDims) { idx =>
-      val p = idx / AnnVerifiedDims
-      val d = idx % AnnVerifiedDims + 1
-      md.reset()
-      val hex = md.digest(s"ann$p:$d".getBytes("UTF-8"))
-        .map(b => f"${b & 0xff}%02x").mkString.substring(0, 15)
-      if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1.toByte else -1.toByte
-    }
-  }
-
-  /** Sign buckets from the md5 matrix via the one-pass exact-int64
-    * kernel [[graft.functions.SignBucketsExact]] — same execution
-    * shape as the production [[annBuckets]] (no explode, no shuffle),
-    * exactly reproducible by the oracle's SQL bit grid. */
-  private[graft] def annVerifiedBuckets(embeddings: DataFrame): DataFrame =
-    embeddings
-      .select(col("vec_id"),
-        graft.functions.SignBucketsExact(col("embedding"), AnnTables, AnnBits,
-          annVerifiedSigns).as("bk"))
-      .filter(col("bk").isNotNull)
-      .select(col("vec_id") +:
-        (0 until AnnTables).map(t => col("bk").getItem(t).as(s"bucket$t")): _*)
-
   // ---------------------------------------------------------- queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // LSH-bucketed ANN top-5 for the deterministic query subset — the
-    // scale path beside the brute-force knn baseline. No oracle
-    // (xxhash64-seeded projections — the verified twin below covers
-    // the pipeline); planted-duplicate recall in LlmSpec.
-    "llm_simsearch_ann" -> ((s: SparkSession, dir: String) =>
-      annTopK(load(s, dir, "embeddings"), col("vec_id") % 100 === 0, k = 5)),
-
-    // Oracle-checked twin of llm_simsearch_ann (VERDICT r10 item 2 —
-    // the last scale-path row outside the driver's hard signal): the
-    // row above is ✗ only because its sign projections are seeded
-    // with xxhash64, which DuckDB cannot compute. This twin derives a
-    // ±1 projection matrix from md5 (shared derivation, see
-    // annVerifiedSigns), quantizes each component to exact int
-    // milli-units so the 32 sign tests are pure int64 arithmetic in
-    // BOTH engines (no float-summation-order hazard), and runs the
-    // IDENTICAL production bucket-join + fused-cosine ranking via
-    // annTopKFromBuckets. DuckDB replicates the signature with an
-    // unnested sign grid + quantized dot sums, then ranks candidates
-    // with the same §1.5 shared-rounding cosine — the whole sign-LSH
-    // ANN tier (bucketing, candidate generation, ranking) is now
-    // hash-compared every round, not just planted-pair ScalaTest.
-    "llm_simsearch_ann_verified" -> ((s: SparkSession, dir: String) =>
-      annTopKFromBuckets(
-        annVerifiedBuckets(load(s, dir, "embeddings")),
-        load(s, dir, "embeddings"), col("vec_id") % 100 === 0, k = 5)),
-
     // Deterministic marker-token language guess (argmax with fixed
     // tie-break order), mirrored formula in the oracle.
     "llm_lang_id" -> ((s: SparkSession, dir: String) =>
@@ -483,55 +338,6 @@ object LlmOps2 {
         |    least(CAST(n_chars - (n_tok - 1) AS DOUBLE) / CAST(n_tok AS DOUBLE) / 10.0, 1.0) * 0.2
         |    ) * 1000000.0 + 0.5) / 1000000.0 AS quality
         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // Full replica of the md5-matrix sign-LSH ANN pipeline: sign grid
-    // (parity of the 60-bit md5 prefix, the annVerifiedSigns
-    // derivation), exact milli-unit quantization, int64 dot sums,
-    // bit-packed buckets, any-(table,bucket) candidate join, and the
-    // §1.5 floor-form cosine ranking with (cos_sim DESC, vec_id)
-    // tie-break — stage for stage the annTopKFromBuckets plan.
-    "llm_simsearch_ann_verified" ->
-      """WITH dims AS (SELECT unnest(range(1, 65)) AS d),
-        |projs AS (SELECT unnest(range(0, 32)) AS p),
-        |signs AS (
-        |  SELECT p.p, d.d,
-        |    CASE WHEN CAST(concat('0x',
-        |        substr(md5('ann' || p.p || ':' || d.d), 1, 15)) AS BIGINT)
-        |        % 2 = 0 THEN 1 ELSE -1 END AS s
-        |  FROM projs p CROSS JOIN dims d),
-        |q AS (
-        |  SELECT vec_id, d.d,
-        |    CAST(floor(CAST(embedding[d.d] AS DOUBLE) * 1000.0 + 0.5)
-        |      AS BIGINT) AS qv
-        |  FROM embeddings CROSS JOIN dims d
-        |  WHERE len(embedding) = 64),
-        |pr AS (
-        |  SELECT q.vec_id, s.p, sum(s.s * q.qv) AS dot
-        |  FROM q JOIN signs s ON s.d = q.d
-        |  GROUP BY 1, 2),
-        |bits AS (
-        |  SELECT vec_id, p // 8 AS tbl,
-        |    CAST(sum(CASE WHEN dot >= 0 THEN (1 << (p % 8)) ELSE 0 END)
-        |      AS BIGINT) AS bucket
-        |  FROM pr GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT qb.vec_id AS q_id, cb.vec_id
-        |  FROM bits qb JOIN bits cb
-        |    ON qb.tbl = cb.tbl AND qb.bucket = cb.bucket
-        |  WHERE qb.vec_id % 100 = 0 AND cb.vec_id <> qb.vec_id),
-        |scored AS (
-        |  SELECT c.q_id, c.vec_id,
-        |    floor(list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]),
-        |      CAST(ce.embedding AS DOUBLE[])) * 1e6 + 0.5) / 1e6 AS cos_sim
-        |  FROM cand c
-        |  JOIN embeddings qe ON qe.vec_id = c.q_id
-        |  JOIN embeddings ce ON ce.vec_id = c.vec_id),
-        |ranked AS (
-        |  SELECT q_id, vec_id, cos_sim, row_number() OVER (
-        |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS rn
-        |  FROM scored)
-        |SELECT q_id, vec_id, cos_sim, CAST(rn AS INT) AS rn
-        |FROM ranked WHERE rn <= 5 ORDER BY q_id, rn""".stripMargin,
 
     "llm_sample_stratified_verified" ->
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,

@@ -7,11 +7,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 
-import graft.functions.CosineSim
 import graft.util.Tables._
 
 /** SURVEY.md §2.11 (round-3 additions) — scale-path primitives for
-  * incremental ingest and vector search:
+  * incremental ingest, decontamination, data mixing and repetition
+  * scoring:
   *
   *  - [[seenFilter]]: Bloom-prefiltered membership against a seen
   *    corpus. The bloom binary is built by one aggregate over the seen
@@ -24,15 +24,8 @@ import graft.util.Tables._
   *    `llm_bloom_prefilter` here and `llm_dedup_incremental`
   *    (dedup.Keys) probe through it.
   *
-  *  - [[ivfTopK]]: IVF-style approximate k-NN. A deterministic coarse
-  *    centroid set partitions the corpus into cells (inverted lists);
-  *    queries probe only their `nprobe` nearest cells. Corpus-side
-  *    cell assignment shuffles on the cell id ONCE and is reusable;
-  *    per-query work drops from O(n) to O(n * nprobe / cells). The
-  *    fused [[graft.functions.CosineSim]] kernel scores both the
-  *    assignment and the in-cell scan. Centroid count is a knob —
-  *    ~sqrt(n) at scale (here: a fixed deterministic subsample, no
-  *    RNG, no training loop).
+  * (The IVF vector-search rows of this round are in
+  * [[retrieval.Ann]] and [[retrieval.Evaluation]].)
   */
 object LlmOps3 {
 
@@ -52,60 +45,6 @@ object LlmOps3 {
       ScalarSubquery(bloom.queryExecution.analyzed),
       Shim.expression(xxhash64(col(key))))))
     pruned.join(seen.select(key).distinct(), Seq(key), "left_semi")
-  }
-
-  /** IVF approximate top-k: nearest `k` corpus vectors for each query
-    * row, searching only the `nprobe` cells nearest to the query.
-    * Centroids = the deterministic `vec_id % centEvery == 0` subsample.
-    */
-  def ivfTopK(emb: DataFrame, isQuery: Column, k: Int,
-      nprobe: Int = 2, centEvery: Int = 97): DataFrame = {
-    val centroids = emb.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
-    // Corpus → nearest centroid (cell). Centroids broadcast; the
-    // argmax is a max_by AGGREGATE, not a window: an aggregate
-    // partially combines map-side, so the shuffle carries one row per
-    // VECTOR — a window would shuffle the corpus replicated
-    // ×|centroids| with the embedding arrays attached (n^1.5 bytes at
-    // scale). Tie-break (-cent_id) keeps the argmax deterministic.
-    // cent_sim rounds to 6 dp BEFORE the argmax / probe rank (same
-    // float-stability discipline as the in-cell cos_sim): the raw
-    // double is summation-order-sensitive across engines, and the
-    // oracle-checked twin below hash-compares the cell assignment
-    // transitively — a near-tie flipping argmax between engines would
-    // red the row over representation, not algebra. Recall impact is
-    // nil (planted-pair recall asserted unchanged in LlmSpec).
-    val cells = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cent_sim",
-        round(CosineSim(col("embedding"), col("cent_emb")), 6))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("cent_id"), struct(col("cent_sim"), -col("cent_id"))).as("cell"),
-        first(col("embedding")).as("embedding"))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    // Queries → their nprobe nearest cells.
-    val q = emb.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wProbe = Window.partitionBy("q_id")
-      .orderBy(desc("cent_sim"), asc("cent_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cent_sim",
-        round(CosineSim(col("q_emb"), col("cent_emb")), 6))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("cent_id").as("cell"))
-    // In-cell scan: the SMALL query-probe set broadcasts (bare query
-    // vectors — never the corpus side), the corpus streams by cell.
-    val wTop = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("vec_id"))
-    cells.join(broadcast(probes), "cell")
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos_sim", round(CosineSim(col("q_emb"), col("embedding")), 6))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"), col("cos_sim"),
-        col("rn").cast("int").as("rn"))
-      .orderBy("q_id", "rn")
   }
 
   /** Benchmark decontamination: training docs sharing any word
@@ -189,77 +128,6 @@ object LlmOps3 {
       seenFilter(seen, incoming, "user_id").orderBy("user_id")
     }),
 
-    // IVF k-NN for the deterministic query subset (same queries as the
-    // brute-force llm_simsearch_knn baseline). No oracle (approximate
-    // by design); planted-vector recall + cell-exhaustiveness in
-    // LlmSpec.
-    "llm_simsearch_ivf" -> ((s: SparkSession, dir: String) =>
-      ivfTopK(load(s, dir, "embeddings"), col("vec_id") % 100 === 0, k = 5)),
-
-    // Oracle-checked twin of llm_simsearch_ivf (the r8 verdict's
-    // "graduate the ANN path" item, via the llm_dedup_near_verified
-    // pattern): the IDENTICAL IVF plan, hash-compared against a FULL
-    // DuckDB replica of the pipeline — deterministic centroid
-    // subsample, 6-dp-rounded argmax cell assignment, nprobe probing,
-    // exact in-cell ranking. Every stage that matters at 100 TB
-    // (cell blocking, probe selection, candidate ranking) is thereby
-    // re-derived by an independent engine each round; a drifted cell
-    // assignment or probe order fails the hash compare. (The sign-LSH
-    // llm_simsearch_ann row stays ✗ — its xxhash64-seeded projections
-    // are not expressible in the oracle's SQL dialect — but since r11
-    // its md5-matrix twin llm_simsearch_ann_verified puts the
-    // identical bucket-join + ranking pipeline in the hard signal.)
-    "llm_simsearch_ivf_verified" -> ((s: SparkSession, dir: String) =>
-      ivfTopK(load(s, dir, "embeddings"), col("vec_id") % 100 === 0, k = 5)),
-
-    // ANN recall@5, oracle-checked end to end: the IVF plan's top-5
-    // joined against the exact brute-force top-5 ground truth (THE
-    // llm_simsearch_knn definition), per-query hit count + recall.
-    // The driver re-derives BOTH sides in SQL each round, so the
-    // recall NUMBER itself — not just the candidate plumbing — is in
-    // the hard signal. At 100 TB this is the evaluation harness run
-    // on a query sample; both sides stay blocked/broadcast-shaped.
-    "llm_ivf_recall" -> ((s: SparkSession, dir: String) => {
-      val approx = ivfTopK(load(s, dir, "embeddings"),
-          col("vec_id") % 100 === 0, k = 5)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      LlmOps.simsearchKnn(s, dir)
-        .select(col("q_id"), col("vec_id"))
-        .join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / 5.0, 6).as("recall"))
-        .orderBy("q_id")
-    }),
-
-    // The nprobe capacity-planning curve: mean recall@5 for nprobe in
-    // {1, 2, 4} against the SAME exact ground truth (lazily
-    // checkpointed — three arms read one materialization). Cell
-    // assignment is nprobe-independent, so at scale the three arms
-    // share one corpus pass conceptually; here each arm re-derives it
-    // (the oracle does too — symmetric cost). mean_recall is ONE
-    // double division of two exact integers — no cross-engine
-    // summation-order hazard.
-    "llm_ivf_nprobe_sweep" -> ((s: SparkSession, dir: String) => {
-      val emb = load(s, dir, "embeddings")
-      val exact = LlmOps.simsearchKnn(s, dir)
-        .select(col("q_id"), col("vec_id"))
-        .localCheckpoint(false)
-      Seq(1, 2, 4).map { np =>
-        val ap = ivfTopK(emb, col("vec_id") % 100 === 0, k = 5, nprobe = np)
-          .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-        exact.join(ap, Seq("q_id", "vec_id"), "left")
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(coalesce(col("hit"), lit(0L))).as("total_hits"))
-          .select(lit(np.toLong).as("nprobe"),
-            expr("n_pairs div 5").as("n_queries"),
-            col("total_hits"),
-            round(col("total_hits").cast("double")
-              / col("n_pairs").cast("double"), 6).as("mean_recall"))
-      }.reduce(_.union(_)).orderBy("nprobe")
-    }),
-
     // Benchmark decontamination over the documents corpus: every 50th
     // doc is the "eval set"; training docs sharing any 5-gram with it
     // are flagged with their shared-gram count.
@@ -277,109 +145,7 @@ object LlmOps3 {
         .limit(20))
   )
 
-  // Cell assignment (cent, asn) is nprobe-independent and shared;
-  // probe selection + in-cell ranking are generated per nprobe with a
-  // CTE-name suffix so the sweep row can hold three replicas in one
-  // query. The verified row uses the default (nprobe 2, no suffix).
-  private[graft] val ivfOracleBase =
-    """cent AS (
-      |  SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cent_emb
-      |  FROM embeddings WHERE vec_id % 97 = 0),
-      |asn AS (
-      |  SELECT vec_id, cent_id AS cell FROM (
-      |    SELECT e.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |        round(list_cosine_similarity(
-      |          CAST(e.embedding AS DOUBLE[]), c.cent_emb), 6) DESC,
-      |        c.cent_id) AS arn
-      |    FROM embeddings e CROSS JOIN cent c)
-      |  WHERE arn = 1)""".stripMargin
-
-  private[graft] def ivfOracleProbe(nprobe: Int, sfx: String): String =
-    s"""probes$sfx AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT q.vec_id AS q_id, c.cent_id AS cell,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        round(list_cosine_similarity(
-       |          CAST(q.embedding AS DOUBLE[]), c.cent_emb), 6) DESC,
-       |        c.cent_id) AS prn
-       |    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id % 100 = 0)
-       |  WHERE prn <= $nprobe),
-       |ranked$sfx AS (
-       |  SELECT q_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY cos_sim DESC, vec_id) AS INT) AS rn
-       |  FROM (
-       |    SELECT p.q_id, a.vec_id,
-       |      round(list_cosine_similarity(
-       |        CAST(qe.embedding AS DOUBLE[]),
-       |        CAST(ce.embedding AS DOUBLE[])), 6) AS cos_sim
-       |    FROM probes$sfx p
-       |    JOIN asn a ON a.cell = p.cell AND a.vec_id <> p.q_id
-       |    JOIN embeddings qe ON qe.vec_id = p.q_id
-       |    JOIN embeddings ce ON ce.vec_id = a.vec_id))""".stripMargin
-
-  private val ivfOracleCtes =
-    ivfOracleBase + ",\n" + ivfOracleProbe(2, "")
-
-  // The exact brute-force ground truth (the llm_simsearch_knn
-  // definition) as reusable CTEs, shared by the recall and sweep rows.
-  private val exactKnnCtes =
-    """gq AS (SELECT vec_id AS q_id, embedding AS q_emb
-      |  FROM embeddings WHERE vec_id % 100 = 0),
-      |gc AS (SELECT q_id, vec_id,
-      |  round(list_cosine_similarity(CAST(q_emb AS DOUBLE[]),
-      |    CAST(embedding AS DOUBLE[])), 6) AS cos_sim
-      |  FROM gq JOIN embeddings ON q_id <> vec_id),
-      |gr AS (SELECT q_id, vec_id, row_number() OVER (
-      |  PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS rn FROM gc),
-      |exact AS (SELECT q_id, vec_id FROM gr WHERE rn <= 5)""".stripMargin
-
-  private val nprobeSweepOracle = {
-    val arms = Seq(1 -> "_1", 2 -> "_2", 4 -> "_4")
-    val probeCtes = arms.map { case (np, sfx) => ivfOracleProbe(np, sfx) }
-      .mkString(",\n")
-    val selects = arms.map { case (np, sfx) =>
-      s"""SELECT CAST($np AS BIGINT) AS nprobe,
-         |  CAST(count(*) // 5 AS BIGINT) AS n_queries,
-         |  CAST(count(i.vec_id) AS BIGINT) AS total_hits,
-         |  round(CAST(count(i.vec_id) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS mean_recall
-         |FROM exact e LEFT JOIN
-         |  (SELECT q_id, vec_id FROM ranked$sfx WHERE rn <= 5) i
-         |  ON e.q_id = i.q_id AND e.vec_id = i.vec_id""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"WITH $ivfOracleBase,\n$probeCtes,\n$exactKnnCtes\n$selects\nORDER BY nprobe"
-  }
-
   val oracle: Map[String, String] = Map(
-    "llm_ivf_nprobe_sweep" -> nprobeSweepOracle,
-    // Full IVF replica: centroids = vec_id % 97 = 0; cell = argmax
-    // centroid cosine (6 dp, tie -> lowest cent_id); probes = top-2
-    // cells per query by the same key; candidates = probed cells
-    // minus self; rank by (cos_sim 6 dp DESC, vec_id). Mirrors
-    // ivfTopK stage for stage. SINGLE CTE text (ivfOracleCtes) — the
-    // verified-plan row and the recall row compose from it, so the
-    // two SQL replicas cannot drift apart.
-    "llm_simsearch_ivf_verified" ->
-      s"""WITH $ivfOracleCtes
-         |SELECT q_id, vec_id, cos_sim, rn FROM ranked
-         |WHERE rn <= 5 ORDER BY q_id, rn""".stripMargin,
-
-    // recall@5 = |IVF top-5 INTERSECT exact top-5| / 5 per query: the
-    // IVF replica above joined against the llm_simsearch_knn exact
-    // ground truth. count(i.vec_id) counts matches only (LEFT JOIN
-    // nulls drop out of count(col)).
-    "llm_ivf_recall" ->
-      s"""WITH $ivfOracleCtes,
-         |ivf AS (SELECT q_id, vec_id FROM ranked WHERE rn <= 5),
-         |$exactKnnCtes
-         |SELECT e.q_id, CAST(count(i.vec_id) AS BIGINT) AS n_hits,
-         |  round(CAST(count(i.vec_id) AS DOUBLE) / 5.0, 6) AS recall
-         |FROM exact e LEFT JOIN ivf i
-         |  ON e.q_id = i.q_id AND e.vec_id = i.vec_id
-         |GROUP BY e.q_id ORDER BY e.q_id""".stripMargin,
-
     "llm_bloom_prefilter" ->
       """SELECT DISTINCT b.user_id FROM events b
         |WHERE CAST(b.ts AS TIMESTAMP) >= TIMESTAMP '2024-01-16'

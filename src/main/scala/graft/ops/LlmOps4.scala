@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** SURVEY.md §2.11 (round-4 additions) — the reproducible-sampling,
-  * quantization, bigram-LM, chunking and inverted-index primitives of
-  * a training-data pipeline:
+  * bigram-LM, chunking and inverted-index primitives of a
+  * training-data pipeline (int8 embedding quantization moved to
+  * [[retrieval.Geometry]]):
   *
   *  - hash-threshold sampling: `md5(salt || id)` prefix compared
   *    lexicographically (fixed-width lowercase hex, so string order ==
@@ -16,13 +17,6 @@ import graft.util.Tables._
   *    and reruns, which is what makes ablation corpora auditable.
   *    (Contrast `llm_sample_stratified`, which demonstrates the
   *    engine-native `sampleBy` and is unavoidably engine-specific.)
-  *
-  *  - int8 symmetric quantization of embedding vectors (per-vector
-  *    max-abs scale), surfaced as the reconstruction error — the
-  *    compression step before ANN index shipping. Per-row HOF math on
-  *    a 64-wide array; `floor(x + 0.5)` not `round` (Spark HALF_UPs
-  *    doubles, DuckDB banker-rounds — floor(+0.5) is identical in
-  *    both).
   *
   *  - inverted index: term -> sorted posting list + document
   *    frequency. One explode + one hash aggregate, partitioned by
@@ -169,26 +163,6 @@ object LlmOps4 {
         .agg(count(lit(1)).as("n_kept"),
           sum(col("doc_id").cast("decimal(38,0)")).cast("string").as("sum_ids"))
         .orderBy("source")),
-
-    // Int8 symmetric quantization: per-vector scale = 127/max|x|,
-    // reconstruction MAE after dequantization. All double math with
-    // floor(x+0.5) rounding so the oracle is bit-identical.
-    "llm_embed_quantize" -> ((s: SparkSession, dir: String) =>
-      load(s, dir, "embeddings")
-        .filter(col("embedding").isNotNull &&
-          !expr("exists(embedding, x -> x is null)"))
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("d"))
-        .withColumn("mx", expr("array_max(transform(d, x -> abs(x)))"))
-        .filter(col("mx") > 0)
-        .withColumn("scale", lit(127.0) / col("mx"))
-        .withColumn("mae", expr(
-          """aggregate(d, cast(0.0 as double),
-            |  (acc, x) -> acc + abs(x - floor(x * scale + 0.5) / scale),
-            |  acc -> acc / size(d))""".stripMargin))
-        .select(col("vec_id"), round(col("scale"), 6).as("scale"),
-          round(col("mae"), 6).as("mae"))
-        .orderBy("vec_id")),
 
     // Bigram language-model estimates: P(w2|w1) = c(w1 w2) / c(w1 ·)
     // — see [[bigramLm]] for the plan shape.
@@ -347,24 +321,6 @@ object LlmOps4 {
         |FROM documents
         |WHERE substring(md5('graft' || CAST(doc_id AS VARCHAR)), 1, 2) <= '28'
         |GROUP BY source ORDER BY source""".stripMargin,
-
-    "llm_embed_quantize" ->
-      """WITH d AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS d
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-        |m AS (
-        |  SELECT vec_id, d,
-        |    list_max(list_transform(d, x -> abs(x))) AS mx FROM d),
-        |q AS (
-        |  SELECT vec_id, 127.0 / mx AS scale,
-        |    list_sum(list_transform(d,
-        |      x -> abs(x - floor(x * (127.0 / mx) + 0.5) / (127.0 / mx))))
-        |      / len(d) AS mae
-        |  FROM m WHERE mx > 0)
-        |SELECT vec_id, round(scale, 6) AS scale, round(mae, 6) AS mae
-        |FROM q ORDER BY vec_id""".stripMargin,
 
     "llm_ngram_lm" ->
       """WITH t AS (

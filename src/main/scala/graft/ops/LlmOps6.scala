@@ -8,8 +8,8 @@ import graft.util.Tables._
 /** SURVEY.md §2.18 — round-7 corpus-statistics operators: per-doc
   * token-distribution entropy (a gibberish/boilerplate filter
   * feature: low entropy = repetitive text), per-dimension embedding
-  * standardization, BPE pair-frequency counting, and one-step
-  * k-means centroid training. (This file's original Zipf
+  * standardization and BPE pair-frequency counting (one-step k-means
+  * moved to [[retrieval.Geometry]]). (This file's original Zipf
   * rank-frequency fit moved to LlmOps18 in round 15 — the rebuild
   * replaces the full-vocabulary global rank window with a
   * TakeOrderedAndProject top-k and adds the brute-fold law; one id,
@@ -17,9 +17,8 @@ import graft.util.Tables._
   *
   * Scale shapes: entropy is one explode + two co-partitioned hash
   * aggregates (the llm_text_stats pipeline); standardization
-  * and k-means broadcast dimension-/k-sized tables into per-element
-  * map work; BPE explodes positions over the vocabulary, not the
-  * corpus.
+  * broadcasts a dimension-sized table into per-element map work;
+  * BPE explodes positions over the vocabulary, not the corpus.
   *
   * Float determinism: per-element ln() last-ulp differences between
   * the engines' libm feed sums whose drift stays ~1e-13 against
@@ -193,107 +192,17 @@ object LlmOps6 {
       |  FROM f) WHERE rn <= 50
       |ORDER BY freq DESC, pair""".stripMargin
 
-  // ---- llm_kmeans_step ---------------------------------------------
-  // One Lloyd iteration of k-means over the embeddings (k=8,
-  // deterministic seeds = vec_id < 8) — the centroid-training step
-  // behind the IVF index (llm_simsearch_ivf) and any embedding-space
-  // clustering. Assignment is a broadcast of the k-row centroid table
-  // into a fused-cosine argmax (rounded to 6 dp, ties to the lowest
-  // centroid id — deterministic cross-engine); the update re-averages
-  // members per dimension via posexplode and reassembles with the
-  // struct-sort idiom. At 100 TB the same plan holds: centroids are
-  // always k-sized broadcasts, assignment is map-side, and the update
-  // is one (cid, pos) hash aggregate.
-  /** Generic one-Lloyd-iteration core over (id, vector) against a
-    * (cid, cvec) centroid table — the [[graft.Graft.kmeansStep]]
-    * facade surface. Cosine assignment (6-dp rounded, tie → lowest
-    * cid), per-dimension member re-average. */
-  private[graft] def kmeansStepOn(vectors: DataFrame, idCol: String,
-      vecCol: String, centroids: DataFrame): DataFrame = {
-    // Bind the centroid table by NAME (positional toDF would mis-bind
-    // a (cvec, cid)-ordered frame) and cast both vector columns to
-    // array<float> so array<double> inputs — including this
-    // function's own centroid output fed back for the next iteration
-    // — analyze cleanly against the float-typed cosine kernel.
-    val emb = vectors.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<float>").as("embedding"))
-    val cents = centroids.select(col("cid"),
-      col("cvec").cast("array<float>").as("cvec"))
-    val scored = emb.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        round(graft.functions.CosineSim(col("embedding"), col("cvec")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(desc("cos"), asc("cid"))
-    val best = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select(col("vec_id"), col("embedding"), col("cid"))
-    val x = best
-      .select(col("cid"), posexplode(col("embedding")).as(Seq("pos0", "f")))
-      .select(col("cid"), (col("pos0") + 1).as("pos"),
-        col("f").cast("double").as("v"))
-    val m = x.groupBy("cid", "pos")
-      .agg(expr("round(sum(v) / count(*), 6)").as("mv"))
-      .groupBy("cid")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-        e => e.getField("mv")).as("centroid"))
-    val counts = best.groupBy("cid").agg(count(lit(1)).as("n_members"))
-    counts.join(m, "cid").orderBy("cid")
-  }
-
-  // Query surface: exploded (cid, n_members, pos, cv) rows — the
-  // driver's comparer cannot hash the assembled array<double>
-  // centroid (list cells crash its pandas lexsort). The query still
-  // routes through the array-returning kmeansStepOn facade so the
-  // oracle proves the facade end-to-end, then posexplodes the k
-  // centroid rows (k×dim cells — trivially small, centroids are
-  // always k-sized whatever the corpus scale).
-  private def kmeansStep(s: SparkSession, dir: String): DataFrame = {
-    val emb = load(s, dir, "embeddings")
-    kmeansStepOn(emb, "vec_id", "embedding",
-      emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
-      .select(col("cid"), col("n_members"),
-        posexplode(col("centroid")).as(Seq("pos0", "cv")))
-      .select(col("cid"), col("n_members"), (col("pos0") + 1).as("pos"),
-        col("cv"))
-      .orderBy("cid", "pos")
-  }
-
-  private val kmeansOracle =
-    """WITH c AS (
-      |  SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
-      |  FROM embeddings WHERE vec_id < 8),
-      |a AS (
-      |  SELECT e.vec_id, e.embedding, cid,
-      |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cvec), 6) AS cos
-      |  FROM embeddings e CROSS JOIN c),
-      |best AS (
-      |  SELECT vec_id, embedding, cid FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY cos DESC, cid) AS rn FROM a) WHERE rn = 1),
-      |x AS (
-      |  SELECT cid, CAST(i AS INT) AS pos, CAST(embedding[i] AS DOUBLE) AS v FROM (
-      |    SELECT cid, embedding, unnest(range(1, len(embedding) + 1)) AS i FROM best)),
-      |m AS (
-      |  SELECT cid, pos, round(sum(v) / count(*), 6) AS cv
-      |  FROM x GROUP BY cid, pos),
-      |counts AS (SELECT cid, count(*) AS n_members FROM best GROUP BY cid)
-      |SELECT cid, n_members, pos, cv
-      |FROM counts JOIN m USING (cid)
-      |ORDER BY cid, pos""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "llm_token_entropy" -> (q(entropySql) _),
     "llm_feature_scale" -> (featureScale _),
-    "llm_bpe_pair_freq" -> (q(bpeSql) _),
-    "llm_kmeans_step" -> (kmeansStep _)
+    "llm_bpe_pair_freq" -> (q(bpeSql) _)
   )
 
   val oracle: Map[String, String] = Map(
     "llm_token_entropy" -> entropyOracle,
     "llm_feature_scale" -> featureScaleOracle,
-    "llm_bpe_pair_freq" -> bpeOracle,
-    "llm_kmeans_step" -> kmeansOracle
+    "llm_bpe_pair_freq" -> bpeOracle
   )
 }

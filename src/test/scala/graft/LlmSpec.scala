@@ -96,7 +96,7 @@ class LlmSpec extends AnyFunSuite {
         .reduce(_ + _).as(s"bucket$t")
     }
     val agg = dots.select(col("vec_id") +: buckets: _*)
-    val kernel = graft.ops.LlmOps2.annBuckets(emb)
+    val kernel = graft.ops.retrieval.Ann.annBuckets(emb)
     assert(kernel.exceptAll(agg).isEmpty && agg.exceptAll(kernel).isEmpty)
   }
 
@@ -184,7 +184,7 @@ class LlmSpec extends AnyFunSuite {
     val corpus = (0 until 40).map(i => (i.toLong, vec(i)))
     val planted = Seq(0, 7, 21).map(q => (1000L + q, vec(q)))
     val df = (corpus ++ planted).toDF("vec_id", "embedding")
-    val got = graft.ops.LlmOps2.annTopK(df, col("vec_id").isin(0L, 7L, 21L), k = 5)
+    val got = graft.ops.retrieval.Ann.annTopK(df, col("vec_id").isin(0L, 7L, 21L), k = 5)
       .collect().groupBy(_.getLong(0))
     Seq(0L, 7L, 21L).foreach { q =>
       val hits = got.getOrElse(q, Array.empty)
@@ -274,7 +274,7 @@ class LlmSpec extends AnyFunSuite {
     val corpus = (0 until 300).map(i => (i.toLong, vec(i)))
     val planted = Seq(0, 97, 200).map(q => (1000L + q, vec(q)))
     val df = (corpus ++ planted).toDF("vec_id", "embedding")
-    val got = graft.ops.LlmOps3.ivfTopK(df, col("vec_id").isin(0L, 97L, 200L), k = 5)
+    val got = graft.ops.retrieval.Ann.ivfTopK(df, col("vec_id").isin(0L, 97L, 200L), k = 5)
       .collect().groupBy(_.getLong(0))
     Seq(0L, 97L, 200L).foreach { q =>
       val hits = got.getOrElse(q, Array.empty)
@@ -305,9 +305,9 @@ class LlmSpec extends AnyFunSuite {
     val rows = for (c <- 0 until 10; i <- 0 until 30)
       yield (c * 100L + i, vec(c, i), c)
     val df = rows.toDF("vec_id", "embedding", "label")
-    val exact = graft.ops.LlmOps14.knnClassifyExact(df).collect()
+    val exact = graft.ops.retrieval.Geometry.knnClassifyExact(df).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val ivf = graft.ops.LlmOps14
+    val ivf = graft.ops.retrieval.Geometry
       .knnClassifyIvf(df, nprobe = 2, centEvery = 100).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(ivf.sameElements(exact),

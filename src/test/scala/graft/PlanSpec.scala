@@ -199,7 +199,7 @@ class PlanSpec extends AnyFunSuite {
     val emb = (0 until 200).map { i =>
       (i.toLong, (0 until 64).map(d => math.sin(i * 64.0 + d).toFloat).toArray, i % 5)
     }.toDF("vec_id", "embedding", "label")
-    val out = graft.ops.LlmOps14.knnClassifyExact(emb)
+    val out = graft.ops.retrieval.Geometry.knnClassifyExact(emb)
     val plan = { out.count(); out.queryExecution.executedPlan.toString }
     assert(plan.contains("Scan ExistingRDD"),
       s"scored pairs lost their checkpoint boundary:\n${plan.take(1500)}")

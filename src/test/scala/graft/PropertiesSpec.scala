@@ -160,6 +160,43 @@ object PropertiesSpec extends Properties("graft-laws") {
       } && got.keySet == ids
     }
 
+  property("nearestCentroid == in-memory argmax of the 6-dp cosine, ties to the lowest id") =
+    forAll(Gen.listOfN(3, Gen.listOfN(4, Gen.chooseNum(-3, 3))),
+      Gen.listOf(Gen.listOfN(4, Gen.chooseNum(-3, 3)))) { (cs, vs) =>
+      import spark.implicits._
+      // Centroids 10, 20, 30 plus a duplicate of 30 under id 99 (an exact
+      // tie); the vectors add copies of that centroid, its double, and
+      // the zero vector (every cosine null: it lands in the lowest id).
+      val cents = cs.zipWithIndex.map { case (c, i) => ((i + 1) * 10L, c) } :+
+        (99L -> cs.last)
+      val vecs = (vs ++ Seq(cs.last, cs.last.map(_ * 2), List.fill(4)(0)))
+        .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      // the CosineSim loop: double accumulation in element order, null
+      // for a zero norm, then Spark's round(·, 6) (HALF_UP on the
+      // decimal string)
+      def cos6(a: List[Int], b: List[Int]): Option[Double] = {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        a.zip(b).foreach { case (x, y) =>
+          dot += x.toDouble * y; na += x.toDouble * x; nb += y.toDouble * y }
+        if (na == 0.0 || nb == 0.0) None
+        else Some(java.math.BigDecimal.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+      }
+      val order = Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering,
+        Ordering.Long)
+      val want = vecs.map { case (id, v) =>
+        id -> cents.map { case (cid, c) =>
+          val s = cos6(v, c)
+          (s.isDefined, s.getOrElse(0.0), -cid) -> cid }.maxBy(_._1)(order)._2
+      }.toMap
+      def floats(xs: List[Int]) = xs.map(_.toFloat).toArray
+      val got = graft.ops.retrieval.Neighbors.nearestCentroid(
+          vecs.map { case (id, v) => (id, floats(v)) }.toDF("vec_id", "embedding"),
+          cents.map { case (id, c) => (id, floats(c)) }.toDF("cent_id", "cent_emb"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      got == want
+    }
+
   property("docChunks reconstruct: stride-prefixes ++ last chunk == text") =
     forAll(Gen.listOf(Gen.alphaNumStr.map(_.take(25))),
       Gen.chooseNum(2, 8)) { (texts, stride) =>

@@ -48,4 +48,20 @@ class RegistryPinSpec extends AnyFunSuite {
       SparkEntry.queries.keySet.filter(_.startsWith("graph_")))
     assert(graft.ops.graph.Graph.oracle.keySet.forall(_.startsWith("graph_")))
   }
+
+  test("the retrieval family owns exactly its 26 rows") {
+    val retrievalIds = Set(
+      "llm_simsearch_topk", "llm_simsearch_knn", "llm_simsearch_hamming",
+      "llm_simsearch_ann", "llm_simsearch_ann_verified",
+      "llm_simsearch_ivf", "llm_simsearch_ivf_verified",
+      "llm_hard_negatives", "llm_mmr_rerank", "llm_bm25", "llm_rrf_fusion",
+      "llm_ivf_recall", "llm_ivf_nprobe_sweep", "llm_knn_recall",
+      "llm_ann_ndcg", "llm_ann_mrr", "llm_ann_map",
+      "llm_kmeans_step", "llm_cluster_purity", "llm_knn_classify",
+      "llm_label_margin", "llm_source_centroid", "llm_source_sim",
+      "llm_centroid_outliers", "llm_embed_pca_step", "llm_embed_quantize")
+    assert(retrievalIds.size == 26)
+    assertSame(graft.ops.retrieval.Retrieval.queries.keySet, retrievalIds)
+    assert(graft.ops.retrieval.Retrieval.oracle.keySet.subsetOf(retrievalIds))
+  }
 }

@@ -86,7 +86,7 @@ class Round15Spec extends AnyFunSuite {
 
   test("llm_embed_pca_step: 64 dims, v1 is unit-norm, m/v1 share sign") {
     val rows =
-      graft.ops.LlmOps13.queries("llm_embed_pca_step")(spark, sf).collect()
+      graft.ops.retrieval.Geometry.queries("llm_embed_pca_step")(spark, sf).collect()
     assert(rows.length == 64)
     val norm2 = rows.map(r => r.getDouble(2) * r.getDouble(2)).sum
     assert(math.abs(norm2 - 1.0) < 1e-3, s"‖v1‖² $norm2 must be ~1")
@@ -95,7 +95,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("llm_knn_recall: 20 queries, hits <= 10, recall consistent") {
-    val rows = graft.ops.LlmOps13.queries("llm_knn_recall")(spark, sf).collect()
+    val rows = graft.ops.retrieval.Evaluation.queries("llm_knn_recall")(spark, sf).collect()
     assert(rows.length == 20, "one row per pinned query")
     rows.foreach { r =>
       val hits = r.getLong(2)
@@ -107,14 +107,14 @@ class Round15Spec extends AnyFunSuite {
 
   test("llm_source_centroid: sources x 64 grid, every cell present") {
     val rows =
-      graft.ops.LlmOps13.queries("llm_source_centroid")(spark, sf).collect()
+      graft.ops.retrieval.Geometry.queries("llm_source_centroid")(spark, sf).collect()
     val nSources = graft.util.Tables.load(spark, sf, "documents")
       .select(col("source")).distinct().count()
     assert(rows.length == nSources * 64)
   }
 
   test("llm_source_sim: full upper triangle, cosines in [-1, 1]") {
-    val rows = graft.ops.LlmOps13.queries("llm_source_sim")(spark, sf).collect()
+    val rows = graft.ops.retrieval.Geometry.queries("llm_source_sim")(spark, sf).collect()
     val nSources = graft.util.Tables.load(spark, sf, "documents")
       .select(col("source")).distinct().count()
     assert(rows.length == nSources * (nSources - 1) / 2)

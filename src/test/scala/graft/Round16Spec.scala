@@ -10,7 +10,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("llm_hard_negatives: 5 ranked negatives per query, none share the query label") {
     val rows =
-      graft.ops.LlmOps14.queries("llm_hard_negatives")(spark, sf).collect()
+      graft.ops.retrieval.Search.queries("llm_hard_negatives")(spark, sf).collect()
     assert(rows.length == 20 * 5)
     val emb = graft.util.Tables.load(spark, sf, "embeddings")
       .select("vec_id", "label").collect()
@@ -25,7 +25,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("llm_knn_classify: per-class counts partition the corpus, accuracy above chance") {
     val rows =
-      graft.ops.LlmOps14.queries("llm_knn_classify")(spark, sf).collect()
+      graft.ops.retrieval.Geometry.queries("llm_knn_classify")(spark, sf).collect()
     val total = graft.util.Tables.load(spark, sf, "embeddings").count()
     assert(rows.map(_.getLong(1)).sum == total)
     // the corpus' labels are synthetic/random (verified: LOO accuracy
@@ -40,7 +40,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("llm_label_margin: cohesion and separation are proper cosines") {
     val rows =
-      graft.ops.LlmOps14.queries("llm_label_margin")(spark, sf).collect()
+      graft.ops.retrieval.Geometry.queries("llm_label_margin")(spark, sf).collect()
     assert(rows.length == 10)
     rows.foreach { r =>
       assert(math.abs(r.getDouble(2)) <= 1.0 + 1e-6)

@@ -45,7 +45,7 @@ class Round18Spec extends AnyFunSuite {
   }
 
   test("llm_cluster_purity: clusters partition the corpus, purity >= 1/k") {
-    val rows = graft.ops.LlmOps15
+    val rows = graft.ops.retrieval.Geometry
       .queries("llm_cluster_purity")(spark, sf).collect()
     val total = graft.util.Tables.load(spark, sf, "embeddings").count()
     assert(rows.map(_.getLong(1)).sum == total)

@@ -73,7 +73,7 @@ class Round19Spec extends AnyFunSuite {
   }
 
   test("llm_centroid_outliers: 10 ascending-cosine rows") {
-    val rows = graft.ops.Composite19
+    val rows = graft.ops.retrieval.Geometry
       .queries("llm_centroid_outliers")(spark, sf).collect()
     assert(rows.length == 10)
     val cs = rows.map(_.getDouble(2))
@@ -83,7 +83,7 @@ class Round19Spec extends AnyFunSuite {
   }
 
   test("plan shapes: hard-negative ranking is WindowGroupLimit-pushed") {
-    val plan = graft.ops.LlmOps14.queries("llm_hard_negatives")(spark, sf)
+    val plan = graft.ops.retrieval.Search.queries("llm_hard_negatives")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"),
       "the rank<=5 filter must prune each query's sort")

@@ -10,7 +10,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("llm_mmr_rerank: 5 distinct picks per query, seed is the top hit") {
     val rows =
-      graft.ops.Composite21.queries("llm_mmr_rerank")(spark, sf).collect()
+      graft.ops.retrieval.Search.queries("llm_mmr_rerank")(spark, sf).collect()
     assert(rows.nonEmpty)
     val byQ = rows.groupBy(_.getLong(0))
     byQ.foreach { case (_, picks) =>

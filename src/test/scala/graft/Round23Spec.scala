@@ -9,7 +9,7 @@ class Round23Spec extends AnyFunSuite {
   import TestSpark._
 
   test("llm_simsearch_hamming: 10 ordered pairs, hamming within [0,64]") {
-    val rows = graft.ops.Composite23
+    val rows = graft.ops.retrieval.Search
       .queries("llm_simsearch_hamming")(spark, sf).collect()
     assert(rows.length == 10)
     val hs = rows.map(_.getLong(2))
@@ -29,7 +29,7 @@ class Round23Spec extends AnyFunSuite {
       .select($"vec_id", $"embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
       .toMap
-    val rows = graft.ops.Composite23
+    val rows = graft.ops.retrieval.Search
       .queries("llm_simsearch_hamming")(spark, sf).collect()
     rows.take(3).foreach { r =>
       val (a, b) = (e(r.getLong(0)), e(r.getLong(1)))

@@ -104,18 +104,18 @@ class Round28Spec extends AnyFunSuite {
   // ---- llm_simsearch_ann_verified ---------------------------------
 
   test("annVerifiedBuckets: planted identical 64-dim vectors share all buckets and are recalled at cos 1.0") {
-    val dim = graft.ops.LlmOps2.AnnVerifiedDims
+    val dim = graft.ops.retrieval.Ann.AnnVerifiedDims
     def vec(seed: Int): Array[Float] =
       Array.tabulate(dim)(d => math.sin(seed * 97 + d).toFloat)
     // vec_id 0 is a query (vec_id % 100 == 0 convention); 7 is its
     // planted duplicate; 21/22 are distinct fillers.
     val emb = Seq((0L, vec(1)), (7L, vec(1)), (21L, vec(2)), (22L, vec(3)))
       .toDF("vec_id", "embedding")
-    val buckets = graft.ops.LlmOps2.annVerifiedBuckets(emb)
+    val buckets = graft.ops.retrieval.Ann.annVerifiedBuckets(emb)
     val b = buckets.collect().map(r => r.getLong(0) ->
       (1 to 4).map(r.getLong)).toMap
     assert(b(0L) == b(7L), "identical vectors must share all 4 buckets")
-    val top = graft.ops.LlmOps2.annTopKFromBuckets(
+    val top = graft.ops.retrieval.Ann.annTopKFromBuckets(
         buckets, emb, col("vec_id") === 0L, k = 5)
       .select("q_id", "vec_id", "cos_sim")
       .as[(Long, Long, Double)].collect()
@@ -185,9 +185,9 @@ class Round28Spec extends AnyFunSuite {
 
   test("SignBucketsExact: wrong-dimension input yields null (filtered upstream)") {
     val emb = Seq((1L, Array.tabulate(32)(_.toFloat)),
-        (2L, Array.tabulate(graft.ops.LlmOps2.AnnVerifiedDims)(_.toFloat)))
+        (2L, Array.tabulate(graft.ops.retrieval.Ann.AnnVerifiedDims)(_.toFloat)))
       .toDF("vec_id", "embedding")
-    val out = graft.ops.LlmOps2.annVerifiedBuckets(emb)
+    val out = graft.ops.retrieval.Ann.annVerifiedBuckets(emb)
       .select("vec_id").as[Long].collect().toSeq
     assert(out == Seq(2L), "32-dim row must drop, 64-dim row must survive")
   }

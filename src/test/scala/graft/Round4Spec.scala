@@ -88,7 +88,7 @@ class Round4Spec extends AnyFunSuite {
   }
 
   test("llm_embed_quantize: int8 MAE bounded by half a quantization step") {
-    val rows = graft.ops.LlmOps4.queries("llm_embed_quantize")(spark, sf).collect()
+    val rows = graft.ops.retrieval.Geometry.queries("llm_embed_quantize")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val scale = r.getDouble(1)

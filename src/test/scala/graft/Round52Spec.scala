@@ -119,7 +119,7 @@ class Round52Spec extends AnyFunSuite {
       (1 to 10).map(i => (2L, 200L + i, 11 - i)) ++
       (1 to 10).map(i => (3L, 310L + i, i)))
       .toDF("q_id", "vec_id", "ern")
-    val got = graft.ops.LlmOps20.ndcgFrom(queries, ivf, exact)
+    val got = graft.ops.retrieval.Evaluation.ndcgFrom(queries, ivf, exact)
       .as[(Long, Long, Double, Double)].collect().toSeq
     assert(got == Seq(
       (-1L, 20L, 16.659717, 0.555952),

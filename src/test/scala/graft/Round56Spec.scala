@@ -121,7 +121,7 @@ class Round56Spec extends AnyFunSuite {
       (1 to 10).map(i => (3L, 300L + i, i)) ++
       (1 to 10).map(i => (4L, 300L + i, i)))
       .toDF("q_id", "vec_id", "ern")
-    val got = graft.ops.LlmOps20.mrrFrom(queries, ivf, exact)
+    val got = graft.ops.retrieval.Evaluation.mrrFrom(queries, ivf, exact)
       .as[(Long, Long, Double)].collect().toSeq
     // summary: micro-mean of (1.0, 0.333333, 0.1, 0.0) = 0.358333;
     // 3 of 4 queries had a hit.
@@ -149,7 +149,7 @@ class Round56Spec extends AnyFunSuite {
       (1 to 10).map(i => (3L, 300L + i, i)) ++
       (1 to 10).map(i => (4L, 300L + i, i)))
       .toDF("q_id", "vec_id", "ern")
-    val got = graft.ops.LlmOps20.mapFrom(queries, ivf, exact)
+    val got = graft.ops.retrieval.Evaluation.mapFrom(queries, ivf, exact)
       .as[(Long, Long, Double)].collect().toSeq
     // summary: micro-mean of (1.0, 0.339365, 0.01, 0.0) —
     // floor(1349365/4 + 0.5) = 337341 → 0.337341; 16 hits total.

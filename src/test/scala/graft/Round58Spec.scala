@@ -48,14 +48,14 @@ class Round58Spec extends AnyFunSuite {
   test("knn block join == broadcast plan on the smoke corpus") {
     val emb = graft.util.Tables.load(spark, TestSpark.sf, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
-    val viaBroadcast = graft.ops.LlmOps14.knnClassifyExact(emb)
+    val viaBroadcast = graft.ops.retrieval.Geometry.knnClassifyExact(emb)
       .orderBy("label").collect().toSeq
     val sc = spark.sparkContext
     val (viaBlocks, leftPersisted) = TestSpark.globalConfLock.synchronized {
       sys.props("graft.broadcast.rowCap") = "0" // force the block path
       try {
         val before = sc.getPersistentRDDs.keySet
-        val out = graft.ops.LlmOps14.knnClassifyExact(emb)
+        val out = graft.ops.retrieval.Geometry.knnClassifyExact(emb)
           .orderBy("label").collect().toSeq
         (out, sc.getPersistentRDDs.keySet -- before)
       } finally sys.props.remove("graft.broadcast.rowCap")

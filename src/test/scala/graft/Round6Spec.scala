@@ -105,7 +105,7 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("llm_bm25: positive descending scores, idf-bounded") {
-    val rows = graft.ops.LlmOps5.queries("llm_bm25")(spark, sf)
+    val rows = graft.ops.retrieval.Search.queries("llm_bm25")(spark, sf)
       .collect().map(_.getDouble(1))
     assert(rows.nonEmpty && rows.length <= 20)
     assert(rows.forall(_ > 0.0))
@@ -118,7 +118,7 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("llm_rrf_fusion: scores bounded by 2/61 and descending") {
-    val rows = graft.ops.LlmOps5.queries("llm_rrf_fusion")(spark, sf)
+    val rows = graft.ops.retrieval.Search.queries("llm_rrf_fusion")(spark, sf)
       .collect().map(_.getDouble(1))
     assert(rows.length == 20)
     assert(rows.forall(s => s > 0.0 && s <= 2.0 / 61.0 + 1e-9))

@@ -234,7 +234,7 @@ class Round7Spec extends AnyFunSuite {
   test("llm_kmeans_step: members partition the corpus; centroids have full dimension") {
     // exploded surface: one row per (cid, pos) — regroup to check the
     // per-centroid invariants
-    val rows = graft.ops.LlmOps6.queries("llm_kmeans_step")(spark, sf).collect()
+    val rows = graft.ops.retrieval.Geometry.queries("llm_kmeans_step")(spark, sf).collect()
     val byCid = rows.groupBy(_.get(0))
     assert(byCid.nonEmpty && byCid.size <= 8)
     byCid.values.foreach { g =>

@@ -67,7 +67,7 @@ class SeedSweepSpec extends AnyFunSuite {
       import spark.implicits._
       val corpus = (0 until 40).map(i => (i.toLong, vec(seed, i)))
       val planted = Seq(0, 7, 21).map(q => (1000L + q, vec(seed, q)))
-      val got = graft.ops.LlmOps2.annTopK(
+      val got = graft.ops.retrieval.Ann.annTopK(
         (corpus ++ planted).toDF("vec_id", "embedding"),
         col("vec_id").isin(0L, 7L, 21L), k = 5)
         .collect().groupBy(_.getLong(0))
@@ -82,7 +82,7 @@ class SeedSweepSpec extends AnyFunSuite {
       import spark.implicits._
       val corpus = (0 until 300).map(i => (i.toLong, vec(seed, i)))
       val planted = Seq(0, 97, 200).map(q => (1000L + q, vec(seed, q)))
-      val got = graft.ops.LlmOps3.ivfTopK(
+      val got = graft.ops.retrieval.Ann.ivfTopK(
         (corpus ++ planted).toDF("vec_id", "embedding"),
         col("vec_id").isin(0L, 97L, 200L), k = 5)
         .collect().groupBy(_.getLong(0))
