@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayMaxLE, CosineSim}
-import graft.ops.{LlmOps3, LlmOps4, Relational}
+import graft.ops.Relational
+import graft.ops.corpus.{Features, Quality, Sampling, Vocabulary}
 import graft.ops.dedup.{Clusters, Keys, NearDup}
 import graft.ops.graph.Community
 import graft.ops.retrieval.{Ann, Geometry, Search}
@@ -70,7 +71,7 @@ object Graft {
     * exact left-semi verify join, so only the suspected-seen fraction
     * ever shuffles — the incremental-ingest primitive. */
   def seenFilter(seen: DataFrame, incoming: DataFrame, key: String): DataFrame =
-    LlmOps3.seenFilter(seen, incoming, key)
+    Sampling.seenFilter(seen, incoming, key)
 
   /** IVF approximate k-NN over (vec_id, embedding): deterministic
     * coarse centroids partition the corpus into cells; queries probe
@@ -83,16 +84,16 @@ object Graft {
     * isEval that share any word 5-gram with the isEval split, with
     * distinct-shared-gram counts. */
   def decontaminate(docs: DataFrame, isEval: Column): DataFrame =
-    LlmOps3.decontaminate(docs, isEval)
+    Quality.decontaminate(docs, isEval)
 
   /** Deterministic data mixing over (doc_id, source): cap every
     * source at the smallest source's count, keeping lowest doc_ids. */
-  def domainMix(docs: DataFrame): DataFrame = LlmOps3.domainMix(docs)
+  def domainMix(docs: DataFrame): DataFrame = Sampling.domainMix(docs)
 
   /** Repetition score over (doc_id, text): top-bigram share of each
     * doc's bigrams — boilerplate/spam quality signal. */
   def repetitionScore(docs: DataFrame): DataFrame =
-    LlmOps3.repetitionScore(docs)
+    Quality.repetitionScore(docs)
 
   /** Streaming: watermarked stream-stream interval join of clicks to
     * same-user purchases within the following hour (state evictable
@@ -139,16 +140,16 @@ object Graft {
     * ~16%). A pure row property — the sample is reproducible across
     * engines, partitionings, and reruns, unlike seeded RNG sampling. */
   def hashSampleKeep(id: Column, hexMax: String): Column =
-    LlmOps4.hashKeep(id, hexMax)
+    Sampling.hashKeep(id, hexMax)
 
   /** Corpus bigram LM over (doc_id, text): (w1, w2, c12, prob) from
     * exact counts; both aggregates hash on the leading word. */
-  def bigramLm(docs: DataFrame): DataFrame = LlmOps4.bigramLm(docs)
+  def bigramLm(docs: DataFrame): DataFrame = Quality.bigramLm(docs)
 
   /** Per-doc cross-entropy under the corpus's own bigram LM — the
     * LM-based quality-filter signal (doc bigrams join a broadcast
     * vocabulary-sized LM; one hash-agg per doc). */
-  def lmScore(docs: DataFrame): DataFrame = LlmOps4.lmScore(docs)
+  def lmScore(docs: DataFrame): DataFrame = Quality.lmScore(docs)
 
   /** SemDeDup (arXiv:2303.09540): cluster-blocked cosine pairs at/
     * above `threshold` resolved to components; every row returns with
@@ -162,7 +163,7 @@ object Graft {
     * stage. */
   def docChunks(docs: DataFrame, idCol: String, textCol: String,
       width: Int, stride: Int): DataFrame =
-    LlmOps4.docChunks(docs, idCol, textCol, width, stride)
+    Features.docChunks(docs, idCol, textCol, width, stride)
 
   /** CDC latest-row-wins compaction: one surviving row per key — the
     * greatest under `orderCols` (end with a unique id for a
@@ -247,7 +248,7 @@ object Graft {
     * rounded elements; a zero-variance (constant) dimension yields
     * NULL at that position rather than NaN. */
   def standardize(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
-    graft.ops.LlmOps6.standardizeOn(vectors, idCol, vecCol)
+    Features.standardizeOn(vectors, idCol, vecCol)
 
   /** Per-document Shannon entropy (bits) of the token distribution,
     * in the single-pass Σ c·ln c form — a gibberish/boilerplate
@@ -256,7 +257,7 @@ object Graft {
     * other whitespace first if your text has it). Returns
     * (doc_id, n_tokens, entropy_bits). */
   def tokenEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.ops.LlmOps6.tokenEntropyOn(docs, idCol, textCol)
+    Vocabulary.tokenEntropyOn(docs, idCol, textCol)
 
   /** All pairwise Pearson correlations over the given (alias → SQL
     * expression) variables in ONE pass: every moment and cross sum is
@@ -271,10 +272,11 @@ object Graft {
   /** One Lloyd iteration of k-means: assign every (idCol, vecCol) row
     * to its nearest centroid by cosine (6-dp rounded, ties to the
     * lowest centroid id) and re-average members per dimension. The
-    * centroid table — columns named (cid, cvec), a numeric cid, float
-    * or double vectors — broadcasts, so assignment is map-side at any corpus
-    * size. idCol must be unique (duplicate ids would collapse to one
-    * assignment). Returns (cid, n_members, centroid); iterate with
+    * centroid table — columns named (cid, cvec), integral cids spanning
+    * less than 2^40, float or double vectors — broadcasts, so
+    * assignment is map-side at any corpus size; the assignment is
+    * checkpointed once, so this call runs one Spark job. idCol must be
+    * unique (duplicate ids would collapse to one assignment). Returns (cid, n_members, centroid); iterate with
     * `prev.select($"cid", $"centroid".as("cvec"))`. Clusters that
     * attract no members are dropped (the standard Lloyd empty-cluster
     * behavior) — re-seed if k must stay fixed. */
@@ -292,7 +294,7 @@ object Graft {
     * the id order, e.g. ingestion order). */
   def ngramNovelty(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
-    graft.ops.LlmOps7.ngramNovelties(docs, idCol, textCol, n)
+    Quality.ngramNovelties(docs, idCol, textCol, n)
 
   /** DSIR importance scores (Xie et al. 2023, arXiv:2302.03169):
     * each document's mean per-token log-ratio of a Laplace-smoothed
@@ -304,7 +306,7 @@ object Graft {
     * comparable only within one corpus+target pair. */
   def dsirScores(docs: DataFrame, idCol: String, textCol: String,
       isTarget: Column): DataFrame =
-    graft.ops.LlmOps7.dsirScoresOn(docs, idCol, textCol, isTarget)
+    Sampling.dsirScoresOn(docs, idCol, textCol, isTarget)
 
   /** Triangle count + global clustering coefficient over an
     * undirected edge list (columns (src, dst), one row per unordered

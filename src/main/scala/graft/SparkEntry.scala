@@ -18,19 +18,11 @@ object SparkEntry {
       (Scalars.queries, Scalars.oracle),
       (Events.queries, Events.oracle),
       (Udx.queries, Udx.oracle),
-      (LlmOps.queries, LlmOps.oracle),
-      (LlmOps2.queries, LlmOps2.oracle),
-      (LlmOps3.queries, LlmOps3.oracle),
-      (LlmOps4.queries, LlmOps4.oracle),
-      (LlmOps5.queries, LlmOps5.oracle),
       (Composite.queries, Composite.oracle),
       (Composite2.queries, Composite2.oracle),
       (Composite3.queries, Composite3.oracle),
       (Composite4.queries, Composite4.oracle),
       (Composite5.queries, Composite5.oracle),
-      (LlmOps6.queries, LlmOps6.oracle),
-      (LlmOps7.queries, LlmOps7.oracle),
-      (LlmOps8.queries, LlmOps8.oracle),
       (Composite6.queries, Composite6.oracle),
       (Composite7.queries, Composite7.oracle),
       (Composite8.queries, Composite8.oracle),
@@ -51,19 +43,14 @@ object SparkEntry {
       (Composite25.queries, Composite25.oracle),
       (Composite26.queries, Composite26.oracle),
       (LlmOps15.queries, LlmOps15.oracle),
-      (LlmOps16.queries, LlmOps16.oracle),
       (Composite18.queries, Composite18.oracle),
       (Composite19.queries, Composite19.oracle),
-      (LlmOps12.queries, LlmOps12.oracle),
-      (LlmOps11.queries, LlmOps11.oracle),
-      (LlmOps9.queries, LlmOps9.oracle),
       (SqlSurface.queries, SqlSurface.oracle),
       (Typed.queries, Typed.oracle),
       (Composite27.queries, Composite27.oracle),
       (Composite28.queries, Composite28.oracle),
       (Composite29.queries, Composite29.oracle),
       (Composite30.queries, Composite30.oracle),
-      (LlmOps17.queries, LlmOps17.oracle),
       (Composite31.queries, Composite31.oracle),
       (Composite32.queries, Composite32.oracle),
       (Composite33.queries, Composite33.oracle),
@@ -72,10 +59,10 @@ object SparkEntry {
       (graph.Graph.queries, graph.Graph.oracle),
       (dedup.Dedup.queries, dedup.Dedup.oracle),
       (retrieval.Retrieval.queries, retrieval.Retrieval.oracle),
+      (corpus.Corpus.queries, corpus.Corpus.oracle),
       (Composite37.queries, Composite37.oracle),
       (Composite38.queries, Composite38.oracle),
       (Composite39.queries, Composite39.oracle),
-      (Composite40.queries, Composite40.oracle),
       (Composite41.queries, Composite41.oracle),
       (Composite43.queries, Composite43.oracle),
       (Composite44.queries, Composite44.oracle),
@@ -96,7 +83,6 @@ object SparkEntry {
       (Composite62.queries, Composite62.oracle),
       (Composite63.queries, Composite63.oracle),
       (Composite66.queries, Composite66.oracle),
-      (LlmOps18.queries, LlmOps18.oracle),
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
       (Composite69.queries, Composite69.oracle),
@@ -123,7 +109,7 @@ object SparkEntry {
   // operator (and its oracle) with a different-semantics namesake and
   // no test would notice the old row vanished. Both surfaces fail
   // fast with the offending ids instead (caught a real r17 collision:
-  // a new per-source novelty row nearly shadowed LlmOps7's per-doc
+  // a new per-source novelty row nearly shadowed the per-doc
   // llm_ngram_novelty).
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -1,9 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * [[FailuresFile]], the rows that failed. */
 object Verify {
+
+  /** One `name<TAB>message` line per row whose build or write threw
+    * (tabs and line breaks in the message become spaces); empty on a
+    * clean run. A file, not a directory, so table listings skip it. */
+  val FailuresFile = "verify_failures.txt"
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -17,13 +24,7 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => only(k) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    dump(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,5 +41,28 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes each row's result to `outDir/<name>` as parquet and the
+    * failed rows to [[FailuresFile]]; returns the failures as (name,
+    * message). A failure is also reported on stderr as
+    * `[verify] <name> failed: <message>`, and the dump goes on. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      rows: Map[String, (SparkSession, String) => DataFrame]): Seq[(String, String)] = {
+    val failed = rows.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
+      }
+    }
+    val lines = failed.map { case (name, msg) =>
+      s"$name\t${msg.map(c => if (c == '\t' || c == '\n' || c == '\r') ' ' else c)}\n"
+    }
+    Files.writeString(Paths.get(outDir, FailuresFile), lines.mkString)
+    failed
   }
 }

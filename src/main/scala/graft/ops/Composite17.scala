@@ -4,18 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.dedup.Keys
 import graft.util.Tables._
 
 /** SURVEY.md §2.33 — round-15 sixth batch: leaderboard rank
-  * dynamics, template detection, and a price/volume growth
-  * decomposition.
+  * dynamics and a price/volume growth decomposition.
   *
   * Scale shapes: rank dynamics keep BOTH monthly
   * windows behind rank-filter limits (WindowGroupLimit-pushed — the
-  * full ranking never sorts past the limit per month); template
-  * detection is two dense_rank hash exchanges; the decomposition
-  * joins the month aggregate on month−1.
+  * full ranking never sorts past the limit per month); the
+  * decomposition joins the month aggregate on month−1.
   *
   * Determinism: ranks row_number with
   * (value DESC, key ASC) tie-breaks; money decimal-exact to the
@@ -71,53 +68,6 @@ object Composite17 {
       |  ON CAST(t.m AS TIMESTAMP) = CAST(p.m AS TIMESTAMP)
       |  AND t.o_custkey = p.o_custkey
       |ORDER BY t.m, t.rk""".stripMargin
-
-  // ---- llm_template_detect -----------------------------------------
-  // Templated-document detection: a doc is "templated" when BOTH its
-  // 30-word opening and its 30-word closing are shared with at least
-  // one other document — the boilerplate-page signature (shared
-  // greeting + shared footer). Two dense_rank hash exchanges
-  // ([[Keys.sharedKeyFlag]] on the opening [[Keys.prefixHash]] and on
-  // the closing hash), combined per doc, surfaced per source.
-  private def templateDetect(s: SparkSession, dir: String): DataFrame = {
-    val d = load(s, dir, "documents")
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 60)
-      .select(col("doc_id"), col("source"),
-        Keys.prefixHash(col("t"), 30).as("ph"),
-        md5(expr("array_join(slice(t, -30, 30), ' ')")).as("sh"))
-    Keys.sharedKeyFlag(Keys.sharedKeyFlag(d, "ph", "pdup"), "sh", "sdup")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("pdup") && col("sdup"), 1L).otherwise(0L))
-          .as("n_templated"),
-        round(sum(when(col("pdup") && col("sdup"), 1L).otherwise(0L))
-          .cast("double") / count(lit(1)).cast("double"), 6)
-          .as("template_rate"))
-      .orderBy("source")
-  }
-
-  private val templateDetectOracle =
-    """WITH d AS (
-      |  SELECT doc_id, source,
-      |    md5(array_to_string(list_slice(w, 1, 30), ' ')) AS ph,
-      |    md5(array_to_string(list_slice(w, len(w) - 29, len(w)), ' '))
-      |      AS sh
-      |  FROM (SELECT doc_id, source, string_split(text, ' ') AS w
-      |        FROM documents)
-      |  WHERE len(w) >= 60),
-      |pd AS (SELECT ph FROM d GROUP BY ph
-      |       HAVING count(DISTINCT doc_id) >= 2),
-      |sd AS (SELECT sh FROM d GROUP BY sh
-      |       HAVING count(DISTINCT doc_id) >= 2)
-      |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(sum(CASE WHEN pd.ph IS NOT NULL AND sd.sh IS NOT NULL
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_templated,
-      |  round(CAST(sum(CASE WHEN pd.ph IS NOT NULL AND sd.sh IS NOT NULL
-      |    THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-      |    AS template_rate
-      |FROM d LEFT JOIN pd ON d.ph = pd.ph LEFT JOIN sd ON d.sh = sd.sh
-      |GROUP BY source ORDER BY source""".stripMargin
 
   // ---- agg_growth_decompose ----------------------------------------
   // MoM revenue-growth decomposition into volume, price, and mix:
@@ -183,13 +133,11 @@ object Composite17 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "win_rank_change" -> (rankChange _),
-    "llm_template_detect" -> (templateDetect _),
     "agg_growth_decompose" -> (growthDecompose _)
   )
 
   val oracle: Map[String, String] = Map(
     "win_rank_change" -> rankChangeOracle,
-    "llm_template_detect" -> templateDetectOracle,
     "agg_growth_decompose" -> growthDecomposeOracle
   )
 }

@@ -1,23 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.39 — round-16 third batch: calendar dimension
-  * generation, training-mix interleaving, leave-one-out target
-  * encoding, and experiment power analysis.
+  * generation, leave-one-out target encoding, and experiment power
+  * analysis.
   *
   * Scale shapes: the date dimension generates from a 1-row min/max
   * aggregate (horizon-bounded — never a fact-table scan per day);
-  * interleaving is one per-source ranking window + one bounded
-  * global sort behind a limit; LOO encoding needs ONLY group
-  * aggregates (Σ, n, min, max) — the per-row encode the scaladoc
-  * describes is a broadcast-join against the same tiny grid, so no
-  * second fact shuffle exists at any scale; power analysis is two
-  * chained hash aggregates.
+  * LOO encoding needs ONLY group aggregates (Σ, n, min, max) — the
+  * per-row encode the scaladoc describes is a broadcast-join against
+  * the same tiny grid, so no second fact shuffle exists at any scale;
+  * power analysis is two chained hash aggregates.
   *
   * Determinism: calendar fields are exact integer calendar
   * arithmetic pinned to ISO conventions that agree across engines
@@ -64,42 +61,6 @@ object Composite22 {
       |  CAST(year(d) AS INT) AS yr,
       |  d = last_day(d) AS is_month_end
       |FROM cal ORDER BY d""".stripMargin
-
-  // ---- llm_interleave_sources --------------------------------------
-  // Deterministic training-mix interleaving: round-robin across
-  // sources in (within-source rank, source) order — the standard way
-  // to spread domains evenly through a training epoch without RNG.
-  // Surfaces the first 50 positions of the schedule. pos ≤ 50 ⇒
-  // rn ≤ 50 (pos is a row_number over an order whose leading key is
-  // rn, so pos ≥ rn), so filtering rn FIRST bounds the global
-  // window's input to 50·|sources| rows — the per-source window is
-  // partition-parallel and the one-task global window never sees the
-  // full doc table (r16 verdict item 3).
-  private def interleaveSources(s: SparkSession, dir: String): DataFrame = {
-    val d = load(s, dir, "documents")
-    val perSrc = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-    val global = Window.orderBy(col("rn"), col("source"))
-    d.select(col("doc_id"), col("source"))
-      .withColumn("rn", row_number().over(perSrc))
-      .filter(col("rn") <= 50)
-      .withColumn("pos", row_number().over(global))
-      .filter(col("pos") <= 50)
-      .select(col("pos"), col("source"), col("doc_id"))
-      .orderBy("pos")
-  }
-
-  private val interleaveSourcesOracle =
-    """WITH r AS (
-      |  SELECT doc_id, source,
-      |    CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id)
-      |      AS INT) AS rn
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id, source,
-      |    CAST(row_number() OVER (ORDER BY rn, source) AS INT) AS pos
-      |  FROM r)
-      |SELECT pos, source, doc_id FROM g
-      |WHERE pos <= 50 ORDER BY pos""".stripMargin
 
   // ---- agg_target_encode_loo ---------------------------------------
   // Leave-one-out target encoding audit per brand (the ML feature-
@@ -192,14 +153,12 @@ object Composite22 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "scan_date_dim" -> (dateDim _),
-    "llm_interleave_sources" -> (interleaveSources _),
     "agg_target_encode_loo" -> (targetEncodeLoo _),
     "agg_power_mde" -> (powerMde _)
   )
 
   val oracle: Map[String, String] = Map(
     "scan_date_dim" -> dateDimOracle,
-    "llm_interleave_sources" -> interleaveSourcesOracle,
     "agg_target_encode_loo" -> targetEncodeLooOracle,
     "agg_power_mde" -> powerMdeOracle
   )

@@ -7,8 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.util.Tables._
 
 /** SURVEY.md §2.45 (round-8 additions, batch 2) — session-level
-  * analytics, robust means, corpus histograms, and the nested-
-  * smoothing finance staples:
+  * analytics, robust means, and the nested-smoothing finance
+  * staples:
   *
   *  - [[sessionStats]]: the aggregate layer OVER sessionization
   *    (evt_session_window builds sessions; this row summarizes them).
@@ -21,11 +21,6 @@ import graft.util.Tables._
   *    ln/exp; the Σ of ~800 ulp-sized deviations stays ~1e-13
   *    relative, far inside the round-6 presentation (the llm xent
   *    discipline).
-  *
-  *  - [[tokenHistogram]]: log2-bucketed token-count histogram. The
-  *    bucket is length(bin(n)) - 1 — BOTH engines trim leading zeros
-  *    from bin(), so the bucket is exact integer arithmetic, immune
-  *    to the floor(log2(x)) boundary-ulp flip at powers of two.
   *
   *  - [[macd]] / [[stochastic]]: nested smoothing cascades over each
   *    nation's daily revenue. The recursive EMAs are re-expressed as
@@ -108,32 +103,6 @@ object Composite28 {
       |    AS harm_mean
       |FROM part WHERE p_retailprice > 0
       |GROUP BY p_brand ORDER BY p_brand""".stripMargin
-
-  // ---- llm_token_histogram -----------------------------------------
-  private def tokenHistogram(s: SparkSession, dir: String): DataFrame =
-    load(s, dir, "documents")
-      .select(size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .filter(col("n_tok") >= 1)
-      .select(col("n_tok"), (length(bin(col("n_tok"))) - 1).cast("long")
-        .as("log2_bucket"))
-      .groupBy(col("log2_bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("n_tok")).as("min_tokens"),
-        max(col("n_tok")).as("max_tokens"),
-        sum(col("n_tok")).as("sum_tokens"))
-      .orderBy("log2_bucket")
-
-  private val tokenHistogramOracle =
-    """WITH t AS (
-      |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-      |  FROM documents),
-      |b AS (
-      |  SELECT n_tok, CAST(length(bin(n_tok)) - 1 AS BIGINT) AS log2_bucket
-      |  FROM t WHERE n_tok >= 1)
-      |SELECT log2_bucket, CAST(count(*) AS BIGINT) AS n_docs,
-      |  min(n_tok) AS min_tokens, max(n_tok) AS max_tokens,
-      |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens
-      |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---- win_macd ----------------------------------------------------
   /** Truncated-kernel weights (1-α)^j as exact double literals —
@@ -259,7 +228,6 @@ object Composite28 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_session_stats" -> (sessionStats _),
     "agg_geometric_mean" -> (geometricMean _),
-    "llm_token_histogram" -> (tokenHistogram _),
     "win_macd" -> (macd _),
     "win_stochastic" -> (stochastic _)
   )
@@ -267,7 +235,6 @@ object Composite28 {
   val oracle: Map[String, String] = Map(
     "evt_session_stats" -> sessionStatsOracle,
     "agg_geometric_mean" -> geometricMeanOracle,
-    "llm_token_histogram" -> tokenHistogramOracle,
     "win_macd" -> macdOracle,
     "win_stochastic" -> stochasticOracle
   )

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.45b (round-8 additions, batch 3) — transition timing,
-  * windowed higher moments, and the vocabulary coverage curve:
+/** SURVEY.md §2.45b (round-8 additions, batch 3) — transition timing
+  * and windowed higher moments:
   *
   *  - [[transitionTime]]: how LONG each event-type transition takes
   *    (the timing complement of `evt_markov_chain`'s transition
@@ -20,13 +20,6 @@ import graft.util.Tables._
   *    recompute-per-row and DuckDB's segment-tree association cannot
   *    diverge), the double assembly shares one formula text, and the
   *    oracle routes decimal→double through VARCHAR (§1.5 r7).
-  *
-  *  - [[vocabCoverageCurve]]: fraction of all token occurrences
-  *    covered by the top-k vocabulary entries (k = 10/100/1000) — the
-  *    tokenizer-budget planning curve. Rank and cumulative sums run
-  *    over the VOCABULARY (Heaps-sublinear in corpus size), not the
-  *    token stream; ties rank by (count DESC, token) so the curve is
-  *    deterministic.
   */
 object Composite29 {
 
@@ -137,48 +130,6 @@ object Composite29 {
       |  GROUP BY n_name, day),""".stripMargin,
     inner => s"CAST(CAST($inner AS VARCHAR) AS DOUBLE)")
 
-  // ---- llm_vocab_coverage_curve ------------------------------------
-  private def vocabCoverageCurve(s: SparkSession, dir: String): DataFrame = {
-    val freq = load(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("tok"))
-      .filter(col("tok") =!= "")
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cnt").desc, col("tok"))
-    val tot = freq.agg(sum(col("cnt")).as("total"))
-    freq
-      .withColumn("rnk", row_number().over(w))
-      .withColumn("cum", sum(col("cnt")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
-      .filter(col("rnk").isin(10, 100, 1000))
-      .crossJoin(broadcast(tot))
-      .select(col("rnk").cast("long").as("top_k"),
-        col("cum").as("covered_tokens"),
-        round(col("cum").cast("double") / col("total").cast("double"), 6)
-          .as("coverage"))
-      .orderBy("top_k")
-  }
-
-  private val vocabCoverageCurveOracle =
-    """WITH f AS (
-      |  SELECT tok, count(*) AS cnt FROM (
-      |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-      |  WHERE tok <> '' GROUP BY tok),
-      |r AS (
-      |  SELECT cnt,
-      |    row_number() OVER (ORDER BY cnt DESC, tok) AS rnk,
-      |    sum(cnt) OVER (ORDER BY cnt DESC, tok ROWS UNBOUNDED PRECEDING)
-      |      AS cum
-      |  FROM f),
-      |t AS (SELECT sum(cnt) AS total FROM f)
-      |SELECT CAST(rnk AS BIGINT) AS top_k,
-      |  CAST(cum AS BIGINT) AS covered_tokens,
-      |  round(CAST(cum AS DOUBLE) / CAST(total AS DOUBLE), 6) AS coverage
-      |FROM r CROSS JOIN t
-      |WHERE rnk IN (10, 100, 1000)
-      |ORDER BY top_k""".stripMargin
-
   // ---- evt_window_funnel -------------------------------------------
   // ClickHouse-windowFunnel semantics, distinct from `evt_funnel`'s
   // unconstrained chain: the whole view→click→purchase sequence must
@@ -237,14 +188,12 @@ object Composite29 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_transition_time" -> (transitionTime _),
     "win_rolling_skew" -> (rollingSkew _),
-    "llm_vocab_coverage_curve" -> (vocabCoverageCurve _),
     "evt_window_funnel" -> (windowFunnel _)
   )
 
   val oracle: Map[String, String] = Map(
     "evt_transition_time" -> transitionTimeOracle,
     "win_rolling_skew" -> rollingSkewOracle,
-    "llm_vocab_coverage_curve" -> vocabCoverageCurveOracle,
     "evt_window_funnel" -> windowFunnelOracle
   )
 }

@@ -129,30 +129,6 @@ object Composite30 {
        |  round(max(stale_days), 6) AS max_stale_days
        |FROM churned GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // ---- llm_doc_length_by_source ------------------------------------
-  // Per-source document-length quantile bands — the corpus-balance
-  // check run before fixing a mixture. One hash aggregate per source;
-  // interpolated quantiles agree bit-wise across engines (the
-  // percentile/quantile_cont convention already pinned by
-  // agg_percentile_cont).
-  private def docLengthBySource(s: SparkSession, dir: String): DataFrame =
-    load(s, dir, "documents")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        round(expr("percentile(n_chars, 0.1)"), 6).as("p10_chars"),
-        round(expr("percentile(n_chars, 0.5)"), 6).as("p50_chars"),
-        round(expr("percentile(n_chars, 0.9)"), 6).as("p90_chars"),
-        sum(col("n_chars")).as("sum_chars"))
-      .orderBy("source")
-
-  private val docLengthBySourceOracle =
-    """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      |  round(quantile_cont(n_chars, 0.1), 6) AS p10_chars,
-      |  round(quantile_cont(n_chars, 0.5), 6) AS p50_chars,
-      |  round(quantile_cont(n_chars, 0.9), 6) AS p90_chars,
-      |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-      |FROM documents GROUP BY source ORDER BY source""".stripMargin
-
   // ---- evt_error_rate_hourly ---------------------------------------
   // Error share by hour-of-day — the SRE diurnal-pattern monitor.
   // One conditional aggregate over the horizon; the rate divides two
@@ -180,14 +156,12 @@ object Composite30 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_skyline" -> (skyline _),
     "evt_churn_risk" -> (churnRisk _),
-    "llm_doc_length_by_source" -> (docLengthBySource _),
     "evt_error_rate_hourly" -> (errorRateHourly _)
   )
 
   val oracle: Map[String, String] = Map(
     "agg_skyline" -> skylineOracle,
     "evt_churn_risk" -> churnRiskOracle,
-    "llm_doc_length_by_source" -> docLengthBySourceOracle,
     "evt_error_rate_hourly" -> errorRateHourlyOracle
   )
 }

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.53 (round-23 batch 2) — cross-table reconciliation
-  * and label-quality auditing:
+/** SURVEY.md §2.53 (round-23 batch 2) — cross-table reconciliation:
   *
   *  - [[orderReconciliation]]: header-vs-facts money reconciliation —
   *    per order priority, does o_totalprice equal the order's
@@ -15,33 +14,13 @@ import graft.util.Tables._
   *    warehouse runs after `dq_referential_integrity` says the keys
   *    line up (keys can match while the money does not).
   *
-  *  - [[langidAgreement]]: Cohen's-kappa audit of the
-  *    `llm_lang_id` marker detector against the gold `lang` label —
-  *    chance-corrected agreement from the confusion marginals, the
-  *    label-QA number behind every auto-labeling pipeline decision
-  *    (accuracy alone flatters majority-class guessers).
+  * Scale shape: ONE orderkey-keyed join (both sides shuffle-keyed —
+  * the agg_ship_delay fact⋈fact discipline) between two
+  * map-side-combining aggregates.
   *
-  *  - [[vocabOverlap]]: cross-language vocabulary Jaccard over the
-  *    10 language pairs — how much of the token vocabulary leaks
-  *    across language labels (near 1 ⇒ the `lang` column cannot be
-  *    trusted to separate training-mix buckets; the corpus-level
-  *    companion to per-doc `llm_lang_id`).
-  *
-  * Scale shapes: reconciliation is ONE orderkey-keyed join (both
-  * sides shuffle-keyed — the agg_ship_delay fact⋈fact discipline)
-  * between two map-side-combining aggregates; kappa reduces the doc
-  * table to two ≤6-row marginal relations before any cross math (the
-  * chance mass Σ gold_c·guess_c is an integer dot product over the
-  * class alphabet); vocabulary overlap is a token-keyed equi-join on
-  * the DISTINCT (lang, token) relation — bounded by vocabulary, not
-  * corpus, size — with the 10-pair grid built from the 5-row vocab
-  * table, never the data.
-  *
-  * Determinism: reconciliation compares at scale 10⁴·cents so
-  * (1−d)(1+t) never leaves the integers (terms ≤ ~10¹¹, sums ≤ ~10¹²
-  * — far inside BIGINT); kappa is assembled from n, agree, and the
-  * integer chance mass in one double expression (all inputs < 2⁵³ —
-  * exact in IEEE); Jaccard/accuracy/kappa floor-form 6-dp (§1.5).
+  * Determinism: the compare runs at scale 10⁴·cents so (1−d)(1+t)
+  * never leaves the integers (terms ≤ ~10¹¹, sums ≤ ~10¹² — far
+  * inside BIGINT).
   */
 object Composite37 {
 
@@ -102,134 +81,11 @@ object Composite37 {
       |    AS max_diff_cents
       |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // ---- llm_langid_agreement --------------------------------------------
-  // kappa = (po − pe)/(1 − pe) with po = agree/n and pe = S/n², where
-  // S = Σ_c gold_c·guess_c is the integer chance mass over the class
-  // alphabet. Assembled as (n·agree − S)/(n² − S): every input is an
-  // exact integer < 2^53, so the one double expression is
-  // bit-identical cross-engine; nullif guards the degenerate pe = 1.
-  private[graft] def kappaOn(lab: DataFrame): DataFrame = {
-    val g = lab.groupBy(col("gold").as("c")).agg(count(lit(1)).as("gc"))
-    val h = lab.groupBy(col("guessed").as("c")).agg(count(lit(1)).as("hc"))
-    val chance = g.join(h, "c")
-      .agg(coalesce(sum(col("gc") * col("hc")), lit(0L)).as("chance_mass"))
-    lab.agg(count(lit(1)).as("n_docs"),
-        sum(when(col("gold") === col("guessed"), 1L).otherwise(0L)).as("n_agree"))
-      .crossJoin(broadcast(chance))
-      .selectExpr("n_docs", "n_agree", "chance_mass",
-        "floor((CAST(n_agree AS DOUBLE)/n_docs)*1e6 + 0.5)/1e6 AS accuracy",
-        """floor(((CAST(n_docs AS DOUBLE)*n_agree - chance_mass)
-          | / nullif(CAST(n_docs AS DOUBLE)*n_docs - chance_mass, 0))*1e6
-          | + 0.5)/1e6 AS kappa""".stripMargin)
-  }
-
-  private def langidAgreement(s: SparkSession, dir: String): DataFrame =
-    kappaOn(LlmOps2.langGuessed(s, dir)
-      .select(col("lang").as("gold"), col("guessed")))
-
-  private val langidAgreementOracle =
-    """WITH t AS (
-      |  SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS dw
-      |  FROM documents),
-      |sc AS (
-      |  SELECT doc_id, lang,
-      |    CAST(len(list_intersect(dw, ['the', 'a', 'of'])) AS INT) AS s_en,
-      |    CAST(len(list_intersect(dw, ['der', 'und', 'die'])) AS INT) AS s_de,
-      |    CAST(len(list_intersect(dw, ['el', 'los', 'una'])) AS INT) AS s_es,
-      |    CAST(len(list_intersect(dw, ['le', 'et', 'les'])) AS INT) AS s_fr,
-      |    CAST(len(list_intersect(dw, ['de5', 'shi4', 'le0'])) AS INT) AS s_zh
-      |  FROM t),
-      |lab AS (
-      |  SELECT lang AS gold,
-      |    CASE
-      |      WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh AND s_en > 0 THEN 'en'
-      |      WHEN s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh AND s_de > 0 THEN 'de'
-      |      WHEN s_es >= s_fr AND s_es >= s_zh AND s_es > 0 THEN 'es'
-      |      WHEN s_fr >= s_zh AND s_fr > 0 THEN 'fr'
-      |      WHEN s_zh > 0 THEN 'zh'
-      |      ELSE 'und' END AS guessed
-      |  FROM sc),
-      |g AS (SELECT gold AS c, CAST(count(*) AS BIGINT) AS gc
-      |      FROM lab GROUP BY 1),
-      |h AS (SELECT guessed AS c, CAST(count(*) AS BIGINT) AS hc
-      |      FROM lab GROUP BY 1),
-      |s AS (SELECT CAST(coalesce(sum(gc*hc), 0) AS BIGINT) AS chance_mass
-      |      FROM g JOIN h USING (c)),
-      |b AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-      |        CAST(sum(CASE WHEN gold = guessed THEN 1 ELSE 0 END) AS BIGINT)
-      |          AS n_agree
-      |      FROM lab)
-      |SELECT n_docs, n_agree, chance_mass,
-      |  floor((CAST(n_agree AS DOUBLE)/n_docs)*1e6 + 0.5)/1e6 AS accuracy,
-      |  floor(((CAST(n_docs AS DOUBLE)*n_agree - chance_mass)
-      |   / nullif(CAST(n_docs AS DOUBLE)*n_docs - chance_mass, 0))*1e6
-      |   + 0.5)/1e6 AS kappa
-      |FROM b CROSS JOIN s""".stripMargin
-
-  // ---- llm_vocab_overlap_langs -----------------------------------------
-  // DISTINCT (lang, token) relation — vocabulary-bounded, not
-  // corpus-bounded — then one token-keyed self-join for shared
-  // counts; the 10-pair grid comes from the 5-row vocab table so
-  // pairs that share nothing still surface with Jaccard 0.
-  private[graft] def vocabOverlapOn(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .distinct()
-      .localCheckpoint()
-    val vocab = toks.groupBy(col("lang")).agg(count(lit(1)).as("vocab"))
-    val shared = toks.select(col("lang").as("lang_a"), col("tok"))
-      .join(toks.select(col("lang").as("lang_b"), col("tok")), "tok")
-      .filter(col("lang_a") < col("lang_b"))
-      .groupBy(col("lang_a"), col("lang_b"))
-      .agg(count(lit(1)).as("shared"))
-    vocab.select(col("lang").as("lang_a"), col("vocab").as("vocab_a"))
-      .join(vocab.select(col("lang").as("lang_b"), col("vocab").as("vocab_b")),
-        col("lang_a") < col("lang_b"))
-      .join(shared, Seq("lang_a", "lang_b"), "left")
-      .selectExpr("lang_a", "lang_b", "vocab_a", "vocab_b",
-        "coalesce(shared, CAST(0 AS BIGINT)) AS shared",
-        """floor((CAST(coalesce(shared, 0) AS DOUBLE)
-          | / (vocab_a + vocab_b - coalesce(shared, 0)))*1e6 + 0.5)/1e6
-          | AS jaccard""".stripMargin)
-      .orderBy("lang_a", "lang_b")
-  }
-
-  private def vocabOverlap(s: SparkSession, dir: String): DataFrame =
-    vocabOverlapOn(load(s, dir, "documents"))
-
-  private val vocabOverlapOracle =
-    """WITH toks AS (
-      |  SELECT DISTINCT lang, tok FROM (
-      |    SELECT lang, unnest(string_split(text, ' ')) AS tok
-      |    FROM documents)
-      |  WHERE tok <> ''),
-      |vocab AS (SELECT lang, CAST(count(*) AS BIGINT) AS vocab
-      |          FROM toks GROUP BY 1),
-      |shared AS (
-      |  SELECT a.lang AS lang_a, b.lang AS lang_b,
-      |    CAST(count(*) AS BIGINT) AS shared
-      |  FROM toks a JOIN toks b ON a.tok = b.tok AND a.lang < b.lang
-      |  GROUP BY 1, 2)
-      |SELECT va.lang AS lang_a, vb.lang AS lang_b,
-      |  va.vocab AS vocab_a, vb.vocab AS vocab_b,
-      |  CAST(coalesce(shared, 0) AS BIGINT) AS shared,
-      |  floor((CAST(coalesce(shared, 0) AS DOUBLE)
-      |   / (va.vocab + vb.vocab - coalesce(shared, 0)))*1e6 + 0.5)/1e6
-      |   AS jaccard
-      |FROM vocab va JOIN vocab vb ON va.lang < vb.lang
-      |LEFT JOIN shared ON shared.lang_a = va.lang AND shared.lang_b = vb.lang
-      |ORDER BY 1, 2""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_order_reconciliation" -> (orderReconciliation _),
-    "llm_langid_agreement" -> (langidAgreement _),
-    "llm_vocab_overlap_langs" -> (vocabOverlap _)
+    "dq_order_reconciliation" -> (orderReconciliation _)
   )
 
   val oracle: Map[String, String] = Map(
-    "dq_order_reconciliation" -> orderReconciliationOracle,
-    "llm_langid_agreement" -> langidAgreementOracle,
-    "llm_vocab_overlap_langs" -> vocabOverlapOracle
+    "dq_order_reconciliation" -> orderReconciliationOracle
   )
 }

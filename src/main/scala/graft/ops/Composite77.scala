@@ -4,11 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.dedup.Shingles
 import graft.util.Tables._
 
-/** SURVEY.md §2.89 (round-17 batch 4) — robust trend estimation and
-  * corpus novelty:
+/** SURVEY.md §2.89 (round-17 batch 4) — robust trend estimation:
   *
   *  - `evt_theil_sen_trend`: Theil–Sen slope of the daily event-count
   *    series per type — the median of all pairwise slopes, the robust
@@ -22,18 +20,6 @@ import graft.util.Tables._
   *    double — grouping doubles is sound), and the lower weighted
   *    median follows the exact 2·cum ≥ n picked-median rule
   *    (evt_anomaly_mad discipline) per type, partition-parallel.
-  *
-  *  - `llm_source_novelty`: per-source mean fraction of each document's
-  *    distinct 3-token shingles NOT seen in any earlier document
-  *    (owner = min doc_id per shingle) — the marginal-novelty curve a
-  *    dedup pipeline reads to find diminishing returns (what fraction
-  *    of each new crawl slice is actually new text). One shuffle on
-  *    the shingle assigns owners; novel counts fall out of a groupBy
-  *    on the owner (every shingle contributes exactly one novelty to
-  *    its first document) — never a postings re-join; per-doc
-  *    novelty floors at 1e-6 and the per-source mean divides the
-  *    exact micro-unit sum (nDCG summary discipline). Docs under 3
-  *    tokens have no shingle set and are excluded (documented).
   */
 object Composite77 {
 
@@ -105,81 +91,13 @@ object Composite77 {
       |FROM nd JOIN med ON nd.event_type = med.event_type
       |ORDER BY nd.event_type""".stripMargin
 
-  // ---- llm_source_novelty --------------------------------------------------
-
-  private[graft] def ngramNoveltyOn(docs: DataFrame): DataFrame =
-    ngramNoveltyOnGrams(Shingles.grams(docs), docs)
-
-  private[graft] def ngramNoveltyOnGrams(grams: DataFrame,
-      docs: DataFrame): DataFrame = {
-    // parquet-backed grams (the r18 DiskMemo view) is already
-    // materialized; the checkpoint still pins one in-memory copy for
-    // the two aggregate consumers below (owners + totals).
-    val g = grams.localCheckpoint()
-    val owners = g.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-    noveltyTail(
-      owners.groupBy(col("doc_id")).agg(count(lit(1)).as("nv")),
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("tg")), docs)
-  }
-
-  private def noveltyTail(novel: DataFrame, totals: DataFrame,
-      docs: DataFrame): DataFrame = {
-    val perDoc = totals.join(novel, Seq("doc_id"), "left")
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .selectExpr("source",
-        """floor((CAST(coalesce(nv, 0) AS DOUBLE) / CAST(tg AS DOUBLE))
-          |  *1e6 + 0.5)/1e6 AS novelty""".stripMargin)
-    perDoc.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(expr("CAST(floor(novelty*1e6 + 0.5) AS BIGINT)")).as("snm"))
-      .selectExpr("source", "n_docs",
-        "floor(CAST(snm AS DOUBLE)/n_docs + 0.5)/1e6 AS mean_novelty")
-      .orderBy("source")
-  }
-
-  // r19: the per-shingle owner (min doc_id) is element 1 of the
-  // SORTED posting array, so the corpus path reads the shared
-  // postings view and skips the h-keyed owner aggregate + the grams
-  // checkpoint entirely; per-doc totals still come off the flat gram
-  // view (one doc-keyed exchange — unavoidable). Values identical:
-  // ds is the distinct doc set per h, sorted ascending.
-  private def ngramNovelty(s: SparkSession, dir: String): DataFrame =
-    noveltyTail(
-      Shingles.sharedPostings(s, dir)
-        .select(element_at(col("ds"), 1).as("doc_id"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("nv")),
-      Shingles.sharedGrams(s, dir)
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("tg")),
-      load(s, dir, "documents"))
-
-  private val ngramNoveltyOracle =
-    s"""WITH ${Shingles.gramsCte},
-      |owners AS (SELECT h, min(doc_id) AS doc_id FROM grams GROUP BY h),
-      |novel AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nv
-      |  FROM owners GROUP BY 1),
-      |totals AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS tg
-      |  FROM grams GROUP BY 1),
-      |perdoc AS (
-      |  SELECT d.source,
-      |    floor((CAST(coalesce(nv, 0) AS DOUBLE) / CAST(tg AS DOUBLE))
-      |      *1e6 + 0.5)/1e6 AS novelty
-      |  FROM totals t LEFT JOIN novel n ON t.doc_id = n.doc_id
-      |  JOIN documents d ON t.doc_id = d.doc_id)
-      |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      |  floor(CAST(sum(CAST(floor(novelty*1e6 + 0.5) AS BIGINT)) AS DOUBLE)
-      |    / count(*) + 0.5)/1e6 AS mean_novelty
-      |FROM perdoc GROUP BY source
-      |ORDER BY source""".stripMargin
-
   // ---- registration ---------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_theil_sen_trend" -> (theilSen _),
-    "llm_source_novelty" -> (ngramNovelty _)
+    "evt_theil_sen_trend" -> (theilSen _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_theil_sen_trend" -> theilSenOracle,
-    "llm_source_novelty" -> ngramNoveltyOracle
+    "evt_theil_sen_trend" -> theilSenOracle
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
+import graft.ops.corpus.Text
 import graft.util.Tables._
 
 /** SURVEY.md §2.8 — scalar functions: string / regexp / date / math /
@@ -35,9 +36,7 @@ object Scalars {
     // is per-row; the count shuffles on the word key: word-cardinality
     // scales sub-linearly with corpus size, the classic scalable shape.
     "str_split_explode" -> ((s, dir) =>
-      load(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
+      Text.wordFreq(load(s, dir, "documents"))
         .orderBy(desc("cnt"), asc("word"))),
 
     // Edit-distance fuzzy matching — the scalar primitive behind

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.ops.corpus.Text
 import graft.util.Tables._
 
 /** SURVEY.md §2.10 — UDF / UDAF / UDTF surface.
@@ -64,7 +65,7 @@ object Udx {
     // shape a custom Generator expression would plan into).
     "udtf_generator" -> ((s, dir) =>
       load(s, dir, "documents")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")))
+        .select(col("doc_id"), posexplode(Text.tokens))
         .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("word"))
         .orderBy("doc_id", "pos"))
   )

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.LlmOps3
+import graft.ops.corpus.{Sampling, Text}
 import graft.util.Tables._
 
 /** Document keys and the hash tiers of the dedup family (SURVEY.md
@@ -117,7 +117,7 @@ object Keys {
   // not just sizes.
   private def prefixDedup(s: SparkSession, dir: String): DataFrame =
     load(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
+      .select(col("doc_id"), Text.tokens.as("t"))
       .filter(size(col("t")) >= 8)
       .select(col("doc_id"), prefixHash(col("t"), 8).as("prefix_hash"))
       .groupBy("prefix_hash")
@@ -146,11 +146,11 @@ object Keys {
     val t = col("t")
     val keyed = d.select(lit("1_exact").as("tier"), exact().as("k"))
       .union(d.select(lit("2_norm"), exact(normalized)))
-      .union(d.select(col("doc_id"), split(col("text"), " ").as("t"))
+      .union(d.select(col("doc_id"), Text.tokens.as("t"))
         .filter(size(t) >= 8)
         .select(lit("3_prefix8"), prefixHash(t, 8)))
       .union(d.select(lit("4_prefix30"),
-        prefixHash(split(col("text"), " "), 30)))
+        prefixHash(Text.tokens, 30)))
     keyed.groupBy(col("tier"), col("k"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("tier"))
@@ -175,7 +175,7 @@ object Keys {
   // the source alphabet, not the corpus).
   private def crossSourceDup(s: SparkSession, dir: String): DataFrame = {
     val bySrc = load(s, dir, "documents")
-      .select(prefixHash(split(col("text"), " "), 30).as("h"), col("source"))
+      .select(prefixHash(Text.tokens, 30).as("h"), col("source"))
       .groupBy(col("h"), col("source"))
       .agg(count(lit(1)).as("c"))
     val sets = bySrc
@@ -199,7 +199,7 @@ object Keys {
   // Incremental-corpus dedup (VERDICT r8 item 8): the "seen"
   // generation (even doc_ids) publishes its 30-token-prefix
   // fingerprints; the "incoming" generation (odd doc_ids) is checked
-  // against them via [[LlmOps3.seenFilter]] — bloom prune + exact
+  // against them via [[Sampling.seenFilter]] — bloom prune + exact
   // left-semi verify, the shape that actually ships between corpus
   // generations at 100 TB (the bloom is the O(bits) artifact that
   // crosses the generation boundary; the verify join only carries
@@ -210,10 +210,10 @@ object Keys {
   // 4_prefix30 tier (llm_prefix_dedup keys on 8 tokens).
   private def incremental(s: SparkSession, dir: String): DataFrame = {
     val d = load(s, dir, "documents")
-      .select(col("doc_id"), prefixHash(split(col("text"), " "), 30).as("ph"))
+      .select(col("doc_id"), prefixHash(Text.tokens, 30).as("ph"))
     val seen = d.filter(col("doc_id") % 2 === 0)
     val incoming = d.filter(col("doc_id") % 2 === 1)
-    val flagged = LlmOps3.seenFilter(seen.select("ph"), incoming, "ph")
+    val flagged = Sampling.seenFilter(seen.select("ph"), incoming, "ph")
     flagged.join(
         seen.groupBy("ph").agg(min(col("doc_id")).as("first_seen_doc")),
         "ph")
@@ -231,7 +231,7 @@ object Keys {
   // unique (ttr, doc_id) order is deterministic.
   private def scoreVsDup(s: SparkSession, dir: String): DataFrame = {
     val d = load(s, dir, "documents")
-      .withColumn("w", split(col("text"), " "))
+      .withColumn("w", Text.tokens)
       .select(col("doc_id"),
         round(size(array_distinct(col("w"))).cast("double") /
           size(col("w")).cast("double"), 6).as("ttr"),

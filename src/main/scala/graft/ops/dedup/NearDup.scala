@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.LlmOps2
+import graft.ops.corpus.Text
 import graft.util.Tables._
 
 /** Near-duplicate pairs and spans (SURVEY.md §2.11, §2.17, §2.27,
@@ -57,7 +58,7 @@ object NearDup {
     */
   private[graft] def shingleSets(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), Text.tokens.as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
         sort_array(expr("""array_distinct(transform(sequence(0, size(w) - 3),
@@ -310,7 +311,7 @@ object NearDup {
     // array is materialized before the transform — HOF lambdas are
     // interpreted, so split() must not inline into them).
     val spans = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), Text.tokens.as("w"))
       .filter(size(col("w")) >= 16)
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, size(w) div 16 - 1), i -> slice(w, i * 16 + 1, 16))")))
@@ -380,7 +381,7 @@ object NearDup {
       textCol: String, n: Int): DataFrame = {
     require(n >= 2, s"dupSpanFractions: span width $n must be >= 2")
     val spans = docs
-      .withColumn("t", split(col(textCol), " "))
+      .withColumn("t", Text.tokensOf(textCol))
       .filter(size(col("t")) >= n)
       .select(col(idCol), explode(expr(
         s"transform(sequence(0, size(t) - $n, 1), i -> md5(array_join(slice(t, i + 1, $n), ' ')))"
@@ -409,7 +410,7 @@ object NearDup {
   // on hot boilerplate blocks), no probe-side re-explosion.
   private def lineDedup(s: SparkSession, dir: String): DataFrame = {
     val blocks = load(s, dir, "documents")
-      .withColumn("t", split(col("text"), " "))
+      .withColumn("t", Text.tokens)
       .filter(size(col("t")) >= 12)
       .select(col("doc_id"), col("source"), explode(expr(
         "transform(sequence(0, size(t) div 12 - 1, 1)," +
@@ -458,7 +459,7 @@ object NearDup {
   private[graft] def dedupEditdistOn(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("ph")).orderBy(col("doc_id"))
     val cands = docs
-      .select(col("doc_id"), split(col("text"), " ").as("t"),
+      .select(col("doc_id"), Text.tokens.as("t"),
         substring(col("text"), 1, CharCap).as("head"))
       .filter(size(col("t")) >= 8)
       .select(col("doc_id"), col("head"),

@@ -3,7 +3,8 @@ package graft.ops.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{DiskMemo, LlmOps4}
+import graft.ops.DiskMemo
+import graft.ops.corpus.{Sampling, Text}
 import graft.util.Tables._
 
 /** 3-token shingles and the audits built on them (SURVEY.md §2.23,
@@ -39,7 +40,7 @@ object Shingles {
     * (planted tests pass their own docs). Corpus-facing consumers go
     * through [[sharedGrams]]. */
   private[graft] def grams(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("t"))
+    docs.select(col("doc_id"), Text.tokens.as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(t) - 3, 1), " +
@@ -358,7 +359,7 @@ object Shingles {
     // 25% deterministic sample; checkpointed because both the shingle
     // pipeline and the block table read it (and the sample predicate
     // md5s every doc_id — once, not per consumer).
-    val d = docs.filter(LlmOps4.hashKeep(col("doc_id"), "3f"))
+    val d = docs.filter(Sampling.hashKeep(col("doc_id"), "3f"))
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
       .localCheckpoint()
     // Per-doc DISTINCT 3-word shingles, one md5 each (the token array
@@ -367,7 +368,7 @@ object Shingles {
     // r19: checkpointed — it feeds the lanes aggregate AND both sides
     // of the intersection self-join below (a BroadcastHashJoin, so no
     // ReuseExchange: the explode + per-shingle md5 ran three times).
-    val sh0 = d.select(col("doc_id"), split(col("text"), " ").as("w"))
+    val sh0 = d.select(col("doc_id"), Text.tokens.as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), explode(expr(
         """array_distinct(transform(sequence(0, size(w) - 3),

@@ -122,8 +122,11 @@ object Evaluation {
   private def knnRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
+    // the query set, both top-10 scans and the candidate count all
+    // read the assignment: checkpoint it once (one row per vector)
     val assign = nearestCentroid(emb, seedCentroids(emb), "embedding")
       .select(col("vec_id"), col("embedding"), col("cell").as("cid"))
+      .localCheckpoint()
     val queries = assign.filter(isPinned)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
         col("cid").as("qcid"))

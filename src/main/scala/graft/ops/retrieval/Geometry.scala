@@ -75,8 +75,11 @@ object Geometry {
       col(vecCol).cast("array<float>").as("embedding"))
     val cents = centroids.select(col("cid").as("cent_id"),
       col("cvec").cast("array<float>").as("cent_emb"))
+    // the member counts and the re-average both read the assignment:
+    // checkpoint it once (one row per vector)
     val best = nearestCentroid(emb, cents, "embedding")
       .select(col("vec_id"), col("embedding"), col("cell").as("cid"))
+      .localCheckpoint()
     val x = best
       .select(col("cid"), posexplode(col("embedding")).as(Seq("pos0", "f")))
       .select(col("cid"), (col("pos0") + 1).as("pos"),

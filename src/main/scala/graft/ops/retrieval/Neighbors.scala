@@ -50,24 +50,40 @@ object Neighbors {
   /** Nearest centroid per vector: (vec_id, cell, carry…) for vectors
     * (vec_id, embedding, …) against a broadcast (cent_id, cent_emb)
     * table. Cell = argmax of the 6-dp rounded cosine, ties to the
-    * lowest cent_id (cent_id must be numeric); a zero vector, whose
-    * every cosine is null, lands in the lowest cent_id. The argmax is
-    * a max_by AGGREGATE, not a window: the aggregate partially
-    * combines map-side, so the shuffle carries one row per VECTOR — a
-    * window would shuffle the corpus replicated ×|centroids| (n^1.5
-    * bytes at scale). `carry` columns ride through as first(). The
-    * 6-dp rounding keeps a near-tie from flipping the argmax between
-    * engines over summation order (the oracle replicas hash-compare
-    * the assignment transitively). */
+    * lowest cent_id (cent_ids must be integers spanning less than
+    * 2^40, as vector ids do); a zero vector, whose every cosine is
+    * null, lands in the lowest cent_id. The argmax is a max_by
+    * AGGREGATE, not a window: the aggregate partially combines
+    * map-side, so the shuffle carries one row per VECTOR — a window
+    * would shuffle the corpus replicated ×|centroids| (n^1.5 bytes at
+    * scale). Its buffer is two longs (the ordering is [[simIdKey]]),
+    * so it plans as a hash aggregate; `carry` columns (vec_id must be
+    * unique) are joined back on vec_id afterwards rather than carried
+    * as first(), whose array buffer would force a sort aggregate over
+    * every vector × centroid row. The 6-dp rounding keeps a near-tie
+    * from flipping the argmax between engines over summation order
+    * (the oracle replicas hash-compare the assignment transitively). */
   def nearestCentroid(vectors: DataFrame, centroids: DataFrame,
-      carry: String*): DataFrame =
-    vectors.crossJoin(broadcast(centroids))
+      carry: String*): DataFrame = {
+    val cells = vectors.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(centroids))
       .withColumn("cent_sim",
         round(CosineSim(col("embedding"), col("cent_emb")), 6))
       .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("cent_id"), struct(col("cent_sim"), -col("cent_id"))).as("cell"),
-        carry.map(c => first(col(c)).as(c)): _*)
+      .agg(max_by(col("cent_id"), simIdKey).as("cell"))
+    if (carry.isEmpty) cells
+    else cells.join(vectors.select((col("vec_id") +: carry.map(col)): _*), "vec_id")
+  }
+
+  /** (cent_sim DESC, cent_id ASC) as one long, larger first: the 6-dp
+    * sim is an exact integer count of 10⁻⁶ in [−10⁶, 10⁶] (a null sim
+    * ranks below every real one), scaled by 2^40 so the id term never
+    * crosses into the next sim step. A struct ordering says the same,
+    * but a struct aggregation buffer cannot be hash-aggregated: it
+    * plans as Sort + SortAggregate over every vector × centroid row. */
+  private def simIdKey: Column =
+    coalesce(round(col("cent_sim") * 1e6).cast("long"), lit(-1000001L)) *
+      (1L << 40) - col("cent_id")
 
   /** The IVF probe step: each (q_id, q_emb, …) query row repeated for
     * its `nprobe` nearest cells by the same 6-dp cosine (ties to the

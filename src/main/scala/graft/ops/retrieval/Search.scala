@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSim
+import graft.ops.corpus.Text
 import graft.util.Tables._
 import Neighbors.{isPinned, queryScores, topK}
 
@@ -286,13 +287,13 @@ object Search {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25Scores: terms must be non-empty")
     val lens = docs.select(col(idCol),
-      size(split(col(textCol), " ")).as("li"))
+      size(Text.tokensOf(textCol)).as("li"))
     val stats = lens.agg(
       count(lit(1)).cast("double").as("n_docs"),
       (sum(col("li")).cast("double") / count(lit(1)).cast("double"))
         .as("avgdl"))
     val toks = docs.select(col(idCol),
-      explode(split(col(textCol), " ")).as("w"))
+      explode(Text.tokensOf(textCol)).as("w"))
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       count(when(col("w") === t, lit(1))).cast("double").as(s"tf${i + 1}")
     }

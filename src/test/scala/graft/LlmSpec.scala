@@ -323,7 +323,7 @@ class LlmSpec extends AnyFunSuite {
     // false negatives are impossible — so the result is exact.
     val seen = (0L until 500L).map(i => i * 3).toDF("k")
     val incoming = (0L until 1000L).toDF("k")
-    val got = graft.ops.LlmOps3.seenFilter(seen, incoming, "k",
+    val got = graft.ops.corpus.Sampling.seenFilter(seen, incoming, "k",
         expectedItems = 500, numBits = 4000) // deliberately tight bloom
       .collect().map(_.getLong(0)).sorted
     val want = (0L until 1000L).filter(i => i % 3 == 0 && i / 3 < 500).sorted

@@ -197,6 +197,24 @@ object PropertiesSpec extends Properties("graft-laws") {
       got == want
     }
 
+  property("Text.wordFreq == in-memory counts over split(\" \", -1), empty tokens included") =
+    forAll(Gen.listOf(Gen.listOf(Gen.oneOf('a', 'b', ' ')).map(_.mkString))) { texts =>
+      import spark.implicits._
+      val docs = texts.zipWithIndex.map { case (t, i) => (i % 2, t) }
+        .toDF("g", "text")
+      // a leading, trailing or doubled space yields an empty token ("" is
+      // one empty token), as in Java's split with limit −1 and DuckDB's
+      // string_split — the semantics every corpus oracle relies on
+      val want = texts.zipWithIndex
+        .flatMap { case (t, i) => t.split(" ", -1).map(w => (i % 2, w)) }
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+      val got = graft.ops.corpus.Text.wordFreq(docs, "g").collect()
+        .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+      val gotAll = graft.ops.corpus.Text.wordFreq(docs).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      got == want && gotAll == want.groupMapReduce(_._1._2)(_._2)(_ + _)
+    }
+
   property("docChunks reconstruct: stride-prefixes ++ last chunk == text") =
     forAll(Gen.listOf(Gen.alphaNumStr.map(_.take(25))),
       Gen.chooseNum(2, 8)) { (texts, stride) =>
@@ -416,7 +434,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val s = gm.map { case (c, gc) => gc * hm.getOrElse(c, 0L) }.sum
       val kappa = if (n.toDouble * n - s == 0) None
         else Some(floor6((n.toDouble * agree - s) / (n.toDouble * n - s)))
-      val got = graft.ops.Composite37.kappaOn(xs.toDF("gold", "guessed"))
+      val got = graft.ops.corpus.Quality.kappaOn(xs.toDF("gold", "guessed"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3),
           if (r.isNullAt(4)) None else Some(r.getDouble(4)))).head
@@ -1562,7 +1580,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val sxy = pts.map(p => p._1 * p._2).sum
       val sx2 = pts.map(p => p._1 * p._1).sum
       val den = m * sx2 - sx * sx
-      val r = graft.ops.LlmOps18.zipfFitOn(
+      val r = graft.ops.corpus.Vocabulary.zipfFitOn(
         Seq((1L, toks.mkString(" "))).toDF("doc_id", "text"))
         .collect().head
       val shapeOk =
@@ -2188,7 +2206,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           math.floor(novs.map(n => math.floor(n * 1e6 + 0.5).toLong).sum.toDouble
             / ds.size + 0.5) / 1e6)
       }.toMap
-      val got = graft.ops.Composite77.ngramNoveltyOn(df)
+      val got = graft.ops.corpus.Quality.ngramNoveltyOn(df)
         .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2))))
         .toMap
       got == perSrc

@@ -64,4 +64,42 @@ class RegistryPinSpec extends AnyFunSuite {
     assertSame(graft.ops.retrieval.Retrieval.queries.keySet, retrievalIds)
     assert(graft.ops.retrieval.Retrieval.oracle.keySet.subsetOf(retrievalIds))
   }
+
+  test("the corpus family owns exactly its 58 rows") {
+    val corpusIds = Set(
+      // Stats
+      "llm_text_stats", "llm_token_count", "llm_token_fertility",
+      "llm_tokenizer_fertility", "llm_token_histogram", "llm_length_mad",
+      "llm_doc_length_by_source", "llm_dataset_card",
+      // Vocabulary
+      "llm_token_entropy", "llm_bpe_pair_freq", "llm_vocab_coverage",
+      "llm_vocab_coverage_curve", "llm_word_pmi", "llm_source_overlap",
+      "llm_bigram_cond_entropy", "llm_burstiness", "llm_kl_divergence",
+      "llm_heaps_fit", "llm_zipf_fit", "llm_vocab_overlap_langs",
+      // Quality
+      "llm_lang_id", "llm_langid_agreement", "llm_quality_score",
+      "llm_quality_gopher", "llm_filter_funnel", "llm_repetition_filter",
+      "llm_code_detect", "llm_readability", "llm_pii_mask", "llm_ngram_lm",
+      "llm_lm_score", "llm_perplexity_buckets", "llm_decontaminate",
+      "llm_template_detect", "llm_ngram_novelty", "llm_source_novelty",
+      // Sampling
+      "llm_sample_stratified", "llm_sample_stratified_verified",
+      "llm_sample_hash", "llm_shard_assign", "llm_bloom_prefilter",
+      "llm_dsir_score", "llm_domain_mix", "llm_domain_mix_optimize",
+      "llm_temperature_mix", "llm_interleave_sources",
+      // Features
+      "llm_tfidf", "llm_hash_features", "llm_inverse_index",
+      "llm_fingerprint", "llm_winnow_fingerprint", "llm_doc_chunk",
+      "llm_pack_sequences", "llm_span_mask", "llm_feature_scale",
+      "llm_multimodal_cols", "llm_multimodal_binary",
+      "llm_multimodal_frames")
+    assert(corpusIds.size == 58)
+    assertSame(graft.ops.corpus.Corpus.queries.keySet, corpusIds)
+    assert(graft.ops.corpus.Corpus.oracle.keySet.subsetOf(corpusIds))
+    // every llm_* row now lives in one of the three families
+    val families = graft.ops.corpus.Corpus.queries.keySet ++
+      graft.ops.dedup.Dedup.queries.keySet ++
+      graft.ops.retrieval.Retrieval.queries.keySet
+    assertSame(families, SparkEntry.queries.keySet.filter(_.startsWith("llm_")))
+  }
 }

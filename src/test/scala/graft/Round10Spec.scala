@@ -108,7 +108,7 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("llm_bigram_cond_entropy: bounded by ln(vocab) and non-negative") {
-    val rows = graft.ops.LlmOps8.queries("llm_bigram_cond_entropy")(spark, sf).collect()
+    val rows = graft.ops.corpus.Vocabulary.queries("llm_bigram_cond_entropy")(spark, sf).collect()
     assert(rows.length == 1)
     val r = rows.head
     val h = r.getDouble(3)

@@ -40,7 +40,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("llm_burstiness: one row per doc; a repeated-token doc is burstier than an all-distinct doc") {
-    val rows = graft.ops.LlmOps9.queries("llm_burstiness")(spark, sf).collect()
+    val rows = graft.ops.corpus.Vocabulary.queries("llm_burstiness")(spark, sf).collect()
     val docs = graft.util.Tables.load(spark, sf, "documents").count()
     assert(rows.length == docs)
     rows.foreach(r => assert(r.getDouble(3) >= 0.0, "negative VMR"))
@@ -60,7 +60,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("llm_kl_divergence: non-negative per source, one row per source") {
-    val rows = graft.ops.LlmOps9.queries("llm_kl_divergence")(spark, sf).collect()
+    val rows = graft.ops.corpus.Vocabulary.queries("llm_kl_divergence")(spark, sf).collect()
     val sources = graft.util.Tables.load(spark, sf, "documents")
       .select(countDistinct(col("source"))).head.getLong(0)
     assert(rows.length == sources)
@@ -70,7 +70,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("llm_length_mad: outliers bounded and MAD <= max deviation") {
-    val rows = graft.ops.LlmOps9.queries("llm_length_mad")(spark, sf).collect()
+    val rows = graft.ops.corpus.Stats.queries("llm_length_mad")(spark, sf).collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(1)).sum
     val docs = graft.util.Tables.load(spark, sf, "documents").count()

@@ -73,7 +73,7 @@ class Round13Spec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")))
     val tmp = java.nio.file.Files.createTempDirectory("code_fx").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = graft.ops.LlmOps11.queries("llm_code_detect")(spark, tmp)
+    val out = graft.ops.corpus.Quality.queries("llm_code_detect")(spark, tmp)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(out("code") == 1L, "code doc must be flagged")
     assert(out("prose") == 0L, "prose doc must not be flagged")
@@ -90,7 +90,7 @@ class Round13Spec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")))
     val tmp = java.nio.file.Files.createTempDirectory("read_fx").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = graft.ops.LlmOps11.queries("llm_readability")(spark, tmp)
+    val out = graft.ops.corpus.Quality.queries("llm_readability")(spark, tmp)
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(out("easy") > out("hard"),
       s"easy ${out("easy")} must read easier than hard ${out("hard")}")

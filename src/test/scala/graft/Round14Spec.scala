@@ -36,7 +36,7 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("llm_span_mask: mask rate is near 26/256 and deterministic across runs") {
-    val q = graft.ops.LlmOps12.queries("llm_span_mask")
+    val q = graft.ops.corpus.Features.queries("llm_span_mask")
     val a = q(spark, sf).collect()
     val masked = a.map(_.getLong(2)).sum.toDouble
     val total = a.map(_.getLong(1)).sum.toDouble
@@ -48,7 +48,7 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("llm_heaps_fit: sublinear growth with a positive coefficient") {
-    val r = graft.ops.LlmOps12.queries("llm_heaps_fit")(spark, sf).head
+    val r = graft.ops.corpus.Vocabulary.queries("llm_heaps_fit")(spark, sf).head
     assert(r.getLong(0) >= 10, "needs enough prefix points")
     val beta = r.getDouble(1)
     assert(beta > 0.0 && beta < 1.0, s"Heaps beta $beta must be in (0,1)")

@@ -34,7 +34,7 @@ class Round18Spec extends AnyFunSuite {
   }
 
   test("llm_template_detect: rates bounded and templated <= docs") {
-    val rows = graft.ops.Composite17
+    val rows = graft.ops.corpus.Quality
       .queries("llm_template_detect")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -77,7 +77,7 @@ class Round18Spec extends AnyFunSuite {
   }
 
   test("llm_dataset_card: one consistent datasheet row") {
-    val r = graft.ops.LlmOps16.queries("llm_dataset_card")(spark, sf).head
+    val r = graft.ops.corpus.Stats.queries("llm_dataset_card")(spark, sf).head
     val nDocs = r.getLong(0)
     assert(nDocs == graft.util.Tables.load(spark, sf, "documents").count())
     assert(math.abs(r.getDouble(2) - r.getLong(1).toDouble / nDocs) < 1e-4,

@@ -26,7 +26,7 @@ class Round22Spec extends AnyFunSuite {
   }
 
   test("llm_interleave_sources: positions 1..50, sources rotate before repeating") {
-    val rows = graft.ops.Composite22
+    val rows = graft.ops.corpus.Sampling
       .queries("llm_interleave_sources")(spark, sf).collect()
     assert(rows.map(_.getInt(0)).sorted.sameElements(1 to rows.length))
     val nSources = rows.map(_.getString(1)).distinct.length

@@ -66,7 +66,7 @@ class Round28Spec extends AnyFunSuite {
     val ids = (0L until 64L).toSeq
     val docs = ids.flatMap(i => Seq((i, "en"), (i + 1000L, "de")))
       .toDF("doc_id", "lang")
-    val kept = docs.filter(graft.ops.LlmOps2.stratifiedKeep)
+    val kept = docs.filter(graft.ops.corpus.Sampling.stratifiedKeep)
       .select("doc_id").as[Long].collect().toSet
     val expected = (ids.filter(i => hex4(i) < "8000") ++
       ids.map(_ + 1000L).filter(i => hex4(i) < "4000")).toSet
@@ -163,7 +163,7 @@ class Round28Spec extends AnyFunSuite {
       (1 to 6).map(i => (100L + i, "bb", s"t$i w$i")) ++
       (1 to 20).map(i => (200L + i, "cc", s"t$i w$i"))
     ).toDF("doc_id", "lang", "text")
-    val got = graft.ops.LlmOps17.domainMixOptimize(docs)
+    val got = graft.ops.corpus.Sampling.domainMixOptimize(docs)
       .select("lang", "n_docs", "n_kept")
       .as[(String, Long, Long)].collect().toSeq
     assert(got == Seq(("aa", 4L, 4L), ("bb", 6L, 6L), ("cc", 20L, 11L)))
@@ -178,7 +178,7 @@ class Round28Spec extends AnyFunSuite {
       (2L, "en", "epsilon zeta eta theta"),
       (3L, "en", "the the the the"),
       (4L, "en", "a a a a")).toDF("doc_id", "lang", "text")
-    val got = graft.ops.LlmOps17.domainMixOptimize(docs)
+    val got = graft.ops.corpus.Sampling.domainMixOptimize(docs)
       .select("n_kept", "sum_kept_ids").as[(Long, Long)].collect().toSeq
     assert(got == Seq((2L, 3L)), s"expected docs 1+2 kept: $got")
   }

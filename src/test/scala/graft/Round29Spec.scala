@@ -127,7 +127,7 @@ class Round29Spec extends AnyFunSuite {
 
   // ---- llm_minhash_calibration ----------------------------------------
 
-  /** Replica of LlmOps4.hashKeep's predicate for picking planted ids. */
+  /** Replica of corpus.Sampling.hashKeep's predicate for picking planted ids. */
   private def keeps(id: Long): Boolean = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(s"graft$id".getBytes("UTF-8"))

@@ -38,14 +38,14 @@ class Round34Spec extends AnyFunSuite {
     val lab = (Seq.fill(4)(("A", "A")) ++ Seq.fill(2)(("A", "B")) ++
       Seq.fill(3)(("B", "B")) ++ Seq.fill(1)(("B", "A")))
       .toDF("gold", "guessed")
-    val got = graft.ops.Composite37.kappaOn(lab)
+    val got = graft.ops.corpus.Quality.kappaOn(lab)
       .as[(Long, Long, Long, Double, Option[Double])].collect().toSeq
     assert(got == Seq((10L, 7L, 50L, 0.7, Some(0.4))))
   }
 
   test("kappaOn: perfect one-class agreement has pe = 1 -> kappa NULL, not a crash") {
     val lab = Seq.fill(3)(("A", "A")).toDF("gold", "guessed")
-    val got = graft.ops.Composite37.kappaOn(lab)
+    val got = graft.ops.corpus.Quality.kappaOn(lab)
       .as[(Long, Long, Long, Double, Option[Double])].collect().toSeq
     assert(got == Seq((3L, 3L, 9L, 1.0, None)))
   }
@@ -57,7 +57,7 @@ class Round34Spec extends AnyFunSuite {
     // share a token -> 1/(2+2-1) = 1/3; both other pairs 0.
     val docs = Seq(("en", "the cat"), ("de", "der cat"),
       ("fr", "le chien")).toDF("lang", "text")
-    val got = graft.ops.Composite37.vocabOverlapOn(docs)
+    val got = graft.ops.corpus.Vocabulary.vocabOverlapOn(docs)
       .as[(String, String, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       ("de", "en", 2L, 2L, 1L, 0.333333),
@@ -67,7 +67,7 @@ class Round34Spec extends AnyFunSuite {
 
   test("vocabOverlapOn: empty tokens from doubled separators never enter the vocabulary") {
     val docs = Seq(("en", "the  cat"), ("de", "cat")).toDF("lang", "text")
-    val got = graft.ops.Composite37.vocabOverlapOn(docs)
+    val got = graft.ops.corpus.Vocabulary.vocabOverlapOn(docs)
       .as[(String, String, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(("de", "en", 1L, 2L, 1L, 0.5)))
   }

@@ -53,7 +53,7 @@ class Round37Spec extends AnyFunSuite {
     // re 2. Totals 5/4 = 1.25 fertility, 10/5 = 2.0 chars/token.
     val docs = Seq(("en", "ab cd12"), ("en", "x y"), ("de", "zz"))
       .toDF("lang", "text")
-    val got = graft.ops.Composite40.tokenizerFertilityOn(docs)
+    val got = graft.ops.corpus.Stats.tokenizerFertilityOn(docs)
       .as[(String, Long, Long, Long, Double, Double)].collect().toSeq
     assert(got == Seq(
       ("de", 1L, 1L, 1L, 1.0, 2.0),

@@ -87,7 +87,7 @@ class Round49Spec extends AnyFunSuite {
     val sx2 = xs.map(a => a * a).sum
     val b = (m * sxy - sx * sy) / (m * sx2 - sx * sx)
     def floor6(v: Double) = math.floor(v * 1e6 + 0.5) / 1e6
-    val got = graft.ops.LlmOps18.zipfFitOn(docs)
+    val got = graft.ops.corpus.Vocabulary.zipfFitOn(docs)
       .as[(Long, Long, Double, Double)].collect().head
     assert(got._1 == 4L && got._2 == 4L)
     assert(math.abs(got._3 - floor6(-b)) <= 1e-6, s"alpha: $got vs ${-b}")
@@ -99,7 +99,7 @@ class Round49Spec extends AnyFunSuite {
     // 1031, fit rows exactly 1024.
     val text = (Seq.fill(50)("zz") ++
       (0 until 1030).map(i => f"w$i%04d")).mkString(" ")
-    val got = graft.ops.LlmOps18.zipfFitOn(
+    val got = graft.ops.corpus.Vocabulary.zipfFitOn(
       Seq((1L, text)).toDF("doc_id", "text"))
       .as[(Long, Long, Double, Double)].collect().head
     assert(got._1 == 1031L && got._2 == 1024L)

@@ -73,7 +73,7 @@ class Round4Spec extends AnyFunSuite {
   }
 
   test("llm_sample_hash: keep-set is a pure row property (partitioning-proof)") {
-    val once = graft.ops.LlmOps4.queries("llm_sample_hash")(spark, sf).collect()
+    val once = graft.ops.corpus.Sampling.queries("llm_sample_hash")(spark, sf).collect()
     // Same query over a repartitioned source must select the SAME rows
     // — this is the property seeded RNG sampling does not have.
     val d = graft.util.Tables.load(spark, sf, "documents").repartition(13)

@@ -136,7 +136,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("llm_token_entropy: 0 <= H <= log2(n_tokens)") {
-    val rows = graft.ops.LlmOps6.queries("llm_token_entropy")(spark, sf).collect()
+    val rows = graft.ops.corpus.Vocabulary.queries("llm_token_entropy")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val n = r.getLong(1).toDouble
@@ -206,7 +206,7 @@ class Round7Spec extends AnyFunSuite {
 
   test("llm_feature_scale: each dimension standardizes to mean 0, var 1") {
     // exploded surface: one row per (vec_id, pos, z)
-    val rows = graft.ops.LlmOps6.queries("llm_feature_scale")(spark, sf).collect()
+    val rows = graft.ops.corpus.Features.queries("llm_feature_scale")(spark, sf).collect()
     assert(rows.nonEmpty)
     val byPos = rows.groupBy(_.getInt(1))
     val dims = byPos.size
@@ -246,10 +246,10 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("llm_zipf_fit: alpha is positive (head-heavier than flat) on the corpus") {
-    // The round-15 rebuild (LlmOps18) surfaces alpha = −slope and the
+    // The round-15 rebuild surfaces alpha = −slope and the
     // ln-space intercept; the shape contract carries over: a real
     // rank-frequency curve slopes DOWN, so alpha > 0.
-    val r = graft.ops.LlmOps18.queries("llm_zipf_fit")(spark, sf).collect()(0)
+    val r = graft.ops.corpus.Vocabulary.queries("llm_zipf_fit")(spark, sf).collect()(0)
     assert(r.getLong(0) >= r.getLong(1), "rank cap never exceeds vocab")
     assert(r.getDouble(2) > 0.0, s"alpha ${r.getDouble(2)}")
   }

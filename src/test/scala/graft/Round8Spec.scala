@@ -11,7 +11,7 @@ class Round8Spec extends AnyFunSuite {
   import TestSpark._
 
   test("llm_shard_assign: shards partition the corpus; assignment is a pure row property") {
-    val rows = graft.ops.LlmOps7.queries("llm_shard_assign")(spark, sf).collect()
+    val rows = graft.ops.corpus.Sampling.queries("llm_shard_assign")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 16)
     rows.foreach(r => assert(r.getInt(0) >= 0 && r.getInt(0) <= 15))
     val total = rows.map(_.getLong(1)).sum
@@ -31,7 +31,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("llm_filter_funnel: stages chain (n_in of k+1 == n_out of k) and attrition is monotone") {
-    val rows = graft.ops.LlmOps7.queries("llm_filter_funnel")(spark, sf)
+    val rows = graft.ops.corpus.Quality.queries("llm_filter_funnel")(spark, sf)
       .collect().sortBy(_.getInt(0))
     assert(rows.length == 4)
     val n = graft.util.Tables.load(spark, sf, "documents").count()
@@ -43,7 +43,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("llm_token_fertility: language slices partition the corpus and ratios are consistent") {
-    val rows = graft.ops.LlmOps7.queries("llm_token_fertility")(spark, sf).collect()
+    val rows = graft.ops.corpus.Stats.queries("llm_token_fertility")(spark, sf).collect()
     assert(rows.nonEmpty)
     val n = graft.util.Tables.load(spark, sf, "documents").count()
     assert(rows.map(_.getLong(1)).sum == n)
@@ -67,7 +67,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("llm_ngram_novelty: fractions in [0,1] and the lowest doc with spans is fully novel") {
-    val rows = graft.ops.LlmOps7.queries("llm_ngram_novelty")(spark, sf).collect()
+    val rows = graft.ops.corpus.Quality.queries("llm_ngram_novelty")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0))
     // every trigram of the minimum doc id first appears there
@@ -89,7 +89,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("llm_dsir_score: top-20 is score-sorted and the target slice scores higher on average") {
-    val rows = graft.ops.LlmOps7.queries("llm_dsir_score")(spark, sf).collect()
+    val rows = graft.ops.corpus.Sampling.queries("llm_dsir_score")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 20)
     val scores = rows.map(_.getDouble(3))
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b },

@@ -51,9 +51,9 @@ class Round9Spec extends AnyFunSuite {
   }
 
   test("llm_vocab_coverage: coverage is monotone in k and bounded by 1") {
-    val rows = graft.ops.Composite6.queries.keySet // guard: op lives in LlmOps8
+    val rows = graft.ops.Composite6.queries.keySet // guard: op lives in corpus.Vocabulary
     assert(!rows.contains("llm_vocab_coverage"))
-    val cov = graft.ops.LlmOps8.queries("llm_vocab_coverage")(spark, sf)
+    val cov = graft.ops.corpus.Vocabulary.queries("llm_vocab_coverage")(spark, sf)
       .collect().sortBy(_.getInt(0))
     assert(cov.map(_.getInt(0)).toSeq == Seq(10, 100, 1000, 10000))
     val cs = cov.map(_.getDouble(3))
@@ -64,7 +64,7 @@ class Round9Spec extends AnyFunSuite {
   }
 
   test("llm_word_pmi: results are support-filtered and sorted by rounded pmi") {
-    val rows = graft.ops.LlmOps8.queries("llm_word_pmi")(spark, sf).collect()
+    val rows = graft.ops.corpus.Vocabulary.queries("llm_word_pmi")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 20)
     rows.foreach(r => assert(r.getLong(2) >= 5, "min-support violated"))
     val ps = rows.map(_.getDouble(3))
@@ -72,7 +72,7 @@ class Round9Spec extends AnyFunSuite {
   }
 
   test("llm_source_overlap: full upper-triangle matrix with jaccard in [0,1]") {
-    val rows = graft.ops.LlmOps8.queries("llm_source_overlap")(spark, sf).collect()
+    val rows = graft.ops.corpus.Vocabulary.queries("llm_source_overlap")(spark, sf).collect()
     val sources = graft.util.Tables.load(spark, sf, "documents")
       .select(countDistinct(col("source"))).head.getLong(0).toInt
     assert(rows.length == sources * (sources - 1) / 2,

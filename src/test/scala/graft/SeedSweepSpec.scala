@@ -150,7 +150,7 @@ class SeedSweepSpec extends AnyFunSuite {
       val ids = (0L until 5000L).toDF("id")
       // salt plays the sweep seed: the md5-prefix keep set must be
       // identical across reruns and ~16% ("28"/"ff" + 1) of the keys
-      val keep = graft.ops.LlmOps4.hashKeep(
+      val keep = graft.ops.corpus.Sampling.hashKeep(
         concat(lit(s"salt$seed-"), col("id")), "28")
       val a = ids.filter(keep).collect().map(_.getLong(0)).toSeq
       val b = ids.filter(keep).collect().map(_.getLong(0)).toSeq
@@ -167,7 +167,7 @@ class SeedSweepSpec extends AnyFunSuite {
         val text = words(seed + i, 5 + (i % 9)).mkString(" ")
         (i.toLong, text, "en", text.length.toLong)
       }
-      val out = graft.ops.LlmOps2.multimodalBinary(
+      val out = graft.ops.corpus.Features.multimodalBinary(
         docs.toDF("doc_id", "text", "lang", "n_chars")).collect()
       assert(out.length == docs.length)
       val byId = docs.map(d => d._1 -> d._2.getBytes("UTF-8")).toMap

@@ -19,7 +19,11 @@ the same plan print the same text:
     and the checkout-relative warehouse directory;
   * JVM identities: lambda classes (`Typed$$$Lambda$6334/0x7f0...`),
     object hash codes (`[B@6abcf2de`), streaming run UUIDs and the
-    batch timestamp after `stateStoreCkptIds`.
+    batch timestamp after `stateStoreCkptIds`;
+  * lambda variables of higher-order functions (`lambda x_4#`) and
+    common subexpressions (`_common_expr_524#`), whose numbers come
+    from JVM-wide counters (an earlier row shifts them): renumbered
+    from 1 within each row, in order of first appearance.
 
 A row with several DISTINCT aggregates plans an Expand whose distinct
 groups come out in a different order from one JVM run to the next
@@ -55,6 +59,20 @@ NORMALISE = [
     (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "<uuid>"),
     (re.compile(r"(stateStoreCkptIds = \w+), \d+"), r"\1, <ms>"),
 ]
+
+
+COUNTED = [re.compile(r"(lambda x_)(\d+)"), re.compile(r"(_common_expr_)(\d+)")]
+
+
+def canonical_counters(lines):
+    """Lines of one block with each counter-numbered name numbered
+    1, 2, … in order of first appearance."""
+    for pattern in COUNTED:
+        seen = {}
+        def renumber(m):
+            return f"{m.group(1)}{seen.setdefault(m.group(2), len(seen) + 1)}"
+        lines = [pattern.sub(renumber, line) for line in lines]
+    return lines
 
 
 def normalise(line):
@@ -189,7 +207,7 @@ def blocks(path):
     for name, lines in out.items():
         while lines and not lines[-1]:
             lines.pop()
-        out[name] = canonical_expands(lines)
+        out[name] = canonical_expands(canonical_counters(lines))
     return out
 
 

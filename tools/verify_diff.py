@@ -12,7 +12,9 @@ output is checked here before compare.py runs the oracle:
     in one run leaves no table, and Verify only reports the failure
     as "[verify] <name> failed" on stderr;
   * oracle_sql.json is compared as a parsed map (key order and JSON
-    escaping do not matter; a changed SQL string does).
+    escaping do not matter; a changed SQL string does);
+  * each side's verify_failures.txt (one `name<TAB>message` line per
+    row that failed) is printed when it is non-empty.
 
 Exit 1 on any difference, 0 when both dumps are identical.
 """
@@ -32,6 +34,14 @@ def read(out, name):
     return pq.read_table(os.path.join(out, name))
 
 
+def print_failures(side, out):
+    path = os.path.join(out, "verify_failures.txt")
+    if os.path.isfile(path):
+        with open(path) as f:
+            for line in f.read().splitlines():
+                print(f"FAILED IN {side}: {line}")
+
+
 def main(argv):
     if len(argv) != 3:
         print(__doc__.strip(), file=sys.stderr)
@@ -39,6 +49,8 @@ def main(argv):
     old_out, new_out = argv[1], argv[2]
     old_t, new_t = tables(old_out), tables(new_out)
     bad = False
+    print_failures("OLD", old_out)
+    print_failures("NEW", new_out)
 
     for side, only in (("OLD", old_t - new_t), ("NEW", new_t - old_t)):
         for name in sorted(only):
