@@ -443,13 +443,13 @@ object Graft {
     * orders-shaped relation: skewness, excess kurtosis, JB and the
     * chi-sq(2) 5% verdict, from exact decimal power sums. */
   def jarqueBera(orders: DataFrame): DataFrame =
-    graft.ops.Composite45.jarqueBeraOn(orders)
+    graft.ops.stats.Normality.jarqueBeraOn(orders)
 
   /** Grubbs' extreme-studentized-deviate statistic per
     * `o_orderpriority`: G, the extreme side, and the suspect value
     * itself. Exact decimal sums and extremes. */
   def grubbsTest(orders: DataFrame): DataFrame =
-    graft.ops.Composite47.grubbsOn(orders)
+    graft.ops.stats.Normality.grubbsOn(orders)
 
   /** Wilder True Range + 14-day ATR over the daily revenue candle
     * of an orders-shaped relation — exact-cents integers, CASE-
@@ -473,17 +473,17 @@ object Graft {
     * (value, group-1 indicator) rows — ranks ride the distributed
     * prefix-sum grid, never a one-task global window. */
   def mannWhitney(df: DataFrame, value: Column, isGroup1: Column): DataFrame =
-    graft.ops.Composite8.mannWhitneyOn(df, value, isGroup1)
+    graft.ops.stats.TwoSample.mannWhitneyOn(df, value, isGroup1)
 
   /** Two-sample Kolmogorov–Smirnov sup statistic and its location
     * over (value, group-1 indicator) rows; same grid as
     * [[mannWhitney]]. */
   def ksTest(df: DataFrame, value: Column, isGroup1: Column): DataFrame =
-    graft.ops.Composite8.ksTestOn(df, value, isGroup1)
+    graft.ops.stats.TwoSample.ksTestOn(df, value, isGroup1)
 
   /** Two-sample Anderson–Darling A² (tail-weighted EDF distance,
     * Pettitt 1976 / Scholz–Stephens 1987 at k = 2) with the 5%
     * asymptotic verdict; a third consumer of the KS/CvM grid. */
   def andersonDarling(df: DataFrame, value: Column, isGroup1: Column): DataFrame =
-    graft.ops.Composite8.adTestOn(df, value, isGroup1)
+    graft.ops.stats.TwoSample.adTestOn(df, value, isGroup1)
 }

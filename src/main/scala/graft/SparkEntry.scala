@@ -25,7 +25,6 @@ object SparkEntry {
       (Composite5.queries, Composite5.oracle),
       (Composite6.queries, Composite6.oracle),
       (Composite7.queries, Composite7.oracle),
-      (Composite8.queries, Composite8.oracle),
       (Composite9.queries, Composite9.oracle),
       (Composite10.queries, Composite10.oracle),
       (Composite11.queries, Composite11.oracle),
@@ -60,44 +59,26 @@ object SparkEntry {
       (dedup.Dedup.queries, dedup.Dedup.oracle),
       (retrieval.Retrieval.queries, retrieval.Retrieval.oracle),
       (corpus.Corpus.queries, corpus.Corpus.oracle),
+      (stats.Stats.queries, stats.Stats.oracle),
       (Composite37.queries, Composite37.oracle),
       (Composite38.queries, Composite38.oracle),
       (Composite39.queries, Composite39.oracle),
       (Composite41.queries, Composite41.oracle),
       (Composite43.queries, Composite43.oracle),
       (Composite44.queries, Composite44.oracle),
-      (Composite45.queries, Composite45.oracle),
       (Composite46.queries, Composite46.oracle),
-      (Composite47.queries, Composite47.oracle),
       (Composite48.queries, Composite48.oracle),
       (Composite49.queries, Composite49.oracle),
       (timeseries.TimeSeries.queries, timeseries.TimeSeries.oracle),
-      (Composite51.queries, Composite51.oracle),
-      (Composite52.queries, Composite52.oracle),
-      (Composite55.queries, Composite55.oracle),
       (Composite56.queries, Composite56.oracle),
-      (Composite57.queries, Composite57.oracle),
-      (Composite58.queries, Composite58.oracle),
-      (Composite60.queries, Composite60.oracle),
-      (Composite61.queries, Composite61.oracle),
-      (Composite62.queries, Composite62.oracle),
-      (Composite63.queries, Composite63.oracle),
-      (Composite66.queries, Composite66.oracle),
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
-      (Composite69.queries, Composite69.oracle),
-      (Composite72.queries, Composite72.oracle),
-      (Composite73.queries, Composite73.oracle),
-      (Composite75.queries, Composite75.oracle),
-      (Composite76.queries, Composite76.oracle),
       (Composite77.queries, Composite77.oracle),
-      (Composite78.queries, Composite78.oracle),
       (Composite80.queries, Composite80.oracle),
       (Composite81.queries, Composite81.oracle),
       (Composite82.queries, Composite82.oracle),
       (Composite83.queries, Composite83.oracle),
-      (Composite84.queries, Composite84.oracle),
-      (Composite85.queries, Composite85.oracle)
+      (Composite84.queries, Composite84.oracle)
     )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Tables._
+import graft.ops.stats.Samples.{StatAgg, countAgg, sumAgg}
 
 /** SURVEY.md §2.17 — statistical-profile operators: ntile/equi-width
   * bucketing, higher central moments (skewness/kurtosis), and simple
@@ -59,21 +60,6 @@ object Composite3 {
   // exact power sums S1..S4. Every double op below (/,*,-,sqrt) is
   // IEEE-correctly-rounded, so identical formula text ⇒ identical
   // bits; the 6-dp rounding is belt-and-braces.
-  /** One power-sum aggregate, rendered per engine: the Spark side
-    * casts the exact decimal sum straight to double; the ORACLE side
-    * routes the same sum through VARCHAR (SURVEY §1.5 r7 — DuckDB's
-    * direct decimal→double cast double-rounds once the scaled integer
-    * exceeds 2^53). Built structurally from the inner expression —
-    * no post-hoc string rewriting of assembled SQL. */
-  private[graft] final case class StatAgg(alias: String, spark: String, oracle: String)
-  private[graft] def sumAgg(inner: String, alias: String) = StatAgg(alias,
-    s"CAST(sum($inner) AS DOUBLE)",
-    s"CAST(CAST(sum($inner) AS VARCHAR) AS DOUBLE)")
-  private[graft] def countAgg(alias: String) = {
-    val e = "CAST(count(*) AS DOUBLE)"
-    StatAgg(alias, e, e)
-  }
-
   private val momentAggs = Seq(
     countAgg("n"),
     sumAgg(xd, "s1"),

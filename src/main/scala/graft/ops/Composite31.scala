@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
+import graft.ops.stats.Samples.{countAgg, sumAgg}
 
 /** SURVEY.md §2.47 (round-21 batch) — two capability gaps a real
   * user hits next: MULTIPLE regression (agg_regression is
@@ -36,16 +37,16 @@ object Composite31 {
   // agg_regression's DECIMAL(25,4) bound.
   private val dd = "CAST(l_discount AS DECIMAL(12,2))"
   private val olsAggs = Seq(
-    Composite3.countAgg("n"),
-    Composite3.sumAgg(Composite3.xd, "sx1"),
-    Composite3.sumAgg(dd, "sx2"),
-    Composite3.sumAgg(Composite3.yd, "sy"),
-    Composite3.sumAgg(Composite3.x2, "s11"),
-    Composite3.sumAgg(s"CAST($dd * $dd AS DECIMAL(12,4))", "s22"),
-    Composite3.sumAgg(s"CAST(${Composite3.xd} * $dd AS DECIMAL(12,4))", "s12"),
-    Composite3.sumAgg(s"CAST(${Composite3.xd} * ${Composite3.yd} AS DECIMAL(22,4))", "s1y"),
-    Composite3.sumAgg(s"CAST($dd * ${Composite3.yd} AS DECIMAL(22,4))", "s2y"),
-    Composite3.sumAgg(s"CAST(${Composite3.yd} * ${Composite3.yd} AS DECIMAL(25,4))", "syy"))
+    countAgg("n"),
+    sumAgg(Composite3.xd, "sx1"),
+    sumAgg(dd, "sx2"),
+    sumAgg(Composite3.yd, "sy"),
+    sumAgg(Composite3.x2, "s11"),
+    sumAgg(s"CAST($dd * $dd AS DECIMAL(12,4))", "s22"),
+    sumAgg(s"CAST(${Composite3.xd} * $dd AS DECIMAL(12,4))", "s12"),
+    sumAgg(s"CAST(${Composite3.xd} * ${Composite3.yd} AS DECIMAL(22,4))", "s1y"),
+    sumAgg(s"CAST($dd * ${Composite3.yd} AS DECIMAL(22,4))", "s2y"),
+    sumAgg(s"CAST(${Composite3.yd} * ${Composite3.yd} AS DECIMAL(25,4))", "syy"))
 
   // floor-form 6-dp rounding (SURVEY §1.5 tri-SF rule a): round()
   // itself diverges at .5-boundary ulps; floor(v*1e6 + 0.5)/1e6

@@ -6,98 +6,20 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.64 (round-24 batch 6) — k-group mean comparison and
-  * floor-trader levels:
-  *
-  *  - [[anovaF]]: one-way ANOVA F across the five order priorities
-  *    on order totals — between/within sum-of-squares decomposition
-  *    and the F statistic with the large-sample 5% verdict. The
-  *    inferential family's missing classic: `agg_welch_t` compares
-  *    TWO groups; ANOVA asks "do ANY of the k differ?" before any
-  *    pairwise drill-down.
+/** SURVEY.md §2.64 (round-24 batch 6) — floor-trader levels:
   *
   *  - [[pivotPoints]]: classic floor-trader pivot levels (P, R1/S1,
   *    R2/S2) for each day from the PREVIOUS day's candle — the
   *    level-projection convention: yesterday's range sets today's
   *    support/resistance grid.
   *
-  * Scale shapes: ANOVA is ONE conditional-aggregation pass (the
-  * evt_seasonal_strength discipline — the five groups land in
-  * FIXED-ORDER columns so every cross-group sum is one fixed
-  * left-to-right formula, never an engine-ordered SUM over group
-  * rows); pivot points reuse the ATR candle (one date aggregate,
-  * global |days| window).
+  * Scale shape: pivot points reuse the ATR candle (one date
+  * aggregate, global |days| window).
   *
-  * Determinism: ANOVA power sums are exact DECIMALs (§1.5 r7 VARCHAR
-  * oracle route); SSB/SSW/F assemble once from identical text, with
-  * the F(4,∞) 5% critical value 2.3719 compared AFTER the 6-dp
-  * floor; pivot levels are exact-cents integers pushed through one
-  * double assembly each.
+  * Determinism: pivot levels are exact-cents integers pushed through
+  * one double assembly each.
   */
 object Composite48 {
-
-  // ---- agg_anova_f -----------------------------------------------------
-  private val AnovaGroups = Seq(
-    "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-
-  private def gx(p: String) =
-    s"CASE WHEN o_orderpriority = '$p' THEN CAST(o_totalprice AS DECIMAL(15,2)) END"
-  private def gx2(p: String) =
-    s"CASE WHEN o_orderpriority = '$p' THEN " +
-      s"CAST(CAST(o_totalprice AS DECIMAL(15,2)) * CAST(o_totalprice AS DECIMAL(15,2)) AS DECIMAL(24,4)) END"
-
-  private val anovaAggs = AnovaGroups.zipWithIndex.flatMap { case (p, i) =>
-    Seq(
-      Composite3.StatAgg(s"n$i",
-        s"CAST(sum(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS DOUBLE)",
-        s"CAST(sum(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS DOUBLE)"),
-      Composite3.sumAgg(gx(p), s"a$i"),
-      Composite3.sumAgg(gx2(p), s"b$i"))
-  }
-
-  private val anN = (0 until 5).map(i => s"n$i").mkString(" + ")
-  private val anS1 = (0 until 5).map(i => s"a$i").mkString(" + ")
-  private val anSsw = (0 until 5).map(i => s"(b$i - (a$i/n$i)*a$i)")
-    .mkString(" + ")
-  private val anSsb = s"(${(0 until 5).map(i => s"(a$i/n$i)*a$i").mkString(" + ")})" +
-    s" - (($anS1)/($anN))*($anS1)"
-  // nullif: a zero within-group SS (all groups internally constant)
-  // yields NULL F instead of engine-specific Inf handling.
-  private val anF =
-    s"floor(((($anSsb)/4) / nullif(($anSsw)/(($anN) - 5), 0))*1e6 + 0.5)/1e6"
-
-  // The SS magnitudes (~1e15 at sf0.1) break BOTH rounding forms:
-  // the §1.5 floor-6 form overflows (Spark's floor(DOUBLE) returns
-  // LONG, so x*1e6 ≈ 3e21 clamps to Long.MaxValue while DuckDB's
-  // floor stays double), and round(x, 6) at 17 significant digits
-  // makes each engine pick a different representable neighbor. The
-  // assembled doubles are bit-identical by construction (exact sums,
-  // identical formula text), so the SS columns surface RAW; the
-  // O(1)-scale F keeps the floor form.
-  private val anovaOut = Seq(
-    s"CAST($anN AS BIGINT) AS n",
-    s"($anSsb) AS ss_between",
-    s"($anSsw) AS ss_within",
-    s"$anF AS f_stat",
-    s"($anF > 2.3719) AS reject_equal_means_5pct")
-
-  private[graft] def anovaFOn(orders: DataFrame): DataFrame =
-    orders
-      .agg(expr(anovaAggs.head.spark).as(anovaAggs.head.alias),
-        anovaAggs.tail.map(a => expr(a.spark).as(a.alias)): _*)
-      .selectExpr(anovaOut: _*)
-
-  private def anovaF(s: SparkSession, dir: String): DataFrame =
-    anovaFOn(load(s, dir, "orders"))
-
-  private def anovaFOracle: String =
-    s"""WITH g AS (
-       |  SELECT
-       |    ${anovaAggs.map(a => s"${a.oracle} AS ${a.alias}").mkString(",\n    ")}
-       |  FROM orders)
-       |SELECT
-       |  ${anovaOut.mkString(",\n  ")}
-       |FROM g""".stripMargin
 
   // ---- win_pivot_points ------------------------------------------------
   private def level(expr0: String, alias: String): String =
@@ -153,12 +75,10 @@ object Composite48 {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_anova_f" -> (anovaF _),
     "win_pivot_points" -> (pivotPoints _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_anova_f" -> anovaFOracle,
     "win_pivot_points" -> pivotPointsOracle
   )
 }

@@ -6,15 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.65 (round-24 batch 7) — variance-homogeneity testing
-  * and event-time disorder:
-  *
-  *  - [[levene]]: Brown-Forsythe/Levene W across the five order
-  *    priorities — one-way ANOVA on absolute deviations from each
-  *    group's PICKED median. The precondition test for
-  *    `agg_anova_f` (classic ANOVA assumes equal variances; Levene
-  *    checks exactly that, and the median-based Brown-Forsythe form
-  *    is the robust variant in every stats package).
+/** SURVEY.md §2.65 (round-24 batch 7) — event-time disorder:
   *
   *  - [[outOfOrderAudit]]: event-time disorder per event type —
   *    adjacent pairs in ARRIVAL order (event_id) whose timestamps
@@ -25,106 +17,12 @@ import graft.util.Tables._
   *    reads zero disorder, which is itself the audit's finding —
   *    the planted spec injects disorder to prove the detector.
   *
-  * Scale shape: per-group medians via the 2·cum ≥ n picked-median
-  * discipline over the (group, cents) VALUE-COUNT relation (the
-  * runs-test shape — the window sorts distinct values, never the
-  * fact table), broadcast back (5 rows); then ONE
-  * conditional-aggregation pass with fixed-order group columns (the
-  * agg_anova_f discipline).
+  * Scale shape: one lag window partitioned by event type, one
+  * per-type aggregate.
   *
-  * Determinism: prices become exact cents, medians and deviations
-  * are exact BIGINTs; Σz per group stays in BIGINT (≤ 2^53, cast to
-  * double exactly on both engines) while Σz² goes through
-  * DECIMAL(38,0) (§1.5 rule 9) with the VARCHAR oracle route; W
-  * assembles once in fixed left-to-right text, nullif guards the
-  * degenerate, verdict after the 6-dp floor.
+  * Determinism: all outputs exact integers except the floor-6 rate.
   */
 object Composite49 {
-
-  private val LvGroups = Seq(
-    "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-
-  private val lvAggs = LvGroups.zipWithIndex.flatMap { case (p, i) =>
-    Seq(
-      Composite3.StatAgg(s"n$i",
-        s"CAST(sum(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS DOUBLE)",
-        s"CAST(sum(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS DOUBLE)"),
-      Composite3.StatAgg(s"a$i",
-        s"CAST(sum(CASE WHEN o_orderpriority = '$p' THEN z END) AS DOUBLE)",
-        s"CAST(sum(CASE WHEN o_orderpriority = '$p' THEN z END) AS DOUBLE)"),
-      Composite3.sumAgg(
-        s"CASE WHEN o_orderpriority = '$p' THEN CAST(z*z AS DECIMAL(38,0)) END",
-        s"b$i"))
-  }
-
-  private val lvN = (0 until 5).map(i => s"n$i").mkString(" + ")
-  private val lvS1 = (0 until 5).map(i => s"a$i").mkString(" + ")
-  private val lvSsw = (0 until 5).map(i => s"(b$i - (a$i/n$i)*a$i)")
-    .mkString(" + ")
-  private val lvSsb = s"(${(0 until 5).map(i => s"(a$i/n$i)*a$i").mkString(" + ")})" +
-    s" - (($lvS1)/($lvN))*($lvS1)"
-  private val lvW =
-    s"floor(((($lvSsb)/4) / nullif(($lvSsw)/(($lvN) - 5), 0))*1e6 + 0.5)/1e6"
-
-  private val lvOut = Seq(
-    s"CAST($lvN AS BIGINT) AS n",
-    s"$lvW AS w_stat",
-    s"($lvW > 2.3719) AS reject_equal_variance_5pct")
-
-  private[graft] def leveneOn(orders: DataFrame): DataFrame = {
-    val o = orders.select(col("o_orderpriority"),
-      (money(col("o_totalprice")) * 100).cast("bigint").as("c"))
-    val cnts = o.groupBy(col("o_orderpriority"), col("c"))
-      .agg(count(lit(1)).as("cnt"))
-    val wc = Window.partitionBy(col("o_orderpriority")).orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val med = cnts
-      .select(col("o_orderpriority"), col("c"),
-        sum(col("cnt")).over(wc).as("cum"))
-      .join(broadcast(cnts.groupBy(col("o_orderpriority"))
-        .agg(sum(col("cnt")).as("ng"))), "o_orderpriority")
-      .groupBy(col("o_orderpriority"))
-      .agg(min(when(col("cum") * 2 >= col("ng"), col("c"))).as("med"))
-    o.join(broadcast(med), "o_orderpriority")
-      .select(col("o_orderpriority"), abs(col("c") - col("med")).as("z"))
-      .agg(expr(lvAggs.head.spark).as(lvAggs.head.alias),
-        lvAggs.tail.map(a => expr(a.spark).as(a.alias)): _*)
-      .selectExpr(lvOut: _*)
-  }
-
-  private def levene(s: SparkSession, dir: String): DataFrame =
-    leveneOn(load(s, dir, "orders"))
-
-  private def leveneOracle: String =
-    s"""WITH o AS (
-       |  SELECT o_orderpriority,
-       |    CAST(CAST(o_totalprice AS DECIMAL(15,2))*100 AS BIGINT) AS c
-       |  FROM orders),
-       |cnts AS (
-       |  SELECT o_orderpriority, c, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM o GROUP BY 1, 2),
-       |cum AS (
-       |  SELECT o_orderpriority, c,
-       |    CAST(sum(cnt) OVER (PARTITION BY o_orderpriority ORDER BY c
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum,
-       |    CAST(sum(cnt) OVER (PARTITION BY o_orderpriority) AS BIGINT)
-       |      AS ng
-       |  FROM cnts),
-       |med AS (
-       |  SELECT o_orderpriority,
-       |    CAST(min(CASE WHEN cum * 2 >= ng THEN c END) AS BIGINT) AS med
-       |  FROM cum GROUP BY 1),
-       |zs AS (
-       |  SELECT o.o_orderpriority, abs(c - med) AS z
-       |  FROM o JOIN med USING (o_orderpriority)),
-       |g AS (
-       |  SELECT
-       |    ${lvAggs.map(a => s"${a.oracle} AS ${a.alias}").mkString(",\n    ")}
-       |  FROM zs)
-       |SELECT
-       |  ${lvOut.mkString(",\n  ")}
-       |FROM g""".stripMargin
 
   // ---- dq_out_of_order_audit -------------------------------------------
   // One lag window over (type, event_id) on the epoch-µs projection;
@@ -175,12 +73,10 @@ object Composite49 {
       |FROM g ORDER BY event_type""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_levene_test" -> (levene _),
     "dq_out_of_order_audit" -> (outOfOrderAudit _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_levene_test" -> leveneOracle,
     "dq_out_of_order_audit" -> outOfOrderAuditOracle
   )
 }

@@ -6,130 +6,23 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.21 — round-10 statistical-testing and time-series
-  * operators: a chi-square independence audit (segment ×
-  * order-priority), the Welch two-sample t-test, the Pareto revenue
-  * decile table, order-2 behavior motifs, and truncated-kernel EWMA
+/** SURVEY.md §2.21 — round-10 distribution and time-series
+  * operators: the Pareto revenue decile table (and its distributed
+  * ntile twin), order-2 behavior motifs, and truncated-kernel EWMA
   * smoothing.
   *
-  * Scale shapes: every operator is one or two map-side-combining
-  * aggregates over the fact plus windows on aggregate-sized (cells /
-  * deciles / per-entity series) data; dimensions broadcast. The one
-  * global window (Pareto ntile over the customer aggregate) runs on
-  * a |customers|-sized table, never the fact — same class as the
-  * declared topk_global single-partition sort.
+  * Scale shapes: every operator is one map-side-combining aggregate
+  * over the fact plus windows on aggregate-sized (deciles / per-entity
+  * series) data; dimensions broadcast. The decile ntile runs over the
+  * |customers|-sized aggregate through the distributed
+  * [[graft.util.DistRank.globalNtile]], never the fact.
   *
-  * Float determinism: chi-square contributions and t-test moments
-  * derive from EXACT integer/decimal aggregates; the only double
-  * arithmetic is a fixed shared-text expression tree over those
-  * exact inputs (deterministic IEEE ops in both engines), rounded at
-  * 6 dp. Decimal→double conversions above 2^53 scaled route through
-  * VARCHAR (§1.5 rule 7).
+  * Float determinism: decile shares divide an EXACT decimal window
+  * total; EWMA weights are pinned double literals over exact daily
+  * decimal revenue, rounded by the floor-6 form both engines compute
+  * identically.
   */
 object Composite7 {
-
-  // ---- agg_chi_square ----------------------------------------------
-  // Chi-square independence cells for market segment × order
-  // priority. The textbook (n−e)²/e is algebraically lifted to
-  // exact integers first: with g the grand total, r/c the margins,
-  // contrib = (n·g − r·c)² / (g·r·c) — every input an exact BIGINT,
-  // so the double expression tree is bit-deterministic in both
-  // engines (products of exact ints are correctly rounded once,
-  // same associativity, shared text). Margins are free windows over
-  // the |segments|×|priorities| aggregate. No chi² total row: a
-  // cross-engine double sum over the cells would be
-  // accumulation-order-dependent; the per-cell surface is exact.
-  private val contribTerm =
-    "round((CAST(n AS DOUBLE) * CAST(g AS DOUBLE) - " +
-      "CAST(r AS DOUBLE) * CAST(c AS DOUBLE)) * " +
-      "(CAST(n AS DOUBLE) * CAST(g AS DOUBLE) - " +
-      "CAST(r AS DOUBLE) * CAST(c AS DOUBLE)) / " +
-      "(CAST(g AS DOUBLE) * CAST(r AS DOUBLE) * CAST(c AS DOUBLE)), 6)"
-
-  private def chiSquare(s: SparkSession, dir: String): DataFrame = {
-    val cells = load(s, dir, "orders")
-      .join(broadcast(load(s, dir, "customer")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"),
-        col("o_orderpriority").as("priority"))
-      .agg(count(lit(1)).as("n"))
-    cells
-      .withColumn("r", sum(col("n")).over(Window.partitionBy("segment")))
-      .withColumn("c", sum(col("n")).over(Window.partitionBy("priority")))
-      .withColumn("g", sum(col("n")).over(Window.partitionBy()))
-      .select(col("segment"), col("priority"), col("n"),
-        round(col("r").cast("double") * col("c").cast("double") /
-          col("g").cast("double"), 6).as("n_exp"),
-        expr(contribTerm).as("contrib"))
-      .orderBy("segment", "priority")
-  }
-
-  private val chiSquareOracle =
-    s"""WITH cells AS (
-       |  SELECT c_mktsegment AS segment, o_orderpriority AS priority,
-       |    CAST(count(*) AS BIGINT) AS n
-       |  FROM orders JOIN customer ON o_custkey = c_custkey
-       |  GROUP BY segment, priority),
-       |m AS (
-       |  SELECT segment, priority, n,
-       |    sum(n) OVER (PARTITION BY segment) AS r,
-       |    sum(n) OVER (PARTITION BY priority) AS c,
-       |    sum(n) OVER () AS g
-       |  FROM cells)
-       |SELECT segment, priority, n,
-       |  round(CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(g AS DOUBLE), 6)
-       |    AS n_exp,
-       |  $contribTerm AS contrib
-       |FROM m ORDER BY segment, priority""".stripMargin
-
-  // ---- agg_welch_t -------------------------------------------------
-  // Welch two-sample t-test of AUTOMOBILE vs HOUSEHOLD customer
-  // account balances — unequal variances, the safe default. ONE
-  // scan: both groups' (n, Σx, Σx²) accumulate as conditional EXACT
-  // decimal sums; the t statistic and Welch–Satterthwaite df are a
-  // fixed double expression over those exact moments. Σx² exceeds
-  // 2^53 scaled at bench SF, so decimal→double routes through
-  // VARCHAR on both sides (§1.5 rule 7).
-  private def welchMoments(castD: String => String): Seq[String] = {
-    def m(seg: String, out: String) = Seq(
-      s"CAST(sum(CASE WHEN c_mktsegment = '$seg' THEN 1 ELSE 0 END) AS BIGINT) AS n$out",
-      castD(s"sum(CASE WHEN c_mktsegment = '$seg' THEN CAST(c_acctbal AS DECIMAL(18,2)) END)") + s" AS sx$out",
-      castD(s"sum(CASE WHEN c_mktsegment = '$seg' THEN CAST(c_acctbal AS DECIMAL(18,2)) * CAST(c_acctbal AS DECIMAL(18,2)) END)") + s" AS sxx$out")
-    m("AUTOMOBILE", "1") ++ m("HOUSEHOLD", "2")
-  }
-
-  // variance via the moment identity (Σx² − (Σx)²/n)/(n−1); the
-  // shared text keeps both engines on one expression tree.
-  private val welchFinal =
-    """SELECT n1, n2,
-      |  round(sx1 / CAST(n1 AS DOUBLE), 6) AS mean1,
-      |  round(sx2 / CAST(n2 AS DOUBLE), 6) AS mean2,
-      |  round((sx1 / CAST(n1 AS DOUBLE) - sx2 / CAST(n2 AS DOUBLE)) /
-      |    sqrt(((sxx1 - sx1 * sx1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE) +
-      |         ((sxx2 - sx2 * sx2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE)), 6) AS t_stat,
-      |  round(
-      |    (((sxx1 - sx1 * sx1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE) +
-      |     ((sxx2 - sx2 * sx2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE)) *
-      |    (((sxx1 - sx1 * sx1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE) +
-      |     ((sxx2 - sx2 * sx2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE)) /
-      |    ((((sxx1 - sx1 * sx1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE)) *
-      |     (((sxx1 - sx1 * sx1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0) +
-      |     (((sxx2 - sx2 * sx2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE)) *
-      |     (((sxx2 - sx2 * sx2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)), 6) AS welch_df
-      |FROM moments""".stripMargin
-
-  private def welchT(s: SparkSession, dir: String): DataFrame = {
-    load(s, dir, "customer").createOrReplaceTempView("customer")
-    val momentsSql = welchMoments(
-      e => s"CAST(CAST($e AS STRING) AS DOUBLE)").mkString(", ")
-    s.sql(s"WITH moments AS (SELECT $momentsSql FROM customer)\n$welchFinal")
-  }
-
-  private val welchOracle = {
-    val momentsSql = welchMoments(
-      e => s"CAST(CAST($e AS VARCHAR) AS DOUBLE)").mkString(", ")
-    s"WITH moments AS (SELECT $momentsSql FROM customer)\n$welchFinal"
-  }
 
   // ---- agg_pareto_deciles ------------------------------------------
   // The 80/20 table: customers ranked into revenue deciles (ntile
@@ -295,8 +188,6 @@ object Composite7 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_chi_square" -> (chiSquare _),
-    "agg_welch_t" -> (welchT _),
     "agg_pareto_deciles" -> (paretoDeciles _),
     "agg_ntile_distributed" -> (ntileDistributed _),
     "evt_top_sequences" -> (topSequences _),
@@ -304,8 +195,6 @@ object Composite7 {
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_chi_square" -> chiSquareOracle,
-    "agg_welch_t" -> welchOracle,
     "agg_pareto_deciles" -> paretoOracle,
     // The distributed twin must match the SAME ntile answer — one
     // oracle text, two physical plans under driver hash-compare.

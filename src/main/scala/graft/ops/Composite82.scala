@@ -1,36 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.90 (round-18 batch 2) — ordered-alternative and
-  * weighted block-design rank tests, plus the first-two-digit
-  * Benford screen:
+/** SURVEY.md §2.90 (round-18 batch 2) — the first-two-digit Benford
+  * screen:
   *
-  *  - `agg_page_trend_test`: Page's L over the monthly-block ×
-  *    order-priority design — the ORDERED alternative beside
-  *    `agg_friedman_test`'s omnibus (Friedman asks "any difference
-  *    between priorities?"; Page asks "does revenue rank rise
-  *    MONOTONICALLY with the priority order?" and is far more
-  *    powerful when the ordering is the hypothesis). Reuses the
-  *    identical doubled-rank-sum moments pass
-  *    ([[Composite52.frMomentsOn]]) and ONE shared oracle CTE text —
-  *    the three block-design rows cannot grade drifted rank sums.
-  *  - `agg_quade_test`: Quade's weighted Friedman — blocks weighted
-  *    by their revenue RANGE rank, so months with large spreads
-  *    dominate (Friedman weights every block equally; Quade is the
-  *    standard more-powerful alternative at small k). Numerators
-  *    stay exact integers end-to-end: doubled within-block midranks
-  *    and doubled range ranks make every S_ij a quarter-integer
-  *    whose 16·S products are exact BIGINT/DECIMAL, and
-  *    F = (n−1)·B_num / (n·A_num − B_num) is ONE double division of
-  *    exact integers. df2 = (n−1)(k−1) varies with the data, so no
-  *    pinned critical value exists — the row surfaces (F, df1, df2)
-  *    and the A = B degenerate (perfect concordance) NULLs via
-  *    nullif on both engines.
   *  - `dq_benford_first_two`: Nigrini's first-two-digit test (the
   *    90-bin screen run between `agg_benford`'s 9 bins and
   *    `dq_benford_second_digit`'s marginal): digits 10–99 from
@@ -39,142 +15,10 @@ import graft.util.Tables._
   *    discipline, totals < 10 excluded (documented no-op guard on
   *    this corpus).
   *
-  * Scale shapes: everything runs over the (month × priority) cell
-  * aggregate — the time-horizon-bounded axis of the Friedman family
-  * (win_mann_kendall justification); the only global windows are
-  * over the ≤│months│-row blocks table and the 90-row digit
-  * relation. Benford is one hash aggregate over a projection.
+  * Scale shape: one hash aggregate over a projection; the only global
+  * window is over the 90-row digit relation.
   */
 object Composite82 {
-
-  private val QK = 5 // order-priority treatment count (FrGroups)
-
-  // ---- agg_page_trend_test -----------------------------------------
-  // L = Σ_j j·R_j with treatments in priority order; doubled rank
-  // sums r0..r4 make L2 = Σ j·r_j exact BIGINT and L = L2/2 an exact
-  // half. Large-sample z = (L − n·k(k+1)²/4)/sqrt(n·k²(k−1)(k+1)²/144)
-  // — for k = 5: (L − 45n)/(5√n). Midranks for ties make the
-  // variance the standard approximation (documented; exact inputs
-  // either way). One-sided by construction: both directional 5%
-  // flags surface against the pinned 1.644854.
-  private val pageZ =
-    """((CAST(l2 AS DOUBLE)/2.0E0 - 45.0E0*CAST(n AS DOUBLE))
-      |  / nullif(5.0E0*sqrt(CAST(n AS DOUBLE)), 0))""".stripMargin
-  private val pageSelect = Seq("n AS n_blocks",
-    s"CAST($QK AS BIGINT) AS k",
-    "CAST(l2 AS DOUBLE)/2.0E0 AS page_l",
-    s"floor(($pageZ)*1e6 + 0.5)/1e6 AS z_stat",
-    s"($pageZ > 1.644854E0) AS increasing_trend_5pct",
-    s"($pageZ < -1.644854E0) AS decreasing_trend_5pct")
-  private val pageL2 = "1*r0 + 2*r1 + 3*r2 + 4*r3 + 5*r4"
-
-  private[graft] def pageTrendOn(orders: DataFrame): DataFrame =
-    Composite52.frMomentsOn(orders)
-      .selectExpr("n", s"CAST($pageL2 AS BIGINT) AS l2")
-      .selectExpr(pageSelect: _*)
-
-  private def pageTrend(s: SparkSession, dir: String): DataFrame =
-    pageTrendOn(load(s, dir, "orders"))
-
-  private val pageOracle =
-    s"""${Composite52.friedmanOracleCore}SELECT ${pageSelect.mkString(",\n  ")}
-       |FROM (SELECT n, CAST($pageL2 AS BIGINT) AS l2 FROM g) t""".stripMargin
-
-  // ---- agg_quade_test ----------------------------------------------
-  // Doubled units throughout: r2 = doubled within-block midrank
-  // (center (k+1)/2 doubles to k+1 = 6), q2 = doubled range rank, so
-  // snum = q2·(r2 − 6) = 4·S_ij exactly. A = Σ S², B = (1/n)Σ_j S_j²
-  // ⇒ F = (n−1)B/(A−B) = (n−1)·B_num/(n·A_num − B_num) with
-  // A_num = Σ snum², B_num = Σ_j (Σ_i snum)² — all exact (products
-  // in DECIMAL per the kwHc rule), ONE double division.
-  private val quadeF =
-    """((CAST(n AS DOUBLE) - 1.0E0)*CAST(bn AS DOUBLE)
-      |  / nullif(CAST(an*n - bn AS DOUBLE), 0))""".stripMargin
-  private val quadeSelect = Seq("n AS n_blocks",
-    s"CAST($QK AS BIGINT) AS k",
-    s"floor(($quadeF)*1e6 + 0.5)/1e6 AS f_stat",
-    s"CAST(${QK - 1} AS BIGINT) AS df1",
-    s"CAST((n - 1)*${QK - 1} AS BIGINT) AS df2")
-
-  private[graft] def quadeOn(orders: DataFrame): DataFrame = {
-    val cell = orders
-      .select((year(col("o_orderdate").cast("date")) * 100 +
-          month(col("o_orderdate").cast("date"))).as("b"),
-        col("o_orderpriority").as("g"),
-        (money(col("o_totalprice")) * 100).cast("bigint").as("v"))
-      .groupBy(col("b"), col("g")).agg(sum(col("v")).as("s"))
-      .localCheckpoint(false) // feeds the rank pass AND the range pass
-    val ranked = cell
-      .withColumn("kk", count(lit(1)).over(Window.partitionBy(col("b"))))
-      .filter(col("kk") === QK)
-      .withColumn("rk", rank().over(
-        Window.partitionBy(col("b")).orderBy(col("s"))).cast("long"))
-      .withColumn("t", count(lit(1)).over(
-        Window.partitionBy(col("b"), col("s"))))
-      .select(col("b"), col("g"),
-        (lit(2L) * (col("rk") - 1L) + col("t") + 1L).as("r2"))
-    // Blocks = months: a TIME-HORIZON-bounded axis (the
-    // win_mann_kendall justification), so the range-rank windows over
-    // the ≤|months|-row table are bounded, never entity-sized.
-    val rng = cell
-      .withColumn("kk", count(lit(1)).over(Window.partitionBy(col("b"))))
-      .filter(col("kk") === QK)
-      .groupBy(col("b")).agg((max(col("s")) - min(col("s"))).as("d"))
-    val q = rng
-      .withColumn("qrk", rank().over(Window.orderBy(col("d"))).cast("long"))
-      .withColumn("qt", count(lit(1)).over(Window.partitionBy(col("d"))))
-      .select(col("b"),
-        (lit(2L) * (col("qrk") - 1L) + col("qt") + 1L).as("q2"))
-    val sn = ranked.join(q, "b")
-      .select(col("g"), (col("q2") * (col("r2") - lit(QK.toLong + 1L))).as("snum"))
-      .localCheckpoint(false) // feeds both moment aggregates
-    val a1 = sn.agg(
-      sum(expr("CAST(snum AS DECIMAL(38,0)) * snum")).as("an"),
-      (count(lit(1)) / QK).cast("long").as("n"))
-    val b1 = sn.groupBy(col("g"))
-      .agg(sum(col("snum")).cast("bigint").as("sjn"))
-      .agg(sum(expr("CAST(sjn AS DECIMAL(38,0)) * sjn")).as("bn"))
-    a1.crossJoin(b1).selectExpr(quadeSelect: _*)
-  }
-
-  private def quadeTest(s: SparkSession, dir: String): DataFrame =
-    quadeOn(load(s, dir, "orders"))
-
-  private val quadeOracle =
-    s"""WITH cell AS (
-       |  SELECT year(CAST(o_orderdate AS DATE))*100
-       |      + month(CAST(o_orderdate AS DATE)) AS b,
-       |    o_orderpriority AS g,
-       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(15,2))*100 AS BIGINT))
-       |      AS BIGINT) AS s
-       |  FROM orders GROUP BY 1, 2),
-       |full_b AS (
-       |  SELECT b, g, s,
-       |    CAST(count(*) OVER (PARTITION BY b) AS BIGINT) AS kk,
-       |    CAST(rank() OVER (PARTITION BY b ORDER BY s) AS BIGINT) AS rk,
-       |    CAST(count(*) OVER (PARTITION BY b, s) AS BIGINT) AS t
-       |  FROM cell),
-       |ranked AS (
-       |  SELECT b, g, 2*(rk - 1) + t + 1 AS r2
-       |  FROM full_b WHERE kk = $QK),
-       |rng AS (
-       |  SELECT b, max(s) - min(s) AS d
-       |  FROM full_b WHERE kk = $QK GROUP BY b),
-       |q AS (
-       |  SELECT b, 2*(CAST(rank() OVER (ORDER BY d) AS BIGINT) - 1)
-       |    + CAST(count(*) OVER (PARTITION BY d) AS BIGINT) + 1 AS q2
-       |  FROM rng),
-       |sn AS (
-       |  SELECT r.g, q.q2*(r.r2 - ${QK + 1}) AS snum
-       |  FROM ranked r JOIN q ON r.b = q.b),
-       |a1 AS (
-       |  SELECT sum(CAST(snum AS DECIMAL(38,0))*snum) AS an,
-       |    CAST(count(*)/$QK AS BIGINT) AS n
-       |  FROM sn),
-       |perg AS (SELECT g, CAST(sum(snum) AS BIGINT) AS sjn FROM sn GROUP BY g),
-       |b1 AS (SELECT sum(CAST(sjn AS DECIMAL(38,0))*sjn) AS bn FROM perg)
-       |SELECT ${quadeSelect.mkString(",\n  ")}
-       |FROM a1 CROSS JOIN b1""".stripMargin
 
   // ---- dq_benford_first_two ------------------------------------------
   private val LN10 = "2.302585092994046"
@@ -204,14 +48,10 @@ object Composite82 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_page_trend_test" -> (pageTrend _),
-    "agg_quade_test" -> (quadeTest _),
     "dq_benford_first_two" -> (benford12 _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_page_trend_test" -> pageOracle,
-    "agg_quade_test" -> quadeOracle,
     "dq_benford_first_two" -> b12Body("VARCHAR")
   )
 }

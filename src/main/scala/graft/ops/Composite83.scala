@@ -6,29 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.90 (round-18 batch 3) — robust dispersion, histogram
-  * overlap, and nonparametric change-point detection:
+/** SURVEY.md §2.90 (round-18 batch 3) — nonparametric change-point
+  * detection:
   *
-  *  - `agg_gini_mean_diff`: the Gini mean difference E|X−X'| of the
-  *    pooled acctbal slice — the robust dispersion companion of
-  *    `agg_trimmed_winsorized_mean` (GMD is more efficient than the
-  *    standard deviation under heavy tails, and is the absolute
-  *    version of the Gini machinery without a positivity
-  *    requirement). Never the O(n²) pair materialization: on the
-  *    (cents, count) grid, Σ_{i<j}(x_j − x_i) = Σ_k x_k·t_k·
-  *    (2·below_k + t_k − n) with `below` from ONE
-  *    [[graft.util.DistRank.globalPrefixSum]] pass — exact
-  *    DECIMAL(38,0) until the single double division.
-  *  - `agg_bhattacharyya_overlap`: Bhattacharyya coefficient,
-  *    Hellinger distance, and the overlap coefficient between the two
-  *    slices' 16-bin equal-width histograms — the DISTRIBUTION-SHAPE
-  *    overlap summary beside the EDF verdict family (KS & co. say
-  *    whether the distributions differ; BC/OVL say how much mass
-  *    they share). Integer binning ((xc − mn)·16 div (mx − mn + 1) —
-  *    exact on both engines), per-bin shares are exact rationals,
-  *    √(p·q) is an identical-input libm call, the 16-term sums are
-  *    6-dp-rounded (survival-KM class); Hellinger clamps 1 − BC at 0
-  *    before the sqrt so fp residue cannot produce NaN.
   *  - `evt_pettitt_changepoint`: Pettitt's nonparametric change-point
   *    test per event type over the daily count series — WHERE the
   *    level shifted, beside `evt_cusum_drift`'s monitoring view and
@@ -43,119 +23,6 @@ import graft.util.Tables._
   *    p = min(1, 2·exp(−6K²/(T³+T²))) via identical-input exp.
   */
 object Composite83 {
-
-  // ---- agg_gini_mean_diff --------------------------------------------
-  private val gmdExpr =
-    """(2.0E0*CAST(d2 AS DOUBLE)
-      |  / nullif(CAST(n AS DOUBLE)*(CAST(n AS DOUBLE) - 1.0E0)*100.0E0, 0))""".stripMargin
-  private val gmdSelect = Seq("n",
-    s"floor(($gmdExpr)*1e6 + 0.5)/1e6 AS gini_mean_diff")
-
-  /** Generic GMD core over a value column; value converted to exact
-    * cents (the wassersteinOn rule). */
-  private[graft] def gmdOn(df: DataFrame, valueCol: org.apache.spark.sql.Column): DataFrame = {
-    val v = df.select((money(valueCol) * 100).cast("bigint").as("xc"))
-      .groupBy("xc").agg(count(lit(1)).as("t"))
-    val tot = v.agg(sum(col("t")).cast("bigint").as("n"))
-    val d = graft.util.DistRank
-      .globalPrefixSum(v, "below", col("xc"), col("t"))
-      .crossJoin(broadcast(tot))
-      .select(expr(
-        "CAST(xc AS DECIMAL(38,0)) * t * (2*below + t - n)").as("term"))
-      .agg(sum(col("term")).as("d2"))
-    d.crossJoin(broadcast(tot)).selectExpr(gmdSelect: _*)
-  }
-
-  private def gmd(s: SparkSession, dir: String): DataFrame =
-    gmdOn(Composite8.pooled(s, dir), col("x"))
-
-  private val gmdOracle =
-    s"""WITH pooled AS (
-       |  SELECT c_acctbal AS x
-       |  FROM customer
-       |  WHERE c_mktsegment IN ('AUTOMOBILE', 'HOUSEHOLD')),
-       |v AS (
-       |  SELECT CAST(CAST(x AS DECIMAL(15,2))*100 AS BIGINT) AS xc,
-       |    CAST(count(*) AS BIGINT) AS t
-       |  FROM pooled GROUP BY 1),
-       |tot AS (SELECT CAST(sum(t) AS BIGINT) AS n FROM v),
-       |p AS (
-       |  SELECT xc, t,
-       |    CAST(sum(t) OVER (ORDER BY xc ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - t AS below
-       |  FROM v),
-       |m AS (
-       |  SELECT sum(CAST(xc AS DECIMAL(38,0)) * t
-       |    * (2*below + t - (SELECT n FROM tot))) AS d2
-       |  FROM p)
-       |SELECT ${gmdSelect.mkString(",\n  ")}
-       |FROM m CROSS JOIN tot""".stripMargin
-
-  // ---- agg_bhattacharyya_overlap --------------------------------------
-  private val BhBins = 16L
-
-  private val bhSelect = Seq("n1", "n2",
-    s"CAST($BhBins AS BIGINT) AS n_bins",
-    "round(bc, 6) AS bhattacharyya",
-    "round(sqrt(greatest(0.0E0, 1.0E0 - bc)), 6) AS hellinger",
-    "round(ov, 6) AS overlap_coef")
-
-  /** Generic histogram-overlap core over (value, group-1 indicator);
-    * value converted to exact cents. */
-  private[graft] def bhattacharyyaOn(df: DataFrame, valueCol: org.apache.spark.sql.Column,
-      isGroup1: org.apache.spark.sql.Column): DataFrame = {
-    val base = df.select((money(valueCol) * 100).cast("bigint").as("xc"),
-        isGroup1.cast("int").as("i1"))
-    val mm = base.agg(min(col("xc")).as("mn"), max(col("xc")).as("mx"),
-      sum(col("i1")).cast("bigint").as("n1"),
-      sum(lit(1) - col("i1")).cast("bigint").as("n2"))
-    val bins = base.crossJoin(broadcast(mm))
-      .select(expr(s"(xc - mn)*$BhBins div (mx - mn + 1)").as("bin"),
-        col("i1"))
-      .groupBy(col("bin"))
-      .agg(sum(col("i1")).cast("bigint").as("c1"),
-        sum(lit(1) - col("i1")).cast("bigint").as("c2"))
-    val sums = bins.crossJoin(broadcast(mm))
-      .select(expr(
-        """sqrt((CAST(c1 AS DOUBLE)/nullif(CAST(n1 AS DOUBLE), 0))
-          |  * (CAST(c2 AS DOUBLE)/nullif(CAST(n2 AS DOUBLE), 0)))""".stripMargin)
-        .as("bct"),
-        expr(
-          """least(CAST(c1 AS DOUBLE)/nullif(CAST(n1 AS DOUBLE), 0),
-            |  CAST(c2 AS DOUBLE)/nullif(CAST(n2 AS DOUBLE), 0))""".stripMargin)
-          .as("ovt"))
-      .agg(sum(col("bct")).as("bc"), sum(col("ovt")).as("ov"))
-    sums.crossJoin(broadcast(mm)).selectExpr(bhSelect: _*)
-  }
-
-  private def bhattacharyya(s: SparkSession, dir: String): DataFrame =
-    bhattacharyyaOn(Composite8.pooled(s, dir), col("x"), col("i1") === 1)
-
-  private val bhOracle =
-    s"""WITH pooled AS (
-       |  SELECT c_acctbal AS x,
-       |    CAST(c_mktsegment = 'AUTOMOBILE' AS INT) AS i1
-       |  FROM customer
-       |  WHERE c_mktsegment IN ('AUTOMOBILE', 'HOUSEHOLD')),
-       |base AS (
-       |  SELECT CAST(CAST(x AS DECIMAL(15,2))*100 AS BIGINT) AS xc, i1
-       |  FROM pooled),
-       |mm AS (SELECT min(xc) AS mn, max(xc) AS mx,
-       |  CAST(sum(i1) AS BIGINT) AS n1,
-       |  CAST(sum(1 - i1) AS BIGINT) AS n2 FROM base),
-       |bins AS (
-       |  SELECT (xc - mn)*$BhBins // (mx - mn + 1) AS bin,
-       |    CAST(sum(i1) AS BIGINT) AS c1,
-       |    CAST(sum(1 - i1) AS BIGINT) AS c2
-       |  FROM base CROSS JOIN mm GROUP BY 1),
-       |s AS (
-       |  SELECT
-       |    sum(sqrt((CAST(c1 AS DOUBLE)/nullif(CAST(n1 AS DOUBLE), 0))
-       |      * (CAST(c2 AS DOUBLE)/nullif(CAST(n2 AS DOUBLE), 0)))) AS bc,
-       |    sum(least(CAST(c1 AS DOUBLE)/nullif(CAST(n1 AS DOUBLE), 0),
-       |      CAST(c2 AS DOUBLE)/nullif(CAST(n2 AS DOUBLE), 0))) AS ov
-       |  FROM bins CROSS JOIN mm)
-       |SELECT ${bhSelect.mkString(",\n  ")}
-       |FROM s CROSS JOIN mm""".stripMargin
 
   // ---- evt_pettitt_changepoint ----------------------------------------
   private val pettittP =
@@ -239,14 +106,10 @@ object Composite83 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_gini_mean_diff" -> (gmd _),
-    "agg_bhattacharyya_overlap" -> (bhattacharyya _),
     "evt_pettitt_changepoint" -> (pettitt _)
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_gini_mean_diff" -> gmdOracle,
-    "agg_bhattacharyya_overlap" -> bhOracle,
     "evt_pettitt_changepoint" -> pettittOracle
   )
 }

@@ -50,8 +50,8 @@ object Vocabulary {
     "sum(c) AS n, sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS s"
 
   /** Generic single-pass token-entropy core over (id, text) — the
-    * [[graft.Graft.tokenEntropy]] facade surface; same formula text
-    * as the declared query. */
+    * [[graft.Graft.tokenEntropy]] facade surface and the
+    * llm_token_entropy row, so the oracle checks the facade's code. */
   private[graft] def tokenEntropyOn(docs: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     docs.select(col(idCol).as("doc_id"),
@@ -65,16 +65,8 @@ object Vocabulary {
       .orderBy("doc_id")
   }
 
-  private val entropySql =
-    s"""WITH tf AS (
-       |  SELECT doc_id, word, count(*) AS c FROM (
-       |    SELECT doc_id, explode(split(text, ' ')) AS word FROM documents)
-       |  GROUP BY doc_id, word),
-       |e AS (SELECT doc_id, $entropySums FROM tf GROUP BY doc_id)
-       |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-       |  $entropyFormula AS entropy_bits
-       |FROM e
-       |ORDER BY doc_id""".stripMargin
+  private def tokenEntropy(s: SparkSession, dir: String): DataFrame =
+    tokenEntropyOn(load(s, dir, "documents"), "doc_id", "text")
 
   private val entropyOracle =
     s"""WITH tf AS (
@@ -692,7 +684,7 @@ object Vocabulary {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_token_entropy" -> (q(entropySql) _),
+    "llm_token_entropy" -> (tokenEntropy _),
     "llm_bpe_pair_freq" -> (q(bpeSql) _),
     "llm_vocab_coverage" -> (vocabCoverage _),
     "llm_vocab_coverage_curve" -> (vocabCoverageCurve _),

@@ -143,9 +143,19 @@ object Ann {
   def ivfTopK(emb: DataFrame, isQuery: Column, k: Int,
       nprobe: Int = 2, centEvery: Int = 97): DataFrame = {
     val centroids = ivfCentroids(emb, centEvery)
-    val cells = nearestCentroid(emb.select(col("vec_id"), col("embedding")),
+    ivfTopKIn(emb, ivfCells(emb, centroids), centroids, isQuery, k, nprobe)
+  }
+
+  /** The corpus-side cell assignment (vec_id, embedding, cell) of
+    * [[ivfTopK]]; a caller running several nprobe arms builds it once. */
+  def ivfCells(emb: DataFrame, centroids: DataFrame): DataFrame =
+    nearestCentroid(emb.select(col("vec_id"), col("embedding")),
         centroids, "embedding")
       .select(col("vec_id"), col("embedding"), col("cell"))
+
+  /** [[ivfTopK]] over a prebuilt [[ivfCells]] assignment. */
+  def ivfTopKIn(emb: DataFrame, cells: DataFrame, centroids: DataFrame,
+      isQuery: Column, k: Int, nprobe: Int): DataFrame = {
     val q = emb.filter(isQuery)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     // In-cell scan: the SMALL query-probe set broadcasts (bare query

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
-import Ann.{ivfOracleBase, ivfOracleCtes, ivfOracleProbe, ivfTopK}
-import Neighbors.{exactRankCtes, isPinned, isQuery, nearestCentroid, seedCentroids,
+import Ann.{ivfCells, ivfOracleBase, ivfOracleCtes, ivfOracleProbe, ivfTopK, ivfTopKIn}
+import Neighbors.{exactRankCtes, isPinned, isQuery, ivfCentroids, nearestCentroid, seedCentroids,
   simsearchKnn, simsearchKnnK, topK}
 
 /** Retrieval evaluation: every approximate path graded against the
@@ -49,18 +49,20 @@ object Evaluation {
   // The nprobe capacity-planning curve: mean recall@5 for nprobe in
   // {1, 2, 4} against the SAME exact ground truth (lazily
   // checkpointed — three arms read one materialization). Cell
-  // assignment is nprobe-independent, so at scale the three arms
-  // share one corpus pass conceptually; here each arm re-derives it
-  // (the oracle does too — symmetric cost). mean_recall is ONE
-  // double division of two exact integers — no cross-engine
+  // assignment is nprobe-independent, so it is built and
+  // checkpointed once in the row builder and the three arms probe
+  // it (the oracle's `asn` CTE is likewise shared). mean_recall is
+  // ONE double division of two exact integers — no cross-engine
   // summation-order hazard.
   private def nprobeSweep(s: SparkSession, dir: String): DataFrame = {
     val emb = load(s, dir, "embeddings")
     val exact = simsearchKnn(s, dir)
       .select(col("q_id"), col("vec_id"))
       .localCheckpoint(false)
+    val centroids = ivfCentroids(emb)
+    val cells = ivfCells(emb, centroids).localCheckpoint()
     Seq(1, 2, 4).map { np =>
-      val ap = ivfTopK(emb, isQuery, k = 5, nprobe = np)
+      val ap = ivfTopKIn(emb, cells, centroids, isQuery, k = 5, nprobe = np)
         .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
       exact.join(ap, Seq("q_id", "vec_id"), "left")
         .agg(count(lit(1)).as("n_pairs"),

@@ -652,7 +652,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           (i.toLong, "1996-03-05", a * 1000.0),
           (i.toLong, "1997-03-05", bb * 1000.0)) }
         .toDF("o_custkey", "o_orderdate", "o_totalprice")
-      val r = graft.ops.Composite62.mcnemarOn(orders).collect().head
+      val r = graft.ops.stats.Blocked.mcnemarOn(orders).collect().head
       val got = (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         if (r.isNullAt(4)) None else Some(r.getBoolean(4)))
@@ -722,7 +722,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val orders = rows.map { case (u, cents) =>
         (if (u) "1-URGENT" else "5-LOW", cents * 1000.0) }
         .toDF("o_orderpriority", "o_totalprice")
-      val r = graft.ops.Composite61.oddsRatioOn(orders).collect().head
+      val r = graft.ops.stats.Association.oddsRatioOn(orders).collect().head
       def od(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
       val got = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         od(4), od(5), od(6),
@@ -757,7 +757,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val orders = gs.zipWithIndex.flatMap { case (g, i) =>
         g.map(c => (prios(i), c / 100.0)) }
         .toDF("o_orderpriority", "o_totalprice")
-      val got = graft.ops.Composite60.tukeyOn(orders).collect().toSeq
+      val got = graft.ops.stats.KSample.tukeyOn(orders).collect().toSeq
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2),
           if (r.isNullAt(3)) None else Some(r.getDouble(3)),
           if (r.isNullAt(4)) None else Some(r.getBoolean(4))))
@@ -909,7 +909,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val orders = (as.map(("1-URGENT", _)) ++ bs.map(("5-LOW", _)))
         .map { case (p, c) => (p, c / 100.0) }
         .toDF("o_orderpriority", "o_totalprice")
-      val r = graft.ops.Composite58.cohensDOn(orders).collect().head
+      val r = graft.ops.stats.TwoSample.cohensDOn(orders).collect().head
       val got = (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
@@ -945,7 +945,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val orders = gs.zipWithIndex.flatMap { case (g, i) =>
         g.map(c => (prios(i), c / 100.0)) }
         .toDF("o_orderpriority", "o_totalprice")
-      val r = graft.ops.Composite58.bartlettOn(orders).collect().head
+      val r = graft.ops.stats.KSample.bartlettOn(orders).collect().head
       val got = (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
         if (r.isNullAt(3)) None else Some(r.getBoolean(3)))
@@ -972,7 +972,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           (i.toLong, "1996-03-05", a / 100.0),
           (i.toLong, "1997-03-05", b / 100.0)) }
         .toDF("o_custkey", "o_orderdate", "o_totalprice")
-      val r = graft.ops.Composite57.signTestOn(orders).collect().head
+      val r = graft.ops.stats.Blocked.signTestOn(orders).collect().head
       val got = (if (r.isNullAt(0)) None else Some(r.getLong(0)),
         if (r.isNullAt(1)) None else Some(r.getLong(1)),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
@@ -1009,7 +1009,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val expected = (med, n.toLong, chi, chi.map(_ > 9.487729))
       val orders = rows.map { case (g, c) => (prios(g), c / 100.0) }
         .toDF("o_orderpriority", "o_totalprice")
-      val r = graft.ops.Composite57.moodMedianOn(orders).collect().head
+      val r = graft.ops.stats.KSample.moodMedianOn(orders).collect().head
       val got = (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
         if (r.isNullAt(3)) None else Some(r.getBoolean(3)))
@@ -1112,7 +1112,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val orders = custs.zipWithIndex.flatMap { case (ps, i) =>
         ps.map(c => (i.toLong, c / 100.0)) }
         .toDF("o_custkey", "o_totalprice")
-      val r = graft.ops.Composite55.spearmanOn(orders).collect().head
+      val r = graft.ops.stats.Association.spearmanOn(orders).collect().head
       val got = (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getDouble(1)),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
@@ -1145,7 +1145,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         z.map(v => math.abs(floor6(v)) > 1.959964))
       val li = rows.map { case (q, d) => (q.toDouble, d / 100.0) }
         .toDF("l_quantity", "l_discount")
-      val r = graft.ops.Composite55.kendallOn(li).collect().head
+      val r = graft.ops.stats.Association.kendallOn(li).collect().head
       val got = (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getDouble(1)),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
@@ -1302,7 +1302,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           (i.toLong, "1996-03-05", a / 100.0),
           (i.toLong, "1997-03-05", b / 100.0)) }
         .toDF("o_custkey", "o_orderdate", "o_totalprice")
-      val r = graft.ops.Composite52.wilcoxonOn(orders).collect().head
+      val r = graft.ops.stats.Blocked.wilcoxonOn(orders).collect().head
       def od(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
       val got = (if (r.isNullAt(0)) None else Some(r.getLong(0)),
         od(1), od(2), od(3),
@@ -1337,7 +1337,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         val ym = f"${1995 + j / 12}-${j % 12 + 1}%02d-03"
         vs.zip(prios).map { case (v, p) => (0L, ym, p, v.toDouble) }
       }.toDF("o_custkey", "o_orderdate", "o_orderpriority", "o_totalprice")
-      val r = graft.ops.Composite52.friedmanOn(orders).collect().head
+      val r = graft.ops.stats.Blocked.friedmanOn(orders).collect().head
       val got = (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)),
         if (r.isNullAt(3)) None else Some(r.getBoolean(3)))
@@ -1382,7 +1382,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           else Some(floor6(math.sqrt(p2 / (math.min(rk, ck) - 1))))
         }
       }
-      val row = graft.ops.Composite63.cramersVOn(
+      val row = graft.ops.stats.Association.cramersVOn(
         pairs.toDF("c_mktsegment", "o_orderpriority")).collect().head
       val got = (row.getLong(0), row.getLong(1), row.getLong(2),
         row.getDouble(3),
@@ -1411,7 +1411,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         floor6(math.min(1.0, p)), floor6(math.min(1.0, p)) < 0.05)
       val flags = Seq.fill(a)((true, true)) ++ Seq.fill(b)((true, false)) ++
         Seq.fill(c)((false, true)) ++ Seq.fill(d)((false, false))
-      val got = graft.ops.Composite63.fisherExactOn(flags.toDF("grp", "hit"))
+      val got = graft.ops.stats.Association.fisherExactOn(flags.toDF("grp", "hit"))
         .as[(Long, Long, Long, Long, Double, Boolean)].collect().head
       got == expected
     }
@@ -1528,7 +1528,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         }
       val df = (rows :+ ((99L, "1992-01-01", 1.0)))  // out-of-window noise
         .toDF("o_custkey", "o_orderdate", "o_totalprice")
-      val r = graft.ops.Composite66.cochranQOn(df).collect().head
+      val r = graft.ops.stats.Blocked.cochranQOn(df).collect().head
       def ol(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
       val got = (r.getLong(0), ol(1), ol(2), ol(3),
         if (r.isNullAt(4)) None else Some(r.getDouble(4)),
@@ -1767,7 +1767,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val t1 = tc.map(t => t * (t - 1) * (2 * t + 5)).sum
       val t2 = tc.map(t => t * (t - 1) * (t - 2)).sum
       val t3 = tc.map(t => t * (t - 1)).sum
-      // identical formula structure to Composite73.jtZ (same op order
+      // identical formula structure to KSample.jtZ (same op order
       // on the JVM => bit-identical doubles)
       val e2 = (nn.toDouble * nn - ns.map(n => n.toDouble * n).reduce(_ + _)) / 2
       val var1 =
@@ -1779,7 +1779,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         ns.map(n => n.toDouble * (n - 1)).reduce(_ + _) *
           t3.toDouble / (8 * nn.toDouble * (nn - 1))
       val z = (jt2.toDouble - e2) / (2 * math.sqrt(var1))
-      val r = graft.ops.Composite73.jonckheereOn(groupsToOrders(gs))
+      val r = graft.ops.stats.KSample.jonckheereOn(groupsToOrders(gs))
         .collect().head
       r.getLong(0) == nn && r.getLong(1) == jt2 &&
         (if (var1 == 0) r.isNullAt(2)
@@ -1806,7 +1806,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         i <- gs.indices; j <- gs.indices if i < j
       } yield {
         val (na, r2a) = stats(i); val (nb, r2b) = stats(j)
-        // same op order as Composite73/69's dunnZ text
+        // same op order as KSample.dunnZ
         val z = (r2a.toDouble / (2 * na) - r2b.toDouble / (2 * nb)) /
           math.sqrt((nn.toDouble * (nn + 1) / 12
             - tt.toDouble / (12 * (nn - 1))) * (1.0 / na + 1.0 / nb))
@@ -1829,7 +1829,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val expect = zs.map { case (g1, g2, na, nb, z) =>
         val (hr, sig) = holm((g1, g2))
         (g1, g2, na, nb, floor6(z), hr, sig) }.sortBy(t => (t._1, t._2))
-      val got = graft.ops.Composite69.dunnOn(groupsToOrders(gs))
+      val got = graft.ops.stats.KSample.dunnOn(groupsToOrders(gs))
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
           r.getLong(3), r.getDouble(6), r.getInt(7), r.getBoolean(8))).toSeq
       got == expect
@@ -1990,7 +1990,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val msw = (qsum - qq.toDouble / 5) / (n * 4)
       val icc = if (msb + 4 * msw == 0) None
         else Some(floor6((msb - msw) / (msb + 4 * msw)))
-      val r = graft.ops.Composite75.cronbachIccOn(ev).collect().head
+      val r = graft.ops.stats.Blocked.cronbachIccOn(ev).collect().head
       r.getLong(0) == n &&
         (if (alpha.isEmpty) r.isNullAt(1)
          else math.abs(r.getDouble(1) - alpha.get) <= 1.000001e-6) &&
@@ -2041,7 +2041,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         else "large"
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite8
+      val r = graft.ops.stats.TwoSample
         .cliffsDeltaOn(df, col("x"), col("i1") === 1).collect().head
       r.getLong(0) == n1 && r.getLong(1) == n2 &&
         r.getDouble(2) == d2.toDouble / 2 &&
@@ -2099,7 +2099,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         u.toDouble / (n1.toDouble * n2.toDouble * 100.0) * 1e6 + 0.5) / 1e6
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite76
+      val r = graft.ops.stats.TwoSample
         .wassersteinOn(df, col("x"), col("i1") === 1).collect().head
       r.getLong(0) == n1 && r.getLong(1) == n2 &&
         math.abs(r.getDouble(2) - w1) <= 1.000001e-6
@@ -2119,7 +2119,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val wm = math.floor(
         (tsum.toDouble + k.toDouble * lo.toDouble + k.toDouble * hi.toDouble)
           / (n.toDouble * 100.0) * 1e6 + 0.5) / 1e6
-      val r = graft.ops.Composite76
+      val r = graft.ops.stats.TwoSample
         .trimmedWinsorizedOn(vs.map(_.toDouble).toDF("x"), col("x"))
         .collect().head
       r.getLong(0) == n && r.getLong(1) == k.toLong &&
@@ -2157,7 +2157,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         n1.toDouble
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite76
+      val r = graft.ops.stats.TwoSample
         .brunnerMunzelOn(df, col("x"), col("i1") === 1).collect().head
       r.getLong(0) == n1 && r.getLong(1) == n2 &&
         math.abs(r.getDouble(2) - math.floor(phat * 1e6 + 0.5) / 1e6) <= 1.000001e-6 &&
@@ -2225,7 +2225,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           (q(s1, k) - q(s2, k)).toDouble / 100) }.toList
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val got = graft.ops.Composite78
+      val got = graft.ops.stats.TwoSample
         .qqDecilesOn(df, col("x"), col("i1") === 1)
         .as[(Long, Double, Double, Double)].collect().toList
       got == want
@@ -2240,7 +2240,7 @@ object PropertiesSpec extends Properties("graft-laws") {
         math.floor((n.toDouble - 1.959964 * math.sqrt(n.toDouble)) / 2.0).toLong)
       val u = n + 1 - l
       val med = s(((n + 1) / 2 - 1).toInt) // first index with 2c >= n
-      val r = graft.ops.Composite78
+      val r = graft.ops.stats.TwoSample
         .medianCiOn(vs.map(_.toDouble).toDF("x"), col("x")).collect().head
       r.getLong(0) == n &&
         r.getDouble(1) == med.toDouble / 100 &&
@@ -2329,7 +2329,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val t6 = math.floor(t * 1e6 + 0.5) / 1e6
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite8
+      val r = graft.ops.stats.TwoSample
         .cvmTestOn(df, col("x"), col("i1") === 1).collect().head
       r.getLong(0) == n1 && r.getLong(1) == n2 &&
         math.abs(r.getDouble(2) - t6) <= 1.000001e-6 &&
@@ -2346,7 +2346,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       } yield math.abs(xs(i) - xs(j)).toDouble).sum / (n * (n - 1)).toDouble
       val b6 = math.floor(brute * 1e6 + 0.5) / 1e6
       val df = xs.map(_.toDouble).toDF("x")
-      val r = graft.ops.Composite83.gmdOn(df, col("x")).collect().head
+      val r = graft.ops.stats.TwoSample.gmdOn(df, col("x")).collect().head
       r.getLong(0) == n && math.abs(r.getDouble(1) - b6) <= 1.000001e-6
     }
 
@@ -2369,7 +2369,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val m = m4.toDouble / 4.0
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite85
+      val r = graft.ops.stats.TwoSample
         .moodScaleOn(df, col("x"), col("i1") === 1).collect().head
       val e = n1.toDouble * (nn.toDouble * nn - 1) / 12.0
       val va = n1.toDouble * n2 * (nn + 1.0) * (nn.toDouble * nn - 4) / 180.0
@@ -2406,7 +2406,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       val a26 = math.floor(a2 * 1e6 + 0.5) / 1e6
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite8
+      val r = graft.ops.stats.TwoSample
         .adTestOn(df, col("x"), col("i1") === 1).collect().head
       // sum order may differ between the fold and Spark's partial
       // aggregation — 1-ulp-class drift absorbed by the 6-dp floor,
@@ -2438,7 +2438,7 @@ object PropertiesSpec extends Properties("graft-laws") {
           ((n + 1).toDouble - tie.toDouble / (n.toDouble * (n - 1).toDouble)))
       val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
         .toDF("x", "i1")
-      val r = graft.ops.Composite8
+      val r = graft.ops.stats.TwoSample
         .mannWhitneyOn(df, col("x"), col("i1") === 1).collect().head
       r.getLong(0) == n1 && r.getLong(1) == n2 &&
         r.getDouble(2) == u1 &&

@@ -102,4 +102,32 @@ class RegistryPinSpec extends AnyFunSuite {
       graft.ops.retrieval.Retrieval.queries.keySet
     assertSame(families, SparkEntry.queries.keySet.filter(_.startsWith("llm_")))
   }
+
+  test("the stats family owns exactly its 42 rows") {
+    val statsIds = Set(
+      // TwoSample
+      "agg_welch_t", "agg_mann_whitney", "agg_ks_test", "agg_cliffs_delta",
+      "agg_cvm_test", "agg_anderson_darling", "agg_cohens_d",
+      "agg_wasserstein_distance", "agg_trimmed_winsorized_mean",
+      "agg_brunner_munzel", "agg_qq_deciles", "agg_median_ci",
+      "agg_gini_mean_diff", "agg_bhattacharyya_overlap",
+      "agg_mood_scale_test", "agg_logrank_test",
+      // KSample
+      "agg_anova_f", "agg_levene_test", "agg_kruskal_wallis",
+      "agg_mood_median_test", "agg_bartlett_test", "agg_tukey_hsd",
+      "agg_dunn_posthoc", "agg_jonckheere_terpstra",
+      // Blocked
+      "agg_wilcoxon_signed_rank", "agg_sign_test", "agg_mcnemar_test",
+      "agg_friedman_test", "agg_kendalls_w", "agg_cochran_q",
+      "agg_page_trend_test", "agg_quade_test", "agg_cronbach_icc",
+      // Association
+      "agg_chi_square", "agg_fisher_exact", "agg_odds_ratio",
+      "agg_mantel_haenszel", "agg_cramers_v", "agg_spearman_rho",
+      "agg_kendall_tau_b",
+      // Normality
+      "agg_jarque_bera", "agg_grubbs_test")
+    assert(statsIds.size == 42)
+    assertSame(graft.ops.stats.Stats.queries.keySet, statsIds)
+    assert(graft.ops.stats.Stats.oracle.keySet.subsetOf(statsIds))
+  }
 }

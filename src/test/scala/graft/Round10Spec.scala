@@ -11,7 +11,7 @@ class Round10Spec extends AnyFunSuite {
   import TestSpark._
 
   test("agg_chi_square: margins reconstruct and contributions are non-negative") {
-    val rows = graft.ops.Composite7.queries("agg_chi_square")(spark, sf).collect()
+    val rows = graft.ops.stats.Association.queries("agg_chi_square")(spark, sf).collect()
     assert(rows.nonEmpty)
     val n = rows.map(_.getLong(2)).sum
     val orders = graft.util.Tables.load(spark, sf, "orders").count()
@@ -25,7 +25,7 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("agg_welch_t: statistic agrees with a direct two-pass computation") {
-    val rows = graft.ops.Composite7.queries("agg_welch_t")(spark, sf).collect()
+    val rows = graft.ops.stats.TwoSample.queries("agg_welch_t")(spark, sf).collect()
     assert(rows.length == 1)
     val r = rows.head
     val cust = graft.util.Tables.load(spark, sf, "customer")

@@ -11,7 +11,7 @@ class Round11Spec extends AnyFunSuite {
   import TestSpark._
 
   test("agg_mann_whitney: U within [0, n1*n2] and consistent with rank-sum bounds") {
-    val r = graft.ops.Composite8.queries("agg_mann_whitney")(spark, sf)
+    val r = graft.ops.stats.TwoSample.queries("agg_mann_whitney")(spark, sf)
       .collect().head
     val (n1, n2, u) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     assert(n1 > 0 && n2 > 0)
@@ -21,7 +21,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("agg_ks_test: D in [0,1] and matches a driver-side two-sample computation") {
-    val r = graft.ops.Composite8.queries("agg_ks_test")(spark, sf).collect().head
+    val r = graft.ops.stats.TwoSample.queries("agg_ks_test")(spark, sf).collect().head
     val (n1, n2, d) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     assert(d >= 0.0 && d <= 1.0)
     val cust = graft.util.Tables.load(spark, sf, "customer")

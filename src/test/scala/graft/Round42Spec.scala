@@ -21,7 +21,7 @@ class Round42Spec extends AnyFunSuite {
       ("A", 1.0), ("A", 2.0), ("A", 3.0),
       ("B", 1.0), ("B", 1.0), ("B", 4.0)
     ).toDF("o_orderpriority", "o_totalprice")
-    val got = graft.ops.Composite45.jarqueBeraOn(orders)
+    val got = graft.ops.stats.Normality.jarqueBeraOn(orders)
       .as[(String, Long, Double, Double, Double, Boolean)].collect().toSeq
     assert(got == Seq(
       ("A", 3L, 0.0, -1.5, 0.28125, false),

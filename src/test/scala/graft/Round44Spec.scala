@@ -19,7 +19,7 @@ class Round44Spec extends AnyFunSuite {
       ("A", 1.0), ("A", 2.0), ("A", 3.0), ("A", 10.0),
       ("B", 5.0), ("B", 5.0)
     ).toDF("o_orderpriority", "o_totalprice")
-    val got = graft.ops.Composite47.grubbsOn(orders)
+    val got = graft.ops.stats.Normality.grubbsOn(orders)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3),
         if (r.isNullAt(4)) None else Some(r.getDouble(4)),

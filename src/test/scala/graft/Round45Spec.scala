@@ -18,7 +18,7 @@ class Round45Spec extends AnyFunSuite {
     // All five groups = {1,3}: SSB = 0, SSW = 10 -> F = 0.
     val same = Prios.flatMap(p => Seq((p, 1.0), (p, 3.0)))
       .toDF("o_orderpriority", "o_totalprice")
-    val g1 = graft.ops.Composite48.anovaFOn(same)
+    val g1 = graft.ops.stats.KSample.anovaFOn(same)
       .as[(Long, Double, Double, Double, Boolean)].collect().head
     assert(g1 == ((10L, 0.0, 10.0, 0.0, false)))
     // Four groups {1,3}, 5-LOW = {11,13}: SSB = 160, SSW = 10,
@@ -26,7 +26,7 @@ class Round45Spec extends AnyFunSuite {
     val shifted = (Prios.init.flatMap(p => Seq((p, 1.0), (p, 3.0))) ++
       Seq(("5-LOW", 11.0), ("5-LOW", 13.0)))
       .toDF("o_orderpriority", "o_totalprice")
-    val g2 = graft.ops.Composite48.anovaFOn(shifted)
+    val g2 = graft.ops.stats.KSample.anovaFOn(shifted)
       .as[(Long, Double, Double, Double, Boolean)].collect().head
     assert(g2 == ((10L, 160.0, 10.0, 20.0, true)))
   }

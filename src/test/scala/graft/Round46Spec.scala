@@ -31,7 +31,7 @@ class Round46Spec extends AnyFunSuite {
     // in {0, 200} for all groups -> SSB = 0 -> W = 0.
     val same = Prios.flatMap(p => Seq((p, 1.0), (p, 3.0)))
       .toDF("o_orderpriority", "o_totalprice")
-    val r1 = graft.ops.Composite49.leveneOn(same)
+    val r1 = graft.ops.stats.KSample.leveneOn(same)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2)))
       .head
     assert(r1 == ((10L, 0.0, false)))
@@ -42,7 +42,7 @@ class Round46Spec extends AnyFunSuite {
       .toDF("o_orderpriority", "o_totalprice")
     val expW = bruteW(Seq.fill(4)((2.0, 200.0, 40000.0)) :+
       ((2.0, 10000.0, 1.0e8)))
-    val r2 = graft.ops.Composite49.leveneOn(wide)
+    val r2 = graft.ops.stats.KSample.leveneOn(wide)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2)))
       .head
     assert(r2 == ((10L, expW, expW > 2.3719)))

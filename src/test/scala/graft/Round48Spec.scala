@@ -23,7 +23,7 @@ class Round48Spec extends AnyFunSuite {
     // chi2 = n·(k−1) = 10·4 = 40, V = sqrt(40/(10·4)) = 1.
     val pairs = Segs.zip(Pris).flatMap { case (s, p) => Seq((s, p), (s, p)) }
       .toDF("c_mktsegment", "o_orderpriority")
-    val got = graft.ops.Composite63.cramersVOn(pairs)
+    val got = graft.ops.stats.Association.cramersVOn(pairs)
       .as[(Long, Long, Long, Double, Double, Double)].collect().head
     assert(got._1 == 10L && got._2 == 5L && got._3 == 5L)
     assert(got._4 == 40.0 && got._5 == 1.0)
@@ -32,7 +32,7 @@ class Round48Spec extends AnyFunSuite {
   test("cramersVOn: a 1-column table NULLs V (degenerate dof), not a crash") {
     val pairs = Segs.map(s => (s, Pris.head))
       .toDF("c_mktsegment", "o_orderpriority")
-    val r = graft.ops.Composite63.cramersVOn(pairs).collect().head
+    val r = graft.ops.stats.Association.cramersVOn(pairs).collect().head
     assert(r.getLong(0) == 5L && r.getLong(2) == 1L)
     assert(r.getDouble(3) == 0.0) // chi2 of a 5×1 table is 0
     assert(r.isNullAt(4) && r.isNullAt(5))
@@ -47,7 +47,7 @@ class Round48Spec extends AnyFunSuite {
     val flags =
       Seq.fill(3)((true, true)) ++ Seq.fill(1)((true, false)) ++
       Seq.fill(1)((false, true)) ++ Seq.fill(3)((false, false))
-    val got = graft.ops.Composite63.fisherExactOn(flags.toDF("grp", "hit"))
+    val got = graft.ops.stats.Association.fisherExactOn(flags.toDF("grp", "hit"))
       .as[(Long, Long, Long, Long, Double, Boolean)].collect().head
     assert(got == ((3L, 1L, 1L, 3L, 0.485714, false)))
   }
@@ -56,7 +56,7 @@ class Round48Spec extends AnyFunSuite {
     // No negative-balance rows anywhere (c1 = 0): the support is the
     // single observed table, so p = 1 exactly.
     val flags = Seq.fill(4)((true, false)) ++ Seq.fill(6)((false, false))
-    val got = graft.ops.Composite63.fisherExactOn(flags.toDF("grp", "hit"))
+    val got = graft.ops.stats.Association.fisherExactOn(flags.toDF("grp", "hit"))
       .as[(Long, Long, Long, Long, Double, Boolean)].collect().head
     assert(got == ((0L, 4L, 0L, 6L, 1.0, false)))
   }

@@ -24,14 +24,14 @@ class Round49Spec extends AnyFunSuite {
       order(2, 1995, hi), order(2, 1996, lo), order(2, 1997, lo),
       order(3, 1995, hi), order(3, 1996, hi), order(3, 1997, lo))
       .toDF("o_custkey", "o_orderdate", "o_totalprice")
-    val r1 = graft.ops.Composite66.cochranQOn(t1)
+    val r1 = graft.ops.stats.Blocked.cochranQOn(t1)
       .as[(Long, Long, Long, Long, Double, Boolean)].collect().head
     assert(r1 == ((3L, 3L, 1L, 0L, 4.666667, false)))
     // Every block flagged in every year: kT − ΣR² = 0 → NULL Q.
     val t2 = (1L to 3L).flatMap(c =>
       Seq(order(c, 1995, hi), order(c, 1996, hi), order(c, 1997, hi)))
       .toDF("o_custkey", "o_orderdate", "o_totalprice")
-    val r2 = graft.ops.Composite66.cochranQOn(t2).collect().head
+    val r2 = graft.ops.stats.Blocked.cochranQOn(t2).collect().head
     assert(r2.getLong(0) == 3L && r2.isNullAt(4) && r2.isNullAt(5))
   }
 
@@ -41,7 +41,7 @@ class Round49Spec extends AnyFunSuite {
       order(1, 1995, hi), order(1, 1996, hi), order(1, 1997, hi),
       order(2, 1995, hi), order(2, 1996, hi)) // cust 2 skips 1997
       .toDF("o_custkey", "o_orderdate", "o_totalprice")
-    val r = graft.ops.Composite66.cochranQOn(t).collect().head
+    val r = graft.ops.stats.Blocked.cochranQOn(t).collect().head
     assert(r.getLong(0) == 1L, s"incomplete block not excluded: $r")
   }
 

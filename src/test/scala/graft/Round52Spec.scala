@@ -25,7 +25,7 @@ class Round52Spec extends AnyFunSuite {
     val orders = (1 to 5).flatMap(i =>
       (1 to 6).map(j => (Prios(i - 1), (6 * (i - 1) + j).toDouble)))
       .toDF("o_orderpriority", "o_totalprice")
-    val got = graft.ops.Composite69.dunnOn(orders)
+    val got = graft.ops.stats.KSample.dunnOn(orders)
       .as[(String, String, Long, Long, Double, Double, Double, Int, Boolean)]
       .collect().toSeq
     val mr = Map(1 -> 3.5, 2 -> 9.5, 3 -> 15.5, 4 -> 21.5, 5 -> 27.5)
@@ -45,7 +45,7 @@ class Round52Spec extends AnyFunSuite {
     val orders = (1 to 5).flatMap(i =>
       Seq((Prios(i - 1), 10.0), (Prios(i - 1), 20.0)))
       .toDF("o_orderpriority", "o_totalprice")
-    val got = graft.ops.Composite69.dunnOn(orders).collect()
+    val got = graft.ops.stats.KSample.dunnOn(orders).collect()
     assert(got.length == 10)
     got.foreach { r =>
       assert(r.getDouble(6) == 0.0, s"z nonzero: $r")

@@ -84,7 +84,7 @@ class Round53Spec extends AnyFunSuite {
     }
     val o = (orders(1L, (40, 10, 20, 20)) ++ orders(2L, (5, 20, 10, 40)))
       .toDF("o_custkey", "o_orderpriority", "o_totalprice")
-    val got = graft.ops.Composite72.mantelHaenszelOn(o, customer)
+    val got = graft.ops.stats.Association.mantelHaenszelOn(o, customer)
       .as[(Long, Long, Long, Long, Double, Double, Double)].collect().head
     assert(got == ((45L, 30L, 30L, 60L, 3.0, 2.363636, 1.269231)))
   }

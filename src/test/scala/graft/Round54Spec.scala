@@ -50,10 +50,10 @@ class Round54Spec extends AnyFunSuite {
   test("jonckheereOn: a monotone gradient rejects in both directions with |z| = 4.654747") {
     // Group i = {i,i,i}: every cross-pair is concordant -> 2JT = 180,
     // E[2JT] = 90, tie-corrected var1 = 93.4615…, z = 4.654747.
-    val inc = graft.ops.Composite73.jonckheereOn(jtOrders(i => i.toDouble))
+    val inc = graft.ops.stats.KSample.jonckheereOn(jtOrders(i => i.toDouble))
       .as[(Long, Long, Double, Boolean)].collect().head
     assert(inc == ((15L, 180L, 4.654747, true)))
-    val dec = graft.ops.Composite73.jonckheereOn(jtOrders(i => (6 - i).toDouble))
+    val dec = graft.ops.stats.KSample.jonckheereOn(jtOrders(i => (6 - i).toDouble))
       .as[(Long, Long, Double, Boolean)].collect().head
     assert(dec == ((15L, 0L, -4.654747, true)))
   }
@@ -62,7 +62,7 @@ class Round54Spec extends AnyFunSuite {
     val orders = (1 to 5).flatMap(i =>
       Seq((Prios(i - 1), 10.0), (Prios(i - 1), 20.0)))
       .toDF("o_orderpriority", "o_totalprice")
-    val got = graft.ops.Composite73.jonckheereOn(orders)
+    val got = graft.ops.stats.KSample.jonckheereOn(orders)
       .as[(Long, Long, Double, Boolean)].collect().head
     assert(got == ((10L, 40L, 0.0, false)))
   }

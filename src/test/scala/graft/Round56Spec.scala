@@ -82,7 +82,7 @@ class Round56Spec extends AnyFunSuite {
 
   private def cliffsOf(g1: Seq[Double], g2: Seq[Double]) = {
     val df = (g1.map((_, 1)) ++ g2.map((_, 0))).toDF("x", "i1")
-    graft.ops.Composite8.cliffsDeltaOn(df, col("x"), col("i1") === 1)
+    graft.ops.stats.TwoSample.cliffsDeltaOn(df, col("x"), col("i1") === 1)
       .as[(Long, Long, Double, Double, String)].collect().head
   }
 
@@ -168,7 +168,7 @@ class Round56Spec extends AnyFunSuite {
     val g2 = Seq(3, 3, 4, 3, 1, 2, 3, 1, 1, 5, 4)
     val df = (g1.map(v => (v.toDouble, 1)) ++ g2.map(v => (v.toDouble, 0)))
       .toDF("x", "i1")
-    val r = graft.ops.Composite76
+    val r = graft.ops.stats.TwoSample
       .brunnerMunzelOn(df, col("x"), col("i1") === 1)
       .as[(Long, Long, Double, Double, Double, Boolean)].collect().head
     assert(r == ((14L, 11L, 0.788961, 3.137467, 17.682842, true)))

@@ -88,7 +88,7 @@ class Round57Spec extends AnyFunSuite {
       m <- 1 to 3
       (p, i) <- Priorities.zipWithIndex
     } yield (f"1995-0$m%d-15", p, 10.0 * (i + 1))
-    val r = graft.ops.Composite52.kendallsWOn(ordersOf(rows)).collect().head
+    val r = graft.ops.stats.Blocked.kendallsWOn(ordersOf(rows)).collect().head
     assert(r.getLong(0) == 3L && r.getLong(1) == 5L)
     assert(r.getDouble(2) == 12.0)
     assert(r.getDouble(3) == 1.0)
@@ -101,7 +101,7 @@ class Round57Spec extends AnyFunSuite {
       m <- 1 to 3
       (p, i) <- Priorities.zipWithIndex
     } yield (f"1995-0$m%d-15", p, 10.0 * (i + 1))
-    val r = graft.ops.Composite82.pageTrendOn(ordersOf(rows)).collect().head
+    val r = graft.ops.stats.Blocked.pageTrendOn(ordersOf(rows)).collect().head
     assert(r.getLong(0) == 3L && r.getLong(1) == 5L)
     assert(r.getDouble(2) == 165.0)
     assert(r.getDouble(3) == 3.464102)
@@ -113,7 +113,7 @@ class Round57Spec extends AnyFunSuite {
       m <- 1 to 3
       (p, i) <- Priorities.zipWithIndex
     } yield (f"1995-0$m%d-15", p, 10.0 * (5 - i))
-    val r = graft.ops.Composite82.pageTrendOn(ordersOf(rows)).collect().head
+    val r = graft.ops.stats.Blocked.pageTrendOn(ordersOf(rows)).collect().head
     assert(r.getDouble(2) == 105.0)
     assert(r.getDouble(3) == -3.464102)
     assert(!r.getBoolean(4) && r.getBoolean(5))
@@ -135,7 +135,7 @@ class Round57Spec extends AnyFunSuite {
       (block, m) <- vals.zipWithIndex
       (p, i) <- Priorities.zipWithIndex
     } yield (f"1995-0${m + 1}%d-15", p, block(i))
-    val r = graft.ops.Composite82.quadeOn(ordersOf(rows)).collect().head
+    val r = graft.ops.stats.Blocked.quadeOn(ordersOf(rows)).collect().head
     assert(r.getLong(0) == 2L && r.getLong(1) == 5L)
     assert(r.getDouble(2) == 9.0)
     assert(r.getLong(3) == 4L && r.getLong(4) == 4L)
@@ -155,7 +155,7 @@ class Round57Spec extends AnyFunSuite {
     import spark.implicits._
     // pairwise |diffs| 1, 2, 3 sum to 6 → GMD = 2·6/(3·2) = 2.
     val df = Seq(0.0, 1.0, 3.0).toDF("x")
-    val r = graft.ops.Composite83.gmdOn(df, org.apache.spark.sql.functions.col("x"))
+    val r = graft.ops.stats.TwoSample.gmdOn(df, org.apache.spark.sql.functions.col("x"))
       .collect().head
     assert(r.getLong(0) == 3L && r.getDouble(1) == 2.0)
   }
@@ -164,12 +164,12 @@ class Round57Spec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val same = Seq((1.0, 1), (2.0, 1), (1.0, 0), (2.0, 0)).toDF("x", "i1")
-    val r1 = graft.ops.Composite83
+    val r1 = graft.ops.stats.TwoSample
       .bhattacharyyaOn(same, col("x"), col("i1") === 1).collect().head
     assert(r1.getDouble(3) == 1.0 && r1.getDouble(4) == 0.0 &&
       r1.getDouble(5) == 1.0)
     val disj = Seq((1.0, 1), (100.0, 0)).toDF("x", "i1")
-    val r2 = graft.ops.Composite83
+    val r2 = graft.ops.stats.TwoSample
       .bhattacharyyaOn(disj, col("x"), col("i1") === 1).collect().head
     assert(r2.getDouble(3) == 0.0 && r2.getDouble(4) == 1.0 &&
       r2.getDouble(5) == 0.0)
@@ -242,7 +242,7 @@ class Round57Spec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     // M = (1−2.5)² + (3−2.5)² = 2.5 = E[M] → z = 0, no rejection.
     val df = Seq((1.0, 1), (3.0, 1), (2.0, 0), (4.0, 0)).toDF("x", "i1")
-    val r = graft.ops.Composite85
+    val r = graft.ops.stats.TwoSample
       .moodScaleOn(df, col("x"), col("i1") === 1).collect().head
     assert(r.getLong(0) == 2L && r.getLong(1) == 2L)
     assert(r.getDouble(2) == 2.5)
@@ -255,7 +255,7 @@ class Round57Spec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val same = Seq((1L, 1, 1), (2L, 1, 1), (3L, 1, 1),
       (1L, 1, 0), (2L, 1, 0), (3L, 1, 0)).toDF("dur", "evt", "i1")
-    val r1 = graft.ops.Composite85
+    val r1 = graft.ops.stats.TwoSample
       .logrankOn(same, "dur", "evt", col("i1") === 1).collect().head
     assert(r1.getLong(3) == 3L)        // O1
     assert(r1.getDouble(4) == 3.0)     // E1
@@ -264,7 +264,7 @@ class Round57Spec extends AnyFunSuite {
     // chi2 = (2 − 5/6)²/(17/36) = 49/17.
     val sep = Seq((1L, 1, 1), (2L, 1, 1), (10L, 1, 0), (20L, 1, 0))
       .toDF("dur", "evt", "i1")
-    val r2 = graft.ops.Composite85
+    val r2 = graft.ops.stats.TwoSample
       .logrankOn(sep, "dur", "evt", col("i1") === 1).collect().head
     assert(r2.getLong(2) == 4L)        // event times
     assert(r2.getLong(3) == 2L)
@@ -280,7 +280,7 @@ class Round57Spec extends AnyFunSuite {
       b <- 0 until 5
       (p, i) <- Priorities.zipWithIndex
     } yield (f"1995-0${b + 1}%d-15", p, 10.0 * (((i + b) % 5) + 1))
-    val r = graft.ops.Composite52.kendallsWOn(ordersOf(rows)).collect().head
+    val r = graft.ops.stats.Blocked.kendallsWOn(ordersOf(rows)).collect().head
     assert(r.getLong(0) == 5L && r.getLong(1) == 5L)
     assert(r.getDouble(2) == 0.0)
     assert(r.getDouble(3) == 0.0)

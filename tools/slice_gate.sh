@@ -15,7 +15,9 @@
 # sequentially, from the side's own directory; then run
 # verify_diff.py, compare.py on both dumps and explain_diff.py, and
 # require an empty verify_failures.txt on the change side. Prints each
-# step's verdict and exits 1 if any step fails or differs.
+# step's verdict and exits 1 if any step fails or differs. Also prints
+# the net change in src/main/scala lines, both all lines and code lines
+# only (non-blank, outside // and /* */ comments).
 # Heap: $SPARK_DRIVER_MEM (default 8g), as in build.sbt.
 set -uo pipefail
 
@@ -34,6 +36,26 @@ rm -rf "$WORK"
 mkdir -p "$WORK/parent" "$WORK/change/src/main"
 git -C "$REPO" archive "$PARENT" src/main/scala | tar -x -C "$WORK/parent" || exit 1
 cp -r "$REPO/src/main/scala" "$WORK/change/src/main/" || exit 1
+
+# lines DIR [code]: line count of the .scala files under DIR; with
+# `code`, only non-blank lines outside // line and /* */ block comments.
+lines() {
+  find "$1" -name '*.scala' -print0 | sort -z | xargs -0 cat | if [ "${2:-}" = code ]; then
+    awk '{ l = $0; sub(/^[ \t]+/, "", l) }
+      blk { if (l ~ /\*\//) blk = 0; next }
+      l == "" || l ~ /^\/\// { next }
+      l ~ /^\/\*/ { if (l !~ /\*\//) blk = 1; next }
+      { n++ } END { print n + 0 }'
+  else wc -l; fi
+}
+net() {
+  local p c
+  p=$(lines "$WORK/parent/src/main/scala" "${1:-}")
+  c=$(lines "$WORK/change/src/main/scala" "${1:-}")
+  printf '%s -> %s (%+d)' "$p" "$c" $((c - p))
+}
+LINES="[gate] src/main/scala lines: all $(net), code $(net code)"
+echo "$LINES"
 
 OPENS=()
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -80,5 +102,6 @@ step "verify_diff" python3 "$REPO/tools/verify_diff.py" "$WORK/parent/verify" "$
 step "compare parent" python3 "$REPO/tools/compare.py" "$SF" "$WORK/parent/verify"
 step "compare change" python3 "$REPO/tools/compare.py" "$SF" "$WORK/change/verify"
 step "explain_diff" python3 "$REPO/tools/explain_diff.py" "$WORK/parent/explain.txt" "$WORK/change/explain.txt"
+echo "$LINES"
 echo "[gate] $([ $status = 0 ] && echo PASS || echo FAIL)"
 exit $status
