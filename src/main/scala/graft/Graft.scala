@@ -455,13 +455,13 @@ object Graft {
     * of an orders-shaped relation — exact-cents integers, CASE-
     * cascade max-of-three. */
   def trueRangeAtr(orders: DataFrame): DataFrame =
-    graft.ops.Composite44.trueRangeAtrOn(orders)
+    graft.ops.timeseries.Indicators.trueRangeAtrOn(orders)
 
   /** 20-day Donchian channel breakouts (prior-window extremes,
     * current day excluded) over the daily revenue candle of an
     * orders-shaped relation. */
   def donchianChannel(orders: DataFrame): DataFrame =
-    graft.ops.Composite46.donchianChannelOn(orders)
+    graft.ops.timeseries.Indicators.donchianChannelOn(orders)
 
   /** Per-generation observed-schema drift audit over a
     * documents-shaped relation: presence + storage class per column,

@@ -65,19 +65,13 @@ object SparkEntry {
       (Composite39.queries, Composite39.oracle),
       (Composite41.queries, Composite41.oracle),
       (Composite43.queries, Composite43.oracle),
-      (Composite44.queries, Composite44.oracle),
-      (Composite46.queries, Composite46.oracle),
-      (Composite48.queries, Composite48.oracle),
       (Composite49.queries, Composite49.oracle),
       (timeseries.TimeSeries.queries, timeseries.TimeSeries.oracle),
-      (Composite56.queries, Composite56.oracle),
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
-      (Composite77.queries, Composite77.oracle),
       (Composite80.queries, Composite80.oracle),
       (Composite81.queries, Composite81.oracle),
       (Composite82.queries, Composite82.oracle),
-      (Composite83.queries, Composite83.oracle),
       (Composite84.queries, Composite84.oracle)
     )
 

@@ -6,96 +6,21 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.25 — round-14 event-analytics operators: CUSUM
-  * changepoint detection on the daily order series, an A/B
-  * proportion z-test over user arms, and rate-based bot detection
-  * with corpus-derived thresholds.
+/** SURVEY.md §2.25 — round-14 event-analytics operators: an A/B
+  * proportion z-test over user arms and rate-based bot detection
+  * with corpus-derived thresholds. (The round's CUSUM changepoint is
+  * in [[timeseries.Stationarity]].)
   *
-  * Scale shapes: every operator reduces the fact to a bounded or
-  * entity-sized aggregate before any window — the CUSUM runs over ≤
-  * one row per calendar day (horizon-bounded), the A/B test is two
-  * conditional aggregates, and bot detection is per-user aggregates
-  * against a 1-row broadcast threshold table.
+  * Scale shapes: both operators reduce the fact to an entity-sized
+  * aggregate before anything else — the A/B test is two conditional
+  * aggregates, and bot detection is per-user aggregates against a
+  * 1-row broadcast threshold table.
   *
   * Float determinism: all inputs to double arithmetic are exact
   * integer sums; both engines then execute the same IEEE expression
-  * text, and running sums accumulate in the same date order, so the
-  * sequences of additions are identical. Surfaced scores are 6-dp
-  * rounded.
+  * text. Surfaced scores are 6-dp rounded.
   */
 object Composite11 {
-
-  // ---- evt_changepoint ---------------------------------------------
-  // CUSUM changepoint on daily order counts: standardize each day
-  // against the global mean/sd (computed from exact Σc, Σc² via the
-  // explicit textbook formula — the agg_regression discipline, since
-  // stddev() builtins disagree across engines), cumulate in date
-  // order, and report the date of the maximum |CUSUM| (earliest on
-  // ties) with the mean level on each side of the break.
-  private def changepoint(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val tot = broadcast(daily.agg(
-      count(lit(1)).as("n"),
-      sum(col("c")).cast("bigint").as("sc"),
-      sum(col("c") * col("c")).cast("bigint").as("sc2")))
-    val w = Window.orderBy("d")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cusum = daily.crossJoin(tot)
-      .withColumn("mean", col("sc").cast("double") / col("n").cast("double"))
-      .withColumn("sd", sqrt((col("sc2").cast("double") -
-        col("sc").cast("double") * col("sc").cast("double") /
-          col("n").cast("double")) / (col("n").cast("double") - 1.0)))
-      .withColumn("s", sum((col("c").cast("double") - col("mean")) / col("sd"))
-        .over(w))
-    val cp = cusum
-      .withColumn("rk", row_number().over(
-        Window.orderBy(abs(col("s")).desc, col("d"))))
-      .filter(col("rk") === 1)
-      .select(col("d").as("cp_date"), round(abs(col("s")), 6).as("max_abs_cusum"))
-    daily.crossJoin(broadcast(cp))
-      .agg(first(col("cp_date"), ignoreNulls = true).as("cp_date"),
-        first(col("max_abs_cusum"), ignoreNulls = true).as("max_abs_cusum"),
-        count(lit(1)).as("n_days"),
-        round(sum(when(col("d") <= col("cp_date"), col("c")).otherwise(0L))
-          .cast("double") /
-          sum(when(col("d") <= col("cp_date"), 1L).otherwise(0L)).cast("double"),
-          6).as("mean_before"),
-        round(sum(when(col("d") > col("cp_date"), col("c")).otherwise(0L))
-          .cast("double") /
-          sum(when(col("d") > col("cp_date"), 1L).otherwise(0L)).cast("double"),
-          6).as("mean_after"))
-      .select(col("n_days"), col("cp_date"), col("max_abs_cusum"),
-        col("mean_before"), col("mean_after"))
-  }
-
-  private val changepointOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
-      |tot AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS sc,
-      |    CAST(sum(c * c) AS BIGINT) AS sc2
-      |  FROM daily),
-      |cusum AS (
-      |  SELECT d, c,
-      |    sum((CAST(c AS DOUBLE) - CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) /
-      |      sqrt((CAST(sc2 AS DOUBLE) -
-      |        CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) /
-      |        (CAST(n AS DOUBLE) - 1.0))) OVER (
-      |      ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-      |  FROM daily CROSS JOIN tot),
-      |cp AS (
-      |  SELECT d AS cp_date, round(abs(s), 6) AS max_abs_cusum
-      |  FROM cusum ORDER BY abs(s) DESC, d LIMIT 1)
-      |SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
-      |  cp_date, max_abs_cusum,
-      |  (SELECT round(CAST(sum(c) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-      |   FROM daily, cp WHERE d <= cp_date) AS mean_before,
-      |  (SELECT round(CAST(sum(c) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-      |   FROM daily, cp WHERE d > cp_date) AS mean_after
-      |FROM cp""".stripMargin
 
   // ---- evt_ab_lift -------------------------------------------------
   // Two-proportion z-test of "heavy purchaser" conversion between
@@ -236,13 +161,11 @@ object Composite11 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_changepoint" -> (changepoint _),
     "evt_ab_lift" -> (abLift _),
     "evt_bot_detection" -> (botDetection _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_changepoint" -> changepointOracle,
     "evt_ab_lift" -> abLiftOracle,
     "evt_bot_detection" -> botDetectionOracle
   )

@@ -7,17 +7,16 @@ import graft.util.Tables._
 
 /** SURVEY.md §2.26 — round-15 analytics operators: revenue
   * concentration (Herfindahl–Hirschman), categorical entropy,
-  * DAU/WAU stickiness, Mann–Kendall trend tests, and a Theil–Sen
-  * robust slope.
+  * DAU/WAU stickiness and Mann–Kendall trend tests. (The round's
+  * Theil–Sen slope of the daily order series is in
+  * [[timeseries.Stationarity]].)
   *
   * Scale shapes: every operator aggregates the fact down to an
   * entity- or horizon-bounded table before any window or self-join —
   * HHI and entropy are two chained hash aggregates; DAU/WAU explodes
   * the DEDUPED (user, day) activity 7× (map-side, linear); the
   * Mann–Kendall pair join is per-user over active DAYS (horizon-
-  * bounded, ≤ span² pairs per user whatever the event volume);
-  * Theil–Sen pairs the global daily series with itself (≤ days²
-  * pairs total, a constant in corpus size).
+  * bounded, ≤ span² pairs per user whatever the event volume).
   *
   * Float determinism: all double arithmetic starts from exact
   * integer counts or exact decimal sums; both engines then run the
@@ -221,80 +220,19 @@ object Composite12 {
       |WHERE n_days >= 10
       |ORDER BY s.user_id""".stripMargin
 
-  // ---- agg_theil_sen -----------------------------------------------
-  // Theil–Sen robust slope of the daily order-count series: the
-  // MEDIAN of all pairwise slopes (c_j−c_i)/(d_j−d_i). The series is
-  // horizon-bounded (~2.4k days → ~2.9M pairs — a CONSTANT in corpus
-  // size; at 100 TB the daily aggregate is the same ~2.4k rows, only
-  // the first groupBy grows). Slopes are exact-integer ratios;
-  // percentile interpolation at the even-count midpoint averages two
-  // such doubles — deterministic. Intercept via the textbook
-  // median(c) − slope·median(day_index) with day_index = days since
-  // the series minimum (exact ints both).
-  private def theilSen(s: SparkSession, dir: String): DataFrame = {
-    val dailyRaw = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(count(lit(1)).as("c"))
-    // series start as a 1-row broadcast, not a global window — the
-    // changepoint discipline (no single-partition WindowExec)
-    val daily = dailyRaw
-      .crossJoin(broadcast(dailyRaw.agg(min(col("d")).as("d0"))))
-      .select(col("c"), datediff(col("d"), col("d0")).cast("bigint").as("di"))
-    val pairs = daily.as("a")
-      .join(broadcast(daily.as("b")), col("a.di") < col("b.di"))
-      .select(((col("b.c") - col("a.c")).cast("double") /
-        (col("b.di") - col("a.di")).cast("double")).as("slope"))
-    val slope = pairs.agg(count(lit(1)).as("n_pairs"),
-      expr("percentile(slope, 0.5)").as("slope"))
-    daily.agg(count(lit(1)).as("n_days"),
-      expr("percentile(CAST(c AS DOUBLE), 0.5)").as("med_c"),
-      expr("percentile(CAST(di AS DOUBLE), 0.5)").as("med_di"))
-      .crossJoin(broadcast(slope))
-      .select(col("n_days"), col("n_pairs"),
-        round(col("slope"), 6).as("slope"),
-        round(col("med_c") - col("slope") * col("med_di"), 6)
-          .as("intercept"))
-  }
-
-  private val theilSenOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
-      |dd AS (
-      |  SELECT c, CAST(d - (SELECT min(d) FROM daily) AS BIGINT) AS di
-      |  FROM daily),
-      |pairs AS (
-      |  SELECT CAST(b.c - a.c AS DOUBLE) / CAST(b.di - a.di AS DOUBLE)
-      |    AS slope
-      |  FROM dd a JOIN dd b ON a.di < b.di),
-      |sl AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-      |    quantile_cont(slope, 0.5) AS slope
-      |  FROM pairs),
-      |base AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n_days,
-      |    quantile_cont(CAST(c AS DOUBLE), 0.5) AS med_c,
-      |    quantile_cont(CAST(di AS DOUBLE), 0.5) AS med_di
-      |  FROM dd)
-      |SELECT n_days, n_pairs, round(slope, 6) AS slope,
-      |  round(med_c - slope * med_di, 6) AS intercept
-      |FROM base CROSS JOIN sl""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_hhi" -> (hhi _),
     "agg_entropy" -> (entropy _),
     "evt_dau_wau" -> (dauWau _),
-    "win_mann_kendall" -> (mannKendall _),
-    "agg_theil_sen" -> (theilSen _)
+    "win_mann_kendall" -> (mannKendall _)
   )
 
   val oracle: Map[String, String] = Map(
     "agg_hhi" -> hhiOracle,
     "agg_entropy" -> entropyOracle,
     "evt_dau_wau" -> dauWauOracle,
-    "win_mann_kendall" -> mannKendallOracle,
-    "agg_theil_sen" -> theilSenOracle
+    "win_mann_kendall" -> mannKendallOracle
   )
 }

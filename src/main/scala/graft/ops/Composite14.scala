@@ -1,24 +1,19 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.30 — round-15 series operators, third batch: per-user
-  * rate limiting, a seasonal-naive forecast backtest, and a rolling
-  * correlation window over the daily order series.
+/** SURVEY.md §2.30 — round-15 third batch: per-user rate limiting.
+  * (The batch's seasonal-naive backtest is in
+  * [[timeseries.Forecast]], its rolling correlation in
+  * [[timeseries.Correlation]].)
   *
-  * Scale shapes: rate limiting is two chained hash aggregates (per
-  * user-minute, then per user); the backtest and rolling correlation
-  * run over the daily aggregate of orders (~2.4k rows — a CONSTANT
-  * in corpus size; only the first groupBy grows with data). The
-  * single-series windows are horizon-bounded, the changepoint
-  * precedent.
+  * Scale shape: two chained hash aggregates (per user-minute, then
+  * per user), no windows.
   *
-  * Determinism: counts and decimal revenue sums are exact; every
-  * surfaced double is 6-dp rounded over shared IEEE formula text.
+  * Determinism: every surfaced value is an exact count.
   */
 object Composite14 {
 
@@ -56,105 +51,13 @@ object Composite14 {
       |HAVING sum(CASE WHEN c > 5 THEN 1 ELSE 0 END) > 0
       |ORDER BY user_id""".stripMargin
 
-  // ---- evt_seasonal_naive_backtest ---------------------------------
-  // Backtest of the seasonal-naive forecaster (ŷ(d) = y(d−7)) on the
-  // daily order-count series: MAPE, sMAPE, and bias over every day
-  // with a 7-days-earlier observation. The lag is a gap-safe
-  // EQUI-JOIN on d−7 (not a row-offset lag — a missing calendar day
-  // would silently shift a lag(7) window), which also keeps the
-  // daily-series join co-partitioned at any scale.
-  private def seasonalNaive(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val f = daily.select(date_add(col("d"), 7).as("d"), col("c").as("fc"))
-    daily.join(f, "d")
-      .agg(count(lit(1)).as("n_scored"),
-        round(avg(abs(col("c") - col("fc")).cast("double") /
-          col("c").cast("double")), 6).as("mape"),
-        round(avg(abs(col("c") - col("fc")).cast("double") * 2.0 /
-          (col("c") + col("fc")).cast("double")), 6).as("smape"),
-        round(avg((col("c") - col("fc")).cast("double")), 6).as("bias"))
-  }
-
-  private val seasonalNaiveOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE))
-      |SELECT CAST(count(*) AS BIGINT) AS n_scored,
-      |  round(avg(CAST(abs(a.c - f.c) AS DOUBLE) / CAST(a.c AS DOUBLE)), 6)
-      |    AS mape,
-      |  round(avg(CAST(abs(a.c - f.c) AS DOUBLE) * 2.0 /
-      |    CAST(a.c + f.c AS DOUBLE)), 6) AS smape,
-      |  round(avg(CAST(a.c - f.c AS DOUBLE)), 6) AS bias
-      |FROM daily a JOIN daily f ON a.d = f.d + 7""".stripMargin
-
-  // ---- win_rolling_corr --------------------------------------------
-  // 30-day rolling Pearson correlation between daily order count and
-  // daily revenue — the co-movement monitor between volume and value.
-  // Window sums accumulate EXACT values (bigint counts, decimal
-  // revenue and decimal cross-products); the correlation assembles
-  // once per row from six exact sums via shared IEEE text. Output
-  // restricted to full 30-row frames (warm-up excluded — a partial
-  // frame's correlation is not comparable).
-  private def rollingCorr(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(count(lit(1)).as("x"),
-        sum(money(col("o_totalprice"))).cast("decimal(18,2)").as("y"))
-    val w = Window.orderBy("d").rowsBetween(-29, Window.currentRow)
-    val corrF =
-      """round((sxy - sx * sy / n) /
-        |  (sqrt(sx2 - sx * sx / n) * sqrt(sy2 - sy * sy / n)), 6)"""
-        .stripMargin
-    daily
-      .withColumn("n", count(lit(1)).over(w).cast("double"))
-      .withColumn("sx", sum(col("x")).over(w).cast("double"))
-      .withColumn("sy", sum(col("y")).over(w).cast("double"))
-      .withColumn("sxy", sum(col("x") * col("y")).over(w).cast("double"))
-      .withColumn("sx2", sum(col("x") * col("x")).over(w).cast("double"))
-      .withColumn("sy2",
-        sum((col("y") * col("y")).cast("decimal(38,4)")).over(w)
-          .cast("double"))
-      .filter(col("n") === 30.0)
-      .select(col("d"), col("x"), asD(col("y")).as("y"),
-        expr(corrF).as("corr30"))
-      .orderBy("d")
-  }
-
-  private val rollingCorrOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS x,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DECIMAL(18,2)) AS y
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
-      |s AS (
-      |  SELECT d, x, y,
-      |    CAST(count(*) OVER w AS DOUBLE) AS n,
-      |    CAST(sum(x) OVER w AS DOUBLE) AS sx,
-      |    CAST(CAST(sum(y) OVER w AS VARCHAR) AS DOUBLE) AS sy,
-      |    CAST(CAST(sum(x * y) OVER w AS VARCHAR) AS DOUBLE) AS sxy,
-      |    CAST(sum(x * x) OVER w AS DOUBLE) AS sx2,
-      |    CAST(CAST(sum(CAST(CAST(y AS DECIMAL(19,2)) * y
-      |      AS DECIMAL(38,4))) OVER w AS VARCHAR) AS DOUBLE) AS sy2
-      |  FROM daily
-      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
-      |SELECT d, x, CAST(CAST(y AS VARCHAR) AS DOUBLE) AS y,
-      |  round((sxy - sx * sy / n) /
-      |    (sqrt(sx2 - sx * sx / n) * sqrt(sy2 - sy * sy / n)), 6) AS corr30
-      |FROM s WHERE n = 30.0
-      |ORDER BY d""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_rate_limit" -> (rateLimit _),
-    "evt_seasonal_naive_backtest" -> (seasonalNaive _),
-    "win_rolling_corr" -> (rollingCorr _)
+    "evt_rate_limit" -> (rateLimit _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_rate_limit" -> rateLimitOracle,
-    "evt_seasonal_naive_backtest" -> seasonalNaiveOracle,
-    "win_rolling_corr" -> rollingCorrOracle
+    "evt_rate_limit" -> rateLimitOracle
   )
 }

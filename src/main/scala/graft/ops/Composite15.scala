@@ -1,19 +1,17 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.31 — round-15 fourth batch: winsorized/trimmed
-  * robust means, error-budget burn analysis, and a seasonal
-  * decomposition of the daily series.
+  * robust means and error-budget burn analysis. (The batch's seasonal
+  * decomposition is in [[timeseries.Patterns]].)
   *
   * Scale shapes: winsorized means are two passes over the fact with a 5-row
   * percentile broadcast between them; error burn is two hash
-  * aggregates and a 1-row broadcast; seasonal decomposition runs
-  * entirely over the horizon-bounded daily aggregate.
+  * aggregates and a 1-row broadcast.
   *
   * Determinism: counts exact, money decimal-exact, percentiles
   * interpolate exact values; every surfaced double is 6-dp rounded
@@ -102,73 +100,15 @@ object Composite15 {
       |FROM hourly CROSS JOIN base
       |ORDER BY h""".stripMargin
 
-  // ---- win_seasonal_decompose --------------------------------------
-  // Additive seasonal decomposition of the daily order series
-  // (STL-lite): trend = centered 7-day moving average (full frames
-  // only), detrended = c − trend, seasonal index = mean detrended
-  // value per ISO weekday. Surfaces the 7 weekday indices plus each
-  // weekday's residual spread (sd of detrended − seasonal). The
-  // whole computation runs over the ~2.4k-row daily aggregate —
-  // horizon-bounded, the changepoint precedent.
-  private def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val w = Window.orderBy("d").rowsBetween(-3, 3)
-    val det = daily
-      .withColumn("fn", count(lit(1)).over(w))
-      .withColumn("trend", sum(col("c")).over(w).cast("double") /
-        col("fn").cast("double"))
-      .filter(col("fn") === 7)
-      .select(dayofweek(col("d")).as("dow"),
-        (col("c").cast("double") - col("trend")).as("dev"))
-    val seas = det.groupBy("dow")
-      .agg(count(lit(1)).as("n_days"), avg(col("dev")).as("si"),
-        sum(col("dev") * col("dev")).as("sdev2"),
-        sum(col("dev")).as("sdev"))
-    seas.select(col("dow"), col("n_days"),
-      round(col("si"), 6).as("seasonal"),
-      round(sqrt((col("sdev2") - col("sdev") * col("sdev") /
-        col("n_days").cast("double")) /
-        (col("n_days").cast("double") - 1.0)), 6).as("resid_sd"))
-      .orderBy("dow")
-  }
-
-  private val seasonalDecomposeOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
-      |t AS (
-      |  SELECT d, c,
-      |    CAST(count(*) OVER w AS BIGINT) AS fn,
-      |    CAST(sum(c) OVER w AS DOUBLE) / CAST(count(*) OVER w AS DOUBLE)
-      |      AS trend
-      |  FROM daily
-      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-      |det AS (
-      |  SELECT CAST(dayofweek(d) + 1 AS INT) AS dow,
-      |    CAST(c AS DOUBLE) - trend AS dev
-      |  FROM t WHERE fn = 7),
-      |seas AS (
-      |  SELECT dow, CAST(count(*) AS BIGINT) AS n_days, avg(dev) AS si,
-      |    sum(dev * dev) AS sdev2, sum(dev) AS sdev
-      |  FROM det GROUP BY dow)
-      |SELECT dow, n_days, round(si, 6) AS seasonal,
-      |  round(sqrt((sdev2 - sdev * sdev / CAST(n_days AS DOUBLE)) /
-      |    (CAST(n_days AS DOUBLE) - 1.0)), 6) AS resid_sd
-      |FROM seas ORDER BY dow""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_winsorized" -> (winsorized _),
-    "evt_error_burn" -> (errorBurn _),
-    "win_seasonal_decompose" -> (seasonalDecompose _)
+    "evt_error_burn" -> (errorBurn _)
   )
 
   val oracle: Map[String, String] = Map(
     "agg_winsorized" -> winsorizedOracle,
-    "evt_error_burn" -> errorBurnOracle,
-    "win_seasonal_decompose" -> seasonalDecomposeOracle
+    "evt_error_burn" -> errorBurnOracle
   )
 }

@@ -1,89 +1,21 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.util.Tables._
-
-/** SURVEY.md §2.36 — round-15 ninth batch: STL-residual anomaly
-  * days and market-basket lift. (The batch's embedding outliers vs
-  * their source centroid are in [[retrieval.Geometry]].)
+/** SURVEY.md §2.36 — round-15 ninth batch: market-basket lift. (The
+  * batch's embedding outliers vs their source centroid are in
+  * [[retrieval.Geometry]], its STL-residual anomaly days in
+  * [[timeseries.Patterns]].)
   *
-  * Scale shapes: the anomaly scan runs over the horizon-bounded
-  * daily series (the seasonal-decompose plan plus one broadcast of
-  * the 7-row seasonal index); basket lift reuses the bounded
-  * per-order pair explosion with counts kept (no DISTINCT — support
-  * needs multiplicity) against 1-row and item-sized broadcasts.
+  * Scale shape: basket lift reuses the bounded per-order pair
+  * explosion with counts kept (no DISTINCT — support needs
+  * multiplicity) against 1-row and item-sized broadcasts.
   *
   * Determinism: counts exact; lift assembles once from exact
-  * integers; all top-k orders carry unique tiebreakers.
+  * integers; the top-k order carries unique tiebreakers.
   */
 object Composite19 {
-
-  // ---- evt_anomaly_stl ---------------------------------------------
-  // Seasonally-adjusted anomaly days: reuse win_seasonal_decompose's
-  // trend (centered 7-day MA) and weekday index, then flag days
-  // where |residual| exceeds 3× the global residual sd — the
-  // decomposition-aware upgrade of evt_anomaly_iqr's raw fences.
-  // Surfaces only flagged days (bounded by the horizon).
-  private def anomalyStl(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val w = Window.orderBy("d").rowsBetween(-3, 3)
-    val det = daily
-      .withColumn("fn", count(lit(1)).over(w))
-      .withColumn("trend", sum(col("c")).over(w).cast("double") /
-        col("fn").cast("double"))
-      .filter(col("fn") === 7)
-      .select(col("d"), col("c"), col("trend"),
-        dayofweek(col("d")).as("dow"),
-        (col("c").cast("double") - col("trend")).as("dev"))
-    val seas = det.groupBy("dow").agg(avg(col("dev")).as("si"))
-    val resid = det.join(broadcast(seas), "dow")
-      .select(col("d"), col("c"), col("trend"), col("si"),
-        (col("dev") - col("si")).as("r"))
-    val sd = broadcast(resid.agg(
-      count(lit(1)).cast("double").as("n"),
-      sum(col("r")).as("sr"), sum(col("r") * col("r")).as("sr2"))
-      .select(sqrt((col("sr2") - col("sr") * col("sr") / col("n")) /
-        (col("n") - 1.0)).as("rsd")))
-    resid.crossJoin(sd)
-      .filter(abs(col("r")) > col("rsd") * 3.0)
-      .select(col("d"), col("c"), round(col("trend"), 6).as("trend"),
-        round(col("si"), 6).as("seasonal"),
-        round(col("r"), 6).as("residual"),
-        round(abs(col("r")) / col("rsd"), 6).as("sigma"))
-      .orderBy("d")
-  }
-
-  private val anomalyStlOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
-      |t AS (
-      |  SELECT d, c, CAST(count(*) OVER w AS BIGINT) AS fn,
-      |    CAST(sum(c) OVER w AS DOUBLE) / CAST(count(*) OVER w AS DOUBLE)
-      |      AS trend
-      |  FROM daily
-      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-      |det AS (
-      |  SELECT d, c, trend, CAST(dayofweek(d) + 1 AS INT) AS dow,
-      |    CAST(c AS DOUBLE) - trend AS dev
-      |  FROM t WHERE fn = 7),
-      |seas AS (SELECT dow, avg(dev) AS si FROM det GROUP BY dow),
-      |resid AS (
-      |  SELECT det.d, det.c, det.trend, seas.si, det.dev - seas.si AS r
-      |  FROM det JOIN seas ON det.dow = seas.dow),
-      |sd AS (
-      |  SELECT sqrt((sum(r * r) - sum(r) * sum(r) / count(*)) /
-      |    (count(*) - 1.0)) AS rsd FROM resid)
-      |SELECT d, c, round(trend, 6) AS trend, round(si, 6) AS seasonal,
-      |  round(r, 6) AS residual, round(abs(r) / rsd, 6) AS sigma
-      |FROM resid CROSS JOIN sd
-      |WHERE abs(r) > rsd * 3.0
-      |ORDER BY d""".stripMargin
 
   // ---- agg_basket_lift ---------------------------------------------
   // Association-rule lift for co-purchased part pairs: support(a,b)
@@ -153,12 +85,10 @@ object Composite19 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_anomaly_stl" -> (anomalyStl _),
     "agg_basket_lift" -> (basketLift _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_anomaly_stl" -> anomalyStlOracle,
     "agg_basket_lift" -> basketLiftOracle
   )
 }

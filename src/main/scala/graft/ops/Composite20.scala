@@ -6,23 +6,19 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.37 — round-16 batch: interval concurrency,
-  * volatility bands, RSI, weekly growth accounting, and discrete
-  * percentiles.
+/** SURVEY.md §2.37 — round-16 batch: interval concurrency, weekly
+  * growth accounting, and discrete percentiles. (The batch's
+  * Bollinger bands and RSI are in [[timeseries.Indicators]].)
   *
   * Scale shapes: concurrency is a sweep-line over ±1 boundary events (per-type
   * running sum; at cluster scale the same plan range-partitions time
   * and carries per-range offsets — a two-pass distributed prefix
-  * sum); the band/RSI windows run over the horizon-bounded daily
-  * series; lifecycle is (user, week) dedup + two user-keyed joins.
+  * sum); lifecycle is (user, week) dedup + two user-keyed joins.
   *
   * Determinism: sweep-line
   * running sums use the default RANGE frame so tied boundaries share
   * their group-end value (peak and argmin-time are then
-  * order-independent); band/RSI statistics accumulate in exact
-  * DECIMAL and assemble ONCE in IEEE double with identical
-  * expression trees on both engines (growth_decompose discipline —
-  * no cross-engine round()); discrete percentiles pick actual data
+  * order-independent); discrete percentiles pick actual data
   * values by exact rank, so no interpolation can drift.
   */
 object Composite20 {
@@ -75,131 +71,6 @@ object Composite20 {
       |FROM r JOIN p ON r.event_type = p.event_type AND r.run = p.peak
       |GROUP BY r.event_type, p.peak
       |ORDER BY r.event_type""".stripMargin
-
-  // ---- win_bollinger -----------------------------------------------
-  // 20-day Bollinger bands on daily revenue: mid = SMA₂₀, band =
-  // mid ± 2σ (population σ from exact decimal Σx/Σx² window sums),
-  // full frames only. Breakout days flagged. Assembly is one shared
-  // IEEE tree; σ's radicand clamps at 0 so fp cancellation near
-  // zero variance cannot produce NaN on either engine.
-  private def bollinger(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(sum(money(col("o_totalprice"))).cast("decimal(15,2)").as("rev"))
-    val w = Window.orderBy("d").rowsBetween(-19, 0)
-    daily
-      .withColumn("fn", count(lit(1)).over(w))
-      .withColumn("sx", sum(col("rev")).over(w))
-      .withColumn("sx2",
-        sum((col("rev") * col("rev")).cast("decimal(31,4)")).over(w))
-      .filter(col("fn") === 20)
-      .select(col("d"), asD(col("rev")).as("rev"),
-        (asD(col("sx")) / lit(20.0)).as("mid"),
-        sqrt(greatest(
-          (asD(col("sx2")) - asD(col("sx")) * asD(col("sx")) / lit(20.0))
-            / lit(20.0), lit(0.0))).as("sigma"))
-      .select(col("d"), col("rev"), col("mid"), col("sigma"),
-        (col("mid") + lit(2.0) * col("sigma")).as("upper"),
-        (col("mid") - lit(2.0) * col("sigma")).as("lower"),
-        (col("rev") > col("mid") + lit(2.0) * col("sigma") ||
-          col("rev") < col("mid") - lit(2.0) * col("sigma"))
-          .as("breakout"))
-      .orderBy("d")
-  }
-
-  private val bollingerOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DECIMAL(15,2))
-      |      AS rev
-      |  FROM orders GROUP BY 1),
-      |win AS (
-      |  SELECT d, rev,
-      |    count(*) OVER w AS fn,
-      |    sum(rev) OVER w AS sx,
-      |    sum(CAST(CAST(rev AS DECIMAL(19,2)) * rev AS DECIMAL(31,4)))
-      |      OVER w AS sx2
-      |  FROM daily
-      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)),
-      |a AS (
-      |  SELECT d, CAST(CAST(rev AS VARCHAR) AS DOUBLE) AS rev,
-      |    CAST(CAST(sx AS VARCHAR) AS DOUBLE) / 20.0 AS mid,
-      |    sqrt(greatest(
-      |      (CAST(CAST(sx2 AS VARCHAR) AS DOUBLE)
-      |        - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-      |          * CAST(CAST(sx AS VARCHAR) AS DOUBLE) / 20.0) / 20.0,
-      |      0.0)) AS sigma
-      |  FROM win WHERE fn = 20)
-      |SELECT d, rev, mid, sigma,
-      |  mid + 2.0 * sigma AS upper,
-      |  mid - 2.0 * sigma AS lower,
-      |  (rev > mid + 2.0 * sigma OR rev < mid - 2.0 * sigma) AS breakout
-      |FROM a ORDER BY d""".stripMargin
-
-  // ---- win_rsi -----------------------------------------------------
-  // Wilder's RSI (simple-average form) over daily revenue: ±moves
-  // from exact decimal day-over-day diffs, 14-row full-frame window
-  // sums, RSI = 100 − 100/(1 + gains/losses); an all-gain window
-  // surfaces RSI = 100 exactly on both engines.
-  private def rsi(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(sum(money(col("o_totalprice"))).cast("decimal(15,2)").as("rev"))
-    val lagW = Window.orderBy("d")
-    val w = Window.orderBy("d").rowsBetween(-13, 0)
-    daily
-      .withColumn("diff",
-        (col("rev") - lag(col("rev"), 1).over(lagW)).cast("decimal(16,2)"))
-      .filter(col("diff").isNotNull)
-      .withColumn("gain", greatest(col("diff"), lit(0).cast("decimal(16,2)")))
-      .withColumn("loss", greatest(-col("diff"), lit(0).cast("decimal(16,2)")))
-      .withColumn("fn", count(lit(1)).over(w))
-      .withColumn("sg", sum(col("gain")).over(w))
-      .withColumn("sl", sum(col("loss")).over(w))
-      .filter(col("fn") === 14)
-      .select(col("d"),
-        (asD(col("sg")) / lit(14.0)).as("avg_gain"),
-        (asD(col("sl")) / lit(14.0)).as("avg_loss"),
-        when(asD(col("sl")) === lit(0.0), lit(100.0))
-          .otherwise(lit(100.0) - lit(100.0) /
-            (lit(1.0) + (asD(col("sg")) / lit(14.0)) /
-              (asD(col("sl")) / lit(14.0))))
-          .as("rsi"))
-      .orderBy("d")
-  }
-
-  private val rsiOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DECIMAL(15,2))
-      |      AS rev
-      |  FROM orders GROUP BY 1),
-      |dd AS (
-      |  SELECT d, CAST(rev - lag(rev, 1) OVER (ORDER BY d)
-      |    AS DECIMAL(16,2)) AS diff
-      |  FROM daily),
-      |gl AS (
-      |  -- CASE, not greatest(): DuckDB's greatest(DECIMAL, DECIMAL)
-      |  -- silently returns DOUBLE, which poisons the window sums
-      |  SELECT d,
-      |    CASE WHEN diff > 0 THEN diff ELSE CAST(0 AS DECIMAL(16,2)) END
-      |      AS gain,
-      |    CASE WHEN diff < 0 THEN -diff ELSE CAST(0 AS DECIMAL(16,2)) END
-      |      AS loss
-      |  FROM dd WHERE diff IS NOT NULL),
-      |win AS (
-      |  SELECT d, count(*) OVER w AS fn,
-      |    sum(gain) OVER w AS sg, sum(loss) OVER w AS sl
-      |  FROM gl
-      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-      |SELECT d,
-      |  CAST(CAST(sg AS VARCHAR) AS DOUBLE) / 14.0 AS avg_gain,
-      |  CAST(CAST(sl AS VARCHAR) AS DOUBLE) / 14.0 AS avg_loss,
-      |  CASE WHEN CAST(CAST(sl AS VARCHAR) AS DOUBLE) = 0.0 THEN 100.0
-      |    ELSE 100.0 - 100.0 /
-      |      (1.0 + (CAST(CAST(sg AS VARCHAR) AS DOUBLE) / 14.0) /
-      |        (CAST(CAST(sl AS VARCHAR) AS DOUBLE) / 14.0)) END AS rsi
-      |FROM win WHERE fn = 14 ORDER BY d""".stripMargin
 
   // ---- evt_lifecycle_state -----------------------------------------
   // Weekly growth accounting (the new/retained/resurrected/churned
@@ -317,16 +188,12 @@ object Composite20 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_concurrency_peak" -> (concurrencyPeak _),
-    "win_bollinger" -> (bollinger _),
-    "win_rsi" -> (rsi _),
     "evt_lifecycle_state" -> (lifecycleState _),
     "agg_percentile_disc" -> (percentileDisc _)
   )
 
   val oracle: Map[String, String] = Map(
     "evt_concurrency_peak" -> concurrencyPeakOracle,
-    "win_bollinger" -> bollingerOracle,
-    "win_rsi" -> rsiOracle,
     "evt_lifecycle_state" -> lifecycleStateOracle,
     "agg_percentile_disc" -> percentileDiscOracle
   )

@@ -1,21 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.38 — round-16 second batch: experimentation
-  * statistics (CUPED, delta-method ratio CI) and finance/econ series
-  * (VWAP, unit-value price index). (The batch's diversity-aware MMR
-  * re-ranking is in [[retrieval.Search]].)
+  * statistics (CUPED, delta-method ratio CI) and a unit-value price
+  * index. (The batch's diversity-aware MMR re-ranking is in
+  * [[retrieval.Search]], its VWAP in [[timeseries.Indicators]].)
   *
   * Scale shapes: CUPED and the delta-method CI reduce the fact table
   * to ONE per-user aggregate each, then assemble scalars from exact
-  * decimal sums — the per-user exchange is the only shuffle. VWAP and
-  * the price index run windowed/grouped exact-decimal sums over
-  * horizon- and alphabet-bounded series.
+  * decimal sums — the per-user exchange is the only shuffle. The
+  * price index runs grouped exact-decimal sums over an
+  * alphabet-bounded series.
   *
   * Determinism: CUPED/CI moments accumulate in exact DECIMAL and
   * convert once (VARCHAR route on the DuckDB side, §1.5 r7); all
@@ -186,44 +185,6 @@ object Composite21 {
       |  r + 1.96 * se AS ci_hi
       |FROM b""".stripMargin
 
-  // ---- win_vwap ----------------------------------------------------
-  // Month-to-date VWAP of shipped goods: per ship-day exact decimal
-  // price/quantity sums, then running decimal sums within the ship
-  // month and ONE double division per row.
-  private def vwap(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "lineitem")
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(money(col("l_extendedprice"))).cast("decimal(18,2)").as("px"),
-        sum(money(col("l_quantity"))).cast("decimal(18,2)").as("qty"))
-      .withColumn("m", trunc(col("d"), "month"))
-    val w = Window.partitionBy("m").orderBy("d")
-    daily
-      .withColumn("cpx", sum(col("px")).over(w))
-      .withColumn("cqty", sum(col("qty")).over(w))
-      .select(col("d"), asD(col("qty")).as("day_qty"),
-        (asD(col("cpx")) / asD(col("cqty"))).as("mtd_vwap"))
-      .orderBy("d")
-  }
-
-  private val vwapOracle =
-    """WITH daily AS (
-      |  SELECT CAST(l_shipdate AS DATE) AS d,
-      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(15,2)))
-      |      AS DECIMAL(18,2)) AS px,
-      |    CAST(sum(CAST(l_quantity AS DECIMAL(15,2)))
-      |      AS DECIMAL(18,2)) AS qty,
-      |    date_trunc('month', CAST(l_shipdate AS DATE)) AS m
-      |  FROM lineitem GROUP BY 1, 4),
-      |win AS (
-      |  SELECT d, qty,
-      |    sum(px) OVER (PARTITION BY m ORDER BY d) AS cpx,
-      |    sum(qty) OVER (PARTITION BY m ORDER BY d) AS cqty
-      |  FROM daily)
-      |SELECT d, CAST(CAST(qty AS VARCHAR) AS DOUBLE) AS day_qty,
-      |  CAST(CAST(cpx AS VARCHAR) AS DOUBLE) /
-      |    CAST(CAST(cqty AS VARCHAR) AS DOUBLE) AS mtd_vwap
-      |FROM win ORDER BY d""".stripMargin
-
   // ---- agg_price_index ---------------------------------------------
   // Unit-value price index per brand (Laspeyres-style unit values):
   // uv(brand, year) = Σprice/Σqty from exact decimal sums; index =
@@ -270,14 +231,12 @@ object Composite21 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_uplift_cuped" -> (upliftCuped _),
     "agg_delta_method_ratio_ci" -> (deltaRatioCi _),
-    "win_vwap" -> (vwap _),
     "agg_price_index" -> (priceIndex _)
   )
 
   val oracle: Map[String, String] = Map(
     "evt_uplift_cuped" -> upliftCupedOracle,
     "agg_delta_method_ratio_ci" -> deltaRatioCiOracle,
-    "win_vwap" -> vwapOracle,
     "agg_price_index" -> priceIndexOracle
   )
 }

@@ -1,24 +1,19 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.40 — round-16 fourth batch: difference-in-differences
-  * and the ulcer index. (The batch's binary-sign Hamming similarity
-  * is in [[retrieval.Search]].)
+/** SURVEY.md §2.40 — round-16 fourth batch: difference-in-differences.
+  * (The batch's binary-sign Hamming similarity is in
+  * [[retrieval.Search]], its ulcer index in [[timeseries.Indicators]].)
   *
-  * Scale shapes: DiD reduces the fact table to one per-user aggregate
-  * and assembles the estimator from exact decimal sums. The ulcer
-  * index stays decimal-exact through the squared-drawdown window sum
-  * — the only double op is the final sqrt (a window sum of DOUBLES
-  * would be association-order-dependent across engines; decimal is
-  * not).
+  * Scale shape: DiD reduces the fact table to one per-user aggregate
+  * and assembles the estimator from exact decimal sums.
   *
-  * Determinism: DiD and ulcer follow the exact-decimal-moments →
-  * one-IEEE-assembly discipline.
+  * Determinism: the exact-decimal-moments → one-IEEE-assembly
+  * discipline.
   */
 object Composite23 {
 
@@ -105,62 +100,13 @@ object Composite23 {
       |  (mean_d1 - mean_d0) + 1.96 * sqrt(v0 + v1) AS ci_hi
       |FROM j""".stripMargin
 
-  // ---- win_ulcer_index ---------------------------------------------
-  // Ulcer index (Martin 1987) in revenue units: running-peak
-  // drawdowns of the daily revenue series, 14-day RMS of the
-  // drawdown depth, full frames only. Depths and their squares stay
-  // EXACT DECIMAL through the window sum; the single sqrt is the
-  // only floating-point operation.
-  private def ulcerIndex(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(sum(money(col("o_totalprice"))).cast("decimal(15,2)").as("rev"))
-    val wPeak = Window.orderBy("d")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val w14 = Window.orderBy("d").rowsBetween(-13, 0)
-    daily
-      .withColumn("peak", max(col("rev")).over(wPeak))
-      .withColumn("dd", (col("peak") - col("rev")).cast("decimal(16,2)"))
-      .withColumn("fn", count(lit(1)).over(w14))
-      .withColumn("sdd2",
-        sum((col("dd") * col("dd")).cast("decimal(33,4)")).over(w14))
-      .filter(col("fn") === 14)
-      .select(col("d"), asD(col("dd")).as("drawdown"),
-        sqrt(asD(col("sdd2")) / lit(14.0)).as("ulcer"))
-      .orderBy("d")
-  }
-
-  private val ulcerIndexOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DECIMAL(15,2))
-      |      AS rev
-      |  FROM orders GROUP BY 1),
-      |pk AS (
-      |  SELECT d, rev,
-      |    CAST(max(rev) OVER (ORDER BY d
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) -
-      |      rev AS DECIMAL(16,2)) AS dd
-      |  FROM daily),
-      |win AS (
-      |  SELECT d, dd, count(*) OVER w AS fn,
-      |    sum(CAST(CAST(dd AS DECIMAL(19,2)) * dd AS DECIMAL(33,4)))
-      |      OVER w AS sdd2
-      |  FROM pk
-      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-      |SELECT d, CAST(CAST(dd AS VARCHAR) AS DOUBLE) AS drawdown,
-      |  sqrt(CAST(CAST(sdd2 AS VARCHAR) AS DOUBLE) / 14.0) AS ulcer
-      |FROM win WHERE fn = 14 ORDER BY d""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_diff_in_diff" -> (diffInDiff _),
-    "win_ulcer_index" -> (ulcerIndex _)
+    "evt_diff_in_diff" -> (diffInDiff _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_diff_in_diff" -> diffInDiffOracle,
-    "win_ulcer_index" -> ulcerIndexOracle
+    "evt_diff_in_diff" -> diffInDiffOracle
   )
 }

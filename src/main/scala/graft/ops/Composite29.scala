@@ -5,21 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.45b (round-8 additions, batch 3) — transition timing
-  * and windowed higher moments:
+/** SURVEY.md §2.45b (round-8 additions, batch 3) — transition
+  * timing and the bounded window funnel. (The batch's rolling
+  * skewness/kurtosis is in [[timeseries.Indicators]].)
   *
   *  - [[transitionTime]]: how LONG each event-type transition takes
   *    (the timing complement of `evt_markov_chain`'s transition
   *    counts). The per-user lag is ordered by (µs epoch, event_id) so
   *    tied timestamps cannot make the predecessor nondeterministic.
-  *
-  *  - [[rollingSkew]]: 30-day rolling skewness/kurtosis of each
-  *    nation's daily revenue — the `agg_higher_moments` discipline
-  *    moved into a ROWS window: power sums accumulate in EXACT
-  *    DECIMAL inside the frame (order-independent, so Spark's
-  *    recompute-per-row and DuckDB's segment-tree association cannot
-  *    diverge), the double assembly shares one formula text, and the
-  *    oracle routes decimal→double through VARCHAR (§1.5 r7).
   */
 object Composite29 {
 
@@ -56,79 +49,6 @@ object Composite29 {
       |  round(quantile_cont(gap_s, 0.5), 6) AS p50_gap_s
       |FROM l WHERE prev_type IS NOT NULL
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  // ---- win_rolling_skew --------------------------------------------
-  // Exact power sums of daily revenue CENTS inside the frame; the
-  // assembly formulas are shared TEXT so the IEEE trees match.
-  private val rxd = "CAST(x AS DECIMAL(18,2))"
-  private val rx2 = s"CAST($rxd * $rxd AS DECIMAL(38,4))"
-  private val rx3 = s"CAST($rx2 * $rxd AS DECIMAL(38,6))"
-  private val rx4 = s"CAST($rx2 * $rx2 AS DECIMAL(38,8))"
-  private val rm2F = "(s2/n - (s1/n)*(s1/n))"
-  private val rskewF =
-    s"round((s3/n - 3.0*(s1/n)*$rm2F - (s1/n)*(s1/n)*(s1/n)) / ($rm2F * sqrt($rm2F)), 6)"
-  private val rkurtF =
-    s"round((s4/n - 4.0*(s1/n)*(s3/n) + 6.0*(s1/n)*(s1/n)*(s2/n) " +
-      s"- 3.0*(s1/n)*(s1/n)*(s1/n)*(s1/n)) / ($rm2F*$rm2F) - 3.0, 6)"
-
-  /** `sumCast` renders the decimal-window-sum→double cast per engine
-    * (§1.5 r7: the oracle routes through VARCHAR because DuckDB's
-    * direct decimal→double cast double-rounds past 2^53). */
-  private def rollingSkewSql(daily: String, sumCast: String => String)
-      : String = {
-    def ws(inner: String, alias: String) =
-      s"${sumCast(s"sum($inner) OVER w30")} AS $alias"
-    s"""WITH $daily
-       |m AS (
-       |  SELECT n_name, day,
-       |    CAST(count(*) OVER w30 AS DOUBLE) AS n,
-       |    ${ws(rxd, "s1")},
-       |    ${ws(rx2, "s2")},
-       |    ${ws(rx3, "s3")},
-       |    ${ws(rx4, "s4")}
-       |  FROM daily
-       |  WINDOW w30 AS (PARTITION BY n_name ORDER BY day
-       |                 ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
-       |SELECT n_name, day, CAST(n AS BIGINT) AS n_days,
-       |  round(s1/n, 6) AS mean_rev,
-       |  $rskewF AS skewness,
-       |  $rkurtF AS kurtosis
-       |FROM m WHERE n >= 10
-       |ORDER BY n_name, day""".stripMargin
-  }
-
-  /** Test hook: the generated rolling-moments SQL over an externally
-    * registered `graft_skew_daily` view (Round27Spec feeds an
-    * alternating two-point series to assert zero skewness). */
-  private[graft] def rollingSkewSqlForTest: String =
-    rollingSkewSql("daily AS (SELECT * FROM graft_skew_daily),",
-      inner => s"CAST($inner AS DOUBLE)")
-
-  private def rollingSkew(s: SparkSession, dir: String): DataFrame = {
-    load(s, dir, "orders")
-      .join(broadcast(load(s, dir, "customer")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(load(s, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"), col("o_orderdate").cast("date").as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      .select(col("n_name"), col("day"), col("rev").cast("double").as("x"))
-      .createOrReplaceTempView("graft_skew_daily")
-    s.sql(rollingSkewSql(
-      "daily AS (SELECT * FROM graft_skew_daily),",
-      inner => s"CAST($inner AS DOUBLE)"))
-  }
-
-  private val rollingSkewOracle = rollingSkewSql(
-    """daily AS (
-      |  SELECT n_name, CAST(o_orderdate AS DATE) AS day,
-      |    CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR)
-      |      AS DOUBLE) AS x
-      |  FROM orders
-      |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey
-      |  GROUP BY n_name, day),""".stripMargin,
-    inner => s"CAST(CAST($inner AS VARCHAR) AS DOUBLE)")
 
   // ---- evt_window_funnel -------------------------------------------
   // ClickHouse-windowFunnel semantics, distinct from `evt_funnel`'s
@@ -187,13 +107,11 @@ object Composite29 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_transition_time" -> (transitionTime _),
-    "win_rolling_skew" -> (rollingSkew _),
     "evt_window_funnel" -> (windowFunnel _)
   )
 
   val oracle: Map[String, String] = Map(
     "evt_transition_time" -> transitionTimeOracle,
-    "win_rolling_skew" -> rollingSkewOracle,
     "evt_window_funnel" -> windowFunnelOracle
   )
 }

@@ -6,21 +6,19 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.21 — round-10 distribution and time-series
-  * operators: the Pareto revenue decile table (and its distributed
-  * ntile twin), order-2 behavior motifs, and truncated-kernel EWMA
-  * smoothing.
+/** SURVEY.md §2.21 — round-10 distribution and sequence operators:
+  * the Pareto revenue decile table (and its distributed ntile twin)
+  * and order-2 behavior motifs. (The round's truncated-kernel EWMA
+  * smoothing is in [[timeseries.Indicators]].)
   *
-  * Scale shapes: every operator is one map-side-combining aggregate
-  * over the fact plus windows on aggregate-sized (deciles / per-entity
-  * series) data; dimensions broadcast. The decile ntile runs over the
-  * |customers|-sized aggregate through the distributed
-  * [[graft.util.DistRank.globalNtile]], never the fact.
+  * Scale shapes: the deciles are one map-side-combining aggregate
+  * over the fact, ranked over the |customers|-sized aggregate through
+  * the distributed [[graft.util.DistRank.globalNtile]], never the
+  * fact; the motifs are one per-user lag window and a ≤|types|³-row
+  * aggregate.
   *
   * Float determinism: decile shares divide an EXACT decimal window
-  * total; EWMA weights are pinned double literals over exact daily
-  * decimal revenue, rounded by the floor-6 form both engines compute
-  * identically.
+  * total.
   */
 object Composite7 {
 
@@ -115,83 +113,12 @@ object Composite7 {
       |FROM s WHERE p2 IS NOT NULL
       |GROUP BY seq ORDER BY n DESC, seq LIMIT 20""".stripMargin
 
-  // ---- win_ewma_smooth ---------------------------------------------
-  // Truncated-kernel EWMA over each nation's daily order revenue:
-  // y_t = Σ_{j=0..7} w_j·x_{t-j} / Σ_{j present} w_j with w_j =
-  // 0.7^j pinned as exact double LITERALS (no cross-engine pow
-  // call). The recursive EWMA is inherently sequential; the
-  // 8-term truncation re-expresses it as a fixed window frame —
-  // embarrassingly parallel per nation, kernel mass 1−0.7^8 ≈ 94%
-  // covered. Daily revenue aggregates as exact DECIMAL (scaled
-  // ≪ 2^53, so the double conversion is exact); head-of-series
-  // rows renormalize over the weights actually present.
-  private val ewmaWeights = Seq(
-    "1.0", "0.7", "0.49", "0.343", "0.2401",
-    "0.16807", "0.117649", "0.0823543")
-
-  private def ewmaTerms(lagf: (String, Int) => String): (String, String) = {
-    val num = ewmaWeights.zipWithIndex.map { case (w, j) =>
-      s"coalesce(${lagf("x", j)}, 0.0) * $w"
-    }.mkString(" + ")
-    val den = ewmaWeights.zipWithIndex.map { case (w, j) =>
-      s"CASE WHEN ${lagf("x", j)} IS NULL THEN 0.0 ELSE $w END"
-    }.mkString(" + ")
-    (num, den)
-  }
-
-  private def ewmaSmooth(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .join(broadcast(load(s, dir, "customer")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(load(s, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"), col("o_orderdate").cast("date").as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      .select(col("n_name"), col("day"), col("rev").cast("double").as("x"))
-    val (num, den) = ewmaTerms((c, j) =>
-      if (j == 0) c
-      else s"lag($c, $j) OVER (PARTITION BY n_name ORDER BY day)")
-    daily.createOrReplaceTempView("daily_rev")
-    // floor(v·10⁶ + 0.5)/10⁶, not round(v, 6): Spark rounds the exact
-    // binary expansion of the double (BigDecimal HALF_UP) while DuckDB
-    // rounds via v*10⁶ in floating point — a value ~1e-12 from a .5
-    // boundary lands on different sides (the r9 tri-SF straddle,
-    // 1/55134 rows at sf0.1). The floor form is computed identically
-    // on identical doubles by BOTH engines (the llm_embed_quantize
-    // discipline), so the straddle cannot occur.
-    // 1e6, not 1000000.0: a plain decimal literal parses as DECIMAL in
-    // Spark SQL and drags the division into decimal arithmetic (the
-    // result surfaced as DECIMAL, red on dtype); the exponent literal
-    // is DOUBLE in both engines, keeping the whole tree IEEE.
-    s.sql(
-      s"""SELECT n_name, day, round(x, 2) AS revenue,
-         |  floor((($num) / ($den)) * 1e6 + 0.5) / 1e6 AS ewma
-         |FROM daily_rev ORDER BY n_name, day""".stripMargin)
-  }
-
-  private val ewmaOracle = {
-    val (num, den) = ewmaTerms((c, j) =>
-      if (j == 0) c
-      else s"lag($c, $j) OVER (PARTITION BY n_name ORDER BY day)")
-    s"""WITH daily_rev AS (
-       |  SELECT n_name, CAST(o_orderdate AS DATE) AS day,
-       |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x
-       |  FROM orders
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN nation ON c_nationkey = n_nationkey
-       |  GROUP BY n_name, day)
-       |SELECT n_name, day, round(x, 2) AS revenue,
-       |  floor((($num) / ($den)) * 1e6 + 0.5) / 1e6 AS ewma
-       |FROM daily_rev ORDER BY n_name, day""".stripMargin
-  }
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_pareto_deciles" -> (paretoDeciles _),
     "agg_ntile_distributed" -> (ntileDistributed _),
-    "evt_top_sequences" -> (topSequences _),
-    "win_ewma_smooth" -> (ewmaSmooth _)
+    "evt_top_sequences" -> (topSequences _)
   )
 
   val oracle: Map[String, String] = Map(
@@ -199,7 +126,6 @@ object Composite7 {
     // The distributed twin must match the SAME ntile answer — one
     // oracle text, two physical plans under driver hash-compare.
     "agg_ntile_distributed" -> paretoOracle,
-    "evt_top_sequences" -> topSequencesOracle,
-    "win_ewma_smooth" -> ewmaOracle
+    "evt_top_sequences" -> topSequencesOracle
   )
 }

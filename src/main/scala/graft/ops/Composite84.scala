@@ -1,13 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.90 (round-18 batch 4) — pipeline data-quality audits
-  * and a second change-point lens:
+/** SURVEY.md §2.90 (round-18 batch 4) — pipeline data-quality
+  * audits. (The batch's Buishand range change-point statistic is in
+  * [[timeseries.Stationarity]].)
   *
   *  - `dq_embedding_norms`: the L2-norm + dimension audit of the
   *    embedding table — the FIRST check before any ANN/semantic-dedup
@@ -25,17 +25,6 @@ import graft.util.Tables._
   *    histogram is skewed, every downstream sample inherits bias).
   *    χ² = (256·Σo² − n²)/n is EXACT integers until one double
   *    division; verdict vs the pinned χ²₂₅₅ 5% point 293.2478.
-  *  - `evt_buishand_range`: Buishand's rescaled-range change-point
-  *    statistic per event type — the CUMULATIVE-DEVIATION lens
-  *    beside `evt_pettitt_changepoint`'s rank lens (Pettitt reacts
-  *    to a median shift, Buishand R to sustained drift of the mean;
-  *    the pair is the standard homogeneity battery). Scaled partial
-  *    sums S'_t = T·cum_t − t·Σx are exact BIGINTs (no rational
-  *    mean ever materializes), R' = max S' − min S' exact, and the
-  *    rescaled R/(s√T) = R'/(√(T·Σx²−(Σx)²)·√T) is one shared-text
-  *    expression over exact integers (critical values are tabulated
-  *    per T — Buishand 1982 — so the row surfaces the statistic, the
-  *    Quade convention).
   */
 object Composite84 {
 
@@ -125,85 +114,15 @@ object Composite84 {
        |SELECT ${huSelect.mkString(",\n  ")}
        |FROM g""".stripMargin
 
-  // ---- evt_buishand_range ---------------------------------------------
-  private val brSelect = Seq("event_type", "n_days",
-    """floor((CAST(rr AS DOUBLE)/nullif(CAST(n_days AS DOUBLE), 0))*1e6 + 0.5)/1e6
-      | AS buishand_r""".stripMargin,
-    """floor((CAST(rr AS DOUBLE)
-      |  / nullif(sqrt(CAST(n_days*sxx - sx*sx AS DOUBLE))
-      |      * sqrt(CAST(n_days AS DOUBLE)), 0))*1e6 + 0.5)/1e6
-      | AS r_rescaled""".stripMargin)
-
-  private[graft] def buishandOn(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("event_type"),
-        datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("dd"))
-      .groupBy(col("event_type"), col("dd"))
-      .agg(count(lit(1)).as("y"))
-    val byType = Window.partitionBy(col("event_type"))
-    // S'_t = T·cum_t − t·Σx: exact BIGINTs (the mean never
-    // materializes as a rational); S'_0 = S'_T = 0 are members of the
-    // range by construction, so max ≥ 0 ≥ min without special rows.
-    val sp = daily
-      .withColumn("tt", count(lit(1)).over(byType))
-      .withColumn("sx", sum(col("y")).over(byType))
-      .withColumn("sxx", sum(col("y") * col("y")).over(byType))
-      .withColumn("cum", sum(col("y")).over(byType.orderBy(col("dd"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("idx", row_number().over(byType.orderBy(col("dd"))))
-      .select(col("event_type"), col("tt"), col("sx"), col("sxx"),
-        (col("tt") * col("cum") - col("idx") * col("sx")).as("s2"))
-    sp.groupBy(col("event_type"))
-      .agg(max(col("tt")).as("n_days"), max(col("sx")).as("sx"),
-        max(col("sxx")).as("sxx"),
-        (greatest(max(col("s2")), lit(0L)) -
-          least(min(col("s2")), lit(0L))).as("rr"))
-      .selectExpr(brSelect: _*)
-      .orderBy("event_type")
-  }
-
-  private def buishand(s: SparkSession, dir: String): DataFrame =
-    buishandOn(loadEvents(s, dir))
-
-  private val brOracle =
-    s"""WITH daily AS (
-       |  SELECT event_type,
-       |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS dd,
-       |    CAST(count(*) AS BIGINT) AS y
-       |  FROM events GROUP BY 1, 2),
-       |sp AS (
-       |  SELECT event_type,
-       |    CAST(count(*) OVER w0 AS BIGINT) AS tt,
-       |    CAST(sum(y) OVER w0 AS BIGINT) AS sx,
-       |    CAST(sum(y*y) OVER w0 AS BIGINT) AS sxx,
-       |    CAST(count(*) OVER w0 AS BIGINT)
-       |      * CAST(sum(y) OVER (PARTITION BY event_type ORDER BY dd
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      - CAST(row_number() OVER (PARTITION BY event_type ORDER BY dd) AS BIGINT)
-       |      * CAST(sum(y) OVER w0 AS BIGINT) AS s2
-       |  FROM daily
-       |  WINDOW w0 AS (PARTITION BY event_type)),
-       |g AS (
-       |  SELECT event_type, max(tt) AS n_days, max(sx) AS sx,
-       |    max(sxx) AS sxx,
-       |    greatest(max(s2), 0) - least(min(s2), 0) AS rr
-       |  FROM sp GROUP BY 1)
-       |SELECT ${brSelect.mkString(",\n  ")}
-       |FROM g
-       |ORDER BY event_type""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_embedding_norms" -> (embeddingNorms _),
-    "dq_hash_uniformity" -> (hashUniformity _),
-    "evt_buishand_range" -> (buishand _)
+    "dq_hash_uniformity" -> (hashUniformity _)
   )
 
   val oracle: Map[String, String] = Map(
     "dq_embedding_norms" -> enOracle,
-    "dq_hash_uniformity" -> huOracle,
-    "evt_buishand_range" -> brOracle
+    "dq_hash_uniformity" -> huOracle
   )
 }

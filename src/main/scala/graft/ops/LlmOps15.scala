@@ -1,21 +1,19 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
 /** SURVEY.md §2.34 — round-15 seventh batch: temporal distribution
-  * drift and expected-shortfall tail risk. (The batch's clustering
-  * purity row is in [[retrieval.Geometry]].)
+  * drift. (The batch's clustering purity row is in
+  * [[retrieval.Geometry]], its expected shortfall in
+  * [[timeseries.Indicators]].)
   *
-  * Scale shapes: drift is two conditional aggregates over event
-  * types; CVaR runs over the horizon-bounded daily aggregate with a
-  * 1-row percentile broadcast.
+  * Scale shape: two conditional aggregates over event types and a
+  * 1-row broadcast of the totals.
   *
-  * Determinism: drift shares are exact-count ratios; daily revenue
-  * stays decimal-exact until the final statistics.
+  * Determinism: drift shares are exact-count ratios.
   */
 object LlmOps15 {
 
@@ -64,58 +62,13 @@ object LlmOps15 {
       |FROM cells CROSS JOIN tot
       |ORDER BY event_type""".stripMargin
 
-  // ---- agg_cvar ----------------------------------------------------
-  // Expected shortfall (CVaR₀.₀₅) of daily revenue: the mean of the
-  // worst-5% days, plus the VaR threshold and the single worst day —
-  // the tail-risk complement to win_drawdown's path risk. Daily
-  // revenue is decimal-exact; the 5th-percentile threshold
-  // interpolates those exact values; the tail mean's double drift is
-  // absorbed by 6-dp rounding.
-  private def cvar(s: SparkSession, dir: String): DataFrame = {
-    val daily = load(s, dir, "orders")
-      .groupBy(col("o_orderdate").cast("date").as("d"))
-      .agg(asD(sum(money(col("o_totalprice"))).cast("decimal(18,2)"))
-        .as("rev"))
-    val th = broadcast(daily.agg(
-      expr("percentile(rev, 0.05)").as("var05")))
-    val worst = Window.orderBy(col("rev").asc, col("d").asc)
-    daily.crossJoin(th)
-      .withColumn("wr", row_number().over(worst))
-      .agg(count(lit(1)).as("n_days"),
-        round(first(col("var05")), 6).as("var05"),
-        round(avg(when(col("rev") <= col("var05"), col("rev"))), 6)
-          .as("cvar05"),
-        max(when(col("wr") === 1, col("d"))).as("worst_day"),
-        round(max(when(col("wr") === 1, col("rev"))), 6).as("worst_rev"))
-  }
-
-  private val cvarOracle =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(15,2)))
-      |      AS DECIMAL(18,2)) AS VARCHAR) AS DOUBLE) AS rev
-      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
-      |th AS (SELECT quantile_cont(rev, 0.05) AS var05 FROM daily),
-      |w AS (
-      |  SELECT d, rev, var05,
-      |    row_number() OVER (ORDER BY rev, d) AS wr
-      |  FROM daily CROSS JOIN th)
-      |SELECT CAST(count(*) AS BIGINT) AS n_days,
-      |  round(any_value(var05), 6) AS var05,
-      |  round(avg(CASE WHEN rev <= var05 THEN rev END), 6) AS cvar05,
-      |  max(CASE WHEN wr = 1 THEN d END) AS worst_day,
-      |  round(max(CASE WHEN wr = 1 THEN rev END), 6) AS worst_rev
-      |FROM w""".stripMargin
-
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_distribution_drift" -> (distributionDrift _),
-    "agg_cvar" -> (cvar _)
+    "evt_distribution_drift" -> (distributionDrift _)
   )
 
   val oracle: Map[String, String] = Map(
-    "evt_distribution_drift" -> distributionDriftOracle,
-    "agg_cvar" -> cvarOracle
+    "evt_distribution_drift" -> distributionDriftOracle
   )
 }

@@ -117,9 +117,9 @@ object KSample {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val med = cnts
       .select(col("o_orderpriority"), col("c"),
-        sum(col("cnt")).over(wc).as("cum"))
-      .join(broadcast(cnts.groupBy(col("o_orderpriority"))
-        .agg(sum(col("cnt")).as("ng"))), "o_orderpriority")
+        sum(col("cnt")).over(wc).as("cum"),
+        sum(col("cnt")).over(Window.partitionBy(col("o_orderpriority")))
+          .as("ng"))
       .groupBy(col("o_orderpriority"))
       .agg(min(when(col("cum") * 2 >= col("ng"), col("c"))).as("med"))
     val cols = aggColumns(leveneF.aggs)

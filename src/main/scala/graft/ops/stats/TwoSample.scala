@@ -1032,9 +1032,9 @@ object TwoSample {
             |  * (CAST(n2r AS DOUBLE)/CAST(n AS DOUBLE))
             |  * (CAST(n - d AS DOUBLE)/nullif(CAST(n - 1 AS DOUBLE), 0))""".stripMargin)
           .as("vt"))
-    val tot = life.agg(
-      sum(isGroup1.cast("int")).cast("bigint").as("n1"),
-      sum(lit(1) - isGroup1.cast("int")).cast("bigint").as("n2"))
+    val tot = byDur.agg(
+      sum(col("c1")).cast("bigint").as("n1"),
+      sum(col("c2")).cast("bigint").as("n2"))
     terms.agg(count(lit(1)).as("n_event_times"),
         sum(col("d1")).cast("bigint").as("o1"),
         sum(col("et")).as("e1"), sum(col("vt")).as("v"))

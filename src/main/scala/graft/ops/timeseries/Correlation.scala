@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** Serial and cross-series correlation of the daily series
-  * (SURVEY.md §2.61, §2.69, §2.72, §2.75, §2.87):
+  * (SURVEY.md §2.24, §2.30, §2.61, §2.69, §2.72, §2.75, §2.87):
   *
   *  - [[ljungBox]]: Ljung-Box Q(7) per event type — pools SEVEN lags
   *    of the count series into the one portmanteau statistic ("is
@@ -43,13 +43,21 @@ import graft.util.Tables._
   *    OLS even valid here" gate. DW = Σ(e_t−e_{t−1})²/Σe_t² ∈ [0,4],
   *    flagged positive-autocorrelation at the conventional 1.5 cut.
   *
+  *  - [[autocorr]]: lag-1 and lag-7 autocorrelation of the global
+  *    daily order revenue ([[Series.byOrderDay]]).
+  *
+  *  - [[rollingCorr]]: 30-day rolling Pearson correlation between
+  *    daily order count and daily revenue — the volume/value
+  *    co-movement monitor, full frames only.
+  *
   * Scale shapes: the correlograms read ONE [[Series.lagMoments]]
   * co-moment hash aggregate (lag windows over [[Series.daily]]) and
   * unpivot with `stack`; PACF's recursion is 7 chained 1-row
   * projection stages with no data motion after the aggregate; the
   * cross-series rows window over the |days|-bounded [[Series.paired]]
   * pivot; Durbin-Watson is one indexed daily pass, a 5-row stats
-  * broadcast, and one residual lag window.
+  * broadcast, and one residual lag window; the order-series rows run
+  * single-partition windows over ≤ one row per calendar day.
   *
   * Determinism: every co-moment is an exact BIGINT (Granger's
   * cross-products in DECIMAL(38,0) with VARCHAR routing, §1.5 r7/r9);
@@ -511,13 +519,111 @@ object Correlation {
       |  (sdd/nullif(see, 0) < 1.5) AS positive_autocorr_dw15
       |FROM g ORDER BY event_type""".stripMargin
 
+  // ---- agg_autocorr ------------------------------------------------
+  // Lag-1 and lag-7 autocorrelation of the global daily revenue
+  // series. The lag windows run in one partition over ≤ one row per
+  // calendar day (horizon-bounded, the agg_histogram argument); each
+  // lag's Pearson correlation is computed over exactly the rows where
+  // that lag exists, pinned by explicit NOT NULL filters on both
+  // sides rather than trusting null-skipping symmetry.
+  private def autocorr(s: SparkSession, dir: String): DataFrame = {
+    val daily = Series.byOrderDay(load(s, dir, "orders"),
+      sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("x"))
+    val w = Window.orderBy("d")
+    val lagged = daily
+      .withColumn("l1", lag(col("x"), 1).over(w))
+      .withColumn("l7", lag(col("x"), 7).over(w))
+    val a1 = lagged.filter(col("l1").isNotNull)
+      .agg(count(lit(1)).as("n_days"), round(corr(col("x"), col("l1")), 6).as("ac_lag1"))
+    val a7 = lagged.filter(col("l7").isNotNull)
+      .agg(round(corr(col("x"), col("l7")), 6).as("ac_lag7"))
+    a1.crossJoin(a7)
+  }
+
+  private val autocorrOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d,
+      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      |lagged AS (
+      |  SELECT x,
+      |    lag(x, 1) OVER (ORDER BY d) AS l1,
+      |    lag(x, 7) OVER (ORDER BY d) AS l7
+      |  FROM daily),
+      |a1 AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n_days,
+      |    round(corr(x, l1), 6) AS ac_lag1
+      |  FROM lagged WHERE l1 IS NOT NULL),
+      |a7 AS (
+      |  SELECT round(corr(x, l7), 6) AS ac_lag7
+      |  FROM lagged WHERE l7 IS NOT NULL)
+      |SELECT n_days, ac_lag1, ac_lag7 FROM a1 CROSS JOIN a7""".stripMargin
+
+
+  // ---- win_rolling_corr --------------------------------------------
+  // 30-day rolling Pearson correlation between daily order count and
+  // daily revenue — the co-movement monitor between volume and value.
+  // Window sums accumulate EXACT values (bigint counts, decimal
+  // revenue and decimal cross-products); the correlation assembles
+  // once per row from six exact sums via shared IEEE text. Output
+  // restricted to full 30-row frames (warm-up excluded — a partial
+  // frame's correlation is not comparable).
+  private def rollingCorr(s: SparkSession, dir: String): DataFrame = {
+    val daily = Series.byOrderDay(load(s, dir, "orders"),
+      count(lit(1)).as("x"),
+      sum(money(col("o_totalprice"))).cast("decimal(18,2)").as("y"))
+    val w = Window.orderBy("d").rowsBetween(-29, Window.currentRow)
+    val corrF =
+      """round((sxy - sx * sy / n) /
+        |  (sqrt(sx2 - sx * sx / n) * sqrt(sy2 - sy * sy / n)), 6)"""
+        .stripMargin
+    daily
+      .withColumn("n", count(lit(1)).over(w).cast("double"))
+      .withColumn("sx", sum(col("x")).over(w).cast("double"))
+      .withColumn("sy", sum(col("y")).over(w).cast("double"))
+      .withColumn("sxy", sum(col("x") * col("y")).over(w).cast("double"))
+      .withColumn("sx2", sum(col("x") * col("x")).over(w).cast("double"))
+      .withColumn("sy2",
+        sum((col("y") * col("y")).cast("decimal(38,4)")).over(w)
+          .cast("double"))
+      .filter(col("n") === 30.0)
+      .select(col("d"), col("x"), asD(col("y")).as("y"),
+        expr(corrF).as("corr30"))
+      .orderBy("d")
+  }
+
+  private val rollingCorrOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS x,
+      |    CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DECIMAL(18,2)) AS y
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      |s AS (
+      |  SELECT d, x, y,
+      |    CAST(count(*) OVER w AS DOUBLE) AS n,
+      |    CAST(sum(x) OVER w AS DOUBLE) AS sx,
+      |    CAST(CAST(sum(y) OVER w AS VARCHAR) AS DOUBLE) AS sy,
+      |    CAST(CAST(sum(x * y) OVER w AS VARCHAR) AS DOUBLE) AS sxy,
+      |    CAST(sum(x * x) OVER w AS DOUBLE) AS sx2,
+      |    CAST(CAST(sum(CAST(CAST(y AS DECIMAL(19,2)) * y
+      |      AS DECIMAL(38,4))) OVER w AS VARCHAR) AS DOUBLE) AS sy2
+      |  FROM daily
+      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
+      |SELECT d, x, CAST(CAST(y AS VARCHAR) AS DOUBLE) AS y,
+      |  round((sxy - sx * sy / n) /
+      |    (sqrt(sx2 - sx * sx / n) * sqrt(sy2 - sy * sy / n)), 6) AS corr30
+      |FROM s WHERE n = 30.0
+      |ORDER BY d""".stripMargin
+
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_ljung_box" -> (ljungBox _),
     "win_acf_table" -> (acfTable _),
     "evt_pacf_table" -> (pacfTable _),
     "evt_cross_correlation" -> (crossCorrelation _),
     "evt_granger_lite" -> (grangerLite _),
-    "evt_durbin_watson" -> (durbinWatson _)
+    "evt_durbin_watson" -> (durbinWatson _),
+    "agg_autocorr" -> (autocorr _),
+    "win_rolling_corr" -> (rollingCorr _)
   )
 
   val oracle: Map[String, String] = Map(
@@ -526,6 +632,8 @@ object Correlation {
     "evt_pacf_table" -> pacfOracle,
     "evt_cross_correlation" -> crossCorrOracle,
     "evt_granger_lite" -> grangerOracle,
-    "evt_durbin_watson" -> durbinWatsonOracle
+    "evt_durbin_watson" -> durbinWatsonOracle,
+    "agg_autocorr" -> autocorrOracle,
+    "win_rolling_corr" -> rollingCorrOracle
   )
 }

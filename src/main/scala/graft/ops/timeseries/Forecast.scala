@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** One-step-ahead forecast backtests over the daily series
-  * (SURVEY.md §2.49, §2.59, §2.80):
+  * (SURVEY.md §2.30, §2.49, §2.59, §2.80):
   *
   *  - [[ewmaBacktest]]: truncated-EWMA (α = ½, 16 lags) forecasts of
   *    daily event counts, scored as MAE / bias / naive-baseline MAE
@@ -31,8 +31,13 @@ import graft.util.Tables._
   *    Lags shrink to 4/2 because the events corpus spans 30 days per
   *    type at EVERY SF, so the 8-lag warmup would never score a row.
   *
-  * Row-lag (not calendar-lag) semantics throughout, identical in the
-  * oracle, so day gaps cannot diverge the two engines.
+  *  - [[seasonalNaive]]: the seasonal-naive forecaster ŷ(d) = y(d−7)
+  *    over the daily order counts ([[Series.orderCounts]]), scored
+  *    as MAPE / sMAPE / bias.
+  *
+  * Row-lag (not calendar-lag) semantics for the smoothing rows,
+  * identical in the oracle, so day gaps cannot diverge the two
+  * engines; the seasonal-naive lag is a calendar equi-join on d−7.
   *
   * Scale shapes: every lag window reads [[Series.daily]] and all
   * stages of one row share one (event_type, d) sort, ending in ONE
@@ -319,15 +324,49 @@ object Forecast {
        |FROM g ORDER BY event_type""".stripMargin
   }
 
+  // ---- evt_seasonal_naive_backtest ---------------------------------
+  // Backtest of the seasonal-naive forecaster (ŷ(d) = y(d−7)) on the
+  // daily order-count series: MAPE, sMAPE, and bias over every day
+  // with a 7-days-earlier observation. The lag is a gap-safe
+  // EQUI-JOIN on d−7 (not a row-offset lag — a missing calendar day
+  // would silently shift a lag(7) window), which also keeps the
+  // daily-series join co-partitioned at any scale.
+  private def seasonalNaive(s: SparkSession, dir: String): DataFrame = {
+    val daily = Series.orderCounts(load(s, dir, "orders"))
+    val f = daily.select(date_add(col("d"), 7).as("d"), col("c").as("fc"))
+    daily.join(f, "d")
+      .agg(count(lit(1)).as("n_scored"),
+        round(avg(abs(col("c") - col("fc")).cast("double") /
+          col("c").cast("double")), 6).as("mape"),
+        round(avg(abs(col("c") - col("fc")).cast("double") * 2.0 /
+          (col("c") + col("fc")).cast("double")), 6).as("smape"),
+        round(avg((col("c") - col("fc")).cast("double")), 6).as("bias"))
+  }
+
+  private val seasonalNaiveOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE))
+      |SELECT CAST(count(*) AS BIGINT) AS n_scored,
+      |  round(avg(CAST(abs(a.c - f.c) AS DOUBLE) / CAST(a.c AS DOUBLE)), 6)
+      |    AS mape,
+      |  round(avg(CAST(abs(a.c - f.c) AS DOUBLE) * 2.0 /
+      |    CAST(a.c + f.c AS DOUBLE)), 6) AS smape,
+      |  round(avg(CAST(a.c - f.c AS DOUBLE)), 6) AS bias
+      |FROM daily a JOIN daily f ON a.d = f.d + 7""".stripMargin
+
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "win_ewma_backtest" -> (ewmaBacktest _),
     "win_holt_backtest" -> (holtBacktest _),
-    "evt_holt_winters" -> (holtWinters _)
+    "evt_holt_winters" -> (holtWinters _),
+    "evt_seasonal_naive_backtest" -> (seasonalNaive _)
   )
 
   val oracle: Map[String, String] = Map(
     "win_ewma_backtest" -> ewmaBacktestOracle,
     "win_holt_backtest" -> holtBacktestOracle,
-    "evt_holt_winters" -> holtWintersOracle
+    "evt_holt_winters" -> holtWintersOracle,
+    "evt_seasonal_naive_backtest" -> seasonalNaiveOracle
   )
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** Calendar coverage, randomness, trend-recency and seasonality of
-  * the daily series (SURVEY.md §2.55, §2.56, §2.58, §2.82, §2.88):
+  * the daily series (SURVEY.md §2.31, §2.36, §2.55, §2.56, §2.58,
+  * §2.82, §2.88):
   *
   *  - [[calendarGaps]]: calendar-completeness audit per event type —
   *    observed days vs the first→last span, missing-day total, gap
@@ -44,6 +45,14 @@ import graft.util.Tables._
   *    nd·y_t − T (integer mean-removal — no double subtraction before
   *    the transform). Row-index phase (not calendar), mirrored in the
   *    oracle.
+  *
+  *  - [[seasonalDecompose]]: additive weekday decomposition of the
+  *    daily order counts — trend = centered 7-day moving average
+  *    ([[Series.detrended]]), seasonal index = mean detrended value
+  *    per weekday, with each weekday's residual spread.
+  *
+  *  - [[anomalyStl]]: the days whose residual after trend and
+  *    weekday index exceeds 3× the residual sd.
   *
   * Scale shapes: every row windows over [[Series.daily]] (lag columns
   * share ONE (type, d) sort); the picked median broadcasts back (the
@@ -435,13 +444,116 @@ object Patterns {
        |SELECT ${pgFinal.mkString(",\n  ")}
        |FROM g ORDER BY event_type, period""".stripMargin
 
+  // ---- win_seasonal_decompose --------------------------------------
+  // Additive seasonal decomposition of the daily order series
+  // (STL-lite): trend = centered 7-day moving average (full frames
+  // only), detrended = c − trend, seasonal index = mean detrended
+  // value per ISO weekday. Surfaces the 7 weekday indices plus each
+  // weekday's residual spread (sd of detrended − seasonal). The
+  // whole computation runs over the ~2.4k-row daily aggregate —
+  // horizon-bounded, the changepoint precedent.
+  private def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
+    val det = Series.detrended(load(s, dir, "orders"))
+    val seas = det.groupBy("dow")
+      .agg(count(lit(1)).as("n_days"), avg(col("dev")).as("si"),
+        sum(col("dev") * col("dev")).as("sdev2"),
+        sum(col("dev")).as("sdev"))
+    seas.select(col("dow"), col("n_days"),
+      round(col("si"), 6).as("seasonal"),
+      round(sqrt((col("sdev2") - col("sdev") * col("sdev") /
+        col("n_days").cast("double")) /
+        (col("n_days").cast("double") - 1.0)), 6).as("resid_sd"))
+      .orderBy("dow")
+  }
+
+  private val seasonalDecomposeOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      |t AS (
+      |  SELECT d, c,
+      |    CAST(count(*) OVER w AS BIGINT) AS fn,
+      |    CAST(sum(c) OVER w AS DOUBLE) / CAST(count(*) OVER w AS DOUBLE)
+      |      AS trend
+      |  FROM daily
+      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      |det AS (
+      |  SELECT CAST(dayofweek(d) + 1 AS INT) AS dow,
+      |    CAST(c AS DOUBLE) - trend AS dev
+      |  FROM t WHERE fn = 7),
+      |seas AS (
+      |  SELECT dow, CAST(count(*) AS BIGINT) AS n_days, avg(dev) AS si,
+      |    sum(dev * dev) AS sdev2, sum(dev) AS sdev
+      |  FROM det GROUP BY dow)
+      |SELECT dow, n_days, round(si, 6) AS seasonal,
+      |  round(sqrt((sdev2 - sdev * sdev / CAST(n_days AS DOUBLE)) /
+      |    (CAST(n_days AS DOUBLE) - 1.0)), 6) AS resid_sd
+      |FROM seas ORDER BY dow""".stripMargin
+
+
+  // ---- evt_anomaly_stl ---------------------------------------------
+  // Seasonally-adjusted anomaly days: reuse win_seasonal_decompose's
+  // trend (centered 7-day MA) and weekday index, then flag days
+  // where |residual| exceeds 3× the global residual sd — the
+  // decomposition-aware upgrade of evt_anomaly_iqr's raw fences.
+  // Surfaces only flagged days (bounded by the horizon).
+  private def anomalyStl(s: SparkSession, dir: String): DataFrame = {
+    val det = Series.detrended(load(s, dir, "orders"))
+    val seas = det.groupBy("dow").agg(avg(col("dev")).as("si"))
+    val resid = det.join(broadcast(seas), "dow")
+      .select(col("d"), col("c"), col("trend"), col("si"),
+        (col("dev") - col("si")).as("r"))
+    val sd = broadcast(resid.agg(
+      count(lit(1)).cast("double").as("n"),
+      sum(col("r")).as("sr"), sum(col("r") * col("r")).as("sr2"))
+      .select(sqrt((col("sr2") - col("sr") * col("sr") / col("n")) /
+        (col("n") - 1.0)).as("rsd")))
+    resid.crossJoin(sd)
+      .filter(abs(col("r")) > col("rsd") * 3.0)
+      .select(col("d"), col("c"), round(col("trend"), 6).as("trend"),
+        round(col("si"), 6).as("seasonal"),
+        round(col("r"), 6).as("residual"),
+        round(abs(col("r")) / col("rsd"), 6).as("sigma"))
+      .orderBy("d")
+  }
+
+  private val anomalyStlOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      |t AS (
+      |  SELECT d, c, CAST(count(*) OVER w AS BIGINT) AS fn,
+      |    CAST(sum(c) OVER w AS DOUBLE) / CAST(count(*) OVER w AS DOUBLE)
+      |      AS trend
+      |  FROM daily
+      |  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      |det AS (
+      |  SELECT d, c, trend, CAST(dayofweek(d) + 1 AS INT) AS dow,
+      |    CAST(c AS DOUBLE) - trend AS dev
+      |  FROM t WHERE fn = 7),
+      |seas AS (SELECT dow, avg(dev) AS si FROM det GROUP BY dow),
+      |resid AS (
+      |  SELECT det.d, det.c, det.trend, seas.si, det.dev - seas.si AS r
+      |  FROM det JOIN seas ON det.dow = seas.dow),
+      |sd AS (
+      |  SELECT sqrt((sum(r * r) - sum(r) * sum(r) / count(*)) /
+      |    (count(*) - 1.0)) AS rsd FROM resid)
+      |SELECT d, c, round(trend, 6) AS trend, round(si, 6) AS seasonal,
+      |  round(r, 6) AS residual, round(abs(r) / rsd, 6) AS sigma
+      |FROM resid CROSS JOIN sd
+      |WHERE abs(r) > rsd * 3.0
+      |ORDER BY d""".stripMargin
+
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_calendar_gaps" -> (calendarGaps _),
     "win_runs_test" -> (runsTest _),
     "win_turning_points" -> (turningPoints _),
     "win_aroon" -> (aroon _),
     "evt_seasonal_strength" -> (seasonalStrength _),
-    "evt_periodogram" -> (periodogram _)
+    "evt_periodogram" -> (periodogram _),
+    "win_seasonal_decompose" -> (seasonalDecompose _),
+    "evt_anomaly_stl" -> (anomalyStl _)
   )
 
   val oracle: Map[String, String] = Map(
@@ -450,6 +562,8 @@ object Patterns {
     "win_turning_points" -> turningPointsOracle,
     "win_aroon" -> aroonOracle,
     "evt_seasonal_strength" -> seasonalStrengthOracle,
-    "evt_periodogram" -> periodogramOracle
+    "evt_periodogram" -> periodogramOracle,
+    "win_seasonal_decompose" -> seasonalDecomposeOracle,
+    "evt_anomaly_stl" -> anomalyStlOracle
   )
 }

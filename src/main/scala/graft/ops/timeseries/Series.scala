@@ -1,10 +1,14 @@
 package graft.ops.timeseries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The daily event series every time-series row reads, defined once:
+import graft.util.Tables._
+
+/** The daily series every time-series row reads, defined once.
+  *
+  * Events, keyed by event type:
   *
   *  - [[daily]]: (event_type, d, y) — events per (type, UTC day).
   *    Every window over it partitions by the few-value `event_type`
@@ -19,8 +23,31 @@ import org.apache.spark.sql.functions._
   *    the daily series and the one ρ_k formula text assembled from
   *    them by every correlogram row, on both engines.
   *
-  * Oracle SQL keeps its own `WITH daily AS` CTE per row: the oracles
-  * are the independent reference the builders are checked against.
+  *  - [[dayIndexed]]: (event_type, dd, y) — the same counts keyed by
+  *    the day index (days since 1970-01-01, BIGINT), for the rows
+  *    that do arithmetic on days.
+  *
+  * Orders, keyed by [[byOrderDay]] (`o_orderdate` as a DATE, column
+  * d) — one row per calendar day, so every window over them sorts
+  * |days|, never |orders|:
+  *
+  *  - [[orderCounts]] (d, c) and [[revenue]] (d, rev DECIMAL(15,2));
+  *
+  *  - [[candle]] (d, hi, lo, cl): the day's high, low and last
+  *    (highest o_orderkey) order value in exact cents, with the one
+  *    Wilder [[trueRange]] over it — a CASE cascade, not greatest(),
+  *    because DuckDB's greatest() on decimals widens to DOUBLE;
+  *
+  *  - [[nationRevenue]] (n_name, d, rev) with its oracle text
+  *    [[nationDailySql]], and the 7-day level / running peak
+  *    [[levelPeak]] over it that both drawdown rows read;
+  *
+  *  - [[detrended]]: the order counts less their centered 7-day
+  *    moving average, full frames only.
+  *
+  * Oracle SQL keeps its own `WITH daily AS` CTE per row (the nation
+  * revenue text is the one shared CTE body): the oracles are the
+  * independent reference the builders are checked against.
   */
 private[graft] object Series {
 
@@ -65,5 +92,88 @@ private[graft] object Series {
       sum(col("y") * col(s"l$k")).as(s"sab$k")))
     lagged.groupBy(col("event_type"))
       .agg(aggs.head, aggs.tail: _*)
+  }
+
+  def dayIndexed(events: DataFrame): DataFrame =
+    events
+      .select(col("event_type"),
+        datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
+          .cast("bigint").as("dd"))
+      .groupBy(col("event_type"), col("dd"))
+      .agg(count(lit(1)).as("y"))
+
+  private def orderDay: Column = col("o_orderdate").cast("date").as("d")
+
+  /** Orders grouped by calendar day d with the given aggregates. */
+  def byOrderDay(orders: DataFrame, aggs: Column*): DataFrame =
+    orders.groupBy(orderDay).agg(aggs.head, aggs.tail: _*)
+
+  def orderCounts(orders: DataFrame): DataFrame =
+    byOrderDay(orders, count(lit(1)).as("c"))
+
+  def revenue(orders: DataFrame): DataFrame =
+    byOrderDay(orders,
+      sum(money(col("o_totalprice"))).cast("decimal(15,2)").as("rev"))
+
+  def candle(orders: DataFrame): DataFrame = {
+    val cents = (money(col("o_totalprice")) * 100).cast("bigint")
+    byOrderDay(orders, max(cents).as("hi"), min(cents).as("lo"),
+      max_by(cents, col("o_orderkey")).as("cl"))
+  }
+
+  /** True range of a [[candle]] row given the previous close `pc`. */
+  val trueRange: Column =
+    when(col("pc").isNull, col("hi") - col("lo"))
+      .when(col("hi") - col("lo") >= abs(col("hi") - col("pc")) &&
+        col("hi") - col("lo") >= abs(col("lo") - col("pc")),
+        col("hi") - col("lo"))
+      .when(abs(col("hi") - col("pc")) >= abs(col("lo") - col("pc")),
+        abs(col("hi") - col("pc")))
+      .otherwise(abs(col("lo") - col("pc")))
+
+  /** Daily revenue per nation, DECIMAL(18,2) input so cumulative
+    * sums and maxes stay exact. */
+  def nationRevenue(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "orders")
+      .join(broadcast(load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_nationkey"))),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(load(s, dir, "nation")
+        .select(col("n_nationkey"), col("n_name"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("n_name"), orderDay)
+      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
+
+  val nationDailySql: String =
+    """SELECT n_name, CAST(o_orderdate AS DATE) AS d,
+      |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+      |  FROM orders
+      |  JOIN customer ON o_custkey = c_custkey
+      |  JOIN nation ON c_nationkey = n_nationkey
+      |  GROUP BY n_name, CAST(o_orderdate AS DATE)""".stripMargin
+
+  /** [[nationRevenue]] with its 7-day rolling level and the level's
+    * running peak (both exact DECIMAL). */
+  def levelPeak(daily: DataFrame): DataFrame = {
+    val w7 = Window.partitionBy("n_name").orderBy("d").rowsBetween(-6, 0)
+    val wPeak = Window.partitionBy("n_name").orderBy("d")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    daily
+      .withColumn("level", sum(col("rev")).over(w7))
+      .withColumn("peak", max(col("level")).over(wPeak))
+  }
+
+  /** (d, c, trend, dow, dev): the days with a full centered 7-day
+    * frame, trend its moving average, dev = c − trend. */
+  def detrended(orders: DataFrame): DataFrame = {
+    val w = Window.orderBy("d").rowsBetween(-3, 3)
+    orderCounts(orders)
+      .withColumn("fn", count(lit(1)).over(w))
+      .withColumn("trend", sum(col("c")).over(w).cast("double") /
+        col("fn").cast("double"))
+      .filter(col("fn") === 7)
+      .select(col("d"), col("c"), col("trend"),
+        dayofweek(col("d")).as("dow"),
+        (col("c").cast("double") - col("trend")).as("dev"))
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
 /** Stationarity, random-walk, trend and structural-break tests over
-  * the daily series (SURVEY.md §2.56, §2.60, §2.62, §2.69, §2.77,
-  * §2.80, §2.89):
+  * the daily series (SURVEY.md §2.25, §2.26, §2.56, §2.60, §2.62,
+  * §2.69, §2.77, §2.80, §2.89, §2.90):
   *
   *  - [[kpssLevel]]: KPSS level-stationarity statistic (short-run
   *    variance form, l = 0) — its null is stationarity, so it catches
@@ -56,11 +56,34 @@ import graft.util.Tables._
   *    tie correction) and applies the same ±1 continuity correction as
   *    the pooled row.
   *
-  * Scale shapes: every row starts from [[Series.daily]] and windows
-  * over |types|·|days| (never raw events) into one hash aggregate per
-  * type; R/S explodes it 3× (once per block size); the seasonal MK
-  * pair join is per (type, weekday), bounded by (span/7)² per stratum
-  * — a TIME-HORIZON constant.
+  *  - [[changepoint]]: CUSUM changepoint of the daily order counts
+  *    ([[Series.orderCounts]]) — the date of the maximum |CUSUM| and
+  *    the mean level on each side.
+  *
+  *  - [[orderTheilSen]] (`agg_theil_sen`) and [[theilSen]]
+  *    (`evt_theil_sen_trend`): the Theil–Sen robust slope — the
+  *    median of all pairwise slopes — of the daily order counts and
+  *    of each event type's day-indexed counts ([[Series.dayIndexed]]);
+  *    a single wild day moves OLS, not the pairwise-slope median.
+  *
+  *  - [[pettitt]]: Pettitt's rank change-point test per event type —
+  *    WHERE the level shifted; V_i = Σ_j sgn(x_i − x_j) collapses to
+  *    midranks and U_t to one cumulative window; K = max|U_t|,
+  *    p ≈ min(1, 2·exp(−6K²/(T³+T²))).
+  *
+  *  - [[buishand]]: Buishand's rescaled-range statistic per event
+  *    type — the cumulative-deviation lens beside Pettitt's rank lens
+  *    (a sustained drift of the mean vs a median shift); the scaled
+  *    partial sums S'_t = T·cum_t − t·Σx are exact BIGINTs and the
+  *    row surfaces the statistic (critical values are tabulated per
+  *    T, Buishand 1982).
+  *
+  * Scale shapes: every row starts from a daily series and windows
+  * over at most |types|·|days| rows (never raw events or orders) into
+  * one hash aggregate per type; R/S explodes it 3× (once per block
+  * size); the seasonal MK pair join is per (type, weekday), bounded
+  * by (span/7)² per stratum — a TIME-HORIZON constant, like the
+  * Theil–Sen pair grids (≤ days² pairs).
   *
   * Determinism: partial sums stay integral by the Hurst scaling
   * (n·S_t = n·cum_t − t·T); every square or cross product that can
@@ -663,6 +686,338 @@ object Stationarity {
       |WHERE n_days >= 10
       |ORDER BY s.event_type""".stripMargin
 
+  // ---- evt_changepoint ---------------------------------------------
+  // CUSUM changepoint on daily order counts: standardize each day
+  // against the global mean/sd (computed from exact Σc, Σc² via the
+  // explicit textbook formula — the agg_regression discipline, since
+  // stddev() builtins disagree across engines), cumulate in date
+  // order, and report the date of the maximum |CUSUM| (earliest on
+  // ties) with the mean level on each side of the break.
+  private def changepoint(s: SparkSession, dir: String): DataFrame = {
+    val daily = Series.orderCounts(load(s, dir, "orders"))
+    val tot = broadcast(daily.agg(
+      count(lit(1)).as("n"),
+      sum(col("c")).cast("bigint").as("sc"),
+      sum(col("c") * col("c")).cast("bigint").as("sc2")))
+    val w = Window.orderBy("d")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cusum = daily.crossJoin(tot)
+      .withColumn("mean", col("sc").cast("double") / col("n").cast("double"))
+      .withColumn("sd", sqrt((col("sc2").cast("double") -
+        col("sc").cast("double") * col("sc").cast("double") /
+          col("n").cast("double")) / (col("n").cast("double") - 1.0)))
+      .withColumn("s", sum((col("c").cast("double") - col("mean")) / col("sd"))
+        .over(w))
+    val cp = cusum
+      .withColumn("rk", row_number().over(
+        Window.orderBy(abs(col("s")).desc, col("d"))))
+      .filter(col("rk") === 1)
+      .select(col("d").as("cp_date"), round(abs(col("s")), 6).as("max_abs_cusum"))
+    daily.crossJoin(broadcast(cp))
+      .agg(first(col("cp_date"), ignoreNulls = true).as("cp_date"),
+        first(col("max_abs_cusum"), ignoreNulls = true).as("max_abs_cusum"),
+        count(lit(1)).as("n_days"),
+        round(sum(when(col("d") <= col("cp_date"), col("c")).otherwise(0L))
+          .cast("double") /
+          sum(when(col("d") <= col("cp_date"), 1L).otherwise(0L)).cast("double"),
+          6).as("mean_before"),
+        round(sum(when(col("d") > col("cp_date"), col("c")).otherwise(0L))
+          .cast("double") /
+          sum(when(col("d") > col("cp_date"), 1L).otherwise(0L)).cast("double"),
+          6).as("mean_after"))
+      .select(col("n_days"), col("cp_date"), col("max_abs_cusum"),
+        col("mean_before"), col("mean_after"))
+  }
+
+  private val changepointOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      |tot AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS sc,
+      |    CAST(sum(c * c) AS BIGINT) AS sc2
+      |  FROM daily),
+      |cusum AS (
+      |  SELECT d, c,
+      |    sum((CAST(c AS DOUBLE) - CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) /
+      |      sqrt((CAST(sc2 AS DOUBLE) -
+      |        CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) /
+      |        (CAST(n AS DOUBLE) - 1.0))) OVER (
+      |      ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
+      |  FROM daily CROSS JOIN tot),
+      |cp AS (
+      |  SELECT d AS cp_date, round(abs(s), 6) AS max_abs_cusum
+      |  FROM cusum ORDER BY abs(s) DESC, d LIMIT 1)
+      |SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
+      |  cp_date, max_abs_cusum,
+      |  (SELECT round(CAST(sum(c) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
+      |   FROM daily, cp WHERE d <= cp_date) AS mean_before,
+      |  (SELECT round(CAST(sum(c) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
+      |   FROM daily, cp WHERE d > cp_date) AS mean_after
+      |FROM cp""".stripMargin
+
+
+  // ---- agg_theil_sen -----------------------------------------------
+  // Theil–Sen robust slope of the daily order-count series: the
+  // MEDIAN of all pairwise slopes (c_j−c_i)/(d_j−d_i). The series is
+  // horizon-bounded (~2.4k days → ~2.9M pairs — a CONSTANT in corpus
+  // size; at 100 TB the daily aggregate is the same ~2.4k rows, only
+  // the first groupBy grows). Slopes are exact-integer ratios;
+  // percentile interpolation at the even-count midpoint averages two
+  // such doubles — deterministic. Intercept via the textbook
+  // median(c) − slope·median(day_index) with day_index = days since
+  // the series minimum (exact ints both).
+  private def orderTheilSen(s: SparkSession, dir: String): DataFrame = {
+    val dailyRaw = Series.orderCounts(load(s, dir, "orders"))
+    // series start as a 1-row broadcast, not a global window — the
+    // changepoint discipline (no single-partition WindowExec)
+    val daily = dailyRaw
+      .crossJoin(broadcast(dailyRaw.agg(min(col("d")).as("d0"))))
+      .select(col("c"), datediff(col("d"), col("d0")).cast("bigint").as("di"))
+    val pairs = daily.as("a")
+      .join(broadcast(daily.as("b")), col("a.di") < col("b.di"))
+      .select(((col("b.c") - col("a.c")).cast("double") /
+        (col("b.di") - col("a.di")).cast("double")).as("slope"))
+    val slope = pairs.agg(count(lit(1)).as("n_pairs"),
+      expr("percentile(slope, 0.5)").as("slope"))
+    daily.agg(count(lit(1)).as("n_days"),
+      expr("percentile(CAST(c AS DOUBLE), 0.5)").as("med_c"),
+      expr("percentile(CAST(di AS DOUBLE), 0.5)").as("med_di"))
+      .crossJoin(broadcast(slope))
+      .select(col("n_days"), col("n_pairs"),
+        round(col("slope"), 6).as("slope"),
+        round(col("med_c") - col("slope") * col("med_di"), 6)
+          .as("intercept"))
+  }
+
+  private val orderTheilSenOracle =
+    """WITH daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
+      |  FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      |dd AS (
+      |  SELECT c, CAST(d - (SELECT min(d) FROM daily) AS BIGINT) AS di
+      |  FROM daily),
+      |pairs AS (
+      |  SELECT CAST(b.c - a.c AS DOUBLE) / CAST(b.di - a.di AS DOUBLE)
+      |    AS slope
+      |  FROM dd a JOIN dd b ON a.di < b.di),
+      |sl AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+      |    quantile_cont(slope, 0.5) AS slope
+      |  FROM pairs),
+      |base AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n_days,
+      |    quantile_cont(CAST(c AS DOUBLE), 0.5) AS med_c,
+      |    quantile_cont(CAST(di AS DOUBLE), 0.5) AS med_di
+      |  FROM dd)
+      |SELECT n_days, n_pairs, round(slope, 6) AS slope,
+      |  round(med_c - slope * med_di, 6) AS intercept
+      |FROM base CROSS JOIN sl""".stripMargin
+
+
+  // ---- evt_theil_sen_trend ---------------------------------------------
+
+  private[graft] def theilSenOn(events: DataFrame): DataFrame = {
+    val daily = Series.dayIndexed(events)
+      .localCheckpoint() // both sides of the pair join + the day count
+    val pairs = daily.select(col("event_type"), col("dd").as("d1"),
+        col("y").as("y1"))
+      .join(daily.select(col("event_type"), col("dd").as("d2"),
+        col("y").as("y2")), Seq("event_type"))
+      .filter(col("d1") < col("d2"))
+      .select(col("event_type"), expr(
+        "CAST(y2 - y1 AS DOUBLE) / CAST(d2 - d1 AS DOUBLE)").as("s"))
+    val sg = pairs.groupBy(col("event_type"), col("s"))
+      .agg(count(lit(1)).as("c"))
+    val wc = Window.partitionBy(col("event_type")).orderBy(col("s"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val med = sg
+      .select(col("event_type"), col("s"), sum(col("c")).over(wc).as("cum"))
+      .join(broadcast(sg.groupBy(col("event_type"))
+        .agg(sum(col("c")).as("np"))), "event_type")
+      .groupBy(col("event_type"))
+      .agg(min(col("np")).as("n_pairs"),
+        min(when(col("cum") * 2 >= col("np"), col("s"))).as("sen"))
+    daily.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
+      .join(med, "event_type")
+      .selectExpr("event_type", "n_days", "n_pairs",
+        "floor(sen*1e6 + 0.5)/1e6 AS sen_slope")
+      .orderBy("event_type")
+  }
+
+  private def theilSen(s: SparkSession, dir: String): DataFrame =
+    theilSenOn(loadEvents(s, dir))
+
+  private val theilSenOracle =
+    """WITH daily AS (
+      |  SELECT event_type,
+      |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS dd,
+      |    CAST(count(*) AS BIGINT) AS y
+      |  FROM events GROUP BY 1, 2),
+      |pairs AS (
+      |  SELECT a.event_type,
+      |    CAST(b.y - a.y AS DOUBLE) / CAST(b.dd - a.dd AS DOUBLE) AS s
+      |  FROM daily a JOIN daily b
+      |    ON a.event_type = b.event_type AND a.dd < b.dd),
+      |sg AS (SELECT event_type, s, CAST(count(*) AS BIGINT) AS c
+      |  FROM pairs GROUP BY 1, 2),
+      |cum AS (
+      |  SELECT event_type, s, c,
+      |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY s
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+      |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS np
+      |  FROM sg),
+      |med AS (
+      |  SELECT event_type, min(np) AS n_pairs,
+      |    min(CASE WHEN cum * 2 >= np THEN s END) AS sen
+      |  FROM cum GROUP BY 1),
+      |nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
+      |  FROM daily GROUP BY 1)
+      |SELECT nd.event_type AS event_type, n_days, n_pairs,
+      |  floor(sen*1e6 + 0.5)/1e6 AS sen_slope
+      |FROM nd JOIN med ON nd.event_type = med.event_type
+      |ORDER BY nd.event_type""".stripMargin
+
+
+  // ---- evt_pettitt_changepoint ----------------------------------------
+  private val pettittP =
+    """least(1.0E0, 2.0E0*exp(-6.0E0*CAST(k_stat AS DOUBLE)*CAST(k_stat AS DOUBLE)
+      |  / (CAST(n_days AS DOUBLE)*CAST(n_days AS DOUBLE)*CAST(n_days AS DOUBLE)
+      |     + CAST(n_days AS DOUBLE)*CAST(n_days AS DOUBLE))))""".stripMargin
+  private val pettittSelect = Seq("event_type", "n_days", "k_stat",
+    "change_dd",
+    s"floor(($pettittP)*1e6 + 0.5)/1e6 AS p_approx",
+    s"($pettittP < 0.05E0) AS change_detected_5pct")
+
+  private[graft] def pettittOn(events: DataFrame): DataFrame = {
+    val daily = Series.dayIndexed(events)
+    val byType = Window.partitionBy(col("event_type"))
+    val ranked = daily
+      .withColumn("tt", count(lit(1)).over(byType))
+      .withColumn("rmin", rank().over(byType.orderBy(col("y"))).cast("long"))
+      .withColumn("tw", count(lit(1)).over(
+        Window.partitionBy(col("event_type"), col("y"))))
+      .select(col("event_type"), col("dd"), col("tt"),
+        (lit(2L) * (col("rmin") - 1L) + col("tw") - col("tt")).as("v"))
+    val u = ranked
+      .withColumn("u", sum(col("v")).over(byType.orderBy(col("dd"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("idx", row_number().over(byType.orderBy(col("dd"))))
+      .filter(col("idx") < col("tt")) // U_T ≡ 0, excluded by convention
+      .localCheckpoint(false) // feeds the max AND the argmax join
+    val k = u.groupBy(col("event_type"))
+      .agg((max(col("tt")) /* constant per type */).as("nd"),
+        max(abs(col("u"))).as("k_stat"))
+    val at = u.join(broadcast(k), Seq("event_type"))
+      .filter(abs(col("u")) === col("k_stat"))
+      .groupBy(col("event_type")).agg(min(col("dd")).as("change_dd"))
+    k.join(at, Seq("event_type"))
+      .select(col("event_type"), col("nd").as("n_days"),
+        col("k_stat").cast("bigint").as("k_stat"), col("change_dd"))
+      .selectExpr(pettittSelect: _*)
+      .orderBy("event_type")
+  }
+
+  private def pettitt(s: SparkSession, dir: String): DataFrame =
+    pettittOn(loadEvents(s, dir))
+
+  private val pettittOracle =
+    s"""WITH daily AS (
+       |  SELECT event_type,
+       |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS dd,
+       |    CAST(count(*) AS BIGINT) AS y
+       |  FROM events GROUP BY 1, 2),
+       |ranked AS (
+       |  SELECT event_type, dd,
+       |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS tt,
+       |    2*(CAST(rank() OVER (PARTITION BY event_type ORDER BY y) AS BIGINT) - 1)
+       |      + CAST(count(*) OVER (PARTITION BY event_type, y) AS BIGINT)
+       |      - CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS v
+       |  FROM daily),
+       |u AS (
+       |  SELECT event_type, dd, tt,
+       |    CAST(sum(v) OVER (PARTITION BY event_type ORDER BY dd
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS u,
+       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY dd) AS BIGINT) AS idx
+       |  FROM ranked),
+       |ub AS (SELECT * FROM u WHERE idx < tt),
+       |k AS (
+       |  SELECT event_type, max(tt) AS n_days, max(abs(u)) AS k_stat
+       |  FROM ub GROUP BY 1),
+       |at AS (
+       |  SELECT ub.event_type, min(ub.dd) AS change_dd
+       |  FROM ub JOIN k ON ub.event_type = k.event_type
+       |    AND abs(ub.u) = k.k_stat
+       |  GROUP BY 1)
+       |SELECT ${pettittSelect.mkString(",\n  ")}
+       |FROM k JOIN at USING (event_type)
+       |ORDER BY event_type""".stripMargin
+
+
+  // ---- evt_buishand_range ---------------------------------------------
+  private val brSelect = Seq("event_type", "n_days",
+    """floor((CAST(rr AS DOUBLE)/nullif(CAST(n_days AS DOUBLE), 0))*1e6 + 0.5)/1e6
+      | AS buishand_r""".stripMargin,
+    """floor((CAST(rr AS DOUBLE)
+      |  / nullif(sqrt(CAST(n_days*sxx - sx*sx AS DOUBLE))
+      |      * sqrt(CAST(n_days AS DOUBLE)), 0))*1e6 + 0.5)/1e6
+      | AS r_rescaled""".stripMargin)
+
+  private[graft] def buishandOn(events: DataFrame): DataFrame = {
+    val daily = Series.dayIndexed(events)
+    val byType = Window.partitionBy(col("event_type"))
+    // S'_t = T·cum_t − t·Σx: exact BIGINTs (the mean never
+    // materializes as a rational); S'_0 = S'_T = 0 are members of the
+    // range by construction, so max ≥ 0 ≥ min without special rows.
+    val sp = daily
+      .withColumn("tt", count(lit(1)).over(byType))
+      .withColumn("sx", sum(col("y")).over(byType))
+      .withColumn("sxx", sum(col("y") * col("y")).over(byType))
+      .withColumn("cum", sum(col("y")).over(byType.orderBy(col("dd"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("idx", row_number().over(byType.orderBy(col("dd"))))
+      .select(col("event_type"), col("tt"), col("sx"), col("sxx"),
+        (col("tt") * col("cum") - col("idx") * col("sx")).as("s2"))
+    sp.groupBy(col("event_type"))
+      .agg(max(col("tt")).as("n_days"), max(col("sx")).as("sx"),
+        max(col("sxx")).as("sxx"),
+        (greatest(max(col("s2")), lit(0L)) -
+          least(min(col("s2")), lit(0L))).as("rr"))
+      .selectExpr(brSelect: _*)
+      .orderBy("event_type")
+  }
+
+  private def buishand(s: SparkSession, dir: String): DataFrame =
+    buishandOn(loadEvents(s, dir))
+
+  private val brOracle =
+    s"""WITH daily AS (
+       |  SELECT event_type,
+       |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS dd,
+       |    CAST(count(*) AS BIGINT) AS y
+       |  FROM events GROUP BY 1, 2),
+       |sp AS (
+       |  SELECT event_type,
+       |    CAST(count(*) OVER w0 AS BIGINT) AS tt,
+       |    CAST(sum(y) OVER w0 AS BIGINT) AS sx,
+       |    CAST(sum(y*y) OVER w0 AS BIGINT) AS sxx,
+       |    CAST(count(*) OVER w0 AS BIGINT)
+       |      * CAST(sum(y) OVER (PARTITION BY event_type ORDER BY dd
+       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+       |      - CAST(row_number() OVER (PARTITION BY event_type ORDER BY dd) AS BIGINT)
+       |      * CAST(sum(y) OVER w0 AS BIGINT) AS s2
+       |  FROM daily
+       |  WINDOW w0 AS (PARTITION BY event_type)),
+       |g AS (
+       |  SELECT event_type, max(tt) AS n_days, max(sx) AS sx,
+       |    max(sxx) AS sxx,
+       |    greatest(max(s2), 0) - least(min(s2), 0) AS rr
+       |  FROM sp GROUP BY 1)
+       |SELECT ${brSelect.mkString(",\n  ")}
+       |FROM g
+       |ORDER BY event_type""".stripMargin
+
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "evt_kpss_level" -> (kpssLevel _),
     "evt_adf_unit_root" -> (adfUnitRoot _),
@@ -670,7 +1025,12 @@ object Stationarity {
     "evt_variance_ratio" -> (varianceRatio _),
     "evt_segmented_trend" -> (segmentedTrend _),
     "evt_chow_test" -> (chowTest _),
-    "evt_seasonal_mann_kendall" -> (seasonalMannKendall _)
+    "evt_seasonal_mann_kendall" -> (seasonalMannKendall _),
+    "evt_changepoint" -> (changepoint _),
+    "agg_theil_sen" -> (orderTheilSen _),
+    "evt_theil_sen_trend" -> (theilSen _),
+    "evt_pettitt_changepoint" -> (pettitt _),
+    "evt_buishand_range" -> (buishand _)
   )
 
   val oracle: Map[String, String] = Map(
@@ -680,6 +1040,11 @@ object Stationarity {
     "evt_variance_ratio" -> varianceRatioOracle,
     "evt_segmented_trend" -> segmentedTrendOracle,
     "evt_chow_test" -> chowOracle,
-    "evt_seasonal_mann_kendall" -> seasonalMkOracle
+    "evt_seasonal_mann_kendall" -> seasonalMkOracle,
+    "evt_changepoint" -> changepointOracle,
+    "agg_theil_sen" -> orderTheilSenOracle,
+    "evt_theil_sen_trend" -> theilSenOracle,
+    "evt_pettitt_changepoint" -> pettittOracle,
+    "evt_buishand_range" -> brOracle
   )
 }

@@ -2,16 +2,16 @@ package graft.ops.timeseries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The time-series family: every row that reads the daily event
-  * series ([[Series.daily]]) directly or through its lag moments.
-  * One (queries, oracle) pair for SparkEntry. */
+/** The time-series family: every row that reads a daily series
+  * ([[Series]]). One (queries, oracle) pair for SparkEntry. */
 object TimeSeries {
   private val parts = Seq(
     (Forecast.queries, Forecast.oracle),
     (Control.queries, Control.oracle),
     (Correlation.queries, Correlation.oracle),
     (Stationarity.queries, Stationarity.oracle),
-    (Patterns.queries, Patterns.oracle))
+    (Patterns.queries, Patterns.oracle),
+    (Indicators.queries, Indicators.oracle))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     parts.map(_._1).reduce(_ ++ _)

@@ -607,7 +607,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       }
       val orders = candleOrders(days)
         .toDF("o_orderkey", "o_orderdate", "o_totalprice")
-      val got = graft.ops.Composite44.trueRangeAtrOn(orders)
+      val got = graft.ops.timeseries.Indicators.trueRangeAtrOn(orders)
         .as[(java.sql.Date, Long, Long, Long, Long, Double)]
         .collect().toSeq
         .map { case (d, hi, lo, cl, tr, atr) =>
@@ -629,7 +629,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       }
       val orders = candleOrders(days)
         .toDF("o_orderkey", "o_orderdate", "o_totalprice")
-      val got = graft.ops.Composite46.donchianChannelOn(orders)
+      val got = graft.ops.timeseries.Indicators.donchianChannelOn(orders)
         .as[(java.sql.Date, Long, Long, Long, String)].collect().toSeq
         .map { case (d, cl, hi, lo, b) => (d.toString, cl, hi, lo, b) }
       got == expected
@@ -1041,7 +1041,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       }
       val orders = candleOrders(days)
         .toDF("o_orderkey", "o_orderdate", "o_totalprice")
-      val got = graft.ops.Composite56.keltnerOn(orders).collect().toSeq
+      val got = graft.ops.timeseries.Indicators.keltnerOn(orders).collect().toSeq
         .map(r => (r.getDate(0).toString, r.getLong(1), r.getDouble(2),
           r.getDouble(3), r.getDouble(4), r.getString(5)))
       got == expected
@@ -2181,7 +2181,7 @@ object PropertiesSpec extends Properties("graft-laws") {
       } yield (y2 - y1).toDouble / (d2 - d1).toDouble).sorted
       val np = slopes.size.toLong
       val sen = slopes((np / 2 + np % 2 - 1).toInt) // first i with 2i >= np
-      val r = graft.ops.Composite77.theilSenOn(events).collect().head
+      val r = graft.ops.timeseries.Stationarity.theilSenOn(events).collect().head
       r.getLong(1) == daily.size.toLong && r.getLong(2) == np &&
         r.getDouble(3) == math.floor(sen * 1e6 + 0.5) / 1e6
     }

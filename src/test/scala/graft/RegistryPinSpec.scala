@@ -130,4 +130,37 @@ class RegistryPinSpec extends AnyFunSuite {
     assertSame(graft.ops.stats.Stats.queries.keySet, statsIds)
     assert(graft.ops.stats.Stats.oracle.keySet.subsetOf(statsIds))
   }
+
+  test("the time-series family owns exactly its 53 rows") {
+    val timeSeriesIds = Set(
+      // Forecast
+      "win_ewma_backtest", "win_holt_backtest", "evt_holt_winters",
+      "evt_seasonal_naive_backtest",
+      // Control
+      "evt_shewhart_individuals", "evt_ewma_chart", "win_cusum_drift",
+      "evt_page_hinkley", "evt_anomaly_mad",
+      // Correlation
+      "evt_ljung_box", "win_acf_table", "evt_pacf_table",
+      "evt_cross_correlation", "evt_granger_lite", "evt_durbin_watson",
+      "agg_autocorr", "win_rolling_corr",
+      // Stationarity
+      "evt_kpss_level", "evt_adf_unit_root", "evt_hurst_rs",
+      "evt_variance_ratio", "evt_segmented_trend", "evt_chow_test",
+      "evt_seasonal_mann_kendall", "evt_changepoint", "agg_theil_sen",
+      "evt_theil_sen_trend", "evt_pettitt_changepoint",
+      "evt_buishand_range",
+      // Patterns
+      "dq_calendar_gaps", "win_runs_test", "win_turning_points",
+      "win_aroon", "evt_seasonal_strength", "evt_periodogram",
+      "win_seasonal_decompose", "evt_anomaly_stl",
+      // Indicators
+      "win_bollinger", "win_rsi", "win_ulcer_index", "agg_cvar",
+      "win_true_range_atr", "win_donchian_channel", "win_pivot_points",
+      "win_keltner_channel", "win_ewma_smooth", "win_macd",
+      "win_stochastic", "win_rolling_skew", "win_rolling_median",
+      "win_drawdown", "win_drawdown_duration", "win_vwap")
+    assert(timeSeriesIds.size == 53)
+    assertSame(graft.ops.timeseries.TimeSeries.queries.keySet, timeSeriesIds)
+    assert(graft.ops.timeseries.TimeSeries.oracle.keySet.subsetOf(timeSeriesIds))
+  }
 }

@@ -102,7 +102,7 @@ class Round10Spec extends AnyFunSuite {
     out.foreach(r => assert(r.getDouble(2) == 100.0,
       s"constant series must smooth to itself, got ${r.getDouble(2)}"))
     // and the declared query runs with sane bounds on real data
-    val real = graft.ops.Composite7.queries("win_ewma_smooth")(spark, sf).collect()
+    val real = graft.ops.timeseries.Indicators.queries("win_ewma_smooth")(spark, sf).collect()
     assert(real.nonEmpty)
     real.foreach(r => assert(r.getDouble(3) > 0.0))
   }

@@ -35,7 +35,7 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("win_drawdown: drawdowns are in [0,1] and peaks positive") {
-    val rows = graft.ops.Composite10.queries("win_drawdown")(spark, sf).collect()
+    val rows = graft.ops.timeseries.Indicators.queries("win_drawdown")(spark, sf).collect()
     assert(rows.length == 25)
     rows.foreach { r =>
       val dd = r.getDouble(1)
@@ -46,7 +46,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("win_rolling_median: median lies within the frame's min/max") {
     import spark.implicits._
-    val med = graft.ops.Composite10.queries("win_rolling_median")(spark, sf)
+    val med = graft.ops.timeseries.Indicators.queries("win_rolling_median")(spark, sf)
     val bad = med.filter(col("roll_median").isNull).count()
     assert(bad == 0)
     // spot-check one nation: median of a 7-frame is between global min/max
@@ -56,7 +56,7 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("agg_autocorr: correlations are in [-1,1]") {
-    val r = graft.ops.Composite10.queries("agg_autocorr")(spark, sf).head
+    val r = graft.ops.timeseries.Correlation.queries("agg_autocorr")(spark, sf).head
     assert(r.getLong(0) > 100, "needs a long daily series")
     Seq(r.getDouble(1), r.getDouble(2)).foreach(ac =>
       assert(ac >= -1.0 && ac <= 1.0, s"autocorr $ac"))

@@ -10,7 +10,7 @@ class Round14Spec extends AnyFunSuite {
   import TestSpark._
 
   test("evt_changepoint: split means bracket the break and CUSUM is positive") {
-    val r = graft.ops.Composite11.queries("evt_changepoint")(spark, sf).head
+    val r = graft.ops.timeseries.Stationarity.queries("evt_changepoint")(spark, sf).head
     assert(r.getLong(0) > 100, "needs a long series")
     assert(r.getDouble(2) > 0.0, "max |CUSUM| must be positive")
     // the two side means must both be positive daily counts

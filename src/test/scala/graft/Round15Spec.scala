@@ -58,7 +58,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("agg_theil_sen: pair count is C(n,2) and slope is finite") {
-    val r = graft.ops.Composite12.queries("agg_theil_sen")(spark, sf).head
+    val r = graft.ops.timeseries.Stationarity.queries("agg_theil_sen")(spark, sf).head
     val n = r.getLong(0); val pairs = r.getLong(1)
     assert(pairs == n * (n - 1) / 2, "pairs must be exactly C(n_days, 2)")
     assert(!r.getDouble(2).isNaN && !r.getDouble(3).isNaN)

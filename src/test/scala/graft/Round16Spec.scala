@@ -63,7 +63,7 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("evt_seasonal_naive_backtest: scores most of the series, errors non-negative") {
-    val r = graft.ops.Composite14
+    val r = graft.ops.timeseries.Forecast
       .queries("evt_seasonal_naive_backtest")(spark, sf).head
     assert(r.getLong(0) > 100, "backtest must score a long horizon")
     assert(r.getDouble(1) >= 0.0 && r.getDouble(2) >= 0.0)
@@ -72,7 +72,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("win_rolling_corr: correlations bounded, warm-up rows excluded") {
     val rows =
-      graft.ops.Composite14.queries("win_rolling_corr")(spark, sf).collect()
+      graft.ops.timeseries.Correlation.queries("win_rolling_corr")(spark, sf).collect()
     val nDays = graft.util.Tables.load(spark, sf, "orders")
       .select(org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col("o_orderdate")))

@@ -108,7 +108,7 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("win_seasonal_decompose: 7 weekday indices that sum to ~0") {
-    val rows = graft.ops.Composite15
+    val rows = graft.ops.timeseries.Patterns
       .queries("win_seasonal_decompose")(spark, sf).collect()
     assert(rows.length == 7)
     // additive seasonal indices over a long horizon nearly cancel:

@@ -68,7 +68,7 @@ class Round18Spec extends AnyFunSuite {
   }
 
   test("agg_cvar: tail mean sits at or below the VaR threshold") {
-    val r = graft.ops.LlmOps15.queries("agg_cvar")(spark, sf).head
+    val r = graft.ops.timeseries.Indicators.queries("agg_cvar")(spark, sf).head
     assert(r.getLong(0) > 100)
     assert(r.getDouble(2) <= r.getDouble(1) + 1e-6,
       "CVaR must not exceed VaR")

@@ -48,7 +48,7 @@ class Round19Spec extends AnyFunSuite {
 
   test("evt_anomaly_stl: every flagged day genuinely exceeds 3 sigma") {
     val rows =
-      graft.ops.Composite19.queries("evt_anomaly_stl")(spark, sf).collect()
+      graft.ops.timeseries.Patterns.queries("evt_anomaly_stl")(spark, sf).collect()
     rows.foreach { r =>
       assert(r.getDouble(5) > 3.0, "sigma must exceed the 3.0 fence")
       // residual = c - trend - seasonal (up to independent rounding)

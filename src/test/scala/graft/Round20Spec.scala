@@ -34,7 +34,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("win_bollinger: bands bracket the mid, breakouts genuine") {
     val rows =
-      graft.ops.Composite20.queries("win_bollinger")(spark, sf).collect()
+      graft.ops.timeseries.Indicators.queries("win_bollinger")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (rev, mid, sigma, up, lo, out) = (r.getDouble(1), r.getDouble(2),
@@ -46,7 +46,7 @@ class Round20Spec extends AnyFunSuite {
   }
 
   test("win_rsi: bounded to [0, 100] and consistent with averages") {
-    val rows = graft.ops.Composite20.queries("win_rsi")(spark, sf).collect()
+    val rows = graft.ops.timeseries.Indicators.queries("win_rsi")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (ag, al, rsi) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))

@@ -45,7 +45,7 @@ class Round21Spec extends AnyFunSuite {
   }
 
   test("win_vwap: positive and within the day-price envelope") {
-    val rows = graft.ops.Composite21.queries("win_vwap")(spark, sf).collect()
+    val rows = graft.ops.timeseries.Indicators.queries("win_vwap")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getDouble(1) > 0.0)

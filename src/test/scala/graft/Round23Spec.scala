@@ -52,7 +52,7 @@ class Round23Spec extends AnyFunSuite {
 
   test("win_ulcer_index: non-negative; zero exactly when window has no drawdown") {
     val rows =
-      graft.ops.Composite23.queries("win_ulcer_index")(spark, sf).collect()
+      graft.ops.timeseries.Indicators.queries("win_ulcer_index")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getDouble(1) >= 0.0, "drawdown depth is non-negative")

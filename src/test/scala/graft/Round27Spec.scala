@@ -158,7 +158,7 @@ class Round27Spec extends AnyFunSuite {
       .select(col("n_name"),
         to_timestamp(col("day"), "yyyy-MM-dd'T'H").as("day"), col("x"))
     const.createOrReplaceTempView("graft_macd_daily")
-    val out = spark.sql(graft.ops.Composite28.macdSqlForTest).collect()
+    val out = spark.sql(graft.ops.timeseries.Indicators.macdSqlForTest).collect()
     assert(out.nonEmpty)
     // truncated-kernel EMA of a constant is that constant (weights
     // renormalize), so macd == signal == histogram == 0 everywhere
@@ -273,7 +273,7 @@ class Round27Spec extends AnyFunSuite {
           .as("day"),
         col("x"))
       .createOrReplaceTempView("graft_skew_daily")
-    val out = spark.sql(graft.ops.Composite29.rollingSkewSqlForTest).collect()
+    val out = spark.sql(graft.ops.timeseries.Indicators.rollingSkewSqlForTest).collect()
     // even-length frames alternate exactly; check the full-30 frames
     val full = out.filter(_.getLong(2) == 30)
     assert(full.nonEmpty)

@@ -38,7 +38,7 @@ class Round38Spec extends AnyFunSuite {
     val daily = rows.toDF("n_name", "ds", "revd")
       .select($"n_name", to_date($"ds").as("d"),
         $"revd".cast("decimal(18,2)").as("rev"))
-    val got = graft.ops.Composite41.drawdownDurationOn(daily)
+    val got = graft.ops.timeseries.Indicators.drawdownDurationOn(daily)
       .as[(String, Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(("A", 9L, 2L, 1L, 2L), ("B", 2L, 0L, 0L, 0L)))
   }

@@ -50,7 +50,7 @@ class Round41Spec extends AnyFunSuite {
       (151L, "1970-01-15", 20.0)))
       .map { case (k, d, p) => (1L, k, d, p) }
       .toDF("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    val got = graft.ops.Composite44.trueRangeAtrOn(orders)
+    val got = graft.ops.timeseries.Indicators.trueRangeAtrOn(orders)
       .as[(java.sql.Date, Long, Long, Long, Long, Double)].collect().toSeq
       .map { case (d, hi, lo, cl, tr, atr) => (d.toString, hi, lo, cl, tr, atr) }
     assert(got == Seq(

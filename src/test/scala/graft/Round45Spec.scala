@@ -41,7 +41,7 @@ class Round45Spec extends AnyFunSuite {
       (1L, 11L, "1970-01-01", 8.0), (1L, 12L, "1970-01-01", 12.0),
       (1L, 21L, "1970-01-02", 10.0)
     ).toDF("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    val got = graft.ops.Composite48.pivotPointsOn(orders)
+    val got = graft.ops.timeseries.Indicators.pivotPointsOn(orders)
       .as[(java.sql.Date, Double, Double, Double, Double, Double)]
       .collect().toSeq
       .map { case (d, p, r1, s1, r2, s2) => (d.toString, p, r1, s1, r2, s2) }

@@ -184,7 +184,7 @@ class Round57Spec extends AnyFunSuite {
     val events = rows.toDF("event_type", "ts")
       .select(org.apache.spark.sql.functions.col("event_type"),
         org.apache.spark.sql.functions.col("ts").cast("timestamp").as("ts"))
-    val r = graft.ops.Composite83.pettittOn(events).collect().head
+    val r = graft.ops.timeseries.Stationarity.pettittOn(events).collect().head
     assert(r.getLong(1) == 20L)      // n_days
     assert(r.getLong(2) == 100L)     // K
     val day10 = java.time.LocalDate.parse("2020-01-10").toEpochDay
@@ -231,7 +231,7 @@ class Round57Spec extends AnyFunSuite {
     val events = rows.toDF("event_type", "ts")
       .select(org.apache.spark.sql.functions.col("event_type"),
         org.apache.spark.sql.functions.col("ts").cast("timestamp").as("ts"))
-    val r = graft.ops.Composite84.buishandOn(events).collect().head
+    val r = graft.ops.timeseries.Stationarity.buishandOn(events).collect().head
     assert(r.getLong(1) == 4L)
     assert(r.getDouble(2) == 2.0)
     assert(r.getDouble(3) == 1.0)

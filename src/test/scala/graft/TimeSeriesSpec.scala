@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Planted-case guards for the round-24 batch-4 rows (SURVEY §2.62):
-  * KPSS level stationarity and Donchian channel breakouts.
+/** Planted-case guards for the time-series family
+  * (`graft.ops.timeseries`): KPSS level stationarity (SURVEY §2.62)
+  * and Donchian channel breakouts over the daily candle.
   */
-class Round43Spec extends AnyFunSuite {
+class TimeSeriesSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
@@ -41,7 +42,7 @@ class Round43Spec extends AnyFunSuite {
       Seq((21L, "1970-01-21", 25.0), (22L, "1970-01-22", 5.0)))
       .map { case (k, d, p) => (1L, k, d, p) }
       .toDF("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    val got = graft.ops.Composite46.donchianChannelOn(orders)
+    val got = graft.ops.timeseries.Indicators.donchianChannelOn(orders)
       .as[(java.sql.Date, Long, Long, Long, String)].collect().toSeq
       .map { case (d, cl, hi, lo, b) => (d.toString, cl, hi, lo, b) }
     assert(got == Seq(
