@@ -363,7 +363,7 @@ object Graft {
     * the join so non-unique parents cannot double-count. */
   def referentialIntegrity(
       edges: Seq[(String, DataFrame, String, DataFrame, String)]): DataFrame =
-    graft.ops.Composite33.referentialIntegrityOn(edges)
+    graft.ops.dq.Integrity.referentialIntegrityOn(edges)
 
   /** One-step-ahead truncated-EWMA backtest (alpha = 1/2, 16 lags) of
     * daily counts per `event_type` over an (event_type, ts) event
@@ -403,7 +403,7 @@ object Graft {
     * lineitem-shaped relation: picked quartiles, +-1.5 IQR fences in
     * exact cents, and per-side outlier counts. */
   def outlierFences(li: DataFrame): DataFrame =
-    graft.ops.Composite35.outlierFencesOn(li)
+    graft.ops.dq.Profiles.outlierFencesOn(li)
 
   /** MAD anomaly days per `event_type` over an (event_type, ts)
     * stream: picked median and MAD of daily counts, anomaly when
@@ -467,7 +467,7 @@ object Graft {
     * documents-shaped relation: presence + storage class per column,
     * verdict absent/added/dropped/retyped/stable. One scan. */
   def schemaDrift(docs: DataFrame): DataFrame =
-    graft.ops.Composite43.schemaDriftOn(docs)
+    graft.ops.dq.Drift.schemaDriftOn(docs)
 
   /** Mann–Whitney U with tie-corrected normal approximation over
     * (value, group-1 indicator) rows — ranks ride the distributed

@@ -46,33 +46,24 @@ object SparkEntry {
       (Composite19.queries, Composite19.oracle),
       (SqlSurface.queries, SqlSurface.oracle),
       (Typed.queries, Typed.oracle),
-      (Composite27.queries, Composite27.oracle),
       (Composite28.queries, Composite28.oracle),
       (Composite29.queries, Composite29.oracle),
       (Composite30.queries, Composite30.oracle),
       (Composite31.queries, Composite31.oracle),
       (Composite32.queries, Composite32.oracle),
-      (Composite33.queries, Composite33.oracle),
       (Composite34.queries, Composite34.oracle),
-      (Composite35.queries, Composite35.oracle),
       (graph.Graph.queries, graph.Graph.oracle),
       (dedup.Dedup.queries, dedup.Dedup.oracle),
       (retrieval.Retrieval.queries, retrieval.Retrieval.oracle),
       (corpus.Corpus.queries, corpus.Corpus.oracle),
       (stats.Stats.queries, stats.Stats.oracle),
-      (Composite37.queries, Composite37.oracle),
       (Composite38.queries, Composite38.oracle),
       (Composite39.queries, Composite39.oracle),
-      (Composite41.queries, Composite41.oracle),
-      (Composite43.queries, Composite43.oracle),
-      (Composite49.queries, Composite49.oracle),
       (timeseries.TimeSeries.queries, timeseries.TimeSeries.oracle),
       (Composite67.queries, Composite67.oracle),
       (Composite68.queries, Composite68.oracle),
       (Composite80.queries, Composite80.oracle),
-      (Composite81.queries, Composite81.oracle),
-      (Composite82.queries, Composite82.oracle),
-      (Composite84.queries, Composite84.oracle)
+      (dq.DataQuality.queries, dq.DataQuality.oracle)
     )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

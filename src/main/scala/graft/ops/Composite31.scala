@@ -6,17 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.util.Tables._
 import graft.ops.stats.Samples.{countAgg, sumAgg}
 
-/** SURVEY.md §2.47 (round-21 batch) — two capability gaps a real
-  * user hits next: MULTIPLE regression (agg_regression is
-  * single-feature) and a k-anonymity audit (the quasi-identifier
-  * group-size distribution the PII masking family acts on).
+/** SURVEY.md §2.47 (round-21 batch) — MULTIPLE regression
+  * (agg_regression is single-feature).
   *
-  * Scale shapes: OLS is one map-side-combining aggregate of
-  * exact-decimal cross sums; the k-anonymity audit is two chained
-  * map-side-combining aggregates.
+  * Scale shape: OLS is one map-side-combining aggregate of
+  * exact-decimal cross sums.
   *
-  * Determinism: group sizes are exact integers;
-  * OLS follows Composite3's exact-sum discipline (decimal sums,
+  * Determinism: OLS follows Composite3's exact-sum discipline (decimal sums,
   * VARCHAR-routed oracle casts per SURVEY §1.5 r7, one shared double
   * assembly, floor-form 6-dp rounding per §1.5 tri-SF rules).
   */
@@ -81,46 +77,11 @@ object Composite31 {
       .selectExpr("l_returnflag" +: olsOut: _*)
       .orderBy("l_returnflag")
 
-  // ---- dq_k_anonymity --------------------------------------------------
-  // Anonymity-set size distribution over the customer quasi-identifier
-  // tuple (market segment, nation, 1000-unit balance band): for each
-  // group size s, how many QI groups and rows sit in groups of exactly
-  // that size. k-anonymity says rows in groups of size < k are
-  // re-identifiable — this is the governance audit the PII family
-  // (llm_pii_mask) acts on. Two chained map-side-combining aggregates
-  // (QI-group count, then size histogram); all exact integers. The
-  // balance band uses floor(x / 1e3): `1e3` not a bare decimal literal
-  // (SURVEY §1.5 — decimal literals drag Spark into decimal division),
-  // and exact-multiple boundaries divide exactly in IEEE, so the band
-  // is engine-agnostic.
-  private[graft] def kAnonymityOn(cust: DataFrame): DataFrame =
-    cust
-      .groupBy(col("c_mktsegment"), col("c_nationkey"),
-        expr("CAST(floor(c_acctbal / 1e3) AS BIGINT)").as("bal_band"))
-      .agg(count(lit(1)).as("s"))
-      .groupBy(col("s").as("group_size"))
-      .agg(count(lit(1)).as("n_groups"),
-        sum(col("s")).as("n_rows"))
-      .orderBy("group_size")
-
-  private val kAnonymityOracle =
-    """WITH g AS (
-      |  SELECT c_mktsegment, c_nationkey,
-      |    CAST(floor(c_acctbal / 1e3) AS BIGINT) AS bal_band,
-      |    count(*) AS s
-      |  FROM customer GROUP BY 1, 2, 3)
-      |SELECT s AS group_size, CAST(count(*) AS BIGINT) AS n_groups,
-      |  CAST(sum(s) AS BIGINT) AS n_rows
-      |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_k_anonymity" -> ((s: SparkSession, dir: String) =>
-      kAnonymityOn(load(s, dir, "customer"))),
     "agg_ols_multi" -> (olsMulti _)
   )
 
   val oracle: Map[String, String] = Map(
-    "dq_k_anonymity" -> kAnonymityOracle,
     "agg_ols_multi" -> Composite3.statsOracle(olsAggs, olsOut)
   )
 }

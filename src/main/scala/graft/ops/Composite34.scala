@@ -38,7 +38,7 @@ object Composite34 {
 
   private[graft] def poissonBootstrapOn(li: DataFrame): DataFrame =
     li.select(
-        (money(col("l_extendedprice")) * 100).cast("long").as("cents"),
+        cents(col("l_extendedprice")).as("cents"),
         col("l_orderkey"), col("l_linenumber"))
       .withColumn("b", explode(sequence(lit(0), lit(B - 1))))
       .select(col("b"), col("cents"),

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.54 (round-23 batch 3) — aggregation-bias, process
-  * capability, and dependency profiling:
+/** SURVEY.md §2.54 (round-23 batch 3) — aggregation bias and process
+  * capability:
   *
   *  - [[simpsonParadox]]: Simpson's-paradox audit — does the pooled
   *    deep-discount-rate comparison between line statuses agree with
@@ -23,19 +23,9 @@ import graft.util.Tables._
   *    manufacturing-analytics number `agg_stats`' raw σ does not
   *    give (how much of the tolerance band the process consumes).
   *
-  *  - [[functionalDependency]]: candidate functional-dependency
-  *    audit X→Y over four declared candidates: distinct-X count,
-  *    count of X values mapping to >1 distinct Y, the worst fan-out,
-  *    and the violation share — single-table FD profiling (TANE's
-  *    verification step), the "is this column derivable?" question
-  *    `dq_uniqueness_audit`'s single-column profile cannot answer.
-  *
   * Scale shapes: Simpson is ONE conditional hash aggregate per
   * stratum + the 1-row pooled broadcast (pagerank `nn` discipline);
-  * capability is one map-side-combining aggregate of (n, Σq, Σq²);
-  * the FD audit is four independent two-level aggregates (X-keyed
-  * count-distinct, then a tiny rollup) union'd — embarrassingly
-  * parallel, the dq_referential_integrity branch discipline.
+  * capability is one map-side-combining aggregate of (n, Σq, Σq²).
   *
   * Determinism: Simpson never leaves the integers; capability's σ
   * assembles once from exact integer sums (n·ΣQ² − (ΣQ)² ≤ ~10¹⁵ at
@@ -51,7 +41,7 @@ object Composite38 {
   private[graft] def simpsonParadoxOn(li: DataFrame): DataFrame = {
     val base = li.select(year(col("l_shipdate")).as("ship_year"),
       col("l_linestatus"),
-      ((money(col("l_discount")) * 100).cast("long") >= 5L).as("deep"))
+      (cents(col("l_discount")) >= 5L).as("deep"))
     def dir(no: org.apache.spark.sql.Column, do_ : org.apache.spark.sql.Column,
         nf: org.apache.spark.sql.Column, df: org.apache.spark.sql.Column) =
       when(do_ * nf > df * no, 1L).when(do_ * nf < df * no, -1L).otherwise(0L)
@@ -163,67 +153,13 @@ object Composite38 {
        |     / (CAST(n AS DOUBLE)*(n - 1)))))*1e6 + 0.5)/1e6 AS cpk
        |FROM g ORDER BY l_returnflag""".stripMargin
 
-  // ---- dq_functional_dependency ----------------------------------------
-  // Four declared candidates; per FD: |X|, X values with >1 distinct
-  // Y, the worst per-X fan-out, and the violation share.
-  private[graft] def fdAuditOn(df: DataFrame, fdName: String,
-      x: String, y: String): DataFrame =
-    df.groupBy(col(x)).agg(countDistinct(col(y)).as("ny"))
-      .agg(count(lit(1)).as("n_lhs"),
-        sum(when(col("ny") > 1, 1L).otherwise(0L)).as("n_violating"),
-        max(col("ny")).as("max_fanout"))
-      .select(lit(fdName).as("fd"), col("n_lhs"), col("n_violating"),
-        col("max_fanout"))
-
-  private def functionalDependency(s: SparkSession, dir: String): DataFrame = {
-    val audits = Seq(
-      fdAuditOn(load(s, dir, "customer"),
-        "customer.c_nationkey->c_mktsegment", "c_nationkey", "c_mktsegment"),
-      fdAuditOn(load(s, dir, "lineitem"),
-        "lineitem.l_orderkey->l_returnflag", "l_orderkey", "l_returnflag"),
-      fdAuditOn(load(s, dir, "lineitem"),
-        "lineitem.l_partkey->l_suppkey", "l_partkey", "l_suppkey"),
-      fdAuditOn(load(s, dir, "orders"),
-        "orders.o_custkey->o_orderpriority", "o_custkey", "o_orderpriority"))
-    audits.reduce(_ unionAll _)
-      .selectExpr("fd", "n_lhs", "n_violating", "max_fanout",
-        """floor((CAST(n_violating AS DOUBLE)/n_lhs)*1e6 + 0.5)/1e6
-          | AS violation_share""".stripMargin)
-      .orderBy("fd")
-  }
-
-  private val functionalDependencyOracle = {
-    def one(table: String, x: String, y: String) =
-      s"""SELECT '$table.$x->$y' AS fd,
-         |  CAST(count(*) AS BIGINT) AS n_lhs,
-         |  CAST(sum(CASE WHEN ny > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_violating,
-         |  CAST(max(ny) AS BIGINT) AS max_fanout
-         |FROM (SELECT $x, CAST(count(DISTINCT $y) AS BIGINT) AS ny
-         |      FROM $table GROUP BY 1)""".stripMargin
-    s"""WITH u AS (
-       |${one("customer", "c_nationkey", "c_mktsegment")}
-       |UNION ALL
-       |${one("lineitem", "l_orderkey", "l_returnflag")}
-       |UNION ALL
-       |${one("lineitem", "l_partkey", "l_suppkey")}
-       |UNION ALL
-       |${one("orders", "o_custkey", "o_orderpriority")})
-       |SELECT fd, n_lhs, n_violating, max_fanout,
-       |  floor((CAST(n_violating AS DOUBLE)/n_lhs)*1e6 + 0.5)/1e6
-       |   AS violation_share
-       |FROM u ORDER BY fd""".stripMargin
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_simpson_paradox" -> (simpsonParadox _),
-    "agg_process_capability" -> (processCapability _),
-    "dq_functional_dependency" -> (functionalDependency _)
+    "agg_process_capability" -> (processCapability _)
   )
 
   val oracle: Map[String, String] = Map(
     "agg_simpson_paradox" -> simpsonParadoxOracle,
-    "agg_process_capability" -> processCapabilityOracle,
-    "dq_functional_dependency" -> functionalDependencyOracle
+    "agg_process_capability" -> processCapabilityOracle
   )
 }

@@ -30,7 +30,7 @@ object Composite39 {
   // revenue / national revenue.
   private[graft] def concentrationRatioOn(li: DataFrame, supp: DataFrame): DataFrame = {
     val rev = li.select(col("l_suppkey").as("s_suppkey"),
-        (money(col("l_extendedprice")) * 100).cast("long").as("cents"))
+        cents(col("l_extendedprice")).as("cents"))
       .join(supp.select(col("s_suppkey"), col("s_nationkey")), "s_suppkey")
       .groupBy(col("s_nationkey"), col("s_suppkey"))
       .agg(sum(col("cents")).as("rev"))

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
 
-/** SURVEY.md §2.18 (continued) — round-7 data-quality, nested-type
-  * and calendar operators: a Benford first-digit audit (the classic
-  * fraud / synthetic-data detector), array-of-struct algebra
-  * surfaced as scalars, month-end-clamped calendar arithmetic, a
-  * centered (forward-looking) window frame, and the array
-  * higher-order-function tier.
+/** SURVEY.md §2.18 (continued) — round-7 nested-type, calendar,
+  * window and event operators: array-of-struct algebra surfaced as
+  * scalars, month-end-clamped calendar arithmetic, a centered
+  * (forward-looking) window frame, the array higher-order-function
+  * tier, an hour × weekday event heatmap, share-of-order, the
+  * lineitem primary-key-violation report, and per-user event
+  * inter-arrival statistics.
   */
 object Composite5 {
 
@@ -21,39 +22,6 @@ object Composite5 {
   private def q(sql: String)(s: SparkSession, dir: String): DataFrame = {
     views(s, dir); s.sql(sql)
   }
-
-  // ---- agg_benford -------------------------------------------------
-  // First-significant-digit distribution of order totals against the
-  // Benford expectation ln(1+1/d)/ln(10). One hash aggregate over a
-  // pure projection; the observed share uses a window total over the
-  // 9-row aggregate (free). Digit extraction goes through the
-  // DECIMAL(15,2) string form, which both engines format identically
-  // — never the raw double, whose formatting is engine-specific.
-  // ln(10) is pinned as its exact double literal (§1.5 discipline:
-  // no cross-engine libm call the 6-dp rounding cannot bound).
-  private val LN10 = "2.302585092994046"
-
-  private val benfordSql =
-    s"""WITH d AS (
-       |  SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(15,2)) AS STRING), 1, 1) AS INT) AS digit
-       |  FROM orders),
-       |c AS (SELECT digit, count(*) AS n FROM d GROUP BY digit)
-       |SELECT digit, n,
-       |  round(CAST(n AS DOUBLE) / CAST(sum(n) OVER () AS DOUBLE), 6) AS share,
-       |  round(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / CAST(digit AS DOUBLE)) / $LN10, 6) AS benford
-       |FROM c
-       |ORDER BY digit""".stripMargin
-
-  private val benfordOracle =
-    s"""WITH d AS (
-       |  SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(15,2)) AS VARCHAR), 1, 1) AS INT) AS digit
-       |  FROM orders),
-       |c AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY digit)
-       |SELECT digit, n,
-       |  round(CAST(n AS DOUBLE) / CAST(sum(n) OVER () AS DOUBLE), 6) AS share,
-       |  round(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / CAST(digit AS DOUBLE)) / $LN10, 6) AS benford
-       |FROM c
-       |ORDER BY digit""".stripMargin
 
   // ---- nested_struct_topn ------------------------------------------
   // Array-of-struct algebra: per order, line items are collected as
@@ -281,7 +249,6 @@ object Composite5 {
   // ---- registration ------------------------------------------------
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_benford" -> (q(benfordSql) _),
     "nested_struct_topn" -> (nestedTopN _),
     "date_arithmetic" -> (q(dateArithSql) _),
     "win_centered_frame" -> (q(centeredFrameSql) _),
@@ -293,7 +260,6 @@ object Composite5 {
   )
 
   val oracle: Map[String, String] = Map(
-    "agg_benford" -> benfordOracle,
     "nested_struct_topn" -> nestedTopNOracle,
     "date_arithmetic" -> dateArithOracle,
     "win_centered_frame" -> centeredFrameSql,

@@ -68,7 +68,7 @@ object Composite68 {
   private def bowleySkew(s: SparkSession, dir: String): DataFrame =
     bowleySkewOn(load(s, dir, "orders")
       .select(col("o_orderpriority").as("g"),
-        (money(col("o_totalprice")) * 100).cast("bigint").as("v")))
+        cents(col("o_totalprice")).as("v")))
 
   private val bowleySkewOracle =
     s"""WITH o AS (

@@ -29,15 +29,20 @@ import graft.util.Tables._
   */
 object Sampling {
 
-  /** Deterministic hash-threshold keep predicate: lowercase-hex md5
-    * prefix compared as a string (fixed width => numeric order).
+  /** The 256-way hash bucket of an id: the first two lowercase-hex
+    * chars of md5('graft' || id). */
+  private[graft] def hashBucket(id: Column): Column =
+    substring(md5(concat(lit("graft"), id.cast("string"))), 1, 2)
+
+  /** Deterministic hash-threshold keep predicate: the [[hashBucket]]
+    * compared as a string (fixed width => numeric order).
     * `hexMax` "28" keeps (2*16+8+1)/256 ~ 16% of rows. Validated:
     * an uppercase or wrong-width threshold would silently change the
     * kept fraction (lowercase hex sorts above 'F'). */
   private[graft] def hashKeep(id: Column, hexMax: String): Column = {
     require(hexMax.matches("[0-9a-f]{2}"),
       s"hashKeep: hexMax '$hexMax' must be exactly 2 lowercase hex chars")
-    substring(md5(concat(lit("graft"), id.cast("string"))), 1, 2) <= hexMax
+    hashBucket(id) <= hexMax
   }
 
   /** Deterministic md5-threshold stratified keep-set (the

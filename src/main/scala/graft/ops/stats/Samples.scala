@@ -57,9 +57,6 @@ object Samples {
       name: String = "x"): DataFrame =
     df.select(value.as(name), isGroup1.cast("int").as("i1"))
 
-  /** Exact cents of a money column, as BIGINT. */
-  def cents(value: Column): Column = (money(value) * 100).cast("bigint")
-
   /** The two-sample value grid: per distinct `key` value, the group-1
     * count a and the group-2 count b. */
   def abGrid(xy: DataFrame, key: String = "x"): DataFrame =

@@ -116,9 +116,9 @@ private[graft] object Series {
       sum(money(col("o_totalprice"))).cast("decimal(15,2)").as("rev"))
 
   def candle(orders: DataFrame): DataFrame = {
-    val cents = (money(col("o_totalprice")) * 100).cast("bigint")
-    byOrderDay(orders, max(cents).as("hi"), min(cents).as("lo"),
-      max_by(cents, col("o_orderkey")).as("cl"))
+    val c = cents(col("o_totalprice"))
+    byOrderDay(orders, max(c).as("hi"), min(c).as("lo"),
+      max_by(c, col("o_orderkey")).as("cl"))
   }
 
   /** True range of a [[candle]] row given the previous close `pc`. */

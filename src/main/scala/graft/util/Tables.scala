@@ -63,6 +63,9 @@ object Tables {
     */
   def money(c: Column): Column = c.cast("decimal(15,2)")
 
+  /** Exact cents of a money column, as BIGINT. */
+  def cents(c: Column): Column = (money(c) * 100).cast("bigint")
+
   /** Final surface type for any aggregate that went through decimal
     * accumulation: one deterministic decimal->IEEE754 rounding on both
     * engines. */

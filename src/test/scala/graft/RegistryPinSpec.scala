@@ -163,4 +163,30 @@ class RegistryPinSpec extends AnyFunSuite {
     assertSame(graft.ops.timeseries.TimeSeries.queries.keySet, timeSeriesIds)
     assert(graft.ops.timeseries.TimeSeries.oracle.keySet.subsetOf(timeSeriesIds))
   }
+
+  test("the data-quality family owns exactly its 17 rows") {
+    val dqIds = Set(
+      // Digits
+      "agg_benford", "dq_benford_first_two", "dq_benford_second_digit",
+      "dq_last_digit_uniformity",
+      // Integrity
+      "dq_constraint_check", "dq_uniqueness_audit",
+      "dq_referential_integrity", "dq_functional_dependency",
+      "dq_order_reconciliation",
+      // Drift
+      "dq_generation_drift", "dq_schema_drift", "dq_freshness",
+      "dq_out_of_order_audit",
+      // Profiles
+      "dq_outlier_fences", "dq_k_anonymity", "dq_embedding_norms",
+      "dq_hash_uniformity")
+    assert(dqIds.size == 17)
+    assertSame(graft.ops.dq.DataQuality.queries.keySet, dqIds)
+    assertSame(graft.ops.dq.DataQuality.oracle.keySet, dqIds)
+    // every dq_* row is in the family, except the one that reads the
+    // daily series
+    val dqRows = SparkEntry.queries.keySet.filter(_.startsWith("dq_"))
+    assertSame(dqRows - "dq_calendar_gaps",
+      graft.ops.dq.DataQuality.queries.keySet - "agg_benford")
+    assert(graft.ops.timeseries.TimeSeries.queries.contains("dq_calendar_gaps"))
+  }
 }

@@ -63,7 +63,7 @@ class Round29Spec extends AnyFunSuite {
       ("A", 1, 500.00), ("A", 1, 999.99), ("A", 1, -1.00),
       ("B", 1, 500.00), ("B", 2, 500.00), ("B", 2, 700.00))
       .toDF("c_mktsegment", "c_nationkey", "c_acctbal")
-    val got = graft.ops.Composite31.kAnonymityOn(cust)
+    val got = graft.ops.dq.Profiles.kAnonymityOn(cust)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((1L, 2L, 2L), (2L, 2L, 4L)))
   }

@@ -20,7 +20,7 @@ class Round30Spec extends AnyFunSuite {
     // the pre-join dedup must keep each child row counted once.
     val child = Seq(Some(1L), Some(2L), Some(99L), None).toDF("fk")
     val parent = Seq(1L, 1L, 2L, 3L).toDF("pk")
-    val got = graft.ops.Composite33
+    val got = graft.ops.dq.Integrity
       .referentialIntegrityOn(Seq(("child->parent", child, "fk", parent, "pk")))
       .as[(String, Long, Long)].collect().toSeq
     assert(got == Seq(("child->parent", 4L, 1L)))
@@ -30,7 +30,7 @@ class Round30Spec extends AnyFunSuite {
     val child = Seq(1L, 2L).toDF("fk")
     val parent = Seq(1L, 2L, 3L).toDF("pk")
     val empty = Seq.empty[Long].toDF("fk")
-    val got = graft.ops.Composite33.referentialIntegrityOn(Seq(
+    val got = graft.ops.dq.Integrity.referentialIntegrityOn(Seq(
         ("b_edge", child, "fk", parent, "pk"),
         ("a_edge", empty, "fk", parent, "pk")))
       .as[(String, Long, Long)].collect().toSeq

@@ -20,7 +20,7 @@ class Round32Spec extends AnyFunSuite {
     // high fence 7 catches only the 100.
     val li = Seq(1.0, 2.0, 3.0, 4.0, 100.0)
       .map(p => ("A", p)).toDF("l_returnflag", "l_extendedprice")
-    val got = graft.ops.Composite35.outlierFencesOn(li)
+    val got = graft.ops.dq.Profiles.outlierFencesOn(li)
       .as[(String, Long, Double, Double, Long, Long)].collect().toSeq
     assert(got == Seq(("A", 5L, 2.0, 4.0, 0L, 1L)))
   }

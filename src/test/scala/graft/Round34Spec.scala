@@ -23,7 +23,7 @@ class Round34Spec extends AnyFunSuite {
     val li = Seq((1L, 10.00, 0.00, 0.00), (2L, 19.99, 0.00, 0.00),
       (4L, 10.00, 0.10, 0.21))
       .toDF("l_orderkey", "l_extendedprice", "l_discount", "l_tax")
-    val got = graft.ops.Composite37.orderReconciliationOn(orders, li)
+    val got = graft.ops.dq.Integrity.orderReconciliationOn(orders, li)
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(
       ("A", 2L, 0L, 1L, 1L, 0L, 1L),

@@ -60,7 +60,7 @@ class Round35Spec extends AnyFunSuite {
   test("fdAuditOn: one violating LHS value out of three, fan-out 2") {
     val df = Seq((1L, "a"), (1L, "a"), (1L, "b"), (2L, "a"), (3L, "c"))
       .toDF("x", "y")
-    val got = graft.ops.Composite38.fdAuditOn(df, "t.x->y", "x", "y")
+    val got = graft.ops.dq.Integrity.fdAuditOn(df, "t.x->y", "x", "y")
       .as[(String, Long, Long, Long)].collect().toSeq
     assert(got == Seq(("t.x->y", 3L, 1L, 2L)))
   }

@@ -52,7 +52,7 @@ class Round38Spec extends AnyFunSuite {
     val li = (Seq(1.01, 2.11, 3.21, 4.02).map(p => ("A", p)) ++
       (0 to 9).map(d => ("B", 1.0 + d / 100.0)))
       .toDF("l_returnflag", "l_extendedprice")
-    val got = graft.ops.Composite41.lastDigitUniformityOn(li)
+    val got = graft.ops.dq.Digits.lastDigitUniformityOn(li)
       .as[(String, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(("A", 4L, 1L, 3L, 21.0), ("B", 10L, 0L, 1L, 0.0)))
   }

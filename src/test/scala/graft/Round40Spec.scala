@@ -81,7 +81,7 @@ class Round40Spec extends AnyFunSuite {
     }
     val docs = (0L to 9L).map(doc)
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = graft.ops.Composite43.schemaDriftOn(docs)
+    val got = graft.ops.dq.Drift.schemaDriftOn(docs)
       .as[(String, Long, Long, Option[String], Option[String], String)]
       .collect().toSeq
     assert(got == Seq(

@@ -60,7 +60,7 @@ class Round46Spec extends AnyFunSuite {
       (4L, ts(30), "A"),
       (5L, ts(1), "B"), (6L, ts(2), "B")
     ).toDF("event_id", "ts", "event_type")
-    val got = graft.ops.Composite49.outOfOrderAuditOn(ev)
+    val got = graft.ops.dq.Drift.outOfOrderAuditOn(ev)
       .as[(String, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       ("A", 3L, 1L, 5000000L, 0.333333),

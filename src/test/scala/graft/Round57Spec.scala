@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round 18 — verdict punch-list item 1: `dq_benford_second_digit`
-  * (Composite81) wired into the registry, with the planted cases the
+  * (dq.Digits) wired into the registry, with the planted cases the
   * r17 verdict asked for: the totals-<10 exclusion (no second integer
   * digit — position 2 of the DECIMAL(15,2) string is the decimal
   * point) and a known digit distribution against the pinned Nigrini
@@ -19,7 +19,7 @@ class Round57Spec extends AnyFunSuite {
     // 25.10), 3 (137.25).
     val orders = Seq(9.99, 5.00, 10.00, 19.99, 25.50, 25.10, 137.25)
       .toDF("o_totalprice")
-    val out = graft.ops.Composite81.benford2On(spark, orders)
+    val out = graft.ops.dq.Digits.benford2On(spark, orders)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == Seq((0, 1L, 0.2), (3, 1L, 0.2),
       (5, 2L, 0.4), (9, 1L, 0.2)))
@@ -28,7 +28,7 @@ class Round57Spec extends AnyFunSuite {
   test("benford second digit: pinned expected shares are Nigrini's") {
     val orders = Seq(10.0, 21.0, 32.0, 43.0, 54.0, 65.0, 76.0, 87.0,
       98.0, 19.0).toDF("o_totalprice") // digits 0..9, one each
-    val rows = graft.ops.Composite81.benford2On(spark, orders)
+    val rows = graft.ops.dq.Digits.benford2On(spark, orders)
       .collect().map(r => (r.getInt(0), r.getDouble(3)))
     // Σ_{k=1..9} log10(1 + 1/(10k + d)), round 6 — spot-check the
     // endpoints and that the full table sums to 1.
@@ -146,7 +146,7 @@ class Round57Spec extends AnyFunSuite {
     // 9.99 excluded; 10.00→10, 12.34→12, 123.45→12, 99.99→99.
     val orders = Seq(9.99, 10.00, 12.34, 123.45, 99.99)
       .toDF("o_totalprice")
-    val out = graft.ops.Composite82.benford12On(spark, orders)
+    val out = graft.ops.dq.Digits.benford12On(spark, orders)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == Seq((10, 1L, 0.25), (12, 2L, 0.5), (99, 1L, 0.25)))
   }
@@ -200,7 +200,7 @@ class Round57Spec extends AnyFunSuite {
     val vs = Seq(
       (1L, Seq(3.0f, 4.0f)), (2L, Seq(0.0f, 0.0f)), (3L, Seq(1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val r = graft.ops.Composite84.embeddingNormsOn(vs).collect().head
+    val r = graft.ops.dq.Profiles.embeddingNormsOn(vs).collect().head
     assert(r.getLong(0) == 3L)                 // n_vectors
     assert(r.getLong(1) == 2L)                 // n_dims_distinct
     assert(r.getLong(2) == 2L && r.getLong(3) == 3L)
@@ -214,7 +214,7 @@ class Round57Spec extends AnyFunSuite {
   test("hash uniformity: a single doc gives chi2 = 255 exactly") {
     import spark.implicits._
     val docs = Seq(42L).toDF("doc_id")
-    val r = graft.ops.Composite84.hashUniformityOn(docs, "doc_id").collect().head
+    val r = graft.ops.dq.Profiles.hashUniformityOn(docs, "doc_id").collect().head
     assert(r.getLong(0) == 1L && r.getLong(1) == 256L)
     assert(r.getDouble(4) == 255.0)
     assert(r.getBoolean(5))

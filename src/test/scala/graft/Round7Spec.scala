@@ -185,7 +185,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("agg_benford: digits in 1..9, shares sum to 1, expectation is Benford") {
-    val rows = graft.ops.Composite5.queries("agg_benford")(spark, sf).collect()
+    val rows = graft.ops.dq.Digits.queries("agg_benford")(spark, sf).collect()
     assert(rows.map(_.getInt(0)).forall(d => d >= 1 && d <= 9))
     val shareSum = rows.map(_.getDouble(2)).sum
     assert(math.abs(shareSum - 1.0) < 1e-4, s"shares sum $shareSum")
