@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Per-JVM parquet materialization of an expensive shared
   * intermediate, the one memo registry behind every shared view (the
@@ -24,6 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one path, and see the build's own exception if it fails. Keys
   * canonicalize the corpus dir, so sf0.01 Verify and sf0.1 Bench never
   * share a table.
+  *
+  * The future carries the path and the schema the build wrote, and
+  * every read passes that schema: `read.parquet(path)` alone would run
+  * a footer-inference job on each read. A file-source read makes every
+  * field nullable either way, so the read schema is the inferred one.
   */
 object DiskMemo {
 
@@ -43,7 +49,7 @@ object DiskMemo {
   // IllegalStateException("Recursive update") whenever the two keys
   // share a bin — caught by Round58Spec's reset/rebuild test.
   private val memo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]()
+    String, java.util.concurrent.CompletableFuture[(String, StructType)]]()
 
   /** Forget every memoized table so the next caller rebuilds (the
     * parquet paths are overwrite-mode, so no cleanup is needed).
@@ -77,7 +83,8 @@ object DiskMemo {
   def table(s: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
     val key = new java.io.File(dir).getCanonicalPath + "#" + tag
-    val fresh = new java.util.concurrent.CompletableFuture[String]()
+    val fresh =
+      new java.util.concurrent.CompletableFuture[(String, StructType)]()
     val prior = memo.putIfAbsent(key, fresh)
     val fut = if (prior != null) prior
     else {
@@ -88,8 +95,9 @@ object DiskMemo {
       // exception propagates to every waiter of THIS attempt.
       try {
         val p = Scans.tmp(s, dir, tag) + "/t"
-        build.write.mode("overwrite").parquet(p)
-        fresh.complete(p)
+        val df = build
+        df.write.mode("overwrite").parquet(p)
+        fresh.complete((p, df.schema))
       } catch {
         case t: Throwable =>
           memo.remove(key, fresh); fresh.completeExceptionally(t); throw t
@@ -98,10 +106,10 @@ object DiskMemo {
     }
     // A waiter rethrows the build's own exception, the same one its
     // builder saw, not join()'s CompletionException wrapper.
-    val path =
+    val (path, schema) =
       try fut.join()
       catch { case e: java.util.concurrent.CompletionException
         if e.getCause != null => throw e.getCause }
-    s.read.parquet(path)
+    s.read.schema(schema).parquet(path)
   }
 }

@@ -25,12 +25,27 @@ object Sessions {
     * Contract this relies on: the engine adds no per-session jars, files
     * or artifacts (no `addArtifact`/`addJar`); with isolation off such
     * an addition would be visible to every session. SessionsSpec pins
-    * the flag and the cross-session cache hit. */
+    * the flag and the cross-session cache hit.
+    *
+    * File scans run in whole waves. Spark sizes file splits as
+    * `maxSplitBytes = min(128 MB, max(openCostInBytes = 4 MB,
+    * totalBytes / minPartitionNum))`, where every file counts its
+    * length plus the 4 MB open cost and `minPartitionNum` defaults to
+    * the core count (MB here is 2^20 bytes, as in Spark's confs). Ten
+    * 10.2 MB one-row-group files (the x10 lineitem) total ≈146 MB, so
+    * at `local[4]` splits are 37 MB and pack two files each: 5 scan
+    * tasks on 4 cores, one of them alone in a second wave.
+    * `spark.sql.files.minPartitionNum = 2 × cpus` halves the split size
+    * (18 MB, one file per split: 10 tasks). At 4 cores or more the
+    * 4 MB open-cost floor keeps every one-file table of up to 12 MB
+    * (every sf0.1 table) splitting as before; at 8 cores the ten files
+    * already scan as 10 splits. SessionsSpec pins the rule. */
   def local(cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.files.minPartitionNum", (2 * cpus.toInt).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS); see Tables.loadEvents
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -3,6 +3,8 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +12,8 @@ import graft.ops.DiskMemo
 
 /** DiskMemo's concurrency contract: every caller of a failed build sees
   * the builder's own exception, and a reset never lets a second build
-  * of a key start while the first is still writing. */
+  * of a key start while the first is still writing. A memo read runs
+  * no job: it reads with the schema the build wrote. */
 class DiskMemoSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -115,5 +118,47 @@ class DiskMemoSpec extends AnyFunSuite {
       release.countDown()
       DiskMemo.reset(tag)
     }
+  }
+
+  /** Jobs started on this thread while `body` runs, and its result. */
+  private def jobsOf[A](body: => A): (Int, A) = {
+    val group = s"memo_spec_jobs_${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "DiskMemoSpec job count")
+    try {
+      val out = body
+      TestBus.drain(sc)
+      (jobs.get, out)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a memo read runs no job and has the schema of its files") {
+    val tag = "memo_spec_schema"
+    DiskMemo.reset(tag)
+    try {
+      val built = DiskMemo.table(spark, sf, tag) {
+        Seq((1L, Seq("a", "b")), (2L, Seq("c"))).toDF("k", "xs")
+      }
+      val (jobs, memo) = jobsOf {
+        DiskMemo.table(spark, sf, tag)(fail("a memoized table was rebuilt"))
+      }
+      assert(jobs == 0, s"a memo read ran $jobs jobs")
+      val path = new org.apache.hadoop.fs.Path(memo.inputFiles.head).getParent
+      assert(memo.schema == spark.read.parquet(path.toString).schema)
+      assert(memo.schema == built.schema)
+      assert(memo.orderBy("k").collect().toSeq.map(r =>
+        (r.getLong(0), r.getSeq[String](1))) == Seq((1L, Seq("a", "b")), (2L, Seq("c"))))
+    } finally DiskMemo.reset(tag)
   }
 }

@@ -10,7 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * with artifact isolation on, every `newSession()` runs its tasks
   * under its own classloader and recompiles every whole-stage class.
   * These tests guard against a Spark upgrade or a config edit quietly
-  * bringing the per-session recompiles back. */
+  * bringing the per-session recompiles back.
+  *
+  * Engine sessions also size file splits for two per core, so a scan
+  * of a few more files than cores runs in whole waves; the last two
+  * tests pin that rule and show that Spark's default packs the same
+  * files into fewer, partly idle, tasks. */
 class SessionsSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
 
@@ -54,5 +59,49 @@ class SessionsSpec extends AnyFunSuite {
       s"a new session recompiled ${compiles - c1} classes")
     assert(r2 == r1)
     assert(r1.nonEmpty)
+  }
+
+  private val MinPartitionNum = "spark.sql.files.minPartitionNum"
+
+  test("engine sessions and their newSession()s split file scans for two per core") {
+    val perCore2 = (2 * spark.sparkContext.defaultParallelism).toString
+    assert(spark.conf.get(MinPartitionNum) == perCore2)
+    assert(spark.newSession().conf.get(MinPartitionNum) == perCore2)
+  }
+
+  /** Scan partitions of a planted table: ⌈2.5·P⌉ equal files of one row
+    * group each, P the fixture's default parallelism, read in a
+    * `newSession()` whose open cost is lowered below a file's length so
+    * these small files pack the way 10 MB files do at the 4 MB default
+    * (two files per split at P splits' worth of bytes). With
+    * `sparkDefault` the session drops the engine's minPartitionNum. */
+  private def scanPartitions(sparkDefault: Boolean): (Int, Int) = {
+    val p = spark.sparkContext.defaultParallelism
+    val files = math.ceil(2.5 * p).toInt
+    val dir = java.nio.file.Files.createTempDirectory("graft_split_spec")
+    try {
+      val path = dir.resolve("t").toString
+      spark.range(0, files * 2000L, 1, files)
+        .selectExpr("id", "sha2(cast(id AS string), 256) AS h")
+        .write.parquet(path)
+      val s = spark.newSession()
+      s.conf.set("spark.sql.files.openCostInBytes", "4096")
+      if (sparkDefault) s.conf.unset(MinPartitionNum)
+      val t = s.read.parquet(path)
+      (t.inputFiles.length, t.rdd.getNumPartitions)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("a table of 2.5x as many files as cores scans as one partition per file") {
+    val (files, parts) = scanPartitions(sparkDefault = false)
+    assert(files == math.ceil(2.5 * spark.sparkContext.defaultParallelism).toInt)
+    assert(parts == files, s"$files files scanned in $parts partitions")
+  }
+
+  test("control: with minPartitionNum unset the same files pack into fewer partitions") {
+    val (files, parts) = scanPartitions(sparkDefault = true)
+    assert(parts < files, s"$files files scanned in $parts partitions")
   }
 }
