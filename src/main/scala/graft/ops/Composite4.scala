@@ -287,14 +287,14 @@ object Composite4 {
   /** Per-order sorted distinct part sets — the BASE view of the
     * co-purchase layer (r18): `agg_basket_lift` consumes it directly
     * and the weighted edge view explodes its pairs, so the lineitem
-    * groupBy/collect_set runs once per JVM (timed as
-    * `memo_order_psets`). Exact content (sorted distinct bigints per
-    * orderkey). */
+    * grouping runs once per JVM (timed as `memo_order_psets`). Exact
+    * content (sorted distinct bigints per orderkey), built by the
+    * primitive [[graft.plans.SortedLongSets]] operator. */
   private[graft] def sharedOrderPsets(s: SparkSession, dir: String): DataFrame =
-    DiskMemo.table(s, dir, "order_psets")(
-      load(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps")))
+    DiskMemo.table(s, dir, "order_psets")(orderPsetsOn(load(s, dir, "lineitem")))
+
+  private[graft] def orderPsetsOn(lineitem: DataFrame): DataFrame =
+    graft.plans.SortedLongSets(lineitem, "l_orderkey", "l_partkey", "ps")
 
   // ---- agg_corr_matrix ---------------------------------------------
   // All 6 pairwise Pearson correlations over (quantity, price,

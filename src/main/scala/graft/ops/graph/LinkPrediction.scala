@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{DiskMemo, TriCore}
+import graft.plans.SortedLongSets
 import CoPurchase.coPurchaseHalfEdges
 
 /** Link prediction over the co-purchase graph (SURVEY.md §2.52,
@@ -68,9 +69,8 @@ object LinkPrediction {
     val deg = degOpt.getOrElse(
       sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("deg"))
         .localCheckpoint())
-    val wedges = sym.filter(col("dst") % Slice === 0)
-      .groupBy(col("src"))
-      .agg(sort_array(collect_set(col("dst"))).as("ps0"))
+    val wedges = SortedLongSets(sym.filter(col("dst") % Slice === 0),
+        "src", "dst", "ps0")
       .select(col("src").as("z"), slice(col("ps0"), 1, SliceCap).as("ps"))
       .select(col("z"), col("ps"), posexplode(col("ps")))
       .toDF("z", "ps", "i", "a")

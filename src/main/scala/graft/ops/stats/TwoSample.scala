@@ -1052,9 +1052,16 @@ object TwoSample {
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "HOUSEHOLD"))
       .select(col("c_custkey").as("o_custkey"),
         (col("c_mktsegment") === "AUTOMOBILE").cast("int").as("i1"))
-    val horizon = broadcast(load(s, dir, "orders")
-      .agg(date_sub(max(col("o_orderdate")).cast("date"), 183).as("cutoff")))
-    val flagged = life.join(seg, "o_custkey").crossJoin(horizon)
+    // The censoring horizon is the latest order date, read off `life`
+    // before the segment join: `life` groups every order (a null
+    // o_custkey is one more group), so its max(last_order) is the
+    // orders maximum without a second orders scan. The unpartitioned
+    // window passes life's one row per customer through one task; a
+    // separate max aggregate of `life` would plan as its own scan.
+    val flagged = life
+      .withColumn("cutoff",
+        date_sub(max(col("last_order")).over().cast("date"), 183))
+      .join(seg, "o_custkey")
       .select(col("dur"),
         (col("last_order").cast("date") <= col("cutoff")).cast("int").as("evt"),
         col("i1"))

@@ -22,9 +22,14 @@
 # change won (ties count for neither side), whether the change's
 # median is within the metric's bound, and whether a gain holds: the
 # change wins at least 9/10 of the pairs and its median beats the
-# parent's by more than the parent's interquartile range. Every run's
-# output stays in WORK_DIR/<side>/run-<seed>.out. Exits 1 if a run
-# failed or a digest differed. perfbench/ itself is not edited.
+# parent's by more than the parent's interquartile range. Then one
+# traced run (`--trace 1`) per side on seed SEED0+PAIRS, printed side
+# by side: the per-layer medians over its traced passes (jobs, stages,
+# tasks, executor_cpu_s, jvm_gc_s, shuffle_write_mb, build_s) and, per
+# row, each stage's median wall and task count by its position in the
+# row. Every run's output stays in WORK_DIR/<side>/run-<seed>.out.
+# Exits 1 if a run failed or a digest differed. perfbench/ itself is
+# not edited.
 set -uo pipefail
 
 if [ $# -lt 4 ]; then
@@ -43,11 +48,11 @@ tar -C "$REPO" --exclude=__pycache__ -cf - "${FILES[@]}" | tar -x -C "$WORK/chan
 SECS=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
   "$WORK/change/BENCHMARK.json") || exit 1
 
-# bench SIDE SEED SECONDS: one untraced run on SIDE; stdout to
-# WORK/SIDE/run-SEED.out, stderr to run-SEED.err.
+# bench SIDE SEED SECONDS [TRACE]: one run on SIDE, untraced unless
+# TRACE is 1; stdout to WORK/SIDE/run-SEED.out, stderr to run-SEED.err.
 bench() {
   (cd "$WORK/$1" && python3 perfbench/run.py --workload "$W" --seed "$2" \
-    --seconds "$3" --trace 0 > "run-$2.out" 2> "run-$2.err")
+    --seconds "$3" --trace "${4:-0}" > "run-$2.out" 2> "run-$2.err")
 }
 
 # The priming runs use seed SEED0-1, outside the pairs' seeds.
@@ -75,6 +80,11 @@ for ((i = 0; i < PAIRS; i++)); do
   done
   echo "[ab] pair $((i + 1))/$PAIRS (seed $seed) done"
 done
+TSEED=$((SEED0 + PAIRS))
+for side in parent change; do
+  bench "$side" "$TSEED" "$SECS" 1 || echo "[ab] $side traced seed $TSEED exited non-zero"
+done
+echo "[ab] traced runs (seed $TSEED) done"
 
 python3 - "$WORK" "$W" "$PAIRS" "$SEED0" <<'EOF'
 import glob, json, math, os, sys
@@ -84,8 +94,9 @@ bench = json.load(open(os.path.join(work, "change", "BENCHMARK.json")))
 seeds = [seed0 + i for i in range(pairs)]
 
 
-def run(side, seed):
-    """The run's stdout JSON line (None if it has none) and its cores."""
+def run(side, seed, trace=0):
+    """The run's stdout JSON line (None if it has none), its cores and
+    its run directory."""
     d = os.path.join(work, side)
     line = None
     with open(os.path.join(d, f"run-{seed}.out")) as f:
@@ -95,9 +106,10 @@ def run(side, seed):
             line = json.loads(lines[-1])
         except ValueError:
             pass
-    res = glob.glob(os.path.join(d, ".bench_build", "runs", f"{w}-seed{seed}-trace0-*", "result.json"))
-    cores = json.load(open(res[0])).get("cores") if res else None
-    return line, cores
+    rdir = glob.glob(os.path.join(d, ".bench_build", "runs", f"{w}-seed{seed}-trace{trace}-*"))
+    res = os.path.join(rdir[0], "result.json") if rdir else None
+    cores = json.load(open(res)).get("cores") if res and os.path.exists(res) else None
+    return line, cores, rdir[0] if rdir else None
 
 
 def pct(xs, q):
@@ -110,9 +122,9 @@ def pct(xs, q):
 runs = {s: [run(s, seed) for seed in seeds] for s in ("parent", "change")}
 bad = 0
 for side, rs in runs.items():
-    ok = sum(1 for line, _ in rs if line and line["correct"])
+    ok = sum(1 for line, _, _ in rs if line and line["correct"])
     bad += len(rs) - ok
-    cores = sorted({c for _, c in rs if c is not None})
+    cores = sorted({c for _, c, _ in rs if c is not None})
     print(f"[ab] {side}: {ok}/{len(rs)} runs digest-correct, cores {cores}")
 good = [i for i in range(pairs) if all(runs[s][i][0] and runs[s][i][0]["correct"] for s in runs)]
 need = math.ceil(0.9 * len(good))
@@ -142,5 +154,39 @@ with open(os.path.join(work, "pairs.tsv"), "w") as tsv:
               f"{wins:>3}/{len(good):<2} {'within' if within else 'WORSE':>6} {m['bound']:<5} "
               f"{'holds' if gain else 'no':>5}")
 print(f"[ab] per-pair values: {os.path.join(work, 'pairs.tsv')}")
+
+# The traced side-by-side: one --trace 1 run per side on seed
+# seed0+pairs.
+tseed = seed0 + pairs
+traced = {}
+for side in ("parent", "change"):
+    line, _, rdir = run(side, tseed, trace=1)
+    spans = os.path.join(rdir, "spans.jsonl") if rdir else ""
+    stages = {}  # (row, position in the row) -> [(wall ms, tasks)] over traced passes
+    if os.path.exists(spans):
+        by_row = {}
+        for s in map(json.loads, open(spans)):
+            if s["name"].startswith("stage"):
+                by_row.setdefault(s["parent"], []).append(s)
+        for parent_span, ss in by_row.items():
+            for i, s in enumerate(sorted(ss, key=lambda s: (s["start_ms"], s["name"]))):
+                stages.setdefault((s["row"], i), []).append((s["end_ms"] - s["start_ms"], s["tasks"]))
+    traced[side] = (line, stages)
+    if not (line and line["correct"]):
+        bad += 1
+        print(f"[ab] {side}: traced run seed {tseed} failed or was digest-wrong")
+if all(traced[s][0] for s in traced):
+    print(f"[ab] traced seed {tseed}: per-layer medians over the traced passes")
+    print(f"{'metric':<18} {'parent':>10} {'change':>10} {'ratio':>6}")
+    for name in ("jobs", "stages", "tasks", "executor_cpu_s", "jvm_gc_s", "shuffle_write_mb", "build_s"):
+        p, c = (traced[s][0]["metrics"][name]["value"] for s in ("parent", "change"))
+        print(f"{name:<18} {p:>10.4g} {c:>10.4g} {c / p if p else float('nan'):>6.3f}")
+    print(f"[ab] traced seed {tseed}: stage wall ms and tasks (medians) by position in the row")
+    print(f"{'row':<28} {'stage':>5} {'parent ms (tasks)':>18} {'change ms (tasks)':>18}")
+    keys = sorted(set(traced["parent"][1]) | set(traced["change"][1]))
+    for row, i in keys:
+        cell = lambda xs: f"{pct([x[0] for x in xs], .5):.0f} ({pct([x[1] for x in xs], .5):.0f})" if xs else "-"
+        print(f"{row:<28} {i:>5} {cell(traced['parent'][1].get((row, i))):>18} "
+              f"{cell(traced['change'][1].get((row, i))):>18}")
 sys.exit(1 if bad else 0)
 EOF
