@@ -41,10 +41,12 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Injected via
-  * [[GraftExtensions]]; [[AsOfJoin.apply]] also registers it on the
-  * session's experimental strategies so the operator works on any
-  * driver-provided session. */
+/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. [[AsOfJoin.apply]],
+  * the only builder of the plan node, registers it on the session's
+  * experimental strategies, so the operator works on any
+  * driver-provided session. It is not injected through
+  * [[GraftExtensions]], for the reason given at
+  * [[SortedLongSetsStrategy]]. */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>

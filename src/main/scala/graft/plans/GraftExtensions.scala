@@ -101,7 +101,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer pass: fuse the HOF sum-of-squares pattern into the
     // codegen DotProduct kernel (see FuseDotProduct)
     ext.injectOptimizerRule(_ => FuseDotProduct)
-    // bespoke physical operator: sort-merge as-of join (AsOfJoinExec)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan, UnaryExecNode, WholeStageCodegenExec}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** Sorted distinct bigint sets per bigint key: an exact replacement
   * for `groupBy(k).agg(sort_array(collect_set(v)).as(name))` as a
@@ -27,16 +28,36 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * `collect_set` aggregate 1.12 s. This operator keeps the two phases
   * and makes each one primitive:
   *
-  *  - partial: an open-addressing table of `Long` keys, each pointing
-  *    into one chain of `Long` values that drops duplicates on insert;
-  *    each group leaves as one `UnsafeRow` holding its sorted, distinct
-  *    values as an `array<bigint>`. At [[FlushAt]]
-  *    keys + values the table emits its rows and starts over, which is
-  *    safe because the final phase merges;
+  *  - partial: each input pair is appended to flat arrays under a
+  *    dense group id; at [[FlushAt]] groups + values the table groups
+  *    the values by count-then-scatter, and each group leaves as one
+  *    `UnsafeRow` holding its sorted, distinct values as an
+  *    `array<bigint>`. The table then starts over, which is safe
+  *    because the final phase merges;
   *  - final: `ClusteredDistribution(k)` and `k ASC` ordering, so
   *    `EnsureRequirements` inserts the one hash exchange and a
   *    spillable sort; runs of equal keys stream through a merge-union
   *    of their sorted arrays, one group in memory at a time.
+  *
+  * Why count-then-scatter: the lineitem files are not clustered by
+  * order key (each 10× sf0.1 file has 600,000 rows in 599,997 key
+  * runs), so a partial table that chains each key's values, as the
+  * first version of this operator did, walks every chain by random
+  * reads, on insert to drop duplicates and again to emit. A CPU
+  * profile of perfbench heavy_x10 put 39 % of executor samples in that
+  * insert and 15 % in the emit. Appending is sequential; the scatter
+  * writes each group's values next to each other, so the sort and the
+  * duplicate drop at emit read one short contiguous segment.
+  *
+  * Input: when the partial phase's child converts a columnar plan to
+  * rows (`ColumnarToRowExec`, alone or as a whole-stage codegen stage
+  * over its `InputAdapter`), which is the case for a parquet scan of
+  * the two columns, the partial phase reads the columnar plan's
+  * batches itself: no row is converted, and none is handed over one
+  * `LinkedList` node at a time through the codegen stage's
+  * `BufferedRowIterator` (≈ 2 GB of allocation per heavy_x10 run). The
+  * conversion node stays in the plan and reports 0 output rows. Any
+  * other child, such as a filter over the scan, is read as rows.
   *
   * Semantics equal `collect_set`'s: a null key is one group, null
   * values are skipped, a group whose values are all null gets `[]`,
@@ -44,14 +65,17 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * not nullable — the schema of the `sort_array(collect_set(..))`
   * column.
   *
-  * Memory: a partial task holds at most [[FlushAt]] keys + values
-  * (≈ 60 MB of primitive arrays at the default, in blocks of 256 KB
-  * or less, outside Spark's execution-memory accounting); a final task
-  * holds one group's values twice (merge buffer and result).
+  * Memory: a partial table holds at most [[FlushAt]] groups + values,
+  * outside Spark's execution-memory accounting, in blocks of 256 KB or
+  * less. A buffered value takes ≈ 20 B (its group id, itself, and its
+  * place in the scattered array; the chained table took 12 B), a group
+  * 12 B plus 2 to 4 slots of 4 B: at most ≈ 30 MB at the default.
+  * A final task holds one group's values twice (merge buffer and
+  * result).
   */
 object SortedLongSets {
 
-  /** Keys + values a partial table holds before it flushes. */
+  /** Groups + values a partial table holds before it flushes. */
   val FlushAt: Int = 1 << 20
 
   /** `df` grouped by the bigint column `key`, with the sorted distinct
@@ -135,22 +159,29 @@ case class SortedLongSetsExec(partial: Boolean, key: Attribute,
   override def argString(maxFields: Int): String =
     s"${if (partial) "partial" else "final"}, key=$key, value=$value, out=$out"
 
+  private def ordinals(in: Seq[Attribute]): (Int, Int) =
+    (in.indexWhere(_.exprId == key.exprId), in.indexWhere(_.exprId == value.exprId))
+
+  /** The columnar plan under a row conversion the partial phase reads
+    * instead of the conversion's rows: the scan's batches go straight
+    * into the table, with no `UnsafeRow` per input row and no
+    * whole-stage `BufferedRowIterator` handing each one over. */
+  private def columnarInput: Option[SparkPlan] = child match {
+    case WholeStageCodegenExec(ColumnarToRowExec(InputAdapter(c))) if c.supportsColumnar => Some(c)
+    case ColumnarToRowExec(c) if c.supportsColumnar => Some(c)
+    case _ => None
+  }
+
   override protected def doExecute(): RDD[InternalRow] =
     if (partial) {
-      val k = child.output.indexWhere(_.exprId == key.exprId)
-      val v = child.output.indexWhere(_.exprId == value.exprId)
       val limit = flushAt
-      child.execute().mapPartitions { rows =>
-        val table = new LongSetTable
+      def partialOf(feed: PairFeed): Iterator[InternalRow] = {
+        val table = new FlatGroups
         new Iterator[InternalRow] {
           private var groups: Iterator[InternalRow] = Iterator.empty
-          override def hasNext: Boolean = groups.hasNext || rows.hasNext && {
+          override def hasNext: Boolean = groups.hasNext || feed.hasMore && {
             table.clear()
-            while (rows.hasNext && table.size < limit) {
-              val r = rows.next()
-              table.add(r.isNullAt(k), if (r.isNullAt(k)) 0L else r.getLong(k),
-                r.isNullAt(v), if (r.isNullAt(v)) 0L else r.getLong(v))
-            }
+            feed.fill(table, limit)
             groups = table.groups
             groups.hasNext
           }
@@ -159,6 +190,14 @@ case class SortedLongSetsExec(partial: Boolean, key: Attribute,
             groups.next()
           }
         }
+      }
+      columnarInput match {
+        case Some(scan) =>
+          val (k, v) = ordinals(scan.output)
+          scan.executeColumnar().mapPartitions(b => partialOf(new BatchFeed(b, k, v)))
+        case None =>
+          val (k, v) = ordinals(child.output)
+          child.execute().mapPartitions(r => partialOf(new RowFeed(r, k, v)))
       }
     } else {
       // The partial phase writes (key, sorted distinct values).
@@ -247,156 +286,212 @@ private final class SetRowWriter {
   }
 }
 
-/** The partial phase's table: open addressing over `Long` keys (a
-  * null key has its own slot), each key heading one chain of distinct
-  * `Long` values in shared `values`/`next` arrays.
+/** The partial phase's input: `(key, value)` pairs added to a table
+  * until it holds `limit` groups + values or the input ends. */
+private sealed abstract class PairFeed {
+  def hasMore: Boolean
+  def fill(table: FlatGroups, limit: Int): Unit
+}
+
+/** Rows from any child plan. */
+private final class RowFeed(rows: Iterator[InternalRow], k: Int, v: Int)
+    extends PairFeed {
+  override def hasMore: Boolean = rows.hasNext
+  override def fill(table: FlatGroups, limit: Int): Unit =
+    while (rows.hasNext && table.size < limit) {
+      val r = rows.next()
+      val kn = r.isNullAt(k)
+      val vn = r.isNullAt(v)
+      table.add(kn, if (kn) 0L else r.getLong(k), vn, if (vn) 0L else r.getLong(v))
+    }
+}
+
+/** The batches of a columnar scan, read in place. A batch may be
+  * reused by the scan once the next one is asked for, so a flush in
+  * the middle of a batch resumes at its row `i`. */
+private final class BatchFeed(batches: Iterator[ColumnarBatch], k: Int, v: Int)
+    extends PairFeed {
+  private var keys: ColumnVector = _
+  private var values: ColumnVector = _
+  private var n = 0
+  private var i = 0
+
+  override def hasMore: Boolean = i < n || batches.hasNext
+
+  private def nextBatch(): Boolean = {
+    while (batches.hasNext) {
+      val b = batches.next()
+      keys = b.column(k); values = b.column(v); n = b.numRows(); i = 0
+      if (n > 0) return true
+    }
+    false
+  }
+
+  override def fill(table: FlatGroups, limit: Int): Unit =
+    while (table.size < limit && (i < n || nextBatch())) {
+      while (i < n && table.size < limit) {
+        val kn = keys.isNullAt(i)
+        val vn = values.isNullAt(i)
+        table.add(kn, if (kn) 0L else keys.getLong(i), vn, if (vn) 0L else values.getLong(i))
+        i += 1
+      }
+    }
+}
+
+/** The partial phase's table, grouped by count-then-scatter. An add
+  * looks its key up in an open-addressing table for a dense group id
+  * (a null key has its own), appends `(group, value)` to the pair
+  * arrays and counts the value for its group; a null value only makes
+  * the group. At a flush the counts become offsets, one pass scatters
+  * the values into `grouped` group by group, and each group's segment
+  * is sorted and made distinct as its row is written.
   *
-  * Every array is held in blocks of at most [[LongSetTable.Block]]
+  * Every array is held in blocks of at most [[FlatGroups.Block]]
   * elements, so none is a G1 humongous object (half a heap region or
   * more: 512 KB at the smallest region size). Grown by doubling as one
   * array per field, each perfbench heavy_x10 partial task allocated
   * ≈ 32 MB of humongous arrays; each such allocation may start a GC
   * cycle, and from run to run the heap, and with it the peak RSS, grew
-  * to anywhere from 1.6 to 3.0 GB. Past one block, values and their
-  * links grow by appending a block, with no copy. */
-private final class LongSetTable {
-  import LongSetTable._
+  * to anywhere from 1.6 to 3.0 GB. Past one block an array grows by
+  * appending a block, with no copy. Blocks are kept across flushes. */
+private final class FlatGroups {
+  import FlatGroups._
 
-  private var cap = 1 << 10 // a power of two, at least 2 × keys
-  private var keys = longBlocks(cap)
-  private var heads = intBlocks(cap, Free)
-  private var nKeys = 0
-  private var nullHead = Free
-  private var values = longBlocks(1 << 10)
-  private var next = intBlocks(1 << 10, 0)
-  private var valueCap = 1 << 10
+  // Slot s holds 1 + the group id of a key, 0 when free; a probe
+  // compares the group's key. 4 B a slot keeps the table small: at
+  // 16 B (key and id side by side) its growth allocated more than the
+  // values did.
+  private var cap = 1 << 10 // a power of two, at least 2 × keyed groups
+  private var slots = blocks(cap)
+  private var nullGroup = NoGroup
+  private var nGroups = 0
+  private val groupKeys = new LongArray
+  private val counts = new IntArray // values per group; starts, then ends, at a flush
+  private val pairGroups = new IntArray
+  private val pairValues = new LongArray
+  private val grouped = new LongArray
   private var nValues = 0
   private val writer = new SetRowWriter
   private var scratch = new Array[Long](16)
 
-  def size: Int = nKeys + nValues
+  def size: Int = nGroups + nValues
 
   def clear(): Unit = {
-    if (nKeys > 0) heads.foreach(java.util.Arrays.fill(_, Free))
-    nKeys = 0; nullHead = Free; nValues = 0
+    if (nGroups > 0) slots.foreach(java.util.Arrays.fill(_, 0))
+    nullGroup = NoGroup; nGroups = 0; nValues = 0
   }
 
-  private def key(s: Int): Long = keys(s >>> Shift)(s & Mask)
-  private def head(s: Int): Int = heads(s >>> Shift)(s & Mask)
-  private def setHead(s: Int, h: Int): Unit = heads(s >>> Shift)(s & Mask) = h
-  private def link(i: Int): Int = next(i >>> Shift)(i & Mask)
-
-  def add(keyNull: Boolean, k: Long, valueNull: Boolean, v: Long): Unit =
-    if (keyNull) {
-      if (nullHead == Free) { nullHead = Empty; nKeys += 1 }
-      if (!valueNull) nullHead = push(nullHead, v)
-    } else {
-      var s = slot(k)
-      if (head(s) == Free) {
-        if (2 * (nKeys + 1) > cap) { grow(); s = slot(k) }
-        keys(s >>> Shift)(s & Mask) = k; setHead(s, Empty); nKeys += 1
-      }
-      if (!valueNull) setHead(s, push(head(s), v))
+  def add(keyNull: Boolean, k: Long, valueNull: Boolean, v: Long): Unit = {
+    val g = if (keyNull) {
+      if (nullGroup == NoGroup) nullGroup = newGroup(0L)
+      nullGroup
+    } else group(k)
+    if (!valueNull) {
+      if (nValues == pairValues.capacity) { pairValues.grow(); pairGroups.grow() }
+      pairGroups(nValues) = g
+      pairValues(nValues) = v
+      nValues += 1
+      counts(g) += 1
     }
+  }
 
-  private def slot(k: Long): Int = {
-    val h = k * 0x9E3779B97F4A7C15L
-    var s = (h ^ (h >>> 32)).toInt & (cap - 1)
-    while (head(s) != Free && key(s) != k) s = (s + 1) & (cap - 1)
+  private def newGroup(k: Long): Int = {
+    val g = nGroups
+    if (g == counts.capacity) { counts.grow(); groupKeys.grow() }
+    groupKeys(g) = k
+    counts(g) = 0
+    nGroups += 1
+    g
+  }
+
+  private def slot(s: Int): Int = slots(s >>> Shift)(s & Mask)
+
+  /** `k`'s slot, or the free slot it takes. */
+  private def find(k: Long): Int = {
+    var s = hash(k) & (cap - 1)
+    while (slot(s) != 0 && groupKeys(slot(s) - 1) != k) s = (s + 1) & (cap - 1)
     s
   }
 
+  private def group(k: Long): Int = {
+    val s = find(k)
+    if (slot(s) != 0) slot(s) - 1
+    else {
+      val g = newGroup(k)
+      if (2 * (nGroups - (if (nullGroup == NoGroup) 0 else 1)) > cap) grow()
+      else slots(s >>> Shift)(s & Mask) = g + 1
+      g
+    }
+  }
+
+  /** Doubles the slots and puts every keyed group back. */
   private def grow(): Unit = {
-    val (oldKeys, oldHeads, oldCap) = (keys, heads, cap)
     cap *= 2
-    keys = longBlocks(cap)
-    heads = intBlocks(cap, Free)
+    slots = blocks(cap)
+    var g = 0
+    while (g < nGroups) {
+      if (g != nullGroup) { val s = find(groupKeys(g)); slots(s >>> Shift)(s & Mask) = g + 1 }
+      g += 1
+    }
+  }
+
+  /** One row per group, in group id order. */
+  def groups: Iterator[InternalRow] = {
+    var g = 0
+    var start = 0
+    while (g < nGroups) { val c = counts(g); counts(g) = start; start += c; g += 1 }
+    grouped.reserve(nValues)
     var i = 0
-    while (i < oldCap) {
-      val h = oldHeads(i >>> Shift)(i & Mask)
-      if (h != Free) {
-        val k = oldKeys(i >>> Shift)(i & Mask)
-        val s = slot(k)
-        keys(s >>> Shift)(s & Mask) = k; setHead(s, h)
-      }
+    while (i < nValues) {
+      val g = pairGroups(i)
+      val at = counts(g)
+      grouped(at) = pairValues(i)
+      counts(g) = at + 1
       i += 1
     }
-  }
-
-  /** The chain headed by `head` with `v` added, or unchanged when `v`
-    * is one of its first [[Probe]] values. */
-  private def push(head: Int, v: Long): Int = {
-    var i = head
-    var steps = 0
-    while (i >= 0 && steps < Probe) {
-      if (values(i >>> Shift)(i & Mask) == v) return head
-      i = link(i); steps += 1
-    }
-    if (nValues == valueCap) {
-      if (valueCap < Block) {
-        values(0) = java.util.Arrays.copyOf(values(0), 2 * valueCap)
-        next(0) = java.util.Arrays.copyOf(next(0), 2 * valueCap)
-        valueCap *= 2
-      } else {
-        values = java.util.Arrays.copyOf(values, values.length + 1)
-        values(values.length - 1) = new Array[Long](Block)
-        next = java.util.Arrays.copyOf(next, next.length + 1)
-        next(next.length - 1) = new Array[Int](Block)
-        valueCap += Block
+    // counts(g) is now the end of g's segment and the start of g + 1's.
+    new Iterator[InternalRow] {
+      private var g = 0
+      override def hasNext: Boolean = g < nGroups
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val row = emit(g, if (g == 0) 0 else counts(g - 1), counts(g))
+        g += 1
+        row
       }
     }
-    val i0 = nValues
-    values(i0 >>> Shift)(i0 & Mask) = v
-    next(i0 >>> Shift)(i0 & Mask) = head
-    nValues += 1
-    i0
   }
 
-  /** One row per group, its chain sorted and made distinct. */
-  def groups: Iterator[InternalRow] = new Iterator[InternalRow] {
-    private var s = if (nullHead != Free) -1 else advance(0)
-    private def advance(from: Int): Int = {
-      var i = from
-      while (i < cap && head(i) == Free) i += 1
-      i
-    }
-    override def hasNext: Boolean = s < cap
-    override def next(): InternalRow = {
-      if (!hasNext) throw new NoSuchElementException
-      val row =
-        if (s < 0) emit(keyNull = true, 0L, nullHead)
-        else emit(keyNull = false, key(s), head(s))
-      s = advance(s + 1)
-      row
-    }
-  }
-
-  private def emit(keyNull: Boolean, k: Long, head: Int): InternalRow = {
-    var n = 0
-    var i = head
-    while (i >= 0) {
-      if (n == scratch.length) scratch = java.util.Arrays.copyOf(scratch, 2 * n)
-      scratch(n) = values(i >>> Shift)(i & Mask); n += 1
-      i = link(i)
-    }
-    java.util.Arrays.sort(scratch, 0, n)
-    var d = 0
+  private def emit(g: Int, from: Int, until: Int): InternalRow = {
+    val n = until - from
+    if (scratch.length < n) scratch = new Array[Long](math.max(n, 2 * scratch.length))
+    val a = scratch
     var j = 0
+    while (j < n) { a(j) = grouped(from + j); j += 1 }
+    if (n <= InsertionMax) {
+      var p = 1
+      while (p < n) {
+        val x = a(p)
+        var q = p - 1
+        while (q >= 0 && a(q) > x) { a(q + 1) = a(q); q -= 1 }
+        a(q + 1) = x
+        p += 1
+      }
+    } else java.util.Arrays.sort(a, 0, n)
+    var d = 0
+    j = 0
     while (j < n) {
-      if (d == 0 || scratch(j) != scratch(d - 1)) { scratch(d) = scratch(j); d += 1 }
+      if (d == 0 || a(j) != a(d - 1)) { a(d) = a(j); d += 1 }
       j += 1
     }
-    writer.write(keyNull, k, scratch, d)
+    writer.write(g == nullGroup, groupKeys(g), a, d)
   }
 }
 
-private object LongSetTable {
-  val Free: Int = -2 // slot holds no key
-  val Empty: Int = -1 // key with no values yet; chain end
-  /** Chain entries an insert compares against. A longer chain may keep
-    * a duplicate, which the sort at emit drops; the bound keeps an
-    * insert O(1) however large a group grows. */
-  val Probe: Int = 32
+private object FlatGroups {
+  val NoGroup: Int = -1 // no null key seen
+  /** Groups of at most this many values are sorted by insertion. */
+  val InsertionMax: Int = 16
 
   /** Elements per block: 2^15 `Long`s are 256 KB. Element `i` of a
     * blocked array is `blocks(i >>> Shift)(i & Mask)`. */
@@ -404,15 +499,48 @@ private object LongSetTable {
   val Block: Int = 1 << Shift
   val Mask: Int = Block - 1
 
+  def hash(k: Long): Int = {
+    val h = k * 0x9E3779B97F4A7C15L
+    (h ^ (h >>> 32)).toInt
+  }
+
   /** `n` zeros in blocks: one block when `n` <= [[Block]], else
     * `n / Block` full ones (`n` is a power of two). */
-  def longBlocks(n: Int): Array[Array[Long]] =
-    Array.fill((n + Mask) >>> Shift)(new Array[Long](math.min(n, Block)))
+  def blocks(n: Int): Array[Array[Int]] =
+    Array.fill((n + Mask) >>> Shift)(new Array[Int](math.min(n, Block)))
+}
 
-  def intBlocks(n: Int, fill: Int): Array[Array[Int]] =
-    Array.fill((n + Mask) >>> Shift) {
-      val b = new Array[Int](math.min(n, Block))
-      if (fill != 0) java.util.Arrays.fill(b, fill)
-      b
+/** A growable `Long` array in blocks of [[FlatGroups.Block]]. */
+private final class LongArray {
+  import FlatGroups.{Block, Mask, Shift}
+  private var blocks = Array(new Array[Long](1 << 10))
+  private var cap = 1 << 10
+  def capacity: Int = cap
+  def apply(i: Int): Long = blocks(i >>> Shift)(i & Mask)
+  def update(i: Int, x: Long): Unit = blocks(i >>> Shift)(i & Mask) = x
+  def reserve(n: Int): Unit = while (cap < n) grow()
+  def grow(): Unit =
+    if (cap < Block) { blocks(0) = java.util.Arrays.copyOf(blocks(0), 2 * cap); cap *= 2 }
+    else {
+      blocks = java.util.Arrays.copyOf(blocks, blocks.length + 1)
+      blocks(blocks.length - 1) = new Array[Long](Block)
+      cap += Block
+    }
+}
+
+/** A growable `Int` array in blocks of [[FlatGroups.Block]]. */
+private final class IntArray {
+  import FlatGroups.{Block, Mask, Shift}
+  private var blocks = Array(new Array[Int](1 << 10))
+  private var cap = 1 << 10
+  def capacity: Int = cap
+  def apply(i: Int): Int = blocks(i >>> Shift)(i & Mask)
+  def update(i: Int, x: Int): Unit = blocks(i >>> Shift)(i & Mask) = x
+  def grow(): Unit =
+    if (cap < Block) { blocks(0) = java.util.Arrays.copyOf(blocks(0), 2 * cap); cap *= 2 }
+    else {
+      blocks = java.util.Arrays.copyOf(blocks, blocks.length + 1)
+      blocks(blocks.length - 1) = new Array[Int](Block)
+      cap += Block
     }
 }

@@ -3,14 +3,15 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.AsOfJoin
+import graft.plans.{AsOfJoin, AsOfJoinExec, AsOfJoinStrategy}
 
 /** The bespoke sort-merge as-of operator (LogicalPlan + Strategy +
   * SparkPlan): semantics against hand-computed fixtures and the
   * window formulation, and the plan shape it was built for. */
-class AsOfJoinSpec extends AnyFunSuite {
+class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.{sf, spark}
 
   private def t(s: String): Timestamp = Timestamp.valueOf(s"2024-01-$s:00")
@@ -93,5 +94,18 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert("Exchange hashpartitioning\\(user_id".r.findAllIn(inner).length == 1 &&
       "Exchange hashpartitioning\\(o_custkey#\\d+L, \\d".r.findAllIn(inner).length == 1,
       s"expected one co-partitioning exchange per side under the exec:\n$plan")
+  }
+
+  test("a fresh session plans AsOfJoinExec through AsOfJoin.apply alone") {
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(AsOfJoinStrategy))
+    val merge = SparkEntry.queries("join_asof_merge")(fresh, sf)
+    merge.collect()
+    assert(collect(merge.queryExecution.executedPlan) { case e: AsOfJoinExec => e }.size == 1,
+      merge.queryExecution.executedPlan)
+    val window = SparkEntry.queries("join_asof_partitioned")(fresh, sf)
+    val (m, w) = (merge.withColumn("ts", col("ts").cast("timestamp")),
+      window.withColumn("ts", col("ts").cast("timestamp")))
+    assert(!m.isEmpty && m.exceptAll(w).isEmpty && w.exceptAll(m).isEmpty)
   }
 }
