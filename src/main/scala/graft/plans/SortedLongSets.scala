@@ -7,11 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan, UnaryExecNode, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{ArrayType, LongType}
-import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** Sorted distinct bigint sets per bigint key: an exact replacement
   * for `groupBy(k).agg(sort_array(collect_set(v)).as(name))` as a
@@ -49,15 +48,12 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * writes each group's values next to each other, so the sort and the
   * duplicate drop at emit read one short contiguous segment.
   *
-  * Input: when the partial phase's child converts a columnar plan to
-  * rows (`ColumnarToRowExec`, alone or as a whole-stage codegen stage
-  * over its `InputAdapter`), which is the case for a parquet scan of
-  * the two columns, the partial phase reads the columnar plan's
-  * batches itself: no row is converted, and none is handed over one
-  * `LinkedList` node at a time through the codegen stage's
-  * `BufferedRowIterator` (≈ 2 GB of allocation per heavy_x10 run). The
-  * conversion node stays in the plan and reports 0 output rows. Any
-  * other child, such as a filter over the scan, is read as rows.
+  * Input is read as rows from any child. Reading a parquet scan's
+  * batches directly, past its row conversion, cut the scan + partial
+  * stage of perfbench heavy_x10 by ≈ 0.3 s in traced runs, but over
+  * 20 alternating pairs of full runs it did not show in `pipeline_s`
+  * (×0.913 and ×0.978, against a 0.36 s interquartile range), so the
+  * operator keeps one input path.
   *
   * Semantics equal `collect_set`'s: a null key is one group, null
   * values are skipped, a group whose values are all null gets `[]`,
@@ -70,6 +66,13 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * less. A buffered value takes ≈ 20 B (its group id, itself, and its
   * place in the scattered array; the chained table took 12 B), a group
   * 12 B plus 2 to 4 slots of 4 B: at most ≈ 30 MB at the default.
+  * An add does not look for duplicates, so a repeated pair holds a
+  * buffered value until the flush drops it: input with many repeats
+  * flushes sooner and sends more partial rows through the shuffle.
+  * Both callers' pairs are all but distinct (lineitem's
+  * `(l_orderkey, l_partkey)` repeats 65 times in 600,000 rows at
+  * sf0.1; link prediction's edges are distinct), so they flush as the
+  * chained table did.
   * A final task holds one group's values twice (merge buffer and
   * result).
   */
@@ -159,29 +162,23 @@ case class SortedLongSetsExec(partial: Boolean, key: Attribute,
   override def argString(maxFields: Int): String =
     s"${if (partial) "partial" else "final"}, key=$key, value=$value, out=$out"
 
-  private def ordinals(in: Seq[Attribute]): (Int, Int) =
-    (in.indexWhere(_.exprId == key.exprId), in.indexWhere(_.exprId == value.exprId))
-
-  /** The columnar plan under a row conversion the partial phase reads
-    * instead of the conversion's rows: the scan's batches go straight
-    * into the table, with no `UnsafeRow` per input row and no
-    * whole-stage `BufferedRowIterator` handing each one over. */
-  private def columnarInput: Option[SparkPlan] = child match {
-    case WholeStageCodegenExec(ColumnarToRowExec(InputAdapter(c))) if c.supportsColumnar => Some(c)
-    case ColumnarToRowExec(c) if c.supportsColumnar => Some(c)
-    case _ => None
-  }
-
   override protected def doExecute(): RDD[InternalRow] =
     if (partial) {
+      val k = child.output.indexWhere(_.exprId == key.exprId)
+      val v = child.output.indexWhere(_.exprId == value.exprId)
       val limit = flushAt
-      def partialOf(feed: PairFeed): Iterator[InternalRow] = {
+      child.execute().mapPartitions { rows =>
         val table = new FlatGroups
         new Iterator[InternalRow] {
           private var groups: Iterator[InternalRow] = Iterator.empty
-          override def hasNext: Boolean = groups.hasNext || feed.hasMore && {
+          override def hasNext: Boolean = groups.hasNext || rows.hasNext && {
             table.clear()
-            feed.fill(table, limit)
+            while (rows.hasNext && table.size < limit) {
+              val r = rows.next()
+              val kn = r.isNullAt(k)
+              val vn = r.isNullAt(v)
+              table.add(kn, if (kn) 0L else r.getLong(k), vn, if (vn) 0L else r.getLong(v))
+            }
             groups = table.groups
             groups.hasNext
           }
@@ -190,14 +187,6 @@ case class SortedLongSetsExec(partial: Boolean, key: Attribute,
             groups.next()
           }
         }
-      }
-      columnarInput match {
-        case Some(scan) =>
-          val (k, v) = ordinals(scan.output)
-          scan.executeColumnar().mapPartitions(b => partialOf(new BatchFeed(b, k, v)))
-        case None =>
-          val (k, v) = ordinals(child.output)
-          child.execute().mapPartitions(r => partialOf(new RowFeed(r, k, v)))
       }
     } else {
       // The partial phase writes (key, sorted distinct values).
@@ -286,58 +275,6 @@ private final class SetRowWriter {
   }
 }
 
-/** The partial phase's input: `(key, value)` pairs added to a table
-  * until it holds `limit` groups + values or the input ends. */
-private sealed abstract class PairFeed {
-  def hasMore: Boolean
-  def fill(table: FlatGroups, limit: Int): Unit
-}
-
-/** Rows from any child plan. */
-private final class RowFeed(rows: Iterator[InternalRow], k: Int, v: Int)
-    extends PairFeed {
-  override def hasMore: Boolean = rows.hasNext
-  override def fill(table: FlatGroups, limit: Int): Unit =
-    while (rows.hasNext && table.size < limit) {
-      val r = rows.next()
-      val kn = r.isNullAt(k)
-      val vn = r.isNullAt(v)
-      table.add(kn, if (kn) 0L else r.getLong(k), vn, if (vn) 0L else r.getLong(v))
-    }
-}
-
-/** The batches of a columnar scan, read in place. A batch may be
-  * reused by the scan once the next one is asked for, so a flush in
-  * the middle of a batch resumes at its row `i`. */
-private final class BatchFeed(batches: Iterator[ColumnarBatch], k: Int, v: Int)
-    extends PairFeed {
-  private var keys: ColumnVector = _
-  private var values: ColumnVector = _
-  private var n = 0
-  private var i = 0
-
-  override def hasMore: Boolean = i < n || batches.hasNext
-
-  private def nextBatch(): Boolean = {
-    while (batches.hasNext) {
-      val b = batches.next()
-      keys = b.column(k); values = b.column(v); n = b.numRows(); i = 0
-      if (n > 0) return true
-    }
-    false
-  }
-
-  override def fill(table: FlatGroups, limit: Int): Unit =
-    while (table.size < limit && (i < n || nextBatch())) {
-      while (i < n && table.size < limit) {
-        val kn = keys.isNullAt(i)
-        val vn = values.isNullAt(i)
-        table.add(kn, if (kn) 0L else keys.getLong(i), vn, if (vn) 0L else values.getLong(i))
-        i += 1
-      }
-    }
-}
-
 /** The partial phase's table, grouped by count-then-scatter. An add
   * looks its key up in an open-addressing table for a dense group id
   * (a null key has its own), appends `(group, value)` to the pair
@@ -353,7 +290,8 @@ private final class BatchFeed(batches: Iterator[ColumnarBatch], k: Int, v: Int)
   * ≈ 32 MB of humongous arrays; each such allocation may start a GC
   * cycle, and from run to run the heap, and with it the peak RSS, grew
   * to anywhere from 1.6 to 3.0 GB. Past one block an array grows by
-  * appending a block, with no copy. Blocks are kept across flushes. */
+  * appending a block, with no copy ([[Blocked]]). Blocks are kept
+  * across flushes. */
 private final class FlatGroups {
   import FlatGroups._
 
@@ -362,7 +300,7 @@ private final class FlatGroups {
   // 16 B (key and id side by side) its growth allocated more than the
   // values did.
   private var cap = 1 << 10 // a power of two, at least 2 × keyed groups
-  private var slots = blocks(cap)
+  private val slots = new IntArray // capacity cap
   private var nullGroup = NoGroup
   private var nGroups = 0
   private val groupKeys = new LongArray
@@ -377,7 +315,7 @@ private final class FlatGroups {
   def size: Int = nGroups + nValues
 
   def clear(): Unit = {
-    if (nGroups > 0) slots.foreach(java.util.Arrays.fill(_, 0))
+    if (nGroups > 0) slots.zero()
     nullGroup = NoGroup; nGroups = 0; nValues = 0
   }
 
@@ -404,22 +342,20 @@ private final class FlatGroups {
     g
   }
 
-  private def slot(s: Int): Int = slots(s >>> Shift)(s & Mask)
-
   /** `k`'s slot, or the free slot it takes. */
   private def find(k: Long): Int = {
     var s = hash(k) & (cap - 1)
-    while (slot(s) != 0 && groupKeys(slot(s) - 1) != k) s = (s + 1) & (cap - 1)
+    while (slots(s) != 0 && groupKeys(slots(s) - 1) != k) s = (s + 1) & (cap - 1)
     s
   }
 
   private def group(k: Long): Int = {
     val s = find(k)
-    if (slot(s) != 0) slot(s) - 1
+    if (slots(s) != 0) slots(s) - 1
     else {
       val g = newGroup(k)
       if (2 * (nGroups - (if (nullGroup == NoGroup) 0 else 1)) > cap) grow()
-      else slots(s >>> Shift)(s & Mask) = g + 1
+      else slots(s) = g + 1
       g
     }
   }
@@ -427,10 +363,11 @@ private final class FlatGroups {
   /** Doubles the slots and puts every keyed group back. */
   private def grow(): Unit = {
     cap *= 2
-    slots = blocks(cap)
+    slots.reserve(cap)
+    slots.zero()
     var g = 0
     while (g < nGroups) {
-      if (g != nullGroup) { val s = find(groupKeys(g)); slots(s >>> Shift)(s & Mask) = g + 1 }
+      if (g != nullGroup) slots(find(groupKeys(g))) = g + 1
       g += 1
     }
   }
@@ -503,44 +440,39 @@ private object FlatGroups {
     val h = k * 0x9E3779B97F4A7C15L
     (h ^ (h >>> 32)).toInt
   }
-
-  /** `n` zeros in blocks: one block when `n` <= [[Block]], else
-    * `n / Block` full ones (`n` is a power of two). */
-  def blocks(n: Int): Array[Array[Int]] =
-    Array.fill((n + Mask) >>> Shift)(new Array[Int](math.min(n, Block)))
 }
 
-/** A growable `Long` array in blocks of [[FlatGroups.Block]]. */
-private final class LongArray {
-  import FlatGroups.{Block, Mask, Shift}
-  private var blocks = Array(new Array[Long](1 << 10))
+/** A growable array in blocks of [[FlatGroups.Block]] elements: one
+  * block doubles from 2^10 elements up to a full block, then each
+  * growth appends one more full block and copies nothing. */
+private abstract class Blocked {
+  import FlatGroups.Block
   private var cap = 1 << 10
   def capacity: Int = cap
+  def grow(): Unit =
+    if (cap < Block) { cap *= 2; resizeFirst(cap) } else { cap += Block; addBlock() }
+  def reserve(n: Int): Unit = while (cap < n) grow()
+  /** Copies the only block into one of `n` elements. */
+  protected def resizeFirst(n: Int): Unit
+  /** Appends a zeroed block of [[FlatGroups.Block]] elements. */
+  protected def addBlock(): Unit
+}
+
+private final class LongArray extends Blocked {
+  import FlatGroups.{Block, Mask, Shift}
+  private var blocks = Array(new Array[Long](capacity))
   def apply(i: Int): Long = blocks(i >>> Shift)(i & Mask)
   def update(i: Int, x: Long): Unit = blocks(i >>> Shift)(i & Mask) = x
-  def reserve(n: Int): Unit = while (cap < n) grow()
-  def grow(): Unit =
-    if (cap < Block) { blocks(0) = java.util.Arrays.copyOf(blocks(0), 2 * cap); cap *= 2 }
-    else {
-      blocks = java.util.Arrays.copyOf(blocks, blocks.length + 1)
-      blocks(blocks.length - 1) = new Array[Long](Block)
-      cap += Block
-    }
+  protected def resizeFirst(n: Int): Unit = blocks(0) = java.util.Arrays.copyOf(blocks(0), n)
+  protected def addBlock(): Unit = blocks = blocks :+ new Array[Long](Block)
 }
 
-/** A growable `Int` array in blocks of [[FlatGroups.Block]]. */
-private final class IntArray {
+private final class IntArray extends Blocked {
   import FlatGroups.{Block, Mask, Shift}
-  private var blocks = Array(new Array[Int](1 << 10))
-  private var cap = 1 << 10
-  def capacity: Int = cap
+  private var blocks = Array(new Array[Int](capacity))
   def apply(i: Int): Int = blocks(i >>> Shift)(i & Mask)
   def update(i: Int, x: Int): Unit = blocks(i >>> Shift)(i & Mask) = x
-  def grow(): Unit =
-    if (cap < Block) { blocks(0) = java.util.Arrays.copyOf(blocks(0), 2 * cap); cap *= 2 }
-    else {
-      blocks = java.util.Arrays.copyOf(blocks, blocks.length + 1)
-      blocks(blocks.length - 1) = new Array[Int](Block)
-      cap += Block
-    }
+  def zero(): Unit = blocks.foreach(java.util.Arrays.fill(_, 0))
+  protected def resizeFirst(n: Int): Unit = blocks(0) = java.util.Arrays.copyOf(blocks(0), n)
+  protected def addBlock(): Unit = blocks = blocks :+ new Array[Int](Block)
 }

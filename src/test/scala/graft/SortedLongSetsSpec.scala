@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -13,10 +12,7 @@ import graft.plans.SortedLongSets
 /** The primitive sorted-set operator against `sort_array(collect_set)`:
   * planted edge cases, randomized equality at 1 and 4 shuffle
   * partitions, forced early flushes of the partial table, and the plan
-  * and schema of the order-product-set memo build. The partial phase
-  * reads rows from most children and a columnar scan's batches when
-  * its child converts one to rows; parquet-backed frames cover the
-  * batch path. */
+  * and schema of the order-product-set memo build. */
 class SortedLongSetsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.{sf, spark}
 
@@ -35,21 +31,6 @@ class SortedLongSetsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     s.createDataset(kv).toDF("k", "v").repartition(parts)
   }
 
-  /** `kv` written to parquet and read back, so the partial phase of a
-    * set over it reads the scan's batches. */
-  private def parquetFrame(s: SparkSession, kv: Seq[(Option[Long], Option[Long])],
-      files: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("sorted-long-sets").toString
-    frame(s, kv, files).write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
-  }
-
-  /** Row counts the executed plan's row conversions and file scans
-    * report, after `df` has run. */
-  private def converted(plan: SparkPlan): (Long, Long) = (
-    collect(plan) { case c: ColumnarToRowExec => c.metrics("numOutputRows").value }.sum,
-    collect(plan) { case f: FileSourceScanExec => f.metrics("numOutputRows").value }.sum)
-
   private val planted = Seq(
     Some(1L) -> Some(3L), Some(1L) -> Some(1L), Some(1L) -> Some(3L),
     Some(1L) -> None,
@@ -57,13 +38,6 @@ class SortedLongSetsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     Some(2L) -> None, Some(2L) -> None,
     Some(3L) -> Some(7L),
     Some(-4L) -> Some(Long.MaxValue), Some(-4L) -> Some(Long.MinValue))
-
-  private val plantedSets = Seq(
-    None -> Seq(2L, 5L),
-    Some(-4L) -> Seq(Long.MinValue, Long.MaxValue),
-    Some(1L) -> Seq(1L, 3L),
-    Some(2L) -> Seq.empty[Long],
-    Some(3L) -> Seq(7L))
 
   /** Random pairs with nulls, groups of 1 to ~60 values (past the
     * insertion-sort bound) and duplicate-heavy ones. */
@@ -85,7 +59,12 @@ class SortedLongSetsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("planted: null key, null values, all-null group, duplicates") {
     val df = frame(spark, planted, 3)
     val got = rows(SortedLongSets(df, "k", "v", "vs"))
-    assert(got == plantedSets)
+    assert(got == Seq(
+      None -> Seq(2L, 5L),
+      Some(-4L) -> Seq(Long.MinValue, Long.MaxValue),
+      Some(1L) -> Seq(1L, 3L),
+      Some(2L) -> Seq.empty[Long],
+      Some(3L) -> Seq(7L)))
     assert(got == rows(viaCollectSet(df)))
   }
 
@@ -160,48 +139,19 @@ class SortedLongSetsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rows(build.toDF("k", "vs")) == rows(old.toDF("k", "vs")))
   }
 
-  test("columnar input: planted cases read back from parquet") {
-    val df = parquetFrame(spark, planted, 3)
-    val sets = SortedLongSets(df, "k", "v", "vs")
-    assert(rows(sets) == plantedSets)
-    assert(rows(sets) == rows(viaCollectSet(df)))
-    assert(converted(sets.queryExecution.executedPlan) == (0L, planted.size.toLong))
+  test("forced flushes at 1, 2, 3 and 7 groups + values") {
+    val df = frame(spark, planted ++ randomPairs(11L, 700), 2)
+    val want = rows(viaCollectSet(df))
+    for (flushAt <- Seq(1, 2, 3, 7))
+      assert(rows(SortedLongSets(df, "k", "v", "vs", flushAt)) == want, s"flushAt $flushAt")
   }
 
-  test("forced flushes on both input paths, across small scan batches") {
-    val kv = planted ++ randomPairs(11L, 700)
-    val s = spark.newSession()
-    // Batches of 5 rows: a flush falls inside a batch and one resumes
-    // at its row.
-    s.conf.set("spark.sql.parquet.columnarReaderBatchSize", "5")
-    val byRows = frame(s, kv, 2)
-    val byBatches = parquetFrame(s, kv, 2)
-    val want = rows(viaCollectSet(byRows))
-    assert(want == rows(viaCollectSet(byBatches)))
-    for (flushAt <- Seq(1, 2, 3, 7); (path, df) <- Seq("rows" -> byRows, "batches" -> byBatches))
-      assert(rows(SortedLongSets(df, "k", "v", "vs", flushAt)) == want,
-        s"flushAt $flushAt on $path")
-  }
-
-  test("randomized equality on both input paths: large and duplicate-heavy groups") {
+  test("randomized equality: large and duplicate-heavy groups") {
     val kv = randomPairs(20261020L, 8000)
     val sizes = kv.collect { case (Some(k), Some(v)) => k -> v }.distinct
       .groupBy(_._1).values.map(_.size)
     assert(sizes.max > 40 && sizes.count(_ > 16) > 20, "groups past the insertion-sort bound")
-    for ((path, df) <- Seq("rows" -> frame(spark, kv, 3), "batches" -> parquetFrame(spark, kv, 3)))
-      assert(rows(SortedLongSets(df, "k", "v", "vs")) == rows(viaCollectSet(df)), path)
-  }
-
-  test("path: the order-product-set build reads the scan's batches, not converted rows") {
-    val lineitem = graft.util.Tables.load(spark, sf, "lineitem")
-    val build = graft.ops.Composite4.orderPsetsOn(lineitem)
-    build.collect()
-    val (conv, scanned) = converted(build.queryExecution.executedPlan)
-    assert(conv == 0L && scanned == lineitem.count(), build.queryExecution.executedPlan)
-    // A filter between scan and set keeps the row path.
-    val filtered = SortedLongSets(lineitem.filter(col("l_partkey") % 2 === 0),
-      "l_orderkey", "l_partkey", "ps")
-    filtered.collect()
-    assert(converted(filtered.queryExecution.executedPlan)._1 > 0L)
+    val df = frame(spark, kv, 3)
+    assert(rows(SortedLongSets(df, "k", "v", "vs")) == rows(viaCollectSet(df)))
   }
 }
